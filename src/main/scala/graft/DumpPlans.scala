@@ -2,11 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: formatted physical plans for headline queries —
   * the evidence that filters push down, dimensions broadcast, and custom
-  * operators plan as designed. Run: tools/spark-run.sh graft.DumpPlans
+  * operators plan as designed. Run from the root of the checkout whose
+  * PLANS.md it should rewrite: `tools/spark-run.sh graft.DumpPlans [sfDir]`.
   */
 object DumpPlans {
   val Headliners = Seq(
@@ -162,12 +161,9 @@ object DumpPlans {
     val missing = Headliners.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty,
       s"DumpPlans: headliners not in SparkEntry.queries: ${missing.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed local[4], not the SPARK_GRAFT_CPUS contract: the committed
+    // plans must not depend on the machine that regenerated them
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
@@ -192,7 +188,7 @@ object DumpPlans {
     sb.append("covered by their family's headliner above; request a dedicated\n")
     sb.append(s"entry by adding the name to `Headliners`. ${rest.size} queries:\n\n")
     rest.foreach(n => sb.append(s"- `$n`\n"))
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars; ${Headliners.size} " +
       s"headliners + ${rest.size} listed = " +
       s"${Headliners.size + rest.size} of ${SparkEntry.queries.size} keys)")

@@ -2,8 +2,6 @@ package graft
 
 import java.time.{ZoneId, ZonedDateTime}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.SinkConfig
 import graft.connector.Records
 import graft.streaming.S3SinkPipeline
@@ -28,11 +26,7 @@ object SinkDemo {
     val config = SinkConfig.parse(props).fold(
       errs => { errs.foreach(System.err.println); sys.exit(2) }, identity)
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(Some(config), GraftSession.fromEnv())
     spark.sparkContext.setLogLevel("WARN")
 
     val records = Records.fromEvents(spark, sfDir)

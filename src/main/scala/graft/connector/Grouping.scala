@@ -59,11 +59,6 @@ object Grouping {
       ((rn - 1).cast(LongType) / maxRecords).cast(LongType)
     }
 
-  /** O2 — start_offset of each record's group: min(offset) over the group
-    * (window aggregate, no sort needed beyond the chunking one). */
-  def startOffset(groupCols: Seq[Column]): Column =
-    min(col("offset")).over(Window.partitionBy(groupCols: _*))
-
   /** O16 — render the file-name template distributively as a Column.
     * `bindings` maps template variable name → column; `padding=true`
     * becomes `lpad(..., 20, "0")` (reference renders `%020d`,

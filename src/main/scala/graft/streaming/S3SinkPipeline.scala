@@ -128,39 +128,31 @@ object S3SinkPipeline {
     if (batch.isEmpty) return // lazy acquisition: no records → no requests
     if (config.formatType == FormatType.Csv) checkCsvSchema(batch)
 
-    val named = config.groupingMode match {
+    // the grouping keys the annotation clusters by: the Parquet writer's
+    // per-object groups, and the line writer's repartition keys, so the
+    // annotate+write pipeline needs a single exchange
+    val (named, groupCols) = config.groupingMode match {
       case GroupingMode.KeyRecord =>
         val compacted = Grouping.compactLatestByKey(batch)
         val bindings = Map(
           "key"       -> col("_k"),
           "topic"     -> col("topic"),
           "partition" -> col("partition"))
-        compacted.withColumn("_filename",
+        (compacted.withColumn("_filename",
           concat(Grouping.filenameColumn(config.fileNameTemplate, bindings, now),
-            lit(config.compression.extension)))
+            lit(config.compression.extension))), Seq("_k"))
       case GroupingMode.TopicPartitionRecord =>
-        Grouping.annotate(batch, config, now, schemaFingerprint)
+        (Grouping.annotate(batch, config, now, schemaFingerprint),
+          Seq("topic", "partition"))
     }
-
-    val prefixed = named
 
     config.formatType match {
       case FormatType.Parquet =>
-        val pqGroupCols = config.groupingMode match {
-          case GroupingMode.KeyRecord            => Seq("_k")
-          case GroupingMode.TopicPartitionRecord => Seq("topic", "partition")
-        }
-        ParquetEnvelopeWriter.write(prefixed, baseUri, config, pqGroupCols,
+        ParquetEnvelopeWriter.write(named, baseUri, config, groupCols,
           wholeObjectCompression = config.parquetWholeObjectCompression)
       case _ =>
-        val withLine = prefixed.withColumn("_line",
+        val withLine = named.withColumn("_line",
           lineColumn(config, batch.schema))
-        // repartition on the same keys the grouping window clustered by, so
-        // the annotate+write pipeline needs a single exchange
-        val groupCols = config.groupingMode match {
-          case GroupingMode.KeyRecord            => Seq("_k")
-          case GroupingMode.TopicPartitionRecord => Seq("topic", "partition")
-        }
         GroupFileWriter.writeLines(withLine, baseUri, config.formatType,
           config.compression, groupCols)
     }

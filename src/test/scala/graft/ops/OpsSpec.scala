@@ -810,22 +810,33 @@ class OpsSpec extends SparkSuite {
     assert(ok == 14.0)
   }
 
-  test("vec_dot is SQL-callable once registered (GraftExtensions wiring)") {
-    // GraftExtensions installs into a SparkSessionExtensions without error
-    new graft.plans.GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions)
-    // and the same builder registered on a live session evaluates in SQL
-    val sess = spark.newSession()
-    sess.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.VectorDot(children.head, children(1)),
-      "built-in")
-    val r = sess.sql(
-      "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
-      .collect()(0).getDouble(0)
-    assert(r == 11.0)
+  test("vec_dot is bit-identical to an in-order double fold " +
+    "(interpreted and codegen)") {
+    import graft.functions.VectorExpressions
+    val rnd = new scala.util.Random(17)
+    // magnitudes spread over six decades, so a reordered or float-width
+    // sum differs from the in-order double fold in the low bits
+    def vec(n: Int): Array[Float] = Array.fill(n)(
+      (rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3)).toFloat)
+    val cases = Seq(0, 1, 64, 257).flatMap(n => Seq.fill(3)((vec(n), vec(n))))
+    val expected = cases.map { case (a, b) =>
+      var acc = 0.0
+      a.indices.foreach(i => acc += a(i).toDouble * b(i).toDouble)
+      acc
+    }
+    val df = cases.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("i", "a", "b")
+    // a local relation folds the projection with the interpreted eval;
+    // after an exchange it runs as whole-stage generated code
+    for (input <- Seq(df, df.repartition(2))) {
+      val got = input.select($"i", VectorExpressions.vecDot($"a", $"b"))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      expected.zipWithIndex.foreach { case (e, i) =>
+        assert(java.lang.Double.doubleToRawLongBits(got(i)) ==
+          java.lang.Double.doubleToRawLongBits(e),
+          s"case $i (length ${cases(i)._1.length}): ${got(i)} vs $e")
+      }
+    }
   }
 
   test("HyperplaneSignBits mask matches a per-plane driver-side dot fold") {

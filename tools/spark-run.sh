@@ -1,6 +1,10 @@
 #!/bin/bash
 # Run a main class from the compiled repo against the Spark jars, with the
-# JDK17 add-opens Spark needs (mirrors build.sbt's javaOptions).
+# JDK17 add-opens Spark needs (mirrors build.sbt's javaOptions). The classes
+# are those of the checkout this script belongs to, so a second worktree runs
+# its own build; the jars are those of the Spark install spark-submit belongs to.
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+JARS="$(dirname "$(dirname "$(command -v spark-submit)")")/jars"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,5 +17,5 @@ exec java $OPENS \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:$JARS/*" \
   "$@"
