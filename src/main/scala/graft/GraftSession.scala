@@ -42,20 +42,4 @@ object GraftSession {
     })
     spark
   }
-
-  /** Spill-aware sizing for a target dataset/cluster: shuffle partitions so
-    * each post-shuffle partition is ~`targetPartitionBytes` (fits exec
-    * memory with headroom), floor of 2 tasks per core for scheduling slack,
-    * and scan split size aligned to the same target. AQE coalescing trims
-    * the excess at runtime — oversizing here is cheap, undersizing spills.
-    */
-  def tuneFor(totalDataBytes: Long, executorCores: Int,
-              targetPartitionBytes: Long = 128L * 1024 * 1024): Map[String, String] = {
-    val byData = math.ceil(totalDataBytes.toDouble / targetPartitionBytes).toLong
-    val byCores = executorCores.toLong * 2
-    Map(
-      "spark.sql.shuffle.partitions" -> math.max(byData, byCores).toString,
-      "spark.sql.files.maxPartitionBytes" -> targetPartitionBytes.toString,
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
-  }
 }

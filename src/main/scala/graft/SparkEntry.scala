@@ -1,11 +1,13 @@
 package graft
 
+import java.time.ZonedDateTime
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.config.{OutputField, OutputFieldEncodingType => Enc, OutputFieldType => F}
+import graft.config.{OutputField, SinkConfig, OutputFieldEncodingType => Enc, OutputFieldType => F}
 import graft.connector.{Grouping, OutputFields, Records}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -20,21 +22,16 @@ object SparkEntry {
 
   /** Flagship query (SURVEY.md §7.2 minimum end-to-end slice): events →
     * canonical records → grouped by (topic, partition) → base64 CSV lines
-    * with rendered `{{topic}}-{{partition}}-{{start_offset}}.gz` file names.
+    * with rendered `{{topic}}-{{partition}}-{{start_offset:padding=true}}.gz`
+    * file names — the sink's own `Grouping.annotate` and `csvLine`.
     */
   def entry(spark: SparkSession): DataFrame = {
     val records = Records.fromEvents(spark, "/root/testdata/sf0.001")
-    val fields = Seq(
-      OutputField(F.Value, Enc.Base64), OutputField(F.Key, Enc.Base64),
-      OutputField(F.Timestamp, Enc.None), OutputField(F.Offset, Enc.None))
-    val w = Window.partitionBy(col("topic"), col("partition"))
-    records
-      .withColumn("_start_offset", min(col("offset")).over(w))
-      .select(
-        concat(col("topic"), lit("-"), col("partition"), lit("-"),
-          lpad(col("_start_offset").cast(StringType), 20, "0"), lit(".gz"))
-          .as("filename"),
-        OutputFields.csvLine(fields).as("line"))
+    val config = sinkConfig("format.output.type" -> "csv",
+      "format.output.fields" -> "value,key,timestamp,offset")
+    named(records, config)
+      .select(col("_filename").as("filename"),
+        OutputFields.csvLine(config.outputFields).as("line"))
   }
 
   // ---------------------------------------------------------------- helpers
@@ -44,6 +41,18 @@ object SparkEntry {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
+
+  /** A sink config naming objects `topic-partition-<%020d start_offset>.gz`
+    * plus `props`. */
+  private def sinkConfig(props: (String, String)*): SinkConfig =
+    SinkConfig.parse(Map("aws.s3.bucket.name" -> "graft",
+      "file.name.template" -> "{{topic}}-{{partition}}-{{start_offset:padding=true}}") ++ props)
+      .fold(e => throw new IllegalArgumentException(e.mkString("; ")), identity)
+
+  /** Records with the sink's `_filename` column. The template has no time
+    * variable, so the wallclock passed is immaterial. */
+  private def named(records: DataFrame, config: SinkConfig = sinkConfig()): DataFrame =
+    Grouping.annotate(records, config, ZonedDateTime.now(config.timestampZone))
 
   /** Shared DuckDB CTE prefix adapting `events` to the record model. */
   private val R = "WITH " + Records.duckRecordsCte + "\n"
@@ -78,14 +87,9 @@ object SparkEntry {
 
     // O16 — distributed filename rendering with zero-padded start_offset.
     "sink_filename_template" -> ((s, dir) => {
-      rec(s, dir)
-        .groupBy(col("topic"), col("partition").as("part"))
-        .agg(min("offset").as("start_offset"), count(lit(1)).as("cnt"))
-        .select(
-          concat(col("topic"), lit("-"), col("part"), lit("-"),
-            lpad(col("start_offset").cast(StringType), 20, "0"), lit(".gz"))
-            .as("fname"),
-          col("cnt"))
+      named(rec(s, dir))
+        .groupBy(col("_filename").as("fname"))
+        .agg(count(lit(1)).as("cnt"))
         .orderBy(col("fname"))
     }),
 
@@ -114,10 +118,8 @@ object SparkEntry {
 
     // O5 — file.max.records=100 chunking: per-chunk extents.
     "sink_max_records_chunk" -> ((s, dir) => {
-      val w = Window.partitionBy(col("topic"), col("partition")).orderBy(col("offset"))
       rec(s, dir)
-        .withColumn("chunk",
-          ((row_number().over(w) - 1).cast(LongType) / 100).cast(LongType))
+        .withColumn("chunk", Grouping.chunkIndex(100))
         .groupBy(col("topic"), col("partition").as("part"), col("chunk"))
         .agg(min("offset").as("start_offset"), max("offset").as("end_offset"),
           count(lit(1)).as("cnt"))
@@ -175,14 +177,9 @@ object SparkEntry {
     // O11 — JSONL line encode with all four scalar fields; timestamp is
     // ISO-8601 like the reference (README.md:272).
     "sink_jsonl_line" -> ((s, dir) => {
-      rec(s, dir)
-        .select(col("offset").as("off"),
-          to_json(struct(
-            col("value").cast(StringType).as("value"),
-            col("key").cast(StringType).as("key"),
-            col("offset").as("offset"),
-            date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-              .as("timestamp"))).as("line"))
+      val r = rec(s, dir)
+      val fields = Seq(F.Value, F.Key, F.Offset, F.Timestamp).map(OutputField(_, Enc.None))
+      r.select(col("offset").as("off"), OutputFields.jsonLine(fields, r.schema).as("line"))
         .orderBy(col("off"))
     }),
 

@@ -1,6 +1,7 @@
 package graft.connector
 
-import java.time.ZonedDateTime
+import java.time.{ZoneId, ZoneOffset, ZonedDateTime}
+import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -26,28 +27,6 @@ import graft.template.Template
   */
 object Grouping {
 
-  /** Time-bucket columns for `{{timestamp:unit=…}}` template vars (O4).
-    * The reference buckets on *wallclock* time only
-    * (`S3SinkConfig.java:492-503`): pass the batch-start wallclock instant so
-    * every record in a micro-batch lands in the same bucket. For batch-mode
-    * analytics over historical data we expose record-time bucketing too. */
-  def wallclockBucket(unit: String, now: ZonedDateTime): Column = {
-    val pattern = unit match {
-      case "yyyy" => "yyyy"
-      case "MM"   => "MM"
-      case "dd"   => "dd"
-      case "HH"   => "HH"
-      case other  => throw new IllegalArgumentException(s"bad timestamp unit $other")
-    }
-    lit(now.format(java.time.format.DateTimeFormatter.ofPattern(pattern)))
-  }
-
-  def recordTimeBucket(unit: String, ts: Column): Column =
-    date_format(ts, unit match {
-      case "yyyy" | "MM" | "dd" | "HH" => unit
-      case other => throw new IllegalArgumentException(s"bad timestamp unit $other")
-    })
-
   /** O5 — chunk index within a (topic, partition) group when
     * `file.max.records` caps file size: records ordered by offset, chunk i
     * holds records [i*N, (i+1)*N). 0 when unlimited. */
@@ -59,26 +38,40 @@ object Grouping {
       ((rn - 1).cast(LongType) / maxRecords).cast(LongType)
     }
 
-  /** O16 — render the file-name template distributively as a Column.
-    * `bindings` maps template variable name → column; `padding=true`
-    * becomes `lpad(..., 20, "0")` (reference renders `%020d`,
-    * `OldFullKeyFormatters.java:29-33`). */
+  /** O16/O17 — render a file-name or legacy prefix template as one Column,
+    * so every name is computed distributively next to its records.
+    * `bindings` maps template variable name → column. `padding=true` pads
+    * offsets to 20 digits and partitions to 10 (`%020d` / `%010d`,
+    * `OldFullKeyFormatters.java:29-33`, `README.md:66-75`).
+    * `{{timestamp:unit=…}}` (O4) and the prefix vars `utc_date` /
+    * `local_date` render from the batch wallclock `now` — the reference's
+    * only time source (`S3SinkConfig.java:492-503`, `S3SinkTask.java:
+    * 186-193`) — so a whole micro-batch lands in one bucket; `timestamp`
+    * renders in `now`'s zone. */
   def filenameColumn(template: Template, bindings: Map[String, Column],
                      now: ZonedDateTime): Column = {
-    val parts: Seq[Column] = template.parts.map {
+    def date(zone: ZoneId): Column =
+      lit(now.withZoneSameInstant(zone).format(DateTimeFormatter.ISO_LOCAL_DATE))
+    concat(template.parts.map {
       case Template.Literal(s) => lit(s)
+      case Template.Var("timestamp", param) =>
+        val unit = param.collect {
+          case Template.Param("unit", u @ ("yyyy" | "MM" | "dd" | "HH")) => u
+        }.getOrElse(throw new IllegalArgumentException(
+          s"timestamp needs unit=yyyy|MM|dd|HH, got ${param.getOrElse("none")}"))
+        lit(now.format(DateTimeFormatter.ofPattern(unit)))
+      case Template.Var("utc_date", _) => date(ZoneOffset.UTC)
+      case Template.Var("local_date", _) => date(ZoneId.systemDefault())
       case Template.Var(name, param) =>
         val base = bindings.getOrElse(name,
           throw new IllegalArgumentException(s"no column binding for template var $name"))
+          .cast(StringType)
         param match {
           case Some(Template.Param("padding", "true")) =>
-            lpad(base.cast(StringType),
-              if (name == "partition") 10 else 20, "0")
-          case Some(Template.Param("unit", u)) => recordTimeBucket(u, base)
-          case _ => base.cast(StringType)
+            lpad(base, if (name == "partition") 10 else 20, "0")
+          case _ => base
         }
-    }
-    concat(parts: _*)
+    }: _*)
   }
 
   /** O3 — key compaction: latest record per key (the deterministic
@@ -103,6 +96,10 @@ object Grouping {
         struct(col("offset"), col("partition"))).as("_r"))
       .select(col("_k") +: dataCols.toSeq.map(c => col(s"_r.$c").as(c)): _*)
   }
+
+  /** The object name after a legacy prefix (`S3SinkTask.java:196-205`). */
+  private val LegacyName =
+    Template.of("{{topic}}-{{partition}}-{{start_offset:padding=true}}")
 
   /** Full grouping annotation for topic-partition mode: adds `_chunk`,
     * `_start_offset` and `_filename` columns per the parsed config. One
@@ -144,43 +141,16 @@ object Grouping {
       "start_offset" -> col("_start_offset"),
       "key"          -> coalesce(col("key").cast(StringType), lit("null")))
     val zonedNow = now.withZoneSameInstant(config.timestampZone)
-
-    // render any template to filename-column parts; timestamp vars resolve
-    // per-occurrence (a template may use several units), utc/local_date are
-    // batch wallclock (legacy prefix vars, S3SinkTask.java:186-193)
-    def renderParts(tpl: Template): Seq[Column] = tpl.parts.map {
-      case Template.Literal(s) => lit(s)
-      case Template.Var("timestamp", Some(Template.Param("unit", u))) =>
-        wallclockBucket(u, zonedNow)
-      case Template.Var("utc_date", _) =>
-        lit(now.withZoneSameInstant(java.time.ZoneId.of("Z"))
-          .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE))
-      case Template.Var("local_date", _) =>
-        lit(now.withZoneSameInstant(java.time.ZoneId.systemDefault())
-          .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE))
-      case Template.Var(name, param) =>
-        val base = bindings(name)
-        param match {
-          case Some(Template.Param("padding", "true")) =>
-            // widths differ per variable: offsets %020d, partitions %010d
-            // (README.md:66-75)
-            val width = if (name == "partition") 10 else 20
-            lpad(base.cast(StringType), width, "0")
-          case _ => base.cast(StringType)
-        }
-    }
-
     // Legacy naming when a prefix is configured (S3SinkTask.java:157-205):
     // renderedPrefix + topic-partition-<%020d start_offset>; the modern
     // file.name.template names files only when no prefix is set.
-    val fnameParts: Seq[Column] =
-      if (config.usesFileNameTemplate) renderParts(config.fileNameTemplate)
-      else renderParts(config.prefixTemplate) ++ Seq(
-        col("topic"), lit("-"), col("partition").cast(StringType), lit("-"),
-        lpad(col("_start_offset").cast(StringType), 20, "0"))
+    val fname =
+      if (config.usesFileNameTemplate)
+        filenameColumn(config.fileNameTemplate, bindings, zonedNow)
+      else concat(filenameColumn(config.prefixTemplate, bindings, zonedNow),
+        filenameColumn(LegacyName, bindings, zonedNow))
     withChunk
       .withColumn("_start_offset", start)
-      .withColumn("_filename",
-        concat(concat(fnameParts: _*), lit(config.compression.extension)))
+      .withColumn("_filename", concat(fname, lit(config.compression.extension)))
   }
 }

@@ -97,14 +97,4 @@ object OutputFields {
   /** O11 — one JSONL line: `{"field": value, …}` in configured field order. */
   def jsonLine(fields: Seq[OutputField], schema: StructType): Column =
     to_json(struct(fields.map(jsonField(_, schema)): _*))
-
-  /** O13 — the Parquet envelope record `{key, offset, timestamp, headers,
-    * value}` (reference `README.md:355-405`). */
-  def parquetEnvelope(fields: Seq[OutputField], schema: StructType): Column =
-    struct(fields.map(jsonField(_, schema)): _*)
-
-  /** O14 — envelope unwrap: with `format.output.envelope=false` and a single
-    * struct-valued output field, drop the `{"value": …}` wrapper
-    * (`README.md:342-353`). `valueStruct` is the decoded struct column. */
-  def unwrapped(valueStruct: Column): Column = valueStruct
 }

@@ -1,10 +1,10 @@
 package graft.formats
 
-import java.io.OutputStream
-import java.util.zip.GZIPOutputStream
+import java.io.{InputStream, OutputStream}
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import com.github.luben.zstd.ZstdOutputStream
-import org.xerial.snappy.SnappyOutputStream
+import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
+import org.xerial.snappy.{SnappyInputStream, SnappyOutputStream}
 
 import graft.config.CompressionType
 
@@ -22,5 +22,13 @@ object Compression {
     case CompressionType.Gzip   => new GZIPOutputStream(out)
     case CompressionType.Snappy => new SnappyOutputStream(out)
     case CompressionType.Zstd   => new ZstdOutputStream(out)
+  }
+
+  /** The inverse of [[wrap]]: decode an object written under codec `t`. */
+  def unwrap(in: InputStream, t: CompressionType): InputStream = t match {
+    case CompressionType.None   => in
+    case CompressionType.Gzip   => new GZIPInputStream(in)
+    case CompressionType.Snappy => new SnappyInputStream(in)
+    case CompressionType.Zstd   => new ZstdInputStream(in)
   }
 }

@@ -1,5 +1,6 @@
 package graft.formats
 
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
@@ -55,10 +56,11 @@ object GroupFileWriter {
 
   /** Write `df` — which must contain `_filename` (string) and `_line`
     * (string) columns plus an `offset` ordering column — one compressed
-    * object per distinct `_filename` under `baseUri`. Returns nothing; the
-    * write is the effect (used inside `foreachBatch`).
-    */
-  /** `groupCols` is any column set that determines `_filename` (e.g.
+    * object per distinct `_filename` under `baseUri`. A row whose `_line` is
+    * null is skipped. Returns nothing; the write is the effect (used inside
+    * `foreachBatch`).
+    *
+    * `groupCols` is any column set that determines `_filename` (e.g.
     * (topic, partition)) — repartitioning on it satisfies the upstream
     * grouping window's required distribution, so Catalyst plans ONE
     * exchange for annotate+write instead of two. Defaults to `_filename`
@@ -79,46 +81,71 @@ object GroupFileWriter {
       }
   }
 
-  private def writePartition(it: Iterator[Row], baseUri: String,
+  private[formats] def writePartition(it: Iterator[Row], baseUri: String,
                              conf: Configuration, compression: CompressionType,
                              jsonArray: Boolean): Unit = {
-    var current: String = null
-    var out: java.io.OutputStream = null
     var first = true
+    writeObjects[OutputStream](it)(
+      open = { name =>
+        val path = resolveUnder(baseUri, name)
+        val fs = FileSystem.get(path.toUri, conf)
+        fs.mkdirs(path.getParent)
+        // overwrite=true: deterministic names make retries idempotent
+        val out = Compression.wrap(fs.create(path, true), compression)
+        if (jsonArray) out.write('[')
+        first = true
+        out
+      },
+      // a null line (envelope off, struct value, tombstone) has nothing
+      // representable: skipped, the policy of ParquetEnvelopeWriter's unwrap
+      write = (out, row) => if (!row.isNullAt(1)) {
+        if (jsonArray) {
+          if (!first) out.write(',')
+          out.write('\n')
+        }
+        out.write(row.getString(1).getBytes(StandardCharsets.UTF_8))
+        if (!jsonArray) out.write('\n')
+        first = false
+      },
+      close = { out =>
+        if (jsonArray) {
+          if (!first) out.write('\n')
+          out.write(']')
+        }
+        out.close()
+      },
+      release = _.close())
+  }
 
-    def close(): Unit = if (out != null) {
-      if (jsonArray) {
-        if (!first) out.write('\n')
-        out.write(']')
+  /** The loop both object writers run per task. Rows arrive sorted by
+    * object name (column 0); a name change closes the open object and opens
+    * the next, so a task holds one object at a time. If anything throws
+    * while an object is open, `release` frees it — a stream or writer left
+    * open leaks its descriptor and buffers on a long-lived executor — and a
+    * failure inside `release` is attached as suppressed, so the task's own
+    * exception is the one that propagates. */
+  private[formats] def writeObjects[O](it: Iterator[Row])(open: String => O,
+      write: (O, Row) => Unit, close: O => Unit, release: O => Unit): Unit = {
+    var current: String = null
+    var obj: Option[O] = None
+    try {
+      it.foreach { row =>
+        val name = row.getString(0)
+        if (name != current) {
+          obj.foreach(close)
+          obj = None // closed: nothing to release should `open` throw
+          obj = Some(open(name))
+          current = name
+        }
+        write(obj.get, row)
       }
-      out.close()
-      out = null
+      obj.foreach(close)
+    } catch {
+      case e: Throwable =>
+        obj.foreach { o =>
+          try release(o) catch { case r: Throwable => e.addSuppressed(r) }
+        }
+        throw e
     }
-
-    def open(name: String): Unit = {
-      val path = resolveUnder(baseUri, name)
-      val fs = FileSystem.get(path.toUri, conf)
-      fs.mkdirs(path.getParent)
-      // overwrite=true: deterministic names make retries idempotent
-      out = Compression.wrap(fs.create(path, true), compression)
-      if (jsonArray) out.write('[')
-      first = true
-    }
-
-    it.foreach { row =>
-      val name = row.getString(0)
-      if (name != current) {
-        close(); open(name); current = name
-      }
-      val line = row.getString(1)
-      if (jsonArray) {
-        if (!first) out.write(',')
-        out.write('\n')
-      }
-      out.write(line.getBytes(StandardCharsets.UTF_8))
-      if (!jsonArray) out.write('\n')
-      first = false
-    }
-    close()
   }
 }

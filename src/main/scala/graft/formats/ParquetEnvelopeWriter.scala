@@ -1,12 +1,14 @@
 package graft.formats
 
+import java.io.File
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
@@ -47,25 +49,6 @@ import graft.config.{CompressionType, OutputFieldType, SinkConfig}
   * sort within partitions, one open writer per task at a time.
   */
 object ParquetEnvelopeWriter {
-
-  /** The reference's full envelope `{key, offset, timestamp, headers: map,
-    * value}` (`README.md:357-405` — headers an Avro MAP with same-typed
-    * values) — what [[schemaFor]] yields for
-    * `format.output.fields=key,offset,timestamp,headers,value` with a
-    * scalar value. Parquet MAP annotation reads back as Spark `MapType`. */
-  val EnvelopeSchema: MessageType = MessageTypeParser.parseMessageType(
-    """message envelope {
-      |  optional binary key (STRING);
-      |  required int64 offset;
-      |  required int64 timestamp;
-      |  optional group headers (MAP) {
-      |    repeated group key_value {
-      |      required binary key (STRING);
-      |      optional binary value;
-      |    }
-      |  }
-      |  optional binary value (STRING);
-      |}""".stripMargin)
 
   /** Fewest bytes whose two's-complement range covers `precision` decimal
     * digits (mirrors Spark's `Decimal.minBytesForPrecision`). */
@@ -200,7 +183,7 @@ object ParquetEnvelopeWriter {
   /** One top-level output column: how to project it and how to write it.
     * `idx` is the column's position in the projected row (0 = `_filename`,
     * 1 = the hidden `_offset` sort key, data columns from 2). */
-  private sealed trait FieldWriter extends Serializable {
+  private[formats] sealed trait FieldWriter extends Serializable {
     def idx: Int
     def write(g: Group, row: Row): Unit
     /** True if this record must not be written at all (see [[UnwrapField]]). */
@@ -249,11 +232,6 @@ object ParquetEnvelopeWriter {
     override def skipsRecord(row: Row): Boolean = row.isNullAt(idx)
   }
 
-  /** The parquet MessageType [[write]] will produce for this config +
-    * record value type (exposed for tests/docs). */
-  def schemaFor(config: SinkConfig, valueDt: DataType): MessageType =
-    plan(config, valueDt)._3
-
   /** Whether O14 unwrap applies: envelope disabled, single `value` output
     * field, record-typed value (`README.md:434-436` — ignored otherwise).
     *
@@ -269,7 +247,7 @@ object ParquetEnvelopeWriter {
       valueDt.isInstanceOf[StructType]
 
   /** (projected data columns, field writers, message schema) for a config. */
-  private def plan(config: SinkConfig, valueDt: DataType)
+  private[formats] def plan(config: SinkConfig, valueDt: DataType)
       : (Seq[Column], Seq[FieldWriter], MessageType) = {
     if (unwraps(config, valueDt)) {
       val st = valueDt.asInstanceOf[StructType]
@@ -353,7 +331,7 @@ object ParquetEnvelopeWriter {
       }
   }
 
-  private def writePartition(it: Iterator[Row], baseUri: String,
+  private[formats] def writePartition(it: Iterator[Row], baseUri: String,
                              conf: Configuration,
                              codecName: CompressionCodecName,
                              outerCodec: CompressionType,
@@ -362,65 +340,49 @@ object ParquetEnvelopeWriter {
     val messageType = MessageTypeParser.parseMessageType(schemaStr)
     val factory = new SimpleGroupFactory(messageType)
     val wholeObject = outerCodec != CompressionType.None
-    var current: String = null
-    var writer: org.apache.parquet.hadoop.ParquetWriter[Group] = null
-    var spool: java.io.File = null
-    var dest: Path = null
-
-    def close(): Unit = if (writer != null) {
-      writer.close(); writer = null
-      if (wholeObject) {
-        // stream the finished parquet file through the outer codec to the
-        // destination — the reference's exact object layout (parquet
-        // bytes inside one codec stream, S3SinkTask.java:135-140)
-        val fs = dest.getFileSystem(conf)
-        val out = Compression.wrap(fs.create(dest, true), outerCodec)
-        try java.nio.file.Files.copy(spool.toPath, out)
-        finally out.close()
-        spool.delete(); spool = null; dest = null
-      }
-    }
-
-    def open(name: String): Unit = {
-      val target = GroupFileWriter.resolveUnder(baseUri, name)
-      val path = if (wholeObject) {
-        dest = target
-        spool = java.io.File.createTempFile("graft-parquet-spool", ".parquet")
-        spool.delete() // ParquetWriter refuses to overwrite via raw-local fs
-        new Path(spool.toURI)
-      } else target
-      writer = ExampleParquetWriter.builder(path)
-        .withConf(conf)
-        .withType(messageType)
-        .withCompressionCodec(codecName)
-        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-        .build()
-    }
-
-    try {
-      it.foreach { row =>
-        val name = row.getString(0)
-        if (name != current) { close(); open(name); current = name }
+    // one open object: its parquet writer and, in strict-parity mode, the
+    // task-local spool file it writes plus the destination the spool is
+    // copied to on close
+    GroupFileWriter.writeObjects[(ParquetWriter[Group], Option[(File, Path)])](it)(
+      open = { name =>
+        val target = GroupFileWriter.resolveUnder(baseUri, name)
+        val spool = if (wholeObject) {
+          val f = File.createTempFile("graft-parquet-spool", ".parquet")
+          f.delete() // ParquetWriter refuses to overwrite via raw-local fs
+          Some((f, target))
+        } else None
+        val writer = ExampleParquetWriter
+          .builder(spool.fold(target) { case (f, _) => new Path(f.toURI) })
+          .withConf(conf)
+          .withType(messageType)
+          .withCompressionCodec(codecName)
+          .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+          .build()
+        (writer, spool)
+      },
+      write = { case ((writer, _), row) =>
         if (!writers.exists(_.skipsRecord(row))) {
           val g = factory.newGroup()
           writers.foreach(_.write(g, row))
           writer.write(g)
         }
-      }
-      close()
-    } finally {
-      // a task failure between open() and close() must not leak the
-      // still-open ParquetWriter (fd + native column buffers on a
-      // long-lived executor) nor the task-local spool file (a full
-      // uncompressed parquet object per retry). Close the writer FIRST —
-      // deleting a file under an open handle is at best platform-dependent
-      // — swallowing the secondary failure so the original task exception
-      // stays the one that propagates.
-      if (writer != null) {
-        try writer.close() catch { case _: Throwable => () }
-        writer = null
-      }
-      if (spool != null) spool.delete()
-    }
+      },
+      close = { case (writer, spool) =>
+        writer.close()
+        // stream the finished parquet file through the outer codec to the
+        // destination — the reference's exact object layout (parquet bytes
+        // inside one codec stream, S3SinkTask.java:135-140)
+        spool.foreach { case (f, dest) =>
+          val out = Compression.wrap(dest.getFileSystem(conf).create(dest, true), outerCodec)
+          try java.nio.file.Files.copy(f.toPath, out)
+          finally out.close()
+          f.delete()
+        }
+      },
+      // close the writer before deleting its spool — deleting a file under
+      // an open handle is at best platform-dependent
+      release = { case (writer, spool) =>
+        try writer.close() finally spool.foreach(_._1.delete())
+      })
   }
 }

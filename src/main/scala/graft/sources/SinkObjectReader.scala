@@ -2,16 +2,14 @@ package graft.sources
 
 import java.io.{BufferedReader, ByteArrayInputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPInputStream
 
 import scala.collection.mutable.ListBuffer
 
-import com.github.luben.zstd.ZstdInputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.xerial.snappy.SnappyInputStream
 
-import graft.config.{CompressionType, OutputField, OutputFieldEncodingType, OutputFieldType, SinkConfig}
+import graft.config.{CompressionType, OutputFieldEncodingType, OutputFieldType, SinkConfig}
+import graft.formats.Compression
 
 /** Reads the sink's own objects back into records — the downstream half of
   * the reference's ecosystem (consumers read the S3 objects the connector
@@ -21,8 +19,8 @@ import graft.config.{CompressionType, OutputField, OutputFieldEncodingType, Outp
   * field decode (unbase64 per the configured encoding).
   *
   * Works for all four codecs including zstd/snappy, which Hadoop's text
-  * codecs can't decode without native libs — we decode with the same
-  * snappy-java / zstd-jni streams the writer used.
+  * codecs can't decode without native libs — [[Compression.unwrap]]
+  * decodes with the same snappy-java / zstd-jni libraries the writer used.
   */
 object SinkObjectReader {
 
@@ -31,12 +29,7 @@ object SinkObjectReader {
       name.endsWith(c.extension)).getOrElse(CompressionType.None)
 
   private def decodeLines(bytes: Array[Byte], c: CompressionType): List[String] = {
-    val in = c match {
-      case CompressionType.None   => new ByteArrayInputStream(bytes)
-      case CompressionType.Gzip   => new GZIPInputStream(new ByteArrayInputStream(bytes))
-      case CompressionType.Snappy => new SnappyInputStream(new ByteArrayInputStream(bytes))
-      case CompressionType.Zstd   => new ZstdInputStream(new ByteArrayInputStream(bytes))
-    }
+    val in = Compression.unwrap(new ByteArrayInputStream(bytes), c)
     val br = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
     try {
       val out = ListBuffer.empty[String]

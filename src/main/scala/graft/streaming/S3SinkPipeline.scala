@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.config.{FormatType, GroupingMode, OutputField, OutputFieldEncodingType, OutputFieldType, SinkConfig}
+import graft.config.{FormatType, GroupingMode, OutputFieldType, SinkConfig}
 import graft.connector.{Grouping, OutputFields}
 import graft.formats.{GroupFileWriter, ParquetEnvelopeWriter}
-import graft.template.Template
 
 /** End-to-end Structured Streaming wiring (SURVEY.md §2 O1, O19; §3.2):
   * Kafka source → micro-batch `foreachBatch` → group → encode → exact-named
@@ -62,11 +61,6 @@ object S3SinkPipeline {
       .select(col("topic"), col("partition"), col("offset"), col("timestamp"),
         col("key"), col("value"), col("headers"))
 
-  /** [[sourceReader]] at the production `"kafka"` format. */
-  def kafkaReader(spark: SparkSession, config: SinkConfig,
-                  bootstrapServers: String): DataFrame =
-    sourceReader(spark, config, bootstrapServers)
-
   /** CSV schema strictness (SURVEY.md §7.4 item 4): the reference's CSV
     * writer accepts BYTES ONLY — even STRING values throw, with the
     * verbatim message asserted in `S3SinkTaskTest.java:474-498` ("…must be
@@ -95,7 +89,8 @@ object S3SinkPipeline {
   }
 
   /** The line column for text formats, honoring envelope semantics (O14):
-    * envelope off + single struct-valued field → the value object itself. */
+    * envelope off + single struct-valued field → the value object itself,
+    * null for a null value (the writer skips such records). */
   private def lineColumn(config: SinkConfig, schema: StructType): Column = {
     val fields = config.outputFields
     val valueIsStruct = schema("value").dataType.isInstanceOf[StructType]
@@ -121,11 +116,12 @@ object S3SinkPipeline {
 
   /** O19 — one micro-batch: group, encode, write. The `foreachBatch` body.
     * `now` is the batch-start wallclock (the reference's only timestamp
-    * source, `S3SinkConfig.java:492-503`). */
+    * source, `S3SinkConfig.java:492-503`). An empty batch makes no requests
+    * (`S3SinkTask.java:114-144`): both writers open an object only when its
+    * first row arrives. */
   def writeBatch(batch: DataFrame, config: SinkConfig, baseUri: String,
                  now: ZonedDateTime,
                  schemaFingerprint: Option[Column] = None): Unit = {
-    if (batch.isEmpty) return // lazy acquisition: no records → no requests
     if (config.formatType == FormatType.Csv) checkCsvSchema(batch)
 
     // the grouping keys the annotation clusters by: the Parquet writer's

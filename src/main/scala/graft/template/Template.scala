@@ -1,8 +1,5 @@
 package graft.template
 
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneId, ZonedDateTime}
-
 /** Mustache-ish `{{var}}` / `{{var:param=value}}` filename-template engine.
   *
   * Behavioral parity with the reference's `Template` DSL (used at
@@ -11,15 +8,16 @@ import java.time.{Instant, ZoneId, ZonedDateTime}
   *
   *   - variables: `topic`, `partition`, `start_offset`, `timestamp`, `key`
   *     (file-name template) plus legacy `utc_date`, `local_date` (prefix template)
-  *   - `partition`/`start_offset` accept `padding=true` → rendered `%020d`
-  *     (reference: `OldFullKeyFormatters.java:29-33`)
+  *   - `partition`/`start_offset` accept `padding=true` → rendered `%010d`
+  *     / `%020d` (reference: `OldFullKeyFormatters.java:29-33`,
+  *     `README.md:66-75`)
   *   - `timestamp` requires `unit=yyyy|MM|dd|HH` (reference:
   *     `S3SinkConfig.java:869-874`)
   *
-  * Pure Scala — no Spark dependency. The Spark pipeline mirrors the same
-  * rendering with Catalyst columns (see [[graft.connector.Grouping]]) so the
-  * file name is computed distributively; this class is the driver-side
-  * validator and the per-group renderer used by the batch file writer.
+  * Pure Scala — no Spark dependency. This class parses and validates;
+  * rendering is [[graft.connector.Grouping.filenameColumn]], which turns the
+  * parsed parts into one Catalyst column so every file name is computed
+  * distributively, next to the records it names.
   */
 final class Template private (val raw: String, val parts: List[Template.Part]) {
 
@@ -30,35 +28,6 @@ final class Template private (val raw: String, val parts: List[Template.Part]) {
 
   /** Distinct variable names (used for grouping-mode resolution). */
   def variableNames: Set[String] = variables.map(_.name).toSet
-
-  /** Render with a binding function from variable → value. */
-  def render(bindings: Map[String, VarBinding]): String = {
-    val sb = new StringBuilder
-    parts.foreach {
-      case Literal(s) => sb.append(s)
-      case v: Var =>
-        val b = bindings.getOrElse(
-          v.name,
-          throw new IllegalArgumentException(s"Variable `${v.name}` has no binding"))
-        sb.append(b.render(v.param))
-    }
-    sb.toString
-  }
-
-  /** Fluent single-use binder mirroring the reference's
-    * `template.instance().bindVariable(...).render()` call shape.
-    */
-  final class Instance private[Template] () {
-    private var bound = Map.empty[String, VarBinding]
-    def bindVariable(name: String, fn: VarBinding): Instance = {
-      bound += name -> fn; this
-    }
-    def bindVariable(name: String, value: String): Instance =
-      bindVariable(name, VarBinding.const(value))
-    def render(): String = Template.this.render(bound)
-  }
-
-  def instance(): Instance = new Instance
 }
 
 object Template {
@@ -69,48 +38,6 @@ object Template {
   /** `{{ name }}` or `{{ name:param=value }}`. */
   final case class Var(name: String, param: Option[Param]) extends Part
   final case class Param(name: String, value: String)
-
-  /** A variable binding: given the optional parameter, produce the rendered text. */
-  trait VarBinding { def render(param: Option[Param]): String }
-
-  object VarBinding {
-    def const(v: String): VarBinding = _ => v
-
-    /** Numeric binding honoring `padding=true`. Widths differ per variable
-      * in the reference: offsets pad to 20 (`OldFullKeyFormatters.java:
-      * 29-33`, `%020d`), partitions to 10 (`README.md:73`:
-      * `mytopic-0000000001-1.gz`). */
-    def padded(v: Long, width: Int = 20): VarBinding = {
-      case Some(Param("padding", "true")) =>
-        val s = v.toString
-        if (s.length >= width) s else ("0" * (width - s.length)) + s
-      case _ => v.toString
-    }
-
-    /** Partition binding: `padding=true` → `%010d`. */
-    def paddedPartition(v: Long): VarBinding = padded(v, 10)
-
-    /** Timestamp binding honoring `unit=yyyy|MM|dd|HH` (reference
-      * `OldFullKeyFormatters.java:35-50`). Wallclock or record time is the
-      * caller's choice — the reference supports wallclock only
-      * (`S3SinkConfig.java:492-503`). */
-    def timestamp(t: ZonedDateTime): VarBinding = {
-      case Some(Param("unit", unit)) =>
-        val fmt = unit match {
-          case "yyyy" => DateTimeFormatter.ofPattern("yyyy")
-          case "MM"   => DateTimeFormatter.ofPattern("MM")
-          case "dd"   => DateTimeFormatter.ofPattern("dd")
-          case "HH"   => DateTimeFormatter.ofPattern("HH")
-          case other =>
-            throw new IllegalArgumentException(
-              s"unsupported timestamp unit: $other (supported: yyyy, MM, dd, HH)")
-        }
-        t.format(fmt)
-      case _ =>
-        throw new IllegalArgumentException(
-          "parameter unit is required for the timestamp variable")
-    }
-  }
 
   // {{ var }} or {{ var:param=value }} — value may contain word chars / '|' / '-'
   private val VarRe =
@@ -163,13 +90,4 @@ object Template {
           }
       }
     }
-
-  /** Current wallclock bindings for `utc_date` / `local_date`
-    * (reference `S3SinkTask.java:186-193`). */
-  def dateBindings(now: Instant, localZone: ZoneId): Map[String, VarBinding] = Map(
-    "utc_date" -> VarBinding.const(
-      now.atZone(ZoneId.of("Z")).format(DateTimeFormatter.ISO_LOCAL_DATE)),
-    "local_date" -> VarBinding.const(
-      now.atZone(localZone).format(DateTimeFormatter.ISO_LOCAL_DATE))
-  )
 }

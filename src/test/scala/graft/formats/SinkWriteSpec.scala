@@ -9,7 +9,9 @@ import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
 import com.github.luben.zstd.ZstdInputStream
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
 import org.apache.spark.sql.types._
 import org.xerial.snappy.SnappyInputStream
 
@@ -552,9 +554,54 @@ class SinkWriteSpec extends SparkSuite {
 
   test("empty batch produces no objects (lazy acquisition, " +
     "S3OutputStreamTest.java:78-88)") {
-    val dir = tmpDir("empty")
-    S3SinkPipeline.writeBatch(f1Records(0), config(), dir, Now)
-    assert(ls(dir).isEmpty)
+    // each writer opens an object only when the object's first row
+    // arrives: both grouping modes, both writers, both parquet layouts
+    for (cfg <- Seq(config(),
+        config("file.name.template" -> "{{key}}", "format.output.type" -> "jsonl"),
+        config("format.output.type" -> "parquet"),
+        config("format.output.type" -> "parquet",
+          "graft.parquet.whole.object.compression" -> "true"))) {
+      val dir = tmpDir("empty")
+      S3SinkPipeline.writeBatch(f1Records(0), cfg, dir, Now)
+      assert(ls(dir).isEmpty, cfg)
+    }
+  }
+
+  test("a row that raises mid-object surfaces its own error and every " +
+    "opened stream is closed (JSONL and Parquet)") {
+    spark.sparkContext.hadoopConfiguration.set(CountingFs.conf._1, CountingFs.conf._2)
+    // the writers' sort evaluates every row before the first object opens,
+    // so a raising row reaches the per-task loop through a local iterator:
+    // Spark partition 0 (offsets 0-2) is written into the open object
+    // before partition 1 is computed and offset 3 raises
+    def rows(): Iterator[Row] =
+      spark.range(0, 6, 1, 2)
+        .select(lit("obj").as("_filename"),
+          when(col("id") === 3L, raise_error(lit("boom at offset 3")))
+            .otherwise(concat(lit("line-"), col("id"))),
+          col("id").as("offset"))
+        .toLocalIterator().asScala
+    def check(write: (Iterator[Row], String) => Unit, objectsOpened: Int): Unit = {
+      CountingFs.reset()
+      val e = intercept[Exception](write(rows(), CountingFs.uri(tmpDir("raise"))))
+      assert(e.getMessage.contains("boom at offset 3"))
+      assert(CountingFs.opened.get == objectsOpened)
+      assert(CountingFs.closed.get == objectsOpened)
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (jsonArray <- Seq(false, true))
+      check(GroupFileWriter.writePartition(_, _, conf, CompressionType.Gzip, jsonArray), 1)
+    val (_, writers, schema) = ParquetEnvelopeWriter.plan(config(), StringType)
+    check(ParquetEnvelopeWriter.writePartition(_, _, conf, CompressionCodecName.GZIP,
+      CompressionType.None, schema.toString, writers), 1)
+    // strict parity writes a task-local spool file and opens the object only
+    // on close: the failed object is never opened and its spool is deleted
+    def spools = new java.io.File(System.getProperty("java.io.tmpdir"))
+      .list().count(_.startsWith("graft-parquet-spool"))
+    val before = spools
+    check(ParquetEnvelopeWriter.writePartition(_, _, conf, CompressionCodecName.UNCOMPRESSED,
+      CompressionType.Gzip, schema.toString, writers), 0)
+    assert(spools == before)
   }
 
   test("rendered name parsing as an absolute URI cannot escape the sink " +
@@ -597,6 +644,32 @@ class SinkWriteSpec extends SparkSuite {
     assert(back.columns.toSeq == Seq("name"))
     assert(back.orderBy("name").collect().map(_.getString(0)).toSeq ==
       Seq("name0", "name2"))
+  }
+
+  test("JSONL unwrap skips null-valued (tombstone) records instead of " +
+    "failing on a null line") {
+    val dir = tmpDir("jsonl-unwrap-null")
+    val valueType = StructType(Seq(StructField("name", StringType, nullable = false)))
+    val schema = StructType(Seq(
+      StructField("topic", StringType, false),
+      StructField("partition", IntegerType, false),
+      StructField("offset", LongType, false),
+      StructField("timestamp", TimestampType, true),
+      StructField("key", StringType, true),
+      StructField("value", valueType, true),
+      StructField("headers", graft.connector.Records.schema("headers").dataType, true)))
+    val rows = Seq(
+      Row("t", 0, 0L, new java.sql.Timestamp(1000L), "k0", Row("name0"), null),
+      Row("t", 0, 1L, new java.sql.Timestamp(1001L), "k1", null, null), // tombstone
+      Row("t", 0, 2L, new java.sql.Timestamp(1002L), "k2", Row("name2"), null))
+    val cfg = config(
+      "format.output.type" -> "jsonl",
+      "format.output.envelope" -> "false",
+      "file.compression.type" -> "none",
+      "file.name.template" -> "{{topic}}-{{partition}}-{{start_offset}}")
+    S3SinkPipeline.writeBatch(spark.createDataFrame(rows.asJava, schema), cfg, dir, Now)
+    assert(readLines(s"$dir/t-0-0", CompressionType.None) ==
+      List("""{"name":"name0"}""", """{"name":"name2"}"""))
   }
 
   test("parquet envelope=false stays wrapped for MAP values (documented " +

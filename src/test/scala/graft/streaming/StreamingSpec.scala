@@ -249,7 +249,7 @@ class StreamingSpec extends SparkSuite {
         true
       } catch { case _: ClassNotFoundException => false }
     assume(hasKafka, "spark-sql-kafka jars absent from /opt/spark/jars and " +
-      "the ivy cache (checked this round): kafkaReader's subscribe/" +
+      "the ivy cache (checked this round): sourceReader's subscribe/" +
       "subscribePattern/includeHeaders/backoff wiring stays covered by " +
       "file/memory streams of the same canonical schema — O1 remains " +
       "'partial, environmental'. This test auto-activates if jars appear.")
@@ -257,7 +257,7 @@ class StreamingSpec extends SparkSuite {
     // load(); assert the canonical record projection
     val cfg = SinkConfig.parse(Map(
       "aws.s3.bucket.name" -> "b", "topics" -> "t")).toOption.get
-    val df = S3SinkPipeline.kafkaReader(spark, cfg, "localhost:9092")
+    val df = S3SinkPipeline.sourceReader(spark, cfg, "localhost:9092")
     assert(df.columns.toSeq == Seq("topic", "partition", "offset",
       "timestamp", "key", "value", "headers"))
     assert(df.isStreaming)

@@ -1,65 +1,77 @@
 package graft.template
 
-import java.time.{ZoneId, ZonedDateTime}
+import java.time.{Instant, LocalDate, ZoneId, ZonedDateTime}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
+import graft.connector.Grouping
 
 /** Template engine parity with the reference's DSL (README.md:50-95,
-  * OldFullKeyFormatters.java:29-50). */
-class TemplateSpec extends AnyFunSuite {
+  * OldFullKeyFormatters.java:29-50): parsing and validation here, rendering
+  * through the sink's own renderer, `Grouping.filenameColumn`. */
+class TemplateSpec extends SparkSuite {
 
-  private def render(tpl: String, bindings: Map[String, Template.VarBinding]) =
-    Template.of(tpl).render(bindings)
+  private val Now = ZonedDateTime.of(2020, 3, 1, 7, 0, 0, 0, ZoneId.of("Z"))
+
+  /** Render `tpl` for every row of `df`, each template variable bound to the
+    * column of the same name. */
+  private def renderAll(tpl: String, df: DataFrame,
+                        now: ZonedDateTime = Now): Seq[String] =
+    df.select(Grouping.filenameColumn(Template.of(tpl),
+        df.columns.map(c => c -> col(c)).toMap, now))
+      .collect().map(_.getString(0)).toSeq
+
+  /** The single (topic, partition, start_offset) record the README's
+    * examples name. */
+  private def mytopic(offset: Long = 1L): DataFrame = {
+    import spark.implicits._
+    Seq(("mytopic", 1, offset)).toDF("topic", "partition", "start_offset")
+  }
+
+  private def render(tpl: String, df: DataFrame = mytopic()): String =
+    renderAll(tpl, df).head
 
   test("plain variables render in place") {
-    val t = render("{{topic}}-{{partition}}-{{start_offset}}",
-      Map("topic" -> Template.VarBinding.const("mytopic"),
-        "partition" -> Template.VarBinding.padded(1),
-        "start_offset" -> Template.VarBinding.padded(42)))
-    assert(t == "mytopic-1-42")
+    assert(render("{{topic}}-{{partition}}-{{start_offset}}", mytopic(42L)) ==
+      "mytopic-1-42")
   }
 
   test("padding=true renders %020d like the reference") {
     // README.md:68: {{topic}}-{{partition}}-{{start_offset:padding=true}}.gz
     // -> mytopic-1-00000000000000000001.gz
-    val t = render("{{topic}}-{{partition}}-{{start_offset:padding=true}}.gz",
-      Map("topic" -> Template.VarBinding.const("mytopic"),
-        "partition" -> Template.VarBinding.paddedPartition(1),
-        "start_offset" -> Template.VarBinding.padded(1)))
-    assert(t == "mytopic-1-00000000000000000001.gz")
+    assert(render("{{topic}}-{{partition}}-{{start_offset:padding=true}}.gz") ==
+      "mytopic-1-00000000000000000001.gz")
   }
 
   test("partition padding is 10 digits, not 20 (README.md:73)") {
     // {{topic}}-{{partition:padding=true}}-{{start_offset}}.gz
     // -> mytopic-0000000001-1.gz
-    val t = render("{{topic}}-{{partition:padding=true}}-{{start_offset}}.gz",
-      Map("topic" -> Template.VarBinding.const("mytopic"),
-        "partition" -> Template.VarBinding.paddedPartition(1),
-        "start_offset" -> Template.VarBinding.padded(1)))
-    assert(t == "mytopic-0000000001-1.gz")
+    assert(render("{{topic}}-{{partition:padding=true}}-{{start_offset}}.gz") ==
+      "mytopic-0000000001-1.gz")
   }
 
   test("timestamp units format in the configured zone") {
-    val ts = ZonedDateTime.of(2020, 3, 1, 7, 0, 0, 0, ZoneId.of("Z"))
-    val t = render(
-      "{{topic}}-{{timestamp:unit=yyyy}}{{timestamp:unit=MM}}{{timestamp:unit=dd}}",
-      Map("topic" -> Template.VarBinding.const("mytopic"),
-        "timestamp" -> Template.VarBinding.timestamp(ts)))
-    assert(t == "mytopic-20200301")
+    val tpl = "{{topic}}-{{timestamp:unit=yyyy}}{{timestamp:unit=MM}}" +
+      "{{timestamp:unit=dd}}-{{timestamp:unit=HH}}"
+    assert(renderAll(tpl, mytopic()).head == "mytopic-20200301-07")
+    // the wallclock renders in its own zone: 07:00Z is 16:00 in Tokyo
+    assert(renderAll(tpl, mytopic(), Now.withZoneSameInstant(ZoneId.of("Asia/Tokyo")))
+      .head == "mytopic-20200301-16")
   }
 
   test("whitespace inside braces is tolerated") {
-    assert(render("{{ topic }}/x", Map("topic" -> Template.VarBinding.const("t")))
-      == "t/x")
+    assert(render("{{ topic }}/x") == "mytopic/x")
   }
 
   test("literal-only templates pass through (100 scalacheck samples)") {
     val gen = Gen.asciiPrintableStr.suchThat(!_.contains("{{"))
     (0 until 100).foreach { i =>
       gen(Gen.Parameters.default, Seed(i.toLong)).foreach { s =>
-        assert(render(s, Map.empty) == s)
+        assert(render(s) == s)
       }
     }
   }
@@ -82,33 +94,27 @@ class TemplateSpec extends AnyFunSuite {
   }
 
   test("prefix vars allow utc_date/local_date") {
-    val now = java.time.Instant.parse("2021-06-15T10:00:00Z")
-    val b = Template.dateBindings(now, ZoneId.of("Z"))
-    assert(render("{{utc_date}}", b) == "2021-06-15")
+    val instant = Instant.parse("2021-06-15T23:30:00Z")
+    val now = instant.atZone(ZoneId.of("Asia/Tokyo"))
+    assert(renderAll("{{utc_date}}", mytopic(), now).head == "2021-06-15")
+    assert(renderAll("{{local_date}}", mytopic(), now).head ==
+      LocalDate.ofInstant(instant, ZoneId.systemDefault()).toString)
   }
 
   test("unbound variable raises") {
-    assertThrows[IllegalArgumentException](render("{{topic}}", Map.empty))
+    assertThrows[IllegalArgumentException](
+      Grouping.filenameColumn(Template.of("{{topic}}"), Map.empty, Now))
   }
 
   test("padding law: 20 chars, numeric round-trip (200 scalacheck longs)") {
+    import spark.implicits._
     val gen = Gen.chooseNum(0L, Long.MaxValue / 2)
-    (0 until 200).foreach { i =>
-      gen(Gen.Parameters.default, Seed(i.toLong)).foreach { n =>
-        val r = render("{{start_offset:padding=true}}",
-          Map("start_offset" -> Template.VarBinding.padded(n)))
-        assert(r.length == math.max(20, n.toString.length))
-        assert(r.toLong == n)
-      }
+    val ns = (0 until 200).flatMap(i => gen(Gen.Parameters.default, Seed(i.toLong)))
+    val rendered = renderAll("{{start_offset:padding=true}}", ns.toDF("start_offset"))
+    assert(rendered.size == ns.size)
+    ns.zip(rendered).foreach { case (n, r) =>
+      assert(r.length == math.max(20, n.toString.length))
+      assert(r.toLong == n)
     }
-  }
-
-  test("session tuning sizes shuffle partitions to the data") {
-    val t = graft.GraftSession.tuneFor(
-      totalDataBytes = 100L * 1024 * 1024 * 1024 * 1024, // 100 TB
-      executorCores = 1000 * 8)
-    assert(t("spark.sql.shuffle.partitions").toLong == 819200) // 100TB/128MB
-    val small = graft.GraftSession.tuneFor(1024L * 1024, 32)
-    assert(small("spark.sql.shuffle.partitions").toLong == 64) // core floor
   }
 }
