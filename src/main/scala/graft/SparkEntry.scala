@@ -1,22 +1,20 @@
 package graft
 
-import java.time.ZonedDateTime
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.connector.{OutputFields, Records}
+import graft.registry._
+import graft.registry.QueryDef.{named, sinkConfig}
 
-import graft.config.{OutputField, SinkConfig, OutputFieldEncodingType => Enc, OutputFieldType => F}
-import graft.connector.{Grouping, OutputFields, Records}
-
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The library's entry surface: `entry` plus the query registry.
   *
-  * Each `queries` entry re-expresses one operator from SURVEY.md §2 (the
+  * Each registry row re-expresses one operator from SURVEY.md §2 (the
   * reference S3-sink-connector surface) or one training-data-pipeline
-  * operator as a batch DataFrame query over the driver's parquet tables;
-  * `oracleSql` holds the equivalent DuckDB SQL. Column names and row order
-  * are deterministic and identical on both sides.
+  * operator as a batch DataFrame query over the parquet test tables,
+  * paired with the equivalent DuckDB SQL. Column names and row order are
+  * deterministic and identical on both sides. The rows live one file per
+  * family in [[graft.registry]].
   */
 object SparkEntry {
 
@@ -34,6710 +32,15 @@ object SparkEntry {
         OutputFields.csvLine(config.outputFields).as("line"))
   }
 
-  // ---------------------------------------------------------------- helpers
+  /** Every registry row, family by family. */
+  val rows: Seq[QueryDef] =
+    ConnectorRows.rows ++ TextRows.rows ++ SamplingRows.rows ++ DedupRows.rows ++
+      SimilarityRows.rows ++ MultimodalRows.rows ++ RelationalRows.rows ++
+      StreamingRows.rows ++ PipelineRows.rows
 
-  private def rec(s: SparkSession, dir: String): DataFrame =
-    Records.fromEvents(s, dir)
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  /** A sink config naming objects `topic-partition-<%020d start_offset>.gz`
-    * plus `props`. */
-  private def sinkConfig(props: (String, String)*): SinkConfig =
-    SinkConfig.parse(Map("aws.s3.bucket.name" -> "graft",
-      "file.name.template" -> "{{topic}}-{{partition}}-{{start_offset:padding=true}}") ++ props)
-      .fold(e => throw new IllegalArgumentException(e.mkString("; ")), identity)
-
-  /** Records with the sink's `_filename` column. The template has no time
-    * variable, so the wallclock passed is immaterial. */
-  private def named(records: DataFrame, config: SinkConfig = sinkConfig()): DataFrame =
-    Grouping.annotate(records, config, ZonedDateTime.now(config.timestampZone))
-
-  /** Shared DuckDB CTE prefix adapting `events` to the record model. */
-  private val R = "WITH " + Records.duckRecordsCte + "\n"
-
-  // ------------------------------------------------------- connector family
-
-  /** One per implemented operator from SURVEY.md §2 plus the training-data
-    * pipeline operators (dedup / similarity / text / multimodal) and the
-    * beyond-parity relational set. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    connectorQueries ++ textQueries ++ samplingQueries ++ dedupQueries ++
-      simQueries ++ mmQueries ++ relationalQueries ++ streamingQueries ++
-      pipelineQueries ++ pipelineReportQuery
+    rows.map(r => r.name -> r.build).toMap
 
   def oracleSql: Map[String, String] =
-    connectorOracles ++ textOracles ++ samplingOracles ++ dedupOracles ++
-      simOracles ++ mmOracles ++ relationalOracles ++ streamingOracles ++
-      pipelineOracles
-
-  private def connectorQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // O2 — topic-partition record grouping: group extents per flush.
-    "sink_group_topic_partition" -> ((s, dir) => {
-      rec(s, dir)
-        .groupBy(col("topic"), col("partition").as("part"))
-        .agg(
-          min("offset").as("start_offset"),
-          max("offset").as("end_offset"),
-          count(lit(1)).as("cnt"))
-        .orderBy(col("topic"), col("part"))
-    }),
-
-    // O16 — distributed filename rendering with zero-padded start_offset.
-    "sink_filename_template" -> ((s, dir) => {
-      named(rec(s, dir))
-        .groupBy(col("_filename").as("fname"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("fname"))
-    }),
-
-    // O3 — key compaction: latest record per key (deterministic tie-break).
-    "sink_key_compaction" -> ((s, dir) => {
-      Grouping.compactLatestByKey(rec(s, dir))
-        .select(
-          col("_k").as("rkey"),
-          col("offset").as("off"),
-          col("value").cast(StringType).as("rvalue"))
-        .orderBy(col("rkey"))
-    }),
-
-    // O4 — time-bucket grouping (yyyy/MM/dd/HH bucket columns).
-    "sink_time_bucket" -> ((s, dir) => {
-      rec(s, dir)
-        .groupBy(
-          col("topic"),
-          date_format(col("timestamp"), "yyyy").as("y"),
-          date_format(col("timestamp"), "MM").as("m"),
-          date_format(col("timestamp"), "dd").as("d"),
-          date_format(col("timestamp"), "HH").as("h"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("topic"), col("y"), col("m"), col("d"), col("h"))
-    }),
-
-    // O5 — file.max.records=100 chunking: per-chunk extents.
-    "sink_max_records_chunk" -> ((s, dir) => {
-      rec(s, dir)
-        .withColumn("chunk", Grouping.chunkIndex(100))
-        .groupBy(col("topic"), col("partition").as("part"), col("chunk"))
-        .agg(min("offset").as("start_offset"), max("offset").as("end_offset"),
-          count(lit(1)).as("cnt"))
-        .orderBy(col("topic"), col("part"), col("chunk"))
-    }),
-
-    // O6 — output-field projection in configured order (value,key,ts,offset).
-    "sink_projection_fields" -> ((s, dir) => {
-      rec(s, dir)
-        .select(
-          col("value").cast(StringType).as("rvalue"),
-          col("key").cast(StringType).as("rkey"),
-          unix_millis(col("timestamp")).as("ts_ms"),
-          col("offset").as("off"))
-        .orderBy(col("off"))
-    }),
-
-    // O7 — base64 field encoding.
-    "sink_base64_value" -> ((s, dir) => {
-      rec(s, dir)
-        .select(col("offset").as("off"),
-          OutputFields.base64Encode(col("value")).as("v_b64"))
-        .orderBy(col("off"))
-    }),
-
-    // O8 — header flattening b64(name):b64(value);… .
-    "sink_header_flatten" -> ((s, dir) => {
-      rec(s, dir)
-        .select(col("offset").as("off"),
-          OutputFields.flattenHeaders(col("headers")).as("headers_flat"))
-        .orderBy(col("off"))
-    }),
-
-    // O9 — null handling: nulls become empty CSV cells.
-    "sink_null_handling" -> ((s, dir) => {
-      rec(s, dir)
-        .select(col("offset").as("off"),
-          OutputFields.nullToEmpty(
-            when(col("topic") === "error", lit(null).cast(StringType))
-              .otherwise(col("value").cast(StringType))).as("v_or_empty"))
-        .orderBy(col("off"))
-    }),
-
-    // O10 — CSV line encode (raw comma join, base64 key/value).
-    "sink_csv_line" -> ((s, dir) => {
-      val fields = Seq(
-        OutputField(F.Value, Enc.Base64), OutputField(F.Key, Enc.Base64),
-        OutputField(F.Timestamp, Enc.None), OutputField(F.Offset, Enc.None),
-        OutputField(F.Headers, Enc.Base64))
-      rec(s, dir)
-        .select(col("offset").as("off"), OutputFields.csvLine(fields).as("line"))
-        .orderBy(col("off"))
-    }),
-
-    // O11 — JSONL line encode with all four scalar fields; timestamp is
-    // ISO-8601 like the reference (README.md:272).
-    "sink_jsonl_line" -> ((s, dir) => {
-      val r = rec(s, dir)
-      val fields = Seq(F.Value, F.Key, F.Offset, F.Timestamp).map(OutputField(_, Enc.None))
-      r.select(col("offset").as("off"), OutputFields.jsonLine(fields, r.schema).as("line"))
-        .orderBy(col("off"))
-    }),
-
-    // O14 — envelope unwrap: decode JSON value struct, project its fields.
-    "sink_envelope_unwrap" -> ((s, dir) => {
-      rec(s, dir)
-        .select(col("offset").as("off"),
-          from_json(col("value").cast(StringType), StructType(Seq(
-            StructField("k", IntegerType)))).getField("k").as("k"))
-        .orderBy(col("off"))
-    }),
-
-    // Offset continuity audit: gaps in the per-partition offset sequence
-    // (a data-quality check a sink pipeline runs before committing).
-    "sink_offset_gap_check" -> ((s, dir) => {
-      val w = Window.partitionBy(col("topic"), col("partition")).orderBy(col("offset"))
-      rec(s, dir)
-        .withColumn("_prev", lag(col("offset"), 1).over(w))
-        .where(col("_prev").isNotNull && col("offset") =!= col("_prev") + 1)
-        .groupBy(col("topic"), col("partition").as("part"))
-        .agg(count(lit(1)).as("n_gaps"), max(col("offset") - col("_prev") - 1)
-          .as("max_gap"))
-        .orderBy("topic", "part")
-    }),
-
-    // O1 — multi-topic subscription = union of topic streams.
-    "sink_multi_topic_union" -> ((s, dir) => {
-      val r = rec(s, dir)
-      r.where(col("topic") === "error")
-        .unionByName(r.where(col("topic") === "signup"))
-        .groupBy(col("topic")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("topic"))
-    }),
-
-    // Avro-valued topics (the reference's AvroConverter scenario): every
-    // record value avro-encodes into the {payload: string} envelope and
-    // decodes back to the identical string — a THEOREM of the format, so
-    // the oracle pins n_ok = n_records and all_ok symbolically (the
-    // dedup_simhash64 pattern; DuckDB has no Avro codec to mirror). A
-    // decoder regression (wrong varint handling, stale reused decoder
-    // state, charset drift) breaks a round-trip and flips the row.
-    "sink_avro_roundtrip" -> ((s, dir) => {
-      val src = rec(s, dir)
-        .select(col("offset").as("off"),
-          coalesce(col("value").cast(StringType), lit("")).as("v"))
-      val decoded = graft.formats.AvroEnvelope.decodePayload(
-        graft.formats.AvroEnvelope.encodePayload(src, "off", "v"),
-        "off", "avro")
-      src.join(decoded, "off")
-        .agg(count(lit(1)).as("n_records"),
-          sum(when(col("payload") === col("v"), 1L).otherwise(0L))
-            .as("n_ok"))
-        .select(col("n_records"), col("n_ok"),
-          (col("n_records") === col("n_ok")).as("all_ok"))
-    }),
-
-    // Schema-Registry wire framing (AvroConverter + registry config,
-    // reference AvroIntegrationTest.java:128-193): every value frames
-    // under one of TWO registry ids (offset parity — so the id dispatch in
-    // decodeFramed is actually exercised, not a constant) and decodes back
-    // through the injected id→schema snapshot to the identical string.
-    // Round-trip identity + both-ids-seen are format theorems, pinned
-    // symbolically like sink_avro_roundtrip.
-    "sink_avro_registry" -> ((s, dir) => {
-      import graft.formats.AvroEnvelope
-      val src = rec(s, dir)
-        .select(col("offset").as("off"),
-          coalesce(col("value").cast(StringType), lit("")).as("v"))
-      val encoded = AvroEnvelope.encodePayload(src, "off", "v")
-      val framed = AvroEnvelope.frame(encoded.where(col("off") % 2 === 0), "avro", 101)
-        .unionByName(AvroEnvelope.frame(encoded.where(col("off") % 2 === 1), "avro", 202))
-      val decoded = AvroEnvelope.decodeFramed(framed, "off", "avro",
-        Map(101 -> AvroEnvelope.EnvelopeSchemaJson,
-            202 -> AvroEnvelope.EnvelopeSchemaJson))
-      src.join(decoded, "off")
-        .agg(count(lit(1)).as("n_records"),
-          sum(when(col("payload") === col("v"), 1L).otherwise(0L)).as("n_ok"),
-          countDistinct(col("schema_id")).as("n_ids"))
-        .select(col("n_records"), col("n_ok"), col("n_ids"),
-          (col("n_records") === col("n_ok")).as("all_ok"))
-    })
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  private def connectorOracles: Map[String, String] = Map(
-    // round-trip identity is a format theorem — pinned symbolically
-    "sink_avro_roundtrip" -> (R +
-      """SELECT CAST(count(*) AS BIGINT) AS n_records,
-        |       CAST(count(*) AS BIGINT) AS n_ok,
-        |       TRUE AS all_ok
-        |FROM records""".stripMargin),
-
-    // registry-framed round-trip: identity + exactly the two injected
-    // schema ids observed (offsets span both parities at every SF)
-    "sink_avro_registry" -> (R +
-      """SELECT CAST(count(*) AS BIGINT) AS n_records,
-        |       CAST(count(*) AS BIGINT) AS n_ok,
-        |       CAST(2 AS BIGINT) AS n_ids,
-        |       TRUE AS all_ok
-        |FROM records""".stripMargin),
-
-    "sink_group_topic_partition" -> (R +
-      """SELECT topic, part, min(off) AS start_offset, max(off) AS end_offset,
-        |       count(*) AS cnt
-        |FROM records GROUP BY topic, part ORDER BY topic, part""".stripMargin),
-
-    "sink_filename_template" -> (R +
-      """SELECT topic || '-' || part || '-' ||
-        |       lpad(CAST(min(off) AS VARCHAR), 20, '0') || '.gz' AS fname,
-        |       count(*) AS cnt
-        |FROM records GROUP BY topic, part ORDER BY fname""".stripMargin),
-
-    "sink_key_compaction" -> (R +
-      """SELECT rkey, off, rvalue FROM (
-        |  SELECT rkey, off, rvalue,
-        |         row_number() OVER (PARTITION BY rkey ORDER BY off DESC, part DESC) AS rn
-        |  FROM records) t
-        |WHERE rn = 1 ORDER BY rkey""".stripMargin),
-
-    "sink_time_bucket" -> (R +
-      """SELECT topic, strftime(rts, '%Y') AS y, strftime(rts, '%m') AS m,
-        |       strftime(rts, '%d') AS d, strftime(rts, '%H') AS h,
-        |       count(*) AS cnt
-        |FROM records GROUP BY topic, y, m, d, h ORDER BY topic, y, m, d, h""".stripMargin),
-
-    "sink_max_records_chunk" -> (R +
-      """SELECT topic, part, chunk, min(off) AS start_offset,
-        |       max(off) AS end_offset, count(*) AS cnt
-        |FROM (
-        |  SELECT topic, part, off,
-        |         CAST((row_number() OVER (PARTITION BY topic, part ORDER BY off) - 1) // 100 AS BIGINT) AS chunk
-        |  FROM records) t
-        |GROUP BY topic, part, chunk ORDER BY topic, part, chunk""".stripMargin),
-
-    "sink_projection_fields" -> (R +
-      """SELECT rvalue, rkey, epoch_ms(rts) AS ts_ms, off
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_base64_value" -> (R +
-      """SELECT off, to_base64(encode(rvalue)) AS v_b64
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_header_flatten" -> (R +
-      """SELECT off,
-        |       to_base64(encode('et')) || ':' || to_base64(encode(topic)) || ';' ||
-        |       to_base64(encode('uid')) || ':' || to_base64(encode(rkey)) AS headers_flat
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_null_handling" -> (R +
-      """SELECT off,
-        |       coalesce(CASE WHEN topic = 'error' THEN NULL ELSE rvalue END, '') AS v_or_empty
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_csv_line" -> (R +
-      """SELECT off,
-        |       concat_ws(',', to_base64(encode(rvalue)), to_base64(encode(rkey)),
-        |                 CAST(epoch_ms(rts) AS VARCHAR), CAST(off AS VARCHAR),
-        |                 to_base64(encode('et')) || ':' || to_base64(encode(topic)) || ';' ||
-        |                 to_base64(encode('uid')) || ':' || to_base64(encode(rkey))) AS line
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_jsonl_line" -> (R +
-      """SELECT off,
-        |       CAST(to_json(struct_pack(
-        |         "value" := rvalue, "key" := rkey, "offset" := off,
-        |         "timestamp" := strftime(rts, '%Y-%m-%dT%H:%M:%SZ'))) AS VARCHAR) AS line
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_envelope_unwrap" -> (R +
-      """SELECT off, CAST(json_extract_string(rvalue, '$.k') AS INT) AS k
-        |FROM records ORDER BY off""".stripMargin),
-
-    "sink_offset_gap_check" -> (R +
-      """SELECT topic, part, count(*) AS n_gaps, max(off - prev - 1) AS max_gap
-        |FROM (
-        |  SELECT topic, part, off,
-        |         lag(off) OVER (PARTITION BY topic, part ORDER BY off) AS prev
-        |  FROM records) t
-        |WHERE prev IS NOT NULL AND off <> prev + 1
-        |GROUP BY topic, part ORDER BY topic, part""".stripMargin),
-
-    "sink_multi_topic_union" -> (R +
-      """SELECT topic, count(*) AS cnt FROM (
-        |  SELECT * FROM records WHERE topic = 'error'
-        |  UNION ALL
-        |  SELECT * FROM records WHERE topic = 'signup') t
-        |GROUP BY topic ORDER BY topic""".stripMargin)
-  )
-
-  // ------------------------------------------------------------ text family
-
-  import graft.ops.{Curation, Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
-
-  private def textQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_token_count" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.bpeTokenCount(col("text")).as("n_bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-    // REAL merge-table BPE (committed 40-merge fixture, graft.ops.Bpe):
-    // per-doc token count plus an md5 of the full tokenization — the
-    // oracle re-derives every word's merge fixpoint with a recursive CTE
-    // over the SAME merge table (rendered from the fixture, zero drift)
-    // and rebuilds the token string symbol-for-symbol.
-    "text_token_count_bpe" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.bpeRealTokenCount(col("text")).as("n_bpe_real"),
-          md5(TextAnalysis.bpeRealEncode(col("text"))).as("bpe_md5"))
-        .orderBy("doc_id")),
-    // Corpus-scale BPE TRAINING (graft.ops.Bpe.train): the iterative
-    // pair-count/merge loop as Spark jobs — one corpus pass builds the
-    // (word, count) vocab, then each round is one vocab groupBy + a
-    // 1-row argmax collect + a map-only merge application. At sf0.01
-    // the 40 trained rows ARE the committed Bpe.Merges fixture
-    // byte-for-byte (its provenance, reproduced in-engine); the oracle
-    // replays every round symbolically.
-    "bpe_train" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Bpe.train(docs(s, dir), 40).zipWithIndex
-        .map { case ((a, b), r) => (r.toLong, a, b) }
-        .toDF("rank", "ma", "mb").orderBy("rank")
-    }),
-    // ... and the trained table CONSUMED: text_token_count_bpe's shape
-    // with a 12-merge vocabulary trained from the corpus at query time
-    // (the coder-parametric expression overloads) — trainer and
-    // tokenizer composed end-to-end, oracle-replayed end-to-end.
-    "text_token_count_bpe_trained" -> ((s, dir) => {
-      val coder = new graft.ops.Bpe.Coder(
-        graft.ops.Bpe.train(docs(s, dir), 12))
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.bpeRealTokenCountWith(col("text"), coder)
-            .as("n_bpe_real"),
-          md5(TextAnalysis.bpeRealEncodeWith(col("text"), coder))
-            .as("bpe_md5"))
-        .orderBy("doc_id")
-    }),
-    // ... and the trained table MANAGED (the pqStore precedent): the
-    // 40-merge vocabulary is trained once per corpus fingerprint and
-    // persisted; a warm call reads 40 parquet rows and runs zero
-    // training jobs before the map-only encode. At sf0.01 the stored
-    // table is bpe_train's — i.e. the committed fixture — so this row
-    // also re-proves the store round-trips the trainer bit-for-bit.
-    "text_token_count_bpe_managed" -> ((s, dir) => {
-      val coder = new graft.ops.Bpe.Coder(
-        graft.ops.Bpe.mergesStore(s, docs(s, dir),
-          s"$dir/documents.parquet", 40))
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.bpeRealTokenCountWith(col("text"), coder)
-            .as("n_bpe_real"),
-          md5(TextAnalysis.bpeRealEncodeWith(col("text"), coder))
-            .as("bpe_md5"))
-        .orderBy("doc_id")
-    }),
-    // BATCHED BYTE-LEVEL BPE training (graft.ops.Bpe.trainBytesBatched):
-    // GPT-2-style pre-tokenization (space carried as Ġ), up to M=4
-    // pairwise-symbol-disjoint merges per round, 3 rounds — the round
-    // topology a 32k-merge production vocabulary needs (hundreds of
-    // driver rounds, not 32k sequential jobs). The oracle replays every
-    // round: ranking window, greedy-disjoint keep set, batch
-    // application.
-    "bpe_train_bytes" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Bpe.trainBytesBatched(docs(s, dir), 3, 4).zipWithIndex
-        .map { case ((a, b), r) => (r.toLong, a, b) }
-        .toDF("rank", "ma", "mb").orderBy("rank")
-    }),
-    // ... and the byte-level table CONSUMED: the merge-table kernel over
-    // the SAME pre-token symbols (Bpe.preTokens), trainer and tokenizer
-    // composed end-to-end, oracle-replayed end-to-end.
-    "text_token_count_bpe_bytes" -> ((s, dir) => {
-      val coder = new graft.ops.Bpe.Coder(
-        graft.ops.Bpe.trainBytesBatched(docs(s, dir), 3, 4))
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.bpeByteTokenCountWith(col("text"), coder)
-            .as("n_bpe_bytes"),
-          md5(TextAnalysis.bpeByteEncodeWith(col("text"), coder))
-            .as("bpe_md5"))
-        .orderBy("doc_id")
-    }),
-    // Unigram-LM (SentencePiece-style) tokenizer trainer — BPE's
-    // complement: over-complete substring seed, 2 integer-exact EM
-    // rounds (bit-quantized log scores, fixed Viterbi tie-break), prune
-    // to chars + top-256. The oracle replays seed -> both EM rounds ->
-    // prune digit-for-digit, Viterbi included (recursive CTEs).
-    "tok_train_unigram" -> ((s, dir) =>
-      graft.ops.Unigram.vocabDf(s, graft.ops.Unigram.train(docs(s, dir)))
-        .orderBy("piece")),
-    // ... the trained vocab MANAGED (the bpemerges precedent): trained
-    // once per corpus fingerprint, persisted; a warm call reads <=
-    // charset+256 parquet rows and runs zero training jobs.
-    "tok_train_unigram_managed" -> ((s, dir) =>
-      graft.ops.Unigram.vocabDf(s,
-        graft.ops.Unigram.vocabStore(s, docs(s, dir),
-          s"$dir/documents.parquet"))
-        .orderBy("piece")),
-    // ... and the vocab CONSUMED: per-doc unigram token counts, map-only
-    // (broadcast vocab, in-scan Viterbi) — trainer and tokenizer
-    // composed end-to-end, oracle-replayed end-to-end.
-    "text_token_count_unigram" -> ((s, dir) =>
-      graft.ops.Unigram.tokenCounts(docs(s, dir),
-        graft.ops.Unigram.train(docs(s, dir)))),
-    "text_quality_score" -> ((s, dir) => TextAnalysis.qualityQuery(docs(s, dir))),
-    // TRAINED quality classifier (graft.ops.QualityClassifier): hashed
-    // word-unigram ratio features, Rocchio centroid init + damped batch
-    // perceptron — integer arithmetic end-to-end, so the oracle replays
-    // TRAINING itself (centroid means, every epoch's margins, votes and
-    // damped updates) and then the map-side scoring expression. A drift
-    // anywhere — feature hashing, ratio arithmetic, label rule, update
-    // rule, epoch count, damping — breaks the hash. 93.4% train accuracy
-    // vs the 82.6% majority baseline at sf0.01.
-    "text_quality_trained" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // NO training-input spread: measured 2x WORSE on this trainer and
-      // ~10% worse on text_domain_trained (interleaved A/B) — the
-      // per-epoch work is 65-row aggregations over the cached feature
-      // frame; the exchange costs more than the single-task feature pass
-      // it parallelizes. ScanSpread stays where it measured a win (the
-      // blocked posting families).
-      graft.ops.QualityClassifier.scoreQuery(d,
-        graft.ops.QualityClassifier.train(d))
-    }),
-    // ... and the model MANAGED (the bpemerges precedent): weights
-    // trained once per corpus fingerprint, persisted as 64 parquet rows;
-    // a warm call runs zero training jobs before the map-only score.
-    // Deterministic integer training + exact round-trip => identical
-    // scores, same oracle replay.
-    "text_quality_trained_managed" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.QualityClassifier.scoreQuery(d,
-        graft.ops.QualityClassifier.weightsStore(s, d,
-          s"$dir/documents.parquet"))
-    }),
-    // TRAINED domain classifier (graft.ops.DomainClassifier): Rocchio
-    // centroids over the same hashed integer features, nearest-centroid
-    // (2*x*c - |c|^2) classification map-side with the centroids as
-    // literals; labels bootstrap from a keyword annotator (the corpus's
-    // lang/source columns are text-independent — measured — so they are
-    // unlearnable; the keyword label is diverse and real). The oracle
-    // replays labeling, centroids, and the argmax relationally.
-    "text_domain_trained" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // NO spread here either: interleaved A/B showed the training-input
-      // spread LOSES ~10% (1.31 -> 1.45 s, 3/3 reps) — the centroid pass
-      // is one 65-row aggregation; the exchange costs more than the
-      // single-task scan it parallelizes. ScanSpread stays where it
-      // measured a win (the blocked posting families).
-      graft.ops.DomainClassifier.scoreQuery(d,
-        graft.ops.DomainClassifier.trainCentroids(d))
-    }),
-    // ... centroids MANAGED (the qualweights precedent): a warm call
-    // reads 4x65 parquet rows and trains nothing before the map-only
-    // score; deterministic integer training => same oracle.
-    "text_domain_trained_managed" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.DomainClassifier.scoreQuery(d,
-        graft.ops.DomainClassifier.centroidStore(s, d,
-          s"$dir/documents.parquet"))
-    }),
-    // C4/Gopher rule-bundle filter: one boolean per cleaning rule + the
-    // composite keep, verified per-document by the oracle.
-    "text_c4_filters" -> ((s, dir) => TextAnalysis.c4FilterQuery(docs(s, dir))),
-    "text_lang_id" -> ((s, dir) => TextAnalysis.langIdQuery(docs(s, dir))),
-    // Vocabulary statistics: top document-frequency tokens (corpus-level
-    // inverted-index aggregation; at scale this is the df-cut input that
-    // guards the shingle postings join — see SCALING.md).
-    "text_vocab_top" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-        .select(col("doc_id"), explode(array_distinct(col("_t"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("tok"))
-        .limit(20)
-    }),
-
-    "text_fingerprint" -> ((s, dir) => {
-      val toks = TextAnalysis.tokens(col("text"))
-      docs(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.md5Fingerprint(col("text")).as("fp_md5"),
-          TextAnalysis.rollingFingerprint(toks).as("fp_roll"))
-        .orderBy("doc_id")
-    }),
-
-    // Benchmark decontamination: corpus docs sharing a 3-token shingle with
-    // the eval split (doc_id % 17 == 0 stands in for a benchmark table).
-    // The eval gram set is broadcast — map-side probe against the corpus.
-    "text_decontaminate" -> ((s, dir) => Curation.decontaminate(docs(s, dir))),
-
-    // Cross-snapshot contamination screen: the reference side is
-    // corpus-sized (odd docs screened against the EVEN half's grams), so
-    // broadcast is illegal — a one-row Bloom filter prunes the probe
-    // map-side and an exact merge-join verifies survivors. Result is
-    // exactly the plain semi-join's (the Bloom is pure topology), so the
-    // oracle asserts cell-exact with no sketch tolerance.
-    "text_decontaminate_bloom" -> ((s, dir) =>
-      Curation.decontaminateCross(docs(s, dir))),
-
-    // Gopher-style repetition filters: top-2-gram coverage and duplicate-
-    // 3-gram fraction per document.
-    "text_repetition" -> ((s, dir) => Curation.repetitionStats(docs(s, dir))),
-
-    // CCNet/RefinedWeb line-level boilerplate removal: lines repeated in
-    // >= 3 documents (nav chrome, footers — injected deterministically by
-    // the line lake) are removed line-by-line; the cleaned text itself is
-    // the verified output, reassembled in original line order.
-    "dedup_lines" -> ((s, dir) =>
-      Curation.lineDedup(Curation.lineified(docs(s, dir)), 3)),
-
-    // Incremental: the odd-doc batch is cleaned against the EVEN half's
-    // persisted boilerplate store (built once per corpus fingerprint) —
-    // the old corpus is never re-counted on a repeat batch.
-    "dedup_lines_incremental" -> ((s, dir) => {
-      val lined = Curation.lineified(docs(s, dir))
-      val boiler = Curation.lineBoilerplateStore(s,
-        lined.where(col("doc_id") % 2 === 0),
-        s"$dir/documents.parquet", "linedf_even", 3)
-      Curation.lineDedupIncremental(
-        lined.where(col("doc_id") % 2 === 1), boiler)
-    }),
-
-    // TF-IDF keyword extraction: top-3 terms per document (linear idf so
-    // the score is bit-identical across engines; see Scaladoc).
-    "text_tfidf_top" -> ((s, dir) =>
-      TextAnalysis.tfidfTopQuery(docs(s, dir), k = 3)),
-
-    // Robust per-language length-outlier detection (median + MAD).
-    "text_length_outliers" -> ((s, dir) =>
-      Curation.lengthOutliers(docs(s, dir))),
-
-    // The production dial at its NON-default setting: approx_percentile
-    // with accuracy=1000 (10x looser than the 10000 default). The approx
-    // median/MAD values are sketch outputs (not cross-engine
-    // reproducible), so like the sketch family the row gates the
-    // guarantee in-query: for each lang, the returned median's rank
-    // window must straddle 0.5 (f_lt = fraction strictly below, <= 0.51;
-    // f_le = fraction at-or-below, >= 0.49 — the two-sided form absorbs
-    // tie mass and grants 10x the setting's 0.001 rank error for
-    // discreteness), and the same for the MAD over
-    // deviations-from-approx-median. accuracy=1000, not 100: measured on
-    // sf0.01 (n=64-218 per lang), accuracy=100 returns values up to ~9%
-    // of ranks off (es: 261 vs exact 311) — far beyond its documented
-    // 1/accuracy bound — while 1000 lands on the discrete median element;
-    // the dial's floor is where the GK guarantee empirically holds. The
-    // oracle pins n_docs exactly and the flags symbolically TRUE: a
-    // broken sketch/merge (e.g. accuracy-100-class drift, f_le ~ 0.42)
-    // flips a flag and hash-mismatches the row.
-    "text_length_outliers_approx" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val ap = Curation.lengthOutliers(d, 3.0, Some(1000))
-      val base = d.select(col("lang"), col("n_chars").cast("double").as("v"))
-      base
-        .join(broadcast(ap.select(col("lang"), col("med_chars"),
-          col("mad_chars"))), Seq("lang"))
-        .withColumn("adev", abs(col("v") - col("med_chars")))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          (sum(when(col("v") < col("med_chars"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("m_lt"),
-          (sum(when(col("v") <= col("med_chars"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("m_le"),
-          (sum(when(col("adev") < col("mad_chars"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("a_lt"),
-          (sum(when(col("adev") <= col("mad_chars"), 1L).otherwise(0L))
-            .cast("double") / count(lit(1))).as("a_le"))
-        .select(col("lang"), col("n_docs"),
-          (col("m_lt") <= 0.51 && col("m_le") >= 0.49).as("med_ok"),
-          (col("a_lt") <= 0.51 && col("a_le") >= 0.49).as("mad_ok"))
-        .orderBy("lang")
-    }),
-
-    // Unigram-LM commonness score (log-free CCNet-perplexity cousin —
-    // integer sums only, so bit-reproducible across partition orders).
-    "text_commonness" -> ((s, dir) =>
-      TextAnalysis.commonnessQuery(docs(s, dir))),
-
-    // Bigram Stupid-Backoff LM scoring (graft.ops.LanguageModel): the
-    // sequence-aware upgrade of text_commonness — per-token backoff
-    // probability in per-million fixed point, integer end-to-end, so
-    // the oracle replays training (unigram/bigram counts) AND scoring.
-    "text_lm_score" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.LanguageModel.scoreQuery(d,
-        graft.ops.LanguageModel.countsFrame(d))
-    }),
-    // ... the model MANAGED (the lmcounts store family): counts trained
-    // once per corpus fingerprint; a warm call runs zero training jobs
-    // before the scoring joins. Deterministic integer training + exact
-    // parquet round-trip => identical scores, same oracle.
-    "text_lm_score_managed" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.LanguageModel.scoreQuery(d,
-        graft.ops.LanguageModel.countsStore(s, d,
-          s"$dir/documents.parquet"))
-    }),
-    // ... and scored HELD-OUT: the eval split (doc_id % 17 == 0, the
-    // decontaminate split) against a model trained on the rest — the
-    // configuration where the OOV (score 0) and unseen-bigram backoff
-    // paths genuinely fire, which train==score can never exercise.
-    "text_lm_holdout" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.ops.LanguageModel.scoreQuery(
-        d.where(col("doc_id") % 17 === 0),
-        graft.ops.LanguageModel.countsFrame(
-          d.where(col("doc_id") % 17 =!= 0)))
-    })
-  )
-
-  /** Exact-substring run oracle (`Dedup.substringRuns` digit-for-digit):
-    * k-token window hashes (the 48-bit md5-prefix [[graft.ops.Dedup
-    * .shingleHash]] mirror), optional hot-window df-cut, posting
-    * self-join, per-diagonal gaps-and-islands run merge, and the
-    * span-equality verification join. */
-  /** The [[Dedup.substringRuns]] CTE body (no leading WITH) — every CTE
-    * `ss`-prefixed so the chain composes into other oracles (the v3
-    * curation pipeline) without name collisions. */
-  private def substringCtes(k: Int, maxDf: Option[Long]): String = {
-    val cut = maxDf match {
-      case Some(cap) =>
-        s""", sswdf AS (
-           |  SELECT wh, count(*) AS df FROM sswins0 GROUP BY wh
-           |), sswins AS (
-           |  SELECT w.* FROM sswins0 w JOIN sswdf USING (wh) WHERE sswdf.df <= $cap
-           |)""".stripMargin
-      case None => ", sswins AS (SELECT * FROM sswins0)"
-    }
-    s"""sstoks AS (
-       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-       |  FROM documents
-       |), sswins0 AS (
-       |  SELECT doc_id, g.i - 1 AS pos,
-       |    CAST(('0x' || substr(md5(array_to_string(t[g.i:g.i+${k - 1}], ' ')), 1, 12)) AS BIGINT) AS wh
-       |  FROM sstoks, LATERAL (
-       |    SELECT unnest(generate_series(1, greatest(len(t) - ${k - 1}, 0))) AS i) g
-       |)$cut, sscand AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, a.pos AS p1, b.pos AS p2
-       |  FROM sswins a JOIN sswins b ON a.wh = b.wh AND a.doc_id < b.doc_id
-       |), ssruns AS (
-       |  SELECT d1, d2, p1 - p2 AS diag,
-       |    p1 - row_number() OVER (PARTITION BY d1, d2, p1 - p2 ORDER BY p1) AS grp,
-       |    p1, p2
-       |  FROM sscand
-       |), ssagg AS (
-       |  SELECT d1, d2, CAST(min(p1) AS BIGINT) AS d1_pos,
-       |    CAST(min(p2) AS BIGINT) AS d2_pos,
-       |    CAST(count(*) + ${k - 1} AS BIGINT) AS run_tokens
-       |  FROM ssruns GROUP BY d1, d2, diag, grp
-       |), ssvruns AS (
-       |  SELECT r.d1, r.d2, r.d1_pos, r.d2_pos, r.run_tokens
-       |  FROM ssagg r
-       |  JOIN sstoks a ON a.doc_id = r.d1
-       |  JOIN sstoks b ON b.doc_id = r.d2
-       |  WHERE array_to_string(a.t[r.d1_pos + 1 : r.d1_pos + r.run_tokens], ' ') =
-       |        array_to_string(b.t[r.d2_pos + 1 : r.d2_pos + r.run_tokens], ' ')
-       |)""".stripMargin
-  }
-
-  private def substringRunsSql(k: Int, maxDf: Option[Long]): String =
-    "WITH " + substringCtes(k, maxDf) +
-      "\nSELECT d1, d2, d1_pos, d2_pos, run_tokens FROM ssvruns" +
-      "\nORDER BY d1, d2, d1_pos, d2_pos"
-
-  /** [[Dedup.substringRemove]]'s CTE tail over [[substringCtes]]:
-    * verified runs -> d2-side cut intervals -> running-max interval
-    * merge -> positional token filter -> per-doc rejoin digest, ending
-    * in `ssrm(doc_id, n_removed, clean_md5)`. */
-  private val SubstringRemoveCtes: String =
-    """, ssiv0 AS (
-      |  SELECT DISTINCT d2 AS doc_id, d2_pos AS s,
-      |    d2_pos + run_tokens AS e
-      |  FROM ssvruns
-      |), ssisl AS (
-      |  SELECT doc_id, s, e,
-      |    sum(CASE WHEN maxe IS NULL OR s > maxe THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY s, e) AS grp
-      |  FROM (
-      |    SELECT doc_id, s, e,
-      |      max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
-      |    FROM ssiv0)
-      |), sscuts AS (
-      |  SELECT doc_id, min(s) AS s, max(e) AS e FROM ssisl
-      |  GROUP BY doc_id, grp
-      |), sspos AS (
-      |  SELECT doc_id, t, g.i AS i, t[g.i] AS tok
-      |  FROM sstoks, LATERAL (
-      |    SELECT unnest(generate_series(1, len(t))) AS i) g
-      |), sskept AS (
-      |  SELECT p.doc_id, p.i, p.tok
-      |  FROM sspos p
-      |  WHERE NOT EXISTS (SELECT 1 FROM sscuts c
-      |    WHERE c.doc_id = p.doc_id AND p.i - 1 >= c.s AND p.i - 1 < c.e)
-      |), ssrm AS (
-      |  SELECT d.doc_id,
-      |    CAST(len(d.t) - coalesce(kc.n, 0) AS BIGINT) AS n_removed,
-      |    coalesce(kc.txt, '') AS clean_text,
-      |    md5(coalesce(kc.txt, '')) AS clean_md5
-      |  FROM sstoks d
-      |  LEFT JOIN (
-      |    SELECT doc_id, count(*) AS n,
-      |      string_agg(tok, ' ' ORDER BY i) AS txt
-      |    FROM sskept GROUP BY doc_id) kc ON kc.doc_id = d.doc_id
-      |)""".stripMargin
-
-  private def substringRemoveSql(k: Int, maxDf: Option[Long]): String =
-    "WITH " + substringCtes(k, maxDf) + SubstringRemoveCtes +
-      "\nSELECT doc_id, n_removed, clean_md5 FROM ssrm ORDER BY doc_id"
-
-  /** The cleaned-CORPUS variant: same chain, but the oracle verifies the
-    * cleaned text ITSELF, not a digest of it. */
-  private def substringRemoveTextSql(k: Int, maxDf: Option[Long]): String =
-    "WITH " + substringCtes(k, maxDf) + SubstringRemoveCtes +
-      "\nSELECT doc_id, n_removed, clean_text FROM ssrm ORDER BY doc_id"
-
-  /** [[Dedup.substringRunsIncremental]] replayed: the even/odd batch
-    * split's cross-corpus posting join over the SAME window table, then
-    * the shared islands + verification tail (the unreferenced self-join
-    * CTEs in [[substringCtes]] are never executed — DuckDB inlines CTEs
-    * lazily). */
-  private def substringIncrementalSql(k: Int): String =
-    "WITH " + substringCtes(k, None) +
-      s""", ssinc AS (
-         |  SELECT a.doc_id AS d1, b.doc_id AS d2, a.pos AS p1, b.pos AS p2
-         |  FROM sswins0 a JOIN sswins0 b ON a.wh = b.wh
-         |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-         |), ssincr AS (
-         |  SELECT d1, d2, p1 - p2 AS diag,
-         |    p1 - row_number() OVER (PARTITION BY d1, d2, p1 - p2 ORDER BY p1) AS grp,
-         |    p1, p2
-         |  FROM ssinc
-         |), ssinca AS (
-         |  SELECT d1, d2, CAST(min(p1) AS BIGINT) AS d1_pos,
-         |    CAST(min(p2) AS BIGINT) AS d2_pos,
-         |    CAST(count(*) + ${k - 1} AS BIGINT) AS run_tokens
-         |  FROM ssincr GROUP BY d1, d2, diag, grp
-         |)
-         |SELECT r.d1, r.d2, r.d1_pos, r.d2_pos, r.run_tokens
-         |FROM ssinca r
-         |JOIN sstoks a ON a.doc_id = r.d1
-         |JOIN sstoks b ON b.doc_id = r.d2
-         |WHERE array_to_string(a.t[r.d1_pos + 1 : r.d1_pos + r.run_tokens], ' ') =
-         |      array_to_string(b.t[r.d2_pos + 1 : r.d2_pos + r.run_tokens], ' ')
-         |ORDER BY d1, d2, d1_pos, d2_pos""".stripMargin
-
-  /** Shared line-lake CTE chain ([[graft.ops.Curation.lineified]] replay:
-    * %3 header / 12-token body chunks / %2 footer, then exploded to
-    * (doc_id, line, pos) — parallel unnest() calls zip in DuckDB). */
-  private val LineLakeChain =
-    """lk AS (
-      |  SELECT doc_id,
-      |    (CASE WHEN doc_id % 3 = 0
-      |          THEN ['nav home about contact menu b'
-      |                || CAST(doc_id % 7 AS VARCHAR)]
-      |          ELSE [] END)
-      |    || list_transform(
-      |         range(0, (len(string_split(text, ' ')) + 11) // 12),
-      |         i -> array_to_string(
-      |           string_split(text, ' ')[i*12+1 : i*12+12], ' '))
-      |    || (CASE WHEN doc_id % 2 = 0
-      |          THEN ['copyright footer terms privacy b'
-      |                || CAST(doc_id % 5 AS VARCHAR)]
-      |          ELSE [] END) AS lines
-      |  FROM documents
-      |), ex AS (
-      |  SELECT doc_id, unnest(lines) AS line,
-      |         unnest(range(len(lines))) AS pos
-      |  FROM lk
-      |)""".stripMargin
-
-  /** Shared DuckDB tokenization CTE over `documents`. */
-  private val T =
-    """WITH toks AS (
-      |  SELECT doc_id, text, lang, source,
-      |         string_split_regex(lower(trim(text)), '\s+') AS t
-      |  FROM documents
-      |)
-      |""".stripMargin
-
-  /** Real-BPE oracle chain (needs a leading WITH RECURSIVE): the merge
-    * table rendered from [[graft.ops.Bpe.Merges]] itself, each distinct
-    * word's merge fixpoint derived by recursive `instr`/`substr` surgery
-    * on the space-delimited symbol string (min-rank applicable merge,
-    * leftmost occurrence — `Bpe.Coder.encodeWord` exactly; validated
-    * symbol-for-symbol), then per-doc counts and the rebuilt token
-    * string in `dbpe(doc_id, n_bpe_real, bpe_md5)`. */
-  private def bpeSqlChain: String = bpeSqlChainWith(
-    s"bpem AS (SELECT * FROM (VALUES ${graft.ops.Bpe.mergesSqlValues}) t(rnk, ma, mb))")
-
-  /** [[bpeSqlChain]] over an arbitrary `bpem(rnk, ma, mb)` CTE — the
-    * fixture VALUES normally, the symbolically-TRAINED table for the
-    * trained-tokenizer row (see [[bpeTrainChain]]). */
-  private def bpeSqlChainWith(bpemCte: String,
-      wordsArr: String = "string_split_regex(lower(trim(text)), '\\s+')")
-      : String =
-    s"""$bpemCte,
-       |words AS (
-       |  SELECT DISTINCT unnest($wordsArr) AS w
-       |  FROM documents
-       |), bpe(w, seq) AS (
-       |  SELECT w, ' ' || regexp_replace(w, '(.)', '\\1 ', 'g')
-       |  FROM words WHERE w <> ''
-       |  UNION ALL
-       |  SELECT w, substr(seq, 1, instr(seq, pat) - 1) || rep ||
-       |            substr(seq, instr(seq, pat) + length(pat))
-       |  FROM (
-       |    SELECT b.w, b.seq,
-       |      min_by(' ' || m.ma || ' ' || m.mb || ' ', m.rnk) AS pat,
-       |      min_by(' ' || m.ma || m.mb || ' ', m.rnk) AS rep
-       |    FROM bpe b JOIN bpem m
-       |      ON instr(b.seq, ' ' || m.ma || ' ' || m.mb || ' ') > 0
-       |    GROUP BY b.w, b.seq)
-       |), wtok AS (
-       |  SELECT w, trim(seq) AS toks,
-       |    CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS n
-       |  FROM bpe b
-       |  WHERE NOT EXISTS (SELECT 1 FROM bpem m
-       |    WHERE instr(b.seq, ' ' || m.ma || ' ' || m.mb || ' ') > 0)
-       |), dtok AS (
-       |  SELECT doc_id, g.i, t[g.i] AS w
-       |  FROM (SELECT doc_id, $wordsArr AS t
-       |        FROM documents) d,
-       |  LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g
-       |), dbpe AS (
-       |  SELECT d.doc_id,
-       |    CAST(sum(coalesce(wt.n, 0)) AS BIGINT) AS n_bpe_real,
-       |    md5(coalesce(string_agg(wt.toks, ' ' ORDER BY d.i), '')) AS bpe_md5
-       |  FROM dtok d LEFT JOIN wtok wt ON wt.w = d.w
-       |  GROUP BY d.doc_id
-       |)""".stripMargin
-
-  /** BPE TRAINING replayed symbolically, round by round
-    * (`graft.ops.Bpe.train` digit-for-digit): the (word, count) vocab
-    * (`btw`), char-split symbol strings (`bts0`), then per round r a
-    * pair-count CTE (`btp$r` — adjacent symbols weighted by word
-    * count), the argmax merge (`btm$r` — count desc, pair
-    * lexicographic), and a recursive one-occurrence-at-a-time
-    * leftmost-replacement fixpoint (`btr$r`/`bts${r+1}` — the
-    * [[bpeSqlChain]] surgery specialized to a single pair; equivalent
-    * to the trainer's single left-to-right pass because a merge never
-    * creates a new occurrence of its own pair). MATERIALIZED hints
-    * keep the chained rounds linear — DuckDB would otherwise inline
-    * the multi-referenced round CTEs exponentially. */
-  private def bpeTrainChain(n: Int): String = {
-    val head =
-      """btw AS MATERIALIZED (
-        |  SELECT w, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-        |    FROM documents) WHERE w <> '' GROUP BY w
-        |), bts0 AS MATERIALIZED (
-        |  SELECT w, cnt, ' ' || regexp_replace(w, '(.)', '\1 ', 'g') AS seq
-        |  FROM btw
-        |)""".stripMargin
-    val rounds = (0 until n).map { r =>
-      s""", btp$r AS MATERIALIZED (
-         |  SELECT l[g.i] AS a, l[g.i+1] AS b, sum(cnt) AS c
-         |  FROM (SELECT cnt, string_split(trim(seq), ' ') AS l FROM bts$r) t,
-         |       LATERAL (SELECT unnest(generate_series(1, len(l) - 1)) AS i) g
-         |  GROUP BY a, b
-         |), btm$r AS MATERIALIZED (
-         |  SELECT a, b, ' ' || a || ' ' || b || ' ' AS pat,
-         |         ' ' || a || b || ' ' AS rep
-         |  FROM btp$r ORDER BY c DESC, a, b LIMIT 1
-         |), btr$r(w, cnt, seq) AS (
-         |  SELECT w, cnt, seq FROM bts$r
-         |  UNION ALL
-         |  SELECT s.w, s.cnt,
-         |    substr(s.seq, 1, instr(s.seq, m.pat) - 1) || m.rep ||
-         |      substr(s.seq, instr(s.seq, m.pat) + length(m.pat))
-         |  FROM btr$r s, btm$r m
-         |  WHERE instr(s.seq, m.pat) > 0
-         |), bts${r + 1} AS MATERIALIZED (
-         |  SELECT w, cnt, seq FROM btr$r s
-         |  WHERE NOT EXISTS (SELECT 1 FROM btm$r m
-         |                    WHERE instr(s.seq, m.pat) > 0)
-         |)""".stripMargin
-    }.mkString
-    head + rounds
-  }
-
-  /** The trained merge rows as a SELECT (rank, ma, mb) union over
-    * [[bpeTrainChain]]'s argmax CTEs — rounds whose corpus ran out of
-    * pairs contribute zero rows on both engines. */
-  private def bpeTrainSelect(n: Int): String =
-    (0 until n)
-      .map(r => s"SELECT $r AS rank, a AS ma, b AS mb FROM btm$r")
-      .mkString("\n  UNION ALL ")
-
-  /** BATCHED byte-level BPE training replayed round by round
-    * (`graft.ops.Bpe.trainBytesBatched` merge-for-merge): the GPT-2
-    * pre-token vocab with the space carried as Ġ (`bbw`/`bbs0`), then
-    * per round r the pair-count ranking (`bbp$r`), the top-4M candidate
-    * window (`bbk$r`), the greedy-disjoint keep set with its in-round
-    * rank and merge patterns (`bbc$r` — keep a candidate iff no
-    * earlier-RANKED candidate shares a symbol; a pure rank predicate,
-    * one NOT EXISTS self-join), and the batch applied to a fixpoint by
-    * min-in-round-rank leftmost replacement (`bbr$r`/`bbs${r+1}` — the
-    * [[bpeSqlChain]] surgery over the round's own merge table; disjoint
-    * pairs make order immaterial, so this equals the Scala fold). */
-  private def bpeTrainBytesChain(rounds: Int, m: Int): String = {
-    val head =
-      s"""bbw AS MATERIALIZED (
-         |  SELECT w, count(*) AS cnt FROM (
-         |    SELECT replace(unnest(regexp_extract_all(text,
-         |      '${graft.ops.TextAnalysis.BpeIshPattern}')), ' ', 'Ġ') AS w
-         |    FROM documents) WHERE w <> '' GROUP BY w
-         |), bbs0 AS MATERIALIZED (
-         |  SELECT w, cnt, ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS seq
-         |  FROM bbw
-         |)""".stripMargin
-    val rounds_ = (0 until rounds).map { r =>
-      s""", bbp$r AS MATERIALIZED (
-         |  SELECT l[g.i] AS a, l[g.i+1] AS b, sum(cnt) AS c
-         |  FROM (SELECT cnt, string_split(trim(seq), ' ') AS l FROM bbs$r) t,
-         |       LATERAL (SELECT unnest(generate_series(1, len(l) - 1)) AS i) g
-         |  GROUP BY a, b
-         |), bbk$r AS MATERIALIZED (
-         |  SELECT a, b, row_number() OVER (ORDER BY c DESC, a, b) AS rk
-         |  FROM bbp$r ORDER BY c DESC, a, b LIMIT ${4 * m}
-         |), bbc$r AS MATERIALIZED (
-         |  SELECT a, b, row_number() OVER (ORDER BY rk) AS rk2,
-         |    ' ' || a || ' ' || b || ' ' AS pat, ' ' || a || b || ' ' AS rep
-         |  FROM bbk$r k
-         |  WHERE NOT EXISTS (SELECT 1 FROM bbk$r k2 WHERE k2.rk < k.rk
-         |    AND (k.a IN (k2.a, k2.b) OR k.b IN (k2.a, k2.b)))
-         |  QUALIFY rk2 <= $m
-         |), bbr$r(w, cnt, seq) AS (
-         |  SELECT w, cnt, seq FROM bbs$r
-         |  UNION ALL
-         |  SELECT t.w, t.cnt,
-         |    substr(t.seq, 1, instr(t.seq, t.pat) - 1) || t.rep ||
-         |      substr(t.seq, instr(t.seq, t.pat) + length(t.pat))
-         |  FROM (
-         |    SELECT b.w, b.cnt, b.seq,
-         |      min_by(c.pat, c.rk2) AS pat, min_by(c.rep, c.rk2) AS rep
-         |    FROM bbr$r b JOIN bbc$r c ON instr(b.seq, c.pat) > 0
-         |    GROUP BY b.w, b.cnt, b.seq) t
-         |), bbs${r + 1} AS MATERIALIZED (
-         |  SELECT w, cnt, seq FROM bbr$r s
-         |  WHERE NOT EXISTS (SELECT 1 FROM bbc$r c
-         |                    WHERE instr(s.seq, c.pat) > 0)
-         |)""".stripMargin
-    }.mkString
-    head + rounds_
-  }
-
-  /** The batched-trained merge rows with their GLOBAL rank (round-major,
-    * in-round keep order) — rounds that kept fewer than M pairs stay
-    * contiguous on both engines. */
-  private def bpeTrainBytesSelect(rounds: Int): String =
-    s"""SELECT CAST(row_number() OVER (ORDER BY round, rk2) - 1 AS BIGINT)
-       |    AS rank, a AS ma, b AS mb
-       |  FROM (
-       |  ${(0 until rounds)
-            .map(r => s"SELECT $r AS round, rk2, a, b FROM bbc$r")
-            .mkString("\n  UNION ALL ")}
-       |)""".stripMargin
-
-  /** Quality-classifier TRAINING replayed weight-for-weight
-    * (`graft.ops.QualityClassifier.train`): the hashed word-unigram
-    * per-mille ratio frame + bias rows (`qv`), the median-split labels
-    * (`qlab`), the Rocchio centroid init (`qsum`/`qwi`/`qbias`/`qw0` —
-    * per-class per-mille means, w = mean_pos − mean_neg, bias zeroing
-    * the projected-midpoint margin), then per epoch r the per-doc
-    * integer margins (`qm$r`), the misclassification votes (`qu$r`,
-    * ±1), and the DAMPED update `qw${r+1}` = w + gradient // 500.
-    * Integer arithmetic + truncating division (`//` == Scala `/`)
-    * throughout — sums are exact in any order, so the replay is
-    * bit-exact. Ends with the per-doc scoring join under the final
-    * weights. */
-  private def qualityTrainChain(epochs: Int): String = {
-    val head =
-      """qtok AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(md5(t), 1, 4)) AS BIGINT) % 64 AS f
-        |  FROM (SELECT doc_id,
-        |          unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        |        FROM documents)
-        |), qcnt AS (
-        |  SELECT doc_id, f, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM qtok GROUP BY doc_id, f
-        |), qtot AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS tot
-        |  FROM qtok GROUP BY doc_id
-        |), qv AS MATERIALIZED (
-        |  SELECT c.doc_id, c.f, (c.cnt * 1000) // t.tot AS v
-        |  FROM qcnt c JOIN qtot t USING (doc_id)
-        |  WHERE (c.cnt * 1000) // t.tot > 0
-        |  UNION ALL
-        |  SELECT doc_id, 64, 1000 FROM qtot
-        |), qlab AS MATERIALIZED (
-        |  SELECT doc_id, coalesce(quality >= 0.5, false) AS y FROM (
-        |    SELECT doc_id,
-        |      floor(((CAST(len(list_filter(t, x -> list_contains(
-        |          ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |          * 1.0 / len(t)) * 0.4 +
-        |        least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |        (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |          / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |    FROM (SELECT doc_id, text,
-        |            string_split_regex(lower(trim(text)), '\s+') AS t
-        |          FROM documents) qq)
-        |), qcls AS (
-        |  SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS npos,
-        |         sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS nneg
-        |  FROM qlab
-        |), qsum AS (
-        |  SELECT v.f,
-        |    sum(CASE WHEN l.y THEN v.v ELSE 0 END) AS sp,
-        |    sum(CASE WHEN NOT l.y THEN v.v ELSE 0 END) AS sn
-        |  FROM qv v JOIN qlab l USING (doc_id) GROUP BY v.f
-        |), qwi AS (
-        |  SELECT f, (s.sp * 1000) // c.npos AS mp,
-        |            (s.sn * 1000) // c.nneg AS mn
-        |  FROM qsum s, qcls c
-        |), qbias AS (
-        |  SELECT -(sum((mp - mn) * (mp + mn)) // (2 * 1000 * 1000)) AS wb
-        |  FROM qwi WHERE f < 64
-        |), qw0 AS MATERIALIZED (
-        |  SELECT f, CAST(CASE WHEN f = 64 THEN (SELECT wb FROM qbias)
-        |                 ELSE mp - mn END AS BIGINT) AS w
-        |  FROM qwi
-        |)""".stripMargin
-    val rounds = (0 until epochs).map { r =>
-      s""", qm$r AS MATERIALIZED (
-         |  SELECT v.doc_id, sum(v.v * w.w) AS m
-         |  FROM qv v JOIN qw$r w USING (f) GROUP BY v.doc_id
-         |), qu$r AS MATERIALIZED (
-         |  SELECT l.doc_id,
-         |    CASE WHEN l.y AND coalesce(m.m, 0) <= 0 THEN 1
-         |         WHEN NOT l.y AND coalesce(m.m, 0) > 0 THEN -1
-         |         ELSE 0 END AS upd
-         |  FROM qlab l LEFT JOIN qm$r m ON m.doc_id = l.doc_id
-         |), qw${r + 1} AS MATERIALIZED (
-         |  SELECT w.f, CAST(w.w + coalesce(gg.g, 0) // 500 AS BIGINT) AS w
-         |  FROM qw$r w LEFT JOIN (
-         |    SELECT v.f, sum(v.v * u.upd) AS g
-         |    FROM qv v JOIN qu$r u ON u.doc_id = v.doc_id AND u.upd <> 0
-         |    GROUP BY v.f) gg ON gg.f = w.f
-         |)""".stripMargin
-    }.mkString
-    val score =
-      s"""
-         |SELECT l.doc_id, CAST(coalesce(s.m, 0) AS BIGINT) AS margin,
-         |  coalesce(s.m, 0) > 0 AS pred, l.y AS label
-         |FROM qlab l
-         |LEFT JOIN (
-         |  SELECT v.doc_id, sum(v.v * w.w) AS m
-         |  FROM qv v JOIN qw$epochs w USING (f) GROUP BY v.doc_id) s
-         |  ON s.doc_id = l.doc_id
-         |ORDER BY l.doc_id""".stripMargin
-    head + rounds + score
-  }
-
-  /** Trained-domain oracle: the keyword annotator replay, the qv feature
-    * chain (content buckets only — the bias dim shifts every margin
-    * equally), per-domain centroids at the v·Scale fixed point, and the
-    * nearest-centroid argmax in its linear expansion
-    * margin = 2·Σx·c − Σc² — the cross term is the only
-    * (doc, f)×(domain, f) join (absent features contribute x = 0), the
-    * norm term is domain-only. row_number ties break
-    * (margin DESC, domain asc) — Spark's alphabetical first-match over
-    * greatest(). */
-  private val domainTrainSql: String =
-    """WITH qtok AS (
-      |  SELECT doc_id,
-      |    CAST(('0x' || substr(md5(t), 1, 4)) AS BIGINT) % 64 AS f
-      |  FROM (SELECT doc_id,
-      |          unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-      |        FROM documents)
-      |), qcnt AS (
-      |  SELECT doc_id, f, CAST(count(*) AS BIGINT) AS cnt
-      |  FROM qtok GROUP BY doc_id, f
-      |), qtot AS (
-      |  SELECT doc_id, CAST(count(*) AS BIGINT) AS tot
-      |  FROM qtok GROUP BY doc_id
-      |), qv AS MATERIALIZED (
-      |  SELECT c.doc_id, c.f, (c.cnt * 1000) // t.tot AS v
-      |  FROM qcnt c JOIN qtot t USING (doc_id)
-      |  WHERE (c.cnt * 1000) // t.tot > 0
-      |), llab AS MATERIALIZED (
-      |  SELECT doc_id,
-      |    CASE
-      |      WHEN c_s >= r_s AND c_s >= st_s AND c_s >= sm_s THEN 'compute'
-      |      WHEN r_s >= st_s AND r_s >= sm_s THEN 'relate'
-      |      WHEN st_s >= sm_s THEN 'store'
-      |      ELSE 'stream' END AS lang
-      |  FROM (SELECT doc_id,
-      |      len(list_filter(t, x -> list_contains(['scan','filter','sort'], x))) AS c_s,
-      |      len(list_filter(t, x -> list_contains(['join','merge','hash'], x))) AS r_s,
-      |      len(list_filter(t, x -> list_contains(['table','column','row'], x))) AS st_s,
-      |      len(list_filter(t, x -> list_contains(['stream','batch','window'], x))) AS sm_s
-      |    FROM (SELECT doc_id,
-      |            string_split_regex(lower(trim(text)), '\s+') AS t
-      |          FROM documents))
-      |), lcnt AS (
-      |  SELECT lang, CAST(count(*) AS BIGINT) AS n
-      |  FROM llab GROUP BY lang
-      |), lc AS MATERIALIZED (
-      |  SELECT d.lang, v.f,
-      |    (CAST(sum(v.v) AS BIGINT) * 1000) // max(n.n) AS c
-      |  FROM qv v JOIN llab d USING (doc_id) JOIN lcnt n USING (lang)
-      |  GROUP BY d.lang, v.f
-      |), langs AS (
-      |  SELECT unnest(['compute', 'relate', 'store', 'stream']) AS lang
-      |), sc2 AS (
-      |  SELECT l.lang, coalesce(c.sc, 0) AS sc
-      |  FROM langs l LEFT JOIN (
-      |    SELECT lang, CAST(sum(c * c) AS BIGINT) AS sc
-      |    FROM lc GROUP BY lang) c USING (lang)
-      |), xterm AS (
-      |  SELECT v.doc_id, c.lang,
-      |    CAST(sum((v.v * 1000) * c.c) AS BIGINT) AS xc
-      |  FROM qv v JOIN lc c USING (f)
-      |  GROUP BY v.doc_id, c.lang
-      |), pick AS (
-      |  SELECT d.doc_id, s.lang,
-      |    row_number() OVER (PARTITION BY d.doc_id
-      |      ORDER BY 2 * coalesce(x.xc, 0) - s.sc DESC, s.lang) AS rn
-      |  FROM (SELECT DISTINCT doc_id FROM qv) d
-      |  CROSS JOIN sc2 s
-      |  LEFT JOIN xterm x ON x.doc_id = d.doc_id AND x.lang = s.lang
-      |)
-      |SELECT p.doc_id, p.lang AS pred_domain, d.lang AS label,
-      |  (p.lang = d.lang) AS correct
-      |FROM pick p JOIN llab d USING (doc_id)
-      |WHERE p.rn = 1
-      |ORDER BY doc_id""".stripMargin
-
-  private def textOracles: Map[String, String] = Map(
-    "text_quality_trained" -> ("WITH " + qualityTrainChain(6)),
-    // The stored model is train(3)'s weights round-tripped exactly —
-    // the identical replay.
-    "text_quality_trained_managed" -> ("WITH " + qualityTrainChain(6)),
-
-    "text_domain_trained" -> domainTrainSql,
-    // stored centroids round-trip exactly — identical replay
-    "text_domain_trained_managed" -> domainTrainSql,
-
-    "bpe_train_bytes" -> ("WITH RECURSIVE " + bpeTrainBytesChain(3, 4) +
-      s"""
-         |${bpeTrainBytesSelect(3)}
-         |ORDER BY rank""".stripMargin),
-
-    // Byte-level trained-table consumption: 3 batched rounds replayed,
-    // the replayed table fed into the encode chain as `bpem`, the
-    // word-array derivation swapped to the GPT-2 pre-tokens.
-    "text_token_count_bpe_bytes" -> ("WITH RECURSIVE " +
-      bpeTrainBytesChain(3, 4) + ", " +
-      bpeSqlChainWith(
-        s"""bpem AS MATERIALIZED (
-           |  SELECT CAST(rank AS INT) AS rnk, ma, mb FROM (
-           |  ${bpeTrainBytesSelect(3)}
-           |  )
-           |)""".stripMargin,
-        wordsArr = "list_transform(regexp_extract_all(text, '" +
-          graft.ops.TextAnalysis.BpeIshPattern +
-          "'), x -> replace(x, ' ', 'Ġ'))") +
-      """
-        |SELECT doc_id, n_bpe_real AS n_bpe_bytes, bpe_md5 FROM dbpe
-        |ORDER BY doc_id""".stripMargin),
-
-    "bpe_train" -> ("WITH RECURSIVE " + bpeTrainChain(40) +
-      s"""
-         |SELECT CAST(rank AS BIGINT) AS rank, ma, mb FROM (
-         |  ${bpeTrainSelect(40)}
-         |) ORDER BY rank""".stripMargin),
-
-    // Unigram trainer replayed end to end: substring seed, both EM
-    // rounds (bit-quantized scores, the Viterbi recursion with its
-    // longest-piece tie-break), the prune — every count integer-exact.
-    "tok_train_unigram" -> ("WITH RECURSIVE " + unigramChain +
-      """
-        |SELECT p AS piece, cnt FROM uvocabf ORDER BY piece""".stripMargin),
-    // The managed row replays the same training (the store must be
-    // bit-identical to a fresh train — the bpemerges contract).
-    "tok_train_unigram_managed" -> ("WITH RECURSIVE " + unigramChain +
-      """
-        |SELECT p AS piece, cnt FROM uvocabf ORDER BY piece""".stripMargin),
-    // ... and the vocab consumed: a THIRD Viterbi pass under the final
-    // vocab, summed per document.
-    "text_token_count_unigram" -> ("WITH RECURSIVE " + unigramChain +
-      s""",
-         |usf AS MATERIALIZED (
-         |  SELECT p, CAST(length(bin(cnt + 1)) - 1 AS BIGINT) AS s
-         |  FROM uvocabf),
-         |ucf AS MATERIALIZED (
-         |  SELECT CAST(length(bin(SUM(cnt) + 1)) - 1 AS BIGINT) AS c
-         |  FROM uvocabf),
-         |${unigramViterbi("seg3", "usf", "ucf")},
-         |uplen AS MATERIALIZED (
-         |  SELECT w, CAST(len(p0) AS BIGINT) AS n FROM seg3
-         |  WHERE j = len(w)),
-         |udw AS (
-         |  SELECT doc_id,
-         |    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-         |  FROM documents)
-         |SELECT d0.doc_id, CAST(COALESCE(SUM(u.n), 0) AS BIGINT)
-         |  AS n_tokens
-         |FROM documents d0
-         |LEFT JOIN (SELECT doc_id, w FROM udw WHERE len(w) > 0) dw
-         |  ON dw.doc_id = d0.doc_id
-         |LEFT JOIN uplen u ON u.w = dw.w
-         |GROUP BY d0.doc_id ORDER BY d0.doc_id""".stripMargin),
-
-    // Trained-tokenizer composition: 12 training rounds replayed, the
-    // replayed table fed into the encode chain as `bpem`.
-    "text_token_count_bpe_trained" -> ("WITH RECURSIVE " + bpeTrainChain(12) +
-      ", " + bpeSqlChainWith(
-        s"""bpem AS MATERIALIZED (
-           |  SELECT CAST(rank AS INT) AS rnk, ma, mb FROM (
-           |  ${bpeTrainSelect(12)}
-           |  )
-           |)""".stripMargin) +
-      """
-        |SELECT doc_id, n_bpe_real, bpe_md5 FROM dbpe ORDER BY doc_id""".stripMargin),
-
-    "text_token_count_bpe" -> ("WITH RECURSIVE " + bpeSqlChain +
-      """
-        |SELECT doc_id, n_bpe_real, bpe_md5 FROM dbpe ORDER BY doc_id""".stripMargin),
-
-    // Managed-tokenizer row: the stored table IS train(40)'s output, so
-    // the oracle replays the full 40-round training symbolically and
-    // feeds the replayed table into the encode chain.
-    "text_token_count_bpe_managed" -> ("WITH RECURSIVE " + bpeTrainChain(40) +
-      ", " + bpeSqlChainWith(
-        s"""bpem AS MATERIALIZED (
-           |  SELECT CAST(rank AS INT) AS rnk, ma, mb FROM (
-           |  ${bpeTrainSelect(40)}
-           |  )
-           |)""".stripMargin) +
-      """
-        |SELECT doc_id, n_bpe_real, bpe_md5 FROM dbpe ORDER BY doc_id""".stripMargin),
-
-    "pack_token_budget_bpe" -> ("WITH RECURSIVE " + bpeSqlChain +
-      """, c AS (
-        |  SELECT d.doc_id, d.lang, b.n_bpe_real AS n_tok,
-        |    sum(b.n_bpe_real) OVER (PARTITION BY d.lang ORDER BY d.doc_id)
-        |      - b.n_bpe_real AS pre
-        |  FROM documents d JOIN dbpe b USING (doc_id))
-        |SELECT lang, CAST(pre // 2000 AS BIGINT) AS pack_id,
-        |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS pack_tokens
-        |FROM c GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin),
-
-    "text_token_count" -> (T +
-      """SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, ' ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+')) AS BIGINT)
-        |    AS n_bpe_tokens
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    "text_quality_score" -> (T +
-      """SELECT doc_id,
-        |  CAST(len(t) AS BIGINT) AS n_tokens,
-        |  CAST(length(text) AS BIGINT) AS n_chars2,
-        |  CAST(len(list_filter(t, x -> list_contains(
-        |    ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT) AS n_stopwords,
-        |  CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS BIGINT) AS n_punct,
-        |  floor(((n_stopwords * 1.0 / n_tokens) * 0.4 +
-        |         least(n_chars2 * 1.0 / n_tokens / 10.0, 1.0) * 0.3 +
-        |         (1.0 - n_punct * 1.0 / n_chars2) * 0.3) * 1000000 + 0.5)
-        |    / 1000000 AS quality
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    // every flag coalesced to false: degenerate (empty-text) rows hit 0/0
-    // divisions that are NaN->false in Spark but NULL in DuckDB
-    "text_c4_filters" -> (T +
-      """SELECT doc_id,
-        |  CAST(len(t) AS BIGINT) AS n_tok,
-        |  coalesce(len(t) BETWEEN 10 AND 5000, false) AS len_ok,
-        |  coalesce((length(array_to_string(t, '')) * 1.0 / len(t))
-        |    BETWEEN 2.0 AND 12.0, false) AS wordlen_ok,
-        |  coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |    / length(text) < 0.15, false) AS symbol_ok,
-        |  coalesce(len(list_filter(t, x -> regexp_full_match(x, '[a-z]+'))) * 1.0
-        |    / len(t) >= 0.5, false) AS alpha_ok,
-        |  coalesce(list_max(list_transform(t, x -> length(x))) <= 25, false)
-        |    AS toklen_ok,
-        |  coalesce(NOT contains(lower(text), 'lorem ipsum'), false) AS lorem_ok,
-        |  coalesce(len(list_distinct(t)) * 1.0 / len(t) >= 0.2, false)
-        |    AS distinct_ok,
-        |  (len_ok AND wordlen_ok AND symbol_ok AND alpha_ok AND toklen_ok
-        |    AND lorem_ok AND distinct_ok) AS keep
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    "text_lang_id" -> (T +
-      """SELECT doc_id,
-        |  CAST(len(list_filter(t, x -> list_contains(['the','and','of'], x))) AS BIGINT) AS en_score,
-        |  CAST(len(list_filter(t, x -> list_contains(['der','und','die'], x))) AS BIGINT) AS de_score,
-        |  CAST(len(list_filter(t, x -> list_contains(['el','los','las'], x))) AS BIGINT) AS es_score,
-        |  CAST(len(list_filter(t, x -> list_contains(['le','les','des'], x))) AS BIGINT) AS fr_score,
-        |  CASE
-        |    WHEN de_score > en_score AND de_score >= es_score AND de_score >= fr_score THEN 'de'
-        |    WHEN es_score > en_score AND es_score > de_score AND es_score >= fr_score THEN 'es'
-        |    WHEN fr_score > en_score AND fr_score > de_score AND fr_score > es_score THEN 'fr'
-        |    ELSE 'en' END AS lang_pred
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    "text_vocab_top" -> (T +
-      """SELECT tok, count(*) AS df FROM (
-        |  SELECT doc_id, unnest(list_distinct(t)) AS tok FROM toks) u
-        |GROUP BY tok ORDER BY df DESC, tok LIMIT 20""".stripMargin),
-
-    "text_fingerprint" -> (T +
-      """SELECT doc_id,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp_md5,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(t, x -> CAST(('0x' || substr(md5(x), 1, 4)) AS BIGINT))),
-        |    (a, b) -> (a * 31 + b) % 1000000007) AS fp_roll
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    "text_decontaminate" -> ("WITH " + ShChain +
-      """, dsh AS (
-        |  SELECT DISTINCT doc_id, sh FROM sh
-        |), ev AS (
-        |  SELECT DISTINCT sh FROM dsh WHERE doc_id % 17 = 0
-        |), hits AS (
-        |  SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(CASE WHEN e.sh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_overlap
-        |  FROM dsh d LEFT JOIN ev e ON d.sh = e.sh
-        |  WHERE d.doc_id % 17 <> 0
-        |  GROUP BY d.doc_id)
-        |SELECT doc_id, n_grams, n_overlap,
-        |  floor((n_overlap * 1.0 / n_grams) * 1000000 + 0.5) / 1000000
-        |    AS contam_frac
-        |FROM hits WHERE n_overlap > 0 ORDER BY doc_id""".stripMargin),
-
-    // The Bloom prefilter is pure topology (exact verify removes its
-    // false positives), so the oracle is the PLAIN semi-join — no sketch
-    // tolerance anywhere.
-    "text_decontaminate_bloom" -> ("WITH " + ShChain +
-      """, dsh AS (
-        |  SELECT DISTINCT doc_id, sh FROM sh
-        |), refg AS (
-        |  SELECT DISTINCT sh FROM dsh WHERE doc_id % 2 = 0
-        |), hits AS (
-        |  SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |    CAST(sum(CASE WHEN r.sh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_overlap
-        |  FROM dsh d LEFT JOIN refg r ON d.sh = r.sh
-        |  WHERE d.doc_id % 2 <> 0
-        |  GROUP BY d.doc_id)
-        |SELECT doc_id, n_grams, n_overlap,
-        |  floor((n_overlap * 1.0 / n_grams) * 1000000 + 0.5) / 1000000
-        |    AS contam_frac
-        |FROM hits WHERE n_overlap > 0 ORDER BY doc_id""".stripMargin),
-
-    // Line lake replay (header on %3, 12-token body chunks, footer on %2)
-    // + df-per-line + removal + in-order reassembly; clean_text is
-    // verified verbatim. Parallel unnest() calls zip in DuckDB, giving
-    // the (line, pos) pairs posexplode gives Spark.
-    "dedup_lines" ->
-      (s"WITH $LineLakeChain, bo AS (\n" +
-      """  SELECT line, count(DISTINCT doc_id) AS df
-        |  FROM ex GROUP BY line HAVING count(DISTINCT doc_id) >= 3
-        |)
-        |SELECT e.doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_lines,
-        |  CAST(sum(CASE WHEN b.df IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_removed,
-        |  coalesce(array_to_string(
-        |    list(e.line ORDER BY e.pos) FILTER (WHERE b.df IS NULL),
-        |    chr(10)), '') AS clean_text
-        |FROM ex e LEFT JOIN bo b ON e.line = b.line
-        |GROUP BY e.doc_id
-        |ORDER BY doc_id""".stripMargin),
-
-    // Incremental variant: the df authority is the EVEN half's persisted
-    // boilerplate store; the odd batch is cleaned against it without the
-    // old corpus being re-counted.
-    "dedup_lines_incremental" ->
-      (s"WITH $LineLakeChain, bo AS (\n" +
-      """  SELECT line, count(DISTINCT doc_id) AS df
-        |  FROM ex WHERE doc_id % 2 = 0
-        |  GROUP BY line HAVING count(DISTINCT doc_id) >= 3
-        |)
-        |SELECT e.doc_id,
-        |  CAST(count(*) AS BIGINT) AS n_lines,
-        |  CAST(sum(CASE WHEN b.df IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_removed,
-        |  coalesce(array_to_string(
-        |    list(e.line ORDER BY e.pos) FILTER (WHERE b.df IS NULL),
-        |    chr(10)), '') AS clean_text
-        |FROM ex e LEFT JOIN bo b ON e.line = b.line
-        |WHERE e.doc_id % 2 = 1
-        |GROUP BY e.doc_id
-        |ORDER BY doc_id""".stripMargin),
-
-    "text_repetition" -> (T +
-      """, g2 AS (
-        |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-        |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 1, 0))) AS i) x
-        |), a2 AS (
-        |  SELECT doc_id, CAST(max(cnt) AS BIGINT) AS top2_cnt,
-        |         CAST(sum(cnt) AS BIGINT) AS n2
-        |  FROM (SELECT doc_id, g, count(*) AS cnt FROM g2 GROUP BY doc_id, g)
-        |  GROUP BY doc_id
-        |), r AS (
-        |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
-        |    CAST(len(list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-        |                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-        |      AS BIGINT) AS n3,
-        |    CAST(len(list_distinct(
-        |        list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-        |                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-        |      AS BIGINT) AS n3d
-        |  FROM toks)
-        |SELECT r.doc_id, r.n_tok, a2.top2_cnt,
-        |  floor((a2.top2_cnt * 1.0 / a2.n2) * 1000000 + 0.5) / 1000000
-        |    AS top2_frac,
-        |  floor(((r.n3 - r.n3d) * 1.0 / r.n3) * 1000000 + 0.5) / 1000000
-        |    AS dup3_frac
-        |FROM r JOIN a2 ON r.doc_id = a2.doc_id
-        |ORDER BY r.doc_id""".stripMargin),
-
-    "text_tfidf_top" -> (T +
-      """, tok AS (SELECT doc_id, unnest(t) AS term FROM toks),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM tok GROUP BY doc_id, term),
-        |dfc AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-        |        FROM tf GROUP BY term),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |         tf.tf * n.n_docs / dfc.df AS score
-        |  FROM tf JOIN dfc ON tf.term = dfc.term CROSS JOIN n),
-        |ranked AS (
-        |  SELECT doc_id,
-        |    CAST(row_number() OVER (
-        |      PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rk,
-        |    term, tf, score
-        |  FROM scored)
-        |SELECT doc_id, rk, term, tf,
-        |  floor(score * 1000000 + 0.5) / 1000000 AS score
-        |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin),
-
-    "text_length_outliers" ->
-      """WITH med AS (
-        |  SELECT lang, quantile_cont(n_chars, 0.5) AS med_chars
-        |  FROM documents GROUP BY lang),
-        |dev AS (
-        |  SELECT d.lang, d.n_chars, m.med_chars,
-        |         abs(d.n_chars - m.med_chars) AS adev
-        |  FROM documents d JOIN med m ON d.lang = m.lang),
-        |mad AS (
-        |  SELECT lang, quantile_cont(adev, 0.5) AS mad_chars
-        |  FROM dev GROUP BY lang)
-        |SELECT dev.lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  floor(any_value(dev.med_chars) * 1000000 + 0.5) / 1000000 AS med_chars,
-        |  floor(any_value(mad.mad_chars) * 1000000 + 0.5) / 1000000 AS mad_chars,
-        |  CAST(sum(CASE WHEN dev.adev > 3.0 * mad.mad_chars THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM dev JOIN mad ON dev.lang = mad.lang
-        |GROUP BY dev.lang ORDER BY dev.lang""".stripMargin,
-
-    // The approx row's med/mad rank-window flags are THEOREMS of the
-    // approx_percentile(0.5, 100) guarantee (rank error <= 1/100), so the
-    // oracle pins them symbolically and the exact n_docs numerically —
-    // the dedup_simhash64 / q_sketch_distinct invariant-gate pattern.
-    "text_length_outliers_approx" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  TRUE AS med_ok, TRUE AS mad_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "text_commonness" -> (T +
-      """, tok AS (SELECT doc_id, unnest(t) AS term FROM toks),
-        |cnt AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
-        |        FROM tok GROUP BY term),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM tok)
-        |SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tok,
-        |  CAST(sum(cnt.cnt) AS BIGINT) AS sum_cnt,
-        |  floor((CAST(sum(cnt.cnt) AS BIGINT) /
-        |         count(*) / any_value(tot.total)) * 1000000 + 0.5) / 1000000
-        |    AS commonness
-        |FROM tok JOIN cnt ON tok.term = cnt.term CROSS JOIN tot
-        |GROUP BY tok.doc_id ORDER BY tok.doc_id""".stripMargin),
-
-    "text_lm_score" -> ("WITH " + lmChain("TRUE", "TRUE")),
-    "text_lm_score_managed" -> ("WITH " + lmChain("TRUE", "TRUE")),
-    "text_lm_holdout" -> ("WITH " +
-      lmChain("doc_id % 17 <> 0", "doc_id % 17 = 0"))
-  )
-
-  /** Bigram Stupid-Backoff LM oracle ([[graft.ops.LanguageModel]]
-    * digit-for-digit): position table with the previous token, counts
-    * over the `trainPred` split, scoring of the `scorePred` split via
-    * the same integer CASE — the HUGEINT floor division mirrors the
-    * Scala side's overflow-safe quotient/remainder decomposition
-    * exactly (both are floor division on non-negative operands). */
-  private def lmChain(trainPred: String, scorePred: String): String = {
-    val S = graft.ops.LanguageModel.Scale
-    s"""toks AS (
-       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-       |  FROM documents
-       |), lmpos AS (
-       |  SELECT doc_id, CASE WHEN i > 1 THEN t[i-1] END AS wp, t[i] AS w
-       |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g
-       |), lmgrp AS (
-       |  SELECT doc_id, wp, w, CAST(count(*) AS BIGINT) AS k
-       |  FROM lmpos WHERE $scorePred GROUP BY doc_id, wp, w
-       |), lmc1 AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS c
-       |  FROM lmpos WHERE $trainPred GROUP BY w
-       |), lmn AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n FROM lmpos WHERE $trainPred
-       |), lmc2 AS (
-       |  SELECT wp, w, CAST(count(*) AS BIGINT) AS c
-       |  FROM lmpos WHERE wp IS NOT NULL AND ($trainPred) GROUP BY wp, w
-       |), lmsc AS (
-       |  SELECT g.doc_id, g.k,
-       |    CAST(CASE
-       |      WHEN g.wp IS NULL
-       |        THEN (coalesce(u.c, 0)::HUGEINT * $S) // n.n
-       |      WHEN b.c IS NOT NULL THEN (b.c::HUGEINT * $S) // up.c
-       |      ELSE (2 * ((coalesce(u.c, 0)::HUGEINT * $S) // n.n)) // 5
-       |    END AS BIGINT) AS s,
-       |    (b.c IS NOT NULL) AS hit, (u.c IS NULL) AS oov
-       |  FROM lmgrp g
-       |  LEFT JOIN lmc1 u ON u.w = g.w
-       |  LEFT JOIN lmc1 up ON up.w = g.wp
-       |  LEFT JOIN lmc2 b ON b.wp = g.wp AND b.w = g.w
-       |  CROSS JOIN lmn n
-       |)
-       |SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_tok,
-       |  CAST(sum(CASE WHEN hit THEN k ELSE 0 END) AS BIGINT) AS n_hit,
-       |  CAST(sum(CASE WHEN oov THEN k ELSE 0 END) AS BIGINT) AS n_oov,
-       |  CAST(sum(k * s) // sum(k) AS BIGINT) AS lm_score
-       |FROM lmsc GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  // -------------------------------------------------------- sampling family
-  // Deterministic dataset curation: hash-based splits and packing — the
-  // operators between "corpus" and "dataloader" in a pretraining pipeline.
-
-  private def samplingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Train/val/test assignment as a pure function of doc_id: stable under
-    // corpus growth (no resample leakage across dataset refreshes).
-    "sample_split" -> ((s, dir) => Sampling.assignSplit(docs(s, dir))),
-    // Per-language quota downsampling with an independent hash salt.
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(docs(s, dir),
-        Map("en" -> 50, "zh" -> 30), defaultPct = 20)),
-    // Token-budget sequence packing via prefix-sum bucketing.
-    "pack_token_budget" -> ((s, dir) =>
-      Sampling.packByTokenBudget(docs(s, dir), budget = 2000L)),
-    // ... and with budgets counted by the REAL BPE tokenizer, so "2000
-    // tokens" means what the dataloader will actually see.
-    "pack_token_budget_bpe" -> ((s, dir) =>
-      Sampling.packByTokenBudget(docs(s, dir), budget = 2000L,
-        TextAnalysis.bpeRealTokenCount(col("text")))),
-    // Per-source quota cap: keep the 40 longest docs per source (rank
-    // pre-pruned map-side via InferWindowGroupLimit before the shuffle).
-    "sample_quota" -> ((s, dir) => Sampling.quotaCap(docs(s, dir), 40)),
-    // Epoch-1 sharded training shuffle: deterministic salted-hash
-    // permutation, rank window partitioned by shard (never global).
-    "sample_shuffle" -> ((s, dir) => Sampling.shuffleOrder(docs(s, dir), 1)),
-    // Static data mixing: downsample languages so surviving token mass is
-    // proportional to target weights (en 0.5 / zh 0.3 / others 0.2 each);
-    // the scarcest-relative-to-weight language is kept in full.
-    "sample_mix" -> ((s, dir) => Sampling.mixToWeights(docs(s, dir),
-      Map("en" -> 0.5, "zh" -> 0.3), 0.2)),
-    // Quality-weighted epoch repetition: 3/2/1 copies by quality tier
-    // (the "repeat high-quality data more" mix-construction step). Pure
-    // map + explode, zero shuffle.
-    "sample_epochs" -> ((s, dir) => Sampling.epochRepeat(docs(s, dir))),
-    // DSIR-flavored importance selection: keep source docs whose hashed
-    // 2-gram profile is more target-like than source-like (integerized
-    // ratio-of-sums — see Sampling.importanceSelect's scaladoc for why
-    // not sum-of-logs).
-    "sample_importance" -> ((s, dir) =>
-      Sampling.importanceSelect(docs(s, dir))),
-    // Numeric-run redaction over the events payload column (documents are
-    // digit-free by construction, so the scrub targets props): a single
-    // codegen'd regexp_replace pass plus an audit count.
-    "text_redact_numbers" -> ((s, dir) => {
-      Records.readEvents(s, dir)
-        .select(col("event_id"),
-          TextAnalysis.redactNumbers(col("props")).as("props_red"),
-          TextAnalysis.numberRunCount(col("props")).as("n_nums"))
-        .orderBy("event_id")
-    }),
-    // Full PII scrub (email/URL/IPv4/phone/number) as ONE codegen'd
-    // five-pass byte-scan kernel — regexp_replace per pattern was the
-    // 25 s Matcher.find() trap the punctuation kernel killed, times five
-    // rules. The corpus is digit/PII-free by construction, so a
-    // deterministic PII-rich suffix (every rule exercised, synthesized
-    // identically in SQL) rides on each event's props; audit counts are
-    // placeholder occurrences in the redacted text (literal replace
-    // arithmetic — engine-identical). The oracle replays the rule CHAIN
-    // declaratively in RE2; the kernel↔Java-regex equivalence is pinned
-    // in PiiExpressionsSpec.
-    "text_redact_pii" -> ((s, dir) => {
-      val full = concat(col("props"),
-        lit(" mail u"), col("event_id").cast("string"),
-        lit("@ex"), (col("event_id") % 7).cast("string"),
-        lit(".com via http://h"), (col("event_id") % 5).cast("string"),
-        lit(".io/p?q="), col("event_id").cast("string"),
-        lit("&x=<y> ip "), (col("event_id") % 256).cast("string"),
-        lit("."), ((col("event_id") * 7) % 256).cast("string"),
-        lit("."), ((col("event_id") * 13) % 256).cast("string"),
-        lit("."), (col("event_id") % 250).cast("string"),
-        lit(" tel +49151"),
-        (lit(1000000) + col("event_id") % 1000000).cast("string"),
-        lit(" alt "), (lit(100) + col("event_id") % 900).cast("string"),
-        lit("-"), (lit(100) + (col("event_id") * 3) % 900).cast("string"),
-        lit("-"), (lit(1000) + col("event_id") % 9000).cast("string"),
-        lit(" ref "), (col("event_id") * col("event_id")).cast("string"))
-      def nOf(p: String): Column = expr(
-        s"CAST((length(_red) - length(replace(_red, '$p', '')))" +
-          s" div ${p.length} AS BIGINT)")
-      Records.readEvents(s, dir)
-        .select(col("event_id"),
-          graft.functions.PiiExpressions.redactPii(full).as("_red"))
-        .select(col("event_id"), col("_red").as("props_red"),
-          nOf("<EMAIL>").as("n_emails"),
-          nOf("<URL>").as("n_urls"),
-          nOf("<IP>").as("n_ips"),
-          nOf("<PHONE>").as("n_phones"),
-          nOf("<NUM>").as("n_nums"))
-        .orderBy("event_id")
-    }),
-    // Markup/boilerplate text extraction — the FIRST operator of a real
-    // crawl pipeline: strip script/style blocks, comments, tags,
-    // entities, and collapse whitespace to main text, as ONE codegen'd
-    // byte-scan kernel (the PiiRedact pattern). The corpus is
-    // markup-free by construction, so a deterministic HTML wrapper
-    // (every rule exercised, synthesized identically in SQL) rides on
-    // each document's text; the oracle replays the rule CHAIN
-    // declaratively in RE2, and the kernel↔Java-regex equivalence is
-    // pinned in MarkupExpressionsSpec.
-    "text_extract_markup" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"),
-          graft.functions.MarkupExpressions.extractMarkup(
-            markupWrapped(col("doc_id"), col("text"))).as("main_text"))
-        .select(col("doc_id"), col("main_text"),
-          length(col("main_text")).cast("long").as("n_chars_clean"))
-        .orderBy("doc_id")),
-    // URL canonicalization — the crawl-side dedup key. The corpus
-    // carries no URL column, so a deterministic synthesized URL (every
-    // rule exercised: mixed case, both default ports, a kept non-default
-    // port, empty paths, unsorted/empty queries, fragments) rides on
-    // each event id, identically in SQL.
-    "url_canonicalize" -> ((s, dir) =>
-      Records.readEvents(s, dir)
-        .select(col("event_id"), synthUrl(col("event_id")).as("url"))
-        .select(col("event_id"), col("url"),
-          TextAnalysis.canonicalizeUrl(col("url")).as("url_canon"))
-        .orderBy("event_id")),
-    // ... and the dedup it exists for: recrawls of the same canonical
-    // URL collapse to one keeper (min id), a plain hash-groupBy on the
-    // canonical key — at 100 TB one map pass + one shuffle.
-    "url_dedup" -> ((s, dir) =>
-      Records.readEvents(s, dir)
-        .select(col("event_id"),
-          TextAnalysis.canonicalizeUrl(synthUrl(col("event_id")))
-            .as("url_canon"))
-        .groupBy("url_canon")
-        .agg(count(lit(1)).as("n_dups"), min("event_id").as("keep_id"))
-        .orderBy("url_canon")),
-    // Per-host crawl inventory — the grouping a pipeline quotas and
-    // mixes on (sample_quota's 'source' lever applied to the crawl's
-    // real key). One map pass + one shuffle; distinct-URL counts are
-    // partial-aggregated per host.
-    "url_host_stats" -> ((s, dir) =>
-      Records.readEvents(s, dir)
-        .select(TextAnalysis.canonicalizeUrl(synthUrl(col("event_id")))
-          .as("url_canon"))
-        .select(TextAnalysis.urlHost(col("url_canon")).as("host"),
-          col("url_canon"))
-        .groupBy("host")
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("url_canon")).as("n_urls"))
-        .orderBy("host"))
-  )
-
-  /** Deterministic synthesized URL over an id — the PII-suffix
-    * precedent: every canonicalization rule exercised, replayed
-    * verbatim by [[synthUrlSql]]. */
-  private def synthUrl(id: Column): Column =
-    concat(
-      when(id % 5 === 0,
-        concat(lit("HTTPS://Sec"), (id % 7).cast("string"),
-          lit(".COM:443")))
-        .otherwise(concat(lit("HTTP://Ex"), (id % 7).cast("string"),
-          lit(".COM"),
-          when(id % 2 === 0, lit(":80")).otherwise(lit(":8080")))),
-      when(id % 3 === 0, lit(""))
-        .otherwise(concat(lit("/Path/"), (id % 5).cast("string"))),
-      when(id % 3 === 1,
-        concat(lit("?b=2&a="), id.cast("string"), lit("&c=")))
-        .otherwise(when(id % 6 === 2, lit("?")).otherwise(lit(""))),
-      when(id % 4 === 0, concat(lit("#Frag"), id.cast("string")))
-        .otherwise(lit("")))
-
-  private def synthUrlSql(id: String): String =
-    s"(CASE WHEN $id % 5 = 0 THEN 'HTTPS://Sec' || CAST($id % 7 AS VARCHAR) || '.COM:443'" +
-      s" ELSE 'HTTP://Ex' || CAST($id % 7 AS VARCHAR) || '.COM' ||" +
-      s" (CASE WHEN $id % 2 = 0 THEN ':80' ELSE ':8080' END) END)" +
-      s" || (CASE WHEN $id % 3 = 0 THEN '' ELSE '/Path/' || CAST($id % 5 AS VARCHAR) END)" +
-      s" || (CASE WHEN $id % 3 = 1 THEN '?b=2&a=' || CAST($id AS VARCHAR) || '&c='" +
-      s" WHEN $id % 6 = 2 THEN '?' ELSE '' END)" +
-      s" || (CASE WHEN $id % 4 = 0 THEN '#Frag' || CAST($id AS VARCHAR) ELSE '' END)"
-
-  /** The canonicalization chain over a SQL expression — DuckDB replay
-    * of [[TextAnalysis.canonicalizeUrl]]'s declared rules. Emits CTE
-    * bodies `u -> s2 -> s3 -> s4` given `u(id, url)` in scope; the
-    * final canonical string is `s4`'s select list. */
-  private def urlCanonCtes: String =
-    """s1 AS (
-      |  SELECT id, url, regexp_replace(url, '(?s)#.*', '') AS nofrag
-      |  FROM u
-      |), s2 AS (
-      |  SELECT id, url, nofrag,
-      |    coalesce(regexp_extract(nofrag,
-      |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*'), '') AS pre
-      |  FROM s1
-      |), s3 AS (
-      |  SELECT id, url,
-      |    regexp_replace(regexp_replace(lower(pre),
-      |      '^(http://[^/?#]*):80$', '\1'),
-      |      '^(https://[^/?#]*):443$', '\1') AS auth,
-      |    substr(nofrag, length(pre) + 1) AS rest
-      |  FROM s2
-      |), s4 AS (
-      |  SELECT id, url, auth,
-      |    CASE WHEN strpos(rest, '?') > 0
-      |         THEN substr(rest, 1, strpos(rest, '?') - 1)
-      |         ELSE rest END AS path0,
-      |    CASE WHEN strpos(rest, '?') > 0
-      |         THEN substr(rest, strpos(rest, '?') + 1)
-      |         ELSE '' END AS q
-      |  FROM s3
-      |), canon AS (
-      |  SELECT id, url,
-      |    auth || (CASE WHEN path0 = '' THEN '/' ELSE path0 END) ||
-      |    (CASE WHEN q = '' THEN ''
-      |          ELSE '?' || array_to_string(
-      |            list_sort(string_split(q, '&')), '&') END) AS url_canon
-      |  FROM s4
-      |)""".stripMargin
-
-  /** The deterministic markup wrapper `text_extract_markup` and
-    * `pipeline_clean_corpus_v5` synthesize around each document — every
-    * extraction rule exercised: a script block (with `&&` and `<` that
-    * must NOT leak), a style block, a comment, attributed + plain tags,
-    * a raw newline, and all entity classes. [[markupWrappedSql]] is the
-    * same expression in DuckDB SQL. */
-  private[graft] def markupWrapped(id: Column, text: Column): Column =
-    concat(lit("<html><head><script src=\"a"), id.cast("string"),
-      lit(".js\">var x=1 && y<2;</script><style>p{color:#"),
-      (id % 10).cast("string"),
-      lit("}</style></head><body><!-- c"), id.cast("string"),
-      lit(" --><h1 class=\"t\">T"), id.cast("string"),
-      lit("</h1>\n<p>"), text,
-      lit(" &amp; more &lt;b&gt;bold&lt;/b&gt;&nbsp;end</p></body></html>"))
-
-  private def markupWrappedSql(id: String, text: String): String =
-    s"'<html><head><script src=\"a' || CAST($id AS VARCHAR)" +
-      " || '.js\">var x=1 && y<2;</script><style>p{color:#'" +
-      s" || CAST($id % 10 AS VARCHAR)" +
-      s" || '}</style></head><body><!-- c' || CAST($id AS VARCHAR)" +
-      s" || ' --><h1 class=\"t\">T' || CAST($id AS VARCHAR)" +
-      s" || '</h1>' || chr(10) || '<p>' || $text" +
-      " || ' &amp; more &lt;b&gt;bold&lt;/b&gt;&nbsp;end</p></body></html>'"
-
-  /** The five-rule PII chain over a SQL expression — RE2 replay of
-    * [[graft.functions.PiiRedact]]'s declared regexes (the RE2-safe
-    * forms — IpRe's `\b` IS RE2's ASCII boundary; the Java-only
-    * IpReJava rendering never reaches the oracle). */
-  private def piiRedactSql(t: String): String =
-    "regexp_replace(regexp_replace(regexp_replace(regexp_replace(\n" +
-      s"      regexp_replace($t,\n" +
-      s"      '${graft.functions.PiiRedact.EmailRe}', '<EMAIL>', 'g'),\n" +
-      s"      '${graft.functions.PiiRedact.UrlRe}', '<URL>', 'g'),\n" +
-      s"      '${graft.functions.PiiRedact.IpRe}', '<IP>', 'g'),\n" +
-      s"      '${graft.functions.PiiRedact.PhoneRe}', '<PHONE>', 'g'),\n" +
-      s"      '${graft.functions.PiiRedact.NumRe}', '<NUM>', 'g')"
-
-  /** The declared extraction chain over a SQL expression — RE2 replay
-    * of [[graft.functions.MarkupExtract]]'s rules, nesting order the
-    * contract: blocks, comments, tags, entity decodes (amp last),
-    * whitespace collapse, trim. */
-  private def markupExtractSql(t: String): String = {
-    import graft.functions.MarkupExtract._
-    val blocks = s"regexp_replace(regexp_replace(regexp_replace(" +
-      s"regexp_replace($t, '$ScriptRe', ' ', 'g'), '$StyleRe', ' ', 'g')," +
-      s" '$CommentRe', ' ', 'g'), '$TagRe', ' ', 'g')"
-    val entities = "replace(replace(replace(replace(replace(replace(" +
-      blocks + ", '&lt;', '<'), '&gt;', '>'), '&quot;', '\"')," +
-      " '&apos;', ''''), '&nbsp;', ' '), '&amp;', '&')"
-    s"trim(regexp_replace($entities, '$WsRe', ' ', 'g'))"
-  }
-
-  private def samplingOracles: Map[String, String] = Map(
-    "sample_split" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) % 100
-        |      AS bucket
-        |  FROM documents)
-        |SELECT doc_id, lang, bucket,
-        |  CASE WHEN bucket < 80 THEN 'train'
-        |       WHEN bucket < 90 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) % 100
-        |      AS bucket,
-        |    CASE lang WHEN 'en' THEN 50 WHEN 'zh' THEN 30 ELSE 20 END AS rate
-        |  FROM documents)
-        |SELECT doc_id, lang, bucket FROM h WHERE bucket < rate
-        |ORDER BY doc_id""".stripMargin,
-
-    "pack_token_budget" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, lang, n_tok,
-        |    sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id) - n_tok AS pre
-        |  FROM toks)
-        |SELECT lang, CAST(pre // 2000 AS BIGINT) AS pack_id, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS pack_tokens
-        |FROM c GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-    "text_redact_numbers" ->
-      """SELECT event_id,
-        |  regexp_replace(props, '[0-9]+', '<NUM>', 'g') AS props_red,
-        |  CAST(len(regexp_extract_all(props, '[0-9]+')) AS BIGINT) AS n_nums
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // The five-rule chain replayed declaratively in RE2 over the same
-    // synthesized PII-rich text; audit counts are placeholder-occurrence
-    // arithmetic on the final string (literal replace — engine-identical).
-    "text_redact_pii" -> {
-      val full = "props || ' mail u' || CAST(event_id AS VARCHAR)" +
-        " || '@ex' || CAST(event_id % 7 AS VARCHAR)" +
-        " || '.com via http://h' || CAST(event_id % 5 AS VARCHAR)" +
-        " || '.io/p?q=' || CAST(event_id AS VARCHAR)" +
-        " || '&x=<y> ip ' || CAST(event_id % 256 AS VARCHAR)" +
-        " || '.' || CAST((event_id * 7) % 256 AS VARCHAR)" +
-        " || '.' || CAST((event_id * 13) % 256 AS VARCHAR)" +
-        " || '.' || CAST(event_id % 250 AS VARCHAR)" +
-        " || ' tel +49151' || CAST(1000000 + event_id % 1000000 AS VARCHAR)" +
-        " || ' alt ' || CAST(100 + event_id % 900 AS VARCHAR)" +
-        " || '-' || CAST(100 + (event_id * 3) % 900 AS VARCHAR)" +
-        " || '-' || CAST(1000 + event_id % 9000 AS VARCHAR)" +
-        " || ' ref ' || CAST(event_id * event_id AS VARCHAR)"
-      def nOf(p: String): String =
-        s"CAST((len(_red) - len(replace(_red, '$p', ''))) // ${p.length}" +
-          s" AS BIGINT)"
-      s"""WITH r AS (
-         |  SELECT event_id,
-         |    ${piiRedactSql(full)} AS _red
-         |  FROM events)
-         |SELECT event_id, _red AS props_red,
-         |  ${nOf("<EMAIL>")} AS n_emails,
-         |  ${nOf("<URL>")} AS n_urls,
-         |  ${nOf("<IP>")} AS n_ips,
-         |  ${nOf("<PHONE>")} AS n_phones,
-         |  ${nOf("<NUM>")} AS n_nums
-         |FROM r ORDER BY event_id""".stripMargin
-    },
-
-    "text_extract_markup" ->
-      s"""WITH raw AS (
-         |  SELECT doc_id, ${markupWrappedSql("doc_id", "text")} AS t
-         |  FROM documents
-         |), ext AS (
-         |  SELECT doc_id, ${markupExtractSql("t")} AS main_text FROM raw)
-         |SELECT doc_id, main_text,
-         |  CAST(len(main_text) AS BIGINT) AS n_chars_clean
-         |FROM ext ORDER BY doc_id""".stripMargin,
-
-    "url_canonicalize" ->
-      s"""WITH u AS (
-         |  SELECT event_id AS id, ${synthUrlSql("event_id")} AS url
-         |  FROM events
-         |), $urlCanonCtes
-         |SELECT id AS event_id, url, url_canon
-         |FROM canon ORDER BY event_id""".stripMargin,
-
-    "url_dedup" ->
-      s"""WITH u AS (
-         |  SELECT event_id AS id, ${synthUrlSql("event_id")} AS url
-         |  FROM events
-         |), $urlCanonCtes
-         |SELECT url_canon, CAST(count(*) AS BIGINT) AS n_dups,
-         |  CAST(min(id) AS BIGINT) AS keep_id
-         |FROM canon GROUP BY url_canon ORDER BY url_canon""".stripMargin,
-
-    "url_host_stats" ->
-      s"""WITH u AS (
-         |  SELECT event_id AS id, ${synthUrlSql("event_id")} AS url
-         |  FROM events
-         |), $urlCanonCtes
-         |SELECT coalesce(regexp_extract(url_canon,
-         |    '^[a-z][a-z0-9+.-]*://([^/:?#]*)', 1), '') AS host,
-         |  CAST(count(*) AS BIGINT) AS n_events,
-         |  CAST(count(DISTINCT url_canon) AS BIGINT) AS n_urls
-         |FROM canon GROUP BY host ORDER BY host""".stripMargin,
-
-    "sample_quota" ->
-      """SELECT doc_id, source, n_chars, rk FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(row_number() OVER (
-        |      PARTITION BY source ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk
-        |  FROM documents) r
-        |WHERE rk <= 40 ORDER BY doc_id""".stripMargin,
-
-    // mirrors mixToWeights exactly: same CASE weights, same division
-    // order for k and rate (IEEE doubles match bit-for-bit), same salted
-    // hash threshold at rate * 2^48
-    "sample_mix" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_tok
-        |  FROM documents
-        |), per_lang AS (
-        |  SELECT lang, CAST(sum(n_tok) AS BIGINT) AS ltok,
-        |    CAST(CASE lang WHEN 'en' THEN 0.5 WHEN 'zh' THEN 0.3
-        |         ELSE 0.2 END AS DOUBLE) AS w
-        |  FROM toks GROUP BY lang
-        |), kk AS (
-        |  SELECT min(CAST(ltok AS DOUBLE) / w) AS k FROM per_lang
-        |), rates AS (
-        |  SELECT lang, least(1.0, k * w / CAST(ltok AS DOUBLE)) AS rate
-        |  FROM per_lang CROSS JOIN kk
-        |)
-        |SELECT t.doc_id, t.lang, t.n_tok,
-        |  floor(r.rate * 1000000 + 0.5) / 1000000 AS rate
-        |FROM toks t JOIN rates r ON t.lang = r.lang
-        |WHERE CAST(CAST(('0x' || substr(md5('mix:' || CAST(t.doc_id AS VARCHAR)), 1, 12)) AS BIGINT) AS DOUBLE)
-        |      < r.rate * 281474976710656.0
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // quality expression inlined from the text_quality_score oracle; the
-    // tier CASE guards NULL/NaN explicitly so a degenerate doc lands in
-    // the 1-copy tier on both engines regardless of DuckDB's
-    // float-division setting (Spark's guarded quality is NULL there)
-    "sample_epochs" -> (T +
-      """SELECT doc_id, n_copies, CAST(ec AS BIGINT) AS epoch_copy
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN quality IS NULL OR isnan(quality) THEN 1
-        |              WHEN quality >= 0.5 THEN 3
-        |              WHEN quality >= 0.25 THEN 2
-        |              ELSE 1 END AS BIGINT) AS n_copies
-        |  FROM (
-        |    SELECT doc_id,
-        |      floor(((CAST(len(list_filter(t, x -> list_contains(
-        |          ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |          * 1.0 / len(t)) * 0.4 +
-        |        least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |        (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |          / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |    FROM toks) q
-        |) c, LATERAL (SELECT unnest(generate_series(1, n_copies)) AS ec) g
-        |ORDER BY doc_id, epoch_copy""".stripMargin),
-
-    "sample_importance" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        |  FROM documents
-        |), g2 AS (
-        |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-        |  FROM toks, LATERAL (
-        |    SELECT unnest(generate_series(1, greatest(len(t) - 1, 0))) AS i) x
-        |), gb AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT) % 256 AS b
-        |  FROM g2
-        |), bs AS (
-        |  SELECT b,
-        |    CAST(sum(CASE WHEN doc_id % 17 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-        |    CAST(sum(CASE WHEN doc_id % 17 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS cs
-        |  FROM gb GROUP BY b
-        |), tot AS (
-        |  SELECT sum(ct) AS t_total, sum(cs) AS s_total FROM bs
-        |), per AS (
-        |  SELECT g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-        |         CAST(sum(bs.ct) AS BIGINT) AS t_hits,
-        |         CAST(sum(bs.cs) AS BIGINT) AS s_hits
-        |  FROM gb g JOIN bs ON g.b = bs.b
-        |  WHERE g.doc_id % 17 <> 0 GROUP BY g.doc_id
-        |)
-        |SELECT doc_id, n_grams, t_hits, s_hits, imp_ratio FROM (
-        |  SELECT doc_id, n_grams, t_hits, s_hits,
-        |    floor((t_hits * 1.0 * s_total /
-        |           nullif(s_hits * 1.0 * t_total, 0)) * 1000000 + 0.5)
-        |      / 1000000 AS imp_ratio
-        |  FROM per, tot)
-        |WHERE imp_ratio > 1.0
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_shuffle" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(('0x' || substr(md5('shuffle:1:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT)
-        |      AS h
-        |  FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS epoch, h % 32 AS shard,
-        |  CAST(row_number() OVER (
-        |    PARTITION BY h % 32 ORDER BY h, doc_id) AS BIGINT) AS pos,
-        |  doc_id
-        |FROM h ORDER BY shard, pos""".stripMargin
-  )
-
-  // ----------------------------------------------------------- dedup family
-
-  private def dedupQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
-    // Keep-best policy: per content key, keep the LONGEST doc (ties ->
-    // lowest id) — the practical keeper choice for near-dup clusters.
-    "dedup_keep_longest" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("doc_id"), col("n_chars"),
-          TextAnalysis.md5Fingerprint(col("text")).as("h"))
-        .groupBy("h")
-        .agg(
-          max_by(col("doc_id"), struct(col("n_chars"), -col("doc_id")))
-            .as("keep_id"),
-          max(col("n_chars")).as("keep_len"),
-          count(lit(1)).as("cnt"))
-        .orderBy("keep_id")
-    }),
-
-    // Normalized exact dedup: case/whitespace-insensitive content key.
-    "dedup_exact_norm" -> ((s, dir) => {
-      docs(s, dir)
-        .select(col("doc_id"), TextAnalysis.md5Fingerprint(col("text")).as("h"))
-        .groupBy("h")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("cnt"))
-        .orderBy("keep_id")
-    }),
-    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLshPairs(docs(s, dir))),
-    // The production LSH dial, exercised at a NON-default configuration
-    // (16 hashes, 8 bands of 2): each band's minhashes fold into one
-    // 48-bit md5-prefix key, so the banding schema is config-independent —
-    // the executable form of SCALING.md's "raise bands/hashes, topology
-    // unchanged". The oracle regenerates the folded chain from the same
-    // constants, so collisions (which only add verified candidates)
-    // reproduce identically on both sides.
-    "dedup_minhash_wide" -> ((s, dir) =>
-      Dedup.minhashLshPairs(docs(s, dir), 16, 8)),
-    // Incremental dedup: new batch (odd doc_ids) vs existing corpus (even).
-    // The corpus side's band buckets come from the persisted signature
-    // store (built on first run, reloaded after), so repeat batches never
-    // recompute the old corpus's signatures.
-    "dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val old = d.where(col("doc_id") % 2 === 0)
-      val ob = Dedup.bandBucketStore(s, old, s"$dir/documents.parquet",
-        "incr_even")
-      Dedup.crossCorpusPairs(d.where(col("doc_id") % 2 === 1), old, Some(ob))
-    }),
-    "dedup_simhash" -> ((s, dir) => Dedup.simhashPairs(docs(s, dir))),
-    // Production-width gate: the 64-bit xxhash64 SimHash path — the width
-    // a 100 TB corpus actually runs — is not SQL-expressible (DuckDB has
-    // no xxhash64), so like the ANN recall gates the query emits
-    // oracle-checkable INVARIANTS instead of the raw pairs: two docs with
-    // the same token-count multiset have identical simhash at ANY width,
-    // so every multiset-equal pair MUST appear in the 64-bit pair set at
-    // hamming 0. The oracle computes the multiset-pair count from the
-    // same md5 fingerprint and pins n_in64_h0 = n_multiset_pairs and
-    // covered = true symbolically — a 64-bit regression (missed pair,
-    // broken chunk banding, wrong re-expansion) flips the Spark side and
-    // hash-mismatches the row.
-    "dedup_simhash64" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val pairs64 = Dedup.simhashPairs64(d)
-      // md5(tok) (fixed-width hex) rather than the raw token in the
-      // multiset fingerprint: a token containing ':' or '|' would make the
-      // raw encoding non-injective ('a:1|b' x1 vs {'a','b'} x1 collide),
-      // turning a non-pair into a "multiset pair" and flipping covered —
-      // a false gate failure. Hashing each token first makes the
-      // sorted-join encoding injective (same md5 both engines).
-      val fp = d
-        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
-        .groupBy("doc_id")
-        .agg(md5(array_join(array_sort(collect_list(
-          concat_ws(":", md5(col("tok")), col("cnt")))), "|")).as("fp"))
-      val mpairs = fp.as("a")
-        .join(fp.as("b").hint("SHUFFLE_MERGE"), // corpus self-join: never broadcast
-          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      mpairs
-        .join(pairs64.where(col("hamming") === 0)
-          .select(col("d1"), col("d2"), lit(1L).as("_hit")),
-          Seq("d1", "d2"), "left")
-        .agg(count(lit(1)).as("n_multiset_pairs"),
-          count(col("_hit")).as("n_in64_h0"))
-        .select(col("n_multiset_pairs"), col("n_in64_h0"),
-          (col("n_multiset_pairs") === col("n_in64_h0")).as("covered"))
-    }),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.blockedNgramJaccard(docs(s, dir), 0.1)),
-    // Stop-shingle guard: drop shingles with block document-frequency > 2
-    // before the posting join (boilerplate bound — worst posting group is
-    // maxShingleDf, not corpus size), score the survivors at a low
-    // threshold so the cut's effect is visible in the result.
-    "dedup_ngram_jaccard_dfcut" -> ((s, dir) =>
-      Dedup.blockedNgramJaccard(docs(s, dir), 0.02, Some(2L))),
-    // Asymmetric containment (quote/subset detection) on the same blocks.
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.blockedContainment(docs(s, dir), 0.01)),
-    // ... with the stop-shingle df-cut (block df > 2 dropped before the
-    // posting join) — closes the one posting family that still lacked
-    // the boilerplate hot-key guard.
-    "dedup_containment_dfcut" -> ((s, dir) =>
-      Dedup.blockedContainment(docs(s, dir), 0.01, Some(2L))),
-    // Exact-substring duplication: maximal runs of >= 8 consecutive
-    // tokens shared verbatim between two documents (shingle-anchor
-    // candidates -> diagonal gaps-and-islands extension -> span-equality
-    // verification). The repeated-substring class document-level dedup
-    // cannot see; every run row hash-compares.
-    "dedup_substring" -> ((s, dir) =>
-      Dedup.substringRuns(docs(s, dir), 8)),
-    // ... with the hot-window guard (window hashes in more than 3
-    // positions are dropped before the posting join — the dfcut
-    // precedent; a cut window splits the runs it interrupts).
-    "dedup_substring_dfcut" -> ((s, dir) =>
-      Dedup.substringRuns(docs(s, dir), 8, Some(3L))),
-    // ... and the removal ACTION on those detections (the suffix-array
-    // paper's actual operation): lowest-id doc keeps each shared run,
-    // every other holder has the merged spans cut from its token
-    // stream. One row per doc; cleaned text digested.
-    "dedup_substring_remove" -> ((s, dir) =>
-      Dedup.substringRemove(docs(s, dir), 8)),
-    // ... and the removal's PRODUCT: the cleaned corpus itself — one row
-    // per doc with the whitespace-normalized text after every marked
-    // span is cut. The oracle verifies the text verbatim, not a digest
-    // (the round-17 "computes the cleaned corpus and throws it away"
-    // finding, closed).
-    "dedup_substring_remove_text" -> ((s, dir) =>
-      Dedup.substringRemoveText(docs(s, dir), 8)
-        .select(col("doc_id"), col("n_removed"), col("clean_text"))),
-    // Incremental substring detection: new batch (odd doc_ids) vs the
-    // existing corpus (even), with the corpus side's window-hash
-    // postings served from the persisted substringPostingStore — repeat
-    // batches never re-tokenize the old corpus (the dedup_incremental
-    // convention applied to the family that reads inside documents).
-    "dedup_substring_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val old = d.where(col("doc_id") % 2 === 0)
-      val posting = Dedup.substringPostingStore(s, old,
-        s"$dir/documents.parquet", "sswin_even", 8)
-      Dedup.substringRunsIncremental(d.where(col("doc_id") % 2 === 1),
-        old, posting, 8)
-    }),
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingPairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.35)),
-    // Embedding-level benchmark decontamination (the n-gram
-    // text_decontaminate's semantic twin): drop any corpus vector with
-    // cosine >= 0.8 to the stand-in eval set (vec_id < 20, broadcast;
-    // self-pairs excluded). One row per vector, max_cos hash-compared.
-    "decontaminate_semantic" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Dedup.semanticDecontaminate(emb, emb.where(col("vec_id") < 20), 0.8,
-        excludeSelfIds = true) // in-corpus stand-in benchmark only
-    }),
-    // SemDeDup: IVF-cell-blocked semantic dedup keep-list (drop vectors
-    // with a lower-id in-cell neighbor at cosine >= 0.35). Shares the
-    // sim_ann_ivf centroid/assignment machinery and its oracle chain.
-    "dedup_semantic" -> ((s, dir) =>
-      Dedup.semanticDedup(s.read.parquet(s"$dir/embeddings.parquet"), 0.35)),
-    // SemDeDup with the scale-aware sqrt-n nLists dial (non-default:
-    // 23 cells at sf0.01 vs the fixed 16) — the auto IvfChain oracle
-    // recomputes the same nLists from count(*), so cell assignment AND
-    // the keep-list at the auto dial hash-compare end-to-end.
-    "dedup_semantic_auto" -> ((s, dir) =>
-      Dedup.semanticDedupAuto(s.read.parquet(s"$dir/embeddings.parquet"),
-        0.35)),
-    // Full pipeline: LSH candidates -> connected components -> keep-list.
-    "dedup_cluster_keep" -> ((s, dir) => Dedup.clusterKeepList(docs(s, dir))),
-    // Scale path: LSH-bucket blocking instead of the label column (the
-    // "at 100 TB the block key is an LSH bucket" variant); full SQL
-    // oracle via the LshBucketChain CTEs. Same shape as
-    // Similarity.lshTopK: the bucket self-join carries ONLY
-    // (vec_id, tbl, bits) — embeddings never ride the ×NumTables explode
-    // shuffle — and each candidate pair is scored once after an
-    // id-distinct, with vectors joined back for the single scoring pass.
-    "dedup_embedding_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val buckets = emb
-        .withColumn("_mask", graft.ops.Similarity.hyperplaneMask(col("embedding")))
-        .withColumn("bb",
-          explode(graft.ops.Similarity.bucketsFromMask(col("_mask"))))
-        .select(col("vec_id"), col("bb.tbl").as("tbl"), col("bb.bits").as("bits"))
-      // Corpus bucket SELF-join + corpus-float rerank joins: pinned to
-      // shuffle joins (never a corpus-sized broadcast build — the
-      // round-16 plan audit; same rule as Dedup.minhashCandidates).
-      val cand = buckets.as("a")
-        .join(buckets.as("b").hint("SHUFFLE_MERGE"),
-          col("a.tbl") === col("b.tbl") && col("a.bits") === col("b.bits") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"))
-        .distinct()
-      val v = emb.select(col("vec_id"), col("embedding"),
-        graft.ops.Similarity.norm(col("embedding")).as("_n"))
-      cand
-        .join(v.select(col("vec_id").as("d1"), col("embedding").as("_e1"),
-          col("_n").as("_n1")).hint("SHUFFLE_MERGE"), "d1")
-        .join(v.select(col("vec_id").as("d2"), col("embedding").as("_e2"),
-          col("_n").as("_n2")).hint("SHUFFLE_MERGE"), "d2")
-        .select(col("d1"), col("d2"),
-          round(graft.ops.Similarity.cosFromDot(
-            graft.ops.Similarity.dot(col("_e1"), col("_e2")),
-            col("_n1"), col("_n2")), 6).as("cos"))
-        .where(col("cos") >= 0.3)
-        .orderBy("d1", "d2")
-    }),
-
-    // CCNet/RefinedWeb-style sub-document dedup: 10-token chunks shared
-    // across documents are stripped everywhere but their first occurrence.
-    "dedup_chunks" -> ((s, dir) => Curation.chunkDedup(docs(s, dir), 10))
-  )
-
-  /** Shingle CTE chain (no leading WITH) shared by the minhash oracles. */
-  private val ShChain =
-    """toks AS (
-      |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t FROM documents
-      |), sh AS (
-      |  SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-      |  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-      |)
-      |""".stripMargin
-
-  private val SH = "WITH " + ShChain
-
-  /** MinHash signature → band-bucket → candidate-pair CTE chain (no leading
-    * WITH), generated from the same parameters as the Scala implementation. */
-  private val MinhashCandChain = ShChain +
-    s""", xs AS (
-      |  SELECT doc_id, CAST(('0x' || substr(md5(sh), 1, 12)) AS BIGINT) AS x FROM sh
-      |), sig AS (
-      |  SELECT doc_id,
-      |${(0 until graft.ops.Dedup.NumMinhashes).map { i =>
-           val (a, b) = graft.ops.Dedup.minhashParams(i)
-           s"    min((x * $a + $b) % ${graft.ops.Dedup.MersenneP}) AS mh$i"
-         }.mkString(",\n")}
-      |  FROM xs GROUP BY doc_id
-      |), buckets AS (
-      |${(0 until graft.ops.Dedup.NumBands).map { b =>
-           s"  SELECT doc_id, $b AS band, mh${2 * b} AS h1, mh${2 * b + 1} AS h2 FROM sig"
-         }.mkString("\n  UNION ALL\n")}
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-      |  FROM buckets a JOIN buckets b
-      |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2 AND a.doc_id < b.doc_id
-      |)
-      |""".stripMargin
-
-  /** Folded-band-key MinHash candidate CTE chain at an arbitrary
-    * (numHashes, numBands) config (no leading WITH) — generated from the
-    * same [[graft.ops.Dedup.minhashParams]] constants the Scala side
-    * uses, with each band's minhashes folded into a 48-bit md5-prefix
-    * key exactly as `Dedup.bandBucketsAt` does. */
-  private def minhashFoldedChain(numHashes: Int, numBands: Int): String = {
-    val rpb = numHashes / numBands
-    ShChain +
-      s""", xs AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(sh), 1, 12)) AS BIGINT) AS x FROM sh
-        |), sig AS (
-        |  SELECT doc_id,
-        |${(0 until numHashes).map { i =>
-             val (a, b) = graft.ops.Dedup.minhashParams(i)
-             s"    min((x * $a + $b) % ${graft.ops.Dedup.MersenneP}) AS mh$i"
-           }.mkString(",\n")}
-        |  FROM xs GROUP BY doc_id
-        |), buckets AS (
-        |${(0 until numBands).map { b =>
-             val key = (0 until rpb)
-               .map(i => s"CAST(mh${b * rpb + i} AS VARCHAR)")
-               .mkString(" || ',' || ")
-             s"  SELECT doc_id, $b AS band, " +
-               s"CAST(('0x' || substr(md5($key), 1, 12)) AS BIGINT) AS bkey FROM sig"
-           }.mkString("\n  UNION ALL\n")}
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM buckets a JOIN buckets b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-        |)
-        |""".stripMargin
-  }
-
-  private def dedupOracles: Map[String, String] = Map(
-    "dedup_exact" ->
-      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS cnt
-        |FROM documents GROUP BY h ORDER BY keep_id""".stripMargin,
-
-    "dedup_keep_longest" ->
-      """WITH k AS (
-        |  SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS h,
-        |         doc_id, n_chars FROM documents
-        |), r AS (
-        |  SELECT h, doc_id,
-        |    row_number() OVER (PARTITION BY h ORDER BY n_chars DESC, doc_id) AS rn,
-        |    max(n_chars) OVER (PARTITION BY h) AS keep_len,
-        |    count(*) OVER (PARTITION BY h) AS cnt
-        |  FROM k
-        |)
-        |SELECT h, doc_id AS keep_id, keep_len, cnt
-        |FROM r WHERE rn = 1 ORDER BY keep_id""".stripMargin,
-
-    "dedup_exact_norm" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS h,
-        |       min(doc_id) AS keep_id, count(*) AS cnt
-        |FROM documents GROUP BY h ORDER BY keep_id""".stripMargin,
-
-    "dedup_minhash_lsh" -> ("WITH " + MinhashCandChain +
-      """, shs AS (
-        |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-        |)
-        |SELECT d1, d2,
-        |  floor((len(list_intersect(s1.shs, s2.shs)) * 1.0 /
-        |         (len(s1.shs) + len(s2.shs) - len(list_intersect(s1.shs, s2.shs))))
-        |        * 1000000 + 0.5) / 1000000 AS jaccard
-        |FROM cand JOIN shs s1 ON cand.d1 = s1.doc_id JOIN shs s2 ON cand.d2 = s2.doc_id
-        |ORDER BY d1, d2""".stripMargin),
-
-    "dedup_minhash_wide" -> ("WITH " + minhashFoldedChain(16, 8) +
-      """, shs AS (
-        |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-        |)
-        |SELECT d1, d2,
-        |  floor((len(list_intersect(s1.shs, s2.shs)) * 1.0 /
-        |         (len(s1.shs) + len(s2.shs) - len(list_intersect(s1.shs, s2.shs))))
-        |        * 1000000 + 0.5) / 1000000 AS jaccard
-        |FROM cand JOIN shs s1 ON cand.d1 = s1.doc_id JOIN shs s2 ON cand.d2 = s2.doc_id
-        |ORDER BY d1, d2""".stripMargin),
-
-    "dedup_incremental" -> ("WITH " + MinhashCandChain +
-      """, icand AS (
-        |  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
-        |  FROM buckets a JOIN buckets b
-        |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-        |   AND a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-        |), shs AS (
-        |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-        |)
-        |SELECT new_id, old_id,
-        |  floor((len(list_intersect(s1.shs, s2.shs)) * 1.0 /
-        |         (len(s1.shs) + len(s2.shs) - len(list_intersect(s1.shs, s2.shs))))
-        |        * 1000000 + 0.5) / 1000000 AS jaccard
-        |FROM icand JOIN shs s1 ON icand.new_id = s1.doc_id
-        |           JOIN shs s2 ON icand.old_id = s2.doc_id
-        |ORDER BY new_id, old_id""".stripMargin),
-
-    "dedup_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |  FROM documents
-        |), cnts AS (
-        |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt,
-        |         CAST(('0x' || substr(md5(tok), 1, 4)) AS BIGINT) AS h
-        |  FROM tok GROUP BY doc_id, tok
-        |), bits AS (
-        |  SELECT doc_id, bit,
-        |         CAST(sum(CASE WHEN (h >> bit) & 1 = 1 THEN cnt ELSE -cnt END) AS BIGINT) AS w
-        |  FROM cnts, LATERAL (SELECT unnest(generate_series(0, 15)) AS bit) g
-        |  GROUP BY doc_id, bit
-        |), sig AS (
-        |  SELECT doc_id,
-        |         CAST(sum(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bits GROUP BY doc_id
-        |), chunks AS (
-        |  SELECT doc_id, simhash, c, (simhash >> (c * 4)) & 15 AS ckey
-        |  FROM sig, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) g
-        |)
-        |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-        |FROM chunks a JOIN chunks b
-        |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY d1, d2""".stripMargin,
-
-    // Invariant gate for the 64-bit path (see the registry comment): the
-    // oracle derives the multiset-equal pair count from the identical md5
-    // fingerprint and pins the containment symbolically — n_in64_h0 and
-    // covered are THEOREMS (same multiset ⇒ same signature ⇒ hamming 0 ⇒
-    // emitted by the banding join), so any divergence is a Spark-side bug.
-    "dedup_simhash64" ->
-      """WITH cnts AS (
-        |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM (SELECT doc_id,
-        |          unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |        FROM documents) t
-        |  GROUP BY doc_id, tok
-        |), fp AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(
-        |      list_sort(list(md5(tok) || ':' || CAST(cnt AS VARCHAR))), '|')) AS fp
-        |  FROM cnts GROUP BY doc_id
-        |), mp AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2
-        |  FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_multiset_pairs,
-        |       CAST(count(*) AS BIGINT) AS n_in64_h0,
-        |       TRUE AS covered
-        |FROM mp""".stripMargin,
-
-    "dedup_ngram_jaccard" -> (SH +
-      """, shsagg AS (
-        |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-        |), shs AS (
-        |  SELECT d.doc_id, d.lang, d.source, s.shs
-        |  FROM documents d JOIN shsagg s ON d.doc_id = s.doc_id
-        |)
-        |SELECT * FROM (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |    floor((len(list_intersect(a.shs, b.shs)) * 1.0 /
-        |           (len(a.shs) + len(b.shs) - len(list_intersect(a.shs, b.shs))))
-        |          * 1000000 + 0.5) / 1000000 AS jaccard
-        |  FROM shs a JOIN shs b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-        |) WHERE jaccard >= 0.1
-        |ORDER BY d1, d2""".stripMargin),
-
-    // df-cut variant mirrors the Spark posting-join (inter-driven) shape:
-    // distinct per-doc shingles -> block document frequency -> drop
-    // stop-shingles -> sizes and shared-shingle counts over the survivors.
-    "dedup_ngram_jaccard_dfcut" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, source,
-        |         string_split_regex(lower(trim(text)), '\s+') AS t
-        |  FROM documents
-        |), dsh AS (
-        |  SELECT DISTINCT doc_id, lang, source,
-        |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM toks, LATERAL (
-        |    SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-        |), df AS (
-        |  SELECT lang, source, sh, count(*) AS df FROM dsh GROUP BY 1, 2, 3
-        |), kept AS (
-        |  SELECT dsh.* FROM dsh JOIN df USING (lang, source, sh)
-        |  WHERE df.df <= 2
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM kept GROUP BY 1
-        |), inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |  FROM kept a JOIN kept b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.sh = b.sh
-        |       AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT d1, d2, jaccard FROM (
-        |  SELECT d1, d2,
-        |    floor((i.inter * 1.0 / (x.sz + y.sz - i.inter)) * 1000000 + 0.5)
-        |      / 1000000 AS jaccard
-        |  FROM inter i JOIN sizes x ON i.d1 = x.doc_id
-        |               JOIN sizes y ON i.d2 = y.doc_id
-        |) WHERE jaccard >= 0.02
-        |ORDER BY d1, d2""".stripMargin,
-
-    // Exact-substring runs: window-hash anchors -> diagonal
-    // gaps-and-islands extension -> span-equality verification
-    // (Dedup.substringRuns digit-for-digit).
-    "dedup_substring" -> substringRunsSql(8, None),
-
-    "dedup_substring_dfcut" -> substringRunsSql(8, Some(3L)),
-
-    "dedup_substring_remove" -> substringRemoveSql(8, None),
-    "dedup_substring_remove_text" -> substringRemoveTextSql(8, None),
-
-    "dedup_substring_incremental" -> substringIncrementalSql(8),
-
-    "dedup_cluster_keep" -> ("WITH RECURSIVE " + MinhashCandChain +
-      """, edges AS (
-        |  SELECT d1 AS a, d2 AS b FROM cand
-        |  UNION ALL SELECT d2, d1 FROM cand
-        |), reach AS (
-        |  SELECT doc_id AS node, doc_id AS label FROM documents
-        |  UNION
-        |  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-        |)
-        |SELECT node AS doc_id, min(label) AS cluster,
-        |       (node = min(label)) AS keep
-        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin),
-
-    "dedup_containment" -> (SH +
-      """, shsagg AS (
-        |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-        |), shs AS (
-        |  SELECT d.doc_id, d.lang, d.source, s.shs
-        |  FROM documents d JOIN shsagg s ON d.doc_id = s.doc_id
-        |)
-        |SELECT d1, d2, containment FROM (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |    floor((len(list_intersect(a.shs, b.shs)) * 1.0 /
-        |           least(len(a.shs), len(b.shs))) * 1000000 + 0.5) / 1000000
-        |      AS containment
-        |  FROM shs a JOIN shs b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id) t
-        |WHERE containment >= 0.01
-        |ORDER BY d1, d2""".stripMargin),
-
-    // df-cut containment replays the Spark shape declaratively: distinct
-    // per-doc shingles -> block document frequency -> drop stop-shingles
-    // -> sizes and shared counts over the SURVIVORS, min-size denominator.
-    "dedup_containment_dfcut" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, source,
-        |         string_split_regex(lower(trim(text)), '\s+') AS t
-        |  FROM documents
-        |), dsh AS (
-        |  SELECT DISTINCT doc_id, lang, source,
-        |         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS sh
-        |  FROM toks, LATERAL (
-        |    SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-        |), df AS (
-        |  SELECT lang, source, sh, count(*) AS df FROM dsh GROUP BY 1, 2, 3
-        |), kept AS (
-        |  SELECT dsh.* FROM dsh JOIN df USING (lang, source, sh)
-        |  WHERE df.df <= 2
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM kept GROUP BY 1
-        |), inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |  FROM kept a JOIN kept b
-        |    ON a.lang = b.lang AND a.source = b.source AND a.sh = b.sh
-        |       AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT d1, d2, containment FROM (
-        |  SELECT d1, d2,
-        |    floor((i.inter * 1.0 / least(x.sz, y.sz)) * 1000000 + 0.5)
-        |      / 1000000 AS containment
-        |  FROM inter i JOIN sizes x ON i.d1 = x.doc_id
-        |               JOIN sizes y ON i.d2 = y.doc_id
-        |) WHERE containment >= 0.01
-        |ORDER BY d1, d2""".stripMargin,
-
-    "dedup_embedding" ->
-      """SELECT a.vec_id AS d1, b.vec_id AS d2,
-        |  round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-        |        nullif(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-        |         sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))), 0), 6) AS cos
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-        |        nullif(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-        |         sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))), 0), 6) >= 0.35
-        |ORDER BY d1, d2""".stripMargin,
-
-    // max over the broadcast benchmark scores; keep defaults true when
-    // no comparable neighbor exists (all-NULL cosines)
-    "decontaminate_semantic" ->
-      """WITH nrm AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                          CAST(embedding AS DOUBLE[]))) AS n
-        |  FROM embeddings
-        |), mc AS (
-        |  SELECT c.vec_id,
-        |    max(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                         CAST(b.embedding AS DOUBLE[])) /
-        |        nullif(c.n * b.n, 0)) AS mc
-        |  FROM nrm c JOIN nrm b ON b.vec_id < 20 AND b.vec_id <> c.vec_id
-        |  GROUP BY c.vec_id
-        |)
-        |SELECT vec_id, round(mc, 6) AS max_cos,
-        |  coalesce(mc < 0.8, true) AS keep
-        |FROM mc ORDER BY vec_id""".stripMargin,
-
-    // SemDeDup keep-list over the sim_ann_ivf assignment chain: the
-    // `assigned` CTE is the identical deterministic cell assignment
-    // (1 Lloyd iteration, nLists 16); a vector is dropped iff a lower-id
-    // vector in its cell scores cosine >= 0.35.
-    "dedup_semantic" -> ("WITH " + IvfChain + SemDedupTail),
-
-    // Same SemDeDup tail over the AUTO chain: nLists recomputed from
-    // count(*) inside the SQL, pinning the scale-aware dial's value.
-    "dedup_semantic_auto" -> ("WITH " + AutoIvfChain + SemDedupTail),
-
-    "dedup_chunks" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-        |  FROM documents
-        |), ch AS (
-        |  SELECT doc_id, i AS chunk_id,
-        |         array_to_string(t[(i*10+1):(i*10+10)], ' ') AS chunk
-        |  FROM toks, LATERAL (
-        |    SELECT unnest(generate_series(0, (len(t) - 1) // 10)) AS i) g
-        |), own AS (
-        |  SELECT chunk, count(DISTINCT doc_id) AS df FROM ch GROUP BY chunk
-        |), f1 AS (
-        |  SELECT chunk, min(doc_id) AS fdoc FROM ch GROUP BY chunk
-        |), f2 AS (
-        |  SELECT c.chunk, f1.fdoc, min(c.chunk_id) AS fcid
-        |  FROM ch c JOIN f1 ON c.chunk = f1.chunk AND c.doc_id = f1.fdoc
-        |  GROUP BY c.chunk, f1.fdoc
-        |), m AS (
-        |  SELECT c.doc_id, c.chunk_id, c.chunk,
-        |    (o.df = 1 OR (c.doc_id = f2.fdoc AND c.chunk_id = f2.fcid)) AS keep
-        |  FROM ch c JOIN own o ON c.chunk = o.chunk JOIN f2 ON c.chunk = f2.chunk)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-        |  CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  md5(coalesce(
-        |    string_agg(CASE WHEN keep THEN chunk END, ' ' ORDER BY chunk_id),
-        |    '')) AS clean_md5
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  )
-
-  // ------------------------------------------------- composed pipeline demo
-
-  /** The end-to-end training-data cleaning pipeline as ONE query:
-    * quality-score filter → MinHash-LSH cluster dedup (keep lowest id per
-    * cluster) → per-doc token stats for the surviving corpus. Every stage
-    * is one of the operators above; this entry proves they compose. */
-  private def pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_clean_corpus" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val quality = TextAnalysis.qualityQuery(d)
-        .where(col("quality") >= 0.25)
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-      val keep = Dedup.clusterKeepList(d).where(col("keep"))
-        .select(col("doc_id"), col("cluster"))
-      quality.join(keep, "doc_id")
-        .select(col("doc_id"), col("cluster"), col("n_tokens"), col("quality"))
-        .orderBy("doc_id")
-    }),
-    // v2 = the full production curation pass: quality gate -> LSH dedup
-    // keep-list -> SEMANTIC DECONTAMINATION against the benchmark
-    // embeddings (vec_id < 20 stand-in, max-cos < 0.8) — a document
-    // survives only if it clears all three. Composes
-    // Dedup.semanticDecontaminate's broadcast/map-side max into the
-    // same plan; embeddings join documents on the shared id space.
-    "pipeline_clean_corpus_v2" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val quality = TextAnalysis.qualityQuery(d)
-        .where(col("quality") >= 0.25)
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-      val keep = Dedup.clusterKeepList(d).where(col("keep"))
-        .select(col("doc_id"), col("cluster"))
-      val clean = Dedup.semanticDecontaminate(emb,
-          emb.where(col("vec_id") < 20), 0.8, excludeSelfIds = true)
-        .where(col("keep"))
-        .select(col("vec_id").as("doc_id"), col("max_cos"))
-      quality.join(keep, "doc_id").join(clean, "doc_id")
-        .select(col("doc_id"), col("cluster"), col("n_tokens"),
-          col("quality"), col("max_cos"))
-        .orderBy("doc_id")
-    }),
-    // v3 composes the round-17 in-document boilerplate removal into the
-    // same pass: each surviving document additionally carries the
-    // >= 8-token cross-document runs cut from it (lowest-id doc keeps)
-    // and — since round 18 — the cleaned TEXT itself, so the pipeline's
-    // output is the next corpus snapshot rather than stats about
-    // cleaning (it feeds the sink writers directly; see SinkWriteSpec's
-    // curation->sink e2e). Quality filter, document dedup,
-    // decontamination, and substring removal as ONE plan. The removal
-    // side joins on doc_id pinned SHUFFLE_MERGE (corpus-derived, never
-    // broadcast).
-    "pipeline_clean_corpus_v3" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val quality = TextAnalysis.qualityQuery(d)
-        .where(col("quality") >= 0.25)
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-      val keep = Dedup.clusterKeepList(d).where(col("keep"))
-        .select(col("doc_id"), col("cluster"))
-      val clean = Dedup.semanticDecontaminate(emb,
-          emb.where(col("vec_id") < 20), 0.8, excludeSelfIds = true)
-        .where(col("keep"))
-        .select(col("vec_id").as("doc_id"), col("max_cos"))
-      val derun = Dedup.substringRemoveUnordered(d, 8, None)
-      quality.join(keep, "doc_id").join(clean, "doc_id")
-        .join(derun.hint("SHUFFLE_MERGE"), "doc_id")
-        .select(col("doc_id"), col("cluster"), col("n_tokens"),
-          col("quality"), col("max_cos"), col("n_removed"),
-          col("clean_md5"), col("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    // v4: STAGED text flow — the boilerplate-line pass runs FIRST and
-    // every later stage consumes its cleaned text, not the raw corpus
-    // (v1-v3 join per-doc stats computed independently on the raw text;
-    // here stage N+1's input IS stage N's output, the shape a real
-    // curation DAG has). Quality is scored on the line-cleaned text and
-    // exact dedup keys on its md5 — so a doc whose uniqueness was all
-    // boilerplate collapses into its duplicate class only AFTER the line
-    // pass exposes it. The keep-list join side is corpus-derived: pinned.
-    "pipeline_clean_corpus_v4" -> ((s, dir) => {
-      val cleaned = Curation.lineDedup(Curation.lineified(docs(s, dir)), 3)
-        .select(col("doc_id"), col("n_removed"),
-          col("clean_text").as("text"))
-      val q = TextAnalysis.qualityQuery(cleaned)
-        .select(col("doc_id"), col("n_tokens"), col("quality"))
-      val keep = cleaned
-        .groupBy(md5(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("keep_id"))
-      cleaned.withColumn("h", md5(col("text")))
-        .join(q.hint("SHUFFLE_MERGE"), Seq("doc_id")) // corpus-derived side
-        .join(keep.hint("SHUFFLE_MERGE"), Seq("h"))
-        .select(col("doc_id"), col("n_removed"), col("n_tokens"),
-          col("quality"), (col("doc_id") === col("keep_id")).as("keep"),
-          md5(col("text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // v5: the CRAWL-SHAPED front of the DAG — raw HTML-ish payloads
-    // (the deterministic markup wrapper) go through the byte-scan
-    // extraction kernel FIRST, and the C4 quality-filter stage consumes
-    // the EXTRACTED main text (the v4 staged-flow doctrine applied one
-    // stage earlier: markup stripping is the first operator of a real
-    // pipeline, before any text statistic is meaningful). Map-only up to
-    // the filter flags — extraction adds zero shuffles.
-    "pipeline_clean_corpus_v5" -> ((s, dir) => {
-      val extracted = docs(s, dir).select(col("doc_id"),
-        graft.functions.MarkupExpressions.extractMarkup(
-          markupWrapped(col("doc_id"), col("text"))).as("text"))
-      TextAnalysis.c4FilterQuery(extracted)
-    }),
-
-    // v6: the complete crawl front in one DAG — canonical-URL dedup
-    // picks one keeper per recrawled page (min doc_id per canonical
-    // key), and ONLY the keepers pay extraction + PII scrub + C4
-    // filtering (the order a real pipeline runs: the cheap key-level
-    // dedup gates the expensive per-byte work). One aggregation + one
-    // keeper join (aggregation-bounded but corpus-scale: pinned);
-    // everything after is map-only kernels.
-    "pipeline_clean_corpus_v6" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        TextAnalysis.canonicalizeUrl(synthUrl(col("doc_id")))
-          .as("url_canon"),
-        col("text"))
-      val keep = d.groupBy("url_canon")
-        .agg(min("doc_id").as("doc_id"))
-      val kept = d.join(keep.hint("SHUFFLE_MERGE"),
-        Seq("url_canon", "doc_id"))
-      val ext = kept.select(col("doc_id"), col("url_canon"),
-        graft.functions.PiiExpressions.redactPii(
-          graft.functions.MarkupExpressions.extractMarkup(
-            markupWrapped(col("doc_id"), col("text")))).as("text"))
-      // carry url_canon + the text md5 THROUGH the flags projection —
-      // a flags⋈md5 self-join would execute the keeper election and
-      // both byte kernels twice (the round-20 plan audit's finding)
-      TextAnalysis.c4FilterQuery(ext,
-        Seq("url_canon" -> col("url_canon"),
-          "clean_md5" -> md5(col("text"))))
-    })
-  )
-
-  private def pipelineReportQuery: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Store catalog over a three-family store tree (int8 codes, substring
-    // postings, LSH band buckets — built into a per-corpus report root,
-    // warm after the first call): FingerprintStore.list parses every
-    // fingerprinted directory and report() reads footer-only row counts.
-    // The nine store families now have a list/inspect/GC surface — at
-    // 100 TB the index artifacts are themselves big data, and each corpus
-    // regeneration strands the prior fingerprint's directories until
-    // FingerprintStore.gc reclaims them (gc is unit-tested in
-    // SigStoreSpec; the report row pins the catalog semantics).
-    "pipeline_store_report" -> ((s, dir) => {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-report-" + dir.replaceAll("[^a-zA-Z0-9]", "_")).toURI.toString
-      val d = docs(s, dir)
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.Quantization.int8CodeStore(s, emb,
-        s"$dir/embeddings.parquet", "rpt-int8", Some(root))
-      Dedup.substringPostingStore(s, d, s"$dir/documents.parquet",
-        "rpt-sswin", 8, Some(root))
-      Dedup.bandBucketStore(s, d, s"$dir/documents.parquet",
-        "rpt-bands", Some(root))
-      graft.ops.FingerprintStore.report(s, Some(root), "rpt-")
-    }),
-    // One-row pipeline report: corpus in/out + dedup rate + mean quality —
-    // the summary a data-curation run logs after each pass.
-    "pipeline_report" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val quality = TextAnalysis.qualityQuery(d)
-      val kept = Dedup.clusterKeepList(d).where(col("keep"))
-      val joined = quality.join(kept.select("doc_id"), "doc_id")
-      // corpus size rides the DAG as a broadcast 1-row crossJoin (the
-      // q_sketch_distinct pattern) — one job, no driver-side count action
-      val total = d.agg(count(lit(1)).as("_total"))
-      joined.agg(
-        count(lit(1)).as("docs_kept"),
-        TextAnalysis.round6(avg(col("quality"))).as("mean_quality"))
-        .crossJoin(broadcast(total))
-        .select(
-          col("_total").as("docs_in"),
-          col("docs_kept"),
-          TextAnalysis.round6(lit(1.0) -
-            col("docs_kept").cast("double") / col("_total")).as("drop_rate"),
-          col("mean_quality"))
-    })
-  )
-
-  private def pipelineOracles: Map[String, String] = Map(
-    // The catalog reports each store's (tag, pinned version string, row
-    // count); the oracle recomputes every count from the source tables —
-    // int8 codes are one row per vector, the posting store one row per
-    // k-token window, the band store NumBands rows per doc. A version
-    // bump or a row-count drift in any builder breaks the hash.
-    "pipeline_store_report" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-         |  FROM documents
-         |)
-         |SELECT * FROM (
-         |  SELECT 'rpt-bands' AS tag,
-         |    '${graft.ops.Dedup.SigStoreVersion}' AS version,
-         |    CAST(4 * (SELECT count(*) FROM documents) AS BIGINT) AS n_rows
-         |  UNION ALL
-         |  SELECT 'rpt-int8', '${graft.ops.Quantization.CodeStoreVersion}',
-         |    CAST((SELECT count(*) FROM embeddings) AS BIGINT)
-         |  UNION ALL
-         |  SELECT 'rpt-sswin', 'v1-sswin-k8',
-         |    CAST((SELECT sum(greatest(len(t) - 7, 0)) FROM toks) AS BIGINT)
-         |) ORDER BY tag""".stripMargin,
-
-    "pipeline_report" -> ("WITH RECURSIVE " + MinhashCandChain +
-      """, edges AS (
-        |  SELECT d1 AS a, d2 AS b FROM cand
-        |  UNION ALL SELECT d2, d1 FROM cand
-        |), reach AS (
-        |  SELECT doc_id AS node, doc_id AS label FROM documents
-        |  UNION
-        |  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-        |), keepers AS (
-        |  SELECT node AS doc_id FROM reach GROUP BY node
-        |  HAVING node = min(label)
-        |), q AS (
-        |  SELECT doc_id,
-        |    floor(((CAST(len(list_filter(t, x -> list_contains(
-        |        ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |        * 1.0 / len(t)) * 0.4 +
-        |      least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |      (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |        / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |  FROM (SELECT doc_id, text,
-        |          string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM documents) s
-        |)
-        |SELECT (SELECT count(*) FROM documents) AS docs_in,
-        |  count(*) AS docs_kept,
-        |  floor((1.0 - count(*) * 1.0 / (SELECT count(*) FROM documents))
-        |        * 1000000 + 0.5) / 1000000 AS drop_rate,
-        |  floor(avg(quality) * 1000000 + 0.5) / 1000000 AS mean_quality
-        |FROM q JOIN keepers USING (doc_id)""".stripMargin),
-
-    "pipeline_clean_corpus" -> ("WITH RECURSIVE " + MinhashCandChain +
-      """, edges AS (
-        |  SELECT d1 AS a, d2 AS b FROM cand
-        |  UNION ALL SELECT d2, d1 FROM cand
-        |), reach AS (
-        |  SELECT doc_id AS node, doc_id AS label FROM documents
-        |  UNION
-        |  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-        |), clusters AS (
-        |  SELECT node AS doc_id, min(label) AS cluster FROM reach GROUP BY node
-        |), quality AS (
-        |  SELECT doc_id,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    floor(((CAST(len(list_filter(t, x -> list_contains(
-        |        ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |        * 1.0 / len(t)) * 0.4 +
-        |      least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |      (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |        / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |  FROM (SELECT doc_id, text,
-        |          string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM documents) q
-        |)
-        |SELECT q.doc_id, c.cluster, q.n_tokens, q.quality
-        |FROM quality q
-        |JOIN clusters c ON q.doc_id = c.doc_id AND c.cluster = q.doc_id
-        |WHERE q.quality >= 0.25
-        |ORDER BY q.doc_id""".stripMargin),
-
-    // v2 appends the decontaminate_semantic CTEs (broadcast-benchmark
-    // max-cos, keep = below 0.8 or no comparable neighbor) to the same
-    // chain and inner-joins the keep-list into the final select.
-    "pipeline_clean_corpus_v2" -> ("WITH RECURSIVE " + MinhashCandChain +
-      """, edges AS (
-        |  SELECT d1 AS a, d2 AS b FROM cand
-        |  UNION ALL SELECT d2, d1 FROM cand
-        |), reach AS (
-        |  SELECT doc_id AS node, doc_id AS label FROM documents
-        |  UNION
-        |  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-        |), clusters AS (
-        |  SELECT node AS doc_id, min(label) AS cluster FROM reach GROUP BY node
-        |), quality AS (
-        |  SELECT doc_id,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    floor(((CAST(len(list_filter(t, x -> list_contains(
-        |        ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |        * 1.0 / len(t)) * 0.4 +
-        |      least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |      (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |        / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |  FROM (SELECT doc_id, text,
-        |          string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM documents) q
-        |), enrm AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                          CAST(embedding AS DOUBLE[]))) AS n
-        |  FROM embeddings
-        |), emc AS (
-        |  SELECT c.vec_id,
-        |    max(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                         CAST(b.embedding AS DOUBLE[])) /
-        |        nullif(c.n * b.n, 0)) AS mc
-        |  FROM enrm c JOIN enrm b ON b.vec_id < 20 AND b.vec_id <> c.vec_id
-        |  GROUP BY c.vec_id
-        |), clean AS (
-        |  SELECT vec_id, round(mc, 6) AS max_cos FROM emc
-        |  WHERE coalesce(mc < 0.8, true)
-        |)
-        |SELECT q.doc_id, c.cluster, q.n_tokens, q.quality, cl.max_cos
-        |FROM quality q
-        |JOIN clusters c ON q.doc_id = c.doc_id AND c.cluster = q.doc_id
-        |JOIN clean cl ON cl.vec_id = q.doc_id
-        |WHERE q.quality >= 0.25
-        |ORDER BY q.doc_id""".stripMargin),
-
-    // v3 = the v2 chain + the ss-prefixed substring-removal chain,
-    // joined per doc in the final select.
-    "pipeline_clean_corpus_v3" -> ("WITH RECURSIVE " + MinhashCandChain +
-      """, edges AS (
-        |  SELECT d1 AS a, d2 AS b FROM cand
-        |  UNION ALL SELECT d2, d1 FROM cand
-        |), reach AS (
-        |  SELECT doc_id AS node, doc_id AS label FROM documents
-        |  UNION
-        |  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-        |), clusters AS (
-        |  SELECT node AS doc_id, min(label) AS cluster FROM reach GROUP BY node
-        |), quality AS (
-        |  SELECT doc_id,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    floor(((CAST(len(list_filter(t, x -> list_contains(
-        |        ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |        * 1.0 / len(t)) * 0.4 +
-        |      least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |      (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |        / length(text)) * 0.3) * 1000000 + 0.5) / 1000000 AS quality
-        |  FROM (SELECT doc_id, text,
-        |          string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM documents) q
-        |), enrm AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                          CAST(embedding AS DOUBLE[]))) AS n
-        |  FROM embeddings
-        |), emc AS (
-        |  SELECT c.vec_id,
-        |    max(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-        |                         CAST(b.embedding AS DOUBLE[])) /
-        |        nullif(c.n * b.n, 0)) AS mc
-        |  FROM enrm c JOIN enrm b ON b.vec_id < 20 AND b.vec_id <> c.vec_id
-        |  GROUP BY c.vec_id
-        |), clean AS (
-        |  SELECT vec_id, round(mc, 6) AS max_cos FROM emc
-        |  WHERE coalesce(mc < 0.8, true)
-        |)""".stripMargin +
-      ", " + substringCtes(8, None) + SubstringRemoveCtes +
-      """
-        |SELECT q.doc_id, c.cluster, q.n_tokens, q.quality, cl.max_cos,
-        |  r.n_removed, r.clean_md5, r.clean_text
-        |FROM quality q
-        |JOIN clusters c ON q.doc_id = c.doc_id AND c.cluster = q.doc_id
-        |JOIN clean cl ON cl.vec_id = q.doc_id
-        |JOIN ssrm r ON r.doc_id = q.doc_id
-        |WHERE q.quality >= 0.25
-        |ORDER BY q.doc_id""".stripMargin),
-
-    // v4: the staged chain — line-cleaned text (LineLakeChain + removal)
-    // feeds the quality formula and the exact-dedup md5 key; the quality
-    // CTE is the v1-v3 replay applied to `cl.text` instead of raw
-    // documents.text.
-    "pipeline_clean_corpus_v4" -> (s"WITH $LineLakeChain, bo AS (\n" +
-      """  SELECT line, count(DISTINCT doc_id) AS df
-        |  FROM ex GROUP BY line HAVING count(DISTINCT doc_id) >= 3
-        |), cl AS (
-        |  SELECT e.doc_id,
-        |    CAST(sum(CASE WHEN b.df IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_removed,
-        |    coalesce(array_to_string(
-        |      list(e.line ORDER BY e.pos) FILTER (WHERE b.df IS NULL),
-        |      chr(10)), '') AS text
-        |  FROM ex e LEFT JOIN bo b ON e.line = b.line
-        |  GROUP BY e.doc_id
-        |), q AS (
-        |  SELECT doc_id,
-        |    CAST(len(t) AS BIGINT) AS n_tokens,
-        |    floor(((CAST(len(list_filter(t, x -> list_contains(
-        |        ['the','a','and','of','to','in','is','for','on','with'], x))) AS BIGINT)
-        |        * 1.0 / len(t)) * 0.4 +
-        |      least(length(text) * 1.0 / len(t) / 10.0, 1.0) * 0.3 +
-        |      (1.0 - len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |        / nullif(length(text), 0)) * 0.3) * 1000000 + 0.5) / 1000000
-        |      AS quality
-        |  FROM (SELECT doc_id, text,
-        |          string_split_regex(lower(trim(text)), '\s+') AS t
-        |        FROM cl) x
-        |), k AS (
-        |  SELECT md5(text) AS h, min(doc_id) AS keep_id FROM cl GROUP BY md5(text)
-        |)
-        |SELECT c.doc_id, c.n_removed, q.n_tokens, q.quality,
-        |  (c.doc_id = k.keep_id) AS keep, md5(c.text) AS clean_md5
-        |FROM cl c
-        |JOIN q ON q.doc_id = c.doc_id
-        |JOIN k ON md5(c.text) = k.h
-        |ORDER BY c.doc_id""".stripMargin),
-
-    // v5: markup extraction first (the declared RE2 chain over the
-    // deterministic wrapper), then the text_c4_filters replay over the
-    // EXTRACTED text.
-    "pipeline_clean_corpus_v5" ->
-      (s"""WITH raw AS (
-         |  SELECT doc_id, ${markupWrappedSql("doc_id", "text")} AS t0
-         |  FROM documents
-         |), ext AS (
-         |  SELECT doc_id, ${markupExtractSql("t0")} AS text FROM raw
-         |), toks AS (
-         |  SELECT doc_id, text,
-         |         string_split_regex(lower(trim(text)), '\\s+') AS t
-         |  FROM ext
-         |)
-         |""".stripMargin +
-      """SELECT doc_id,
-        |  CAST(len(t) AS BIGINT) AS n_tok,
-        |  coalesce(len(t) BETWEEN 10 AND 5000, false) AS len_ok,
-        |  coalesce((length(array_to_string(t, '')) * 1.0 / len(t))
-        |    BETWEEN 2.0 AND 12.0, false) AS wordlen_ok,
-        |  coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |    / length(text) < 0.15, false) AS symbol_ok,
-        |  coalesce(len(list_filter(t, x -> regexp_full_match(x, '[a-z]+'))) * 1.0
-        |    / len(t) >= 0.5, false) AS alpha_ok,
-        |  coalesce(list_max(list_transform(t, x -> length(x))) <= 25, false)
-        |    AS toklen_ok,
-        |  coalesce(NOT contains(lower(text), 'lorem ipsum'), false) AS lorem_ok,
-        |  coalesce(len(list_distinct(t)) * 1.0 / len(t) >= 0.2, false)
-        |    AS distinct_ok,
-        |  (len_ok AND wordlen_ok AND symbol_ok AND alpha_ok AND toklen_ok
-        |    AND lorem_ok AND distinct_ok) AS keep
-        |FROM toks ORDER BY doc_id""".stripMargin),
-
-    // v6: canonical-URL keeper election, then markup + PII + C4 over
-    // the keepers only — every stage the declared chain of its own
-    // oracle row, composed.
-    "pipeline_clean_corpus_v6" ->
-      (s"""WITH u AS (
-         |  SELECT doc_id AS id, ${synthUrlSql("doc_id")} AS url
-         |  FROM documents
-         |), $urlCanonCtes, keepers AS (
-         |  SELECT url_canon, min(id) AS id FROM canon GROUP BY url_canon
-         |), raw AS (
-         |  SELECT k.id AS doc_id, k.url_canon,
-         |    ${markupWrappedSql("d.doc_id", "d.text")} AS t0
-         |  FROM keepers k JOIN documents d ON d.doc_id = k.id
-         |), ext AS (
-         |  SELECT doc_id, url_canon,
-         |    ${piiRedactSql(markupExtractSql("t0"))} AS text
-         |  FROM raw
-         |), toks AS (
-         |  SELECT doc_id, url_canon, text,
-         |         string_split_regex(lower(trim(text)), '\\s+') AS t
-         |  FROM ext
-         |)
-         |""".stripMargin +
-      """SELECT doc_id, url_canon, md5(text) AS clean_md5,
-        |  CAST(len(t) AS BIGINT) AS n_tok,
-        |  coalesce(len(t) BETWEEN 10 AND 5000, false) AS len_ok,
-        |  coalesce((length(array_to_string(t, '')) * 1.0 / len(t))
-        |    BETWEEN 2.0 AND 12.0, false) AS wordlen_ok,
-        |  coalesce(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) * 1.0
-        |    / length(text) < 0.15, false) AS symbol_ok,
-        |  coalesce(len(list_filter(t, x -> regexp_full_match(x, '[a-z]+'))) * 1.0
-        |    / len(t) >= 0.5, false) AS alpha_ok,
-        |  coalesce(list_max(list_transform(t, x -> length(x))) <= 25, false)
-        |    AS toklen_ok,
-        |  coalesce(NOT contains(lower(text), 'lorem ipsum'), false) AS lorem_ok,
-        |  coalesce(len(list_distinct(t)) * 1.0 / len(t) >= 0.2, false)
-        |    AS distinct_ok,
-        |  (len_ok AND wordlen_ok AND symbol_ok AND alpha_ok AND toklen_ok
-        |    AND lorem_ok AND distinct_ok) AS keep
-        |FROM toks ORDER BY doc_id""".stripMargin)
-  )
-
-  // ------------------------------------------------------ similarity family
-
-  private def simQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_topk_bruteforce" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // int8 storage quantization (map-only, codegen; the persist-side
-    // compression step). The full per-vector code is hash-compared — the
-    // oracle mirrors the scale/round/clamp arithmetic digit-for-digit.
-    // The code array is emitted as an md5 over its comma-joined elements
-    // (not the raw array<int>): the driver's pandas harness cannot sort a
-    // list-typed column, and the digest compares the exact same content.
-    "embed_quantize_int8" -> ((s, dir) => {
-      graft.ops.Quantization.quantizeInt8(
-        s.read.parquet(s"$dir/embeddings.parquet"))
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
-          md5(concat_ws(",", col("qvec").cast("array<string>"))).as("qvec_md5"))
-        .orderBy("vec_id")
-    }),
-    // Scale path: LSH-bucketed ANN. Full SQL oracle — the LshBucketChain
-    // CTEs reproduce the md5-derived hyperplanes and banded sign-bit
-    // buckets symbolically, so the driver hash-compares this row.
-    "sim_ann_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // The LSH recall dial exercised at a NON-default configuration
-    // (12 tables × 4 planes = 48 hyperplanes): planes are a prefix of one
-    // shared md5-derived family, so this config's candidates are a strict
-    // superset of the default 8-table run's (recall monotone — see the
-    // LshConfigPropertySpec theorem) and the oracle regenerates the
-    // 48-plane chain from the same constants.
-    "sim_ann_lsh_wide" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5,
-        multiProbe = true, numTables = 12, planesPerTable = 4)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // Second scale path: IVF cells + nProbe search. Full SQL oracle via
-    // the IvfChain CTEs (deterministic seeds + one Lloyd iteration).
-    "sim_ann_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // Recall gate for the LSH path: micro-averaged recall@5 of lshTopK vs
-    // the exact brute-force top-5 over the same query set, one summary row
-    // with the >= 0.8 flag. The oracle recomputes the whole thing
-    // symbolically, so the flag value is pinned by the hash compare — if a
-    // plane/bucket/probe change drops recall below the bar, recall_ok
-    // flips to false on BOTH sides and the regression is visible in the
-    // committed result, not just in a local measurement.
-    "sim_ann_lsh_recall" -> ((s, dir) =>
-      annRecall(s, dir, Similarity.lshTopK(_, _, 5))),
-    // Same gate for the IVF path (recall@5 = 0.83 at sf0.01, 0.93 at
-    // sf0.1 — deterministic, both over the 0.8 bar).
-    "sim_ann_ivf_recall" -> ((s, dir) =>
-      annRecall(s, dir, Similarity.ivfTopK(_, _, 5))),
-    // Scale-aware dial, oracle-gated at its NON-default value: nLists =
-    // max(16, ceil(sqrt(n))) (23 at sf0.01, 45 at sf0.1) computed from a
-    // corpus count on the Spark side and from count(*) inside the oracle
-    // SQL — the one knob the fixed-dial 10x probe showed growing
-    // super-linearly now turns itself, and the turned value hash-compares.
-    "sim_ann_ivf_auto" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfTopKAuto(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // Recall gate at the turned dial: more cells = fewer candidates per
-    // probe, so the dial's recall cost is pinned alongside its speed
-    // (recall here is data-derived on BOTH sides — a drop below the 0.8
-    // bar flips recall_ok in the committed result, visibly).
-    "sim_ann_ivf_auto_recall" -> ((s, dir) =>
-      annRecall(s, dir, Similarity.ivfTopKAuto(_, _, 5))),
-    // Corpus-wide k-NN graph (every vector a query — the SemDeDup-style
-    // diversity/graph-dedup building block), in-cell candidates at the
-    // auto dial; the oracle reuses the auto assignment chain so the
-    // whole graph hash-compares.
-    "sim_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraphAuto(
-        s.read.parquet(s"$dir/embeddings.parquet"), 3)),
-    // End-to-end quality gate for the int8 storage codes: recall@5 of
-    // exact top-k computed on the quantize→dequantize round-trip vs the
-    // float originals — pins how much ranking the 4× compression costs
-    // (data-derived on both sides; a code change that degrades the codes
-    // flips recall_ok in the committed result).
-    "sim_quantized_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) => {
-        def deq(df: DataFrame) = graft.ops.Quantization.dequantizeInt8(
-          graft.ops.Quantization.quantizeInt8(df))
-          .select(col("vec_id"), col("embedding"))
-        Similarity.bruteForceTopK(deq(c), deq(q), 5)
-      })),
-    // The composed storage story: IVF search over the int8-quantized
-    // corpus (quantize → dequantize → the standard cell chain) — what a
-    // 100 TB deployment actually runs, since the float corpus is never
-    // persisted. The full top-k hash-compares: the oracle runs the
-    // identical IvfChain over a dequantized CTE.
-    "sim_ann_ivf_quantized" -> ((s, dir) => {
-      val emb = graft.ops.Quantization.dequantizeInt8(
-        graft.ops.Quantization.quantizeInt8(
-          s.read.parquet(s"$dir/embeddings.parquet")))
-        .select(col("vec_id"), col("embedding"))
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // The managed storage path: codes come from the fingerprinted
-    // int8CodeStore (write-once parquet of (vec_id, scale, qvec) — the
-    // production artifact), NOT a per-query re-quantization; search is
-    // the identical dequantize → IVF chain, so the oracle SQL is the same
-    // as sim_ann_ivf_quantized. First execution builds the store; every
-    // later one reads it (the amortization SCALING.md measures).
-    "sim_ann_ivf_quantized_managed" -> ((s, dir) => {
-      val emb = graft.ops.Quantization.dequantizeInt8(
-        graft.ops.Quantization.int8CodeStore(
-          s, s.read.parquet(s"$dir/embeddings.parquet"),
-          s"$dir/embeddings.parquet", "registry"))
-        .select(col("vec_id"), col("embedding"))
-      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-    }),
-    // Product quantization (spherical PQ, m=16 × k=32 over 64 dims): the
-    // storage step beyond int8 — 16 5-bit codes per vector, 25× smaller
-    // than float32 bit-packed (16 bytes as stored ints). Codes
-    // hash-compare as a digest (the harness cannot sort list columns);
-    // the oracle re-trains all 16 subspace codebooks symbolically through
-    // the same seed→Lloyd→argmax chain as IvfChain, on array slices. The
-    // (16, 32, rerank=50) dials are PqSweep-measured: recall@5 0.95 /
-    // 0.93 at sf0.01 / sf0.1 for the reranked path.
-    "embed_pq_encode" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.encode(emb,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-        .select(col("vec_id"),
-          md5(concat_ws(",", col("pq_code").cast("array<string>")))
-            .as("pq_md5"))
-        .orderBy("vec_id")
-    }),
-    // ADC search over the PQ codes: the query stays float, the corpus is
-    // scored through a broadcast per-query lookup table of subspace dot
-    // products — the corpus vectors are never reconstructed. Full top-5
-    // hash-compares.
-    "sim_pq_adc" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.adcTopK(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    // Quality gate for the raw ADC ranking: recall@5 vs the exact float
-    // top-5. Raw ADC is the CANDIDATE GENERATOR, not the final ranking —
-    // on these unclustered synthetic embeddings it measures 0.53 / 0.37
-    // (sf0.01 / sf0.1), so the bar pins the regression floor at 0.3: an
-    // arithmetic break collapses recall to ~k/n ≈ 0.01, far below it.
-    "sim_pq_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.adcTopK(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64))),
-        bar = 0.3)),
-    // The production two-stage shape: ADC candidates (top-50), exact
-    // rerank of only those, top-5 out — FAISS's PQ-scan + refine. Holds
-    // the standard 0.8 bar at both gate scales.
-    "sim_pq_rerank_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.adcTopK(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
-          rerank = 50))),
-    // The managed PQ path: codebooks AND codes come from the
-    // fingerprinted pqStore (write-once parquet pair — the production
-    // artifacts), search runs entirely from stored state; the float
-    // corpus feeds only the query side. Same oracle as sim_pq_adc: a
-    // stored codebook is bit-indistinguishable from a fresh one.
-    "sim_pq_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
-        s, emb, s"$dir/embeddings.parquet", "registry")
-      graft.ops.ProductQuantization.adcSearch(codes, cb,
-        emb.where(col("vec_id") < 20), 5)
-    }),
-    // The huge-query-batch path: the 20-query batch is forced through
-    // chunkRows=8 (3 chunks, 3 bounded LUT broadcasts) — per-query top-k
-    // is chunk-independent, so the union is EXACTLY adcSearch's result
-    // and the oracle is sim_pq_adc's verbatim. At a real 10^6-query
-    // batch this is what caps the broadcast at AdcMaxQueryBatch x m.k
-    // rows instead of OOMing the driver.
-    "sim_pq_adc_chunked" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val cb = graft.ops.ProductQuantization.train(emb, 16, 32,
-        dimHint = Some(64))
-      graft.ops.ProductQuantization.adcSearchChunked(
-        graft.ops.ProductQuantization.encode(emb, cb)
-          .select(col("vec_id"), col("pq_code")),
-        cb, emb.where(col("vec_id") < 20), 5, chunkRows = 8)
-        .orderBy("query_id", "rank")
-    }),
-    // The composed FAISS architecture: IVF coarse cells bound each
-    // query's candidates (same chain/dials as sim_ann_ivf), ADC over the
-    // PQ codes scores only those — per query O(n·nProbe/nLists · m)
-    // int lookups, 16 B/vector. Full top-5 hash-compares against the
-    // two chains composed in SQL.
-    "sim_ann_ivf_pq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.ivfPqTopK(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    // IVFPQ + exact refine (rerank=50): the production pipeline, holding
-    // the standard 0.8 bar (PqSweep-measured 0.82 / 0.91 at
-    // sf0.01 / sf0.1 — the cell restriction costs ~nothing once the
-    // refine stage reorders).
-    "sim_ann_ivf_pq_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqTopK(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
-          rerank = 50))),
-    // IVFPQ with BOTH dials scale-aware (nLists = sqrt-n, nProbe =
-    // sqrt-nLists — the 100× probe's winning point: fixed 16/4 ran
-    // SLOWER than a full ADC scan at n=200k, sqrt-n cells 40% faster at
-    // recall 1.0). nLists and nProbe are recomputed from count(*) inside
-    // the oracle, so the turned dials hash-compare end-to-end. Since
-    // round 17 the auto default trains the coarse quantizer on the
-    // bounded stride sample (the round-16 bisection measured the full
-    // refine as every auto row's dominant 100x term); the oracle is the
-    // SAMPLED chain, and sim_ann_ivf_pq_auto_full gates the full-refine
-    // opt-in.
-    "sim_ann_ivf_pq_auto" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.ivfPqTopKAuto(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    // ... and its production recall gate (exact refine of 50 candidates):
-    // 0.94 / 0.97 at sf0.01 / sf0.1, standard 0.8 bar.
-    "sim_ann_ivf_pq_auto_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqTopKAuto(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
-          rerank = 50))),
-    // The explicit full-refine opt-in (fullRefine = true): the pre-17
-    // auto behavior — every corpus row votes in the coarse Lloyd refine
-    // — kept for write-once builds where construction cost is
-    // irrelevant; oracle is the UNSAMPLED auto chain, so the opt-in
-    // path stays hash-gated end-to-end.
-    "sim_ann_ivf_pq_auto_full" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.ivfPqTopKAuto(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)),
-        fullRefine = true)
-    }),
-    // The SAMPLED coarse-training rows (stride = max(1, n/(16*nLists))
-    // — the FAISS bounded-sample practice). Since round 17 this IS the
-    // auto default, so these rows gate the same path as
-    // sim_ann_ivf_pq_auto through the sampled entry-point alias; kept
-    // because the A/B history (SCALING.md) names them. Stride
-    // degenerates to 1 at sf0.01 (sampled == full, asserted in PqSpec);
-    // sf0.1 runs stride 2, so the sampling arithmetic itself is
-    // hash-compared. Full top-5 hash-compares at both scales.
-    "sim_ann_ivf_pq_auto_sampled" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.ivfPqTopKAutoSampled(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    // ... and its production recall gate (exact refine of 50): the
-    // standard 0.8 bar — the dial question is whether a 16-vectors-per-
-    // centroid training sample costs recall vs the full trainer's
-    // 0.94 / 0.97.
-    "sim_ann_ivf_pq_auto_sampled_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqTopKAutoSampled(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
-          rerank = 50))),
-    // The fully MANAGED IVF-PQ index: coarse centroids (sampled-sqrt-n),
-    // codebooks, and (vec_id, cell, pq_code) index rows all come from
-    // fingerprinted write-once stores; search reads NOTHING but stored
-    // state plus the query floats — the parquet FAISS index. Oracle is
-    // the sampled-auto chain verbatim: stored artifacts round-trip
-    // bit-exactly, so a warm index is indistinguishable from a fresh
-    // build.
-    "sim_ann_ivf_pq_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (coded, cb, local, nProbe) =
-        graft.ops.ProductQuantization.ivfPqStore(
-          s, emb, s"$dir/embeddings.parquet", "registry")
-      graft.ops.ProductQuantization.ivfPqSearch(coded, cb, local,
-        emb.where(col("vec_id") < 20), 5, nProbe)
-    }),
-    // Residual-encoded IVFPQ (FAISS by_residual): codes quantize
-    // vector MINUS coarse centroid instead of the raw vector — residuals
-    // concentrate near zero, so the same 16x5 bits capture the
-    // informative within-cell offsets. Full top-5 hash-compares against
-    // the coarse chain + residual CTE + residual-trained PQ chains +
-    // cross-term ADC composed in SQL.
-    "sim_ann_ivf_pq_residual" -> ((s, dir) =>
-      graft.ops.ProductQuantization.ivfPqResidualTopK(
-        s.read.parquet(s"$dir/embeddings.parquet"),
-        s.read.parquet(s"$dir/embeddings.parquet")
-          .where(col("vec_id") < 20), 5, dimHint = Some(64))),
-    // Raw residual-ADC quality vs the non-residual raw codes (the
-    // measured reason residual encoding exists — see SCALING.md A/B):
-    // same 0.3 regression floor as sim_pq_recall.
-    "sim_ann_ivf_pq_residual_raw_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqResidualTopK(c, q, 5,
-          dimHint = Some(64)), bar = 0.3)),
-    // The production shape: residual-IVFPQ candidates + exact refine of
-    // 50, standard 0.8 bar (fixed dials — comparable row:
-    // sim_ann_ivf_pq_recall).
-    "sim_ann_ivf_pq_residual_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqResidualTopK(c, q, 5,
-          rerank = 50, dimHint = Some(64)))),
-    // ... and at the scale-aware auto dials (comparable row:
-    // sim_ann_ivf_pq_auto_recall's 0.94/0.97).
-    "sim_ann_ivf_pq_residual_auto_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqResidualTopKAuto(c, q, 5,
-          rerank = 50, dimHint = Some(64)))),
-    // The fully MANAGED residual index (FAISS by_residual made of
-    // parquet): sampled-sqrt-n coarse centroids, residual-trained
-    // codebooks, per-cell cross-term arrays, and (vec_id, cell, code)
-    // rows all come from fingerprinted write-once stores; warm search
-    // touches NO float corpus — only stored codes plus the query
-    // floats. Oracle is the sampled-auto residual chain verbatim
-    // (stored doubles/floats round-trip bit-exactly).
-    "sim_ann_ivf_pq_residual_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (coded, cb, local, cellSide, nProbe) =
-        graft.ops.ProductQuantization.ivfPqResidualStore(
-          s, emb, s"$dir/embeddings.parquet", "registry")
-      graft.ops.ProductQuantization.ivfPqResidualSearch(coded, cb, local,
-        cellSide, emb.where(col("vec_id") < 20), 5, nProbe)
-    }),
-    // ... and the production shape over the same warm store: exact
-    // refine of 50 (reads 50 float rows/query, never the corpus),
-    // standard 0.8 bar — recall matches the fresh residual auto row.
-    "sim_ann_ivf_pq_residual_managed_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) => {
-        val (coded, cb, local, cellSide, nProbe) =
-          graft.ops.ProductQuantization.ivfPqResidualStore(
-            s, c, s"$dir/embeddings.parquet", "registry")
-        graft.ops.ProductQuantization.ivfPqResidualSearch(coded, cb, local,
-          cellSide, q, 5, nProbe, rerank = 50, rerankCorpus = Some(c))
-      })),
-    // The roughest storage tier: 1-bit sign codes, one LONG per 64-dim
-    // vector (32× vs float32). The code is a plain sortable integer —
-    // compared directly, no digest needed.
-    "embed_binarize" -> ((s, dir) =>
-      graft.ops.Quantization.binarize(
-        s.read.parquet(s"$dir/embeddings.parquet"))
-        .select(col("vec_id"), col("bcode")).orderBy("vec_id")),
-    // Hamming search over the sign codes: xor + popcount per pair,
-    // integers end to end — bit-deterministic ranking (no float ties,
-    // no sum-order noise anywhere in this row).
-    "sim_hamming_topk" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.Quantization.hammingTopK(
-        emb, emb.where(col("vec_id") < 20), 5)
-    }),
-    // Raw sign-bit recall floor: 0.24 / 0.13 at sf0.01 / sf0.1 — 1
-    // bit/dim is the coarsest candidate generator in the ladder, and the
-    // 0.1 bar pins only the regression floor (broken codes ≈ 0.01).
-    "sim_hamming_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.Quantization.hammingTopK(c, q, 5), bar = 0.1)),
-    // Binary-prefilter + exact-refine (Hamming top-200 → cosine top-5):
-    // the production use of sign codes — a FIXED 200-candidate refine per
-    // query regardless of corpus size (0.97 / 0.86 ≥ 0.8 measured; the
-    // budget, not the corpus, bounds the refine cost at 100 TB).
-    "sim_hamming_rerank_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.Quantization.hammingTopK(c, q, 5, rerank = 200),
-        bar = 0.8)),
-    // The binary tier composed with IVF: coarse cells bound each query's
-    // candidates, sign codes rank them by Hamming (8 B xors), the top-200
-    // get one exact cosine each — the whole-corpus code scan
-    // (sim_hamming_topk) becomes sub-corpus like every other search
-    // path. Full top-5 hash-compares.
-    "sim_ann_ivf_hamming" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.Quantization.ivfHammingTopK(
-        emb, emb.where(col("vec_id") < 20), 5)
-    }),
-    // ... its production recall gate (standard 0.8 bar), and the same at
-    // the scale-aware sqrt-n dials (the 100x-probe configuration).
-    "sim_ann_ivf_hamming_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.Quantization.ivfHammingTopK(c, q, 5), bar = 0.8)),
-    "sim_ann_ivf_hamming_auto_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.Quantization.ivfHammingTopKAuto(c, q, 5), bar = 0.8)),
-    // The auto-dial SEARCH row (full top-5 hash-compare; also the clean
-    // probe instrument — the recall rows embed an O(n.Q) exact baseline
-    // that would drown the operator's own scaling).
-    "sim_ann_ivf_hamming_auto" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.Quantization.ivfHammingTopKAuto(
-        emb, emb.where(col("vec_id") < 20), 5)
-    }),
-    // ... and the binary tier MANAGED: coarse centroids + (id, cell,
-    // 8 B sign code) persisted write-once (16 B/vector — the cheapest
-    // index artifact of the ladder); warm search trains nothing,
-    // assigns nothing, binarizes nothing. Deterministic training +
-    // bit-exact parquet round-trip => identical output to the fresh
-    // sampled-auto build, so it shares that oracle.
-    "sim_ann_ivf_hamming_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (codes, local, nProbe) = graft.ops.Quantization.ivfHammingStore(
-        s, emb, s"$dir/embeddings.parquet", "hamq")
-      graft.ops.Quantization.ivfHammingSearch(
-        codes, local, emb, emb.where(col("vec_id") < 20), 5,
-        rerank = 200, nProbe = nProbe)
-    }),
-    // The full storage-ladder cascade composed into ONE query (the FAISS
-    // IndexBinaryFlat -> PQ-rerank -> refine chain): 8 B/vector sign
-    // codes rank the whole corpus by Hamming and keep the top-200, ADC
-    // over the 16 B/vector PQ codes rescores only those and keeps the
-    // top-50, the float vectors are read for exactly 50 rows/query by
-    // the exact refine. Full top-5 hash-compares against the three
-    // tiers composed in SQL.
-    "sim_cascade_topk" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.cascadeTopK(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    // ... and its recall gate at the standard 0.8 bar (measured 0.94 /
-    // 0.85 at sf0.01 / sf0.1 — the ADC 200->50 narrowing costs ~1-3
-    // points vs sim_hamming_rerank_recall's exact-on-200).
-    "sim_cascade_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.cascadeTopK(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32,
-            dimHint = Some(64))))),
-    // The managed cascade: PQ codes come from the fingerprinted pqStore
-    // (the `codes` parameter — stage 2 reads stored 16 B/vector rows);
-    // stored codes are bit-identical to fresh ones, so the oracle is
-    // sim_cascade_topk's verbatim.
-    "sim_cascade_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
-        s, emb, s"$dir/embeddings.parquet", "registry")
-      graft.ops.ProductQuantization.cascadeTopK(
-        emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
-    }),
-    // The cascade at the √n auto budgets (r1 = max(200, 4·⌈√n⌉), r2 =
-    // max(50, ⌈√n⌉)) — fixed keep budgets are a shrinking fraction of a
-    // growing corpus; the oracle recomputes both dials from count(*)
-    // in-query (the autoNLists convention).
-    "sim_cascade_auto" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.cascadeTopKAuto(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-    }),
-    "sim_cascade_auto_recall" -> ((s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.cascadeTopKAuto(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32,
-            dimHint = Some(64))))),
-    // Auto budgets over the MANAGED stage-2 codes — stored codes are
-    // bit-identical to fresh, so this shares sim_cascade_auto's oracle.
-    "sim_cascade_auto_managed" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
-        s, emb, s"$dir/embeddings.parquet", "registry")
-      graft.ops.ProductQuantization.cascadeTopKAuto(
-        emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
-    })
-  )
-
-  /** Micro-averaged recall@5 of an ANN operator vs the exact brute-force
-    * top-5 over the vec_id < 20 query set, one summary row with the
-    * >= 0.8 flag (see sim_ann_lsh_recall's registry comment).
-    *
-    * One pass over the brute-force subtree: exact LEFT JOIN approx, then
-    * a single agg counts both the denominator (all exact pairs) and the
-    * numerator (pairs the ANN also returned) — referencing the exact
-    * top-k twice (agg + semi-join) would execute the corpus-wide
-    * brute-force scoring twice. Recall is rounded with the
-    * boundary-safe [[graft.ops.TextAnalysis.round6]] (int/int ratio —
-    * the exact cross-engine HALF_UP divergence class). */
-  private def annRecall(s: SparkSession, dir: String,
-      ann: (DataFrame, DataFrame) => DataFrame,
-      bar: Double = 0.8): DataFrame = {
-    val emb = s.read.parquet(s"$dir/embeddings.parquet")
-    val q = emb.where(col("vec_id") < 20)
-    val approx = ann(emb, q)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
-    val exact = Similarity.bruteForceTopK(emb, q, 5)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"), count(col("_hit")).as("n_hit"))
-      .select(col("n_exact"), col("n_hit"),
-        graft.ops.TextAnalysis
-          .round6(col("n_hit").cast("double") / col("n_exact")).as("recall"),
-        (col("n_hit").cast("double") / col("n_exact") >= bar).as("recall_ok"))
-  }
-
-  /** Hyperplane-LSH bucket CTE chain (no leading WITH): reproduces
-    * Similarity's md5-derived planes and banded sign-bit buckets in SQL.
-    * Sum-order noise in projections only matters when a projection is
-    * within ~1e-15 of zero — measure-zero on real data. Parameterized on
-    * (numPlanes, planesPerTable) exactly as `Similarity.lshTopK`'s 6-arg
-    * overload is; the default chain is the (32, 4) instance. */
-  private val LshBucketChain: String =
-    lshBucketChain(graft.ops.Similarity.NumHyperplanes,
-      graft.ops.Similarity.PlanesPerTable)
-
-  private def lshBucketChain(numPlanes: Int, planesPerTable: Int): String =
-    s"""planes AS (
-      |  SELECT p, j,
-      |    CAST(('0x' || substr(md5('hp|' || p || '|' || j), 1, 6)) AS INT)
-      |      / 16777216.0 - 0.5 AS w
-      |  FROM generate_series(0, ${numPlanes - 1}) t1(p),
-      |       generate_series(0, 63) t2(j)
-      |), proj AS (
-      |  SELECT v.vec_id, pl.p,
-      |         sum(CAST(v.embedding[pl.j + 1] AS DOUBLE) * pl.w) AS s
-      |  FROM embeddings v JOIN planes pl ON pl.j < len(v.embedding)
-      |  GROUP BY v.vec_id, pl.p
-      |), bkt AS (
-      |  SELECT vec_id, p // $planesPerTable AS tbl,
-      |    CAST(sum(CASE WHEN s >= 0
-      |      THEN (1 << (p % $planesPerTable)) ELSE 0 END) AS BIGINT) AS bits
-      |  FROM proj GROUP BY vec_id, tbl
-      |), nrm AS (
-      |  SELECT vec_id, sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-      |                                       CAST(embedding AS DOUBLE[]))) AS n
-      |  FROM embeddings
-      |)
-      |""".stripMargin
-
-  /** IVF probe/assignment CTE chain (no leading WITH), ending with the
-    * `ranked` CTE — shared by the sim_ann_ivf oracle and its recall
-    * gate. The default chain is the nLists=16 instance; the auto chain
-    * computes nLists = max(16, ceil(sqrt(count(*)))) IN SQL (exact-integer
-    * sqrt/ceil, bit-identical to [[graft.ops.Similarity.autoNLists]]), so
-    * the scale-aware dial is oracle-gated end-to-end. */
-  private val IvfChain = ivfChain("16")
-
-  private val AutoNListsSql =
-    "greatest(16, CAST(ceil(sqrt((SELECT count(*) FROM embeddings))) AS BIGINT))"
-
-  private val AutoIvfChain = ivfChain(AutoNListsSql)
-
-  /** nProbe = max(4, ⌈√nLists⌉) — `ProductQuantization.ivfPqTopKAuto`'s
-    * second dial, recomputed symbolically. */
-  private val AutoNProbeSql =
-    s"greatest(4, CAST(ceil(sqrt(CAST(($AutoNListsSql) AS DOUBLE))) AS BIGINT))"
-
-  private val AutoIvfPqChain =
-    ivfChain(AutoNListsSql, "embeddings", AutoNProbeSql)
-
-  /** Coarse-training sample stride — `Similarity.coarseTrainStride`
-    * recomputed symbolically: `max(1, n ÷ (16·nLists))`, pure BIGINT
-    * arithmetic (DuckDB `//` is floor division, exact on the positive
-    * integers involved), so the sampled chain is oracle-gated
-    * end-to-end. */
-  private val AutoCoarseStrideSql =
-    s"greatest(1, (SELECT count(*) FROM embeddings) // (16 * ($AutoNListsSql)))"
-
-  private val SampledIvfPqChain =
-    ivfChain(AutoNListsSql, "embeddings", AutoNProbeSql, AutoCoarseStrideSql)
-
-  /** Recall-gate tail over `ranked`/`nrm` CTEs: recall@5 of an
-    * approximate top-5 (read from `src`, default the `ranked` CTE)
-    * against the exact brute-force top-5, with a >= `bar` flag. The 0.8
-    * instance is [[IvfRecallTail]]; the PQ gates parameterize both knobs
-    * (raw-ADC bar 0.3, reranked source `rranked`). */
-  private def recallTail(bar: Double, src: String = "ranked"): String =
-    s""", approx AS (
-      |  SELECT query_id, neighbor_id FROM $src WHERE rank <= 5
-      |), ex_scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-      |                           CAST(c.embedding AS DOUBLE[])) /
-      |          nullif(q.n * c.n, 0), 6) AS cos
-      |  FROM nrm q JOIN nrm c ON q.vec_id <> c.vec_id
-      |  WHERE q.vec_id < 20
-      |), exact AS (
-      |  SELECT query_id, neighbor_id FROM (
-      |    SELECT query_id, neighbor_id,
-      |      row_number() OVER (PARTITION BY query_id
-      |                         ORDER BY cos DESC, neighbor_id) AS rank
-      |    FROM ex_scored)
-      |  WHERE rank <= 5
-      |)
-      |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
-      |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
-      |  n_hit * 1.0 / n_exact >= $bar AS recall_ok
-      |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
-      |             (SELECT count(*) FROM exact e
-      |              JOIN approx a ON e.query_id = a.query_id
-      |                AND e.neighbor_id = a.neighbor_id) AS n_hit)""".stripMargin
-
-  private val IvfRecallTail = recallTail(0.8)
-
-  /** Per-subspace PQ codebook chains (no leading WITH): for each of the
-    * `m` subspaces this is the IvfChain recipe — deterministic seeds
-    * (vec_id < k), one Lloyd iteration, argmax-cosine assignment — on the
-    * array SLICE `embedding[lo:hi]`, ending in `cd$i(vec_id, code)` and
-    * `cn$i(cell, cvec, cn)`. Plus the long-form unions the ADC tail
-    * consumes (`cl` codes, `ctl` centroid lookup with |c|², `ql` query
-    * slices) and the full-vector `nrm` the recall tails need. Mirrors
-    * [[graft.ops.ProductQuantization]] digit-for-digit. */
-  private def pqChains(m: Int, k: Int, subDim: Int,
-                       includeNrm: Boolean = true,
-                       table: String = "embeddings",
-                       vecCol: String = "embedding",
-                       qsrc: String = "embeddings"): String = {
-    val per = (0 until m).map { i =>
-      val lo = i * subDim + 1
-      val hi = (i + 1) * subDim
-      s"""s$i AS (
-         |  SELECT vec_id, $vecCol[$lo:$hi] AS e,
-         |    sqrt(list_dot_product(CAST($vecCol[$lo:$hi] AS DOUBLE[]),
-         |                          CAST($vecCol[$lo:$hi] AS DOUBLE[]))) AS n
-         |  FROM $table
-         |), sd$i AS (
-         |  SELECT vec_id AS cell, e AS cvec, n AS cn FROM s$i WHERE vec_id < $k
-         |), a0$i AS (
-         |  SELECT vec_id, cell FROM (
-         |    SELECT v.vec_id, s.cell,
-         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |        list_dot_product(CAST(v.e AS DOUBLE[]),
-         |                         CAST(s.cvec AS DOUBLE[])) / nullif(v.n * s.cn, 0) DESC,
-         |        s.cell) AS rn
-         |    FROM s$i v CROSS JOIN sd$i s) t
-         |  WHERE rn = 1
-         |), ct$i AS (
-         |  SELECT cell,
-         |    list_transform(list_sort(list(struct_pack(i := i, m := m))),
-         |      x -> CAST(x.m AS REAL)) AS cvec
-         |  FROM (
-         |    SELECT a.cell, g.i, avg(CAST(v.e[g.i] AS DOUBLE)) AS m
-         |    FROM a0$i a JOIN s$i v ON v.vec_id = a.vec_id,
-         |    LATERAL (SELECT unnest(generate_series(1, len(v.e))) AS i) g
-         |    GROUP BY a.cell, g.i) d
-         |  GROUP BY cell
-         |), cn$i AS (
-         |  SELECT cell, cvec,
-         |    sqrt(list_dot_product(CAST(cvec AS DOUBLE[]),
-         |                          CAST(cvec AS DOUBLE[]))) AS cn
-         |  FROM ct$i
-         |), cd$i AS (
-         |  SELECT vec_id, cell AS code FROM (
-         |    SELECT v.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |        list_dot_product(CAST(v.e AS DOUBLE[]),
-         |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
-         |        c.cell) AS rn
-         |    FROM s$i v CROSS JOIN cn$i c) t
-         |  WHERE rn = 1
-         |)""".stripMargin
-    }.mkString(", ")
-    val cl = (0 until m)
-      .map(i => s"SELECT $i AS sub, vec_id, code FROM cd$i")
-      .mkString("\n  UNION ALL ")
-    val ctl = (0 until m)
-      .map(i => s"SELECT $i AS sub, cell AS code, cvec, cn * cn AS cn2 FROM cn$i")
-      .mkString("\n  UNION ALL ")
-    // query slices always come from the RAW vector table (`qsrc`) — for
-    // the residual chains the CODES are trained/assigned on residuals
-    // but the ADC query side stays the un-residualized float query
-    val ql = (0 until m)
-      .map { i =>
-        val lo = i * subDim + 1
-        val hi = (i + 1) * subDim
-        s"SELECT $i AS sub, vec_id AS query_id, embedding[$lo:$hi] AS e " +
-          s"FROM $qsrc WHERE vec_id < 20"
-      }
-      .mkString("\n  UNION ALL ")
-    val nrm = if (includeNrm)
-      s""", nrm AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                          CAST(embedding AS DOUBLE[]))) AS n
-         |  FROM embeddings
-         |)""".stripMargin
-    else ""
-    s"""$per, cl AS (
-       |  $cl
-       |), ctl AS (
-       |  $ctl
-       |), ql AS (
-       |  $ql
-       |)""".stripMargin + nrm
-  }
-
-  /** ADC scoring tail over [[pqChains]]' CTEs, ending in
-    * `ranked(query_id, neighbor_id, a, rank)` — rank by the approximate
-    * cosine ROUNDED to 6 decimals (the round-before-rank convention:
-    * the ADC score is a 16-part float sum whose addition order differs
-    * between Spark's partial agg and DuckDB's hash agg, so near-ties
-    * must be absorbed before ranking), exactly as
-    * `ProductQuantization.finishAdc`. NaN queries need no special
-    * handling: Spark compares NaN GREATER than any value (so
-    * `cosFromDot`'s `n1*n2 > 0` guard passes and the NaN propagates)
-    * and orders it first under DESC — exactly DuckDB's NaN ordering —
-    * with ties broken by neighbor id on both engines; pinned by
-    * PqSpec's NaN test. */
-  private val PqAdcTail: String =
-    """, parts AS (
-      |  SELECT q.query_id, c.vec_id AS neighbor_id,
-      |    list_dot_product(CAST(q.e AS DOUBLE[]),
-      |                     CAST(t.cvec AS DOUBLE[])) AS d,
-      |    t.cn2
-      |  FROM cl c JOIN ctl t ON t.sub = c.sub AND t.code = c.code
-      |  JOIN ql q ON q.sub = c.sub AND q.query_id <> c.vec_id
-      |), sc AS (
-      |  SELECT query_id, neighbor_id, sum(d) AS sd, sum(cn2) AS rn2
-      |  FROM parts GROUP BY 1, 2
-      |), adc AS (
-      |  SELECT s.query_id, s.neighbor_id,
-      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
-      |  FROM sc s JOIN nrm q ON q.vec_id = s.query_id
-      |), ranked AS (
-      |  SELECT query_id, neighbor_id, a,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
-      |  FROM adc
-      |)""".stripMargin
-
-  /** Exact-rerank tail: ADC top-`rerank` candidates (from the `src`
-    * ranking CTE) rescored exactly (rounded cosine, ties by neighbor
-    * id), ending in `rranked` — the `rerank > 0` branch of
-    * `ProductQuantization.adcTopK` / `ivfPqTopK`. */
-  private def pqRerankTail(rerank: Int, src: String): String =
-    pqRerankTailSql(rerank.toString, src)
-
-  private def pqRerankTail(rerank: Int): String =
-    pqRerankTailSql(rerank.toString, "ranked")
-
-  /** [[pqRerankTail]] with the keep budget as a SQL expression — the
-    * auto-cascade rows compute it from count(*) in-query. */
-  private def pqRerankTailSql(rerankSql: String, src: String): String =
-    s""", cand AS (
-       |  SELECT query_id, neighbor_id FROM $src WHERE rank <= ($rerankSql)
-       |), rr AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
-       |                           CAST(ce.embedding AS DOUBLE[])) /
-       |          nullif(qe.n * ce.n, 0), 6) AS cos
-       |  FROM cand c
-       |  JOIN nrm qe ON qe.vec_id = c.query_id
-       |  JOIN nrm ce ON ce.vec_id = c.neighbor_id
-       |), rranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM rr
-       |)""".stripMargin
-
-  private val PqChain = pqChains(16, 32, 4)
-
-  /** Sign-bit binarization chain: the 64 per-dimension masks are embedded
-    * as literals (bit 63 is Long.MinValue — no shift is ever evaluated on
-    * either engine), folded with bit_or. Ends in `codes(vec_id, bcode)`
-    * plus the full-vector `nrm` the recall tails need. Mirrors
-    * [[graft.ops.Quantization.binarize]] bit for bit. */
-  private def binChain(includeNrm: Boolean): String = {
-    val masks = graft.ops.Quantization.signMasks(64)
-      .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-    val nrm = if (includeNrm)
-      s""", nrm AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-         |                          CAST(embedding AS DOUBLE[]))) AS n
-         |  FROM embeddings
-         |)""".stripMargin
-    else ""
-    s"""bm AS (SELECT $masks AS ms),
-       |codes AS (
-       |  SELECT e.vec_id,
-       |    list_aggregate(list_transform(range(1, 65),
-       |      i -> CASE WHEN e.embedding[i] > 0 THEN ms[i]
-       |           ELSE 0::BIGINT END), 'bit_or') AS bcode
-       |  FROM embeddings e, bm
-       |)""".stripMargin + nrm
-  }
-
-  private val BinChain: String = binChain(includeNrm = true)
-
-  /** Cell-bounded Hamming prefilter tail over IvfChain's
-    * `probes`/`assigned` plus [[binChain]]'s `codes` —
-    * `Quantization.ivfHammingTopK`'s prefilter in SQL, ending in
-    * `ihr(query_id, neighbor_id, rank)` by (hamming asc, neighbor id);
-    * the exact-refine stage is the shared [[pqRerankTail]]. */
-  private val IvfHammingTail: String =
-    """, ihcand AS (
-      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
-      |  FROM probes p JOIN assigned a
-      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
-      |), ihs AS (
-      |  SELECT c.query_id, c.neighbor_id,
-      |    CAST(bit_count(xor(cc.bcode, qc.bcode)) AS BIGINT) AS hamming
-      |  FROM ihcand c
-      |  JOIN codes cc ON cc.vec_id = c.neighbor_id
-      |  JOIN codes qc ON qc.vec_id = c.query_id
-      |), ihr AS (
-      |  SELECT query_id, neighbor_id,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY hamming, neighbor_id) AS rank
-      |  FROM ihs
-      |)""".stripMargin
-
-  /** Hamming scoring tail over [[BinChain]]'s `codes`, ending in
-    * `hranked` — integer distance, integer ranking. */
-  private val HammingTail: String =
-    """, hscored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    CAST(bit_count(xor(c.bcode, q.bcode)) AS BIGINT) AS hamming
-      |  FROM codes c JOIN codes q
-      |    ON q.vec_id < 20 AND q.vec_id <> c.vec_id
-      |), hranked AS (
-      |  SELECT query_id, neighbor_id, hamming,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY hamming, neighbor_id) AS rank
-      |  FROM hscored
-      |)""".stripMargin
-
-  /** ADC-within-probed-cells tail over IvfChain's `probes`/`assigned`
-    * plus the (nrm-free) PQ chains — `ProductQuantization.ivfPqTopK` in
-    * SQL, ending in `pranked` (names prefixed: IvfChain already owns
-    * `scored`/`ranked`). */
-  private val IvfPqTail: String =
-    """, pcand AS (
-      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
-      |  FROM probes p JOIN assigned a
-      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
-      |), pparts AS (
-      |  SELECT d.query_id, d.neighbor_id,
-      |    list_dot_product(CAST(q.e AS DOUBLE[]),
-      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
-      |    t.cn2
-      |  FROM pcand d
-      |  JOIN cl c ON c.vec_id = d.neighbor_id
-      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
-      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
-      |), psc AS (
-      |  SELECT query_id, neighbor_id, sum(dd) AS sd, sum(cn2) AS rn2
-      |  FROM pparts GROUP BY 1, 2
-      |), padc AS (
-      |  SELECT s.query_id, s.neighbor_id,
-      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
-      |  FROM psc s JOIN nrm q ON q.vec_id = s.query_id
-      |), pranked AS (
-      |  SELECT query_id, neighbor_id, a,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
-      |  FROM padc
-      |)""".stripMargin
-
-  /** Cascade stage-2 tail: ADC scoring restricted to the Hamming
-    * top-200 candidates ([[HammingTail]]'s `hranked`), ending in
-    * `cascranked` — `ProductQuantization.cascadeTopK`'s middle tier in
-    * SQL (the same per-pair sum-of-subspace-dots arithmetic as
-    * [[PqAdcTail]], joined to the stage-1 candidate set). */
-  private val CascadeAdcTail: String = cascadeAdcTailSql("200")
-
-  /** [[CascadeAdcTail]] with the stage-1 keep budget as a SQL expression
-    * (the auto rows compute `greatest(200, 4·⌈√count⌉)` in-query). */
-  private def cascadeAdcTailSql(r1Sql: String): String =
-    s""", casc1 AS (
-      |  SELECT query_id, neighbor_id FROM hranked WHERE rank <= ($r1Sql)
-      |), cascparts AS (
-      |  SELECT d.query_id, d.neighbor_id,
-      |    list_dot_product(CAST(q.e AS DOUBLE[]),
-      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
-      |    t.cn2
-      |  FROM casc1 d
-      |  JOIN cl c ON c.vec_id = d.neighbor_id
-      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
-      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
-      |), cascsc AS (
-      |  SELECT query_id, neighbor_id, sum(dd) AS sd, sum(cn2) AS rn2
-      |  FROM cascparts GROUP BY 1, 2
-      |), cascadc AS (
-      |  SELECT s.query_id, s.neighbor_id,
-      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
-      |  FROM cascsc s JOIN nrm q ON q.vec_id = s.query_id
-      |), cascranked AS (
-      |  SELECT query_id, neighbor_id, a,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
-      |  FROM cascadc
-      |)""".stripMargin
-
-  /** Residual CTE over an IvfChain's `assigned`/`cent_n`/`nrm`:
-    * `resid = embedding − centroid(cell)` per dim, double subtract
-    * narrowed to REAL — `ProductQuantization.residuals` bit-for-bit. */
-  private val ResCte: String =
-    """res AS (
-      |  SELECT a.vec_id, a.cell,
-      |    list_transform(range(1, 65), i ->
-      |      CAST(CAST(v.embedding[i] AS DOUBLE) -
-      |           CAST(c.cvec[i] AS DOUBLE) AS REAL)) AS resid
-      |  FROM assigned a
-      |  JOIN nrm v ON v.vec_id = a.vec_id
-      |  JOIN cent_n c ON c.cell = a.cell
-      |)""".stripMargin
-
-  /** Residual-ADC tail over IvfChain's `probes`/`assigned`/`cent_n` plus
-    * residual-trained PQ chains (`cl`/`ctl`/`ql`) —
-    * `ProductQuantization.ivfPqResidualTopK` in SQL, ending in
-    * `resranked`. dot(q, x̂) = qbase + Σ dot(q_i, cb_i);
-    * |x̂|² = |c|² + Σ (2·dot(c_i, cb_i) + |cb_i|²) via the
-    * (cell, sub, code) cross-term lookup. */
-  private val ResAdcTail: String =
-    """, xterm AS (
-      |  SELECT cn.cell, t.sub, t.code,
-      |    2 * list_dot_product(
-      |          CAST(list_slice(cn.cvec, t.sub * 4 + 1, t.sub * 4 + 4) AS DOUBLE[]),
-      |          CAST(t.cvec AS DOUBLE[])) + t.cn2 AS xt
-      |  FROM cent_n cn CROSS JOIN ctl t
-      |), qbase AS (
-      |  SELECT q.vec_id AS query_id, c.cell,
-      |    list_dot_product(CAST(q.embedding AS DOUBLE[]),
-      |                     CAST(c.cvec AS DOUBLE[])) AS qb
-      |  FROM nrm q CROSS JOIN cent_n c WHERE q.vec_id < 20
-      |), rescand AS (
-      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id, a.cell
-      |  FROM probes p JOIN assigned a
-      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
-      |), resparts AS (
-      |  SELECT d.query_id, d.neighbor_id, d.cell,
-      |    list_dot_product(CAST(q.e AS DOUBLE[]),
-      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
-      |    x.xt
-      |  FROM rescand d
-      |  JOIN cl c ON c.vec_id = d.neighbor_id
-      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
-      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
-      |  JOIN xterm x ON x.cell = d.cell AND x.sub = c.sub AND x.code = c.code
-      |), ressc AS (
-      |  SELECT query_id, neighbor_id, cell, sum(dd) AS sd, sum(xt) AS xs
-      |  FROM resparts GROUP BY 1, 2, 3
-      |), resadc AS (
-      |  SELECT s.query_id, s.neighbor_id,
-      |    (b.qb + s.sd) / nullif(sqrt(cc.cn * cc.cn + s.xs) * q.n, 0) AS a
-      |  FROM ressc s
-      |  JOIN qbase b ON b.query_id = s.query_id AND b.cell = s.cell
-      |  JOIN cent_n cc ON cc.cell = s.cell
-      |  JOIN nrm q ON q.vec_id = s.query_id
-      |), resranked AS (
-      |  SELECT query_id, neighbor_id, a,
-      |    row_number() OVER (PARTITION BY query_id
-      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
-      |  FROM resadc
-      |)""".stripMargin
-
-  /** Full residual-IVFPQ oracle chain at a given coarse chain (fixed or
-    * auto dials): coarse IVF → residuals → residual-trained PQ chains →
-    * residual-ADC tail. */
-  private def residualIvfPqSql(coarse: String): String =
-    "WITH " + coarse + ", " + ResCte + ", " +
-      pqChains(16, 32, 4, includeNrm = false, table = "res",
-        vecCol = "resid") + ResAdcTail
-
-  /** SemDeDup keep-list tail over an IvfChain's `assigned`/`nrm` CTEs:
-    * a vector is dropped iff a lower-id vector in its cell scores cosine
-    * >= 0.35 (shared by dedup_semantic and dedup_semantic_auto). */
-  private val SemDedupTail =
-    """, dup AS (
-      |  SELECT DISTINCT a.vec_id
-      |  FROM assigned a JOIN assigned b
-      |    ON a.cell = b.cell AND a.vec_id > b.vec_id
-      |  JOIN nrm ae ON ae.vec_id = a.vec_id
-      |  JOIN nrm be ON be.vec_id = b.vec_id
-      |  WHERE round(list_dot_product(CAST(ae.embedding AS DOUBLE[]),
-      |                               CAST(be.embedding AS DOUBLE[])) /
-      |              nullif(ae.n * be.n, 0), 6) >= 0.35
-      |)
-      |SELECT a.vec_id AS vec_id, CAST(a.cell AS BIGINT) AS cell,
-      |       (d.vec_id IS NULL) AS keep
-      |FROM assigned a LEFT JOIN dup d ON a.vec_id = d.vec_id
-      |ORDER BY a.vec_id""".stripMargin
-
-  private def ivfChain(nListsSql: String,
-                       table: String = "embeddings",
-                       nProbeSql: String = "4",
-                       refineStrideSql: String = "1"): String = {
-    // Sampled coarse training (Similarity.trainCentroidsSampled): only
-    // every stride-th vec_id VOTES in the Lloyd refine; stride "1" keeps
-    // the chain byte-identical to the full trainer's.
-    val sampleWhere =
-      if (refineStrideSql == "1") ""
-      else s"\n    WHERE (v.vec_id % ($refineStrideSql)) = 0"
-    s"""nrm AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                          CAST(embedding AS DOUBLE[]))) AS n
-        |  FROM $table
-        |), seed AS (
-        |  SELECT vec_id AS cell, embedding AS cvec, n AS cn FROM nrm
-        |  WHERE vec_id < ($nListsSql)
-        |), assign0 AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT v.vec_id, s.cell,
-        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
-        |                         CAST(s.cvec AS DOUBLE[])) / nullif(v.n * s.cn, 0) DESC,
-        |        s.cell) AS rn
-        |    FROM nrm v CROSS JOIN seed s$sampleWhere) t
-        |  WHERE rn = 1
-        |), cent AS (
-        |  SELECT cell,
-        |    list_transform(
-        |      list_sort(list(struct_pack(i := i, m := m))),
-        |      x -> CAST(x.m AS REAL)) AS cvec
-        |  FROM (
-        |    SELECT a.cell, g.i, avg(CAST(v.embedding[g.i] AS DOUBLE)) AS m
-        |    FROM assign0 a
-        |    JOIN nrm v ON v.vec_id = a.vec_id,
-        |    LATERAL (SELECT unnest(generate_series(1, len(v.embedding))) AS i) g
-        |    GROUP BY a.cell, g.i) d
-        |  GROUP BY cell
-        |), cent_n AS (
-        |  SELECT cell, cvec,
-        |    sqrt(list_dot_product(CAST(cvec AS DOUBLE[]), CAST(cvec AS DOUBLE[]))) AS cn
-        |  FROM cent
-        |), assigned AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT v.vec_id, c.cell,
-        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
-        |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
-        |        c.cell) AS rn
-        |    FROM nrm v CROSS JOIN cent_n c) t
-        |  WHERE rn = 1
-        |), probes AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT v.vec_id, c.cell,
-        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
-        |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
-        |        c.cell) AS rn
-        |    FROM nrm v CROSS JOIN cent_n c
-        |    WHERE v.vec_id < 20) t
-        |  WHERE rn <= ($nProbeSql)
-        |), scored AS (
-        |  SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
-        |                           CAST(ae.embedding AS DOUBLE[])) /
-        |          nullif(qe.n * ae.n, 0), 6) AS cos
-        |  FROM probes q JOIN assigned a ON q.cell = a.cell AND q.vec_id <> a.vec_id
-        |  JOIN nrm qe ON qe.vec_id = q.vec_id
-        |  JOIN nrm ae ON ae.vec_id = a.vec_id
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM scored
-        |)
-        |""".stripMargin
-  }
-
-  private def simOracles: Map[String, String] = Map(
-    "sim_ann_lsh" -> ("WITH " + LshBucketChain +
-      """, qprobe AS (
-        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
-        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
-        |  WHERE vec_id < 20
-        |), scored AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
-        |                           CAST(ce.embedding AS DOUBLE[])) /
-        |          nullif(qn.n * cn.n, 0), 6) AS cos
-        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
-        |    AND q.vec_id <> c.vec_id
-        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
-        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
-        |  JOIN nrm qn ON qn.vec_id = q.vec_id
-        |  JOIN nrm cn ON cn.vec_id = c.vec_id
-        |  WHERE q.vec_id < 20
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_lsh_wide" -> ("WITH " + lshBucketChain(48, 4) +
-      """, qprobe AS (
-        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
-        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
-        |  WHERE vec_id < 20
-        |), scored AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
-        |                           CAST(ce.embedding AS DOUBLE[])) /
-        |          nullif(qn.n * cn.n, 0), 6) AS cos
-        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
-        |    AND q.vec_id <> c.vec_id
-        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
-        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
-        |  JOIN nrm qn ON qn.vec_id = q.vec_id
-        |  JOIN nrm cn ON cn.vec_id = c.vec_id
-        |  WHERE q.vec_id < 20
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // quantize→dequantize both sides, then the exact-vs-exact recall
-    // frame; recon elements FLOAT-narrowed exactly like Spark's
-    // (q*scale).cast("float")
-    "sim_quantized_recall" ->
-      """WITH a AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings
-        |), dq AS (
-        |  SELECT vec_id,
-        |    CASE WHEN amax > 0 THEN
-        |      list_transform(embedding, x -> CAST(
-        |        CAST(CAST(greatest(-127.0, least(127.0,
-        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
-        |        * (amax / 127.0) AS FLOAT))
-        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS e
-        |  FROM a
-        |), qs AS (
-        |  SELECT d.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(d.e AS DOUBLE[]), CAST(c.e AS DOUBLE[])) /
-        |          nullif(sqrt(list_dot_product(CAST(d.e AS DOUBLE[]), CAST(d.e AS DOUBLE[]))) *
-        |                 sqrt(list_dot_product(CAST(c.e AS DOUBLE[]), CAST(c.e AS DOUBLE[]))), 0), 6) AS cos
-        |  FROM dq d JOIN dq c ON d.vec_id <> c.vec_id
-        |  WHERE d.vec_id < 20
-        |), approx AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY cos DESC, neighbor_id) AS rank
-        |    FROM qs) WHERE rank <= 5
-        |), es AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) /
-        |          nullif(sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))) *
-        |                 sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))), 0), 6) AS cos
-        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 20
-        |), exact AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY cos DESC, neighbor_id) AS rank
-        |    FROM es) WHERE rank <= 5
-        |)
-        |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
-        |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
-        |  n_hit * 1.0 / n_exact >= 0.8 AS recall_ok
-        |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
-        |             (SELECT count(*) FROM exact e JOIN approx ap
-        |                USING (query_id, neighbor_id)) AS n_hit)""".stripMargin,
-
-    "sim_ann_lsh_recall" -> ("WITH " + LshBucketChain +
-      """, qprobe AS (
-        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
-        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
-        |  WHERE vec_id < 20
-        |), lsh_scored AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
-        |                           CAST(ce.embedding AS DOUBLE[])) /
-        |          nullif(qn.n * cn.n, 0), 6) AS cos
-        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
-        |    AND q.vec_id <> c.vec_id
-        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
-        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
-        |  JOIN nrm qn ON qn.vec_id = q.vec_id
-        |  JOIN nrm cn ON cn.vec_id = c.vec_id
-        |), approx AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY cos DESC, neighbor_id) AS rank
-        |    FROM lsh_scored)
-        |  WHERE rank <= 5
-        |), ex_scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-        |                           CAST(c.embedding AS DOUBLE[])) /
-        |          nullif(qn.n * cn.n, 0), 6) AS cos
-        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  JOIN nrm qn ON qn.vec_id = q.vec_id
-        |  JOIN nrm cn ON cn.vec_id = c.vec_id
-        |  WHERE q.vec_id < 20
-        |), exact AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY cos DESC, neighbor_id) AS rank
-        |    FROM ex_scored)
-        |  WHERE rank <= 5
-        |)
-        |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
-        |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
-        |  n_hit * 1.0 / n_exact >= 0.8 AS recall_ok
-        |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
-        |             (SELECT count(*) FROM exact e
-        |              JOIN approx a ON e.query_id = a.query_id
-        |                AND e.neighbor_id = a.neighbor_id) AS n_hit)""".stripMargin),
-
-    "dedup_embedding_lsh" -> ("WITH " + LshBucketChain +
-      """SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2,
-        |  round(list_dot_product(CAST(ae.embedding AS DOUBLE[]),
-        |                         CAST(be.embedding AS DOUBLE[])) /
-        |        nullif(an.n * bn.n, 0), 6) AS cos
-        |FROM bkt a JOIN bkt b ON a.tbl = b.tbl AND a.bits = b.bits
-        |  AND a.vec_id < b.vec_id
-        |JOIN embeddings ae ON ae.vec_id = a.vec_id
-        |JOIN embeddings be ON be.vec_id = b.vec_id
-        |JOIN nrm an ON an.vec_id = a.vec_id
-        |JOIN nrm bn ON bn.vec_id = b.vec_id
-        |WHERE round(list_dot_product(CAST(ae.embedding AS DOUBLE[]),
-        |                             CAST(be.embedding AS DOUBLE[])) /
-        |            nullif(an.n * bn.n, 0), 6) >= 0.3
-        |ORDER BY d1, d2""".stripMargin),
-
-    "sim_ann_ivf" -> ("WITH " + IvfChain +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_auto" -> ("WITH " + AutoIvfChain +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // the identical IvfChain run over a dequantized-int8 CTE — the
-    // composed storage+search path, top-k hash-compared end-to-end
-    "sim_ann_ivf_quantized" -> ("WITH qa AS (" +
-      """
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings
-        |), dqe AS (
-        |  SELECT vec_id,
-        |    CASE WHEN amax > 0 THEN
-        |      list_transform(embedding, x -> CAST(
-        |        CAST(CAST(greatest(-127.0, least(127.0,
-        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
-        |        * (amax / 127.0) AS FLOAT))
-        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS embedding
-        |  FROM qa
-        |), """.stripMargin + ivfChain("16", "dqe") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // managed variant: stored codes round-trip the inline arithmetic
-    // exactly (int codes + double scale survive parquet bit-for-bit), so
-    // the oracle is the identical dequantized IvfChain
-    "sim_ann_ivf_quantized_managed" -> ("WITH qa AS (" +
-      """
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings
-        |), dqe AS (
-        |  SELECT vec_id,
-        |    CASE WHEN amax > 0 THEN
-        |      list_transform(embedding, x -> CAST(
-        |        CAST(CAST(greatest(-127.0, least(127.0,
-        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
-        |        * (amax / 127.0) AS FLOAT))
-        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS embedding
-        |  FROM qa
-        |), """.stripMargin + ivfChain("16", "dqe") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_recall" -> ("WITH " + IvfChain + IvfRecallTail),
-
-    "sim_ann_ivf_auto_recall" -> ("WITH " + AutoIvfChain + IvfRecallTail),
-
-    // k-NN graph over the auto chain's `assigned`/`nrm` CTEs (fresh CTE
-    // names — the chain's own probes/scored/ranked stay unused)
-    "sim_knn_graph" -> ("WITH " + AutoIvfChain +
-      """, kscored AS (
-        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(ae.embedding AS DOUBLE[]),
-        |                           CAST(be.embedding AS DOUBLE[])) /
-        |          nullif(ae.n * be.n, 0), 6) AS cos
-        |  FROM assigned a JOIN assigned b
-        |    ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN nrm ae ON ae.vec_id = a.vec_id
-        |  JOIN nrm be ON be.vec_id = b.vec_id
-        |), knn AS (
-        |  SELECT vec_id, neighbor_id, cos,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM kscored
-        |)
-        |SELECT vec_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
-        |FROM knn WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin),
-
-    // per-vector symmetric int8 code: same scale/round/clamp arithmetic;
-    // round-half-away-from-zero agrees between engines, and the clamped
-    // value is integral before the INT cast so DuckDB's round-on-cast vs
-    // Spark's truncate-on-cast can never diverge. The code array itself
-    // is compared as md5 over its comma-joined elements (list columns are
-    // not sortable by the driver's pandas harness).
-    "embed_quantize_int8" ->
-      """WITH a AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings
-        |)
-        |SELECT vec_id, round(amax / 127.0, 6) AS scale,
-        |  md5(array_to_string(CASE WHEN amax > 0 THEN
-        |    list_transform(embedding, x -> CAST(greatest(-127.0, least(127.0,
-        |      round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT))
-        |  ELSE list_transform(embedding, x -> 0) END, ',')) AS qvec_md5
-        |FROM a ORDER BY vec_id""".stripMargin,
-
-    "sim_topk_bruteforce" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) /
-        |          nullif(sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))) *
-        |           sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))), 0), 6) AS cos
-        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 20
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, rank, neighbor_id, cos FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // PQ codes: 16-way join of the per-subspace assignment chains, the
-    // concatenated code digest-compared (list columns are not
-    // harness-sortable — the embed_quantize_int8 rule).
-    "embed_pq_encode" -> ("WITH " + PqChain + ", codes AS (\n" +
-      "  SELECT c0.vec_id, list_value(" +
-      (0 until 16).map(i => s"c$i.code").mkString(", ") + ") AS pq\n" +
-      "  FROM cd0 c0 " +
-      (1 until 16).map(i => s"JOIN cd$i c$i USING (vec_id)").mkString(" ") +
-      "\n)\n" +
-      """SELECT vec_id, md5(array_to_string(pq, ',')) AS pq_md5
-        |FROM codes ORDER BY vec_id""".stripMargin),
-
-    "sim_pq_adc" -> ("WITH " + PqChain + PqAdcTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Raw-ADC quality floor (see the queries-side comment for the 0.3
-    // rationale: candidate generator, not final ranking).
-    "sim_pq_recall" -> ("WITH " + PqChain + PqAdcTail + recallTail(0.3)),
-
-    // PQ-scan + exact-refine, the production shape, at the standard bar.
-    "sim_pq_rerank_recall" -> ("WITH " + PqChain + PqAdcTail +
-      pqRerankTail(50) + recallTail(0.8, "rranked")),
-
-    // Managed = stored codebooks/codes, which are bit-identical to a
-    // fresh train+encode — the oracle is sim_pq_adc's verbatim.
-    "sim_pq_managed" -> ("WITH " + PqChain + PqAdcTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Chunked = the same search unioned over bounded query-id ranges;
-    // per-query results are chunk-independent, so the oracle is
-    // sim_pq_adc's verbatim.
-    "sim_pq_adc_chunked" -> ("WITH " + PqChain + PqAdcTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // IVF coarse chain + nrm-free PQ chains + ADC-within-cells tail.
-    "sim_ann_ivf_pq" -> ("WITH " + IvfChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_pq_recall" -> ("WITH " + IvfChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
-
-    // Auto dials recomputed in SQL: nLists from count(*), nProbe from
-    // sqrt(nLists) — the composed chains otherwise identical.
-    "sim_ann_ivf_pq_auto" -> ("WITH " + SampledIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_pq_auto_recall" -> ("WITH " + SampledIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
-
-    // The full-refine opt-in: the unsampled auto chain.
-    "sim_ann_ivf_pq_auto_full" -> ("WITH " + AutoIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Sampled coarse training: the auto chain with the Lloyd refine
-    // restricted to every stride-th vec_id (stride recomputed from
-    // count(*) — see AutoCoarseStrideSql).
-    "sim_ann_ivf_pq_auto_sampled" -> ("WITH " + SampledIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_pq_auto_sampled_recall" -> ("WITH " + SampledIvfPqChain +
-      ", " + pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
-
-    // Managed index == sampled-auto build, read back from parquet
-    // stores: same oracle verbatim (the sim_pq_managed precedent).
-    "sim_ann_ivf_pq_managed" -> ("WITH " + SampledIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Residual IVFPQ: coarse chain -> residual CTE -> residual-trained
-    // PQ chains -> cross-term ADC tail (see ResAdcTail).
-    "sim_ann_ivf_pq_residual" -> (residualIvfPqSql(IvfChain) +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM resranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_pq_residual_raw_recall" -> (residualIvfPqSql(IvfChain) +
-      recallTail(0.3, "resranked")),
-
-    "sim_ann_ivf_pq_residual_recall" -> (residualIvfPqSql(IvfChain) +
-      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
-
-    "sim_ann_ivf_pq_residual_auto_recall" -> (residualIvfPqSql(SampledIvfPqChain) +
-      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
-
-    // Managed residual index == sampled-auto residual build read back
-    // from parquet stores: same oracle verbatim (the
-    // sim_ann_ivf_pq_managed precedent).
-    "sim_ann_ivf_pq_residual_managed" ->
-      (residualIvfPqSql(SampledIvfPqChain) +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM resranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_pq_residual_managed_recall" ->
-      (residualIvfPqSql(SampledIvfPqChain) +
-      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
-
-    // Sign codes are plain BIGINTs — compared directly, no digest.
-    "embed_binarize" -> ("WITH " + BinChain +
-      "\nSELECT c.vec_id, c.bcode FROM codes c ORDER BY c.vec_id"),
-
-    "sim_hamming_topk" -> ("WITH " + BinChain + HammingTail +
-      """
-        |SELECT query_id, rank, neighbor_id, hamming FROM hranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_hamming_recall" -> ("WITH " + BinChain + HammingTail +
-      recallTail(0.1, "hranked")),
-
-    "sim_hamming_rerank_recall" -> ("WITH " + BinChain + HammingTail +
-      pqRerankTail(200, "hranked") + recallTail(0.8, "rranked")),
-
-    // IVF coarse chain + nrm-free sign codes + cell-bounded Hamming
-    // prefilter + the shared exact-refine tail.
-    "sim_ann_ivf_hamming" -> ("WITH " + IvfChain + ", " +
-      binChain(includeNrm = false) + IvfHammingTail +
-      pqRerankTail(200, "ihr") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_ann_ivf_hamming_recall" -> ("WITH " + IvfChain + ", " +
-      binChain(includeNrm = false) + IvfHammingTail +
-      pqRerankTail(200, "ihr") + recallTail(0.8, "rranked")),
-
-    "sim_ann_ivf_hamming_auto_recall" -> ("WITH " + SampledIvfPqChain + ", " +
-      binChain(includeNrm = false) + IvfHammingTail +
-      pqRerankTail(200, "ihr") + recallTail(0.8, "rranked")),
-
-    "sim_ann_ivf_hamming_auto" -> ("WITH " + SampledIvfPqChain + ", " +
-      binChain(includeNrm = false) + IvfHammingTail +
-      pqRerankTail(200, "ihr") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Warm store == fresh sampled-auto build (deterministic training,
-    // bit-exact parquet round-trip): same replay.
-    "sim_ann_ivf_hamming_managed" -> ("WITH " + SampledIvfPqChain + ", " +
-      binChain(includeNrm = false) + IvfHammingTail +
-      pqRerankTail(200, "ihr") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Three-tier cascade: whole-corpus Hamming ranking (HammingTail) ->
-    // ADC over the top-200 candidates only (CascadeAdcTail) -> the
-    // shared exact-refine of the ADC top-50.
-    "sim_cascade_topk" -> ("WITH " + binChain(includeNrm = false) + ", " +
-      PqChain + HammingTail + CascadeAdcTail +
-      pqRerankTail(50, "cascranked") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_cascade_recall" -> ("WITH " + binChain(includeNrm = false) + ", " +
-      PqChain + HammingTail + CascadeAdcTail +
-      pqRerankTail(50, "cascranked") + recallTail(0.8, "rranked")),
-
-    // Managed = stage-2 codes read from the fingerprinted store, which
-    // round-trip bit-exactly — sim_cascade_topk's oracle verbatim.
-    "sim_cascade_managed" -> ("WITH " + binChain(includeNrm = false) + ", " +
-      PqChain + HammingTail + CascadeAdcTail +
-      pqRerankTail(50, "cascranked") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // Auto cascade: both keep budgets recomputed from count(*) in-query
-    // (`greatest` + `ceil(sqrt(...))` are IEEE-exact on integer counts —
-    // the autoNLists precedent), pinning cascadeAutoDials' values.
-    "sim_cascade_auto" -> ("WITH " + binChain(includeNrm = false) + ", " +
-      PqChain + HammingTail +
-      cascadeAdcTailSql(
-        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
-      pqRerankTailSql(
-        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
-        "cascranked") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "sim_cascade_auto_recall" -> ("WITH " + binChain(includeNrm = false) +
-      ", " + PqChain + HammingTail +
-      cascadeAdcTailSql(
-        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
-      pqRerankTailSql(
-        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
-        "cascranked") + recallTail(0.8, "rranked")),
-
-    // Stored stage-2 codes round-trip bit-exactly — sim_cascade_auto's
-    // replay verbatim.
-    "sim_cascade_auto_managed" -> ("WITH " + binChain(includeNrm = false) +
-      ", " + PqChain + HammingTail +
-      cascadeAdcTailSql(
-        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
-      pqRerankTailSql(
-        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
-        "cascranked") +
-      """
-        |SELECT query_id, rank, neighbor_id, cos FROM rranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)
-  )
-
-  // ------------------------------------------------------ multimodal family
-
-  private def mmQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_binary_meta" -> ((s, dir) => Multimodal.metaQuery(s, dir)),
-    // Stubbed decode via mapPartitions; the deterministic stub is mirrored
-    // symbolically by the SQL oracle, so the row hash-compares.
-    "mm_feature_extract" -> ((s, dir) => {
-      Multimodal.extractFeatures(Multimodal.mediaFromEvents(s, dir)).toDF()
-        .select(col("media_id"), col("modality"), col("ok"),
-          round(element_at(col("feature"), 1).cast("double"), 4).as("f0"))
-        .orderBy("media_id")
-    }),
-    // Frame sampling over the video modality (1->N flatMap) — the frame
-    // count formula is mirrored in SQL, so the row hash-compares.
-    "mm_frame_sample" -> ((s, dir) => {
-      Multimodal.frameSampleStub(
-        Multimodal.mediaFromEvents(s, dir), frameBytes = 4, stride = 2).toDF()
-        .groupBy("media_id").agg(count(lit(1)).as("n_frames"))
-        .orderBy("media_id")
-    }),
-
-    // Asset-level exact dedup BEFORE decode: only md5 digests shuffle,
-    // never the media bytes.
-    "mm_dedup_binary" -> ((s, dir) =>
-      Multimodal.dedupBinary(Multimodal.mediaFromEvents(s, dir))),
-
-    // Perceptual near-dup — the class mm_dedup_binary is blind to: the
-    // phash lake ships 2x-upscaled copies (different bytes, same image)
-    // and one-pixel perturbations; REAL BMP decode -> 9x8 resample ->
-    // dHash -> banded Hamming pairing. The oracle recomputes every hash
-    // symbolically from the synthesis arithmetic, so a drift anywhere in
-    // encode/decode/resample/hash/banding hash-mismatches the row.
-    "mm_dedup_phash" -> ((s, dir) =>
-      Multimodal.dedupPhash(Multimodal.phashLake(s, dir), 3)),
-
-    // Auto-dialed lake: base-image class count = max(64, n/16), oracle-
-    // recomputed from count(*). The fixed-64 lake's duplicate classes grow
-    // with the corpus (pairs ~ n²/64 — output volume, not operator cost),
-    // so THIS is the probe-valid row: class size stays ~16 at every scale
-    // and the pair output stays linear.
-    "mm_dedup_phash_auto" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/documents.parquet").count()
-      Multimodal.dedupPhash(
-        Multimodal.phashLakeScaled(s, dir, math.max(64L, n / 16)), 3)
-    }),
-
-    // REAL audio decode — the WAV twin of mm_decode: the lake synthesizes
-    // genuine RIFF/WAVE PCM files (deterministic samples), javax.sound
-    // decodes actual PCM back, the oracle recomputes the sample sequence
-    // symbolically. A codec bug on either side (header layout, endianness,
-    // the 2x-upsample rate tag) breaks the digest.
-    "mm_audio_decode" -> ((s, dir) => {
-      Multimodal.decodeAudio(Multimodal.audioLake(s, dir)).toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("ok"),
-          md5(concat_ws(",", col("samples").cast("array<string>")))
-            .as("pcm_md5"))
-        .orderBy("media_id")
-    }),
-    // REAL resample to the base rate: the 2x clips decimate back onto
-    // their base samples exactly (nearest, integer arithmetic), the 1x
-    // clips pass through — every doc lands on the SAME 8 kHz stream its
-    // class defines, which is the property the fingerprint relies on.
-    "mm_audio_resample" -> ((s, dir) => {
-      Multimodal.resampleAudio(Multimodal.audioLake(s, dir),
-        Multimodal.AudioRate).toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("ok"),
-          md5(concat_ws(",", col("samples").cast("array<string>")))
-            .as("pcm_md5"))
-        .orderBy("media_id")
-    }),
-    // 64-bit acoustic fingerprint: decode -> rate-normalizing decimation
-    // -> 65 frame energies -> energy-delta bits. The 2x-upsampled clips
-    // MUST print identically to their base (the oracle computes every
-    // print from base samples only — a broken normalization mismatches).
-    "mm_audio_fingerprint" -> ((s, dir) =>
-      Multimodal.audioFingerprints(Multimodal.audioLake(s, dir))
-        .orderBy("media_id")),
-    // Acoustic near-dup, auto-dialed base-clip classes (the
-    // mm_dedup_phash_auto convention: class size stays ~16, pair output
-    // linear): re-sampled copies pair at distance 0, single-sample edits
-    // within the Hamming budget.
-    "mm_dedup_audio_auto" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/documents.parquet").count()
-      Multimodal.dedupAudio(
-        Multimodal.audioLake(s, dir, math.max(64L, n / 16)), 3)
-    }),
-
-    // REAL video decode — the last modality loses its stub: the lake
-    // synthesizes genuine AVI containers (uncompressed 24-bit DIB
-    // frames), the lock-free chunk walk decodes actual frames back, and
-    // the oracle recomputes every pixel of every frame symbolically. A
-    // bug anywhere in container layout, row direction, channel order,
-    // frame order, or the fps tag breaks the digest.
-    "mm_video_decode" -> ((s, dir) => {
-      Multimodal.decodeVideo(Multimodal.videoLake(s, dir)).toDF()
-        .select(col("media_id"),
-          col("width").cast(LongType).as("width"),
-          col("height").cast(LongType).as("height"),
-          col("fps").cast(LongType).as("fps"),
-          col("n_frames").cast(LongType).as("n_frames"),
-          col("ok"),
-          md5(concat_ws(",", col("gray").cast("array<string>")))
-            .as("gray_md5"))
-        .orderBy("media_id")
-    }),
-    // REAL frame sampling (supersedes the mm_frame_sample stub's byte
-    // chunking): every 4th decoded frame, per-frame pixel digest — the
-    // 1->N flatMap rides the same decode pass, skipped frames never
-    // leave the scan partition.
-    "mm_frame_sample_real" -> ((s, dir) => {
-      Multimodal.frameSampleReal(Multimodal.videoLake(s, dir), 4).toDF()
-        .select(col("media_id"), col("frame_no"),
-          md5(concat_ws(",", col("gray").cast("array<string>")))
-            .as("frame_md5"))
-        .orderBy("media_id", "frame_no")
-    }),
-    // Perceptual video near-dup, auto-dialed base-clip classes (the
-    // mm_dedup_phash_auto convention): per-frame dHash -> majority vote
-    // -> banded Hamming pairing. Frame-rate-doubled copies pair at
-    // distance 0, per-frame watermarks within the Hamming budget.
-    "mm_dedup_video_auto" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/documents.parquet").count()
-      Multimodal.dedupVideo(
-        Multimodal.videoLake(s, dir, math.max(64L, n / 16)), 3)
-    }),
-
-    // REAL feature extraction over the MIXED lake (all three modalities
-    // unioned, dispatch by payload sniffing): image gray histogram,
-    // audio frame energies, video frame brightness — one fixed-width
-    // integer vector per asset, every cell oracle-recomputed from the
-    // lake arithmetic. The "one API over a heterogeneous media crawl"
-    // shape; supersedes the mm_feature_extract stub for real payloads.
-    "mm_feature_extract_real" -> ((s, dir) =>
-      Multimodal.extractFeaturesReal(Multimodal.mixedLake(s, dir)).toDF()
-        .select(col("media_id"), col("modality"), col("ok"),
-          md5(concat_ws(",", col("feature").cast("array<string>")))
-            .as("feat_md5"))
-        .orderBy("modality", "media_id")),
-
-    // Incremental media near-dup: odd-id assets (the "new batch") pair
-    // against even-id assets (the "existing corpus") whose prints are
-    // served from the persisted mediafp store — built on first run,
-    // parquet after, so repeat batches never re-decode the old corpus.
-    // One cross-corpus banded Hamming join with modality on the key
-    // covers audio + video at once; auto-dialed classes.
-    "mm_dedup_media_incremental" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/documents.parquet").count()
-      // odd dial: see dedupMediaIncremental's parity note
-      Multimodal.dedupMediaIncremental(s, dir, math.max(63L, (n / 16) | 1L))
-    }),
-
-    // Recall gate for the perceptual near-dup topology: per modality,
-    // the banded Hamming pairing's pair count vs the EXACT
-    // Hamming<=3 brute force over the same bounded sample (media_id <
-    // 500 — all-pairs stays ~125k/modality at any sf). The banding is
-    // pigeonhole-complete for maxDist <= 3, so the oracle DECLARES
-    // recall 1.0 (n_banded = the brute-force count it computes): a
-    // banding regression that drops any pair flips the committed
-    // n_banded/recall_ok visibly. The ANN families' recall-row doctrine
-    // applied to the media lakes.
-    // Cache lifecycle (the dedupMediaIncremental convention): this row
-    // caches `prints` and hammingPairsFromSig's interior sig table for
-    // within-query reuse; a registry query returns a LAZY plan, so the
-    // cleanup thunk cannot fire here — the caller must clearCache after
-    // materializing (Verify/Bench do, between every query).
-    "mm_dedup_recall" -> ((s, dir) => {
-      val bound = 500L
-      val prints = Multimodal.mediaPrints(
-        Multimodal.phashLakeScaled(s, dir, 64)
-          .filter(col("media_id") < bound),
-        Multimodal.audioLake(s, dir, 64)
-          .filter(col("media_id") < bound),
-        Multimodal.videoLake(s, dir, 64)
-          .filter(col("media_id") < bound)).cache()
-      // brute force: all pairs within a modality (bounded sample — the
-      // quadratic side is the POINT of the row; never run unbounded)
-      val exact = prints.as("a")
-        .join(prints.as("b").hint("SHUFFLE_MERGE"),
-          col("a.modality") === col("b.modality") &&
-            col("a.media_id") < col("b.media_id"))
-        .where(bit_count(col("a.fp").bitwiseXOR(col("b.fp"))) <= 3)
-        .groupBy(col("a.modality").as("modality"))
-        .agg(count(lit(1)).as("n_exact"))
-      // ONE keyed pairing over the heterogeneous print table (modality
-      // rides every join) — three per-modality calls would rebuild the
-      // distinct-signature level and its interior cache three times
-      val banded = Dedup.hammingPairsFromSig(
-        prints.select(col("modality"), col("media_id").as("doc_id"),
-          col("fp").as("simhash")),
-        64, 3, Seq("modality"))._1
-        .groupBy("modality").agg(count(lit(1)).as("n_banded"))
-      prints.groupBy("modality").agg(count(lit(1)).as("n_sampled"))
-        .join(exact, Seq("modality"), "left")
-        .join(banded, Seq("modality"), "left")
-        .select(col("modality"), col("n_sampled"),
-          coalesce(col("n_exact"), lit(0L)).as("n_exact"),
-          coalesce(col("n_banded"), lit(0L)).as("n_banded"),
-          when(coalesce(col("n_exact"), lit(0L)) > 0,
-            graft.ops.TextAnalysis.round6(
-              col("n_banded").cast("double") / col("n_exact")))
-            .as("recall"),
-          (coalesce(col("n_banded"), lit(0L)) >=
-            coalesce(col("n_exact"), lit(0L))).as("recall_ok"))
-        .orderBy("modality")
-    }),
-
-    // Media-lake inventory — the media twin of pipeline_report: one row
-    // per modality with asset count, payload bytes (container sizes
-    // recomputed symbolically by the oracle), distinct prints, and the
-    // hamming-0 duplicate volume. Auto-dialed classes.
-    "pipeline_media_report" -> ((s, dir) => {
-      val n = s.read.parquet(s"$dir/documents.parquet").count()
-      Multimodal.mediaReport(s, dir, math.max(64L, n / 16))
-    }),
-
-    // Stubbed resize (8x4 = 32-byte grid, payload bytes repeated
-    // cyclically): the grid is deterministic, so its md5 is mirrored in
-    // SQL as md5 of the payload string tiled to 32 chars (ASCII payloads
-    // make byte == char). Empty payloads are excluded on both sides — the
-    // all-zero-byte grid is not expressible as a DuckDB VARCHAR.
-    "mm_resize" -> ((s, dir) => {
-      val media = Multimodal.mediaFromEvents(s, dir)
-        .where(col("byte_len") > 0)
-      Multimodal.resizeStub(media, 8, 4).toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          md5(col("payload")).as("resized_md5"))
-        .orderBy("media_id")
-    }),
-
-    // REAL decode — no stub: the lake synthesizes genuine BMP files
-    // (deterministic pixels), ImageIO decodes actual pixels back, and the
-    // oracle recomputes the expected pixel sequence symbolically. A codec
-    // bug on either side (encoder layout, decoder channel order, row
-    // direction) breaks the digest.
-    "mm_decode" -> ((s, dir) => {
-      Multimodal.decodeImages(Multimodal.syntheticImageLake(s, dir)).toDF()
-        .select(col("media_id"), col("width"), col("height"), col("ok"),
-          md5(concat_ws(",", col("gray").cast("array<string>"))).as("gray_md5"))
-        .orderBy("media_id")
-    }),
-    // REAL resize: ImageIO decode + nearest-neighbor resample to 5x3 —
-    // deliberately non-integer ratios (12/5, 8/3) so the floor arithmetic
-    // is exercised; the oracle mirrors out(x,y) = in(y*H/h, x*W/w)
-    // symbolically.
-    "mm_resize_real" -> ((s, dir) => {
-      Multimodal.resizeImages(Multimodal.syntheticImageLake(s, dir), 5, 3).toDF()
-        .select(col("media_id"), col("width"), col("height"), col("ok"),
-          md5(concat_ws(",", col("gray").cast("array<string>"))).as("gray_md5"))
-        .orderBy("media_id")
-    })
-  )
-
-  private def mmOracles: Map[String, String] = Map(
-    // feature[0] = float32(sum of every-8th byte / 255): ASCII payloads make
-    // ord(char) == byte; the float narrowing absorbs sum-order noise
-    "mm_feature_extract" ->
-      """SELECT e.event_id AS media_id,
-        |  CASE CAST(e.event_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |       ELSE 'video' END AS modality,
-        |  true AS ok,
-        |  round(CAST(CAST(sum(ord(substr(e.props, g.p, 1)) / 255.0) AS REAL) AS DOUBLE), 4) AS f0
-        |FROM events e, LATERAL (
-        |  SELECT unnest(generate_series(1, length(e.props), 8)) AS p) g
-        |GROUP BY e.event_id ORDER BY media_id""".stripMargin,
-
-    // frame count is arithmetic on payload length: ceil(len/4) chunks,
-    // every 2nd kept -> (chunks+1)//2, video modality = event_id%3==2
-    "mm_frame_sample" ->
-      """SELECT event_id AS media_id,
-        |  (CAST(ceil(length(props) / 4.0) AS BIGINT) + 1) // 2 AS n_frames
-        |FROM events WHERE event_id % 3 = 2 AND length(props) > 0
-        |ORDER BY media_id""".stripMargin,
-
-    "mm_binary_meta" ->
-      """SELECT event_id AS media_id,
-        |  CASE CAST(event_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |       ELSE 'video' END AS modality,
-        |  CASE WHEN substr(props, 1, 1) = '{' THEN 'json' ELSE 'raw' END AS format,
-        |  CAST(length(props) AS BIGINT) AS byte_len,
-        |  md5(props) AS payload_md5
-        |FROM events ORDER BY media_id""".stripMargin,
-
-    "mm_dedup_binary" ->
-      """SELECT md5(props) AS asset_md5, min(event_id) AS keep_id,
-        |  CAST(count(*) AS BIGINT) AS n_copies,
-        |  CAST(sum(length(props)) AS BIGINT) AS bytes_total
-        |FROM events GROUP BY asset_md5 ORDER BY keep_id""".stripMargin,
-
-    // Symbolic dHash replay of the phash lake: per doc, the 9x8 resample
-    // reads base slot (y*12 + ((x*12*s)//9)//s) of pattern
-    // (doc_id%64)*37*slot + slot^2*11 (mod 256, +128 at the perturbed
-    // slot), bit j compares horizontal neighbors (mask literals + bit_or
-    // — the binChain shape), pairs via the same 4x16-bit chunk banding.
-    "mm_dedup_phash" -> {
-      val masks = graft.ops.Quantization.signMasks(64)
-        .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-      s"""WITH pm AS (SELECT $masks AS ms),
-         |pg AS (
-         |  SELECT doc_id,
-         |    list_transform(
-         |      list_transform(range(0, 72), j ->
-         |        (j // 9) * 12 +
-         |        CASE WHEN doc_id % 3 = 0 THEN ((j % 9) * 24 // 9) // 2
-         |             ELSE (j % 9) * 12 // 9 END),
-         |      sl -> CASE WHEN doc_id % 5 = 0 AND sl = (doc_id * 7) % 96
-         |                 THEN ((doc_id % 64) * 37 * sl + sl * sl * 11
-         |                       + 128) % 256
-         |                 ELSE ((doc_id % 64) * 37 * sl + sl * sl * 11)
-         |                      % 256 END) AS g
-         |  FROM documents
-         |), psig AS (
-         |  SELECT doc_id,
-         |    list_aggregate(list_transform(range(0, 64),
-         |      j -> CASE WHEN g[(j // 8) * 9 + (j % 8) + 2] >
-         |                     g[(j // 8) * 9 + (j % 8) + 1]
-         |           THEN ms[j + 1] ELSE 0::BIGINT END), 'bit_or') AS ph
-         |  FROM pg, pm
-         |), pch AS (
-         |  SELECT doc_id, ph, c, (ph >> (c * 16)) & 65535 AS ckey
-         |  FROM psig, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) cc
-         |)
-         |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-         |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-         |FROM pch a JOIN pch b
-         |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph, b.ph)) <= 3
-         |ORDER BY d1, d2""".stripMargin
-    },
-
-    // Same pipeline, auto-dialed lake: base = doc_id % cm with
-    // cm = greatest(64, n/16) recomputed from count(*); pixel(i) =
-    // ((base%256)*37*i + (11 + base//256)*i*i) % 256 — base feeds BOTH
-    // coefficients because mod-256 arithmetic caps any single-coefficient
-    // family at 256 distinct images (see Multimodal.phashLakeScaled).
-    "mm_dedup_phash_auto" -> {
-      val masks = graft.ops.Quantization.signMasks(64)
-        .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-      s"""WITH pm AS (SELECT $masks AS ms),
-         |cmv AS (SELECT greatest(64, count(*) // 16) AS cm FROM documents),
-         |pg AS (
-         |  SELECT doc_id,
-         |    list_transform(
-         |      list_transform(range(0, 72), j ->
-         |        (j // 9) * 12 +
-         |        CASE WHEN doc_id % 3 = 0 THEN ((j % 9) * 24 // 9) // 2
-         |             ELSE (j % 9) * 12 // 9 END),
-         |      sl -> CASE WHEN doc_id % 5 = 0 AND sl = (doc_id * 7) % 96
-         |                 THEN (((doc_id % cm) % 256) * 37 * sl
-         |                       + (11 + (doc_id % cm) // 256) * sl * sl
-         |                       + 128) % 256
-         |                 ELSE (((doc_id % cm) % 256) * 37 * sl
-         |                       + (11 + (doc_id % cm) // 256) * sl * sl)
-         |                      % 256 END) AS g
-         |  FROM documents, cmv
-         |), psig AS (
-         |  SELECT doc_id,
-         |    list_aggregate(list_transform(range(0, 64),
-         |      j -> CASE WHEN g[(j // 8) * 9 + (j % 8) + 2] >
-         |                     g[(j // 8) * 9 + (j % 8) + 1]
-         |           THEN ms[j + 1] ELSE 0::BIGINT END), 'bit_or') AS ph
-         |  FROM pg, pm
-         |), pch AS (
-         |  SELECT doc_id, ph, c, (ph >> (c * 16)) & 65535 AS ckey
-         |  FROM psig, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) cc
-         |)
-         |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-         |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-         |FROM pch a JOIN pch b
-         |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph, b.ph)) <= 3
-         |ORDER BY d1, d2""".stripMargin
-    },
-
-    // resized grid = payload tiled cyclically to 32 bytes (out[i] =
-    // payload[i % len]) == substr(repeat(props, ceil(32/len)), 1, 32)
-    "mm_resize" ->
-      """SELECT event_id AS media_id, 8 AS width, 4 AS height,
-        |  md5(substr(repeat(props,
-        |    CAST(ceil(32.0 / length(props)) AS INT)), 1, 32)) AS resized_md5
-        |FROM events WHERE length(props) > 0
-        |ORDER BY media_id""".stripMargin,
-
-    // the synthesized 12x8 BMP's pixel i = (doc_id*31 + i) % 256 — the
-    // Spark side goes through a REAL BMP encode + ImageIO decode; the
-    // oracle regenerates the sequence directly, so only a faithful
-    // encode→decode round trip matches
-    "mm_decode" ->
-      """SELECT doc_id AS media_id, 12 AS width, 8 AS height, true AS ok,
-        |  md5(array_to_string(list_transform(range(0, 96),
-        |    i -> CAST((doc_id * 31 + i) % 256 AS INT)), ',')) AS gray_md5
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // nearest-neighbor 12x8 -> 5x3: out j (x=j%5, y=j//5) samples source
-    // index (y*8//3)*12 + x*12//5 of the same synthesized pixel sequence
-    "mm_resize_real" ->
-      """SELECT doc_id AS media_id, 5 AS width, 3 AS height, true AS ok,
-        |  md5(array_to_string(list_transform(range(0, 15),
-        |    j -> CAST((doc_id * 31 +
-        |      ((j // 5) * 8 // 3) * 12 + ((j % 5) * 12 // 5)) % 256 AS INT)),
-        |    ',')) AS gray_md5
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // Symbolic replay of the WAV lake + JDK decode: %3 docs decode to the
-    // 2x-upsampled sample stream (U(j) = s[j//2], rate 16 kHz); samples
-    // ((lin*i + quad*i^2) % 4096) - 2048 (+512 at the %5 perturbation) —
-    // the digest only matches a faithful RIFF encode -> javax.sound
-    // decode round trip.
-    "mm_audio_decode" -> ("WITH " + audioCtes("SELECT 64 AS cm") +
-      s"""
-         |SELECT doc_id AS media_id,
-         |  CASE WHEN doc_id % 3 = 0 THEN 16000 ELSE 8000 END AS sample_rate,
-         |  CASE WHEN doc_id % 3 = 0 THEN ${2 * graft.ops.Multimodal.AudioLen}
-         |       ELSE ${graft.ops.Multimodal.AudioLen} END AS n_samples,
-         |  true AS ok,
-         |  md5(array_to_string(
-         |    CASE WHEN doc_id % 3 = 0
-         |      THEN list_transform(range(0, ${2 * graft.ops.Multimodal.AudioLen}),
-         |             j -> s[j // 2 + 1])
-         |      ELSE s END, ',')) AS pcm_md5
-         |FROM asmp ORDER BY media_id""".stripMargin),
-
-    // resample-to-base: every doc (1x passthrough or 2x decimated) lands
-    // exactly on its class's base sample list
-    "mm_audio_resample" -> ("WITH " + audioCtes("SELECT 64 AS cm") +
-      s"""
-         |SELECT doc_id AS media_id,
-         |  ${graft.ops.Multimodal.AudioRate} AS sample_rate,
-         |  ${graft.ops.Multimodal.AudioLen} AS n_samples, true AS ok,
-         |  md5(array_to_string(s, ',')) AS pcm_md5
-         |FROM asmp ORDER BY media_id""".stripMargin),
-
-    // Energy-delta fingerprint from BASE samples only: the Spark side's
-    // rate normalization must collapse the 2x clips back onto their base
-    // for the prints to agree.
-    "mm_audio_fingerprint" -> ("WITH " + audioCtes("SELECT 64 AS cm") +
-      s""", ${audioSigCtes}
-         |SELECT doc_id AS media_id, CAST(fp AS BIGINT) AS fp
-         |FROM asig ORDER BY media_id""".stripMargin),
-
-    // Mixed-lake real features: all three modalities' vectors
-    // recomputed symbolically (image histogram over (id·31+i) mod 256,
-    // audio energies over the asmp sample lists incl. the 2x-upsample
-    // index map, video brightness over the frame pixel formula).
-    "mm_feature_extract_real" -> ("WITH " + audioCtes("SELECT 64 AS cm") +
-      ", " + videoCtes("SELECT 64 AS cm") +
-      s""",
-         |fimg AS (
-         |  SELECT doc_id AS media_id, 'image' AS modality, true AS ok,
-         |    md5(array_to_string(list_transform(range(0, 8), b ->
-         |      len(list_filter(range(0, 96), i ->
-         |        ((doc_id * 31 + i) % 256) // 32 = b))), ',')) AS feat_md5
-         |  FROM documents),
-         |faud AS (
-         |  SELECT doc_id AS media_id, 'audio' AS modality, true AS ok,
-         |    md5(array_to_string(list_transform(range(0, 8), f ->
-         |      list_aggregate(list_transform(range(0, 32), k ->
-         |        CASE WHEN doc_id % 3 = 0
-         |          THEN s[(f * 32 + k) // 2 + 1] * s[(f * 32 + k) // 2 + 1]
-         |          ELSE s[f * 32 + k + 1] * s[f * 32 + k + 1]
-         |        END), 'sum')), ',')) AS feat_md5
-         |  FROM asmp),
-         |fvid AS (
-         |  SELECT doc_id AS media_id, 'video' AS modality, true AS ok,
-         |    md5(array_to_string(list_transform(range(0, 8), q ->
-         |      list_aggregate(list_transform(range(0, 96), i ->
-         |        ${videoPx(videoBaseFrame("q"), "i")}), 'sum')), ','))
-         |      AS feat_md5
-         |  FROM vvb)
-         |SELECT * FROM fimg UNION ALL SELECT * FROM faud
-         |UNION ALL SELECT * FROM fvid
-         |ORDER BY modality, media_id""".stripMargin),
-
-    // Inventory replay: container byte sizes are CLOSED-FORM from the
-    // encoders' layouts (BMP 54 + rows, WAV 44 + 2·samples, AVI
-    // 224 + 296·frames — a wrong header layout on the Spark side
-    // mismatches bytes_total), prints from the three symbolic sig
-    // chains at the same auto dial.
-    "pipeline_media_report" -> ("WITH " +
-      audioCtes("SELECT greatest(64, count(*) // 16) AS cm FROM documents") +
-      s", $audioSigCtes, " +
-      videoCtes("SELECT greatest(64, count(*) // 16) AS cm FROM documents") +
-      s", $videoSigCtes" +
-      s", $imageSigCtes" +
-      s""",
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents)
-         |SELECT * FROM (
-         |  SELECT 'audio' AS modality, nn.n AS n_assets,
-         |    CAST((SELECT SUM(CASE WHEN doc_id % 3 = 0 THEN 8364
-         |                          ELSE 4204 END) FROM documents)
-         |      AS BIGINT) AS bytes_total,
-         |    CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_prints,
-         |    CAST(COUNT(*) - COUNT(DISTINCT fp) AS BIGINT)
-         |      AS n_h0_dup_assets
-         |  FROM asig, nn GROUP BY nn.n
-         |  UNION ALL
-         |  SELECT 'image', nn.n,
-         |    CAST((SELECT SUM(CASE WHEN doc_id % 3 = 0 THEN 1206
-         |                          ELSE 342 END) FROM documents)
-         |      AS BIGINT),
-         |    CAST(COUNT(DISTINCT ph) AS BIGINT),
-         |    CAST(COUNT(*) - COUNT(DISTINCT ph) AS BIGINT)
-         |  FROM psig, nn GROUP BY nn.n
-         |  UNION ALL
-         |  SELECT 'video', nn.n,
-         |    CAST((SELECT SUM(CASE WHEN doc_id % 3 = 0 THEN 10288
-         |                          ELSE 5256 END) FROM documents)
-         |      AS BIGINT),
-         |    CAST(COUNT(DISTINCT fp) AS BIGINT),
-         |    CAST(COUNT(*) - COUNT(DISTINCT fp) AS BIGINT)
-         |  FROM vsig, nn GROUP BY nn.n
-         |) ORDER BY modality""".stripMargin),
-
-    // Incremental cross-corpus pairing: image + audio + video prints
-    // recomputed symbolically for ALL docs, then every (even, odd) pair
-    // within Hamming 3 per modality — the Spark side's store detour
-    // must be invisible in the result (store build == fresh prints).
-    "mm_dedup_media_incremental" -> ("WITH " +
-      audioCtes(
-        "SELECT greatest(63, (count(*) // 16) | 1) AS cm FROM documents") +
-      s", $audioSigCtes, " +
-      videoCtes(
-        "SELECT greatest(63, (count(*) // 16) | 1) AS cm FROM documents") +
-      s", $videoSigCtes" +
-      // image dHash under the same odd dial; cm rides in from the
-      // audio branch's aac (see imageSigCtes)
-      s", $imageSigCtes" +
-      """
-        |, mps AS (
-        |  SELECT 'image' AS modality, doc_id, CAST(ph AS BIGINT) AS fp
-        |  FROM psig
-        |  UNION ALL
-        |  SELECT 'audio' AS modality, doc_id, CAST(fp AS BIGINT) AS fp
-        |  FROM asig
-        |  UNION ALL
-        |  SELECT 'video' AS modality, doc_id, CAST(fp AS BIGINT) AS fp
-        |  FROM vsig),
-        |mch AS (
-        |  SELECT modality, doc_id, fp, cc.c,
-        |         (fp >> (cc.c * 16)) & 65535 AS ckey
-        |  FROM mps, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) cc)
-        |SELECT DISTINCT a.modality AS modality, a.doc_id AS d1,
-        |  b.doc_id AS d2,
-        |  CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-        |FROM mch a JOIN mch b
-        |  ON a.modality = b.modality AND a.c = b.c AND a.ckey = b.ckey
-        |  AND a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |WHERE bit_count(xor(a.fp, b.fp)) <= 3
-        |ORDER BY modality, d1, d2""".stripMargin),
-
-    // Recall gate: the oracle computes the EXACT Hamming<=3 brute-force
-    // pair count per modality over the bounded sample and DECLARES the
-    // banded count equal (pigeonhole completeness for maxDist <= 3) —
-    // recall 1.0. A Spark-side banding regression that drops a pair
-    // mismatches n_banded/recall/recall_ok.
-    "mm_dedup_recall" -> ("WITH " +
-      audioCtes("SELECT 64 AS cm") +
-      s", $audioSigCtes, " +
-      videoCtes("SELECT 64 AS cm") +
-      s", $videoSigCtes" +
-      s", $imageSigCtes" +
-      """
-        |, mps AS (
-        |  SELECT 'image' AS modality, doc_id, CAST(ph AS BIGINT) AS fp
-        |  FROM psig WHERE doc_id < 500
-        |  UNION ALL
-        |  SELECT 'audio' AS modality, doc_id, CAST(fp AS BIGINT) AS fp
-        |  FROM asig WHERE doc_id < 500
-        |  UNION ALL
-        |  SELECT 'video' AS modality, doc_id, CAST(fp AS BIGINT) AS fp
-        |  FROM vsig WHERE doc_id < 500),
-        |ex AS (
-        |  SELECT a.modality, CAST(count(*) AS BIGINT) AS n_exact
-        |  FROM mps a JOIN mps b
-        |    ON a.modality = b.modality AND a.doc_id < b.doc_id
-        |  WHERE bit_count(xor(a.fp, b.fp)) <= 3
-        |  GROUP BY a.modality),
-        |ns AS (
-        |  SELECT modality, CAST(count(*) AS BIGINT) AS n_sampled
-        |  FROM mps GROUP BY modality)
-        |SELECT ns.modality, ns.n_sampled,
-        |  CAST(coalesce(ex.n_exact, 0) AS BIGINT) AS n_exact,
-        |  CAST(coalesce(ex.n_exact, 0) AS BIGINT) AS n_banded,
-        |  CASE WHEN coalesce(ex.n_exact, 0) > 0
-        |       THEN floor(1.0 * 1000000 + 0.5) / 1000000 END AS recall,
-        |  true AS recall_ok
-        |FROM ns LEFT JOIN ex ON ns.modality = ex.modality
-        |ORDER BY ns.modality""".stripMargin),
-
-    // Symbolic replay of the AVI lake: every pixel of every payload
-    // frame recomputed from the synthesis arithmetic (watermark slot,
-    // upsampled base-frame mapping, the fps/frame-count tags), flattened
-    // frame-major and digested — drift anywhere in AVI encode, the chunk
-    // walk, DIB row order, or channel extraction hash-mismatches.
-    "mm_video_decode" -> ("WITH " + videoCtes("SELECT 64 AS cm") +
-      s""",
-         |vflat AS (
-         |  SELECT doc_id,
-         |    flatten(list_transform(range(0, $videoNf), q ->
-         |      list_transform(range(0, 96), i ->
-         |        ${videoPx(videoBaseFrame("q"), "i")}))) AS g
-         |  FROM vvb)
-         |SELECT doc_id AS media_id,
-         |  12::BIGINT AS width, 8::BIGINT AS height,
-         |  CAST(CASE WHEN doc_id % 3 = 0 THEN 20 ELSE 10 END AS BIGINT)
-         |    AS fps,
-         |  CAST($videoNf AS BIGINT) AS n_frames,
-         |  true AS ok,
-         |  md5(array_to_string(g, ',')) AS gray_md5
-         |FROM vflat ORDER BY media_id""".stripMargin),
-
-    // Every 4th payload frame, per-frame digest.
-    "mm_frame_sample_real" -> ("WITH " + videoCtes("SELECT 64 AS cm") +
-      s"""
-         |SELECT doc_id AS media_id, CAST(qq.q AS BIGINT) AS frame_no,
-         |  md5(array_to_string(list_transform(range(0, 96), i ->
-         |    ${videoPx(videoBaseFrame("qq.q"), "i")}), ',')) AS frame_md5
-         |FROM vvb, LATERAL (SELECT unnest(range(0, $videoNf)) AS q) qq
-         |WHERE qq.q % 4 = 0
-         |ORDER BY media_id, frame_no""".stripMargin),
-
-    // Majority-of-frame-dHashes print from BASE frames only (the Spark
-    // side's fps normalization must collapse the 2x clips back onto
-    // their base frame sequence), banded Hamming pairing.
-    "mm_dedup_video_auto" -> ("WITH " +
-      videoCtes("SELECT greatest(64, count(*) // 16) AS cm FROM documents") +
-      s", $videoSigCtes" +
-      """
-        |, vch AS (
-        |  SELECT doc_id, CAST(fp AS BIGINT) AS ph, c,
-        |         (CAST(fp AS BIGINT) >> (c * 16)) & 65535 AS ckey
-        |  FROM vsig, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) cc
-        |)
-        |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-        |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-        |FROM vch a JOIN vch b
-        |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.ph, b.ph)) <= 3
-        |ORDER BY d1, d2""".stripMargin),
-
-    // Same pipeline, auto-dialed class count, banded Hamming pairing (the
-    // mm_dedup_phash_auto topology in sample space).
-    "mm_dedup_audio_auto" -> ("WITH " +
-      audioCtes("SELECT greatest(64, count(*) // 16) AS cm FROM documents") +
-      s""", ${audioSigCtes}
-         |, ach AS (
-         |  SELECT doc_id, CAST(fp AS BIGINT) AS ph, c,
-         |         (CAST(fp AS BIGINT) >> (c * 16)) & 65535 AS ckey
-         |  FROM asig, LATERAL (SELECT unnest([0, 1, 2, 3]) AS c) cc
-         |)
-         |SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-         |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
-         |FROM ach a JOIN ach b
-         |  ON a.c = b.c AND a.ckey = b.ckey AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph, b.ph)) <= 3
-         |ORDER BY d1, d2""".stripMargin)
-  )
-
-  /** Frame-energy + 64-bit print CTEs over `asmp(doc_id, s)` (no leading
-    * comma handled by callers): energies are 65 frame sums of squares,
-    * print bit j = energy(j+1) > energy(j) with the signMasks literals. */
-  private def audioSigCtes: String = {
-    val masks = graft.ops.Quantization.signMasks(64)
-      .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-    s"""aam AS (SELECT $masks AS ms),
-       |aen AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, ${graft.ops.Multimodal.AudioFrames}), f ->
-       |      list_aggregate(list_transform(range(0, ${graft.ops.Multimodal.FrameLen}),
-       |        k -> s[f * ${graft.ops.Multimodal.FrameLen} + k + 1]
-       |           * s[f * ${graft.ops.Multimodal.FrameLen} + k + 1]), 'sum')) AS en
-       |  FROM asmp
-       |), asig AS (
-       |  SELECT doc_id,
-       |    list_aggregate(list_transform(range(0, ${graft.ops.Multimodal.AudioFrames - 1}),
-       |      j -> CASE WHEN en[j + 2] > en[j + 1] THEN ms[j + 1]
-       |                ELSE 0::BIGINT END), 'bit_or') AS fp
-       |  FROM aen, aam
-       |)""".stripMargin
-  }
-
-  /** Image dHash print CTEs (no leading comma): the phashLakeScaled
-    * arithmetic — spatial 2× upscale for doc_id % 3 = 0, watermark slot
-    * for doc_id % 5 = 0, 9×8 nearest resample, neighbor-compare bits.
-    * The class dial `cm` rides in from the audio branch's `aac` CTE, so
-    * callers must have [[audioCtes]] in scope. Shared by
-    * pipeline_media_report, mm_dedup_media_incremental, and
-    * mm_dedup_recall. */
-  private def imageSigCtes: String = {
-    val masks = graft.ops.Quantization.signMasks(64)
-      .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-    s"""pm AS (SELECT $masks AS ms),
-       |pg AS (
-       |  SELECT doc_id,
-       |    list_transform(
-       |      list_transform(range(0, 72), j ->
-       |        (j // 9) * 12 +
-       |        CASE WHEN doc_id % 3 = 0 THEN ((j % 9) * 24 // 9) // 2
-       |             ELSE (j % 9) * 12 // 9 END),
-       |      sl -> CASE WHEN doc_id % 5 = 0 AND sl = (doc_id * 7) % 96
-       |                 THEN (((doc_id % cm) % 256) * 37 * sl
-       |                       + (11 + (doc_id % cm) // 256) * sl * sl
-       |                       + 128) % 256
-       |                 ELSE (((doc_id % cm) % 256) * 37 * sl
-       |                       + (11 + (doc_id % cm) // 256) * sl * sl)
-       |                      % 256 END) AS g
-       |  FROM documents, aac
-       |),
-       |psig AS (
-       |  SELECT doc_id,
-       |    list_aggregate(list_transform(range(0, 64),
-       |      j -> CASE WHEN g[(j // 8) * 9 + (j % 8) + 2] >
-       |                     g[(j // 8) * 9 + (j % 8) + 1]
-       |           THEN ms[j + 1] ELSE 0::BIGINT END), 'bit_or') AS ph
-       |  FROM pg, pm
-       |)""".stripMargin
-  }
-
-  /** One Viterbi segmentation pass as a recursive CTE (requires the
-    * whole statement to open with WITH RECURSIVE): DP over word
-    * positions carrying the last [[graft.ops.Unigram.MaxPieceLen]]
-    * dp values AND best-path piece lists as columns (standard SQL
-    * forbids aggregation in the recursive term — the bounded-lookback
-    * state makes the max a `greatest` over four candidates). Tie-break
-    * = the CASE order: longest piece first —
-    * [[graft.ops.Unigram.segment]]'s loop order exactly. */
-  private def unigramViterbi(seg: String, score: String,
-                             cNorm: String): String = {
-    val g =
-      s"""greatest(
-         |      coalesce(d0 + s1.s - CC.c, -9223372036854775807),
-         |      coalesce(d1 + s2.s - CC.c, -9223372036854775807),
-         |      coalesce(d2 + s3.s - CC.c, -9223372036854775807),
-         |      coalesce(d3 + s4.s - CC.c, -9223372036854775807))""".stripMargin
-    s"""$seg AS (
-       |  SELECT w, freq, 0 AS j,
-       |    CAST(0 AS BIGINT) AS d0, CAST(NULL AS BIGINT) AS d1,
-       |    CAST(NULL AS BIGINT) AS d2, CAST(NULL AS BIGINT) AS d3,
-       |    []::VARCHAR[] AS p0, CAST(NULL AS VARCHAR[]) AS p1,
-       |    CAST(NULL AS VARCHAR[]) AS p2, CAST(NULL AS VARCHAR[]) AS p3
-       |  FROM uw
-       |  UNION ALL
-       |  SELECT w, freq, j + 1,
-       |    $g AS nd, d0, d1, d2,
-       |    CASE
-       |      WHEN d3 IS NOT NULL AND s4.s IS NOT NULL
-       |           AND d3 + s4.s - CC.c = $g
-       |        THEN list_append(p3, substr(w, j - 2, 4))
-       |      WHEN d2 IS NOT NULL AND s3.s IS NOT NULL
-       |           AND d2 + s3.s - CC.c = $g
-       |        THEN list_append(p2, substr(w, j - 1, 3))
-       |      WHEN d1 IS NOT NULL AND s2.s IS NOT NULL
-       |           AND d1 + s2.s - CC.c = $g
-       |        THEN list_append(p1, substr(w, j, 2))
-       |      ELSE list_append(p0, substr(w, j + 1, 1))
-       |    END AS np,
-       |    p0, p1, p2
-       |  FROM $seg
-       |  LEFT JOIN $score s1 ON s1.p = substr($seg.w, $seg.j + 1, 1)
-       |  LEFT JOIN $score s2 ON $seg.j >= 1
-       |    AND s2.p = substr($seg.w, $seg.j, 2)
-       |  LEFT JOIN $score s3 ON $seg.j >= 2
-       |    AND s3.p = substr($seg.w, $seg.j - 1, 3)
-       |  LEFT JOIN $score s4 ON $seg.j >= 3
-       |    AND s4.p = substr($seg.w, $seg.j - 2, 4)
-       |  CROSS JOIN $cNorm CC
-       |  WHERE $seg.j < len($seg.w)
-       |)""".stripMargin
-  }
-
-  /** One unigram EM round as CTEs: bit-quantized scores from the
-    * incoming vocab, Viterbi re-segmentation, freq-weighted piece
-    * recount, chars kept (coverage) + zero-count multis dropped —
-    * [[graft.ops.Unigram.emRound]] digit-for-digit. MATERIALIZED is
-    * load-bearing: the score table is referenced four times per
-    * recursion level and the chain nests two rounds deep — inlining
-    * re-evaluates the whole upstream chain multiplicatively. */
-  private def unigramRound(r: Int, inVocab: String): String =
-    s"""us$r AS MATERIALIZED (
-       |  SELECT p, CAST(length(bin(cnt + 1)) - 1 AS BIGINT) AS s
-       |  FROM $inVocab),
-       |uc$r AS MATERIALIZED (
-       |  SELECT CAST(length(bin(SUM(cnt) + 1)) - 1 AS BIGINT) AS c
-       |  FROM $inVocab),
-       |${unigramViterbi(s"seg$r", s"us$r", s"uc$r")},
-       |upath$r AS MATERIALIZED (
-       |  SELECT w, freq, p0 AS path FROM seg$r WHERE j = len(w)),
-       |ucnt$r AS MATERIALIZED (
-       |  SELECT tt.pp AS p, CAST(SUM(freq) AS BIGINT) AS cnt
-       |  FROM upath$r, LATERAL (SELECT unnest(path) AS pp) tt
-       |  GROUP BY tt.pp),
-       |uvocab$r AS MATERIALIZED (
-       |  SELECT c.p, coalesce(u.cnt, 0) AS cnt
-       |  FROM uchars c LEFT JOIN ucnt$r u ON u.p = c.p
-       |  UNION ALL
-       |  SELECT u.p, u.cnt FROM ucnt$r u WHERE len(u.p) >= 2)""".stripMargin
-
-  /** The full unigram training chain (word freqs → substring seed →
-    * top-512 multi + all chars → 2 EM rounds → prune to chars +
-    * top-256), ending at `uvocabf` — [[graft.ops.Unigram.train]]
-    * replayed end to end. Callers must prepend WITH RECURSIVE. */
-  private def unigramChain: String =
-    s"""uw AS MATERIALIZED (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS freq FROM (
-       |    SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |    FROM documents) t
-       |  WHERE len(w) > 0 GROUP BY w),
-       |useed AS MATERIALIZED (
-       |  SELECT substr(uw.w, ii.i, ll.l) AS p,
-       |    CAST(SUM(uw.freq) AS BIGINT) AS cnt
-       |  FROM uw,
-       |    LATERAL (SELECT unnest(range(1, len(uw.w) + 1)) AS i) ii,
-       |    LATERAL (SELECT unnest(
-       |      range(1, least(4, len(uw.w) - ii.i + 1) + 1)) AS l) ll
-       |  GROUP BY p),
-       |uchars AS MATERIALIZED (
-       |  SELECT p, cnt FROM useed WHERE len(p) = 1),
-       |uvocab0 AS MATERIALIZED (
-       |  SELECT p, cnt FROM uchars
-       |  UNION ALL
-       |  SELECT p, cnt FROM (
-       |    SELECT p, cnt FROM useed WHERE len(p) >= 2
-       |    ORDER BY cnt DESC, p LIMIT ${graft.ops.Unigram.SeedMulti}) s),
-       |${unigramRound(1, "uvocab0")},
-       |${unigramRound(2, "uvocab1")},
-       |uvocabf AS MATERIALIZED (
-       |  SELECT p, cnt FROM uvocab2 WHERE len(p) = 1
-       |  UNION ALL
-       |  SELECT p, cnt FROM (
-       |    SELECT p, cnt FROM uvocab2 WHERE len(p) >= 2
-       |    ORDER BY cnt DESC, p LIMIT ${graft.ops.Unigram.FinalMulti}) s)"""
-      .stripMargin
-
-  /** AVI-lake coefficient CTEs (no leading WITH): class dial `cm` from
-    * `cmCte`, then the lin/quad pixel coefficients and the watermark
-    * slot `pp` (−1 when absent) —
-    * [[graft.ops.Multimodal.videoLake]] digit-for-digit. */
-  private def videoCtes(cmCte: String): String =
-    s"""vvc AS ($cmCte),
-       |vvb AS (
-       |  SELECT doc_id, ((doc_id % cm) % 256) * 37 AS lin,
-       |         11 + (doc_id % cm) // 256 AS quad,
-       |         CASE WHEN doc_id % 5 = 0 THEN (doc_id * 7) % 96
-       |              ELSE -1 END AS pp
-       |  FROM documents, vvc
-       |)""".stripMargin
-
-  /** The payload frame count / base-frame mapping as SQL fragments:
-    * upsampled docs (doc_id % 3 = 0) carry 2× frames at 2× fps, payload
-    * frame q showing base frame q/2. */
-  private def videoNf: String =
-    s"CASE WHEN doc_id % 3 = 0 THEN ${2 * graft.ops.Multimodal.VideoFrames}" +
-      s" ELSE ${graft.ops.Multimodal.VideoFrames} END"
-  private def videoBaseFrame(q: String): String =
-    s"CASE WHEN doc_id % 3 = 0 THEN ($q) // 2 ELSE ($q) END"
-  /** Pixel value of base frame `f`, slot `i` (both SQL fragments),
-    * watermark applied. */
-  private def videoPx(f: String, i: String): String =
-    s"(lin * ($i) + quad * ($i) * ($i) + 29 * ($f)" +
-      s" + CASE WHEN ($i) = pp THEN 128 ELSE 0 END) % 256"
-
-  /** Majority-of-frame-dHashes print CTEs over `vvb` (no leading
-    * comma): per base frame, the 9x8 nearest-resample grid (slot
-    * (j//9)*12 + ((j%9)*12)//9 — the mm_dedup_phash resample one frame
-    * at a time), dHash bit j = grid[x+1] > grid[x], then bit j of the
-    * video print = majority over the 17 frames (odd: no ties). */
-  private def videoSigCtes: String = {
-    val masks = graft.ops.Quantization.signMasks(64)
-      .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
-    s"""vm AS (SELECT $masks AS ms),
-       |vgrid AS (
-       |  SELECT doc_id, ff.f AS f,
-       |    list_transform(
-       |      list_transform(range(0, 72), j ->
-       |        (j // 9) * 12 + ((j % 9) * 12) // 9),
-       |      sl -> ${videoPx("ff.f", "sl")}) AS g
-       |  FROM vvb, LATERAL (SELECT unnest(range(0,
-       |    ${graft.ops.Multimodal.VideoFrames})) AS f) ff
-       |),
-       |vbit AS (
-       |  SELECT doc_id, jj.j AS j,
-       |    CASE WHEN g[(jj.j // 8) * 9 + (jj.j % 8) + 2] >
-       |              g[(jj.j // 8) * 9 + (jj.j % 8) + 1]
-       |         THEN 1 ELSE 0 END AS b
-       |  FROM vgrid, LATERAL (SELECT unnest(range(0, 64)) AS j) jj
-       |),
-       |vsig AS (
-       |  SELECT doc_id,
-       |    bit_or(CASE WHEN cnt * 2 > ${graft.ops.Multimodal.VideoFrames}
-       |           THEN ms[j + 1] ELSE 0::BIGINT END) AS fp
-       |  FROM (SELECT doc_id, j, sum(b) AS cnt FROM vbit
-       |        GROUP BY doc_id, j), vm
-       |  GROUP BY doc_id
-       |)""".stripMargin
-  }
-
-  /** WAV-lake sample CTEs (no leading WITH): class dial `cm` from
-    * `cmCte`, then lin/quad coefficients and the perturbed base sample
-    * list — [[graft.ops.Multimodal.audioLake]] digit-for-digit. */
-  private def audioCtes(cmCte: String): String =
-    s"""aac AS ($cmCte),
-       |aab AS (
-       |  SELECT doc_id, ((doc_id % cm) % 4096) * 7 + 3 AS lin,
-       |         13 + (doc_id % cm) // 4096 AS quad
-       |  FROM documents, aac
-       |), asmp AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, ${graft.ops.Multimodal.AudioLen}), i ->
-       |      ((lin * i + quad * i * i) % 4096) - 2048
-       |      + CASE WHEN doc_id % 5 = 0
-       |             AND i = (doc_id * 11) % ${graft.ops.Multimodal.AudioLen}
-       |             THEN 512 ELSE 0 END) AS s
-       |  FROM aab
-       |)""".stripMargin
-
-  // ------------------------------------------------------ relational family
-  // Beyond-parity (SURVEY.md §2.2): the reference has no joins/aggregations;
-  // these come from Spark SQL and double as the bench headliners.
-
-  private def relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // TPC-H Q1-style pricing summary: partial-agg-friendly single shuffle.
-    "q1_pricing_summary" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .where(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum("l_quantity").as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(avg("l_quantity"), 6).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // TPC-H Q3-style: broadcast the filtered dimensions into the fact scan.
-    "q3_top_orders" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_mktsegment") === "BUILDING")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_orderdate") < lit("1997-01-01"))
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-        .where(col("l_shipdate") > lit("1997-01-01"))
-      li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
-          col("o_orderpriority"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // TPC-H Q5-style: star join, all dims broadcast, one fact shuffle.
-    "q5_region_revenue" -> ((s, dir) => {
-      val region = s.read.parquet(s"$dir/region.parquet")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy("r_name")
-    }),
-
-    // TPC-H Q6-style: pure filter + aggregate, fully pushed to the scan.
-    "q6_forecast_revenue" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .where(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1997-01-01") &&
-          col("l_discount").between(0.03, 0.07) && col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"), count(lit(1)).as("n_items"))
-    }),
-
-    // Ranking window: top-3 customers by balance per nation.
-    "q_window_top_customers" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      s.read.parquet(s"$dir/customer.parquet")
-        .withColumn("rank", row_number().over(w).cast(LongType))
-        .where(col("rank") <= 3)
-        .select(col("c_nationkey").as("nationkey"), col("rank"),
-          col("c_custkey").as("custkey"), col("c_acctbal").as("acctbal"))
-        .orderBy("nationkey", "rank")
-    }),
-
-    // Exact distinct cardinalities (oracle-checked); the HLL-sketch twin
-    // below demonstrates the approximate path for 100TB cardinalities.
-    "q_count_distinct" -> ((s, dir) => {
-      Records.fromEvents(s, dir)
-        .groupBy("topic")
-        .agg(countDistinct(col("key")).as("n_users"),
-          count(lit(1)).as("n_events"))
-        .orderBy("topic")
-    }),
-    // approx_count_distinct (HyperLogLog++) + approx_percentile sketches.
-    // No other engine reproduces a sketch bit-for-bit, so the oracle
-    // contract is a BOUNDS assertion computed inside the query: each
-    // approximate answer must land within its published error envelope of
-    // the exact answer computed alongside it (HLL: |approx-exact| <=
-    // 3*rsd*exact; percentile: the approx value's true rank within 0.02 of
-    // the target quantile). The flags ship as columns the oracle asserts
-    // are literally 1 — a sketch drifting out of bounds turns the row red.
-    "q_sketch_distinct" -> ((s, dir) => {
-      val ev = Records.fromEvents(s, dir)
-        .select(col("topic"), col("key"), col("offset"))
-      val agg = ev.groupBy("topic")
-        .agg(approx_count_distinct(col("key"), 0.02).as("approx_users"),
-          countDistinct(col("key")).as("n_users"),
-          count(lit(1)).as("n_events"),
-          expr("approx_percentile(offset, array(0.5D, 0.95D), 10000)")
-            .as("oq"))
-        .select(col("topic"), col("n_users"), col("n_events"),
-          col("approx_users"),
-          element_at(col("oq"), 1).as("ap50"),
-          element_at(col("oq"), 2).as("ap95"))
-      // true rank of each approx percentile value (one broadcast join —
-      // the per-topic aggregate is tiny)
-      val ranks = ev
-        .join(broadcast(agg.select(col("topic"), col("ap50"), col("ap95"))),
-          Seq("topic"))
-        .groupBy("topic")
-        .agg(
-          (sum(when(col("offset") <= col("ap50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("f50"),
-          (sum(when(col("offset") <= col("ap95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("f95"),
-          // tie mass AT each returned value: F jumps by this much at ap,
-          // so the rank gate must absorb it
-          (sum(when(col("offset") === col("ap50"), 1L).otherwise(0L)) /
-            count(lit(1))).as("t50"),
-          (sum(when(col("offset") === col("ap95"), 1L).otherwise(0L)) /
-            count(lit(1))).as("t95"))
-      // Gate tolerance is data-aware, not a bare 0.02: F's granularity on a
-      // topic with n events is 1/n (n=10 makes F(p95-element) land on 1.0),
-      // and a tie block at the returned value shifts F(ap) by the whole
-      // block's mass while the sketch is still within its rank-error spec.
-      // tol = max(0.02, 1/n + tie_mass) keeps the flag meaning "sketch
-      // within published bounds" at every scale factor.
-      def tol(tie: Column) =
-        greatest(lit(0.02), lit(1.0) / col("n_events") + tie)
-      agg.join(ranks, Seq("topic"))
-        .select(col("topic"), col("n_users"), col("n_events"),
-          when(abs(col("approx_users") - col("n_users")) <=
-            lit(3 * 0.02) * col("n_users"), 1L).otherwise(0L).as("hll_ok"),
-          when(abs(col("f50") - 0.5) <= tol(col("t50")), 1L)
-            .otherwise(0L).as("p50_ok"),
-          when(abs(col("f95") - 0.95) <= tol(col("t95")), 1L)
-            .otherwise(0L).as("p95_ok"))
-        .orderBy("topic")
-    }),
-
-    // Mergeable-sketch re-aggregation (DataSketches HLL): per-group
-    // sketches union into a global estimate WITHOUT rescanning raw data —
-    // the 100 TB pattern where KB-sized sketches re-aggregate at any
-    // rollup level while raw ids never leave their shard. Sketches can't
-    // hash-match another engine, so the oracle gets exact twins plus
-    // in-query bounds flags (the q_sketch_distinct pattern).
-    "q_hll_merge" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(col("event_type").as("grp"), col("user_id"))
-      val sk = ev.groupBy("grp")
-        .agg(expr("hll_sketch_agg(user_id)").as("sk"),
-          countDistinct(col("user_id")).as("exact_users"))
-      val per = sk.select(col("grp"), col("exact_users"),
-        when(abs(expr("hll_sketch_estimate(sk)") - col("exact_users")) <=
-          lit(0.05) * col("exact_users"), 1L).otherwise(0L).as("est_ok"))
-      // the "(all)" row re-aggregates the per-group SKETCHES, not the data
-      val allRow = sk
-        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("est"))
-        .crossJoin(ev.agg(countDistinct(col("user_id")).as("exact_users")))
-        .select(lit("(all)").as("grp"), col("exact_users"),
-          when(abs(col("est") - col("exact_users")) <=
-            lit(0.05) * col("exact_users"), 1L).otherwise(0L).as("est_ok"))
-      per.unionByName(allRow).orderBy("grp")
-    }),
-
-    // Sketch set-algebra (DataSketches Theta): distinct clickers who never
-    // errored, via theta_difference over two sketches — set EXCEPT without
-    // joining raw ids. Same bounds-flag oracle pattern.
-    "q_theta_diff" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(col("event_type"), col("user_id"))
-      val clicks = ev.where(col("event_type") === "click")
-      val errors = ev.where(col("event_type") === "error")
-      val exact = clicks.select("user_id").distinct()
-        .join(errors.select("user_id").distinct(), Seq("user_id"), "left_anti")
-        .agg(count(lit(1)).as("exact_users"))
-      val est = clicks.agg(expr("theta_sketch_agg(user_id)").as("cs"))
-        .crossJoin(errors.agg(expr("theta_sketch_agg(user_id)").as("es")))
-        .select(expr("theta_sketch_estimate(theta_difference(cs, es))")
-          .as("est"))
-      exact.crossJoin(est).select(col("exact_users"),
-        when(abs(col("est") - col("exact_users")) <=
-          greatest(lit(0.05) * col("exact_users"), lit(2.0)), 1L)
-          .otherwise(0L).as("est_ok"))
-    }),
-
-    // Frequent-items sketch (approx_top_k family): per-shard sketches
-    // accumulate independently, then a single combine+estimate produces the
-    // global top-k — the mergeable "most common values" pattern at 100 TB
-    // (one KB-sized sketch per partition/day; only states cross the wire).
-    // The ~50-item key space sits far below maxItemsTracked, so the sketch
-    // tracks every item exactly and the estimate must EQUAL the exact
-    // count — a hard equality flag, stronger than the HLL bounds flag.
-    "q_approx_topk" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(concat_ws("_", col("event_type"),
-            (col("user_id") % 10).cast("string")).as("item"),
-          (col("user_id") % 4).as("shard"))
-      val acc = ev.groupBy("shard")
-        .agg(expr("approx_top_k_accumulate(item, 1000)").as("sk"))
-      val est = acc
-        .agg(expr("approx_top_k_estimate(approx_top_k_combine(sk, 1000), 100)")
-          .as("tk"))
-        .select(explode(col("tk")).as("e"))
-        .select(col("e.item").as("item"), col("e.count").as("est_cnt"))
-      val exact = ev.groupBy("item").agg(count(lit(1)).as("cnt"))
-      exact.join(est, Seq("item"), "left")
-        .select(col("item"), col("cnt"),
-          when(col("est_cnt") === col("cnt"), 1L).otherwise(0L).as("est_ok"))
-        .orderBy(col("cnt").desc, col("item"))
-    }),
-
-    // Window frame: running revenue total per customer over order dates.
-    "q_running_total" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_custkey") < 100)
-        .select(col("o_custkey").as("custkey"), col("o_orderkey").as("orderkey"),
-          round(sum(col("o_totalprice")).over(w), 2).as("running_total"))
-        .orderBy("custkey", "orderkey")
-    }),
-
-    // CUBE: all four aggregation levels of (status, year) in one pass —
-    // completes the rollup / grouping-sets / cube triad. Partial-agg
-    // expansion is Catalyst's: one Expand + one shuffle, not four scans.
-    // Rollup rows are detected with grouping(), not a NULL-coalesce
-    // sentinel, so a genuine NULL group value on nullable data could
-    // never be conflated with an aggregate level.
-    "q_cube" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_orderstatus"),
-          year(col("o_orderdate")).cast(LongType).as("yr"),
-          col("o_totalprice"))
-        .cube(col("o_orderstatus"), col("yr"))
-        .agg(grouping(col("o_orderstatus")).as("_gs"),
-          grouping(col("yr")).as("_gy"),
-          count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("total"))
-        .select(
-          when(col("_gs") === 1, "(all)").otherwise(col("o_orderstatus"))
-            .as("status"),
-          when(col("_gy") === 1, -1L).otherwise(col("yr")).as("yr"),
-          col("cnt"), col("total"))
-        .orderBy("status", "yr")
-    }),
-
-    // FULL OUTER join with side attribution: customers without orders and
-    // order-groups outside the customer slice both survive.
-    "q_join_full_outer" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-        .where(col("c_custkey") <= 600).select(col("c_custkey"))
-      val ords = s.read.parquet(s"$dir/orders.parquet")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .where(col("o_custkey") <= 900)
-      cust.join(ords, col("c_custkey") === col("o_custkey"), "full_outer")
-        .select(
-          coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-          when(col("c_custkey").isNull, "order_only")
-            .when(col("o_custkey").isNull, "customer_only")
-            .otherwise("both").as("side"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy("custkey")
-    }),
-
-    // UNPIVOT (melt): wide per-flag measures back to (flag, metric, value)
-    // rows via stack() — the inverse of q_pivot_status_priority. stack is
-    // a Generate (map-side 1->3), not a shuffle.
-    "q_unpivot" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy(col("l_returnflag").as("flag"))
-        .agg(round(sum("l_quantity"), 2).as("qty"),
-          round(sum("l_discount"), 2).as("disc"),
-          round(sum("l_tax"), 2).as("tax"))
-        .select(col("flag"),
-          expr("stack(3, 'qty', qty, 'disc', disc, 'tax', tax)")
-            .as(Seq("metric", "value")))
-        .orderBy("flag", "metric")
-    }),
-
-    // Time-series gap filling: each customer's order-day series becomes
-    // dense over [min_day, max_day] with zero-filled missing days —
-    // sequence() + explode builds the calendar DISTRIBUTED per key (rows =
-    // keys × span), and the fill join is (custkey, day)-keyed; nothing
-    // ever materializes a global calendar on the driver.
-    "q_gap_fill" -> ((s, dir) => {
-      val daily = s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_custkey") < 20)
-        .select(col("o_custkey").as("custkey"),
-          datediff(col("o_orderdate"), lit("1970-01-01"))
-            .cast(LongType).as("day"))
-        .groupBy("custkey", "day").agg(count(lit(1)).as("n_orders"))
-      val cal = daily.groupBy("custkey")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("custkey"), explode(sequence(col("d0"), col("d1"))).as("day"))
-      cal.join(daily, Seq("custkey", "day"), "left")
-        .select(col("custkey"), col("day"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy("custkey", "day")
-    }),
-
-    // 30-day trailing revenue per customer: a time-based RANGE frame (vs
-    // q_running_total's ROWS frame) over pre-aggregated per-day revenue.
-    // Pre-aggregating to (custkey, day) first bounds the frame's row count
-    // by 30 regardless of order volume — the step that keeps the window
-    // memory constant at 100 TB; both the groupBy and the window hash on
-    // o_custkey, so the window adds no second shuffle.
-    "q_range_frame" -> ((s, dir) => {
-      val daily = s.read.parquet(s"$dir/orders.parquet")
-        .groupBy(col("o_custkey"),
-          datediff(col("o_orderdate"), lit("1970-01-01"))
-            .cast(LongType).as("day"))
-        .agg(sum(col("o_totalprice")).as("day_rev"))
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("day"))
-        .rangeBetween(-29, 0)
-      daily
-        .select(col("o_custkey").as("custkey"), col("day"),
-          round(col("day_rev"), 2).as("day_rev"),
-          round(sum(col("day_rev")).over(w), 2).as("rev_30d"))
-        .orderBy("custkey", "day")
-    }),
-
-    // lag/lead inter-order gap statistics: one window pass (co-partitioned
-    // with the following per-customer agg — Catalyst reuses the hash
-    // partitioning on o_custkey, so the groupBy adds no second shuffle).
-    // Integer day-gaps only: sums/maxes stay BIGINT, no fp rounding needed.
-    "q_lag_lead" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val gap = datediff(col("o_orderdate"), col("prev_ts"))
-      s.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_custkey"), col("o_orderdate"),
-          lag(col("o_orderdate"), 1).over(w).as("prev_ts"))
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n_orders"),
-          count(col("prev_ts")).as("n_gaps"),
-          coalesce(sum(gap), lit(0)).cast(LongType).as("sum_gap_days"),
-          coalesce(max(gap), lit(0)).cast(LongType).as("max_gap_days"))
-        .orderBy("o_custkey")
-    }),
-
-    // ntile quartiles of account balance within each nation, then one
-    // per-(nation, quartile) agg — same single hash partitioning on
-    // c_nationkey reused by the window sort and the groupBy.
-    "q_ntile" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      s.read.parquet(s"$dir/customer.parquet")
-        .select(col("c_nationkey"), col("c_acctbal"),
-          ntile(4).over(w).as("quartile"))
-        .groupBy(col("c_nationkey").cast(LongType).as("nationkey"),
-          col("quartile").cast(LongType).as("quartile"))
-        .agg(count(lit(1)).as("n_cust"),
-          round(min("c_acctbal"), 2).as("min_bal"),
-          round(max("c_acctbal"), 2).as("max_bal"))
-        .orderBy("nationkey", "quartile")
-    }),
-
-    // Z-order layout audit: Morton-code the (orderkey, partkey) pairs and
-    // check every bucket of the z-range layout has tight min/max ranges in
-    // BOTH dimensions — the file-skipping property. Buckets are 32 fixed
-    // equal-width z ranges derived from a 2-scalar distributed agg
-    // (min/max z, broadcast back) — the deterministic stand-in for the
-    // writer's `repartitionByRange(32, z)` boundaries. Everything is
-    // partial-agg + broadcast-scalar + hash-agg: no global window, no
-    // single-partition exchange anywhere in the plan, so the audit runs at
-    // any scale. (An earlier revision used ntile over a global z sort —
-    // equal row counts per bucket, but every row serialized through one
-    // window task.)
-    "q_zorder_cluster" -> ((s, dir) => {
-      import graft.functions.ZOrder
-      val pairs = s.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .withColumn("z", ZOrder.zorderKey(col("l_orderkey"), col("l_partkey")))
-      val stats = pairs.agg(min("z").as("zmin"), max("z").as("zmax"))
-      // Integer-only bucket arithmetic: z ≤ 2^62, so (z - zmin) stays in
-      // Long and `div` avoids the double-precision cliff past 2^53.
-      pairs.crossJoin(broadcast(stats))
-        .withColumn("bucket",
-          expr("(z - zmin) div ((zmax - zmin) div 32 + 1) + 1").cast(LongType))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"),
-          min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"),
-          min("l_partkey").as("min_pk"), max("l_partkey").as("max_pk"),
-          min("z").as("min_z"), max("z").as("max_z"))
-        .orderBy("bucket")
-    }),
-
-    // Time-series rollup on the orders stream.
-    "q_monthly_orders" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("total"))
-        .orderBy("month")
-    }),
-
-    // Correlated scalar subquery through the engine's SQL surface.
-    "q_correlated_subquery" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("v_orders")
-      s.sql(
-        """SELECT o_orderkey, round(o_totalprice, 2) AS price
-          |FROM v_orders o
-          |WHERE o_totalprice > 1.5 * (
-          |  SELECT avg(o_totalprice) FROM v_orders o2
-          |  WHERE o2.o_custkey = o.o_custkey)
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // INTERSECT: customers holding both open and finished orders.
-    "q_set_intersect" -> ((s, dir) => {
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      ord.where(col("o_orderstatus") === "O").select("o_custkey").distinct()
-        .intersect(
-          ord.where(col("o_orderstatus") === "F").select("o_custkey").distinct())
-        .orderBy("o_custkey")
-    }),
-
-    // GROUPING SETS (disjoint axes — not expressible as one rollup).
-    "q_grouping_sets" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("v_orders2")
-      s.sql(
-        """SELECT CASE WHEN GROUPING(o_orderstatus) = 1 THEN '(all)'
-          |            ELSE o_orderstatus END AS status,
-          |       CASE WHEN GROUPING(o_orderpriority) = 1 THEN '(all)'
-          |            ELSE o_orderpriority END AS priority,
-          |       count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-          |FROM v_orders2
-          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-          |ORDER BY status, priority""".stripMargin)
-    }),
-
-    // Pivot: order counts status x priority (conditional-agg formulation so
-    // the shape is fixed and oracle-portable).
-    "q_pivot_status_priority" -> ((s, dir) => {
-      val pr = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-      s.read.parquet(s"$dir/orders.parquet")
-        .groupBy(col("o_orderstatus").as("status"))
-        .agg(
-          sum(when(col("o_orderpriority") === pr(0), 1L).otherwise(0L)).as("urgent"),
-          sum(when(col("o_orderpriority") === pr(1), 1L).otherwise(0L)).as("high"),
-          sum(when(col("o_orderpriority") === pr(2), 1L).otherwise(0L)).as("medium"),
-          sum(when(col("o_orderpriority") === pr(3), 1L).otherwise(0L)).as("unspec"),
-          sum(when(col("o_orderpriority") === pr(4), 1L).otherwise(0L)).as("low"))
-        .orderBy("status")
-    }),
-
-    // Histogram: event-value distribution in width-50 buckets.
-    "q_value_histogram" -> ((s, dir) => {
-      Records.readEvents(s, dir)
-        .groupBy(floor(col("value") / 50).cast(LongType).as("bucket"))
-        .agg(count(lit(1)).as("cnt"), round(avg(col("value")), 4).as("avg_v"))
-        .orderBy("bucket")
-    }),
-
-    // Exact percentiles (sort-based interpolated; the approx twin lives in
-    // q_sketch_distinct's approx_percentile).
-    "q_percentile_exact" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet")
-        .groupBy(col("o_orderstatus").as("status"))
-        .agg(
-          round(expr("percentile(o_totalprice, 0.5D)"), 4).as("p50"),
-          round(expr("percentile(o_totalprice, 0.95D)"), 4).as("p95"),
-          count(lit(1)).as("cnt"))
-        .orderBy("status")
-    }),
-
-    // Set operation: customers with open orders but no finished ones.
-    "q_set_except" -> ((s, dir) => {
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      ord.where(col("o_orderstatus") === "O").select("o_custkey").distinct()
-        .except(ord.where(col("o_orderstatus") === "F").select("o_custkey").distinct())
-        .orderBy("o_custkey")
-    }),
-
-    // As-of join: latest strictly-prior signup event per event, same user.
-    // Runs the CUSTOM plan ladder (AsOfJoinNode -> AsOfJoinStrategy ->
-    // AsOfJoinExec streaming merge); the composed union+window variant is
-    // proven equal in AsOfJoinPlanSpec; oracle is DuckDB's native ASOF JOIN.
-    "q_asof_join" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-      val signups = Records.readEvents(s, dir)
-        .where(col("event_type") === "signup")
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"),
-          col("event_id").as("signup_id"))
-      graft.operators.AsOfJoin
-        .asOfJoinNative(ev, signups, "user_id", "ts_ms", Seq("signup_id"))
-        .select(col("event_id"), col("asof_signup_id").as("prior_signup"))
-        .orderBy("event_id")
-    }),
-
-    // Range join (no equi key): events falling inside promo windows derived
-    // from the first 50 orders (order date + 3 days). Bucketized interval
-    // join — never a nested-loop cross product.
-    "q_range_join" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"))
-      val windows = Records.readEvents(s, dir)
-        .where(col("event_type") === "signup" && col("event_id") < 500)
-        .select(col("event_id").as("win_id"),
-          unix_millis(col("ts")).as("w_start"),
-          (unix_millis(col("ts")) + 6L * 3600000L).as("w_end"))
-      graft.operators.RangeJoin
-        .bucketed(ev, "ts_ms", windows, "w_start", "w_end",
-          Seq("win_id"), bucketMs = 3600000L)
-        .groupBy(col("range_win_id").as("win_id"))
-        .agg(count(lit(1)).as("n_events"), min("event_id").as("first_event"))
-        .orderBy("win_id")
-    }),
-
-    // Hierarchical rollup: revenue by (region, nation) with subtotals.
-    "q_rollup_revenue" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
-      val region = s.read.parquet(s"$dir/region.parquet")
-      li.join(broadcast(ord), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-        .rollup(col("r_name"), col("n_name"))
-        .agg(grouping(col("r_name")).as("_gr"),
-          grouping(col("n_name")).as("_gn"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("revenue"), count(lit(1)).as("n_items"))
-        .select(
-          when(col("_gr") === 1, "(all)").otherwise(col("r_name")).as("region"),
-          when(col("_gn") === 1, "(all)").otherwise(col("n_name")).as("nation"),
-          col("revenue"), col("n_items"))
-        .orderBy("region", "nation")
-    }),
-
-    // Left-semi: customers having at least one urgent open order.
-    "q_join_semi" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_orderpriority") === "1-URGENT")
-      cust.join(ord, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey")).orderBy("c_custkey")
-    }),
-
-    // Bloom-prefiltered semi-join: lineitems of high-value orders. The
-    // broadcast Bloom drops non-matching fact rows BEFORE the join's
-    // shuffle (at 100 TB: shuffle volume ~ selectivity, not table size);
-    // false positives are removed by the exact semi-join, so the result --
-    // and the oracle -- is the plain semi-join's.
-    "q_bloom_semi_join" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val highVal = s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_totalprice") > 400000.0)
-      graft.operators.BloomSemiJoin
-        .semiJoin(li, highVal, "l_orderkey", "o_orderkey",
-          expectedItems = 100000L)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("l_extendedprice")), 2).as("rev"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Skew-mitigated join: events (5 heavily-skewed topics) x per-topic dim,
-    // salted 16 ways. Result identical to the plain join -- oracled as one.
-    "q_salted_join" -> ((s, dir) => {
-      val ev = Records.fromEvents(s, dir)
-        .select(col("topic"), col("offset").as("off"))
-      val dim = Records.fromEvents(s, dir)
-        .groupBy("topic").agg(count(lit(1)).as("topic_total"))
-      graft.operators.SaltedJoin.join(ev, dim, "topic")
-        .groupBy(col("topic"), col("topic_total"))
-        .agg(count(lit(1)).as("cnt"), sum(col("off")).as("sum_off"))
-        .orderBy("topic")
-    }),
-
-    // Left-anti: customers with no urgent orders (complement of the semi).
-    "q_join_anti" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-        .where(col("o_orderpriority") === "1-URGENT")
-      cust.join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey")).orderBy("c_custkey")
-    })
-  )
-
-  private def relationalOracles: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_orderpriority,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > TIMESTAMP '1997-01-01'
-        |GROUP BY l_orderkey, o_date, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q_window_top_customers" ->
-      """SELECT c_nationkey AS nationkey,
-        |  row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rank,
-        |  c_custkey AS custkey, c_acctbal AS acctbal
-        |FROM customer
-        |QUALIFY rank <= 3
-        |ORDER BY nationkey, rank""".stripMargin,
-
-    "q_count_distinct" -> (R +
-      """SELECT topic, count(DISTINCT rkey) AS n_users, count(*) AS n_events
-        |FROM records GROUP BY topic ORDER BY topic""".stripMargin),
-
-    // The sketch twin: exact columns are recomputed by the oracle; the
-    // in-query bounds flags must come out 1 (sketches inside their error
-    // envelopes) — asserted as literals here, so an out-of-bounds sketch
-    // hash-mismatches.
-    "q_sketch_distinct" -> (R +
-      """SELECT topic, count(DISTINCT rkey) AS n_users, count(*) AS n_events,
-        |  CAST(1 AS BIGINT) AS hll_ok, CAST(1 AS BIGINT) AS p50_ok,
-        |  CAST(1 AS BIGINT) AS p95_ok
-        |FROM records GROUP BY topic ORDER BY topic""".stripMargin),
-
-    "q_hll_merge" ->
-      """SELECT grp, exact_users, est_ok FROM (
-        |  SELECT event_type AS grp,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |    CAST(1 AS BIGINT) AS est_ok
-        |  FROM events GROUP BY event_type
-        |  UNION ALL
-        |  SELECT '(all)', CAST(count(DISTINCT user_id) AS BIGINT),
-        |    CAST(1 AS BIGINT)
-        |  FROM events) t
-        |ORDER BY grp""".stripMargin,
-
-    "q_theta_diff" ->
-      """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |  CAST(1 AS BIGINT) AS est_ok
-        |FROM events
-        |WHERE event_type = 'click'
-        |  AND user_id NOT IN (SELECT user_id FROM events
-        |                      WHERE event_type = 'error')""".stripMargin,
-
-    "q_approx_topk" ->
-      """SELECT event_type || '_' || CAST(user_id % 10 AS VARCHAR) AS item,
-        |  CAST(count(*) AS BIGINT) AS cnt, CAST(1 AS BIGINT) AS est_ok
-        |FROM events GROUP BY 1 ORDER BY cnt DESC, item""".stripMargin,
-
-    "q_running_total" ->
-      """SELECT o_custkey AS custkey, o_orderkey AS orderkey,
-        |  round(sum(o_totalprice) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS UNBOUNDED PRECEDING), 2) AS running_total
-        |FROM orders WHERE o_custkey < 100
-        |ORDER BY custkey, orderkey""".stripMargin,
-
-    "q_cube" ->
-      """SELECT
-        |  CASE WHEN GROUPING(o_orderstatus) = 1 THEN '(all)'
-        |       ELSE o_orderstatus END AS status,
-        |  CASE WHEN GROUPING(year(o_orderdate)) = 1 THEN -1
-        |       ELSE CAST(year(o_orderdate) AS BIGINT) END AS yr,
-        |  count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, year(o_orderdate))
-        |ORDER BY status, yr""".stripMargin,
-
-    "q_join_full_outer" ->
-      """WITH c AS (SELECT c_custkey FROM customer WHERE c_custkey <= 600),
-        |o AS (SELECT o_custkey, count(*) AS n_orders FROM orders
-        |      GROUP BY o_custkey HAVING o_custkey <= 900)
-        |SELECT coalesce(c.c_custkey, o.o_custkey) AS custkey,
-        |  CASE WHEN c.c_custkey IS NULL THEN 'order_only'
-        |       WHEN o.o_custkey IS NULL THEN 'customer_only'
-        |       ELSE 'both' END AS side,
-        |  coalesce(o.n_orders, 0) AS n_orders
-        |FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey
-        |ORDER BY custkey""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH w AS (
-        |  SELECT l_returnflag AS flag, round(sum(l_quantity), 2) AS qty,
-        |    round(sum(l_discount), 2) AS disc, round(sum(l_tax), 2) AS tax
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT flag, 'qty' AS metric, qty AS value FROM w
-        |UNION ALL SELECT flag, 'disc', disc FROM w
-        |UNION ALL SELECT flag, 'tax', tax FROM w
-        |ORDER BY flag, metric""".stripMargin,
-
-    "q_gap_fill" ->
-      """WITH d AS (
-        |  SELECT o_custkey AS custkey,
-        |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day,
-        |    count(*) AS n_orders
-        |  FROM orders WHERE o_custkey < 20 GROUP BY custkey, day),
-        |s AS (SELECT custkey, min(day) AS d0, max(day) AS d1 FROM d
-        |      GROUP BY custkey),
-        |cal AS (SELECT custkey, unnest(generate_series(d0, d1)) AS day FROM s)
-        |SELECT cal.custkey, cal.day, coalesce(d.n_orders, 0) AS n_orders
-        |FROM cal LEFT JOIN d ON cal.custkey = d.custkey AND cal.day = d.day
-        |ORDER BY cal.custkey, cal.day""".stripMargin,
-
-    "q_range_frame" ->
-      """WITH daily AS (
-        |  SELECT o_custkey,
-        |    datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day,
-        |    sum(o_totalprice) AS day_rev
-        |  FROM orders GROUP BY o_custkey, day)
-        |SELECT o_custkey AS custkey, day, round(day_rev, 2) AS day_rev,
-        |  round(sum(day_rev) OVER (
-        |    PARTITION BY o_custkey ORDER BY day
-        |    RANGE BETWEEN 29 PRECEDING AND CURRENT ROW), 2) AS rev_30d
-        |FROM daily ORDER BY custkey, day""".stripMargin,
-
-    "q_lag_lead" ->
-      """WITH w AS (
-        |  SELECT o_custkey, o_orderdate,
-        |    lag(o_orderdate) OVER (
-        |      PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_ts
-        |  FROM orders)
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-        |  CAST(count(prev_ts) AS BIGINT) AS n_gaps,
-        |  CAST(coalesce(sum(date_diff('day', CAST(prev_ts AS DATE),
-        |                              CAST(o_orderdate AS DATE))), 0) AS BIGINT)
-        |    AS sum_gap_days,
-        |  CAST(coalesce(max(date_diff('day', CAST(prev_ts AS DATE),
-        |                              CAST(o_orderdate AS DATE))), 0) AS BIGINT)
-        |    AS max_gap_days
-        |FROM w GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-    "q_ntile" ->
-      """WITH q AS (
-        |  SELECT c_nationkey, c_acctbal,
-        |    ntile(4) OVER (
-        |      PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey) AS quartile
-        |  FROM customer)
-        |SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-        |  CAST(quartile AS BIGINT) AS quartile,
-        |  CAST(count(*) AS BIGINT) AS n_cust,
-        |  round(min(c_acctbal), 2) AS min_bal, round(max(c_acctbal), 2) AS max_bal
-        |FROM q GROUP BY nationkey, quartile
-        |ORDER BY nationkey, quartile""".stripMargin,
-
-    "q_zorder_cluster" ->
-      """WITH p AS (SELECT DISTINCT l_orderkey AS a, l_partkey AS b FROM lineitem),
-        |s0 AS (SELECT a, b, a & 2147483647 AS xa, b & 2147483647 AS xb FROM p),
-        |s1 AS (SELECT a, b, (xa | (xa << 16)) & 281470681808895 AS xa,
-        |                    (xb | (xb << 16)) & 281470681808895 AS xb FROM s0),
-        |s2 AS (SELECT a, b, (xa | (xa << 8)) & 71777214294589695 AS xa,
-        |                    (xb | (xb << 8)) & 71777214294589695 AS xb FROM s1),
-        |s3 AS (SELECT a, b, (xa | (xa << 4)) & 1085102592571150095 AS xa,
-        |                    (xb | (xb << 4)) & 1085102592571150095 AS xb FROM s2),
-        |s4 AS (SELECT a, b, (xa | (xa << 2)) & 3689348814741910323 AS xa,
-        |                    (xb | (xb << 2)) & 3689348814741910323 AS xb FROM s3),
-        |s5 AS (SELECT a, b, (xa | (xa << 1)) & 6148914691236517205 AS xa,
-        |                    (xb | (xb << 1)) & 6148914691236517205 AS xb FROM s4),
-        |zz AS (SELECT a, b, xa | (xb << 1) AS z FROM s5),
-        |st AS (SELECT min(z) AS zmin, max(z) AS zmax FROM zz),
-        |t AS (SELECT a, b, z,
-        |        (z - zmin) // ((zmax - zmin) // 32 + 1) + 1 AS bucket
-        |      FROM zz, st)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(count(*) AS BIGINT) AS n,
-        |  min(a) AS min_ok, max(a) AS max_ok,
-        |  min(b) AS min_pk, max(b) AS max_pk,
-        |  min(z) AS min_z, max(z) AS max_z
-        |FROM t GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q_monthly_orders" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS cnt,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY month ORDER BY month""".stripMargin,
-
-    "q_correlated_subquery" ->
-      """SELECT o_orderkey, round(o_totalprice, 2) AS price
-        |FROM orders o
-        |WHERE o_totalprice > 1.5 * (
-        |  SELECT avg(o_totalprice) FROM orders o2
-        |  WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_set_intersect" ->
-      """SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |INTERSECT
-        |SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT CASE WHEN GROUPING(o_orderstatus) = 1 THEN '(all)'
-        |            ELSE o_orderstatus END AS status,
-        |       CASE WHEN GROUPING(o_orderpriority) = 1 THEN '(all)'
-        |            ELSE o_orderpriority END AS priority,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY status, priority""".stripMargin,
-
-    "q_pivot_status_priority" ->
-      """SELECT o_orderstatus AS status,
-        |  CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS urgent,
-        |  CAST(sum(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS high,
-        |  CAST(sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS medium,
-        |  CAST(sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS unspec,
-        |  CAST(sum(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS low
-        |FROM orders GROUP BY status ORDER BY status""".stripMargin,
-
-    "q_value_histogram" ->
-      """SELECT CAST(floor(value / 50) AS BIGINT) AS bucket, count(*) AS cnt,
-        |       round(avg(value), 4) AS avg_v
-        |FROM events GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q_percentile_exact" ->
-      """SELECT o_orderstatus AS status,
-        |  round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-        |  round(quantile_cont(o_totalprice, 0.95), 4) AS p95,
-        |  count(*) AS cnt
-        |FROM orders GROUP BY status ORDER BY status""".stripMargin,
-
-    "q_set_except" ->
-      """SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |EXCEPT
-        |SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY o_custkey""".stripMargin,
-
-    "q_asof_join" ->
-      """SELECT e.event_id, s.signup_id AS prior_signup
-        |FROM (SELECT event_id, user_id, epoch_ms(ts) AS ts_ms FROM events) e
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, epoch_ms(ts) AS ts_ms, event_id AS signup_id
-        |  FROM events WHERE event_type = 'signup') s
-        |  ON e.user_id = s.user_id AND e.ts_ms > s.ts_ms
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_range_join" ->
-      """WITH ev AS (SELECT event_id, epoch_ms(ts) AS ts_ms FROM events),
-        |wins AS (
-        |  SELECT event_id AS win_id, epoch_ms(ts) AS w_start,
-        |         epoch_ms(ts) + 6 * 3600000 AS w_end
-        |  FROM events WHERE event_type = 'signup' AND event_id < 500)
-        |SELECT win_id, count(*) AS n_events, min(event_id) AS first_event
-        |FROM ev JOIN wins ON ev.ts_ms BETWEEN w_start AND w_end
-        |GROUP BY win_id ORDER BY win_id""".stripMargin,
-
-    "q_rollup_revenue" ->
-      """SELECT CASE WHEN GROUPING(r_name) = 1 THEN '(all)' ELSE r_name END
-        |         AS region,
-        |       CASE WHEN GROUPING(n_name) = 1 THEN '(all)' ELSE n_name END
-        |         AS nation,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY region, nation""".stripMargin,
-
-    "q_salted_join" -> (R +
-      """, dim AS (SELECT topic, count(*) AS topic_total FROM records GROUP BY topic)
-        |SELECT r.topic, dim.topic_total, count(*) AS cnt,
-        |       CAST(sum(r.off) AS BIGINT) AS sum_off
-        |FROM records r JOIN dim ON r.topic = dim.topic
-        |GROUP BY r.topic, dim.topic_total ORDER BY r.topic""".stripMargin),
-
-    "q_join_semi" ->
-      """SELECT c_custkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_join_anti" ->
-      """SELECT c_custkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_bloom_semi_join" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-        |  round(sum(l_extendedprice), 2) AS rev
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-        |                     WHERE o_totalprice > 400000)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-  )
-
-  // ------------------------------------------------- streaming-op analogs
-  // Batch-mode runs of the event-time operators (graft.streaming
-  // .EventTimeOps); the same code paths run under readStream with
-  // watermarks / mapGroupsWithState (StreamingSpec covers that mode).
-
-  private def streamingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Tumbling 1-hour event-time windows per topic.
-    "q_windowed_counts" -> ((s, dir) => {
-      graft.streaming.EventTimeOps.windowedCounts(Records.fromEvents(s, dir))
-        .select(unix_millis(col("window_start")).as("wstart_ms"),
-          col("topic"), col("cnt"))
-        .orderBy("wstart_ms", "topic")
-    }),
-    // 30-minute-gap sessionization per user (lag + cumsum session ids).
-    "q_sessionization" -> ((s, dir) => {
-      graft.streaming.EventTimeOps.batchSessions(
-        Records.readEvents(s, dir)
-          .select(col("user_id"), unix_millis(col("ts")).as("ts_ms")))
-    }),
-
-    // The flatMapGroupsWithState closed-session operator run in BATCH
-    // mode (state starts empty, event-time timeouts cannot fire): each
-    // user's history arrives as one group, so the state function emits
-    // every gap-closed session EXCEPT the user's trailing one — a
-    // deterministic theorem of the operator the oracle mirrors as
-    // "all sessions minus each user's last". Streaming closure-by-timeout
-    // semantics are pinned in StreamingSpec.
-    "q_stream_sessions_closed" -> ((s, dir) => {
-      import s.implicits._
-      val timed = Records.readEvents(s, dir)
-        .select(col("user_id").cast(StringType).as("user"), col("ts"))
-        .as[graft.streaming.EventTimeOps.TimedEvent]
-      graft.streaming.EventTimeOps.sessionizeClosed(timed, batchMode = true)
-        .toDF()
-        .select(col("user").cast("long").as("user_id"),
-          col("start").as("session_start"), col("end").as("session_end"),
-          col("events").as("n_events"))
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Batch run of the streaming first-wins content dedup (EventTimeOps
-    // .streamingDedup's deterministic twin): earliest (timestamp, offset)
-    // record per md5(value), one min_by(struct) groupBy.
-    "q_stream_dedup" -> ((s, dir) => {
-      graft.connector.Records.asDuckNames(
-        graft.streaming.EventTimeOps.batchDedup(
-          graft.connector.Records.fromEvents(s, dir)))
-        .select(col("topic"), col("part"), col("off"),
-          unix_millis(col("rts")).as("ts_ms"), col("rkey"), col("rvalue"))
-        .orderBy("off")
-    }),
-
-    // Ordered-funnel analysis: users who viewed, then clicked AFTER the
-    // first view, then purchased AFTER that click. Each stage is a
-    // partial-aggregated min-ts groupBy plus a user-keyed join — every
-    // hop hashes on user_id, so Catalyst reuses one partitioning down the
-    // whole chain; funnel depth adds joins, never wider shuffles.
-    "q_funnel" -> ((s, dir) => {
-      val ev = Records.readEvents(s, dir)
-        .select(col("user_id"), col("event_type"),
-          unix_millis(col("ts")).as("ts_ms"))
-      val v = ev.where(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_ms").as("t1"))
-      val c = ev.where(col("event_type") === "click")
-        .join(v, Seq("user_id")).where(col("ts_ms") >= col("t1"))
-        .groupBy("user_id").agg(min("ts_ms").as("t2"))
-      val p = ev.where(col("event_type") === "purchase")
-        .join(c, Seq("user_id")).where(col("ts_ms") >= col("t2"))
-        .groupBy("user_id").agg(min("ts_ms").as("t3"))
-      def stage(df: DataFrame, name: String) =
-        df.agg(count(lit(1)).as("n_users"))
-          .select(lit(name).as("stage"), col("n_users"))
-      stage(v, "1_view").union(stage(c, "2_click"))
-        .union(stage(p, "3_purchase")).orderBy("stage")
-    })
-  )
-
-  private def streamingOracles: Map[String, String] = Map(
-    "q_stream_dedup" -> (R +
-      """, keyed AS (
-        |  SELECT topic, part, off, rts, rkey, rvalue, md5(rvalue) AS h,
-        |    row_number() OVER (PARTITION BY md5(rvalue)
-        |                       ORDER BY rts, off) AS rn
-        |  FROM records
-        |)
-        |SELECT topic, part, off, epoch_ms(rts) AS ts_ms, rkey, rvalue
-        |FROM keyed WHERE rn = 1 ORDER BY off""".stripMargin),
-
-    "q_windowed_counts" -> (R +
-      """SELECT epoch_ms(date_trunc('hour', rts)) AS wstart_ms, topic,
-        |       count(*) AS cnt
-        |FROM records GROUP BY wstart_ms, topic ORDER BY wstart_ms, topic""".stripMargin),
-
-    "q_sessionization" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ms(ts) AS ts_ms FROM events
-        |), s AS (
-        |  SELECT user_id, ts_ms,
-        |    CASE WHEN lag(ts_ms) OVER w IS NULL
-        |           OR ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms)
-        |), t AS (
-        |  SELECT user_id, ts_ms,
-        |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts_ms
-        |                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM s
-        |)
-        |SELECT user_id, session_id, min(ts_ms) AS session_start,
-        |       max(ts_ms) AS session_end, count(*) AS n_events
-        |FROM t GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-
-    // the batch-mode theorem: all gap-closed sessions minus each user's
-    // trailing (max-session_id) one — the q_sessionization chain + a
-    // per-user max window filter
-    "q_stream_sessions_closed" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_ms(ts) AS ts_ms FROM events
-        |), s AS (
-        |  SELECT user_id, ts_ms,
-        |    CASE WHEN lag(ts_ms) OVER w IS NULL
-        |           OR ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms)
-        |), t AS (
-        |  SELECT user_id, ts_ms,
-        |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts_ms
-        |                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM s
-        |), g AS (
-        |  SELECT user_id, session_id, min(ts_ms) AS session_start,
-        |         max(ts_ms) AS session_end, count(*) AS n_events
-        |  FROM t GROUP BY user_id, session_id
-        |)
-        |SELECT user_id, session_start, session_end, n_events FROM (
-        |  SELECT g.*, max(session_id) OVER (PARTITION BY user_id) AS mx
-        |  FROM g)
-        |WHERE session_id < mx
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms FROM events
-        |), v AS (
-        |  SELECT user_id, min(ts_ms) AS t1 FROM e
-        |  WHERE event_type = 'view' GROUP BY user_id
-        |), c AS (
-        |  SELECT e.user_id, min(e.ts_ms) AS t2
-        |  FROM e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts_ms >= v.t1 GROUP BY e.user_id
-        |), p AS (
-        |  SELECT e.user_id, min(e.ts_ms) AS t3
-        |  FROM e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts_ms >= c.t2 GROUP BY e.user_id
-        |)
-        |SELECT '1_view' AS stage, CAST(count(*) AS BIGINT) AS n_users FROM v
-        |UNION ALL SELECT '2_click', CAST(count(*) AS BIGINT) FROM c
-        |UNION ALL SELECT '3_purchase', CAST(count(*) AS BIGINT) FROM p
-        |ORDER BY stage""".stripMargin
-  )
+    rows.map(r => r.name -> r.oracleSql).toMap
 }

@@ -31,7 +31,7 @@ object Records {
 
   /** Number of synthetic Kafka partitions used when adapting the batch
     * `events` table to the record model. Mirrored verbatim in the DuckDB
-    * oracle SQL — keep in sync with [[graft.SparkEntry.oracleSql]]. */
+    * oracle SQL — keep in sync with [[graft.registry.ConnectorRows]]. */
   val SyntheticPartitions = 4
 
   /** Adapt the driver's `events` parquet table to the canonical record

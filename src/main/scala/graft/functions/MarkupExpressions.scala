@@ -79,15 +79,6 @@ object MarkupExtract {
   val StyleRe = "(?s)<style\\b[^>]*>.*?</style>"
   val CommentRe = "(?s)<!--.*?-->"
 
-  /** [[ScriptRe]]/[[StyleRe]] rendered for JAVA's engine: Java's `\b`
-    * is Unicode-aware (the `\b`-vs-`\w` JDK asymmetry — see
-    * [[PiiRedact.IpReJava]]), so `<scripté>` opens a block under
-    * RE2/the kernel but not under a Java `\b`. The declared semantics
-    * are RE2's ASCII boundary, spelled as an explicit ASCII negative
-    * lookahead for the Java reference chain. Java-only — never feed
-    * these to the oracle. */
-  val ScriptReJava = "(?s)<script(?![A-Za-z0-9_])[^>]*>.*?</script>"
-  val StyleReJava = "(?s)<style(?![A-Za-z0-9_])[^>]*>.*?</style>"
   val TagRe = "<[^>]*>"
   /** Literal entity decodes, IN ORDER (amp last). */
   val Entities: Seq[(String, String)] = Seq(
@@ -277,22 +268,4 @@ object MarkupExpressions {
     * [[MarkupExtract]]. */
   def extractMarkup(text: Column): Column =
     GraftBridge.column(MarkupExtract(GraftBridge.expression(text)))
-
-  /** The same rule chain as declarative `regexp_replace` + literal
-    * `replace` calls (Java's regex engine) — the reference formulation
-    * the kernel is pinned against in MarkupExpressionsSpec and the
-    * shape the DuckDB oracle replays in RE2. */
-  def extractMarkupDeclarative(text: Column): Column = {
-    import org.apache.spark.sql.functions.{lit, regexp_replace, replace, trim}
-    // the *ReJava forms, not ScriptRe/StyleRe: Java's \b is
-    // Unicode-aware; the declared boundary is RE2's ASCII one
-    val noScript = regexp_replace(text, MarkupExtract.ScriptReJava, " ")
-    val noStyle = regexp_replace(noScript, MarkupExtract.StyleReJava, " ")
-    val noComment = regexp_replace(noStyle, MarkupExtract.CommentRe, " ")
-    val noTag = regexp_replace(noComment, MarkupExtract.TagRe, " ")
-    val decoded = MarkupExtract.Entities.foldLeft(noTag) {
-      case (c, (from, to)) => replace(c, lit(from), lit(to))
-    }
-    trim(regexp_replace(decoded, MarkupExtract.WsRe, " "))
-  }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
 
 /** MinHash signature as ONE map-side codegen'd kernel — value-identical
   * to the declarative explode → md5-per-shingle → groupBy(doc_id) min
-  * aggregation it replaces ([[graft.ops.Dedup.minhashSignatureDeclarative]]):
+  * aggregation it replaces (the reference MinhashKernelSpec pins it
+  * against):
   *
   *   tokens = split(lower(trim(text)), "\\s+")
   *   shingle_i = concat_ws(" ", t[i], t[i+1], t[i+2])        (1-based, n-2 windows)

@@ -104,18 +104,6 @@ object PiiRedact {
   val PhoneRe = "\\+[0-9]{7,15}|[0-9]{3}-[0-9]{3}-[0-9]{4}"
   val NumRe = "[0-9]+"
 
-  /** [[IpRe]] rendered for JAVA's engine: Java's `\b` is Unicode-aware
-    * even without UNICODE_CHARACTER_CLASS (the known `\b`-vs-`\w` JDK
-    * asymmetry), so `é1.2.3.4` redacts under RE2/the kernel (é is not
-    * an ASCII word char — boundary holds) but NOT under a Java `\b`.
-    * The DECLARED semantics are RE2's ASCII boundary — what the oracle
-    * replays and the kernel's `isWord` gate implements — so the Java
-    * reference chain spells it as explicit ASCII lookarounds.
-    * (Found by ByteScanFuzzSpec on `é`-digit adjacencies; Java-only —
-    * NOT RE2-safe, never feed this form to the oracle.) */
-  val IpReJava = "(?<![A-Za-z0-9_])[0-9]{1,3}\\.[0-9]{1,3}" +
-    "\\.[0-9]{1,3}\\.[0-9]{1,3}(?![A-Za-z0-9_])"
-
   private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
   private def isLetter(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
@@ -306,19 +294,4 @@ object PiiExpressions {
   /** Five-rule PII scrub as one codegen'd kernel — see [[PiiRedact]]. */
   def redactPii(text: Column): Column =
     GraftBridge.column(PiiRedact(GraftBridge.expression(text)))
-
-  /** The same five rules as the declarative `regexp_replace` chain
-    * (Java's regex engine) — the reference formulation the kernel is
-    * pinned against in PiiExpressionsSpec and the shape the DuckDB
-    * oracle replays in RE2. */
-  def redactPiiDeclarative(text: Column): Column = {
-    import org.apache.spark.sql.functions.regexp_replace
-    val e = regexp_replace(text, PiiRedact.EmailRe, "<EMAIL>")
-    val u = regexp_replace(e, PiiRedact.UrlRe, "<URL>")
-    // IpReJava, not IpRe: Java's \b is Unicode-aware; the declared
-    // boundary is RE2's ASCII one (see IpReJava's scaladoc)
-    val p4 = regexp_replace(u, PiiRedact.IpReJava, "<IP>")
-    val ph = regexp_replace(p4, PiiRedact.PhoneRe, "<PHONE>")
-    regexp_replace(ph, PiiRedact.NumRe, "<NUM>")
-  }
 }

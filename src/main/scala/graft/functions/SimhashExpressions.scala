@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 
 /** SimHash signature as ONE map-side codegen'd kernel — byte-identical
-  * to the declarative aggregation pipeline it replaces
-  * ([[graft.ops.Dedup.simhashDeclarative]]):
+  * to the declarative aggregation pipeline it replaces (the reference
+  * SimhashKernelSpec pins it against):
   *
   *   explode(tokens) → groupBy(doc_id, tok).count →
   *   groupBy(doc_id).agg(`bits` conditional sums) → sign-threshold.

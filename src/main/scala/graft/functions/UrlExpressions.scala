@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** URL canonicalization as ONE codegen'd byte-scan kernel (the
   * [[MarkupExtract]] pattern) — byte-identical to the declared
-  * declarative rule chain ([[graft.ops.TextAnalysis.canonicalizeUrlDeclarative]],
-  * which the DuckDB oracle replays):
+  * declarative rule chain (the reference ByteScanFuzzSpec pins it
+  * against, and which the DuckDB oracle replays):
   *
   *   1. strip the fragment (`(?s)#.*` → '': cut at the FIRST '#');
   *   2. lowercase the scheme+authority prefix

@@ -54,8 +54,8 @@ object Dedup {
     * One map-side codegen kernel per row ([[graft.functions.MinhashSig]],
     * round 21) — the signature is a pure per-document function, so the
     * declarative explode + corpus-token-scale min aggregation
-    * ([[minhashSignatureDeclarative]], kept and pinned value-identical by
-    * MinhashKernelSpec) was removable outright (guide §1.2-step-1/§2.4). */
+    * (kept test-side and pinned value-identical by MinhashKernelSpec)
+    * was removable outright. */
   def minhashSignature(docs: DataFrame): DataFrame =
     minhashSignature(docs, NumMinhashes)
 
@@ -82,27 +82,6 @@ object Dedup {
         .hasMinTokens(col("text"), 3))
       .select(col("doc_id") +: (0 until numHashes).map(i =>
         element_at(sig, i + 1).as(s"mh$i")): _*)
-  }
-
-  /** The round-20 declarative formulation [[minhashSignature]] replaced:
-    * explode shingles → md5 base hash → k min aggregations. Kept as the
-    * semantic pin the kernel is property-tested against (and as the
-    * oracle-mirrorable statement of WHAT a signature is). Tokens are
-    * materialized in a projection BEFORE the shingle transform —
-    * otherwise Catalyst inlines the regex split into every `element_at`
-    * of the lambda and re-tokenizes the document once per shingle
-    * position. */
-  def minhashSignatureDeclarative(docs: DataFrame,
-                                  numHashes: Int): DataFrame = {
-    val exploded = docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-      .select(col("doc_id"), explode(TextAnalysis.shingles3(col("_t"))).as("sh"))
-      .withColumn("x", shingleHash(col("sh")))
-    val aggs = (0 until numHashes).map { i =>
-      val (a, b) = minhashParams(i)
-      min((col("x") * a + b) % MersenneP).as(s"mh$i")
-    }
-    exploded.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
   /** (doc_id, band, h1, h2) band-bucket rows from a signature table — the
@@ -341,8 +320,8 @@ object Dedup {
     // per-bit weights are additive per token OCCURRENCE, so the whole
     // signature is a pure per-row function and the two corpus-token-
     // scale exchanges the declarative aggregation paid are gone (the
-    // round-21 change; [[simhashDeclarative]] keeps the declared
-    // formulation and SimhashKernelSpec pins the two bit-equal). The
+    // round-21 change; SimhashKernelSpec keeps the declared formulation
+    // and pins the two bit-equal). The
     // null filter mirrors the declarative explode, which DROPS a
     // null-text doc's row rather than emitting a null signature. The
     // kernel is null exactly when text is null, so the filter tests
@@ -354,31 +333,6 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.SimhashExpressions.simhashSig(col("text"), bits)
           .as("simhash"))
-  }
-
-  /** The declarative aggregation formulation of [[simhash]] — the
-    * declared semantics the kernel is pinned against (explode →
-    * per-(doc, token) counts → `bits` conditional sums → sign
-    * threshold), kept as the reference twin (the markup-kernel
-    * precedent). */
-  private[graft] def simhashDeclarative(docs: DataFrame,
-                                        bits: Int): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(TextAnalysis.tokens(col("text"))).as("tok"))
-    val tokHash =
-      if (bits == 16) TextAnalysis.hash16(col("tok")) else xxhash64(col("tok"))
-    val counted = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
-      .withColumn("h", tokHash)
-    val bitSums = (0 until bits).map(j =>
-      sum(when(expr(s"shiftright(h, $j) & 1") === 1, col("cnt"))
-        .otherwise(-col("cnt"))).as(s"w$j"))
-    counted
-      .groupBy("doc_id")
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until bits).map(j =>
-          when(col(s"w$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
   }
 
   /** SimHash near-dup pairs with hamming distance ≤ maxDist, generated by
@@ -796,7 +750,7 @@ object Dedup {
     * Shape, never all-pairs (the suffix array is replaced by the
     * family's standard bucketed posting join):
     *   1. shingle-anchor candidates — hash every k-token window
-    *      ([[TextAnalysis.shinglesK]], one 48-bit [[shingleHash]] per
+    *      ([[docWindows]], one 48-bit [[shingleHash]] per
     *      position; the window table is LINEAR in corpus tokens) and
     *      self-join on the window hash: only positions sharing a window
     *      ever pair up;
@@ -874,7 +828,7 @@ object Dedup {
     * and round-tripped each digest through hex; the kernel feeds token
     * byte slices straight into the digest (same md5 per window, no
     * string building — value-identical, pinned by WindowHashKernelSpec
-    * against [[docWindowsDeclarative]]). */
+    * against the declarative chain). */
   private[graft] def docWindows(toks: DataFrame, kTokens: Int): DataFrame = {
     require(kTokens >= 2, s"substring ops: kTokens must be >= 2, got $kTokens")
     toks
@@ -883,19 +837,6 @@ object Dedup {
           .windowHashes(col("_t"), kTokens)))
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
         col("col").as("wh"))
-  }
-
-  /** The round-20 declarative formulation [[docWindows]] replaced — the
-    * semantic pin (and the oracle-mirrorable statement of the window
-    * hash). */
-  private[graft] def docWindowsDeclarative(toks: DataFrame,
-                                           kTokens: Int): DataFrame = {
-    require(kTokens >= 2, s"substring ops: kTokens must be >= 2, got $kTokens")
-    toks
-      .select(col("doc_id"),
-        posexplode(TextAnalysis.shinglesK(col("_t"), kTokens)))
-      .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
-        shingleHash(col("col")).as("wh"))
   }
 
   /** The diagonal gaps-and-islands extension + span-equality

@@ -23,10 +23,6 @@ object TextAnalysis {
     * floor on the same IEEE double is bit-identical in both engines. */
   def round6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
 
-  /** The SQL mirror of [[round6]]. */
-  def round6Sql(expr: String): String =
-    s"floor(($expr) * 1000000 + 0.5) / 1000000"
-
   /** URL canonicalization — the crawl-side dedup key (a recrawled page
     * arrives as `HTTP://EX.COM:80/p?b=2&a=1#frag` one day and
     * `http://ex.com/p?a=1&b=2` the next; byte-level dedup sees two
@@ -52,7 +48,8 @@ object TextAnalysis {
     *
     * Implementation is the single-pass byte-scan kernel
     * ([[graft.functions.CanonicalizeUrl]] — the markup-kernel
-    * precedent): the declarative chain below re-ran 4 regex passes +
+    * precedent): the declarative chain (kept test-side as the
+    * reference) re-ran 4 regex passes +
     * split/sort machinery per row (~27 µs/row, the round-20 verdict's
     * measurement) and re-inlined itself at every reference site,
     * bloating plans ~20×. The chain remains the declared semantics;
@@ -60,28 +57,6 @@ object TextAnalysis {
     * ByteScanFuzzSpec compositions. */
   def canonicalizeUrl(url: Column): Column =
     graft.functions.UrlExpressions.canonicalizeUrl(url)
-
-  /** The declared rule chain in declarative form — the reference
-    * formulation the kernel is pinned against and the shape the DuckDB
-    * oracle replays. */
-  def canonicalizeUrlDeclarative(url: Column): Column = {
-    val noFrag = regexp_replace(url, "(?s)#.*", "")
-    val prefix = regexp_extract(noFrag,
-      "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*", 0)
-    val auth = regexp_replace(
-      regexp_replace(lower(prefix), "^(http://[^/?#]*):80$", "$1"),
-      "^(https://[^/?#]*):443$", "$1")
-    val rest = noFrag.substr(length(prefix) + lit(1), length(noFrag))
-    val path0 = substring_index(rest, "?", 1)
-    val query0 = when(instr(rest, "?") > 0,
-      rest.substr(instr(rest, "?") + lit(1), length(rest)))
-      .otherwise(lit(""))
-    concat(auth,
-      when(path0 === "", lit("/")).otherwise(path0),
-      when(query0 === "", lit(""))
-        .otherwise(concat(lit("?"),
-          array_join(array_sort(split(query0, "&")), "&"))))
-  }
 
   /** Host of a CANONICAL URL ([[canonicalizeUrl]] output: scheme and
     * host already lowercased): the `://`-to-first-`/:?#` span. Empty
@@ -162,18 +137,6 @@ object TextAnalysis {
       transform(sequence(lit(1), size(toks) - 2), i =>
         concat_ws(" ", element_at(toks, i), element_at(toks, i + 1),
           element_at(toks, i + 2))))
-      .otherwise(array().cast("array<string>"))
-
-  /** Sliding k-gram array over the token sequence (the generalized
-    * [[shingles3]]); empty when the document has fewer than `k` tokens.
-    * Window i (1-based) is `array_join(slice(toks, i, k), " ")` —
-    * `array_to_string(t[i:i+k-1], ' ')` in the DuckDB mirror. The token
-    * array is referenced, never re-derived, inside the lambda (the
-    * Dedup.scala re-tokenize trap). */
-  def shinglesK(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      transform(sequence(lit(1), size(toks) - (k - 1)), i =>
-        array_join(slice(toks, i, lit(k)), " ")))
       .otherwise(array().cast("array<string>"))
 
   /** Sliding 2-gram array over the token sequence; empty when the document

@@ -1,0 +1,1492 @@
+package graft.registry
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.ops.Similarity
+
+/** Similarity rows: exact and approximate top-k vector search (LSH, IVF,
+  * PQ, binary codes, cascades) and their recall checks. */
+object SimilarityRows {
+
+  /** Micro-averaged recall@5 of an ANN operator vs the exact brute-force
+    * top-5 over the vec_id < 20 query set, one summary row with the
+    * >= 0.8 flag (see sim_ann_lsh_recall's registry comment).
+    *
+    * One pass over the brute-force subtree: exact LEFT JOIN approx, then
+    * a single agg counts both the denominator (all exact pairs) and the
+    * numerator (pairs the ANN also returned) — referencing the exact
+    * top-k twice (agg + semi-join) would execute the corpus-wide
+    * brute-force scoring twice. Recall is rounded with the
+    * boundary-safe [[graft.ops.TextAnalysis.round6]] (int/int ratio —
+    * the exact cross-engine HALF_UP divergence class). */
+  private def annRecall(s: SparkSession, dir: String,
+      ann: (DataFrame, DataFrame) => DataFrame,
+      bar: Double = 0.8): DataFrame = {
+    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    val q = emb.where(col("vec_id") < 20)
+    val approx = ann(emb, q)
+      .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
+    val exact = Similarity.bruteForceTopK(emb, q, 5)
+      .select(col("query_id"), col("neighbor_id"))
+    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_exact"), count(col("_hit")).as("n_hit"))
+      .select(col("n_exact"), col("n_hit"),
+        graft.ops.TextAnalysis
+          .round6(col("n_hit").cast("double") / col("n_exact")).as("recall"),
+        (col("n_hit").cast("double") / col("n_exact") >= bar).as("recall_ok"))
+  }
+
+  /** Hyperplane-LSH bucket CTE chain (no leading WITH): reproduces
+    * Similarity's md5-derived planes and banded sign-bit buckets in SQL.
+    * Sum-order noise in projections only matters when a projection is
+    * within ~1e-15 of zero — measure-zero on real data. Parameterized on
+    * (numPlanes, planesPerTable) exactly as `Similarity.lshTopK`'s 6-arg
+    * overload is; the default chain is the (32, 4) instance. */
+  private[registry] val LshBucketChain: String =
+    lshBucketChain(graft.ops.Similarity.NumHyperplanes,
+      graft.ops.Similarity.PlanesPerTable)
+
+  private def lshBucketChain(numPlanes: Int, planesPerTable: Int): String =
+    s"""planes AS (
+      |  SELECT p, j,
+      |    CAST(('0x' || substr(md5('hp|' || p || '|' || j), 1, 6)) AS INT)
+      |      / 16777216.0 - 0.5 AS w
+      |  FROM generate_series(0, ${numPlanes - 1}) t1(p),
+      |       generate_series(0, 63) t2(j)
+      |), proj AS (
+      |  SELECT v.vec_id, pl.p,
+      |         sum(CAST(v.embedding[pl.j + 1] AS DOUBLE) * pl.w) AS s
+      |  FROM embeddings v JOIN planes pl ON pl.j < len(v.embedding)
+      |  GROUP BY v.vec_id, pl.p
+      |), bkt AS (
+      |  SELECT vec_id, p // $planesPerTable AS tbl,
+      |    CAST(sum(CASE WHEN s >= 0
+      |      THEN (1 << (p % $planesPerTable)) ELSE 0 END) AS BIGINT) AS bits
+      |  FROM proj GROUP BY vec_id, tbl
+      |), nrm AS (
+      |  SELECT vec_id, sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+      |                                       CAST(embedding AS DOUBLE[]))) AS n
+      |  FROM embeddings
+      |)
+      |""".stripMargin
+
+  /** IVF probe/assignment CTE chain (no leading WITH), ending with the
+    * `ranked` CTE — shared by the sim_ann_ivf oracle and its recall
+    * gate. The default chain is the nLists=16 instance; the auto chain
+    * computes nLists = max(16, ceil(sqrt(count(*)))) IN SQL (exact-integer
+    * sqrt/ceil, bit-identical to [[graft.ops.Similarity.autoNLists]]), so
+    * the scale-aware dial is oracle-gated end-to-end. */
+  private[registry] val IvfChain = ivfChain("16")
+
+  private val AutoNListsSql =
+    "greatest(16, CAST(ceil(sqrt((SELECT count(*) FROM embeddings))) AS BIGINT))"
+
+  private[registry] val AutoIvfChain = ivfChain(AutoNListsSql)
+
+  /** nProbe = max(4, ⌈√nLists⌉) — `ProductQuantization.ivfPqTopKAuto`'s
+    * second dial, recomputed symbolically. */
+  private val AutoNProbeSql =
+    s"greatest(4, CAST(ceil(sqrt(CAST(($AutoNListsSql) AS DOUBLE))) AS BIGINT))"
+
+  private val AutoIvfPqChain =
+    ivfChain(AutoNListsSql, "embeddings", AutoNProbeSql)
+
+  /** Coarse-training sample stride — `Similarity.coarseTrainStride`
+    * recomputed symbolically: `max(1, n ÷ (16·nLists))`, pure BIGINT
+    * arithmetic (DuckDB `//` is floor division, exact on the positive
+    * integers involved), so the sampled chain is oracle-gated
+    * end-to-end. */
+  private val AutoCoarseStrideSql =
+    s"greatest(1, (SELECT count(*) FROM embeddings) // (16 * ($AutoNListsSql)))"
+
+  private val SampledIvfPqChain =
+    ivfChain(AutoNListsSql, "embeddings", AutoNProbeSql, AutoCoarseStrideSql)
+
+  /** Recall-gate tail over `ranked`/`nrm` CTEs: recall@5 of an
+    * approximate top-5 (read from `src`, default the `ranked` CTE)
+    * against the exact brute-force top-5, with a >= `bar` flag. The 0.8
+    * instance is [[IvfRecallTail]]; the PQ gates parameterize both knobs
+    * (raw-ADC bar 0.3, reranked source `rranked`). */
+  private def recallTail(bar: Double, src: String = "ranked"): String =
+    s""", approx AS (
+      |  SELECT query_id, neighbor_id FROM $src WHERE rank <= 5
+      |), ex_scored AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
+      |                           CAST(c.embedding AS DOUBLE[])) /
+      |          nullif(q.n * c.n, 0), 6) AS cos
+      |  FROM nrm q JOIN nrm c ON q.vec_id <> c.vec_id
+      |  WHERE q.vec_id < 20
+      |), exact AS (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT query_id, neighbor_id,
+      |      row_number() OVER (PARTITION BY query_id
+      |                         ORDER BY cos DESC, neighbor_id) AS rank
+      |    FROM ex_scored)
+      |  WHERE rank <= 5
+      |)
+      |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
+      |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
+      |  n_hit * 1.0 / n_exact >= $bar AS recall_ok
+      |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
+      |             (SELECT count(*) FROM exact e
+      |              JOIN approx a ON e.query_id = a.query_id
+      |                AND e.neighbor_id = a.neighbor_id) AS n_hit)""".stripMargin
+
+  private val IvfRecallTail = recallTail(0.8)
+
+  /** Per-subspace PQ codebook chains (no leading WITH): for each of the
+    * `m` subspaces this is the IvfChain recipe — deterministic seeds
+    * (vec_id < k), one Lloyd iteration, argmax-cosine assignment — on the
+    * array SLICE `embedding[lo:hi]`, ending in `cd$i(vec_id, code)` and
+    * `cn$i(cell, cvec, cn)`. Plus the long-form unions the ADC tail
+    * consumes (`cl` codes, `ctl` centroid lookup with |c|², `ql` query
+    * slices) and the full-vector `nrm` the recall tails need. Mirrors
+    * [[graft.ops.ProductQuantization]] digit-for-digit. */
+  private def pqChains(m: Int, k: Int, subDim: Int,
+                       includeNrm: Boolean = true,
+                       table: String = "embeddings",
+                       vecCol: String = "embedding",
+                       qsrc: String = "embeddings"): String = {
+    val per = (0 until m).map { i =>
+      val lo = i * subDim + 1
+      val hi = (i + 1) * subDim
+      s"""s$i AS (
+         |  SELECT vec_id, $vecCol[$lo:$hi] AS e,
+         |    sqrt(list_dot_product(CAST($vecCol[$lo:$hi] AS DOUBLE[]),
+         |                          CAST($vecCol[$lo:$hi] AS DOUBLE[]))) AS n
+         |  FROM $table
+         |), sd$i AS (
+         |  SELECT vec_id AS cell, e AS cvec, n AS cn FROM s$i WHERE vec_id < $k
+         |), a0$i AS (
+         |  SELECT vec_id, cell FROM (
+         |    SELECT v.vec_id, s.cell,
+         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
+         |        list_dot_product(CAST(v.e AS DOUBLE[]),
+         |                         CAST(s.cvec AS DOUBLE[])) / nullif(v.n * s.cn, 0) DESC,
+         |        s.cell) AS rn
+         |    FROM s$i v CROSS JOIN sd$i s) t
+         |  WHERE rn = 1
+         |), ct$i AS (
+         |  SELECT cell,
+         |    list_transform(list_sort(list(struct_pack(i := i, m := m))),
+         |      x -> CAST(x.m AS REAL)) AS cvec
+         |  FROM (
+         |    SELECT a.cell, g.i, avg(CAST(v.e[g.i] AS DOUBLE)) AS m
+         |    FROM a0$i a JOIN s$i v ON v.vec_id = a.vec_id,
+         |    LATERAL (SELECT unnest(generate_series(1, len(v.e))) AS i) g
+         |    GROUP BY a.cell, g.i) d
+         |  GROUP BY cell
+         |), cn$i AS (
+         |  SELECT cell, cvec,
+         |    sqrt(list_dot_product(CAST(cvec AS DOUBLE[]),
+         |                          CAST(cvec AS DOUBLE[]))) AS cn
+         |  FROM ct$i
+         |), cd$i AS (
+         |  SELECT vec_id, cell AS code FROM (
+         |    SELECT v.vec_id, c.cell,
+         |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
+         |        list_dot_product(CAST(v.e AS DOUBLE[]),
+         |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
+         |        c.cell) AS rn
+         |    FROM s$i v CROSS JOIN cn$i c) t
+         |  WHERE rn = 1
+         |)""".stripMargin
+    }.mkString(", ")
+    val cl = (0 until m)
+      .map(i => s"SELECT $i AS sub, vec_id, code FROM cd$i")
+      .mkString("\n  UNION ALL ")
+    val ctl = (0 until m)
+      .map(i => s"SELECT $i AS sub, cell AS code, cvec, cn * cn AS cn2 FROM cn$i")
+      .mkString("\n  UNION ALL ")
+    // query slices always come from the RAW vector table (`qsrc`) — for
+    // the residual chains the CODES are trained/assigned on residuals
+    // but the ADC query side stays the un-residualized float query
+    val ql = (0 until m)
+      .map { i =>
+        val lo = i * subDim + 1
+        val hi = (i + 1) * subDim
+        s"SELECT $i AS sub, vec_id AS query_id, embedding[$lo:$hi] AS e " +
+          s"FROM $qsrc WHERE vec_id < 20"
+      }
+      .mkString("\n  UNION ALL ")
+    val nrm = if (includeNrm)
+      s""", nrm AS (
+         |  SELECT vec_id, embedding,
+         |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+         |                          CAST(embedding AS DOUBLE[]))) AS n
+         |  FROM embeddings
+         |)""".stripMargin
+    else ""
+    s"""$per, cl AS (
+       |  $cl
+       |), ctl AS (
+       |  $ctl
+       |), ql AS (
+       |  $ql
+       |)""".stripMargin + nrm
+  }
+
+  /** ADC scoring tail over [[pqChains]]' CTEs, ending in
+    * `ranked(query_id, neighbor_id, a, rank)` — rank by the approximate
+    * cosine ROUNDED to 6 decimals (the round-before-rank convention:
+    * the ADC score is a 16-part float sum whose addition order differs
+    * between Spark's partial agg and DuckDB's hash agg, so near-ties
+    * must be absorbed before ranking), exactly as
+    * `ProductQuantization.finishAdc`. NaN queries need no special
+    * handling: Spark compares NaN GREATER than any value (so
+    * `cosFromDot`'s `n1*n2 > 0` guard passes and the NaN propagates)
+    * and orders it first under DESC — exactly DuckDB's NaN ordering —
+    * with ties broken by neighbor id on both engines; pinned by
+    * PqSpec's NaN test. */
+  private val PqAdcTail: String =
+    """, parts AS (
+      |  SELECT q.query_id, c.vec_id AS neighbor_id,
+      |    list_dot_product(CAST(q.e AS DOUBLE[]),
+      |                     CAST(t.cvec AS DOUBLE[])) AS d,
+      |    t.cn2
+      |  FROM cl c JOIN ctl t ON t.sub = c.sub AND t.code = c.code
+      |  JOIN ql q ON q.sub = c.sub AND q.query_id <> c.vec_id
+      |), sc AS (
+      |  SELECT query_id, neighbor_id, sum(d) AS sd, sum(cn2) AS rn2
+      |  FROM parts GROUP BY 1, 2
+      |), adc AS (
+      |  SELECT s.query_id, s.neighbor_id,
+      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
+      |  FROM sc s JOIN nrm q ON q.vec_id = s.query_id
+      |), ranked AS (
+      |  SELECT query_id, neighbor_id, a,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
+      |  FROM adc
+      |)""".stripMargin
+
+  /** Exact-rerank tail: ADC top-`rerank` candidates (from the `src`
+    * ranking CTE) rescored exactly (rounded cosine, ties by neighbor
+    * id), ending in `rranked` — the `rerank > 0` branch of
+    * `ProductQuantization.adcTopK` / `ivfPqTopK`. */
+  private def pqRerankTail(rerank: Int, src: String): String =
+    pqRerankTailSql(rerank.toString, src)
+
+  private def pqRerankTail(rerank: Int): String =
+    pqRerankTailSql(rerank.toString, "ranked")
+
+  /** [[pqRerankTail]] with the keep budget as a SQL expression — the
+    * auto-cascade rows compute it from count(*) in-query. */
+  private def pqRerankTailSql(rerankSql: String, src: String): String =
+    s""", cand AS (
+       |  SELECT query_id, neighbor_id FROM $src WHERE rank <= ($rerankSql)
+       |), rr AS (
+       |  SELECT c.query_id, c.neighbor_id,
+       |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
+       |                           CAST(ce.embedding AS DOUBLE[])) /
+       |          nullif(qe.n * ce.n, 0), 6) AS cos
+       |  FROM cand c
+       |  JOIN nrm qe ON qe.vec_id = c.query_id
+       |  JOIN nrm ce ON ce.vec_id = c.neighbor_id
+       |), rranked AS (
+       |  SELECT query_id, neighbor_id, cos,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM rr
+       |)""".stripMargin
+
+  private val PqChain = pqChains(16, 32, 4)
+
+  /** Sign-bit binarization chain: the 64 per-dimension masks are embedded
+    * as literals (bit 63 is Long.MinValue — no shift is ever evaluated on
+    * either engine), folded with bit_or. Ends in `codes(vec_id, bcode)`
+    * plus the full-vector `nrm` the recall tails need. Mirrors
+    * [[graft.ops.Quantization.binarize]] bit for bit. */
+  private def binChain(includeNrm: Boolean): String = {
+    val masks = graft.ops.Quantization.signMasks(64)
+      .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
+    val nrm = if (includeNrm)
+      s""", nrm AS (
+         |  SELECT vec_id, embedding,
+         |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+         |                          CAST(embedding AS DOUBLE[]))) AS n
+         |  FROM embeddings
+         |)""".stripMargin
+    else ""
+    s"""bm AS (SELECT $masks AS ms),
+       |codes AS (
+       |  SELECT e.vec_id,
+       |    list_aggregate(list_transform(range(1, 65),
+       |      i -> CASE WHEN e.embedding[i] > 0 THEN ms[i]
+       |           ELSE 0::BIGINT END), 'bit_or') AS bcode
+       |  FROM embeddings e, bm
+       |)""".stripMargin + nrm
+  }
+
+  private val BinChain: String = binChain(includeNrm = true)
+
+  /** Cell-bounded Hamming prefilter tail over IvfChain's
+    * `probes`/`assigned` plus [[binChain]]'s `codes` —
+    * `Quantization.ivfHammingTopK`'s prefilter in SQL, ending in
+    * `ihr(query_id, neighbor_id, rank)` by (hamming asc, neighbor id);
+    * the exact-refine stage is the shared [[pqRerankTail]]. */
+  private val IvfHammingTail: String =
+    """, ihcand AS (
+      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
+      |  FROM probes p JOIN assigned a
+      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
+      |), ihs AS (
+      |  SELECT c.query_id, c.neighbor_id,
+      |    CAST(bit_count(xor(cc.bcode, qc.bcode)) AS BIGINT) AS hamming
+      |  FROM ihcand c
+      |  JOIN codes cc ON cc.vec_id = c.neighbor_id
+      |  JOIN codes qc ON qc.vec_id = c.query_id
+      |), ihr AS (
+      |  SELECT query_id, neighbor_id,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY hamming, neighbor_id) AS rank
+      |  FROM ihs
+      |)""".stripMargin
+
+  /** Hamming scoring tail over [[BinChain]]'s `codes`, ending in
+    * `hranked` — integer distance, integer ranking. */
+  private val HammingTail: String =
+    """, hscored AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    CAST(bit_count(xor(c.bcode, q.bcode)) AS BIGINT) AS hamming
+      |  FROM codes c JOIN codes q
+      |    ON q.vec_id < 20 AND q.vec_id <> c.vec_id
+      |), hranked AS (
+      |  SELECT query_id, neighbor_id, hamming,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY hamming, neighbor_id) AS rank
+      |  FROM hscored
+      |)""".stripMargin
+
+  /** ADC-within-probed-cells tail over IvfChain's `probes`/`assigned`
+    * plus the (nrm-free) PQ chains — `ProductQuantization.ivfPqTopK` in
+    * SQL, ending in `pranked` (names prefixed: IvfChain already owns
+    * `scored`/`ranked`). */
+  private val IvfPqTail: String =
+    """, pcand AS (
+      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id
+      |  FROM probes p JOIN assigned a
+      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
+      |), pparts AS (
+      |  SELECT d.query_id, d.neighbor_id,
+      |    list_dot_product(CAST(q.e AS DOUBLE[]),
+      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
+      |    t.cn2
+      |  FROM pcand d
+      |  JOIN cl c ON c.vec_id = d.neighbor_id
+      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
+      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
+      |), psc AS (
+      |  SELECT query_id, neighbor_id, sum(dd) AS sd, sum(cn2) AS rn2
+      |  FROM pparts GROUP BY 1, 2
+      |), padc AS (
+      |  SELECT s.query_id, s.neighbor_id,
+      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
+      |  FROM psc s JOIN nrm q ON q.vec_id = s.query_id
+      |), pranked AS (
+      |  SELECT query_id, neighbor_id, a,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
+      |  FROM padc
+      |)""".stripMargin
+
+  /** Cascade stage-2 tail: ADC scoring restricted to the Hamming
+    * top-200 candidates ([[HammingTail]]'s `hranked`), ending in
+    * `cascranked` — `ProductQuantization.cascadeTopK`'s middle tier in
+    * SQL (the same per-pair sum-of-subspace-dots arithmetic as
+    * [[PqAdcTail]], joined to the stage-1 candidate set). */
+  private val CascadeAdcTail: String = cascadeAdcTailSql("200")
+
+  /** [[CascadeAdcTail]] with the stage-1 keep budget as a SQL expression
+    * (the auto rows compute `greatest(200, 4·⌈√count⌉)` in-query). */
+  private def cascadeAdcTailSql(r1Sql: String): String =
+    s""", casc1 AS (
+      |  SELECT query_id, neighbor_id FROM hranked WHERE rank <= ($r1Sql)
+      |), cascparts AS (
+      |  SELECT d.query_id, d.neighbor_id,
+      |    list_dot_product(CAST(q.e AS DOUBLE[]),
+      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
+      |    t.cn2
+      |  FROM casc1 d
+      |  JOIN cl c ON c.vec_id = d.neighbor_id
+      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
+      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
+      |), cascsc AS (
+      |  SELECT query_id, neighbor_id, sum(dd) AS sd, sum(cn2) AS rn2
+      |  FROM cascparts GROUP BY 1, 2
+      |), cascadc AS (
+      |  SELECT s.query_id, s.neighbor_id,
+      |    s.sd / nullif(sqrt(s.rn2) * q.n, 0) AS a
+      |  FROM cascsc s JOIN nrm q ON q.vec_id = s.query_id
+      |), cascranked AS (
+      |  SELECT query_id, neighbor_id, a,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
+      |  FROM cascadc
+      |)""".stripMargin
+
+  /** Residual CTE over an IvfChain's `assigned`/`cent_n`/`nrm`:
+    * `resid = embedding − centroid(cell)` per dim, double subtract
+    * narrowed to REAL — `ProductQuantization.residuals` bit-for-bit. */
+  private val ResCte: String =
+    """res AS (
+      |  SELECT a.vec_id, a.cell,
+      |    list_transform(range(1, 65), i ->
+      |      CAST(CAST(v.embedding[i] AS DOUBLE) -
+      |           CAST(c.cvec[i] AS DOUBLE) AS REAL)) AS resid
+      |  FROM assigned a
+      |  JOIN nrm v ON v.vec_id = a.vec_id
+      |  JOIN cent_n c ON c.cell = a.cell
+      |)""".stripMargin
+
+  /** Residual-ADC tail over IvfChain's `probes`/`assigned`/`cent_n` plus
+    * residual-trained PQ chains (`cl`/`ctl`/`ql`) —
+    * `ProductQuantization.ivfPqResidualTopK` in SQL, ending in
+    * `resranked`. dot(q, x̂) = qbase + Σ dot(q_i, cb_i);
+    * |x̂|² = |c|² + Σ (2·dot(c_i, cb_i) + |cb_i|²) via the
+    * (cell, sub, code) cross-term lookup. */
+  private val ResAdcTail: String =
+    """, xterm AS (
+      |  SELECT cn.cell, t.sub, t.code,
+      |    2 * list_dot_product(
+      |          CAST(list_slice(cn.cvec, t.sub * 4 + 1, t.sub * 4 + 4) AS DOUBLE[]),
+      |          CAST(t.cvec AS DOUBLE[])) + t.cn2 AS xt
+      |  FROM cent_n cn CROSS JOIN ctl t
+      |), qbase AS (
+      |  SELECT q.vec_id AS query_id, c.cell,
+      |    list_dot_product(CAST(q.embedding AS DOUBLE[]),
+      |                     CAST(c.cvec AS DOUBLE[])) AS qb
+      |  FROM nrm q CROSS JOIN cent_n c WHERE q.vec_id < 20
+      |), rescand AS (
+      |  SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id, a.cell
+      |  FROM probes p JOIN assigned a
+      |    ON a.cell = p.cell AND a.vec_id <> p.vec_id
+      |), resparts AS (
+      |  SELECT d.query_id, d.neighbor_id, d.cell,
+      |    list_dot_product(CAST(q.e AS DOUBLE[]),
+      |                     CAST(t.cvec AS DOUBLE[])) AS dd,
+      |    x.xt
+      |  FROM rescand d
+      |  JOIN cl c ON c.vec_id = d.neighbor_id
+      |  JOIN ctl t ON t.sub = c.sub AND t.code = c.code
+      |  JOIN ql q ON q.sub = c.sub AND q.query_id = d.query_id
+      |  JOIN xterm x ON x.cell = d.cell AND x.sub = c.sub AND x.code = c.code
+      |), ressc AS (
+      |  SELECT query_id, neighbor_id, cell, sum(dd) AS sd, sum(xt) AS xs
+      |  FROM resparts GROUP BY 1, 2, 3
+      |), resadc AS (
+      |  SELECT s.query_id, s.neighbor_id,
+      |    (b.qb + s.sd) / nullif(sqrt(cc.cn * cc.cn + s.xs) * q.n, 0) AS a
+      |  FROM ressc s
+      |  JOIN qbase b ON b.query_id = s.query_id AND b.cell = s.cell
+      |  JOIN cent_n cc ON cc.cell = s.cell
+      |  JOIN nrm q ON q.vec_id = s.query_id
+      |), resranked AS (
+      |  SELECT query_id, neighbor_id, a,
+      |    row_number() OVER (PARTITION BY query_id
+      |                       ORDER BY round(a, 6) DESC, neighbor_id) AS rank
+      |  FROM resadc
+      |)""".stripMargin
+
+  /** Full residual-IVFPQ oracle chain at a given coarse chain (fixed or
+    * auto dials): coarse IVF → residuals → residual-trained PQ chains →
+    * residual-ADC tail. */
+  private def residualIvfPqSql(coarse: String): String =
+    "WITH " + coarse + ", " + ResCte + ", " +
+      pqChains(16, 32, 4, includeNrm = false, table = "res",
+        vecCol = "resid") + ResAdcTail
+
+  private def ivfChain(nListsSql: String,
+                       table: String = "embeddings",
+                       nProbeSql: String = "4",
+                       refineStrideSql: String = "1"): String = {
+    // Sampled coarse training (Similarity.trainCentroidsSampled): only
+    // every stride-th vec_id VOTES in the Lloyd refine; stride "1" keeps
+    // the chain byte-identical to the full trainer's.
+    val sampleWhere =
+      if (refineStrideSql == "1") ""
+      else s"\n    WHERE (v.vec_id % ($refineStrideSql)) = 0"
+    s"""nrm AS (
+        |  SELECT vec_id, embedding,
+        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+        |                          CAST(embedding AS DOUBLE[]))) AS n
+        |  FROM $table
+        |), seed AS (
+        |  SELECT vec_id AS cell, embedding AS cvec, n AS cn FROM nrm
+        |  WHERE vec_id < ($nListsSql)
+        |), assign0 AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT v.vec_id, s.cell,
+        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
+        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
+        |                         CAST(s.cvec AS DOUBLE[])) / nullif(v.n * s.cn, 0) DESC,
+        |        s.cell) AS rn
+        |    FROM nrm v CROSS JOIN seed s$sampleWhere) t
+        |  WHERE rn = 1
+        |), cent AS (
+        |  SELECT cell,
+        |    list_transform(
+        |      list_sort(list(struct_pack(i := i, m := m))),
+        |      x -> CAST(x.m AS REAL)) AS cvec
+        |  FROM (
+        |    SELECT a.cell, g.i, avg(CAST(v.embedding[g.i] AS DOUBLE)) AS m
+        |    FROM assign0 a
+        |    JOIN nrm v ON v.vec_id = a.vec_id,
+        |    LATERAL (SELECT unnest(generate_series(1, len(v.embedding))) AS i) g
+        |    GROUP BY a.cell, g.i) d
+        |  GROUP BY cell
+        |), cent_n AS (
+        |  SELECT cell, cvec,
+        |    sqrt(list_dot_product(CAST(cvec AS DOUBLE[]), CAST(cvec AS DOUBLE[]))) AS cn
+        |  FROM cent
+        |), assigned AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT v.vec_id, c.cell,
+        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
+        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
+        |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
+        |        c.cell) AS rn
+        |    FROM nrm v CROSS JOIN cent_n c) t
+        |  WHERE rn = 1
+        |), probes AS (
+        |  SELECT vec_id, cell FROM (
+        |    SELECT v.vec_id, c.cell,
+        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
+        |        list_dot_product(CAST(v.embedding AS DOUBLE[]),
+        |                         CAST(c.cvec AS DOUBLE[])) / nullif(v.n * c.cn, 0) DESC,
+        |        c.cell) AS rn
+        |    FROM nrm v CROSS JOIN cent_n c
+        |    WHERE v.vec_id < 20) t
+        |  WHERE rn <= ($nProbeSql)
+        |), scored AS (
+        |  SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
+        |                           CAST(ae.embedding AS DOUBLE[])) /
+        |          nullif(qe.n * ae.n, 0), 6) AS cos
+        |  FROM probes q JOIN assigned a ON q.cell = a.cell AND q.vec_id <> a.vec_id
+        |  JOIN nrm qe ON qe.vec_id = q.vec_id
+        |  JOIN nrm ae ON ae.vec_id = a.vec_id
+        |), ranked AS (
+        |  SELECT query_id, neighbor_id, cos,
+        |    row_number() OVER (PARTITION BY query_id
+        |                       ORDER BY cos DESC, neighbor_id) AS rank
+        |  FROM scored
+        |)
+        |""".stripMargin
+  }
+
+  val rows: Seq[QueryDef] = Seq(
+    QueryDef("sim_topk_bruteforce", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    """WITH scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) /
+        |          nullif(sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))) *
+        |           sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))), 0), 6) AS cos
+        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+        |  WHERE q.vec_id < 20
+        |), ranked AS (
+        |  SELECT query_id, neighbor_id, cos,
+        |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+        |  FROM scored
+        |)
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // int8 storage quantization (map-only, codegen; the persist-side
+    // compression step). The full per-vector code is hash-compared — the
+    // oracle mirrors the scale/round/clamp arithmetic digit-for-digit.
+    // The code array is emitted as an md5 over its comma-joined elements
+    // (not the raw array<int>): a pandas-based hash compare cannot sort a
+    // list-typed column, and the digest compares the exact same content.
+    QueryDef("embed_quantize_int8", (s, dir) => {
+      graft.ops.Quantization.quantizeInt8(
+        s.read.parquet(s"$dir/embeddings.parquet"))
+        .select(col("vec_id"), round(col("scale"), 6).as("scale"),
+          md5(concat_ws(",", col("qvec").cast("array<string>"))).as("qvec_md5"))
+        .orderBy("vec_id")
+    },
+    // per-vector symmetric int8 code: same scale/round/clamp arithmetic;
+    // round-half-away-from-zero agrees between engines, and the clamped
+    // value is integral before the INT cast so DuckDB's round-on-cast vs
+    // Spark's truncate-on-cast can never diverge. The code array itself
+    // is compared as md5 over its comma-joined elements (list columns are
+    // not sortable by a pandas-based hash compare).
+    """WITH a AS (
+        |  SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding,
+        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
+        |  FROM embeddings
+        |)
+        |SELECT vec_id, round(amax / 127.0, 6) AS scale,
+        |  md5(array_to_string(CASE WHEN amax > 0 THEN
+        |    list_transform(embedding, x -> CAST(greatest(-127.0, least(127.0,
+        |      round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT))
+        |  ELSE list_transform(embedding, x -> 0) END, ',')) AS qvec_md5
+        |FROM a ORDER BY vec_id""".stripMargin),
+    // Scale path: LSH-bucketed ANN. Full SQL oracle — the LshBucketChain
+    // CTEs reproduce the md5-derived hyperplanes and banded sign-bit
+    // buckets symbolically, so the oracle hash-compares this row.
+    QueryDef("sim_ann_lsh", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    "WITH " + LshBucketChain +
+      """, qprobe AS (
+        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
+        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
+        |  WHERE vec_id < 20
+        |), scored AS (
+        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
+        |                           CAST(ce.embedding AS DOUBLE[])) /
+        |          nullif(qn.n * cn.n, 0), 6) AS cos
+        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
+        |    AND q.vec_id <> c.vec_id
+        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
+        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
+        |  JOIN nrm qn ON qn.vec_id = q.vec_id
+        |  JOIN nrm cn ON cn.vec_id = c.vec_id
+        |  WHERE q.vec_id < 20
+        |), ranked AS (
+        |  SELECT query_id, neighbor_id, cos,
+        |    row_number() OVER (PARTITION BY query_id
+        |                       ORDER BY cos DESC, neighbor_id) AS rank
+        |  FROM scored
+        |)
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The LSH recall dial exercised at a NON-default configuration
+    // (12 tables × 4 planes = 48 hyperplanes): planes are a prefix of one
+    // shared md5-derived family, so this config's candidates are a strict
+    // superset of the default 8-table run's (recall monotone — see the
+    // LshConfigPropertySpec theorem) and the oracle regenerates the
+    // 48-plane chain from the same constants.
+    QueryDef("sim_ann_lsh_wide", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5,
+        multiProbe = true, numTables = 12, planesPerTable = 4)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    "WITH " + lshBucketChain(48, 4) +
+      """, qprobe AS (
+        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
+        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
+        |  WHERE vec_id < 20
+        |), scored AS (
+        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
+        |                           CAST(ce.embedding AS DOUBLE[])) /
+        |          nullif(qn.n * cn.n, 0), 6) AS cos
+        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
+        |    AND q.vec_id <> c.vec_id
+        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
+        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
+        |  JOIN nrm qn ON qn.vec_id = q.vec_id
+        |  JOIN nrm cn ON cn.vec_id = c.vec_id
+        |  WHERE q.vec_id < 20
+        |), ranked AS (
+        |  SELECT query_id, neighbor_id, cos,
+        |    row_number() OVER (PARTITION BY query_id
+        |                       ORDER BY cos DESC, neighbor_id) AS rank
+        |  FROM scored
+        |)
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Second scale path: IVF cells + nProbe search. Full SQL oracle via
+    // the IvfChain CTEs (deterministic seeds + one Lloyd iteration).
+    QueryDef("sim_ann_ivf", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    "WITH " + IvfChain +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Recall gate for the LSH path: micro-averaged recall@5 of lshTopK vs
+    // the exact brute-force top-5 over the same query set, one summary row
+    // with the >= 0.8 flag. The oracle recomputes the whole thing
+    // symbolically, so the flag value is pinned by the hash compare — if a
+    // plane/bucket/probe change drops recall below the bar, recall_ok
+    // flips to false on BOTH sides and the regression is visible in the
+    // committed result, not just in a local measurement.
+    QueryDef("sim_ann_lsh_recall", (s, dir) =>
+      annRecall(s, dir, Similarity.lshTopK(_, _, 5)),
+    "WITH " + LshBucketChain +
+      """, qprobe AS (
+        |  SELECT vec_id, tbl, CAST(xor(bits, f) AS BIGINT) AS bits
+        |  FROM bkt, (SELECT unnest([0, 1, 2, 4, 8]) AS f) flips
+        |  WHERE vec_id < 20
+        |), lsh_scored AS (
+        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(qe.embedding AS DOUBLE[]),
+        |                           CAST(ce.embedding AS DOUBLE[])) /
+        |          nullif(qn.n * cn.n, 0), 6) AS cos
+        |  FROM qprobe q JOIN bkt c ON q.tbl = c.tbl AND q.bits = c.bits
+        |    AND q.vec_id <> c.vec_id
+        |  JOIN embeddings qe ON qe.vec_id = q.vec_id
+        |  JOIN embeddings ce ON ce.vec_id = c.vec_id
+        |  JOIN nrm qn ON qn.vec_id = q.vec_id
+        |  JOIN nrm cn ON cn.vec_id = c.vec_id
+        |), approx AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT query_id, neighbor_id,
+        |      row_number() OVER (PARTITION BY query_id
+        |                         ORDER BY cos DESC, neighbor_id) AS rank
+        |    FROM lsh_scored)
+        |  WHERE rank <= 5
+        |), ex_scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
+        |                           CAST(c.embedding AS DOUBLE[])) /
+        |          nullif(qn.n * cn.n, 0), 6) AS cos
+        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+        |  JOIN nrm qn ON qn.vec_id = q.vec_id
+        |  JOIN nrm cn ON cn.vec_id = c.vec_id
+        |  WHERE q.vec_id < 20
+        |), exact AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT query_id, neighbor_id,
+        |      row_number() OVER (PARTITION BY query_id
+        |                         ORDER BY cos DESC, neighbor_id) AS rank
+        |    FROM ex_scored)
+        |  WHERE rank <= 5
+        |)
+        |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
+        |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
+        |  n_hit * 1.0 / n_exact >= 0.8 AS recall_ok
+        |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
+        |             (SELECT count(*) FROM exact e
+        |              JOIN approx a ON e.query_id = a.query_id
+        |                AND e.neighbor_id = a.neighbor_id) AS n_hit)""".stripMargin),
+    // Same gate for the IVF path (recall@5 = 0.83 at sf0.01, 0.93 at
+    // sf0.1 — deterministic, both over the 0.8 bar).
+    QueryDef("sim_ann_ivf_recall", (s, dir) =>
+      annRecall(s, dir, Similarity.ivfTopK(_, _, 5)),
+    "WITH " + IvfChain + IvfRecallTail),
+    // Scale-aware dial, oracle-gated at its NON-default value: nLists =
+    // max(16, ceil(sqrt(n))) (23 at sf0.01, 45 at sf0.1) computed from a
+    // corpus count on the Spark side and from count(*) inside the oracle
+    // SQL — the one knob the fixed-dial 10x probe showed growing
+    // super-linearly now turns itself, and the turned value hash-compares.
+    QueryDef("sim_ann_ivf_auto", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      Similarity.ivfTopKAuto(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    "WITH " + AutoIvfChain +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Recall gate at the turned dial: more cells = fewer candidates per
+    // probe, so the dial's recall cost is pinned alongside its speed
+    // (recall here is data-derived on BOTH sides — a drop below the 0.8
+    // bar flips recall_ok in the committed result, visibly).
+    QueryDef("sim_ann_ivf_auto_recall", (s, dir) =>
+      annRecall(s, dir, Similarity.ivfTopKAuto(_, _, 5)),
+    "WITH " + AutoIvfChain + IvfRecallTail),
+    // Corpus-wide k-NN graph (every vector a query — the SemDeDup-style
+    // diversity/graph-dedup building block), in-cell candidates at the
+    // auto dial; the oracle reuses the auto assignment chain so the
+    // whole graph hash-compares.
+    QueryDef("sim_knn_graph", (s, dir) =>
+      Similarity.knnGraphAuto(
+        s.read.parquet(s"$dir/embeddings.parquet"), 3),
+    // k-NN graph over the auto chain's `assigned`/`nrm` CTEs (fresh CTE
+    // names — the chain's own probes/scored/ranked stay unused)
+    "WITH " + AutoIvfChain +
+      """, kscored AS (
+        |  SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(ae.embedding AS DOUBLE[]),
+        |                           CAST(be.embedding AS DOUBLE[])) /
+        |          nullif(ae.n * be.n, 0), 6) AS cos
+        |  FROM assigned a JOIN assigned b
+        |    ON a.cell = b.cell AND a.vec_id <> b.vec_id
+        |  JOIN nrm ae ON ae.vec_id = a.vec_id
+        |  JOIN nrm be ON be.vec_id = b.vec_id
+        |), knn AS (
+        |  SELECT vec_id, neighbor_id, cos,
+        |    row_number() OVER (PARTITION BY vec_id
+        |                       ORDER BY cos DESC, neighbor_id) AS rank
+        |  FROM kscored
+        |)
+        |SELECT vec_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
+        |FROM knn WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin),
+    // End-to-end quality gate for the int8 storage codes: recall@5 of
+    // exact top-k computed on the quantize→dequantize round-trip vs the
+    // float originals — pins how much ranking the 4× compression costs
+    // (data-derived on both sides; a code change that degrades the codes
+    // flips recall_ok in the committed result).
+    QueryDef("sim_quantized_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) => {
+        def deq(df: DataFrame) = graft.ops.Quantization.dequantizeInt8(
+          graft.ops.Quantization.quantizeInt8(df))
+          .select(col("vec_id"), col("embedding"))
+        Similarity.bruteForceTopK(deq(c), deq(q), 5)
+      }),
+    // quantize→dequantize both sides, then the exact-vs-exact recall
+    // frame; recon elements FLOAT-narrowed exactly like Spark's
+    // (q*scale).cast("float")
+    """WITH a AS (
+        |  SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding,
+        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
+        |  FROM embeddings
+        |), dq AS (
+        |  SELECT vec_id,
+        |    CASE WHEN amax > 0 THEN
+        |      list_transform(embedding, x -> CAST(
+        |        CAST(CAST(greatest(-127.0, least(127.0,
+        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
+        |        * (amax / 127.0) AS FLOAT))
+        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS e
+        |  FROM a
+        |), qs AS (
+        |  SELECT d.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(d.e AS DOUBLE[]), CAST(c.e AS DOUBLE[])) /
+        |          nullif(sqrt(list_dot_product(CAST(d.e AS DOUBLE[]), CAST(d.e AS DOUBLE[]))) *
+        |                 sqrt(list_dot_product(CAST(c.e AS DOUBLE[]), CAST(c.e AS DOUBLE[]))), 0), 6) AS cos
+        |  FROM dq d JOIN dq c ON d.vec_id <> c.vec_id
+        |  WHERE d.vec_id < 20
+        |), approx AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT query_id, neighbor_id,
+        |      row_number() OVER (PARTITION BY query_id
+        |                         ORDER BY cos DESC, neighbor_id) AS rank
+        |    FROM qs) WHERE rank <= 5
+        |), es AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) /
+        |          nullif(sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))) *
+        |                 sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))), 0), 6) AS cos
+        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+        |  WHERE q.vec_id < 20
+        |), exact AS (
+        |  SELECT query_id, neighbor_id FROM (
+        |    SELECT query_id, neighbor_id,
+        |      row_number() OVER (PARTITION BY query_id
+        |                         ORDER BY cos DESC, neighbor_id) AS rank
+        |    FROM es) WHERE rank <= 5
+        |)
+        |SELECT CAST(n_exact AS BIGINT) AS n_exact, CAST(n_hit AS BIGINT) AS n_hit,
+        |  floor((n_hit * 1.0 / n_exact) * 1000000 + 0.5) / 1000000 AS recall,
+        |  n_hit * 1.0 / n_exact >= 0.8 AS recall_ok
+        |FROM (SELECT (SELECT count(*) FROM exact) AS n_exact,
+        |             (SELECT count(*) FROM exact e JOIN approx ap
+        |                USING (query_id, neighbor_id)) AS n_hit)""".stripMargin),
+    // The composed storage story: IVF search over the int8-quantized
+    // corpus (quantize → dequantize → the standard cell chain) — what a
+    // 100 TB deployment actually runs, since the float corpus is never
+    // persisted. The full top-k hash-compares: the oracle runs the
+    // identical IvfChain over a dequantized CTE.
+    QueryDef("sim_ann_ivf_quantized", (s, dir) => {
+      val emb = graft.ops.Quantization.dequantizeInt8(
+        graft.ops.Quantization.quantizeInt8(
+          s.read.parquet(s"$dir/embeddings.parquet")))
+        .select(col("vec_id"), col("embedding"))
+      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    // the identical IvfChain run over a dequantized-int8 CTE — the
+    // composed storage+search path, top-k hash-compared end-to-end
+    "WITH qa AS (" +
+      """
+        |  SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding,
+        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
+        |  FROM embeddings
+        |), dqe AS (
+        |  SELECT vec_id,
+        |    CASE WHEN amax > 0 THEN
+        |      list_transform(embedding, x -> CAST(
+        |        CAST(CAST(greatest(-127.0, least(127.0,
+        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
+        |        * (amax / 127.0) AS FLOAT))
+        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS embedding
+        |  FROM qa
+        |), """.stripMargin + ivfChain("16", "dqe") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The managed storage path: codes come from the fingerprinted
+    // int8CodeStore (write-once parquet of (vec_id, scale, qvec) — the
+    // production artifact), NOT a per-query re-quantization; search is
+    // the identical dequantize → IVF chain, so the oracle SQL is the same
+    // as sim_ann_ivf_quantized. First execution builds the store; every
+    // later one reads it (the amortization SCALING.md measures).
+    QueryDef("sim_ann_ivf_quantized_managed", (s, dir) => {
+      val emb = graft.ops.Quantization.dequantizeInt8(
+        graft.ops.Quantization.int8CodeStore(
+          s, s.read.parquet(s"$dir/embeddings.parquet"),
+          s"$dir/embeddings.parquet", "registry"))
+        .select(col("vec_id"), col("embedding"))
+      Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
+        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    },
+    // managed variant: stored codes round-trip the inline arithmetic
+    // exactly (int codes + double scale survive parquet bit-for-bit), so
+    // the oracle is the identical dequantized IvfChain
+    "WITH qa AS (" +
+      """
+        |  SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding,
+        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
+        |  FROM embeddings
+        |), dqe AS (
+        |  SELECT vec_id,
+        |    CASE WHEN amax > 0 THEN
+        |      list_transform(embedding, x -> CAST(
+        |        CAST(CAST(greatest(-127.0, least(127.0,
+        |          round(CAST(x AS DOUBLE) / (amax / 127.0)))) AS INT) AS DOUBLE)
+        |        * (amax / 127.0) AS FLOAT))
+        |    ELSE list_transform(embedding, x -> CAST(0.0 AS FLOAT)) END AS embedding
+        |  FROM qa
+        |), """.stripMargin + ivfChain("16", "dqe") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Product quantization (spherical PQ, m=16 × k=32 over 64 dims): the
+    // storage step beyond int8 — 16 5-bit codes per vector, 25× smaller
+    // than float32 bit-packed (16 bytes as stored ints). Codes
+    // hash-compare as a digest (the harness cannot sort list columns);
+    // the oracle re-trains all 16 subspace codebooks symbolically through
+    // the same seed→Lloyd→argmax chain as IvfChain, on array slices. The
+    // (16, 32, rerank=50) dials are PqSweep-measured: recall@5 0.95 /
+    // 0.93 at sf0.01 / sf0.1 for the reranked path.
+    QueryDef("embed_pq_encode", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.encode(emb,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .select(col("vec_id"),
+          md5(concat_ws(",", col("pq_code").cast("array<string>")))
+            .as("pq_md5"))
+        .orderBy("vec_id")
+    },
+    // PQ codes: 16-way join of the per-subspace assignment chains, the
+    // concatenated code digest-compared (list columns are not
+    // harness-sortable — the embed_quantize_int8 rule).
+    "WITH " + PqChain + ", codes AS (\n" +
+      "  SELECT c0.vec_id, list_value(" +
+      (0 until 16).map(i => s"c$i.code").mkString(", ") + ") AS pq\n" +
+      "  FROM cd0 c0 " +
+      (1 until 16).map(i => s"JOIN cd$i c$i USING (vec_id)").mkString(" ") +
+      "\n)\n" +
+      """SELECT vec_id, md5(array_to_string(pq, ',')) AS pq_md5
+        |FROM codes ORDER BY vec_id""".stripMargin),
+    // ADC search over the PQ codes: the query stays float, the corpus is
+    // scored through a broadcast per-query lookup table of subspace dot
+    // products — the corpus vectors are never reconstructed. Full top-5
+    // hash-compares.
+    QueryDef("sim_pq_adc", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.adcTopK(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    "WITH " + PqChain + PqAdcTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Quality gate for the raw ADC ranking: recall@5 vs the exact float
+    // top-5. Raw ADC is the CANDIDATE GENERATOR, not the final ranking —
+    // on these unclustered synthetic embeddings it measures 0.53 / 0.37
+    // (sf0.01 / sf0.1), so the bar pins the regression floor at 0.3: an
+    // arithmetic break collapses recall to ~k/n ≈ 0.01, far below it.
+    QueryDef("sim_pq_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.adcTopK(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64))),
+        bar = 0.3),
+    // Raw-ADC quality floor (see the queries-side comment for the 0.3
+    // rationale: candidate generator, not final ranking).
+    "WITH " + PqChain + PqAdcTail + recallTail(0.3)),
+    // The production two-stage shape: ADC candidates (top-50), exact
+    // rerank of only those, top-5 out — FAISS's PQ-scan + refine. Holds
+    // the standard 0.8 bar at both gate scales.
+    QueryDef("sim_pq_rerank_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.adcTopK(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
+          rerank = 50)),
+    // PQ-scan + exact-refine, the production shape, at the standard bar.
+    "WITH " + PqChain + PqAdcTail +
+      pqRerankTail(50) + recallTail(0.8, "rranked")),
+    // The managed PQ path: codebooks AND codes come from the
+    // fingerprinted pqStore (write-once parquet pair — the production
+    // artifacts), search runs entirely from stored state; the float
+    // corpus feeds only the query side. Same oracle as sim_pq_adc: a
+    // stored codebook is bit-indistinguishable from a fresh one.
+    QueryDef("sim_pq_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
+        s, emb, s"$dir/embeddings.parquet", "registry")
+      graft.ops.ProductQuantization.adcSearch(codes, cb,
+        emb.where(col("vec_id") < 20), 5)
+    },
+    // Managed = stored codebooks/codes, which are bit-identical to a
+    // fresh train+encode — the oracle is sim_pq_adc's verbatim.
+    "WITH " + PqChain + PqAdcTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The huge-query-batch path: the 20-query batch is forced through
+    // chunkRows=8 (3 chunks, 3 bounded LUT broadcasts) — per-query top-k
+    // is chunk-independent, so the union is EXACTLY adcSearch's result
+    // and the oracle is sim_pq_adc's verbatim. At a real 10^6-query
+    // batch this is what caps the broadcast at AdcMaxQueryBatch x m.k
+    // rows instead of OOMing the driver.
+    QueryDef("sim_pq_adc_chunked", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val cb = graft.ops.ProductQuantization.train(emb, 16, 32,
+        dimHint = Some(64))
+      graft.ops.ProductQuantization.adcSearchChunked(
+        graft.ops.ProductQuantization.encode(emb, cb)
+          .select(col("vec_id"), col("pq_code")),
+        cb, emb.where(col("vec_id") < 20), 5, chunkRows = 8)
+        .orderBy("query_id", "rank")
+    },
+    // Chunked = the same search unioned over bounded query-id ranges;
+    // per-query results are chunk-independent, so the oracle is
+    // sim_pq_adc's verbatim.
+    "WITH " + PqChain + PqAdcTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM ranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The composed FAISS architecture: IVF coarse cells bound each
+    // query's candidates (same chain/dials as sim_ann_ivf), ADC over the
+    // PQ codes scores only those — per query O(n·nProbe/nLists · m)
+    // int lookups, 16 B/vector. Full top-5 hash-compares against the
+    // two chains composed in SQL.
+    QueryDef("sim_ann_ivf_pq", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.ivfPqTopK(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    // IVF coarse chain + nrm-free PQ chains + ADC-within-cells tail.
+    "WITH " + IvfChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // IVFPQ + exact refine (rerank=50): the production pipeline, holding
+    // the standard 0.8 bar (PqSweep-measured 0.82 / 0.91 at
+    // sf0.01 / sf0.1 — the cell restriction costs ~nothing once the
+    // refine stage reorders).
+    QueryDef("sim_ann_ivf_pq_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqTopK(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
+          rerank = 50)),
+    "WITH " + IvfChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
+    // IVFPQ with BOTH dials scale-aware (nLists = sqrt-n, nProbe =
+    // sqrt-nLists — the 100× probe's winning point: fixed 16/4 ran
+    // SLOWER than a full ADC scan at n=200k, sqrt-n cells 40% faster at
+    // recall 1.0). nLists and nProbe are recomputed from count(*) inside
+    // the oracle, so the turned dials hash-compare end-to-end. Since
+    // round 17 the auto default trains the coarse quantizer on the
+    // bounded stride sample (the round-16 bisection measured the full
+    // refine as every auto row's dominant 100x term); the oracle is the
+    // SAMPLED chain, and sim_ann_ivf_pq_auto_full gates the full-refine
+    // opt-in.
+    QueryDef("sim_ann_ivf_pq_auto", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.ivfPqTopKAuto(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    // Auto dials recomputed in SQL: nLists from count(*), nProbe from
+    // sqrt(nLists) — the composed chains otherwise identical.
+    "WITH " + SampledIvfPqChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... and its production recall gate (exact refine of 50 candidates):
+    // 0.94 / 0.97 at sf0.01 / sf0.1, standard 0.8 bar.
+    QueryDef("sim_ann_ivf_pq_auto_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqTopKAuto(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
+          rerank = 50)),
+    "WITH " + SampledIvfPqChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
+    // The explicit full-refine opt-in (fullRefine = true): the pre-17
+    // auto behavior — every corpus row votes in the coarse Lloyd refine
+    // — kept for write-once builds where construction cost is
+    // irrelevant; oracle is the UNSAMPLED auto chain, so the opt-in
+    // path stays hash-gated end-to-end.
+    QueryDef("sim_ann_ivf_pq_auto_full", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.ivfPqTopKAuto(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)),
+        fullRefine = true)
+    },
+    // The full-refine opt-in: the unsampled auto chain.
+    "WITH " + AutoIvfPqChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The SAMPLED coarse-training rows (stride = max(1, n/(16*nLists))
+    // — the FAISS bounded-sample practice). Since round 17 this IS the
+    // auto default, so these rows gate the same path as
+    // sim_ann_ivf_pq_auto through the sampled entry-point alias; kept
+    // because the A/B history (SCALING.md) names them. Stride
+    // degenerates to 1 at sf0.01 (sampled == full, asserted in PqSpec);
+    // sf0.1 runs stride 2, so the sampling arithmetic itself is
+    // hash-compared. Full top-5 hash-compares at both scales.
+    QueryDef("sim_ann_ivf_pq_auto_sampled", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.ivfPqTopKAutoSampled(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    // Sampled coarse training: the auto chain with the Lloyd refine
+    // restricted to every stride-th vec_id (stride recomputed from
+    // count(*) — see AutoCoarseStrideSql).
+    "WITH " + SampledIvfPqChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... and its production recall gate (exact refine of 50): the
+    // standard 0.8 bar — the dial question is whether a 16-vectors-per-
+    // centroid training sample costs recall vs the full trainer's
+    // 0.94 / 0.97.
+    QueryDef("sim_ann_ivf_pq_auto_sampled_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqTopKAutoSampled(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
+          rerank = 50)),
+    "WITH " + SampledIvfPqChain +
+      ", " + pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
+    // The fully MANAGED IVF-PQ index: coarse centroids (sampled-sqrt-n),
+    // codebooks, and (vec_id, cell, pq_code) index rows all come from
+    // fingerprinted write-once stores; search reads NOTHING but stored
+    // state plus the query floats — the parquet FAISS index. Oracle is
+    // the sampled-auto chain verbatim: stored artifacts round-trip
+    // bit-exactly, so a warm index is indistinguishable from a fresh
+    // build.
+    QueryDef("sim_ann_ivf_pq_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (coded, cb, local, nProbe) =
+        graft.ops.ProductQuantization.ivfPqStore(
+          s, emb, s"$dir/embeddings.parquet", "registry")
+      graft.ops.ProductQuantization.ivfPqSearch(coded, cb, local,
+        emb.where(col("vec_id") < 20), 5, nProbe)
+    },
+    // Managed index == sampled-auto build, read back from parquet
+    // stores: same oracle verbatim (the sim_pq_managed precedent).
+    "WITH " + SampledIvfPqChain + ", " +
+      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Residual-encoded IVFPQ (FAISS by_residual): codes quantize
+    // vector MINUS coarse centroid instead of the raw vector — residuals
+    // concentrate near zero, so the same 16x5 bits capture the
+    // informative within-cell offsets. Full top-5 hash-compares against
+    // the coarse chain + residual CTE + residual-trained PQ chains +
+    // cross-term ADC composed in SQL.
+    QueryDef("sim_ann_ivf_pq_residual", (s, dir) =>
+      graft.ops.ProductQuantization.ivfPqResidualTopK(
+        s.read.parquet(s"$dir/embeddings.parquet"),
+        s.read.parquet(s"$dir/embeddings.parquet")
+          .where(col("vec_id") < 20), 5, dimHint = Some(64)),
+    // Residual IVFPQ: coarse chain -> residual CTE -> residual-trained
+    // PQ chains -> cross-term ADC tail (see ResAdcTail).
+    residualIvfPqSql(IvfChain) +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM resranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Raw residual-ADC quality vs the non-residual raw codes (the
+    // measured reason residual encoding exists — see SCALING.md A/B):
+    // same 0.3 regression floor as sim_pq_recall.
+    QueryDef("sim_ann_ivf_pq_residual_raw_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqResidualTopK(c, q, 5,
+          dimHint = Some(64)), bar = 0.3),
+    residualIvfPqSql(IvfChain) +
+      recallTail(0.3, "resranked")),
+    // The production shape: residual-IVFPQ candidates + exact refine of
+    // 50, standard 0.8 bar (fixed dials — comparable row:
+    // sim_ann_ivf_pq_recall).
+    QueryDef("sim_ann_ivf_pq_residual_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqResidualTopK(c, q, 5,
+          rerank = 50, dimHint = Some(64))),
+    residualIvfPqSql(IvfChain) +
+      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
+    // ... and at the scale-aware auto dials (comparable row:
+    // sim_ann_ivf_pq_auto_recall's 0.94/0.97).
+    QueryDef("sim_ann_ivf_pq_residual_auto_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.ivfPqResidualTopKAuto(c, q, 5,
+          rerank = 50, dimHint = Some(64))),
+    residualIvfPqSql(SampledIvfPqChain) +
+      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
+    // The fully MANAGED residual index (FAISS by_residual made of
+    // parquet): sampled-sqrt-n coarse centroids, residual-trained
+    // codebooks, per-cell cross-term arrays, and (vec_id, cell, code)
+    // rows all come from fingerprinted write-once stores; warm search
+    // touches NO float corpus — only stored codes plus the query
+    // floats. Oracle is the sampled-auto residual chain verbatim
+    // (stored doubles/floats round-trip bit-exactly).
+    QueryDef("sim_ann_ivf_pq_residual_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (coded, cb, local, cellSide, nProbe) =
+        graft.ops.ProductQuantization.ivfPqResidualStore(
+          s, emb, s"$dir/embeddings.parquet", "registry")
+      graft.ops.ProductQuantization.ivfPqResidualSearch(coded, cb, local,
+        cellSide, emb.where(col("vec_id") < 20), 5, nProbe)
+    },
+    // Managed residual index == sampled-auto residual build read back
+    // from parquet stores: same oracle verbatim (the
+    // sim_ann_ivf_pq_managed precedent).
+    residualIvfPqSql(SampledIvfPqChain) +
+      """
+        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM resranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... and the production shape over the same warm store: exact
+    // refine of 50 (reads 50 float rows/query, never the corpus),
+    // standard 0.8 bar — recall matches the fresh residual auto row.
+    QueryDef("sim_ann_ivf_pq_residual_managed_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) => {
+        val (coded, cb, local, cellSide, nProbe) =
+          graft.ops.ProductQuantization.ivfPqResidualStore(
+            s, c, s"$dir/embeddings.parquet", "registry")
+        graft.ops.ProductQuantization.ivfPqResidualSearch(coded, cb, local,
+          cellSide, q, 5, nProbe, rerank = 50, rerankCorpus = Some(c))
+      }),
+    residualIvfPqSql(SampledIvfPqChain) +
+      pqRerankTail(50, "resranked") + recallTail(0.8, "rranked")),
+    // The roughest storage tier: 1-bit sign codes, one LONG per 64-dim
+    // vector (32× vs float32). The code is a plain sortable integer —
+    // compared directly, no digest needed.
+    QueryDef("embed_binarize", (s, dir) =>
+      graft.ops.Quantization.binarize(
+        s.read.parquet(s"$dir/embeddings.parquet"))
+        .select(col("vec_id"), col("bcode")).orderBy("vec_id"),
+    // Sign codes are plain BIGINTs — compared directly, no digest.
+    "WITH " + BinChain +
+      "\nSELECT c.vec_id, c.bcode FROM codes c ORDER BY c.vec_id"),
+    // Hamming search over the sign codes: xor + popcount per pair,
+    // integers end to end — bit-deterministic ranking (no float ties,
+    // no sum-order noise anywhere in this row).
+    QueryDef("sim_hamming_topk", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.Quantization.hammingTopK(
+        emb, emb.where(col("vec_id") < 20), 5)
+    },
+    "WITH " + BinChain + HammingTail +
+      """
+        |SELECT query_id, rank, neighbor_id, hamming FROM hranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Raw sign-bit recall floor: 0.24 / 0.13 at sf0.01 / sf0.1 — 1
+    // bit/dim is the coarsest candidate generator in the ladder, and the
+    // 0.1 bar pins only the regression floor (broken codes ≈ 0.01).
+    QueryDef("sim_hamming_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.Quantization.hammingTopK(c, q, 5), bar = 0.1),
+    "WITH " + BinChain + HammingTail +
+      recallTail(0.1, "hranked")),
+    // Binary-prefilter + exact-refine (Hamming top-200 → cosine top-5):
+    // the production use of sign codes — a FIXED 200-candidate refine per
+    // query regardless of corpus size (0.97 / 0.86 ≥ 0.8 measured; the
+    // budget, not the corpus, bounds the refine cost at 100 TB).
+    QueryDef("sim_hamming_rerank_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.Quantization.hammingTopK(c, q, 5, rerank = 200),
+        bar = 0.8),
+    "WITH " + BinChain + HammingTail +
+      pqRerankTail(200, "hranked") + recallTail(0.8, "rranked")),
+    // The binary tier composed with IVF: coarse cells bound each query's
+    // candidates, sign codes rank them by Hamming (8 B xors), the top-200
+    // get one exact cosine each — the whole-corpus code scan
+    // (sim_hamming_topk) becomes sub-corpus like every other search
+    // path. Full top-5 hash-compares.
+    QueryDef("sim_ann_ivf_hamming", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.Quantization.ivfHammingTopK(
+        emb, emb.where(col("vec_id") < 20), 5)
+    },
+    // IVF coarse chain + nrm-free sign codes + cell-bounded Hamming
+    // prefilter + the shared exact-refine tail.
+    "WITH " + IvfChain + ", " +
+      binChain(includeNrm = false) + IvfHammingTail +
+      pqRerankTail(200, "ihr") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... its production recall gate (standard 0.8 bar), and the same at
+    // the scale-aware sqrt-n dials (the 100x-probe configuration).
+    QueryDef("sim_ann_ivf_hamming_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.Quantization.ivfHammingTopK(c, q, 5), bar = 0.8),
+    "WITH " + IvfChain + ", " +
+      binChain(includeNrm = false) + IvfHammingTail +
+      pqRerankTail(200, "ihr") + recallTail(0.8, "rranked")),
+    QueryDef("sim_ann_ivf_hamming_auto_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.Quantization.ivfHammingTopKAuto(c, q, 5), bar = 0.8),
+    "WITH " + SampledIvfPqChain + ", " +
+      binChain(includeNrm = false) + IvfHammingTail +
+      pqRerankTail(200, "ihr") + recallTail(0.8, "rranked")),
+    // The auto-dial SEARCH row (full top-5 hash-compare; also the clean
+    // probe instrument — the recall rows embed an O(n.Q) exact baseline
+    // that would drown the operator's own scaling).
+    QueryDef("sim_ann_ivf_hamming_auto", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.Quantization.ivfHammingTopKAuto(
+        emb, emb.where(col("vec_id") < 20), 5)
+    },
+    "WITH " + SampledIvfPqChain + ", " +
+      binChain(includeNrm = false) + IvfHammingTail +
+      pqRerankTail(200, "ihr") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... and the binary tier MANAGED: coarse centroids + (id, cell,
+    // 8 B sign code) persisted write-once (16 B/vector — the cheapest
+    // index artifact of the ladder); warm search trains nothing,
+    // assigns nothing, binarizes nothing. Deterministic training +
+    // bit-exact parquet round-trip => identical output to the fresh
+    // sampled-auto build, so it shares that oracle.
+    QueryDef("sim_ann_ivf_hamming_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (codes, local, nProbe) = graft.ops.Quantization.ivfHammingStore(
+        s, emb, s"$dir/embeddings.parquet", "hamq")
+      graft.ops.Quantization.ivfHammingSearch(
+        codes, local, emb, emb.where(col("vec_id") < 20), 5,
+        rerank = 200, nProbe = nProbe)
+    },
+    // Warm store == fresh sampled-auto build (deterministic training,
+    // bit-exact parquet round-trip): same replay.
+    "WITH " + SampledIvfPqChain + ", " +
+      binChain(includeNrm = false) + IvfHammingTail +
+      pqRerankTail(200, "ihr") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The full storage-ladder cascade composed into ONE query (the FAISS
+    // IndexBinaryFlat -> PQ-rerank -> refine chain): 8 B/vector sign
+    // codes rank the whole corpus by Hamming and keep the top-200, ADC
+    // over the 16 B/vector PQ codes rescores only those and keeps the
+    // top-50, the float vectors are read for exactly 50 rows/query by
+    // the exact refine. Full top-5 hash-compares against the three
+    // tiers composed in SQL.
+    QueryDef("sim_cascade_topk", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.cascadeTopK(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    // Three-tier cascade: whole-corpus Hamming ranking (HammingTail) ->
+    // ADC over the top-200 candidates only (CascadeAdcTail) -> the
+    // shared exact-refine of the ADC top-50.
+    "WITH " + binChain(includeNrm = false) + ", " +
+      PqChain + HammingTail + CascadeAdcTail +
+      pqRerankTail(50, "cascranked") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // ... and its recall gate at the standard 0.8 bar (measured 0.94 /
+    // 0.85 at sf0.01 / sf0.1 — the ADC 200->50 narrowing costs ~1-3
+    // points vs sim_hamming_rerank_recall's exact-on-200).
+    QueryDef("sim_cascade_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.cascadeTopK(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32,
+            dimHint = Some(64)))),
+    "WITH " + binChain(includeNrm = false) + ", " +
+      PqChain + HammingTail + CascadeAdcTail +
+      pqRerankTail(50, "cascranked") + recallTail(0.8, "rranked")),
+    // The managed cascade: PQ codes come from the fingerprinted pqStore
+    // (the `codes` parameter — stage 2 reads stored 16 B/vector rows);
+    // stored codes are bit-identical to fresh ones, so the oracle is
+    // sim_cascade_topk's verbatim.
+    QueryDef("sim_cascade_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
+        s, emb, s"$dir/embeddings.parquet", "registry")
+      graft.ops.ProductQuantization.cascadeTopK(
+        emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
+    },
+    // Managed = stage-2 codes read from the fingerprinted store, which
+    // round-trip bit-exactly — sim_cascade_topk's oracle verbatim.
+    "WITH " + binChain(includeNrm = false) + ", " +
+      PqChain + HammingTail + CascadeAdcTail +
+      pqRerankTail(50, "cascranked") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // The cascade at the √n auto budgets (r1 = max(200, 4·⌈√n⌉), r2 =
+    // max(50, ⌈√n⌉)) — fixed keep budgets are a shrinking fraction of a
+    // growing corpus; the oracle recomputes both dials from count(*)
+    // in-query (the autoNLists convention).
+    QueryDef("sim_cascade_auto", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      graft.ops.ProductQuantization.cascadeTopKAuto(
+        emb, emb.where(col("vec_id") < 20), 5,
+        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+    },
+    // Auto cascade: both keep budgets recomputed from count(*) in-query
+    // (`greatest` + `ceil(sqrt(...))` are IEEE-exact on integer counts —
+    // the autoNLists precedent), pinning cascadeAutoDials' values.
+    "WITH " + binChain(includeNrm = false) + ", " +
+      PqChain + HammingTail +
+      cascadeAdcTailSql(
+        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
+      pqRerankTailSql(
+        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
+        "cascranked") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    QueryDef("sim_cascade_auto_recall", (s, dir) =>
+      annRecall(s, dir, (c, q) =>
+        graft.ops.ProductQuantization.cascadeTopKAuto(c, q, 5,
+          graft.ops.ProductQuantization.train(c, 16, 32,
+            dimHint = Some(64)))),
+    "WITH " + binChain(includeNrm = false) +
+      ", " + PqChain + HammingTail +
+      cascadeAdcTailSql(
+        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
+      pqRerankTailSql(
+        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
+        "cascranked") + recallTail(0.8, "rranked")),
+    // Auto budgets over the MANAGED stage-2 codes — stored codes are
+    // bit-identical to fresh, so this shares sim_cascade_auto's oracle.
+    QueryDef("sim_cascade_auto_managed", (s, dir) => {
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val (codes, cb) = graft.ops.ProductQuantization.pqStore(
+        s, emb, s"$dir/embeddings.parquet", "registry")
+      graft.ops.ProductQuantization.cascadeTopKAuto(
+        emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
+    },
+    // Stored stage-2 codes round-trip bit-exactly — sim_cascade_auto's
+    // replay verbatim.
+    "WITH " + binChain(includeNrm = false) +
+      ", " + PqChain + HammingTail +
+      cascadeAdcTailSql(
+        "greatest(200, 4 * ceil(sqrt((SELECT count(*) FROM embeddings))))") +
+      pqRerankTailSql(
+        "greatest(50, ceil(sqrt((SELECT count(*) FROM embeddings))))",
+        "cascranked") +
+      """
+        |SELECT query_id, rank, neighbor_id, cos FROM rranked
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)
+  )
+}

@@ -66,18 +66,6 @@ object EventTimeOps {
 
   val SessionGapMs: Long = 30 * 60 * 1000L
 
-  /** Session logic shared by the streaming and batch paths: fold events
-    * (sorted by ts) into gap-separated sessions. */
-  def foldSessions(events: Iterator[Long], gapMs: Long): List[(Long, Long, Long)] = {
-    val sorted = events.toList.sorted
-    sorted.foldLeft(List.empty[(Long, Long, Long)]) {
-      case (Nil, t) => List((t, t, 1L))
-      case ((s, last, n) :: rest, t) if t - last <= gapMs =>
-        (s, t, n + 1) :: rest
-      case (acc, t) => (t, t, 1L) :: acc
-    }.reverse
-  }
-
   /** Streaming sessionization: 30-minute-gap sessions per user via
     * `mapGroupsWithState`. In production run with
     * `GroupStateTimeout.ProcessingTimeTimeout` so idle sessions close and

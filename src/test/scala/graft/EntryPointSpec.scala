@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.AsOfJoinStrategy
 
-/** The session every entry point builds ([[GraftSession.builder]]) and
-  * the timing rule [[Bench]] applies to each query. */
+/** The session every entry point builds ([[GraftSession.builder]]), the
+  * timing rule [[Bench]] applies to each query, and the registry's
+  * row invariants ([[SparkEntry.rows]]). */
 class EntryPointSpec extends SparkSuite {
 
   override lazy val spark = GraftSession.builder("local[2]", 2)
@@ -52,5 +53,23 @@ class EntryPointSpec extends SparkSuite {
     assert(failed.reps.isEmpty && failed.median == -1.0)
     val ok = Bench.timeQuery(spark, () => spark.range(1).toDF())
     assert(Bench.total(Seq(ok, failed)) == ok.median)
+  }
+
+  test("registry row names are distinct") {
+    val names = SparkEntry.rows.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"duplicate row names: ${dups.mkString(", ")}")
+    assert(SparkEntry.queries.size == names.size)
+  }
+
+  test("registry queries and oracles have the same keys") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
+  test("no registry oracle is blank") {
+    val blank = SparkEntry.rows
+      .filter(r => r.oracleSql == null || r.oracleSql.trim.isEmpty)
+      .map(_.name)
+    assert(blank.isEmpty, s"blank oracles: ${blank.mkString(", ")}")
   }
 }

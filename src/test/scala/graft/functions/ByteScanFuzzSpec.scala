@@ -48,7 +48,7 @@ class ByteScanFuzzSpec extends SparkSuite {
       "a", "word", "x=1", "é", "😀", "scriptfoo", "script")
     assertParity(compositions(fragments, 600, 0xFACEL),
       MarkupExpressions.extractMarkup,
-      MarkupExpressions.extractMarkupDeclarative)
+      DeclarativeTwins.extractMarkupDeclarative)
   }
 
   test("pii kernel == declarative chain on 600 random fragment " +
@@ -60,7 +60,7 @@ class ByteScanFuzzSpec extends SparkSuite {
       " ", "\n", "q", "word", "é", ".com", "@ex.com", "a@", "9")
     assertParity(compositions(fragments, 600, 0xBEEFL),
       PiiExpressions.redactPii,
-      PiiExpressions.redactPiiDeclarative)
+      DeclarativeTwins.redactPiiDeclarative)
   }
 
   test("url kernel == declarative chain on 600 random fragment " +
@@ -75,6 +75,6 @@ class ByteScanFuzzSpec extends SparkSuite {
       "h+t.p-2://", "9http://")
     assertParity(compositions(fragments, 600, 0xCAFEL),
       graft.functions.UrlExpressions.canonicalizeUrl,
-      graft.ops.TextAnalysis.canonicalizeUrlDeclarative)
+      DeclarativeTwins.canonicalizeUrlDeclarative)
   }
 }

@@ -52,7 +52,7 @@ class MarkupExpressionsSpec extends SparkSuite {
     val df = planted.zipWithIndex.map(_.swap).toDF("id", "text")
     val rows = df.select(col("id"),
       MarkupExpressions.extractMarkup(col("text")).as("fast"),
-      MarkupExpressions.extractMarkupDeclarative(col("text")).as("slow"))
+      DeclarativeTwins.extractMarkupDeclarative(col("text")).as("slow"))
       .collect()
     rows.foreach { r =>
       assert(r.getString(1) == r.getString(2),
@@ -63,16 +63,16 @@ class MarkupExpressionsSpec extends SparkSuite {
 
   test("markup kernel equals the chain on generated crawl-like rows " +
     "(the synthesized wrapper the oracle row uses, over varied ids)") {
-    // THE wrapper the oracle row runs (SparkEntry.markupWrapped), not a
+    // THE wrapper the oracle row runs (SamplingRows.markupWrapped), not a
     // re-synthesis — a wrapper change automatically re-exercises this
     // parity test against the kernel
     val df = spark.range(0, 500)
       .select(col("id"),
-        graft.SparkEntry.markupWrapped(col("id"),
+        graft.registry.SamplingRows.markupWrapped(col("id"),
           concat(lit("body "), (col("id") * 7).cast("string"))).as("text"))
     val bad = df.select(
       MarkupExpressions.extractMarkup(col("text")).as("fast"),
-      MarkupExpressions.extractMarkupDeclarative(col("text")).as("slow"))
+      DeclarativeTwins.extractMarkupDeclarative(col("text")).as("slow"))
       .where(col("fast") =!= col("slow"))
     assert(bad.count() == 0L, s"mismatches: ${bad.take(3).mkString("; ")}")
   }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Pins the map-side MinHash kernel ([[MinhashSig]]) value-identical to
   * the declarative explode + min-aggregation formulation it replaced
-  * ([[Dedup.minhashSignatureDeclarative]]) at both shipped hash counts
-  * (8 = the default, 16 = `dedup_minhash_wide`'s) — on real data and on
+  * ([[DeclarativeTwins.minhashSignatureDeclarative]]) at both shipped
+  * hash counts (8 = the default, 16 = `dedup_minhash_wide`'s) — on real
+  * data and on
   * planted tokenization edges (leading/trailing whitespace → empty
   * tokens, sub-3-token docs dropping out, repeated shingles, case
   * folding, multi-byte). */
@@ -24,7 +25,7 @@ class MinhashKernelSpec extends SparkSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (k <- Seq(8, 16)) {
       val kernel = asMap(Dedup.minhashSignature(docs, k), k)
-      val decl = asMap(Dedup.minhashSignatureDeclarative(docs, k), k)
+      val decl = asMap(DeclarativeTwins.minhashSignatureDeclarative(docs, k), k)
       assert(kernel.nonEmpty && kernel == decl, s"k=$k diverged")
     }
   }
@@ -46,7 +47,7 @@ class MinhashKernelSpec extends SparkSuite {
       .toDF("doc_id", "text")
     for (k <- Seq(8, 16)) {
       val kernel = asMap(Dedup.minhashSignature(rows, k), k)
-      val decl = asMap(Dedup.minhashSignatureDeclarative(rows, k), k)
+      val decl = asMap(DeclarativeTwins.minhashSignatureDeclarative(rows, k), k)
       assert(kernel == decl, s"k=$k diverged on planted edges: " +
         (kernel.keySet ++ decl.keySet).toSeq.sorted
           .filter(d => kernel.get(d) != decl.get(d))
@@ -58,6 +59,6 @@ class MinhashKernelSpec extends SparkSuite {
   test("null text drops the row, matching the declarative explode") {
     val rows = Seq((0L, "a b c"), (1L, null)).toDF("doc_id", "text")
     assert(Dedup.minhashSignature(rows, 8).count() == 1L)
-    assert(Dedup.minhashSignatureDeclarative(rows, 8).count() == 1L)
+    assert(DeclarativeTwins.minhashSignatureDeclarative(rows, 8).count() == 1L)
   }
 }

@@ -55,7 +55,7 @@ class PiiExpressionsSpec extends SparkSuite {
     val df = planted.zipWithIndex.map(_.swap).toDF("id", "text")
     val rows = df.select(col("id"),
       PiiExpressions.redactPii(col("text")).as("fast"),
-      PiiExpressions.redactPiiDeclarative(col("text")).as("slow"))
+      DeclarativeTwins.redactPiiDeclarative(col("text")).as("slow"))
       .collect()
     rows.foreach { r =>
       assert(r.getString(1) == r.getString(2),
@@ -85,7 +85,7 @@ class PiiExpressionsSpec extends SparkSuite {
           .as("text"))
     val bad = df.select(
       PiiExpressions.redactPii(col("text")).as("fast"),
-      PiiExpressions.redactPiiDeclarative(col("text")).as("slow"))
+      DeclarativeTwins.redactPiiDeclarative(col("text")).as("slow"))
       .where(col("fast") =!= col("slow"))
     assert(bad.count() == 0L, s"mismatches: ${bad.take(3).mkString("; ")}")
   }

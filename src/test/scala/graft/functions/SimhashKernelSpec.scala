@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Pins the map-side SimHash kernel ([[SimhashSig]]) bit-equal to the
   * declarative aggregation formulation it replaced
-  * ([[Dedup.simhashDeclarative]]) at both widths — on real data and on
-  * planted tokenization edges (leading/trailing whitespace → empty
+  * ([[DeclarativeTwins.simhashDeclarative]]) at both widths — on real
+  * data and on planted tokenization edges (leading/trailing whitespace → empty
   * tokens, repeated tokens → count weighting, case folding, multi-byte,
   * empty text). */
 class SimhashKernelSpec extends SparkSuite {
@@ -22,7 +22,7 @@ class SimhashKernelSpec extends SparkSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (bits <- Seq(16, 64)) {
       val kernel = asMap(Dedup.simhash(docs, bits))
-      val decl = asMap(Dedup.simhashDeclarative(docs, bits))
+      val decl = asMap(DeclarativeTwins.simhashDeclarative(docs, bits))
       assert(kernel.nonEmpty && kernel == decl, s"width $bits diverged")
     }
   }
@@ -43,7 +43,7 @@ class SimhashKernelSpec extends SparkSuite {
       .toDF("doc_id", "text")
     for (bits <- Seq(16, 64)) {
       val kernel = asMap(Dedup.simhash(rows, bits))
-      val decl = asMap(Dedup.simhashDeclarative(rows, bits))
+      val decl = asMap(DeclarativeTwins.simhashDeclarative(rows, bits))
       assert(kernel == decl, s"width $bits diverged on planted edges: " +
         (kernel.keySet ++ decl.keySet).toSeq.sorted
           .filter(k => kernel.get(k) != decl.get(k))
@@ -56,7 +56,7 @@ class SimhashKernelSpec extends SparkSuite {
     val rows = Seq((0L, "a b"), (1L, null)).toDF("doc_id", "text")
     for (bits <- Seq(16, 64)) {
       assert(Dedup.simhash(rows, bits).count() == 1L)
-      assert(Dedup.simhashDeclarative(rows, bits).count() == 1L)
+      assert(DeclarativeTwins.simhashDeclarative(rows, bits).count() == 1L)
     }
   }
 }

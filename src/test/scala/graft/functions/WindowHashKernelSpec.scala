@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Pins the window-hash kernel ([[WindowHashes]]) value-identical to the
   * declarative shinglesK → md5-hex → conv chain it replaced
-  * ([[Dedup.docWindowsDeclarative]]) — on real data at both shipped k
-  * values (8 = the substring family default, 3 used by stores/tests)
+  * ([[DeclarativeTwins.docWindowsDeclarative]]) — on real data at both
+  * shipped k values (8 = the substring family default, 3 used by stores/tests)
   * and on planted edges (sub-k docs dropping out, repeated tokens,
   * empty tokens from leading whitespace, multi-byte). */
 class WindowHashKernelSpec extends SparkSuite {
@@ -24,7 +24,7 @@ class WindowHashKernelSpec extends SparkSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (k <- Seq(8, 3)) {
       val kernel = asSet(Dedup.docWindows(toks(docs), k))
-      val decl = asSet(Dedup.docWindowsDeclarative(toks(docs), k))
+      val decl = asSet(DeclarativeTwins.docWindowsDeclarative(toks(docs), k))
       assert(kernel.nonEmpty && kernel == decl, s"k=$k diverged")
     }
   }
@@ -42,7 +42,7 @@ class WindowHashKernelSpec extends SparkSuite {
       .toDF("doc_id", "text")
     for (k <- Seq(3, 8)) {
       val kernel = asSet(Dedup.docWindows(toks(rows), k))
-      val decl = asSet(Dedup.docWindowsDeclarative(toks(rows), k))
+      val decl = asSet(DeclarativeTwins.docWindowsDeclarative(toks(rows), k))
       assert(kernel == decl, s"k=$k diverged on planted edges: " +
         s"kernel-only=${kernel -- decl}, decl-only=${decl -- kernel}")
     }

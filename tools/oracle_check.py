@@ -6,7 +6,8 @@ Usage: oracle_check.py <sfDir> <outDir>
   oracle_sql.json. Registers each table in <sfDir> as a DuckDB view, runs
   each oracle SQL, and compares against the Spark result: schema (sorted
   column names), row count, and cell-exact values after sorting columns by
-  name and rows by their full tuple.
+  name and rows by their full tuple. A name with Spark output but no
+  oracle, or an oracle but no Spark output, fails.
 """
 import glob
 import json
@@ -79,17 +80,13 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: no Spark output")
             n_fail += 1
             continue
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle")
+            n_fail += 1
+            continue
         s_rel = con.sql(f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
         s_cols, s_types = list(s_rel.columns), list(s_rel.types)
         s_rows = s_rel.fetchall()
-        if name not in oracles:
-            print(f"rows-only {name}: {len(s_rows)} rows "
-                  f"({'OK' if len(s_rows) > 0 else 'EMPTY!'})")
-            if len(s_rows) == 0:
-                n_fail += 1
-            else:
-                n_pass += 1
-            continue
         try:
             o_rel = con.sql(oracles[name])
             o_cols, o_types = list(o_rel.columns), list(o_rel.types)
