@@ -1,8 +1,38 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Build and write one registry row to `outDir/name` inside a
+    * [[CacheScope]]. A row that throws, or that leaves a table cached
+    * after its scope ends, fails: `[verify] <name> failed: …` goes to
+    * stderr and the row's output is deleted, so the oracle check fails
+    * the row by name. The session cache is cleared afterwards, so one
+    * leaking row cannot spill into the next. Returns the failure. */
+  def writeRow(spark: SparkSession, name: String,
+               build: (SparkSession, String) => DataFrame,
+               sfDir: String, outDir: String): Option[String] = {
+    val out = new Path(s"$outDir/$name")
+    val failure =
+      try {
+        CacheScope.run(build(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(out.toString))
+        val left = GraftBridge.numCachedEntries(spark)
+        if (left == 0) None else Some(s"left $left cached tables")
+      } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+    failure.foreach { msg =>
+      System.err.println(s"[verify] $name failed: $msg")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    }
+    spark.catalog.clearCache()
+    failure
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — the optional tail
     // restricts the dump to named queries (local iteration; the driver
@@ -14,16 +44,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop interior caches (simhashPairs, connectedComponents) so 61
-      // queries in one JVM don't accumulate storage pressure
-      spark.catalog.clearCache()
-    }
+      .foreach { case (name, fn) => writeRow(spark, name, fn, sfDir, outDir) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -66,8 +66,14 @@ object AsOfJoin {
   /** Native-plan variant: constructs [[graft.plans.AsOfJoinNode]] and plans
     * it with [[graft.plans.AsOfJoinExec]] — a streaming merge per
     * co-partition, O(1) state, instead of the union+window's full sort +
-    * window machinery. Installs the strategy on the session idempotently.
-    * Same semantics/columns as [[asOfJoin]] (cross-validated in tests). */
+    * window machinery. Same semantics/columns as [[asOfJoin]]
+    * (cross-validated in tests).
+    *
+    * A [[graft.GraftSession]] session already plans the node through
+    * `GraftExtensions`; a plain session (one built without the
+    * extensions, like the test suites') does not, so this call appends
+    * [[graft.plans.AsOfJoinStrategy]] to its `extraStrategies` — once,
+    * however often it is called. */
   def asOfJoinNative(left: DataFrame, right: DataFrame, key: String, ts: String,
                      rightCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.GraftBridge

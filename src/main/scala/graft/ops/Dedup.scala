@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.CacheScope
+
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
   * SimHash, and blocked n-gram-Jaccard near-dup detection.
   *
@@ -354,35 +356,17 @@ object Dedup {
     * OUTPUT for such a cluster is inherent to "emit all pairs" semantics;
     * the guard is that no single buffer ever holds a whole cluster.
     *
-    * Cache lifecycle: the doc-level signature table is `.cache()`d because
-    * five downstream scans (distinct, two re-expansion joins, two intra
-    * joins) would otherwise each recompute the tokenize+groupBy. The cache
-    * is interior to a lazily-returned plan, so this facade cannot unpersist
-    * it itself; long-lived sessions should use [[simhashPairsManaged]] and
-    * invoke the cleanup thunk once the result is materialized (or call
-    * `spark.catalog.clearCache()` wholesale, as [[graft.Bench]] /
-    * [[graft.Verify]] do) — leftover entries both skew re-run timings and
-    * accumulate storage pressure. */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashPairsManaged(docs, maxDist)._1
-
-  /** Production-width facade: [[simhashPairsManaged]] at the 64-bit
-    * xxhash64 width a real corpus runs (16-bit saturates — see
-    * [[SimhashBits]]), pairs only. Interior cache lifecycle as in
-    * [[simhashPairs]]. */
-  def simhashPairs64(docs: DataFrame, maxDist: Int = 3): DataFrame =
-    simhashPairsManaged(docs, maxDist, bits = 64)._1
-
-  /** As [[simhashPairs]], plus a cleanup thunk that unpersists the interior
-    * doc-signature cache. Call it after materializing the pairs result
-    * (count/write/collect); calling it earlier just makes the five
-    * downstream scans recompute the signatures. Idempotent. */
-  def simhashPairsManaged(docs: DataFrame, maxDist: Int = 3,
-                          bits: Int = SimhashBits): (DataFrame, () => Unit) =
+    * The doc-level signature table is cached ([[graft.CacheScope]])
+    * because five downstream scans (distinct, two re-expansion joins, two
+    * intra joins) would otherwise each recompute the tokenize+groupBy.
+    * `bits` is the signature width: 16 by default ([[SimhashBits]]), 64
+    * for a real corpus (16-bit saturates). */
+  def simhashPairs(docs: DataFrame, maxDist: Int = 3,
+                   bits: Int = SimhashBits): DataFrame =
     hammingPairsFromSig(simhash(docs, bits), bits, maxDist)
 
   /** The banded Hamming pairing over an ARBITRARY per-row signature —
-    * the topology [[simhashPairsManaged]] runs, factored out so any
+    * the topology [[simhashPairs]] runs, factored out so any
     * 64-bit-or-narrower fingerprint can reuse it (the perceptual image
     * hash [[Multimodal.dedupPhash]] pairs dHashes through exactly this).
     * `sig0` must carry (`keys`…, doc_id, simhash); `keys` (e.g. a
@@ -391,13 +375,11 @@ object Dedup {
     * rebuild the distinct-signature level and its interior cache three
     * times over. Emits (keys…, d1, d2, hamming) with d1 < d2 and
     * hamming <= maxDist (keys omitted when Nil — the historical
-    * shape), plus the interior-cache cleanup thunk. Plan shape, scale
-    * notes, and the distinct-signature optimization are
-    * [[simhashPairs]]'s. */
+    * shape). Plan shape, scale notes, and the distinct-signature
+    * optimization are [[simhashPairs]]'s. */
   private[graft] def hammingPairsFromSig(sig0: DataFrame, bits: Int,
                                          maxDist: Int,
-                                         keys: Seq[String] = Nil)
-      : (DataFrame, () => Unit) = {
+                                         keys: Seq[String] = Nil): DataFrame = {
     require(maxDist < SimhashChunks, // pigeonhole bound for the banding
       s"simhashPairs: maxDist must be < $SimhashChunks chunks, got $maxDist")
     val chunkBits = bits / SimhashChunks // 4 at width 16, 16 at width 64
@@ -414,7 +396,7 @@ object Dedup {
     // ambient load — most of the round-16 merge-pin cost reclaimed
     // with every pin kept; caching the chunk table too measured as
     // noise, so only the doc-level table is pinned to a partitioning).
-    val sig = sig0.repartition(col("simhash")).cache()
+    val sig = CacheScope.cached(sig0.repartition(col("simhash")))
     val sigs = sig.select(kc :+ col("simhash"): _*).distinct()
     val chunks = sigs.select(kc ++ Seq(col("simhash"),
         explode(sequence(lit(0), lit(SimhashChunks - 1))).as("chunk")): _*)
@@ -447,9 +429,8 @@ object Dedup {
       .select(keys.map(k => col(s"a.$k")) ++
         Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
           lit(0L).as("hamming")): _*)
-    val pairs = cross.unionByName(intra)
+    cross.unionByName(intra)
       .orderBy(kc ++ Seq(col("d1"), col("d2")): _*)
-    (pairs, () => { sig.unpersist(); () })
   }
 
   /** Cross-corpus banded Hamming pairing — [[hammingPairsFromSig]]'s
@@ -461,18 +442,17 @@ object Dedup {
     * call pairs a heterogeneous print table per family. Same scale
     * shape: distinct-signature chunk banding (pigeonhole-complete at
     * maxDist < chunks), both corpus-bound sides merge-pinned, sig
-    * tables cached pre-partitioned on the join key; the cleanup thunk
-    * unpersists both. */
+    * tables cached pre-partitioned on the join key. */
   private[graft] def crossHammingPairs(oldSig0: DataFrame,
       newSig0: DataFrame, bits: Int, maxDist: Int,
-      keys: Seq[String] = Nil): (DataFrame, () => Unit) = {
+      keys: Seq[String] = Nil): DataFrame = {
     require(maxDist < SimhashChunks,
       s"crossHammingPairs: maxDist must be < $SimhashChunks, got $maxDist")
     val chunkBits = bits / SimhashChunks
     val chunkMask = (1L << chunkBits) - 1
     val kc = keys.map(col)
-    val oldSig = oldSig0.repartition(col("simhash")).cache()
-    val newSig = newSig0.repartition(col("simhash")).cache()
+    val oldSig = CacheScope.cached(oldSig0.repartition(col("simhash")))
+    val newSig = CacheScope.cached(newSig0.repartition(col("simhash")))
     def chunksOf(sig: DataFrame) =
       sig.select(kc :+ col("simhash"): _*).distinct()
         .select(kc ++ Seq(col("simhash"),
@@ -489,7 +469,7 @@ object Dedup {
       .withColumn("hamming",
         bit_count(col("s1").bitwiseXOR(col("s2"))).cast(LongType))
       .where(col("hamming") <= maxDist)
-    val out = sigPairs
+    sigPairs
       .join(oldSig.select(kc ++ Seq(col("simhash").as("s1"),
         col("doc_id").as("d1")): _*).hint("SHUFFLE_MERGE"),
         keys :+ "s1")
@@ -498,7 +478,6 @@ object Dedup {
         keys :+ "s2")
       .select(kc ++ Seq(col("d1"), col("d2"), col("hamming")): _*)
       .orderBy(kc ++ Seq(col("d1"), col("d2")): _*)
-    (out, () => { oldSig.unpersist(); newSig.unpersist(); () })
   }
 
   /** Connected components over a near-dup pair graph — the final step of a
@@ -510,7 +489,9 @@ object Dedup {
     * (the data never visits the driver; each round is one shuffled join +
     * aggregate, converging in O(cluster diameter) rounds). This is how
     * large-scale dedup closes clusters at 100 TB; GraphX does the same
-    * thing with more machinery. */
+    * thing with more machinery. Labels still changing after `maxIters`
+    * rounds throw: min-label propagation moves one hop per round, so an
+    * unconverged result is not a clustering. */
   def connectedComponents(pairs: DataFrame, allIds: DataFrame,
                           maxIters: Int = 20): DataFrame = {
     // cache the symmetric edge list pre-partitioned on `b` — the key every
@@ -518,29 +499,44 @@ object Dedup {
     // reporting hashpartitioning(b), so each round's join shuffles only the
     // node-sized label table; without this the (larger) edge table
     // re-shuffles out of the cache every single round.
-    val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
-      .unionByName(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .repartition(col("b"))
-      .cache()
+    val edges = CacheScope.cached(
+      pairs.select(col("d1").as("a"), col("d2").as("b"))
+        .unionByName(pairs.select(col("d2").as("a"), col("d1").as("b")))
+        .repartition(col("b")))
     // only nodes that appear in an edge can ever change label — iterate on
     // that (much smaller) set and union the isolated rest back at the end.
-    // No separate init action and no second cache: round 1's single count
-    // materializes edges AND labels (BlockManager's per-partition
-    // getOrElseUpdate serializes racing consumers of an unmaterialized
-    // cache), and the final labels table carries the same doc_id set the
-    // old edgeNodes cache held, so the isolated anti-join probes it
-    // instead (one fewer job + one fewer cache per CC call — measured on
+    // No separate init action: round 1's single count materializes edges
+    // AND labels, and the final labels table carries the same doc_id set
+    // the old edgeNodes cache held, so the isolated anti-join probes it
+    // instead (one fewer job + one fewer table per CC call — measured on
     // the r21 session-3 A/B; the labels row set is loop-invariant because
     // every round's left join preserves rows).
+    //
+    // Each labels table is a local checkpoint, cut from the rounds that
+    // produced it: a cached round table nests the previous round's plan
+    // twice (edge join and left join), and every plan description Spark
+    // builds per action doubles that again (AQE's initial and final
+    // plans), so the description grew 4x per round: 6 MB after 4 rounds,
+    // 100 MB after 6, out of heap soon after. The checkpoint's rows
+    // stay until the enclosing CacheScope ends (the returned plan reads
+    // the last one); each earlier round's rows are freed once the next
+    // round has materialized.
+    def free(df: DataFrame): Unit = df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
     var labels = edges.select(col("a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster")).cache()
+      .select(col("doc_id"), col("doc_id").as("cluster"))
+      .localCheckpoint(eager = false)
+    // by name: frees whichever labels table is current when the scope ends
+    CacheScope.onRelease(free(labels))
     // NOTE (measured, round 5): folding TWO propagation steps into one
     // materialized round to halve the driver-loop's job count is a trap —
     // the unmaterialized intermediate labels feed two consumers (the edge
     // join AND the left join of the second step), so their lineage
     // re-executes and the round costs ~3 steps, not 2 (bench: 1.5 s → 4.8 s
     // on dedup_cluster_keep, 1.7 s → 10.8 s on the composed pipeline).
-    // One cached step per round is the fast shape.
+    // One materialized step per round is the fast shape.
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -554,10 +550,10 @@ object Dedup {
         .select(col("doc_id"),
           least(col("cluster"), coalesce(col("_nbr"), col("cluster"))).as("cluster"),
           col("cluster").as("_old"))
-        .cache()
+        .localCheckpoint(eager = false)
       changed = next.where(col("cluster") =!= col("_old")).count()
-      labels.unpersist()
-      labels = next.select("doc_id", "cluster")
+      free(labels)
+      labels = next
       iter += 1
       if (sys.env.contains("GRAFT_CC_DEBUG"))
         System.err.println(s"[cc] round $iter: $changed changed " +
@@ -568,20 +564,22 @@ object Dedup {
     // needed more rounds than the bound — near-dup graphs have tiny
     // diameters (≤ 4 rounds at sf0.1), so a jump in round count means a
     // propagation regression (broken edge cache, wrong join key), which
-    // would otherwise surface only as silent slowness. Unpersist FIRST:
-    // a tripped guard must not leak the cached edge table into a session
-    // that catches the error.
+    // would otherwise surface only as silent slowness. Both checks
+    // release FIRST: a failed check must not leak the edge table or the
+    // labels into a session that catches the error.
     edges.unpersist()
-    sys.env.get("GRAFT_CC_ASSERT_ROUNDS")
-      .orElse(sys.props.get("graft.cc.assert.rounds"))
-      .map(_.toInt).foreach { bound =>
-        require(iter <= bound,
-          s"connectedComponents took $iter rounds, bound is $bound")
-      }
+    val bound = sys.env.get("GRAFT_CC_ASSERT_ROUNDS")
+      .orElse(sys.props.get("graft.cc.assert.rounds")).map(_.toInt)
+    if (changed > 0 || bound.exists(iter > _)) free(labels)
+    if (changed > 0) throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxIters rounds: " +
+        s"$changed labels still changing")
+    bound.foreach(b => require(iter <= b,
+      s"connectedComponents took $iter rounds, bound is $b"))
     val isolated = allIds.select(col("doc_id"))
       .join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster"))
-    labels.unionByName(isolated)
+    labels.select("doc_id", "cluster").unionByName(isolated)
   }
 
   /** Full dedup keep-list: LSH candidate pairs → connected components →
@@ -790,26 +788,8 @@ object Dedup {
     * pinned on the corpus-sized token table. */
   def substringRuns(docs: DataFrame, kTokens: Int = 8,
                     maxWindowDf: Option[Long] = None): DataFrame = {
-    val (verified, _, _) = substringRunsRaw(docs, kTokens, maxWindowDf)
+    val (verified, _) = substringRunsRaw(docs, kTokens, maxWindowDf)
     verified.orderBy("d1", "d2", "d1_pos", "d2_pos")
-  }
-
-  /** As [[substringRuns]], plus a cleanup thunk that unpersists the
-    * interior window-table cache (the [[simhashPairsManaged]] contract):
-    * call it after materializing the result. The unmanaged entry points
-    * ([[substringRuns]], [[substringRemove]], [[substringRemoveText]])
-    * leave the corpus-sized cache pinned until `spark.catalog
-    * .clearCache()` — fine for run-once batch jobs and for
-    * [[graft.Bench]]/[[graft.Verify]] (which clear between queries), but
-    * a long-lived session invoking them repeatedly (streaming
-    * foreachBatch, a served pipeline) should use the managed variants or
-    * clear the cache itself, or corpus-sized cached tables accumulate
-    * until LRU eviction. Idempotent. */
-  def substringRunsManaged(docs: DataFrame, kTokens: Int = 8,
-                           maxWindowDf: Option[Long] = None)
-      : (DataFrame, () => Unit) = {
-    val (verified, _, cleanup) = substringRunsRaw(docs, kTokens, maxWindowDf)
-    (verified.orderBy("d1", "d2", "d1_pos", "d2_pos"), cleanup)
   }
 
   /** [[substringRuns]]'s unordered body, plus the tokenized corpus it
@@ -874,7 +854,7 @@ object Dedup {
 
   private def substringRunsRaw(docs: DataFrame, kTokens: Int,
                                maxWindowDf: Option[Long])
-      : (DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame) = {
     val toks = docToks(docs)
     val wins0 = docWindows(toks, kTokens)
     // Cache the window table pre-partitioned on the window hash — the
@@ -892,7 +872,7 @@ object Dedup {
     // single-task count of the hottest key, accepted in exchange for
     // never re-shuffling the corpus per consumer; the cut still
     // removes the L^2 pairing the cap exists to prevent.
-    val winsP = wins0.repartition(col("wh")).cache()
+    val winsP = CacheScope.cached(wins0.repartition(col("wh")))
     val wins = maxWindowDf match {
       case Some(cap) =>
         // Anti-join against the hot-window stop set — boilerplate-sized
@@ -912,8 +892,7 @@ object Dedup {
         col("a.wh") === col("b.wh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         col("a.pos").as("p1"), col("b.pos").as("p2"))
-    (extendVerify(cand, toks, toks, kTokens), toks,
-      () => { winsP.unpersist(); () })
+    (extendVerify(cand, toks, toks, kTokens), toks)
   }
 
   /** Persisted window-hash posting table of an EXISTING corpus — the
@@ -1004,13 +983,12 @@ object Dedup {
 
   /** [[substringRemoveText]] without the output sort — for composition
     * (the v3 curation pipeline joins this on doc_id; a sort below the
-    * join would be wasted work Catalyst does not reliably eliminate).
-    * Cache contract: see [[substringRunsManaged]]. */
+    * join would be wasted work Catalyst does not reliably eliminate). */
   private[graft] def substringRemoveUnordered(
       docs: DataFrame, kTokens: Int,
       maxWindowDf: Option[Long]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (runs, toks, _) = substringRunsRaw(docs, kTokens, maxWindowDf)
+    val (runs, toks) = substringRunsRaw(docs, kTokens, maxWindowDf)
     // Distinct: two partners sharing the SAME d2 span emit identical
     // intervals; drop them before the window pass so tie ordering is
     // immaterial (the rows are identical either way).
@@ -1128,34 +1106,6 @@ object Dedup {
     * pair work grows linearly with the corpus (or call
     * [[semanticDedupAuto]], which sets the dial from a corpus count).
     *
-    * NOTE: this facade `.cache()`s the interior cell assignment and keeps
-    * it pinned for the session (MEMORY_AND_DISK) — each call leaks one
-    * cached table until `spark.catalog.clearCache()` (what Bench/Verify
-    * do) or session end. Long-lived library callers should use
-    * [[semanticDedupManaged]] and invoke the returned cleanup thunk once
-    * the result is materialized. */
-  def semanticDedup(emb: DataFrame, threshold: Double, nLists: Int = 16,
-                    lloydIters: Int = 1): DataFrame =
-    semanticDedupManaged(emb, threshold, nLists, lloydIters)._1
-
-  /** [[semanticDedup]] with the nLists dial set by the √n occupancy rule
-    * ([[Similarity.autoNLists]]) from a cheap parquet-metadata count of
-    * the corpus — the 10× scale probe's only super-linear growth was
-    * FIXED-nLists cell occupancy (Σ cell² pair work), and this variant
-    * turns that knob automatically. Same cache note as the facade, and
-    * the same construction-time count caveat as
-    * [[Similarity.ivfTopKAuto]]: on a DERIVED corpus pass
-    * `corpusRows = Some(n)` so the upstream subplan is not executed an
-    * extra time just to size the dial. */
-  def semanticDedupAuto(emb: DataFrame, threshold: Double,
-                        lloydIters: Int = 1,
-                        corpusRows: Option[Long] = None): DataFrame =
-    semanticDedup(emb, threshold,
-      Similarity.autoNLists(corpusRows.getOrElse(emb.count())), lloydIters)
-
-  /** As [[semanticDedup]], plus a cleanup thunk that unpersists the
-    * interior assignment cache (the [[simhashPairsManaged]] pattern).
-    *
     * The `assigned` subtree feeds THREE consumers (both sides of the
     * in-cell pair join and the final keep join), and Catalyst does not
     * dedupe the copies. Since round 11 the subtree is cheap to rebuild —
@@ -1166,11 +1116,9 @@ object Dedup {
     * measures at parity (~0.55 s) with the uncached one. It stays
     * because at the 100 TB design point two extra full-corpus scans
     * dwarf one spill-safe (MEMORY_AND_DISK) write of
-    * (id, embedding, norm, cell) rows. Call the thunk once the result
-    * is materialized; Bench / Verify instead clear the session cache
-    * wholesale. */
-  def semanticDedupManaged(emb: DataFrame, threshold: Double, nLists: Int = 16,
-                           lloydIters: Int = 1): (DataFrame, () => Unit) = {
+    * (id, embedding, norm, cell) rows. */
+  def semanticDedup(emb: DataFrame, threshold: Double, nLists: Int = 16,
+                    lloydIters: Int = 1): DataFrame = {
     // Centroids collected once at construction, assignment via the
     // map-only NearestCentroid codegen kernel (see Similarity.assignCells
     // — every declarative argmax shape measured super-linear at the
@@ -1180,10 +1128,9 @@ object Dedup {
       (1 to lloydIters).foldLeft(Similarity.seedCentroids(emb, nLists)) {
         (c, _) => Similarity.refineCentroids(emb, c)
       })
-    val assigned = Similarity.assignCells(
+    val assigned = CacheScope.cached(Similarity.assignCells(
       emb.select(col("vec_id"), col("embedding"),
-        Similarity.norm(col("embedding")).as("_n")), local)
-      .cache()
+        Similarity.norm(col("embedding")).as("_n")), local))
     val dup = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))
@@ -1192,12 +1139,25 @@ object Dedup {
         col("a._n"), col("b._n")), 6) >= threshold)
       .select(col("a.vec_id").as("vec_id")).distinct()
       .withColumn("_dup", lit(true))
-    val result = assigned.select(col("vec_id"), col("cell"))
+    assigned.select(col("vec_id"), col("cell"))
       .join(dup, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("_dup").isNull.as("keep"))
       .orderBy("vec_id")
-    (result, () => { assigned.unpersist(); () })
   }
+
+  /** [[semanticDedup]] with the nLists dial set by the √n occupancy rule
+    * ([[Similarity.autoNLists]]) from a cheap parquet-metadata count of
+    * the corpus — the 10× scale probe's only super-linear growth was
+    * FIXED-nLists cell occupancy (Σ cell² pair work), and this variant
+    * turns that knob automatically. Same construction-time count caveat
+    * as [[Similarity.ivfTopKAuto]]: on a DERIVED corpus pass
+    * `corpusRows = Some(n)` so the upstream subplan is not executed an
+    * extra time just to size the dial. */
+  def semanticDedupAuto(emb: DataFrame, threshold: Double,
+                        lloydIters: Int = 1,
+                        corpusRows: Option[Long] = None): DataFrame =
+    semanticDedup(emb, threshold,
+      Similarity.autoNLists(corpusRows.getOrElse(emb.count())), lloydIters)
 
   /** Semantic decontamination: drop corpus vectors whose cosine to ANY
     * benchmark/eval-set vector reaches `threshold` — the embedding-level

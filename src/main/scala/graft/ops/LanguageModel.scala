@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.CacheScope
+
 /** Bigram Stupid-Backoff language model — the sequence-aware LM scoring
   * step of the published curation recipes (CCNet gates documents on a
   * trained LM's perplexity; Stupid Backoff is the web-scale smoothing
@@ -103,17 +105,15 @@ object LanguageModel {
     // three branches. `b0` is attested-bigram-bounded (vocabulary² in
     // the worst case, corpus-distinct-bigrams in practice — model-sized,
     // never doc-scale), so caching it for the three consumers is
-    // scale-safe; lazily-returned plan, caller clearCache contract as
-    // with every interior cache.
-    val b0 = train
+    // scale-safe.
+    val b0 = CacheScope.cached(train
       .select(TextAnalysis.tokens(col("text")).as("_t"))
       .select(explode(transform(sequence(lit(1), size(col("_t"))), i =>
         struct(
           when(i > lit(1), element_at(col("_t"), i - 1)).as("wp"),
           element_at(col("_t"), i).as("w")))).as("p"))
       .select(col("p.wp").as("wp"), col("p.w").as("w"))
-      .groupBy("wp", "w").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .groupBy("wp", "w").agg(count(lit(1)).as("cnt")))
     val uni = b0.groupBy("w").agg(sum(col("cnt")).as("cnt"))
       .select(lit("u").as("kind"), col("w").as("w1"),
         lit(null).cast("string").as("w2"), col("cnt"))

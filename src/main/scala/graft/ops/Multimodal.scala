@@ -407,8 +407,8 @@ object Multimodal {
 
   /** Perceptual image near-dup: REAL decode (ImageIO) -> 9x8 nearest
     * resample -> dHash -> banded Hamming pairing at distance <=
-    * `maxDist` ([[Dedup.hammingPairsFromSig]] — the simhashPairs64
-    * topology, pigeonhole-complete for maxDist <= 3). One row per
+    * `maxDist` ([[Dedup.hammingPairsFromSig]] — the 64-bit
+    * [[Dedup.simhashPairs]] topology, pigeonhole-complete for maxDist <= 3). One row per
     * near-dup pair: (d1, d2, hamming), d1 < d2.
     *
     * Scale shape: decode + hash are one iterator-to-iterator map pass
@@ -418,14 +418,7 @@ object Multimodal {
     * multimodal twin of the exact-substring family: [[dedupBinary]]
     * catches byte-identical assets only — a re-encoded or resized
     * duplicate sails through it and is caught here. */
-  def dedupPhash(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame =
-    dedupPhashManaged(media, maxDist)._1
-
-  /** As [[dedupPhash]], plus the interior-signature-cache cleanup thunk
-    * (the [[dedupAudioManaged]] contract) — with this, all three
-    * modalities expose the managed form. */
-  def dedupPhashManaged(media: Dataset[MediaRecord],
-                        maxDist: Int = 3): (DataFrame, () => Unit) = {
+  def dedupPhash(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
     val sig = imagePrints(media)
       .select(col("media_id").as("doc_id"), col("fp").as("simhash"))
     Dedup.hammingPairsFromSig(sig, 64, maxDist)
@@ -663,7 +656,7 @@ object Multimodal {
 
   /** Acoustic near-dup: REAL WAV decode → rate normalization → frame-
     * energy fingerprint → banded Hamming pairing at distance ≤ `maxDist`
-    * ([[Dedup.hammingPairsFromSig]] — the simhashPairs64 topology). One
+    * ([[Dedup.hammingPairsFromSig]] — the 64-bit simhashPairs topology). One
     * row per near-dup pair: (d1, d2, hamming), d1 < d2.
     *
     * Scale shape: decode + energies + print are one map pass (PCM never
@@ -672,19 +665,7 @@ object Multimodal {
     * pinned SHUFFLE_MERGE. The audio twin of [[dedupPhash]]: re-sampled
     * or re-encoded copies of the same clip sail through [[dedupBinary]]
     * and are caught here. */
-  def dedupAudio(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame =
-    dedupAudioManaged(media, maxDist)._1
-
-  /** As [[dedupAudio]], plus a cleanup thunk that unpersists the interior
-    * signature cache ([[Dedup.hammingPairsFromSig]] caches the signature
-    * table pre-partitioned on the join key for within-query reuse — the
-    * [[Dedup.simhashPairsManaged]] contract, one modality over). Bench and
-    * Verify clear caches wholesale between queries, but a long-lived
-    * session (streaming foreachBatch, repeated pipeline calls) must call
-    * the thunk after consuming the pairs or cached corpus-sized tables
-    * accumulate until LRU eviction. */
-  def dedupAudioManaged(media: Dataset[MediaRecord],
-                        maxDist: Int = 3): (DataFrame, () => Unit) = {
+  def dedupAudio(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
     val sig = audioFingerprints(media)
       .select(col("media_id").as("doc_id"), col("fp").as("simhash"))
     Dedup.hammingPairsFromSig(sig, 64, maxDist)
@@ -1145,13 +1126,7 @@ object Multimodal {
     * simhash64 topology). The video twin of [[dedupAudio]]: re-timed or
     * re-containered copies of the same clip sail through [[dedupBinary]]
     * and are caught here. */
-  def dedupVideo(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame =
-    dedupVideoManaged(media, maxDist)._1
-
-  /** As [[dedupVideo]], plus the interior-signature-cache cleanup thunk
-    * (the [[dedupAudioManaged]] contract). */
-  def dedupVideoManaged(media: Dataset[MediaRecord],
-                        maxDist: Int = 3): (DataFrame, () => Unit) = {
+  def dedupVideo(media: Dataset[MediaRecord], maxDist: Int = 3): DataFrame = {
     val sig = videoFingerprints(media)
       .select(col("media_id").as("doc_id"), col("fp").as("simhash"))
     Dedup.hammingPairsFromSig(sig, 64, maxDist)
@@ -1261,26 +1236,13 @@ object Multimodal {
     * (modality, media_id, fp) — the micro-batch form of
     * [[dedupMediaIncremental]]: `foreachBatch` calls this per batch
     * against the stored prints and never re-decodes the old corpus.
-    * Output (modality, d1 = old id, d2 = new id, hamming).
-    *
-    * Cache lifecycle: the pairing caches both signature tables
-    * interior to the plan ([[Dedup.crossHammingPairs]]); a per-batch
-    * caller MUST use [[dedupMediaAgainstManaged]] and invoke the thunk
-    * after consuming each batch's pairs, or cached tables accumulate
-    * across micro-batches until LRU eviction (the
-    * [[dedupAudioManaged]] contract). */
+    * Output (modality, d1 = old id, d2 = new id, hamming). */
   def dedupMediaAgainst(newMedia: Dataset[MediaRecord],
       oldPrints: DataFrame, maxDist: Int = 3): DataFrame =
-    dedupMediaAgainstManaged(newMedia, oldPrints, maxDist)._1
-
-  /** As [[dedupMediaAgainst]], plus the interior-cache cleanup thunk —
-    * the form a streaming `foreachBatch` loop must call. */
-  def dedupMediaAgainstManaged(newMedia: Dataset[MediaRecord],
-      oldPrints: DataFrame, maxDist: Int = 3): (DataFrame, () => Unit) =
     pairPrints(oldPrints, mediaPrintsMixed(newMedia), maxDist)
 
   private def pairPrints(oldPrints: DataFrame, newPrints: DataFrame,
-                         maxDist: Int): (DataFrame, () => Unit) = {
+                         maxDist: Int): DataFrame = {
     def asSig(df: DataFrame): DataFrame = df.select(col("modality"),
       col("media_id").as("doc_id"), col("fp").as("simhash"))
     Dedup.crossHammingPairs(asSig(oldPrints), asSig(newPrints),
@@ -1297,12 +1259,10 @@ object Multimodal {
     * pairing is the cross-corpus banded Hamming join with modality
     * riding the join key ([[Dedup.crossHammingPairs]]), so one call
     * covers the heterogeneous lake. The parity filters run BEFORE
-    * decode — only the new batch pays fingerprinting on a warm store.
-    * Returns the pairs plus the interior-signature-cache cleanup thunk
-    * (the [[dedupAudioManaged]] contract). */
-  def dedupMediaIncrementalManaged(spark: SparkSession, sfDir: String,
+    * decode — only the new batch pays fingerprinting on a warm store. */
+  def dedupMediaIncremental(spark: SparkSession, sfDir: String,
       classMod: Long = 63L, maxDist: Int = 3,
-      storeRoot: Option[String] = None): (DataFrame, () => Unit) = {
+      storeRoot: Option[String] = None): DataFrame = {
     // the class dial must be ODD: with an even modulus every member of a
     // class shares the parity of its base (c, c+m, c+2m ... all ≡ c mod
     // 2), so the even/old–odd/new split would never place a copy of an
@@ -1327,19 +1287,6 @@ object Multimodal {
       storeRoot)(prints(0))
     pairPrints(oldPrints, prints(1), maxDist)
   }
-
-  /** One-shot facade over [[dedupMediaIncrementalManaged]], discarding
-    * the cleanup thunk: fine for Verify/Bench callers, which clear
-    * caches wholesale between queries (the documented
-    * caller-must-clearCache contract). A LONG-LIVED session calling
-    * repeatedly must use the managed variant and invoke the thunk after
-    * consuming each result, or both corpus-sized cached signature
-    * tables accumulate per call until LRU eviction. */
-  def dedupMediaIncremental(spark: SparkSession, sfDir: String,
-      classMod: Long = 63L, maxDist: Int = 3,
-      storeRoot: Option[String] = None): DataFrame =
-    dedupMediaIncrementalManaged(spark, sfDir, classMod, maxDist,
-      storeRoot)._1
 
   /** One-row-per-modality inventory of the near-dup lakes — the media
     * twin of the text pipeline's `pipeline_report`: asset count, total

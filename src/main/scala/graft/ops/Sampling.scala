@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.CacheScope
+
 /** Deterministic sampling / split-assignment operators for a training-data
   * pipeline: train/val/test splits, per-stratum downsampling, and
   * token-budget sequence packing.
@@ -253,11 +255,9 @@ object Sampling {
     // the per-doc join broadcasts it) — cached, each consumer costs 256
     // rows instead of re-running the corpus-gram pass its lineage holds
     // (round 21; bounded by `buckets`, so the cache is scale-safe).
-    // Lazily-returned plan: caller clearCache contract as usual.
-    val bstats = grams.groupBy("b").agg(
+    val bstats = CacheScope.cached(grams.groupBy("b").agg(
       sum(when(col("doc_id") % targetMod === 0, 1L).otherwise(0L)).as("ct"),
-      sum(when(col("doc_id") % targetMod =!= 0, 1L).otherwise(0L)).as("cs"))
-      .cache()
+      sum(when(col("doc_id") % targetMod =!= 0, 1L).otherwise(0L)).as("cs")))
     val totals = bstats.agg(sum("ct").as("t_total"), sum("cs").as("s_total"))
     val raw = col("t_hits").cast("double") * col("s_total") /
       (col("s_hits").cast("double") * col("t_total"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
+
 /** Unigram-LM (SentencePiece-style) tokenizer trainer — the OTHER half
   * of the subword-tokenizer space next to [[Bpe]]: BPE grows a vocab
   * bottom-up by merging; the unigram model starts from an over-complete
@@ -191,20 +193,9 @@ object Unigram {
   /** Per-document unigram token counts under a trained vocab — MAP-ONLY:
     * the vocab broadcasts, each doc tokenizes and Viterbi-segments in
     * its scan partition; nothing but (doc_id, count) leaves the scan.
-    *
-    * The score broadcast (kilobytes) stays registered until session end
-    * — fine for one-shot Verify/Bench callers; long-lived sessions
-    * calling this repeatedly should use [[tokenCountsManaged]] and
-    * invoke the cleanup thunk once the result is materialized. */
-  def tokenCounts(docs: DataFrame, vocab: Map[String, Long]): DataFrame =
-    tokenCountsManaged(docs, vocab)._1
-
-  /** [[tokenCounts]] plus a cleanup thunk that destroys the score
-    * broadcast (the `dedupAudioManaged` convention). The returned
-    * DataFrame is LAZY — call the thunk only after an action has
-    * materialized it; the broadcast is unusable afterwards. */
-  def tokenCountsManaged(docs: DataFrame, vocab: Map[String, Long])
-      : (DataFrame, () => Unit) = {
+    * The score broadcast is destroyed when the enclosing
+    * [[graft.CacheScope]] ends. */
+  def tokenCounts(docs: DataFrame, vocab: Map[String, Long]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val t = vocab.valuesIterator.sum
@@ -213,6 +204,7 @@ object Unigram {
       new java.util.HashMap[String, java.lang.Long](vocab.size * 2)
     vocab.foreach { case (p, cnt) => scores.put(p, Long.box(bitLog(cnt))) }
     val bc = spark.sparkContext.broadcast(scores)
+    CacheScope.onRelease(bc.destroy())
     // tokenization stays the Catalyst expression (identical semantics
     // to wordFreqs/the oracle — Java String.trim/toLowerCase differ on
     // edge inputs); only the segmentation is JVM code
@@ -230,8 +222,7 @@ object Unigram {
           (id, n)
         }
       }
-    val out = counted.toDF("doc_id", "n_tokens").orderBy("doc_id")
-    (out, () => bc.destroy())
+    counted.toDF("doc_id", "n_tokens").orderBy("doc_id")
   }
 
   /** Build-once/score-many vocabulary through [[FingerprintStore]] (the

@@ -372,7 +372,7 @@ object DedupRows {
     // hash-mismatches the row.
     QueryDef("dedup_simhash64", (s, dir) => {
       val d = docs(s, dir)
-      val pairs64 = Dedup.simhashPairs64(d)
+      val pairs64 = Dedup.simhashPairs(d, bits = 64)
       // md5(tok) (fixed-width hex) rather than the raw token in the
       // multiset fingerprint: a token containing ':' or '|' would make the
       // raw encoding non-injective ('a:1|b' x1 vs {'a','b'} x1 collide),

@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.CacheScope
 import graft.ops.{Dedup, Multimodal}
 
 /** Multimodal rows: binary, image, audio and video feature extraction,
@@ -587,20 +588,15 @@ object MultimodalRows {
     // banding regression that drops any pair flips the committed
     // n_banded/recall_ok visibly. The ANN families' recall-row doctrine
     // applied to the media lakes.
-    // Cache lifecycle (the dedupMediaIncremental convention): this row
-    // caches `prints` and hammingPairsFromSig's interior sig table for
-    // within-query reuse; a registry query returns a LAZY plan, so the
-    // cleanup thunk cannot fire here — the caller must clearCache after
-    // materializing (Verify/Bench do, between every query).
     QueryDef("mm_dedup_recall", (s, dir) => {
       val bound = 500L
-      val prints = Multimodal.mediaPrints(
+      val prints = CacheScope.cached(Multimodal.mediaPrints(
         Multimodal.phashLakeScaled(s, dir, 64)
           .filter(col("media_id") < bound),
         Multimodal.audioLake(s, dir, 64)
           .filter(col("media_id") < bound),
         Multimodal.videoLake(s, dir, 64)
-          .filter(col("media_id") < bound)).cache()
+          .filter(col("media_id") < bound)))
       // brute force: all pairs within a modality (bounded sample — the
       // quadratic side is the POINT of the row; never run unbounded)
       val exact = prints.as("a")
@@ -616,7 +612,7 @@ object MultimodalRows {
       val banded = Dedup.hammingPairsFromSig(
         prints.select(col("modality"), col("media_id").as("doc_id"),
           col("fp").as("simhash")),
-        64, 3, Seq("modality"))._1
+        64, 3, Seq("modality"))
         .groupBy("modality").agg(count(lit(1)).as("n_banded"))
       prints.groupBy("modality").agg(count(lit(1)).as("n_sampled"))
         .join(exact, Seq("modality"), "left")

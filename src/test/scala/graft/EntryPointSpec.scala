@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.Round
 import org.apache.spark.sql.functions._
 
 import graft.plans.AsOfJoinStrategy
 
 /** The session every entry point builds ([[GraftSession.builder]]), the
-  * timing rule [[Bench]] applies to each query, and the registry's
-  * row invariants ([[SparkEntry.rows]]). */
+  * timing rule [[Bench]] applies to each query, the registry's row
+  * invariants ([[SparkEntry.rows]]) and [[Verify]]'s per-row leak check. */
 class EntryPointSpec extends SparkSuite {
 
   override lazy val spark = GraftSession.builder("local[2]", 2)
@@ -71,5 +72,32 @@ class EntryPointSpec extends SparkSuite {
       .filter(r => r.oracleSql == null || r.oracleSql.trim.isEmpty)
       .map(_.name)
     assert(blank.isEmpty, s"blank oracles: ${blank.mkString(", ")}")
+  }
+
+  test("Verify.writeRow fails a row that leaves a table cached and " +
+    "deletes its output") {
+    val out = tmpDir("verify-leak")
+    val failure = Verify.writeRow(spark, "leaky",
+      (s, _) => s.range(3).toDF().cache(), "", out)
+    assert(failure.contains("left 1 cached tables"))
+    assert(!new java.io.File(s"$out/leaky").exists())
+    assert(GraftBridge.numCachedEntries(spark) == 0)
+  }
+
+  test("registry rows that reach a caching operator leave nothing cached " +
+    "after Verify.writeRow") {
+    val rows = Seq("dedup_simhash", "dedup_cluster_keep", "dedup_substring",
+      "dedup_semantic", "text_token_count_unigram", "sample_importance",
+      "text_lm_score", "mm_dedup_recall", "mm_dedup_media_incremental")
+    val out = tmpDir("verify-rows")
+    spark.conf.set("graft.sigstore.dir", tmpDir("verify-store"))
+    try {
+      spark.catalog.clearCache()
+      val failures = rows.flatMap(name => Verify.writeRow(spark, name,
+        SparkEntry.queries(name), "/root/testdata/sf0.001", out)
+        .map(name -> _))
+      assert(failures.isEmpty)
+      rows.foreach(name => assert(new java.io.File(s"$out/$name").isDirectory))
+    } finally spark.conf.unset("graft.sigstore.dir")
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{CacheScope, SparkSuite}
 
 /** Semantics tests for the training-data operators, with planted duplicates
   * (the driver tables contain none, so these fixtures prove the detectors
@@ -64,15 +64,16 @@ class OpsSpec extends SparkSuite {
       .toSeq == Seq(n.toLong * (n - 1) / 2, 0L))
   }
 
-  test("simhashPairsManaged cleanup unpersists the interior signature " +
-    "cache and the result stays recomputable afterwards") {
+  test("simhashPairs' interior signature cache is released when its " +
+    "CacheScope ends and the result stays recomputable afterwards") {
     spark.catalog.clearCache()
-    val (pairs, cleanup) = Dedup.simhashPairsManaged(docsDf)
-    val before = pairs.count()
-    assert(!spark.sharedState.cacheManager.isEmpty) // sig cache is live
-    cleanup()
+    val (pairs, before) = CacheScope.run {
+      val pairs = Dedup.simhashPairs(docsDf)
+      val n = pairs.count()
+      assert(!spark.sharedState.cacheManager.isEmpty) // sig cache is live
+      (pairs, n)
+    }
     assert(spark.sharedState.cacheManager.isEmpty)
-    cleanup() // idempotent
     assert(pairs.count() == before) // plan recomputes without the cache
   }
 
@@ -352,8 +353,8 @@ class OpsSpec extends SparkSuite {
     assert(auto.toSeq == fixed.toSeq)
   }
 
-  test("semanticDedupManaged cleanup unpersists the interior assignment " +
-    "cache and the result stays recomputable afterwards") {
+  test("semanticDedup's interior assignment cache is released when its " +
+    "CacheScope ends and the result stays recomputable afterwards") {
     spark.catalog.clearCache()
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
@@ -361,12 +362,13 @@ class OpsSpec extends SparkSuite {
       (2L, Array(0.0f, 0.98f, 0.2f)),
       (3L, Array(0.0f, 0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val (res, cleanup) = Dedup.semanticDedupManaged(vecs, 0.95, nLists = 4)
-    val before = res.collect().map(_.toSeq).toList
-    assert(!spark.sharedState.cacheManager.isEmpty) // assignment cache live
-    cleanup()
+    val (res, before) = CacheScope.run {
+      val res = Dedup.semanticDedup(vecs, 0.95, nLists = 4)
+      val rows = res.collect().map(_.toSeq).toList
+      assert(!spark.sharedState.cacheManager.isEmpty) // assignment cache live
+      (res, rows)
+    }
     assert(spark.sharedState.cacheManager.isEmpty)
-    cleanup() // idempotent
     assert(res.collect().map(_.toSeq).toList == before) // recomputes fine
   }
 
@@ -444,6 +446,30 @@ class OpsSpec extends SparkSuite {
       sys.props("graft.cc.assert.rounds") = "8"
       assert(Dedup.connectedComponents(pairs, ids).collect().length == 5)
     } finally sys.props.remove("graft.cc.assert.rounds")
+  }
+
+  test("connected components throw when labels still change at maxIters " +
+    "and leave nothing cached either way") {
+    import spark.implicits._
+    def path(n: Long) = ((1L until n).map(i => (i, i + 1)).toDF("d1", "d2"),
+      (1L to n).toDF("doc_id"))
+    spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def nothingLeft(): Unit = {
+      assert(spark.sharedState.cacheManager.isEmpty)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
+    }
+    // min-label propagation moves one hop per round: a 20-node path
+    // settles within the default 20 rounds, a 25-node one does not
+    val (p20, ids20) = path(20)
+    val labels = CacheScope.run(Dedup.connectedComponents(p20, ids20).collect())
+    assert(labels.length == 20 && labels.forall(_.getLong(1) == 1L))
+    nothingLeft()
+    val (p25, ids25) = path(25)
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(p25, ids25))
+    assert(e.getMessage.contains("did not converge in 20 rounds"))
+    nothingLeft() // released before the throw, even outside a scope
   }
 
   test("brute-force topk returns exact neighbors in cosine order") {
@@ -1016,18 +1042,17 @@ class OpsSpec extends SparkSuite {
       .toDS()
     // byte-level dedup sees four DISTINCT assets — the blind spot
     assert(dedupBinary(media).count() == 4)
-    // the managed facade: same pairs, plus a cleanup thunk that must
-    // unpersist the interior signature cache (the dedupAudioManaged
-    // contract — with this, all three modalities expose the form)
+    // the interior signature cache lives until the CacheScope ends
     spark.catalog.clearCache()
-    val (pairsDf, cleanup) = dedupPhashManaged(media, maxDist = 3)
-    val pairs = pairsDf.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "signature cache should be live while pairs are consumed")
-    cleanup()
+    val pairs = CacheScope.run {
+      val pairs = dedupPhash(media, maxDist = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "signature cache should be live while pairs are consumed")
+      pairs
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "cleanup thunk must unpersist the interior signature cache")
+      "the scope must unpersist the interior signature cache")
     assert(pairs.get((0L, 1L)).contains(0L),
       s"upscaled copy must pair at hamming 0: $pairs")
     assert(pairs.contains((0L, 3L)) && pairs((0L, 3L)) <= 2L,
@@ -1092,19 +1117,19 @@ class OpsSpec extends SparkSuite {
         0L)).toDS()
     // byte-level dedup sees four DISTINCT assets — the blind spot
     assert(dedupBinary(media).count() == 4)
-    // the managed facade: same pairs, plus a cleanup thunk that must
-    // unpersist the interior signature cache (cache-lifetime contract).
+    // the interior signature cache lives until the CacheScope ends.
     // Start from a clean cache: earlier tests in the shared session may
     // have live entries, which would mask the isEmpty assertions.
     spark.catalog.clearCache()
-    val (pairsDf, cleanup) = dedupAudioManaged(media, maxDist = 3)
-    val pairs = pairsDf.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "signature cache should be live while pairs are consumed")
-    cleanup()
+    val pairs = CacheScope.run {
+      val pairs = dedupAudio(media, maxDist = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "signature cache should be live while pairs are consumed")
+      pairs
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "cleanup thunk must unpersist the interior signature cache")
+      "the scope must unpersist the interior signature cache")
     assert(pairs.get((0L, 1L)).contains(0L),
       s"upsampled copy must pair at hamming 0: $pairs")
     assert(pairs.contains((0L, 3L)) && pairs((0L, 3L)) <= 2L,
@@ -1187,14 +1212,15 @@ class OpsSpec extends SparkSuite {
     // byte-level dedup sees four DISTINCT assets — the blind spot
     assert(dedupBinary(media).count() == 4)
     spark.catalog.clearCache() // clean slate for the isEmpty assertions
-    val (pairsDf, cleanup) = dedupVideoManaged(media, maxDist = 3)
-    val pairs = pairsDf.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "signature cache should be live while pairs are consumed")
-    cleanup()
+    val pairs = CacheScope.run {
+      val pairs = dedupVideo(media, maxDist = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "signature cache should be live while pairs are consumed")
+      pairs
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "cleanup thunk must unpersist the interior signature cache")
+      "the scope must unpersist the interior signature cache")
     assert(pairs.get((0L, 1L)).contains(0L),
       s"re-timed copy must pair at hamming 0: $pairs")
     assert(pairs.contains((0L, 3L)) && pairs((0L, 3L)) <= 2L,
@@ -1216,18 +1242,17 @@ class OpsSpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
     val root = Some(s"$src/store")
     val cold = dedupMediaIncremental(spark, src, 63L, 3, root).collect()
-    // warm pass through the MANAGED form: same pairs, and the cleanup
-    // thunk unpersists both interior signature caches (the long-lived-
-    // session contract the one-shot facade documents)
+    // warm pass inside a CacheScope: same pairs, and the scope
+    // unpersists both interior signature caches when it ends
     spark.catalog.clearCache()
-    val (warmDf, cleanup) =
-      dedupMediaIncrementalManaged(spark, src, 63L, 3, root)
-    val warm = warmDf.collect()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "signature caches should be live while pairs are consumed")
-    cleanup()
+    val warm = CacheScope.run {
+      val warm = dedupMediaIncremental(spark, src, 63L, 3, root).collect()
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "signature caches should be live while pairs are consumed")
+      warm
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "cleanup thunk must unpersist the interior signature caches")
+      "the scope must unpersist the interior signature caches")
     assert(cold.map(_.toString).sorted.toSeq ==
       warm.map(_.toString).sorted.toSeq,
       "warm store must reproduce the cold run")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSuite
+import graft.{CacheScope, SparkSuite}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -43,10 +43,10 @@ class SimhashWidthPropertySpec extends SparkSuite {
         corpusGen.pureApply(Gen.Parameters.default, Seed(9100L + rep))
       val df = docs.toDF("doc_id", "text")
       def hamming0(bits: Int): Set[(Long, Long)] = {
-        val (pairs, cleanup) = Dedup.simhashPairsManaged(df, 3, bits)
-        val got = pairs.where(col("hamming") === 0).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        cleanup()
+        val got = CacheScope.run(Dedup.simhashPairs(df, 3, bits)
+          .where(col("hamming") === 0).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet)
+        assert(spark.sharedState.cacheManager.isEmpty)
         got
       }
       val h16 = hamming0(16)
@@ -64,7 +64,7 @@ class SimhashWidthPropertySpec extends SparkSuite {
   test("64-bit width rejects invalid parameters and uses full-Long bits") {
     intercept[IllegalArgumentException](Dedup.simhash(
       Seq((0L, "a")).toDF("doc_id", "text"), 32))
-    intercept[IllegalArgumentException](Dedup.simhashPairsManaged(
+    intercept[IllegalArgumentException](Dedup.simhashPairs(
       Seq((0L, "a")).toDF("doc_id", "text"), maxDist = 4))
     // a 64-bit signature should populate high bits (incl. possibly the
     // sign bit) — i.e. not be confined to the low 16-bit range for a

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSuite
+import graft.{CacheScope, SparkSuite}
 
 /** The unigram tokenizer's JVM pieces: Viterbi semantics (objective,
   * tie-break, coverage), end-to-end training behavior on a corpus with
@@ -59,13 +59,14 @@ class UnigramSpec extends SparkSuite {
     // 'park'/'spar' (4-gram of the 3x-repeated word) must survive
     assert(vocab.keys.exists(p => p.length == 4 && "spark".contains(p)),
       s"no 4-gram of the dominant word in ${vocab.keys.toSeq.sorted}")
-    // the managed form: same counts, then the thunk destroys the score
-    // broadcast (long-lived-session contract; emRound's broadcasts are
-    // destroyed internally after their collect)
-    val (countsDf, cleanup) = Unigram.tokenCountsManaged(docs, vocab)
-    val counts = countsDf.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    cleanup()
+    // the score broadcast is destroyed when the CacheScope ends
+    // (emRound's broadcasts are destroyed internally after their collect);
+    // a destroyed broadcast fails any further use of the plan
+    val (countsDf, counts) = CacheScope.run {
+      val countsDf = Unigram.tokenCounts(docs, vocab)
+      (countsDf, countsDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
+    intercept[org.apache.spark.SparkException](countsDf.collect())
     assert(counts.size == 60)
     // 'spark' (5 chars, pieces <= 4) segments into exactly 2 pieces
     // under the trained vocab; row$i into a handful — the count per doc

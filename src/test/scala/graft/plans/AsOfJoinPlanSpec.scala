@@ -41,6 +41,15 @@ class AsOfJoinPlanSpec extends SparkSuite {
     assert(plan.contains("Sort"), "children must be sorted for the merge scan")
   }
 
+  test("asOfJoinNative installs AsOfJoinStrategy on a plain session once, " +
+    "however often it is called") {
+    val left = Seq((1L, "k", 100L)).toDF("id", "k", "ts")
+    val right = Seq(("k", 99L, 5L)).toDF("k", "ts", "rid")
+    AsOfJoin.asOfJoinNative(left, right, "k", "ts", Seq("rid"))
+    AsOfJoin.asOfJoinNative(left, right, "k", "ts", Seq("rid"))
+    assert(spark.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
+  }
+
   test("AsOfJoinExec reports numOutputRows/numMatchedRows SQLMetrics " +
     "like the built-in joins") {
     val left = Seq((1L, "k", 100L), (2L, "k", 50L), (3L, "z", 10L))

@@ -4,11 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSuite
+import graft.{CacheScope, SparkSuite}
 import graft.config.{CompressionType, SinkConfig}
 import graft.ops.Dedup
 
@@ -610,6 +610,7 @@ class StreamingSpec extends SparkSuite {
       MediaRecord(0L, "audio", "wav", audioClip(1, up = false), 0L),
       MediaRecord(2L, "video", "avi", videoClip(1, up = false), 0L),
       MediaRecord(4L, "image", "bmp", image(1, -1), 0L)).toDS()
+    spark.catalog.clearCache() // earlier tests' tables would skew the count
     val stored = mediaPrintsMixed(oldMedia).cache()
     stored.count() // the "store": prints materialized once, up front
     val out = tmpDir("streammedia-out")
@@ -618,11 +619,14 @@ class StreamingSpec extends SparkSuite {
     val query = stream.toDS().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[MediaRecord],
                        _: Long) =>
-        // the managed form: unpersist the interior signature caches
-        // after each batch or they accumulate across micro-batches
-        val (pairs, cleanup) = dedupMediaAgainstManaged(batch, stored)
-        pairs.write.mode("append").parquet(out)
-        cleanup()
+        // build and write inside one scope: the interior signature
+        // caches are released per batch instead of accumulating
+        CacheScope.run {
+          dedupMediaAgainst(batch, stored).write.mode("append").parquet(out)
+        }
+        val left = GraftBridge.numCachedEntries(spark)
+        assert(left == 1, s"only `stored` may stay cached, found $left")
+        ()
       }
       .start()
     val b1 = Seq(
@@ -637,7 +641,8 @@ class StreamingSpec extends SparkSuite {
     val streamed = spark.read.parquet(out).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    val batchTwin = dedupMediaAgainst((b1 ++ b2).toDS(), stored).collect()
+    val batchTwin = CacheScope.run(
+      dedupMediaAgainst((b1 ++ b2).toDS(), stored).collect())
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(streamed == batchTwin, s"streamed=$streamed batch=$batchTwin")
