@@ -27,13 +27,16 @@ import org.apache.spark.sql.types.LongType
   * corpus exercises the operator), and repetition filters as in Gopher
   * (Rae et al. 2021, "Scaling Language Models", table A1: fraction of
   * tokens in the most common n-gram, fraction of duplicated n-grams).
+  *
+  * No operator here sorts its output: a caller that needs an order (the
+  * registry rows, for the oracle compare) sorts on the row key.
   */
 object Curation {
 
   /** Documents of the corpus split sharing at least one distinct 3-token
     * shingle with the eval split (`doc_id % evalMod == 0` defines eval —
     * stand-in for a benchmark table). Returns one row per contaminated
-    * corpus doc: (doc_id, n_grams, n_overlap, contam_frac), ordered.
+    * corpus doc: (doc_id, n_grams, n_overlap, contam_frac).
     *
     * The eval gram set is explicitly `broadcast` — at production scale it
     * is the distinct n-grams of benchmark suites (MBs), never the corpus.
@@ -79,7 +82,6 @@ object Curation {
       .select(col("doc_id"), col("n_grams"), col("n_overlap"),
         TextAnalysis.round6(col("n_overlap").cast("double") / col("n_grams"))
           .as("contam_frac"))
-      .orderBy("doc_id")
 
   /** CROSS-SNAPSHOT contamination screen: odd-id documents checked for
     * shared 3-token shingles against the EVEN half's gram set — the
@@ -97,7 +99,7 @@ object Curation {
     * sketch-tolerance theorem.
     *
     * Output matches [[decontaminate]]: (doc_id, n_grams, n_overlap,
-    * contam_frac) per contaminated probe doc, ordered.
+    * contam_frac) per contaminated probe doc.
     *
     * Scale: the Bloom build is one aggregation to a single row
     * (`expectedRefGrams` sizes it at ~10 bits/gram — a dial from corpus
@@ -125,7 +127,6 @@ object Curation {
         TextAnalysis.round6(
           col("n_overlap").cast("double") / col("n_grams"))
           .as("contam_frac"))
-      .orderBy("doc_id")
   }
 
   /** Gopher-style within-document repetition statistics, one row per doc:
@@ -159,7 +160,6 @@ object Curation {
         TextAnalysis.round6(when(col("n3") > 0,
           (col("n3") - col("n3d")).cast("double") / col("n3")))
           .as("dup3_frac"))
-      .orderBy("doc_id")
   }
 
   /** CCNet-style sub-document deduplication: split every document into
@@ -222,7 +222,6 @@ object Curation {
               when(col("keep"), struct(col("chunk_id"), col("chunk"))))),
             x => x.getField("chunk")),
           " ")).as("clean_md5"))
-      .orderBy("doc_id")
   }
 
   /** Robust length-outlier detection per language: median and MAD (median
@@ -268,7 +267,6 @@ object Curation {
         TextAnalysis.round6(first(col("mad_chars"))).as("mad_chars"),
         sum(when(col("adev") > lit(k) * col("mad_chars"), 1L).otherwise(0L))
           .as("n_outliers"))
-      .orderBy("lang")
   }
 
   // ------------------------------------------------------------------
@@ -328,7 +326,7 @@ object Curation {
 
   /** Remove every line whose document frequency is >= minDf and
     * reassemble each document's remaining lines in order. Returns
-    * (doc_id, n_lines, n_removed, clean_text), ordered by doc_id.
+    * (doc_id, n_lines, n_removed, clean_text), one row per doc.
     *
     * Scale shape: posexplode is map-side; the df aggregation shuffles
     * (line, doc_id) with partial distinct; the removal join's build side
@@ -386,6 +384,5 @@ object Curation {
               when(col("df").isNull, struct(col("pos"), col("line"))))),
             s => s.getField("line")),
           "\n").as("clean_text"))
-      .orderBy("doc_id")
   }
 }

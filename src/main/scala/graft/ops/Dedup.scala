@@ -787,14 +787,9 @@ object Dedup {
     * diag) — bounded by per-pair overlap — and verification joins are
     * pinned on the corpus-sized token table. */
   def substringRuns(docs: DataFrame, kTokens: Int = 8,
-                    maxWindowDf: Option[Long] = None): DataFrame = {
-    val (verified, _) = substringRunsRaw(docs, kTokens, maxWindowDf)
-    verified.orderBy("d1", "d2", "d1_pos", "d2_pos")
-  }
+                    maxWindowDf: Option[Long] = None): DataFrame =
+    substringRunsRaw(docs, kTokens, maxWindowDf)._1
 
-  /** [[substringRuns]]'s unordered body, plus the tokenized corpus it
-    * was computed from — so [[substringRemove]] can compose without a
-    * wasted total sort between detection and removal. */
   /** Tokenized corpus (doc_id, _t) — the substring family's shared
     * tokenization. */
   private def docToks(docs: DataFrame): DataFrame =
@@ -852,6 +847,9 @@ object Dedup {
         col("run_tokens"))
   }
 
+  /** [[substringRuns]]'s body, plus the tokenized corpus it was computed
+    * from — so [[substringRemoveText]] cuts spans out of the same token
+    * table instead of tokenizing the corpus a second time. */
   private def substringRunsRaw(docs: DataFrame, kTokens: Int,
                                maxWindowDf: Option[Long])
       : (DataFrame, DataFrame) = {
@@ -933,7 +931,6 @@ object Dedup {
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         col("a.pos").as("p1"), col("b.pos").as("p2"))
     extendVerify(cand, docToks(oldDocs), newToks, kTokens)
-      .orderBy("d1", "d2", "d1_pos", "d2_pos")
   }
 
   /** The removal ACTION on [[substringRuns]]'s detections — the actual
@@ -964,29 +961,19 @@ object Dedup {
     * removal itself is a map. */
   def substringRemove(docs: DataFrame, kTokens: Int = 8,
                       maxWindowDf: Option[Long] = None): DataFrame =
-    substringRemoveUnordered(docs, kTokens, maxWindowDf)
+    substringRemoveText(docs, kTokens, maxWindowDf)
       .select(col("doc_id"), col("n_removed"), col("clean_md5"))
-      .orderBy("doc_id")
 
   /** The removal operator's PRODUCT — the cleaned corpus itself, one row
     * per document: (doc_id, n_removed, clean_text, clean_md5), where
     * `clean_text` is the whitespace-normalized text with every marked
     * span cut (the family's tokenization rejoined — what a curation
     * pipeline writes out as the next corpus snapshot) and `clean_md5`
-    * digests it. [[substringRemove]] reports stats-about-cleaning; this
-    * is the variant whose output feeds the sink writers / the next
-    * pipeline stage. Identical plan up to the final projection — the
-    * `_kept` token array was always computed; this stops dropping it. */
+    * digests it. This is the variant whose output feeds the sink
+    * writers / the next pipeline stage; [[substringRemove]] is its
+    * stats-about-cleaning projection. */
   def substringRemoveText(docs: DataFrame, kTokens: Int = 8,
-                          maxWindowDf: Option[Long] = None): DataFrame =
-    substringRemoveUnordered(docs, kTokens, maxWindowDf).orderBy("doc_id")
-
-  /** [[substringRemoveText]] without the output sort — for composition
-    * (the v3 curation pipeline joins this on doc_id; a sort below the
-    * join would be wasted work Catalyst does not reliably eliminate). */
-  private[graft] def substringRemoveUnordered(
-      docs: DataFrame, kTokens: Int,
-      maxWindowDf: Option[Long]): DataFrame = {
+                          maxWindowDf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (runs, toks) = substringRunsRaw(docs, kTokens, maxWindowDf)
     // Distinct: two partners sharing the SAME d2 span emit identical

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.LongType
   * inside whole-stage codegen and scale embarrassingly-parallel: each is a
   * per-row map over the scan — no shuffle at all until a downstream groupBy.
   * Every scalar here is integer or pre-rounded, so results are bit-identical
-  * across engines (the DuckDB oracle mirrors each formula).
+  * across engines (the DuckDB oracle mirrors each formula). No query here
+  * sorts its output: a caller that needs an order sorts on the row key.
   */
 object TextAnalysis {
 
@@ -197,7 +198,6 @@ object TextAnalysis {
             // tokenizing "" yields one empty token)
             (lit(1.0) - when(col("n_chars2") > 0,
               col("n_punct").cast("double") / col("n_chars2"))) * 0.3))
-      .orderBy("doc_id")
 
   /** 16-bit hash of a token derived from its md5 hex prefix — chosen because
     * both Spark and DuckDB expose md5, making the oracle bit-exact. */
@@ -251,7 +251,6 @@ object TextAnalysis {
         .when(col("fr_score") > col("en_score") && col("fr_score") > col("de_score") &&
           col("fr_score") > col("es_score"), "fr")
         .otherwise("en").as("lang_pred"))
-      .orderBy("doc_id")
   }
 
   /** Per-document corpus-commonness score: the mean corpus frequency of
@@ -287,7 +286,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_tok"), col("sum_cnt"),
         round6(col("sum_cnt") / col("n_tok") / col("_total"))
           .as("commonness"))
-      .orderBy("doc_id")
   }
 
   /** C4/Gopher-style rule-bundle filter — the standard pre-training
@@ -309,19 +307,17 @@ object TextAnalysis {
     * array — zero shuffle, whole-stage codegen, embarrassingly parallel
     * at any scale. All comparisons are on exact integers or a single IEEE
     * division of exact integers, so the flags are bit-identical across
-    * engines. */
-  def c4FilterQuery(docs: DataFrame): DataFrame =
-    c4FilterQuery(docs, Nil)
-
-  /** As above, with named pass-through columns (each expression is
-    * evaluated against the INPUT row, so `md5(col("text"))` rides the
-    * same projection as the flags) — the composing-pipeline hook: a
-    * caller wanting flags PLUS derived columns would otherwise join two
-    * copies of its upstream subtree, executing every kernel beneath it
-    * twice (the round-20 v6 plan audit: four document scans, two keeper
+    * engines.
+    *
+    * `carry` names pass-through columns (each expression is evaluated
+    * against the INPUT row, so `md5(col("text"))` rides the same
+    * projection as the flags) — the composing-pipeline hook: a caller
+    * wanting flags PLUS derived columns would otherwise join two copies
+    * of its upstream subtree, executing every kernel beneath it twice
+    * (the round-20 v6 plan audit: four document scans, two keeper
     * elections, both byte kernels duplicated). */
   def c4FilterQuery(docs: DataFrame,
-                    carry: Seq[(String, Column)]): DataFrame = {
+                    carry: Seq[(String, Column)] = Nil): DataFrame = {
     val withT = docs.select(
       Seq(col("doc_id"), col("text"), tokens(col("text")).as("_t")) ++
         carry.map { case (n, c) => c.as(n) }: _*)
@@ -354,7 +350,6 @@ object TextAnalysis {
         col("len_ok") && col("wordlen_ok") && col("symbol_ok") &&
           col("alpha_ok") && col("toklen_ok") && col("lorem_ok") &&
           col("distinct_ok"))
-      .orderBy("doc_id")
   }
 
   /** Top-`k` TF-IDF terms per document — the keyword-extraction /
@@ -387,6 +382,5 @@ object TextAnalysis {
         row_number().over(w).cast(LongType).as("rk"),
         col("term"), col("tf"), round6(col("score")).as("score"))
       .where(col("rk") <= k)
-      .orderBy("doc_id", "rk")
   }
 }

@@ -544,7 +544,8 @@ object DedupRows {
     // verification). The repeated-substring class document-level dedup
     // cannot see; every run row hash-compares.
     QueryDef("dedup_substring", (s, dir) =>
-      Dedup.substringRuns(docs(s, dir), 8),
+      Dedup.substringRuns(docs(s, dir), 8)
+        .orderBy("d1", "d2", "d1_pos", "d2_pos"),
     // Exact-substring runs: window-hash anchors -> diagonal
     // gaps-and-islands extension -> span-equality verification
     // (Dedup.substringRuns digit-for-digit).
@@ -553,14 +554,15 @@ object DedupRows {
     // positions are dropped before the posting join — the dfcut
     // precedent; a cut window splits the runs it interrupts).
     QueryDef("dedup_substring_dfcut", (s, dir) =>
-      Dedup.substringRuns(docs(s, dir), 8, Some(3L)),
+      Dedup.substringRuns(docs(s, dir), 8, Some(3L))
+        .orderBy("d1", "d2", "d1_pos", "d2_pos"),
     substringRunsSql(8, Some(3L))),
     // ... and the removal ACTION on those detections (the suffix-array
     // paper's actual operation): lowest-id doc keeps each shared run,
     // every other holder has the merged spans cut from its token
     // stream. One row per doc; cleaned text digested.
     QueryDef("dedup_substring_remove", (s, dir) =>
-      Dedup.substringRemove(docs(s, dir), 8),
+      Dedup.substringRemove(docs(s, dir), 8).orderBy("doc_id"),
     substringRemoveSql(8, None)),
     // ... and the removal's PRODUCT: the cleaned corpus itself — one row
     // per doc with the whitespace-normalized text after every marked
@@ -569,7 +571,8 @@ object DedupRows {
     // finding, closed).
     QueryDef("dedup_substring_remove_text", (s, dir) =>
       Dedup.substringRemoveText(docs(s, dir), 8)
-        .select(col("doc_id"), col("n_removed"), col("clean_text")),
+        .select(col("doc_id"), col("n_removed"), col("clean_text"))
+        .orderBy("doc_id"),
     substringRemoveTextSql(8, None)),
     // Incremental substring detection: new batch (odd doc_ids) vs the
     // existing corpus (even), with the corpus side's window-hash
@@ -583,6 +586,7 @@ object DedupRows {
         s"$dir/documents.parquet", "sswin_even", 8)
       Dedup.substringRunsIncremental(d.where(col("doc_id") % 2 === 1),
         old, posting, 8)
+        .orderBy("d1", "d2", "d1_pos", "d2_pos")
     },
     substringIncrementalSql(8)),
     QueryDef("dedup_embedding", (s, dir) =>
@@ -713,7 +717,8 @@ object DedupRows {
 
     // CCNet/RefinedWeb-style sub-document dedup: 10-token chunks shared
     // across documents are stripped everywhere but their first occurrence.
-    QueryDef("dedup_chunks", (s, dir) => Curation.chunkDedup(docs(s, dir), 10),
+    QueryDef("dedup_chunks", (s, dir) =>
+      Curation.chunkDedup(docs(s, dir), 10).orderBy("doc_id"),
     """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
         |  FROM documents

@@ -149,7 +149,7 @@ object PipelineRows {
           emb.where(col("vec_id") < 20), 0.8, excludeSelfIds = true)
         .where(col("keep"))
         .select(col("vec_id").as("doc_id"), col("max_cos"))
-      val derun = Dedup.substringRemoveUnordered(d, 8, None)
+      val derun = Dedup.substringRemoveText(d, 8)
       quality.join(keep, "doc_id").join(clean, "doc_id")
         .join(derun.hint("SHUFFLE_MERGE"), "doc_id")
         .select(col("doc_id"), col("cluster"), col("n_tokens"),
@@ -283,7 +283,7 @@ object PipelineRows {
       val extracted = docs(s, dir).select(col("doc_id"),
         graft.functions.MarkupExpressions.extractMarkup(
           markupWrapped(col("doc_id"), col("text"))).as("text"))
-      TextAnalysis.c4FilterQuery(extracted)
+      TextAnalysis.c4FilterQuery(extracted).orderBy("doc_id")
     },
     // v5: markup extraction first (the declared RE2 chain over the
     // deterministic wrapper), then the text_c4_filters replay over the
@@ -343,6 +343,7 @@ object PipelineRows {
       TextAnalysis.c4FilterQuery(ext,
         Seq("url_canon" -> col("url_canon"),
           "clean_md5" -> md5(col("text"))))
+        .orderBy("doc_id")
     },
     // v6: canonical-URL keeper election, then markup + PII + C4 over
     // the keepers only — every stage the declared chain of its own

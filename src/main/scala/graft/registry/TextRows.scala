@@ -764,7 +764,8 @@ object TextRows {
          |  ON dw.doc_id = d0.doc_id
          |LEFT JOIN uplen u ON u.w = dw.w
          |GROUP BY d0.doc_id ORDER BY d0.doc_id""".stripMargin),
-    QueryDef("text_quality_score", (s, dir) => TextAnalysis.qualityQuery(docs(s, dir)),
+    QueryDef("text_quality_score", (s, dir) =>
+      TextAnalysis.qualityQuery(docs(s, dir)).orderBy("doc_id"),
     T +
       """SELECT doc_id,
         |  CAST(len(t) AS BIGINT) AS n_tokens,
@@ -842,7 +843,8 @@ object TextRows {
     domainTrainSql),
     // C4/Gopher rule-bundle filter: one boolean per cleaning rule + the
     // composite keep, verified per-document by the oracle.
-    QueryDef("text_c4_filters", (s, dir) => TextAnalysis.c4FilterQuery(docs(s, dir)),
+    QueryDef("text_c4_filters", (s, dir) =>
+      TextAnalysis.c4FilterQuery(docs(s, dir)).orderBy("doc_id"),
     // every flag coalesced to false: degenerate (empty-text) rows hit 0/0
     // divisions that are NaN->false in Spark but NULL in DuckDB
     T +
@@ -863,7 +865,8 @@ object TextRows {
         |  (len_ok AND wordlen_ok AND symbol_ok AND alpha_ok AND toklen_ok
         |    AND lorem_ok AND distinct_ok) AS keep
         |FROM toks ORDER BY doc_id""".stripMargin),
-    QueryDef("text_lang_id", (s, dir) => TextAnalysis.langIdQuery(docs(s, dir)),
+    QueryDef("text_lang_id", (s, dir) =>
+      TextAnalysis.langIdQuery(docs(s, dir)).orderBy("doc_id"),
     T +
       """SELECT doc_id,
         |  CAST(len(list_filter(t, x -> list_contains(['the','and','of'], x))) AS BIGINT) AS en_score,
@@ -912,7 +915,8 @@ object TextRows {
     // Benchmark decontamination: corpus docs sharing a 3-token shingle with
     // the eval split (doc_id % 17 == 0 stands in for a benchmark table).
     // The eval gram set is broadcast — map-side probe against the corpus.
-    QueryDef("text_decontaminate", (s, dir) => Curation.decontaminate(docs(s, dir)),
+    QueryDef("text_decontaminate", (s, dir) =>
+      Curation.decontaminate(docs(s, dir)).orderBy("doc_id"),
     "WITH " + ShChain +
       """, dsh AS (
         |  SELECT DISTINCT doc_id, sh FROM sh
@@ -937,7 +941,7 @@ object TextRows {
     // exactly the plain semi-join's (the Bloom is pure topology), so the
     // oracle asserts cell-exact with no sketch tolerance.
     QueryDef("text_decontaminate_bloom", (s, dir) =>
-      Curation.decontaminateCross(docs(s, dir)),
+      Curation.decontaminateCross(docs(s, dir)).orderBy("doc_id"),
     // The Bloom prefilter is pure topology (exact verify removes its
     // false positives), so the oracle is the PLAIN semi-join — no sketch
     // tolerance anywhere.
@@ -960,7 +964,8 @@ object TextRows {
 
     // Gopher-style repetition filters: top-2-gram coverage and duplicate-
     // 3-gram fraction per document.
-    QueryDef("text_repetition", (s, dir) => Curation.repetitionStats(docs(s, dir)),
+    QueryDef("text_repetition", (s, dir) =>
+      Curation.repetitionStats(docs(s, dir)).orderBy("doc_id"),
     T +
       """, g2 AS (
         |  SELECT doc_id, t[i] || ' ' || t[i+1] AS g
@@ -993,7 +998,8 @@ object TextRows {
     // the line lake) are removed line-by-line; the cleaned text itself is
     // the verified output, reassembled in original line order.
     QueryDef("dedup_lines", (s, dir) =>
-      Curation.lineDedup(Curation.lineified(docs(s, dir)), 3),
+      Curation.lineDedup(Curation.lineified(docs(s, dir)), 3)
+        .orderBy("doc_id"),
     // Line lake replay (header on %3, 12-token body chunks, footer on %2)
     // + df-per-line + removal + in-order reassembly; clean_text is
     // verified verbatim. Parallel unnest() calls zip in DuckDB, giving
@@ -1023,6 +1029,7 @@ object TextRows {
         s"$dir/documents.parquet", "linedf_even", 3)
       Curation.lineDedupIncremental(
         lined.where(col("doc_id") % 2 === 1), boiler)
+        .orderBy("doc_id")
     },
     // Incremental variant: the df authority is the EVEN half's persisted
     // boilerplate store; the odd batch is cleaned against it without the
@@ -1047,7 +1054,8 @@ object TextRows {
     // TF-IDF keyword extraction: top-3 terms per document (linear idf so
     // the score is bit-identical across engines; see Scaladoc).
     QueryDef("text_tfidf_top", (s, dir) =>
-      TextAnalysis.tfidfTopQuery(docs(s, dir), k = 3),
+      TextAnalysis.tfidfTopQuery(docs(s, dir), k = 3)
+        .orderBy("doc_id", "rk"),
     T +
       """, tok AS (SELECT doc_id, unnest(t) AS term FROM toks),
         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
@@ -1071,7 +1079,7 @@ object TextRows {
 
     // Robust per-language length-outlier detection (median + MAD).
     QueryDef("text_length_outliers", (s, dir) =>
-      Curation.lengthOutliers(docs(s, dir)),
+      Curation.lengthOutliers(docs(s, dir)).orderBy("lang"),
     """WITH med AS (
         |  SELECT lang, quantile_cont(n_chars, 0.5) AS med_chars
         |  FROM documents GROUP BY lang),
@@ -1141,7 +1149,7 @@ object TextRows {
     // Unigram-LM commonness score (log-free CCNet-perplexity cousin —
     // integer sums only, so bit-reproducible across partition orders).
     QueryDef("text_commonness", (s, dir) =>
-      TextAnalysis.commonnessQuery(docs(s, dir)),
+      TextAnalysis.commonnessQuery(docs(s, dir)).orderBy("doc_id"),
     T +
       """, tok AS (SELECT doc_id, unnest(t) AS term FROM toks),
         |cnt AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt

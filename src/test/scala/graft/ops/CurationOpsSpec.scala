@@ -81,7 +81,8 @@ class CurationOpsSpec extends SparkSuite {
     assert(approx.schema == exact.schema)
     // n=5/n=3 with huge gaps: the <=1% rank window cannot cross a value
     // boundary, so the sketch must return the exact median elements
-    assert(approx.collect().toSeq == exact.collect().toSeq)
+    assert(approx.orderBy("lang").collect().toSeq ==
+      exact.orderBy("lang").collect().toSeq)
   }
 
   test("lengthOutliers approx dial keeps the exact plan's shape: same " +
@@ -127,7 +128,8 @@ class CurationOpsSpec extends SparkSuite {
       0L -> "apple apple banana",
       1L -> "banana cherry",
       2L -> "cherry cherry cherry")
-    val r = TextAnalysis.tfidfTopQuery(docs, k = 3).collect()
+    val r = TextAnalysis.tfidfTopQuery(docs, k = 3)
+      .orderBy("doc_id", "rk").collect()
       .map(x => (x.getAs[Long]("doc_id"), x.getAs[Long]("rk"),
         x.getAs[String]("term"), x.getAs[Double]("score")))
     // doc 0: apple tf=2 df=1 -> 6.0 beats banana tf=1 df=2 -> 1.5
@@ -173,10 +175,10 @@ class CurationOpsSpec extends SparkSuite {
       (3L, "batchrep\nnew3"),
       (5L, "batchrep\nnew5")) // batchrep df=3 IN BATCH -> not in store
       .toDF("doc_id", "text")
-    val src = java.nio.file.Files.createTempDirectory("linesrc").toFile
+    val src = new java.io.File(tmpDir("linesrc"))
     java.nio.file.Files.write(new java.io.File(src, "marker").toPath,
       "x".getBytes("UTF-8"))
-    val root = java.nio.file.Files.createTempDirectory("lineroot").toFile
+    val root = new java.io.File(tmpDir("lineroot"))
       .toURI.toString
     val boiler = Curation.lineBoilerplateStore(spark,
       lined.where(col("doc_id") % 2 === 0), src.getPath, "t", 3, Some(root))

@@ -64,10 +64,10 @@ class DomainClassifierSpec extends SparkSuite {
 
   test("centroidStore: warm read returns the fresh-trained centroids " +
     "and the store root holds exactly the domcents family") {
-    val src = java.nio.file.Files.createTempDirectory("domsrc").toFile
+    val src = new java.io.File(tmpDir("domsrc"))
     java.nio.file.Files.write(new java.io.File(src, "marker").toPath,
       "x".getBytes("UTF-8"))
-    val root = java.nio.file.Files.createTempDirectory("domroot").toFile
+    val root = new java.io.File(tmpDir("domroot"))
       .toURI.toString
     val fresh = DomainClassifier.trainCentroids(corpus)
     val cold = DomainClassifier.centroidStore(spark, corpus, src.getPath,

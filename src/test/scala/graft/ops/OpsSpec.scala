@@ -89,11 +89,11 @@ class OpsSpec extends SparkSuite {
   }
 
   test("persisted band-bucket store round-trips and serves repeat batches") {
-    val src = java.nio.file.Files.createTempDirectory("sigsrc").toFile
+    val src = new java.io.File(tmpDir("sigsrc"))
     // a real file to fingerprint (content is irrelevant to the store key)
     java.nio.file.Files.write(new java.io.File(src, "marker").toPath,
       "x".getBytes("UTF-8"))
-    val rootDir = java.nio.file.Files.createTempDirectory("sigroot").toFile
+    val rootDir = new java.io.File(tmpDir("sigroot"))
     val root = rootDir.toURI.toString // exercises the file:// URI path
     val old = docsDf.where(col("doc_id") % 2 === 0)
     val stored = Dedup.bandBucketStore(spark, old, src.getPath, "spec",
@@ -1233,8 +1233,7 @@ class OpsSpec extends SparkSuite {
     "old-corpus prints with fixed old->new orientation across all three " +
     "modalities (image dHash, audio, video); warm store == cold run") {
     import graft.ops.Multimodal._
-    val src = java.nio.file.Files
-      .createTempDirectory("media-incr").toString
+    val src = tmpDir("media-incr")
     // 130 docs with the ODD dial 63: ids c and c+63 share a class with
     // OPPOSITE parity, so every odd/new asset has an even/old classmate
     // (the re-uploaded-asset structure); evens are "old", odds "new"

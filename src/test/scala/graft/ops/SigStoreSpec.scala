@@ -23,10 +23,10 @@ class SigStoreSpec extends SparkSuite {
 
   /** Fresh (sourcePath, storeRoot URI, root dir) triple per test. */
   private def freshKey(): (String, String, java.io.File) = {
-    val src = java.nio.file.Files.createTempDirectory("sigsrc").toFile
+    val src = new java.io.File(tmpDir("sigsrc"))
     java.nio.file.Files.write(new java.io.File(src, "marker").toPath,
       "x".getBytes("UTF-8"))
-    val rootDir = java.nio.file.Files.createTempDirectory("sigroot").toFile
+    val rootDir = new java.io.File(tmpDir("sigroot"))
     (src.getPath, rootDir.toURI.toString, rootDir)
   }
 

@@ -78,8 +78,7 @@ class UnigramSpec extends SparkSuite {
 
   test("vocabStore warm read returns the fresh-trained vocab unchanged " +
     "(integer-exact training makes the store bit-identical)") {
-    val src = java.nio.file.Files
-      .createTempDirectory("unigram-store").toString
+    val src = tmpDir("unigram-store")
     val docs = (0L until 30L).map(i => (i, s"alpha beta gamma g$i"))
       .toDF("doc_id", "text")
     docs.write.mode("overwrite").parquet(s"$src/documents.parquet")

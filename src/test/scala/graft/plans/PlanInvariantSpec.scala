@@ -203,6 +203,49 @@ class PlanInvariantSpec extends SparkSuite {
     }
   }
 
+  test("text, curation and substring operators do not sort their output: " +
+    "no range exchange in the operator's plan, exactly one (the output " +
+    "sort) in its registry row's") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Curation, Dedup, TextAnalysis}
+    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val lined = Curation.lineified(d)
+    val old = d.where(col("doc_id") % 2 === 0)
+    val ops = Seq(
+      "text_quality_score" -> TextAnalysis.qualityQuery(d),
+      "text_lang_id" -> TextAnalysis.langIdQuery(d),
+      "text_commonness" -> TextAnalysis.commonnessQuery(d),
+      "text_c4_filters" -> TextAnalysis.c4FilterQuery(d),
+      "text_tfidf_top" -> TextAnalysis.tfidfTopQuery(d, 3),
+      "text_decontaminate" -> Curation.decontaminate(d),
+      "text_decontaminate_bloom" -> Curation.decontaminateCross(d),
+      "text_repetition" -> Curation.repetitionStats(d),
+      "dedup_chunks" -> Curation.chunkDedup(d, 10),
+      "text_length_outliers" -> Curation.lengthOutliers(d),
+      "dedup_lines" -> Curation.lineDedup(lined, 3),
+      "dedup_lines_incremental" -> Curation.lineDedupIncremental(
+        lined.where(col("doc_id") % 2 === 1),
+        Curation.lineDf(lined.where(col("doc_id") % 2 === 0))
+          .where(col("df") >= 3)),
+      "dedup_substring" -> Dedup.substringRuns(d, 8),
+      "dedup_substring_incremental" -> Dedup.substringRunsIncremental(
+        d.where(col("doc_id") % 2 === 1), old,
+        Dedup.docWindows(old.select(col("doc_id"),
+          TextAnalysis.tokens(col("text")).as("_t")), 8), 8),
+      "dedup_substring_remove" -> Dedup.substringRemove(d, 8),
+      "dedup_substring_remove_text" -> Dedup.substringRemoveText(d, 8))
+    def ranges(p: String) = "rangepartitioning".r.findAllIn(p).size
+    for ((row, df) <- ops)
+      assert(ranges(df.queryExecution.executedPlan.toString) == 0,
+        s"the operator behind $row sorts its output")
+    // the incremental rows publish stores: keep them out of the shared root
+    spark.conf.set("graft.sigstore.dir", tmpDir("order-store"))
+    try for ((row, _) <- ops)
+      assert(ranges(planOf(row)) == 1,
+        s"$row must end in exactly one total sort")
+    finally spark.conf.unset("graft.sigstore.dir")
+  }
+
   test("PQ encode is map-only (no Exchange) and ADC scoring is the " +
     "round-16 lookup shape: no explode, no aggregation shuffle — the only " +
     "exchanges are query-side broadcasts and the top-k window") {
