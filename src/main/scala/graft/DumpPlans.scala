@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.util.matching.Regex
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
+
 /** Regenerates PLANS.md: formatted physical plans for headline queries —
   * the evidence that filters push down, dimensions broadcast, and custom
   * operators plan as designed. Run from the root of the checkout whose
@@ -150,6 +156,27 @@ object DumpPlans {
     // canonical key
     "url_canonicalize", "url_host_stats")
 
+  /** The formatted physical plan of `df` with its run-specific tokens
+    * normalized, so regenerating PLANS.md on unchanged code rewrites
+    * nothing and a diff shows only plan changes: expression ids (`#N`),
+    * `plan_id`s and RDD ids are renumbered by order of first appearance;
+    * JVM lambda class suffixes (`$$Lambda$N/0x…`), object identity hashes
+    * (`@1a2b3c4d`) and the source lines of RDD call sites are masked. */
+  private[graft] def formattedPlan(df: DataFrame): String = {
+    val raw = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val masked = Seq(
+      """\$\$Lambda(\$\d+)?/0x[0-9a-f]+""" -> "\\$\\$Lambda",
+      """@[0-9a-f]{4,}\b""" -> "@<hash>",
+      """\.scala:\d+""" -> ".scala:<line>")
+      .foldLeft(raw) { case (t, (re, to)) => re.r.replaceAllIn(t, to) }
+    Seq("#" -> """#(\d+)""", "plan_id=" -> """plan_id=(\d+)""",
+        "RDD[" -> """RDD\[(\d+)""").foldLeft(masked) { case (t, (prefix, re)) =>
+      val seen = mutable.LinkedHashMap.empty[String, Int]
+      re.r.replaceAllIn(t, m => Regex.quoteReplacement(
+        prefix + seen.getOrElseUpdate(m.group(1), seen.size + 1)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // Structural completeness guard (the round-20 verdict's ask, after
@@ -172,9 +199,7 @@ object DumpPlans {
     sb.append("`BroadcastHashJoin` for dimensions, single `Exchange` per logical\n")
     sb.append("regroup, `AsOfJoin` custom exec, no nested-loop joins anywhere.\n")
     for (name <- Headliners) {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val full = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val full = formattedPlan(SparkEntry.queries(name)(spark, sfDir))
       val plan = if (full.length > 20000)
         full.take(20000) + "\n… (truncated)\n" else full
       sb.append(s"\n## $name\n\n```\n$plan```\n")

@@ -342,17 +342,20 @@ object ParquetEnvelopeWriter {
     val wholeObject = outerCodec != CompressionType.None
     // one open object: its parquet writer and, in strict-parity mode, the
     // task-local spool file it writes plus the destination the spool is
-    // copied to on close
-    GroupFileWriter.writeObjects[(ParquetWriter[Group], Option[(File, Path)])](it)(
+    // copied to on close. The spool goes through Hadoop's checksummed
+    // local file system, which writes a `.crc` sidecar next to it; deleting
+    // through that file system removes both.
+    def deleteSpool(spool: Path): Unit = spool.getFileSystem(conf).delete(spool, false)
+    GroupFileWriter.writeObjects[(ParquetWriter[Group], Option[(Path, Path)])](it)(
       open = { name =>
         val target = GroupFileWriter.resolveUnder(baseUri, name)
         val spool = if (wholeObject) {
           val f = File.createTempFile("graft-parquet-spool", ".parquet")
           f.delete() // ParquetWriter refuses to overwrite via raw-local fs
-          Some((f, target))
+          Some((new Path(f.toURI), target))
         } else None
         val writer = ExampleParquetWriter
-          .builder(spool.fold(target) { case (f, _) => new Path(f.toURI) })
+          .builder(spool.fold(target)(_._1))
           .withConf(conf)
           .withType(messageType)
           .withCompressionCodec(codecName)
@@ -372,17 +375,17 @@ object ParquetEnvelopeWriter {
         // stream the finished parquet file through the outer codec to the
         // destination — the reference's exact object layout (parquet bytes
         // inside one codec stream, S3SinkTask.java:135-140)
-        spool.foreach { case (f, dest) =>
+        spool.foreach { case (p, dest) =>
           val out = Compression.wrap(dest.getFileSystem(conf).create(dest, true), outerCodec)
-          try java.nio.file.Files.copy(f.toPath, out)
+          try java.nio.file.Files.copy(new File(p.toUri).toPath, out)
           finally out.close()
-          f.delete()
+          deleteSpool(p)
         }
       },
       // close the writer before deleting its spool — deleting a file under
       // an open handle is at best platform-dependent
       release = { case (writer, spool) =>
-        try writer.close() finally spool.foreach(_._1.delete())
+        try writer.close() finally spool.foreach(s => deleteSpool(s._1))
       })
   }
 }

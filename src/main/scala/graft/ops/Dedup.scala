@@ -36,7 +36,6 @@ object Dedup {
     docs.select(col("doc_id"), md5(col("text")).as("h"))
       .groupBy("h")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("cnt"))
-      .orderBy("keep_id")
 
   val NumMinhashes = 8
   val NumBands = 4 // 2 minhashes per band
@@ -200,12 +199,11 @@ object Dedup {
         col("d2") === col("s2.doc_id"))
       .select(col("d1"), col("d2"),
         jaccard(col("s1.shs"), col("s2.shs")).as("jaccard"))
-      .orderBy("d1", "d2")
   }
 
   /** Incremental (cross-corpus) near-dup detection: MinHash-LSH candidates
     * between a new batch and an existing corpus, verified with exact
-    * Jaccard. Returns (new_id, old_id, jaccard), ordered — the "dedupe
+    * Jaccard. Returns (new_id, old_id, jaccard) — the "dedupe
     * this crawl snapshot against everything already ingested" operator.
     *
     * MinHash signatures are a pure per-doc map, so the old corpus's
@@ -247,7 +245,6 @@ object Dedup {
         col("old_id") === col("s2.doc_id"))
       .select(col("new_id"), col("old_id"),
         jaccard(col("s1.shs"), col("s2.shs")).as("jaccard"))
-      .orderBy("new_id", "old_id")
   }
 
   /** Signature-algorithm version baked into every store directory name.
@@ -430,7 +427,6 @@ object Dedup {
         Seq(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
           lit(0L).as("hamming")): _*)
     cross.unionByName(intra)
-      .orderBy(kc ++ Seq(col("d1"), col("d2")): _*)
   }
 
   /** Cross-corpus banded Hamming pairing — [[hammingPairsFromSig]]'s
@@ -477,7 +473,6 @@ object Dedup {
         col("doc_id").as("d2")): _*).hint("SHUFFLE_MERGE"),
         keys :+ "s2")
       .select(kc ++ Seq(col("d1"), col("d2"), col("hamming")): _*)
-      .orderBy(kc ++ Seq(col("d1"), col("d2")): _*)
   }
 
   /** Connected components over a near-dup pair graph — the final step of a
@@ -608,7 +603,6 @@ object Dedup {
       .distinct()
     connectedComponents(star, docs.select("doc_id"))
       .withColumn("keep", (col("doc_id") === col("cluster")).cast("boolean"))
-      .orderBy("doc_id")
   }
 
   /** Blocked n-gram Jaccard near-dup scoring: pairs within a
@@ -734,7 +728,6 @@ object Dedup {
       }
     scored
       .where(col("jaccard") >= minJaccard)
-      .orderBy("d1", "d2")
   }
 
   /** Exact-substring duplication: every maximal run of >= `kTokens`
@@ -1068,7 +1061,6 @@ object Dedup {
         TextAnalysis.round6(col("inter").cast("double") /
           least(col("sx"), col("sy"))).as("containment"))
       .where(col("containment") >= minScore)
-      .orderBy("d1", "d2")
   }
 
   /** SemDeDup-style semantic dedup over an embedding corpus: assign every
@@ -1129,7 +1121,6 @@ object Dedup {
     assigned.select(col("vec_id"), col("cell"))
       .join(dup, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("_dup").isNull.as("keep"))
-      .orderBy("vec_id")
   }
 
   /** [[semanticDedup]] with the nLists dial set by the √n occupancy rule
@@ -1179,7 +1170,6 @@ object Dedup {
         col("_n"), col("_bn"))).as("_mc"))
       .select(col("vec_id"), round(col("_mc"), 6).as("max_cos"),
         coalesce(col("_mc") < threshold, lit(true)).as("keep"))
-      .orderBy("vec_id")
   }
 
   /** Embedding near-dup pairs: cosine ≥ threshold between vectors sharing a
@@ -1197,6 +1187,5 @@ object Dedup {
           Similarity.dot(col("a.embedding"), col("b.embedding")),
           col("a._n"), col("b._n")), 6).as("cos"))
       .where(col("cos") >= threshold)
-      .orderBy("d1", "d2")
   }
 }

@@ -124,7 +124,7 @@ object DomainClassifier {
     * a cheap zip_with dot over it, and the squared norm folds in as a
     * literal. The bias dim (x = c = Scale²) shifts every margin by the
     * same constant and is skipped. Output: (doc_id, pred_domain, label,
-    * correct), ordered. */
+    * correct). */
   def scoreQuery(docs: DataFrame,
                  cents: Map[String, Array[Long]]): DataFrame = {
     Domains.foreach(l => require(cents.contains(l) &&
@@ -167,7 +167,6 @@ object DomainClassifier {
     scored
       .select(col("doc_id"), pred.as("pred_domain"), col("label"))
       .withColumn("correct", col("pred_domain") === col("label"))
-      .orderBy("doc_id")
   }
 
   /** Build-once/score-many centroids through [[FingerprintStore]] (the

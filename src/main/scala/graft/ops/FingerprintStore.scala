@@ -128,7 +128,7 @@ object FingerprintStore {
   }
 
   /** Catalog report as a DataFrame — (tag, version, n_rows) per COMPLETE
-    * store whose tag starts with `tagPrefix`, ordered by tag. Row counts
+    * store whose tag starts with `tagPrefix`. Row counts
     * come from each store's parquet footers (a metadata-only count); the
     * driver-side loop is catalog-sized, never data-sized. */
   def report(spark: SparkSession, storeRoot: Option[String],
@@ -139,7 +139,6 @@ object FingerprintStore {
       .map(e => (e.tag, e.version,
         spark.read.parquet(e.path).count()))
       .toDF("tag", "version", "n_rows")
-      .orderBy("tag")
   }
 
   /** Garbage-collect stale stores: an entry is LIVE iff its fingerprint

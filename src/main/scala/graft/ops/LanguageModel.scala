@@ -138,7 +138,7 @@ object LanguageModel {
     }
 
   /** Score every document in `docs` against a trained counts frame.
-    * Output per doc, ordered: (doc_id, n_tok, n_hit, n_oov, lm_score)
+    * Output per doc: (doc_id, n_tok, n_hit, n_oov, lm_score)
     * where `n_hit` counts positions whose bigram was attested in
     * training, `n_oov` positions whose token is out-of-vocabulary
     * (score 0 — only possible when scoring held-out text), and
@@ -179,6 +179,5 @@ object LanguageModel {
         sum(col("k") * col("s")).as("_ss"))
       .select(col("doc_id"), col("n_tok"), col("n_hit"), col("n_oov"),
         expr("_ss div n_tok").cast(LongType).as("lm_score"))
-      .orderBy("doc_id")
   }
 }

@@ -1315,7 +1315,6 @@ object Multimodal {
     assets.join(prints, "modality")
       .select(col("modality"), col("n_assets"), col("bytes_total"),
         col("n_prints"), col("n_h0_dup_assets"))
-      .orderBy("modality")
   }
 
   /** Oracle-checkable metadata projection: byte length, md5 of the payload,
@@ -1324,7 +1323,6 @@ object Multimodal {
     mediaFromEvents(spark, sfDir).toDF()
       .select(col("media_id"), col("modality"), col("format"), col("byte_len"),
         md5(col("payload")).as("payload_md5"))
-      .orderBy("media_id")
 
   /** Asset-level exact dedup: one row per distinct payload, with the
     * canonical (lowest-id) copy and the copy count — the "same image
@@ -1342,5 +1340,4 @@ object Multimodal {
       .agg(min(col("media_id")).as("keep_id"),
         count(lit(1)).as("n_copies"),
         sum(col("byte_len")).as("bytes_total"))
-      .orderBy("keep_id")
 }

@@ -282,7 +282,6 @@ object ProductQuantization {
         .where(col("rank") <= k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           round(col("_adc"), 6).as("adc"))
-        .orderBy("query_id", "rank")
     } else {
       require(rerank >= k, s"rerank=$rerank must be >= k=$k")
       val cand = scored.withColumn("_r", row_number().over(w))
@@ -303,7 +302,6 @@ object ProductQuantization {
       exact.withColumn("rank", row_number().over(w2).cast("long"))
         .where(col("rank") <= k)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-        .orderBy("query_id", "rank")
     }
   }
 

@@ -183,8 +183,8 @@ object QualityClassifier {
     * 100× probes measured as the dominant remaining cost of this row)
     * folded against the weight literals with one 64-element zip_with; the
     * stopword count the label rule needs rides in the SAME kernel pass as
-    * a marker group, so the plan has NO join and NO shuffle beyond the
-    * output sort. `pred` is the margin's sign. One row per doc:
+    * a marker group, so the plan has NO join and NO shuffle. `pred` is
+    * the margin's sign. One row per doc:
     * (doc_id, margin, pred, label). */
   def scoreQuery(docs: DataFrame, w: Array[Long]): DataFrame = {
     require(w.length == NumBuckets + 1,
@@ -208,7 +208,6 @@ object QualityClassifier {
         expr(marginSql).cast(LongType).as("margin"), col("label"))
       .withColumn("pred", col("margin") > 0)
       .select(col("doc_id"), col("margin"), col("pred"), col("label"))
-      .orderBy("doc_id")
   }
 
   /** Build-once/score-many weights through [[FingerprintStore]] (the

@@ -99,7 +99,6 @@ object Quantization {
         .where(col("rank") <= k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("hamming"))
-        .orderBy("query_id", "rank")
     } else {
       require(rerank >= k, s"rerank=$rerank must be >= k=$k")
       val cand = scored.withColumn("_r", row_number().over(w))
@@ -121,7 +120,6 @@ object Quantization {
       exact.withColumn("rank", row_number().over(w2).cast("long"))
         .where(col("rank") <= k)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-        .orderBy("query_id", "rank")
     }
   }
 
@@ -221,7 +219,6 @@ object Quantization {
     exact.withColumn("rank", row_number().over(w2).cast("long"))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-      .orderBy("query_id", "rank")
   }
 
   /** [[ivfHammingTopK]] at the scale-aware dials (nLists = √n,

@@ -43,7 +43,6 @@ object Sampling {
         when(col("bucket") < trainPct, "train")
           .when(col("bucket") < trainPct + valPct, "val")
           .otherwise("test"))
-      .orderBy("doc_id")
 
   /** Deterministic sharded training-order shuffle: a reproducible
     * pseudo-random permutation of the corpus via the salted 48-bit hash —
@@ -70,7 +69,6 @@ object Sampling {
           .orderBy(col("h"), col("doc_id"))).cast(LongType))
       .select(lit(epoch.toLong).as("epoch"), col("shard"), col("pos"),
         col("doc_id"))
-      .orderBy("shard", "pos")
   }
 
   /** Static data mixing toward target per-language token WEIGHTS: the
@@ -117,7 +115,6 @@ object Sampling {
         col("rate") * lit(281474976710656.0)) // 2^48, exactly representable
       .select(col("doc_id"), col("lang"), col("n_tok"),
         TextAnalysis.round6(col("rate")).as("rate"))
-      .orderBy("doc_id")
   }
 
   /** Per-stratum deterministic downsampling: keep a document iff its
@@ -135,7 +132,6 @@ object Sampling {
         hashBucket("strat", col("doc_id")).as("bucket"), rate.as("rate_pct"))
       .where(col("bucket") < col("rate_pct"))
       .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   /** Token-budget sequence packing by prefix-sum bucketing: within each
@@ -169,7 +165,6 @@ object Sampling {
       .withColumn("pack_id", expr(s"pre div ${budget}L"))
       .groupBy("lang", "pack_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("pack_tokens"))
-      .orderBy("lang", "pack_id")
   }
 
   /** Per-source quota capping: keep at most `perSource` documents from each
@@ -192,7 +187,6 @@ object Sampling {
       .select(col("doc_id"), col("source"), col("n_chars"),
         row_number().over(w).cast(LongType).as("rk"))
       .where(col("rk") <= perSource)
-      .orderBy("doc_id")
   }
 
   /** Quality-weighted epoch repetition: emit each document once per
@@ -202,7 +196,7 @@ object Sampling {
     * heuristic score (quality ≥ 0.5 → 3 copies, ≥ 0.25 → 2, else — and
     * for degenerate docs whose quality is NULL — 1). Tiers compare the
     * ROUNDED score, so the branch taken is bit-identical across engines.
-    * Returns (doc_id, n_copies, epoch_copy), ordered.
+    * Returns (doc_id, n_copies, epoch_copy).
     *
     * Scale: pure map + explode — zero shuffle at any size (plan-asserted
     * with the other map-only family members); the output multiplies rows
@@ -217,7 +211,6 @@ object Sampling {
           .otherwise(1L))
       .select(col("doc_id"), col("n_copies"),
         explode(sequence(lit(1L), col("n_copies"))).as("epoch_copy"))
-      .orderBy("doc_id", "epoch_copy")
 
   /** DSIR-flavored importance selection (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score each SOURCE
@@ -239,7 +232,7 @@ object Sampling {
     * a 1-row broadcast crossJoin, and the only corpus shuffle is the
     * per-doc partial-aggregated groupBy — the corpus itself is never
     * repartitioned. Returns (doc_id, n_grams, t_hits, s_hits, imp_ratio)
-    * for source docs with imp_ratio > 1, ordered; docs sharing no bucket
+    * for source docs with imp_ratio > 1; docs sharing no bucket
     * with the target (t_hits = 0 would make the ratio 0) drop out via
     * the threshold like everything else below parity. */
   def importanceSelect(docs: DataFrame, targetMod: Int = 17,
@@ -273,6 +266,5 @@ object Sampling {
         TextAnalysis.round6(
           when(col("s_hits") * col("t_total") > 0, raw)).as("imp_ratio"))
       .where(col("imp_ratio") > 1.0)
-      .orderBy("doc_id")
   }
 }

@@ -62,7 +62,6 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   val NumHyperplanes = 32 // 8 tables x 4 planes
@@ -231,7 +230,6 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** Scale-aware IVF list count: `max(16, ceil(sqrt(n)))` — the classic
@@ -341,7 +339,6 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .orderBy("vec_id", "rank")
   }
 
   /** [[knnGraph]] at the scale-aware √n dial ([[autoNLists]]) — the
@@ -499,6 +496,5 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 }

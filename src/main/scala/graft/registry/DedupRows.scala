@@ -234,7 +234,8 @@ object DedupRows {
       |ORDER BY a.vec_id""".stripMargin
 
   val rows: Seq[QueryDef] = Seq(
-    QueryDef("dedup_exact", (s, dir) => Dedup.exact(docs(s, dir)),
+    QueryDef("dedup_exact", (s, dir) =>
+      Dedup.exact(docs(s, dir)).orderBy("keep_id"),
     """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS cnt
         |FROM documents GROUP BY h ORDER BY keep_id""".stripMargin),
     // Keep-best policy: per content key, keep the LONGEST doc (ties ->
@@ -275,7 +276,8 @@ object DedupRows {
     """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS h,
         |       min(doc_id) AS keep_id, count(*) AS cnt
         |FROM documents GROUP BY h ORDER BY keep_id""".stripMargin),
-    QueryDef("dedup_minhash_lsh", (s, dir) => Dedup.minhashLshPairs(docs(s, dir)),
+    QueryDef("dedup_minhash_lsh", (s, dir) =>
+      Dedup.minhashLshPairs(docs(s, dir)).orderBy("d1", "d2"),
     "WITH " + MinhashCandChain +
       """, shs AS (
         |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
@@ -294,7 +296,7 @@ object DedupRows {
     // constants, so collisions (which only add verified candidates)
     // reproduce identically on both sides.
     QueryDef("dedup_minhash_wide", (s, dir) =>
-      Dedup.minhashLshPairs(docs(s, dir), 16, 8),
+      Dedup.minhashLshPairs(docs(s, dir), 16, 8).orderBy("d1", "d2"),
     "WITH " + minhashFoldedChain(16, 8) +
       """, shs AS (
         |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
@@ -315,6 +317,7 @@ object DedupRows {
       val ob = Dedup.bandBucketStore(s, old, s"$dir/documents.parquet",
         "incr_even")
       Dedup.crossCorpusPairs(d.where(col("doc_id") % 2 === 1), old, Some(ob))
+        .orderBy("new_id", "old_id")
     },
     "WITH " + MinhashCandChain +
       """, icand AS (
@@ -332,7 +335,8 @@ object DedupRows {
         |FROM icand JOIN shs s1 ON icand.new_id = s1.doc_id
         |           JOIN shs s2 ON icand.old_id = s2.doc_id
         |ORDER BY new_id, old_id""".stripMargin),
-    QueryDef("dedup_simhash", (s, dir) => Dedup.simhashPairs(docs(s, dir)),
+    QueryDef("dedup_simhash", (s, dir) =>
+      Dedup.simhashPairs(docs(s, dir)).orderBy("d1", "d2"),
     """WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         |  FROM documents
@@ -423,7 +427,7 @@ object DedupRows {
         |       TRUE AS covered
         |FROM mp""".stripMargin),
     QueryDef("dedup_ngram_jaccard", (s, dir) =>
-      Dedup.blockedNgramJaccard(docs(s, dir), 0.1),
+      Dedup.blockedNgramJaccard(docs(s, dir), 0.1).orderBy("d1", "d2"),
     SH +
       """, shsagg AS (
         |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
@@ -445,7 +449,8 @@ object DedupRows {
     // maxShingleDf, not corpus size), score the survivors at a low
     // threshold so the cut's effect is visible in the result.
     QueryDef("dedup_ngram_jaccard_dfcut", (s, dir) =>
-      Dedup.blockedNgramJaccard(docs(s, dir), 0.02, Some(2L)),
+      Dedup.blockedNgramJaccard(docs(s, dir), 0.02, Some(2L))
+        .orderBy("d1", "d2"),
     // df-cut variant mirrors the Spark posting-join (inter-driven) shape:
     // distinct per-doc shingles -> block document frequency -> drop
     // stop-shingles -> sizes and shared-shingle counts over the survivors.
@@ -482,7 +487,7 @@ object DedupRows {
         |ORDER BY d1, d2""".stripMargin),
     // Asymmetric containment (quote/subset detection) on the same blocks.
     QueryDef("dedup_containment", (s, dir) =>
-      Dedup.blockedContainment(docs(s, dir), 0.01),
+      Dedup.blockedContainment(docs(s, dir), 0.01).orderBy("d1", "d2"),
     SH +
       """, shsagg AS (
         |  SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
@@ -503,7 +508,8 @@ object DedupRows {
     // posting join) — closes the one posting family that still lacked
     // the boilerplate hot-key guard.
     QueryDef("dedup_containment_dfcut", (s, dir) =>
-      Dedup.blockedContainment(docs(s, dir), 0.01, Some(2L)),
+      Dedup.blockedContainment(docs(s, dir), 0.01, Some(2L))
+        .orderBy("d1", "d2"),
     // df-cut containment replays the Spark shape declaratively: distinct
     // per-doc shingles -> block document frequency -> drop stop-shingles
     // -> sizes and shared counts over the SURVIVORS, min-size denominator.
@@ -590,7 +596,8 @@ object DedupRows {
     },
     substringIncrementalSql(8)),
     QueryDef("dedup_embedding", (s, dir) =>
-      Dedup.embeddingPairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.35),
+      Dedup.embeddingPairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.35)
+        .orderBy("d1", "d2"),
     """SELECT a.vec_id AS d1, b.vec_id AS d2,
         |  round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
         |        nullif(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
@@ -609,6 +616,7 @@ object DedupRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Dedup.semanticDecontaminate(emb, emb.where(col("vec_id") < 20), 0.8,
         excludeSelfIds = true) // in-corpus stand-in benchmark only
+        .orderBy("vec_id")
     },
     // max over the broadcast benchmark scores; keep defaults true when
     // no comparable neighbor exists (all-NULL cosines)
@@ -632,7 +640,8 @@ object DedupRows {
     // with a lower-id in-cell neighbor at cosine >= 0.35). Shares the
     // sim_ann_ivf centroid/assignment machinery and its oracle chain.
     QueryDef("dedup_semantic", (s, dir) =>
-      Dedup.semanticDedup(s.read.parquet(s"$dir/embeddings.parquet"), 0.35),
+      Dedup.semanticDedup(s.read.parquet(s"$dir/embeddings.parquet"), 0.35)
+        .orderBy("vec_id"),
     // SemDeDup keep-list over the sim_ann_ivf assignment chain: the
     // `assigned` CTE is the identical deterministic cell assignment
     // (1 Lloyd iteration, nLists 16); a vector is dropped iff a lower-id
@@ -644,12 +653,13 @@ object DedupRows {
     // the keep-list at the auto dial hash-compare end-to-end.
     QueryDef("dedup_semantic_auto", (s, dir) =>
       Dedup.semanticDedupAuto(s.read.parquet(s"$dir/embeddings.parquet"),
-        0.35),
+        0.35).orderBy("vec_id"),
     // Same SemDeDup tail over the AUTO chain: nLists recomputed from
     // count(*) inside the SQL, pinning the scale-aware dial's value.
     "WITH " + AutoIvfChain + SemDedupTail),
     // Full pipeline: LSH candidates -> connected components -> keep-list.
-    QueryDef("dedup_cluster_keep", (s, dir) => Dedup.clusterKeepList(docs(s, dir)),
+    QueryDef("dedup_cluster_keep", (s, dir) =>
+      Dedup.clusterKeepList(docs(s, dir)).orderBy("doc_id"),
     "WITH RECURSIVE " + MinhashCandChain +
       """, edges AS (
         |  SELECT d1 AS a, d2 AS b FROM cand

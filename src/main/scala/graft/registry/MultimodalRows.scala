@@ -153,7 +153,8 @@ object MultimodalRows {
        |)""".stripMargin
 
   val rows: Seq[QueryDef] = Seq(
-    QueryDef("mm_binary_meta", (s, dir) => Multimodal.metaQuery(s, dir),
+    QueryDef("mm_binary_meta", (s, dir) =>
+      Multimodal.metaQuery(s, dir).orderBy("media_id"),
     """SELECT event_id AS media_id,
         |  CASE CAST(event_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |       ELSE 'video' END AS modality,
@@ -197,7 +198,8 @@ object MultimodalRows {
     // Asset-level exact dedup BEFORE decode: only md5 digests shuffle,
     // never the media bytes.
     QueryDef("mm_dedup_binary", (s, dir) =>
-      Multimodal.dedupBinary(Multimodal.mediaFromEvents(s, dir)),
+      Multimodal.dedupBinary(Multimodal.mediaFromEvents(s, dir))
+        .orderBy("keep_id"),
     """SELECT md5(props) AS asset_md5, min(event_id) AS keep_id,
         |  CAST(count(*) AS BIGINT) AS n_copies,
         |  CAST(sum(length(props)) AS BIGINT) AS bytes_total
@@ -210,7 +212,8 @@ object MultimodalRows {
     // symbolically from the synthesis arithmetic, so a drift anywhere in
     // encode/decode/resample/hash/banding hash-mismatches the row.
     QueryDef("mm_dedup_phash", (s, dir) =>
-      Multimodal.dedupPhash(Multimodal.phashLake(s, dir), 3),
+      Multimodal.dedupPhash(Multimodal.phashLake(s, dir), 3)
+        .orderBy("d1", "d2"),
     // Symbolic dHash replay of the phash lake: per doc, the 9x8 resample
     // reads base slot (y*12 + ((x*12*s)//9)//s) of pattern
     // (doc_id%64)*37*slot + slot^2*11 (mod 256, +128 at the perturbed
@@ -261,6 +264,7 @@ object MultimodalRows {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       Multimodal.dedupPhash(
         Multimodal.phashLakeScaled(s, dir, math.max(64L, n / 16)), 3)
+        .orderBy("d1", "d2")
     },
     // Same pipeline, auto-dialed lake: base = doc_id % cm with
     // cm = greatest(64, n/16) recomputed from count(*); pixel(i) =
@@ -381,6 +385,7 @@ object MultimodalRows {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       Multimodal.dedupAudio(
         Multimodal.audioLake(s, dir, math.max(64L, n / 16)), 3)
+        .orderBy("d1", "d2")
     },
     // Same pipeline, auto-dialed class count, banded Hamming pairing (the
     // mm_dedup_phash_auto topology in sample space).
@@ -466,6 +471,7 @@ object MultimodalRows {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       Multimodal.dedupVideo(
         Multimodal.videoLake(s, dir, math.max(64L, n / 16)), 3)
+        .orderBy("d1", "d2")
     },
     // Majority-of-frame-dHashes print from BASE frames only (the Spark
     // side's fps normalization must collapse the 2x clips back onto
@@ -541,6 +547,7 @@ object MultimodalRows {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       // odd dial: see dedupMediaIncremental's parity note
       Multimodal.dedupMediaIncremental(s, dir, math.max(63L, (n / 16) | 1L))
+        .orderBy("modality", "d1", "d2")
     },
     // Incremental cross-corpus pairing: image + audio + video prints
     // recomputed symbolically for ALL docs, then every (even, odd) pair
@@ -673,7 +680,7 @@ object MultimodalRows {
     // hamming-0 duplicate volume. Auto-dialed classes.
     QueryDef("pipeline_media_report", (s, dir) => {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
-      Multimodal.mediaReport(s, dir, math.max(64L, n / 16))
+      Multimodal.mediaReport(s, dir, math.max(64L, n / 16)).orderBy("modality")
     },
     // Inventory replay: container byte sizes are CLOSED-FORM from the
     // encoders' layouts (BMP 54 + rows, WAV 44 + 2·samples, AVI

@@ -404,7 +404,7 @@ object PipelineRows {
         "rpt-sswin", 8, Some(root))
       Dedup.bandBucketStore(s, d, s"$dir/documents.parquet",
         "rpt-bands", Some(root))
-      graft.ops.FingerprintStore.report(s, Some(root), "rpt-")
+      graft.ops.FingerprintStore.report(s, Some(root), "rpt-").orderBy("tag")
     },
     // The catalog reports each store's (tag, pinned version string, row
     // count); the oracle recomputes every count from the source tables —

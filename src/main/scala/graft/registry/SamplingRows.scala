@@ -136,7 +136,8 @@ object SamplingRows {
   val rows: Seq[QueryDef] = Seq(
     // Train/val/test assignment as a pure function of doc_id: stable under
     // corpus growth (no resample leakage across dataset refreshes).
-    QueryDef("sample_split", (s, dir) => Sampling.assignSplit(docs(s, dir)),
+    QueryDef("sample_split", (s, dir) =>
+      Sampling.assignSplit(docs(s, dir)).orderBy("doc_id"),
     """WITH h AS (
         |  SELECT doc_id, lang,
         |    CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) % 100
@@ -150,7 +151,7 @@ object SamplingRows {
     // Per-language quota downsampling with an independent hash salt.
     QueryDef("sample_stratified", (s, dir) =>
       Sampling.stratifiedSample(docs(s, dir),
-        Map("en" -> 50, "zh" -> 30), defaultPct = 20),
+        Map("en" -> 50, "zh" -> 30), defaultPct = 20).orderBy("doc_id"),
     """WITH h AS (
         |  SELECT doc_id, lang,
         |    CAST(('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) % 100
@@ -161,7 +162,8 @@ object SamplingRows {
         |ORDER BY doc_id""".stripMargin),
     // Token-budget sequence packing via prefix-sum bucketing.
     QueryDef("pack_token_budget", (s, dir) =>
-      Sampling.packByTokenBudget(docs(s, dir), budget = 2000L),
+      Sampling.packByTokenBudget(docs(s, dir), budget = 2000L)
+        .orderBy("lang", "pack_id"),
     """WITH toks AS (
         |  SELECT doc_id, lang,
         |    CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_tok
@@ -177,7 +179,8 @@ object SamplingRows {
     // tokens" means what the dataloader will actually see.
     QueryDef("pack_token_budget_bpe", (s, dir) =>
       Sampling.packByTokenBudget(docs(s, dir), budget = 2000L,
-        TextAnalysis.bpeRealTokenCount(col("text"))),
+        TextAnalysis.bpeRealTokenCount(col("text")))
+        .orderBy("lang", "pack_id"),
     "WITH RECURSIVE " + bpeSqlChain +
       """, c AS (
         |  SELECT d.doc_id, d.lang, b.n_bpe_real AS n_tok,
@@ -189,7 +192,8 @@ object SamplingRows {
         |FROM c GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin),
     // Per-source quota cap: keep the 40 longest docs per source (rank
     // pre-pruned map-side via InferWindowGroupLimit before the shuffle).
-    QueryDef("sample_quota", (s, dir) => Sampling.quotaCap(docs(s, dir), 40),
+    QueryDef("sample_quota", (s, dir) =>
+      Sampling.quotaCap(docs(s, dir), 40).orderBy("doc_id"),
     """SELECT doc_id, source, n_chars, rk FROM (
         |  SELECT doc_id, source, n_chars,
         |    CAST(row_number() OVER (
@@ -198,7 +202,8 @@ object SamplingRows {
         |WHERE rk <= 40 ORDER BY doc_id""".stripMargin),
     // Epoch-1 sharded training shuffle: deterministic salted-hash
     // permutation, rank window partitioned by shard (never global).
-    QueryDef("sample_shuffle", (s, dir) => Sampling.shuffleOrder(docs(s, dir), 1),
+    QueryDef("sample_shuffle", (s, dir) =>
+      Sampling.shuffleOrder(docs(s, dir), 1).orderBy("shard", "pos"),
     """WITH h AS (
         |  SELECT doc_id,
         |    CAST(('0x' || substr(md5('shuffle:1:' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT)
@@ -213,7 +218,7 @@ object SamplingRows {
     // proportional to target weights (en 0.5 / zh 0.3 / others 0.2 each);
     // the scarcest-relative-to-weight language is kept in full.
     QueryDef("sample_mix", (s, dir) => Sampling.mixToWeights(docs(s, dir),
-      Map("en" -> 0.5, "zh" -> 0.3), 0.2),
+      Map("en" -> 0.5, "zh" -> 0.3), 0.2).orderBy("doc_id"),
     // mirrors mixToWeights exactly: same CASE weights, same division
     // order for k and rate (IEEE doubles match bit-for-bit), same salted
     // hash threshold at rate * 2^48
@@ -241,7 +246,8 @@ object SamplingRows {
     // Quality-weighted epoch repetition: 3/2/1 copies by quality tier
     // (the "repeat high-quality data more" mix-construction step). Pure
     // map + explode, zero shuffle.
-    QueryDef("sample_epochs", (s, dir) => Sampling.epochRepeat(docs(s, dir)),
+    QueryDef("sample_epochs", (s, dir) =>
+      Sampling.epochRepeat(docs(s, dir)).orderBy("doc_id", "epoch_copy"),
     // quality expression inlined from the text_quality_score oracle; the
     // tier CASE guards NULL/NaN explicitly so a degenerate doc lands in
     // the 1-copy tier on both engines regardless of DuckDB's
@@ -270,7 +276,7 @@ object SamplingRows {
     // ratio-of-sums — see Sampling.importanceSelect's scaladoc for why
     // not sum-of-logs).
     QueryDef("sample_importance", (s, dir) =>
-      Sampling.importanceSelect(docs(s, dir)),
+      Sampling.importanceSelect(docs(s, dir)).orderBy("doc_id"),
     """WITH toks AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
         |  FROM documents

@@ -582,6 +582,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     """WITH scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -635,6 +636,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     "WITH " + LshBucketChain +
       """, qprobe AS (
@@ -672,6 +674,7 @@ object SimilarityRows {
       Similarity.lshTopK(emb, emb.where(col("vec_id") < 20), 5,
         multiProbe = true, numTables = 12, planesPerTable = 4)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     "WITH " + lshBucketChain(48, 4) +
       """, qprobe AS (
@@ -704,6 +707,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     "WITH " + IvfChain +
       """
@@ -779,6 +783,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.ivfTopKAuto(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     "WITH " + AutoIvfChain +
       """
@@ -797,7 +802,8 @@ object SimilarityRows {
     // whole graph hash-compares.
     QueryDef("sim_knn_graph", (s, dir) =>
       Similarity.knnGraphAuto(
-        s.read.parquet(s"$dir/embeddings.parquet"), 3),
+        s.read.parquet(s"$dir/embeddings.parquet"), 3)
+        .orderBy("vec_id", "rank"),
     // k-NN graph over the auto chain's `assigned`/`nrm` CTEs (fresh CTE
     // names — the chain's own probes/scored/ranked stay unused)
     "WITH " + AutoIvfChain +
@@ -892,6 +898,7 @@ object SimilarityRows {
         .select(col("vec_id"), col("embedding"))
       Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     // the identical IvfChain run over a dequantized-int8 CTE — the
     // composed storage+search path, top-k hash-compared end-to-end
@@ -928,6 +935,7 @@ object SimilarityRows {
         .select(col("vec_id"), col("embedding"))
       Similarity.ivfTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        .orderBy("query_id", "rank")
     },
     // managed variant: stored codes round-trip the inline arithmetic
     // exactly (int codes + double scale survive parquet bit-for-bit), so
@@ -988,6 +996,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.adcTopK(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     "WITH " + PqChain + PqAdcTail +
       """
@@ -1028,6 +1037,7 @@ object SimilarityRows {
         s, emb, s"$dir/embeddings.parquet", "registry")
       graft.ops.ProductQuantization.adcSearch(codes, cb,
         emb.where(col("vec_id") < 20), 5)
+        .orderBy("query_id", "rank")
     },
     // Managed = stored codebooks/codes, which are bit-identical to a
     // fresh train+encode — the oracle is sim_pq_adc's verbatim.
@@ -1068,6 +1078,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.ivfPqTopK(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     // IVF coarse chain + nrm-free PQ chains + ADC-within-cells tail.
     "WITH " + IvfChain + ", " +
@@ -1102,6 +1113,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.ivfPqTopKAuto(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     // Auto dials recomputed in SQL: nLists from count(*), nProbe from
     // sqrt(nLists) — the composed chains otherwise identical.
@@ -1131,6 +1143,7 @@ object SimilarityRows {
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)),
         fullRefine = true)
+        .orderBy("query_id", "rank")
     },
     // The full-refine opt-in: the unsampled auto chain.
     "WITH " + AutoIvfPqChain + ", " +
@@ -1151,6 +1164,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.ivfPqTopKAutoSampled(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     // Sampled coarse training: the auto chain with the Lloyd refine
     // restricted to every stride-th vec_id (stride recomputed from
@@ -1186,6 +1200,7 @@ object SimilarityRows {
           s, emb, s"$dir/embeddings.parquet", "registry")
       graft.ops.ProductQuantization.ivfPqSearch(coded, cb, local,
         emb.where(col("vec_id") < 20), 5, nProbe)
+        .orderBy("query_id", "rank")
     },
     // Managed index == sampled-auto build, read back from parquet
     // stores: same oracle verbatim (the sim_pq_managed precedent).
@@ -1204,7 +1219,8 @@ object SimilarityRows {
       graft.ops.ProductQuantization.ivfPqResidualTopK(
         s.read.parquet(s"$dir/embeddings.parquet"),
         s.read.parquet(s"$dir/embeddings.parquet")
-          .where(col("vec_id") < 20), 5, dimHint = Some(64)),
+          .where(col("vec_id") < 20), 5, dimHint = Some(64))
+        .orderBy("query_id", "rank"),
     // Residual IVFPQ: coarse chain -> residual CTE -> residual-trained
     // PQ chains -> cross-term ADC tail (see ResAdcTail).
     residualIvfPqSql(IvfChain) +
@@ -1251,6 +1267,7 @@ object SimilarityRows {
           s, emb, s"$dir/embeddings.parquet", "registry")
       graft.ops.ProductQuantization.ivfPqResidualSearch(coded, cb, local,
         cellSide, emb.where(col("vec_id") < 20), 5, nProbe)
+        .orderBy("query_id", "rank")
     },
     // Managed residual index == sampled-auto residual build read back
     // from parquet stores: same oracle verbatim (the
@@ -1289,6 +1306,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       graft.ops.Quantization.hammingTopK(
         emb, emb.where(col("vec_id") < 20), 5)
+        .orderBy("query_id", "rank")
     },
     "WITH " + BinChain + HammingTail +
       """
@@ -1321,6 +1339,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       graft.ops.Quantization.ivfHammingTopK(
         emb, emb.where(col("vec_id") < 20), 5)
+        .orderBy("query_id", "rank")
     },
     // IVF coarse chain + nrm-free sign codes + cell-bounded Hamming
     // prefilter + the shared exact-refine tail.
@@ -1351,6 +1370,7 @@ object SimilarityRows {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       graft.ops.Quantization.ivfHammingTopKAuto(
         emb, emb.where(col("vec_id") < 20), 5)
+        .orderBy("query_id", "rank")
     },
     "WITH " + SampledIvfPqChain + ", " +
       binChain(includeNrm = false) + IvfHammingTail +
@@ -1371,6 +1391,7 @@ object SimilarityRows {
       graft.ops.Quantization.ivfHammingSearch(
         codes, local, emb, emb.where(col("vec_id") < 20), 5,
         rerank = 200, nProbe = nProbe)
+        .orderBy("query_id", "rank")
     },
     // Warm store == fresh sampled-auto build (deterministic training,
     // bit-exact parquet round-trip): same replay.
@@ -1392,6 +1413,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.cascadeTopK(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     // Three-tier cascade: whole-corpus Hamming ranking (HammingTail) ->
     // ADC over the top-200 candidates only (CascadeAdcTail) -> the
@@ -1423,6 +1445,7 @@ object SimilarityRows {
         s, emb, s"$dir/embeddings.parquet", "registry")
       graft.ops.ProductQuantization.cascadeTopK(
         emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
+        .orderBy("query_id", "rank")
     },
     // Managed = stage-2 codes read from the fingerprinted store, which
     // round-trip bit-exactly — sim_cascade_topk's oracle verbatim.
@@ -1441,6 +1464,7 @@ object SimilarityRows {
       graft.ops.ProductQuantization.cascadeTopKAuto(
         emb, emb.where(col("vec_id") < 20), 5,
         graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
+        .orderBy("query_id", "rank")
     },
     // Auto cascade: both keep budgets recomputed from count(*) in-query
     // (`greatest` + `ceil(sqrt(...))` are IEEE-exact on integer counts —
@@ -1475,6 +1499,7 @@ object SimilarityRows {
         s, emb, s"$dir/embeddings.parquet", "registry")
       graft.ops.ProductQuantization.cascadeTopKAuto(
         emb, emb.where(col("vec_id") < 20), 5, cb, codes = Some(codes))
+        .orderBy("query_id", "rank")
     },
     // Stored stage-2 codes round-trip bit-exactly — sim_cascade_auto's
     // replay verbatim.

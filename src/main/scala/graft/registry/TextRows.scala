@@ -796,6 +796,7 @@ object TextRows {
       // blocked posting families).
       graft.ops.QualityClassifier.scoreQuery(d,
         graft.ops.QualityClassifier.train(d))
+        .orderBy("doc_id")
     },
     "WITH " + qualityTrainChain(6)),
     // ... and the model MANAGED (the bpemerges precedent): weights
@@ -808,6 +809,7 @@ object TextRows {
       graft.ops.QualityClassifier.scoreQuery(d,
         graft.ops.QualityClassifier.weightsStore(s, d,
           s"$dir/documents.parquet"))
+        .orderBy("doc_id")
     },
     // The stored model is train(3)'s weights round-tripped exactly —
     // the identical replay.
@@ -828,6 +830,7 @@ object TextRows {
       // measured a win (the blocked posting families).
       graft.ops.DomainClassifier.scoreQuery(d,
         graft.ops.DomainClassifier.trainCentroids(d))
+        .orderBy("doc_id")
     },
     domainTrainSql),
     // ... centroids MANAGED (the qualweights precedent): a warm call
@@ -838,6 +841,7 @@ object TextRows {
       graft.ops.DomainClassifier.scoreQuery(d,
         graft.ops.DomainClassifier.centroidStore(s, d,
           s"$dir/documents.parquet"))
+        .orderBy("doc_id")
     },
     // stored centroids round-trip exactly — identical replay
     domainTrainSql),
@@ -1171,6 +1175,7 @@ object TextRows {
       val d = docs(s, dir)
       graft.ops.LanguageModel.scoreQuery(d,
         graft.ops.LanguageModel.countsFrame(d))
+        .orderBy("doc_id")
     },
     "WITH " + lmChain("TRUE", "TRUE")),
     // ... the model MANAGED (the lmcounts store family): counts trained
@@ -1182,6 +1187,7 @@ object TextRows {
       graft.ops.LanguageModel.scoreQuery(d,
         graft.ops.LanguageModel.countsStore(s, d,
           s"$dir/documents.parquet"))
+        .orderBy("doc_id")
     },
     "WITH " + lmChain("TRUE", "TRUE")),
     // ... and scored HELD-OUT: the eval split (doc_id % 17 == 0, the
@@ -1194,6 +1200,7 @@ object TextRows {
         d.where(col("doc_id") % 17 === 0),
         graft.ops.LanguageModel.countsFrame(
           d.where(col("doc_id") % 17 =!= 0)))
+        .orderBy("doc_id")
     },
     "WITH " +
       lmChain("doc_id % 17 <> 0", "doc_id % 17 = 0"))

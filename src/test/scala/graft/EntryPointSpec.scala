@@ -100,4 +100,19 @@ class EntryPointSpec extends SparkSuite {
       rows.foreach(name => assert(new java.io.File(s"$out/$name").isDirectory))
     } finally spark.conf.unset("graft.sigstore.dir")
   }
+
+  test("DumpPlans.formattedPlan normalizes two builds of one row in one " +
+    "session to the same string") {
+    // mm_decode's plan carries expression ids and a typed-lambda class
+    // name, the tokens that differ between builds
+    def build = SparkEntry.queries("mm_decode")(spark, "/root/testdata/sf0.001")
+    val (a, b) = (build, build)
+    def raw(df: org.apache.spark.sql.DataFrame) = df.queryExecution
+      .explainString(org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+    assert(raw(a) != raw(b), "two builds should differ before normalizing")
+    val plan = DumpPlans.formattedPlan(a)
+    assert(plan == DumpPlans.formattedPlan(b))
+    assert(plan.contains("$$Lambda@<hash>") && plan.contains("#1"), plan)
+  }
 }

@@ -373,6 +373,12 @@ class SinkWriteSpec extends SparkSuite {
 
   test("strict-parity whole-object parquet compression: object bytes are " +
     "codec(parquet), not parquet(codec) — S3SinkTask.java:135-140 layout") {
+    // the task-local spool (and the `.crc` sidecar Hadoop's checksummed
+    // local file system writes next to it) must not outlive the object
+    def spoolEntries = Option(new java.io.File(sys.props("java.io.tmpdir"))
+      .list()).getOrElse(Array.empty[String])
+      .filter(_.contains("graft-parquet-spool")).toSet
+    val spoolsBefore = spoolEntries
     for (codec <- CompressionType.all if codec != CompressionType.None) {
       val dir = tmpDir(s"parquet-whole-${codec.name}")
       val cfg = config(
@@ -405,6 +411,8 @@ class SinkWriteSpec extends SparkSuite {
         assert(back(1).getAs[String]("value") == "test-value-1")
       } finally { in.close(); Files.deleteIfExists(plain) }
     }
+    val leaked = spoolEntries -- spoolsBefore
+    assert(leaked.isEmpty, s"parquet spool files left behind: $leaked")
   }
 
   test("parquet round-trip matrix: field orders x envelope on/off x all " +

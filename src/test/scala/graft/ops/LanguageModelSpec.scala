@@ -22,7 +22,7 @@ class LanguageModelSpec extends SparkSuite {
     //       sum 3041666 over 5 tokens -> 608333
     // doc2: 375000 + 1000000 + 333333 = 1708333 over 3 -> 569444
     val out = LanguageModel.scoreQuery(fixture,
-      LanguageModel.countsFrame(fixture)).collect()
+      LanguageModel.countsFrame(fixture)).orderBy("doc_id").collect()
     assert(out.toSeq == Seq(
       Row(1L, 5L, 4L, 0L, 608333L),
       Row(2L, 3L, 2L, 0L, 569444L)))
@@ -76,10 +76,10 @@ class LanguageModelSpec extends SparkSuite {
     val docs = spark.read.parquet(s"$dir/docs.parquet")
     val root = tmpDir("lmstore")
     val direct = LanguageModel.scoreQuery(docs,
-      LanguageModel.countsFrame(docs)).collect().toSeq
+      LanguageModel.countsFrame(docs)).orderBy("doc_id").collect().toSeq
     val stored = LanguageModel.scoreQuery(docs,
       LanguageModel.countsStore(spark, docs, s"$dir/docs.parquet",
-        Some(root))).collect().toSeq
+        Some(root))).orderBy("doc_id").collect().toSeq
     assert(stored == direct)
     // and the store is served, not rebuilt: a second call must read the
     // same directory (content-identical output either way; the directory

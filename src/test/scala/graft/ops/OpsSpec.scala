@@ -99,9 +99,11 @@ class OpsSpec extends SparkSuite {
     val stored = Dedup.bandBucketStore(spark, old, src.getPath, "spec",
       Some(root))
     val fresh = Dedup.crossCorpusPairs(
-      docsDf.where(col("doc_id") % 2 === 1), old).collect().toSeq
+      docsDf.where(col("doc_id") % 2 === 1), old)
+      .orderBy("new_id", "old_id").collect().toSeq
     val viaStore = Dedup.crossCorpusPairs(
-      docsDf.where(col("doc_id") % 2 === 1), old, Some(stored)).collect().toSeq
+      docsDf.where(col("doc_id") % 2 === 1), old, Some(stored))
+      .orderBy("new_id", "old_id").collect().toSeq
     assert(viaStore == fresh && viaStore.nonEmpty)
     // second call must reload the same store, not rebuild: the parquet
     // files on disk are byte-identical before and after. The store path
@@ -347,9 +349,10 @@ class OpsSpec extends SparkSuite {
       (2L, Array(0.0f, 0.98f, 0.2f)),
       (3L, Array(0.0f, 0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val auto = Dedup.semanticDedupAuto(vecs, 0.95).collect().map(_.toSeq)
-    val fixed = Dedup.semanticDedup(vecs, 0.95, nLists = 16)
+    val auto = Dedup.semanticDedupAuto(vecs, 0.95).orderBy("vec_id")
       .collect().map(_.toSeq)
+    val fixed = Dedup.semanticDedup(vecs, 0.95, nLists = 16)
+      .orderBy("vec_id").collect().map(_.toSeq)
     assert(auto.toSeq == fixed.toSeq)
   }
 
@@ -363,7 +366,7 @@ class OpsSpec extends SparkSuite {
       (3L, Array(0.0f, 0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
     val (res, before) = CacheScope.run {
-      val res = Dedup.semanticDedup(vecs, 0.95, nLists = 4)
+      val res = Dedup.semanticDedup(vecs, 0.95, nLists = 4).orderBy("vec_id")
       val rows = res.collect().map(_.toSeq).toList
       assert(!spark.sharedState.cacheManager.isEmpty) // assignment cache live
       (res, rows)
@@ -480,7 +483,8 @@ class OpsSpec extends SparkSuite {
       (3L, Array(0.0f, 1.0f), 0))
       .toDF("vec_id", "embedding", "label")
     val r = Similarity.bruteForceTopK(vecs, vecs.where($"vec_id" === 0), 3)
-      .select("neighbor_id").as[Long].collect().toList
+      .orderBy("query_id", "rank").select("neighbor_id").as[Long]
+      .collect().toList
     assert(r == List(1L, 2L, 3L))
   }
 
@@ -494,7 +498,7 @@ class OpsSpec extends SparkSuite {
       (2L, Array(0.0f, 0.0f), 0)) // zero vector
       .toDF("vec_id", "embedding", "label")
     val rows = Similarity.bruteForceTopK(vecs, vecs.where($"vec_id" === 0), 3)
-      .collect()
+      .orderBy("query_id", "rank").collect()
     // zero vector is last (NULL cos sorts after real scores) with NULL cos
     assert(rows.map(_.getLong(1)).toList == List(1L, 2L))
     assert(rows.last.isNullAt(rows.last.fieldIndex("cos")))
@@ -686,7 +690,7 @@ class OpsSpec extends SparkSuite {
     assert(codes(3L) == Long.MinValue) // bit 63 alone
     assert(codes(4L) == 0L)
     val top = Quantization.hammingTopK(vecs, vecs.where(col("vec_id") === 0L), 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .orderBy("query_id", "rank").collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(top.toList == List((1L, 1L, 0L), (2L, 4L, 32L)),
       s"expected dup at distance 0 then zero-vec at 32, got ${top.toList}")
     val rr = Quantization.hammingTopK(vecs, vecs.where(col("vec_id") === 0L),
@@ -721,13 +725,13 @@ class OpsSpec extends SparkSuite {
     val root = tmpDir("ivfham-store")
     val q = emb.where(col("vec_id") < 3)
     val fresh = Quantization.ivfHammingTopKAuto(emb, q, 5)
-      .collect().map(_.toSeq).toSeq
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     for (_ <- 1 to 2) { // second pass serves everything from the store
       val (codes, local, nProbe) = Quantization.ivfHammingStore(
         spark, emb, srcDir, "ht", Some(root))
       val managed = Quantization.ivfHammingSearch(
         codes, local, emb, q, 5, rerank = 200, nProbe = nProbe)
-        .collect().map(_.toSeq).toSeq
+        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
       assert(managed == fresh,
         "warm IVF-Hamming store must search identically to a fresh build")
     }

@@ -230,13 +230,13 @@ class PqSpec extends SparkSuite {
     val q = emb.where(col("vec_id") < 2)
     val fresh = ProductQuantization
       .adcTopK(emb, q, 2, ProductQuantization.train(emb, m = 4, k = 2))
-      .collect().map(_.toSeq).toSeq
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     // second call serves both artifacts from the published store
     for (_ <- 1 to 2) {
       val (codes, cb) = ProductQuantization.pqStore(
         spark, emb, src, "t", Some(root), m = 4, k = 2)
       val managed = ProductQuantization.adcSearch(codes, cb, q, 2)
-        .collect().map(_.toSeq).toSeq
+        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
       assert(managed == fresh)
     }
     val names = new java.io.File(root).listFiles().map(_.getName)
@@ -277,13 +277,13 @@ class PqSpec extends SparkSuite {
     val fresh = ProductQuantization
       .ivfPqTopKAutoSampled(emb, q, 2,
         ProductQuantization.train(emb, m = 4, k = 2))
-      .collect().map(_.toSeq).toSeq
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     for (_ <- 1 to 2) { // second pass serves everything from the store
       val (coded, cb, local, nProbe) = ProductQuantization.ivfPqStore(
         spark, emb, src, "t", Some(root), m = 4, k = 2)
       val managed = ProductQuantization
         .ivfPqSearch(coded, cb, local, q, 2, nProbe)
-        .collect().map(_.toSeq).toSeq
+        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
       assert(managed == fresh)
     }
     val names = new java.io.File(root).listFiles().map(_.getName)
@@ -303,14 +303,14 @@ class PqSpec extends SparkSuite {
     val fresh = ProductQuantization
       .ivfPqResidualTopKAuto(emb, q, 2, m = 4, kCodes = 2,
         dimHint = Some(8))
-      .collect().map(_.toSeq).toSeq
+      .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     for (_ <- 1 to 2) { // second pass serves everything from the store
       val (coded, cb, local, cellSide, nProbe) =
         ProductQuantization.ivfPqResidualStore(
           spark, emb, src, "t", Some(root), m = 4, k = 2)
       val managed = ProductQuantization
         .ivfPqResidualSearch(coded, cb, local, cellSide, q, 2, nProbe)
-        .collect().map(_.toSeq).toSeq
+        .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
       assert(managed == fresh)
       // the rerank shape over the same warm state matches brute force
       // on the pairs it keeps (exact cosines, the adcTopK contract)

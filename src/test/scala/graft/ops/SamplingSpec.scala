@@ -108,7 +108,8 @@ class SamplingSpec extends SparkSuite {
   test("shuffleOrder is a per-shard bijection, reproducible, and " +
     "epoch-independent") {
     val c = corpus(300)
-    def run(epoch: Int) = Sampling.shuffleOrder(c, epoch).collect()
+    def run(epoch: Int) = Sampling.shuffleOrder(c, epoch)
+      .orderBy("shard", "pos").collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))) // shard,pos,doc
     val e1 = run(1)
     // every doc appears exactly once; within each shard, pos is 1..count
@@ -135,7 +136,7 @@ class SamplingSpec extends SparkSuite {
 
   test("stratifiedSample keeps ~rate% per stratum and only sampled rows") {
     val kept = Sampling.stratifiedSample(corpus(600),
-      Map("en" -> 50, "zh" -> 30), defaultPct = 20).collect()
+      Map("en" -> 50, "zh" -> 30), defaultPct = 20).orderBy("doc_id").collect()
     val byLang = kept.groupBy(_.getAs[String]("lang")).view.mapValues(_.length)
     // 200 docs per lang; binomial 3σ ≈ ±0.10-ish slack per stratum
     assert(byLang("en") > 70 && byLang("en") < 130, byLang)
@@ -143,7 +144,7 @@ class SamplingSpec extends SparkSuite {
     assert(byLang("de") > 15 && byLang("de") < 65, byLang)
     // the kept set is reproducible: same call, same rows
     val again = Sampling.stratifiedSample(corpus(600),
-      Map("en" -> 50, "zh" -> 30), defaultPct = 20).collect()
+      Map("en" -> 50, "zh" -> 30), defaultPct = 20).orderBy("doc_id").collect()
     assert(kept.map(_.getLong(0)).toSeq == again.map(_.getLong(0)).toSeq)
   }
 

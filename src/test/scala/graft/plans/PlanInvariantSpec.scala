@@ -206,44 +206,105 @@ class PlanInvariantSpec extends SparkSuite {
   test("text, curation and substring operators do not sort their output: " +
     "no range exchange in the operator's plan, exactly one (the output " +
     "sort) in its registry row's") {
+    // The table covers every operator family: an operator sorts only
+    // when its contract needs order (a window or a `limit`), and each
+    // registry row ends in one total sort of its own.
     import org.apache.spark.sql.functions.col
-    import graft.ops.{Curation, Dedup, TextAnalysis}
+    import graft.CacheScope
+    import graft.ops._
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val q = emb.where(col("vec_id") < 20)
     val lined = Curation.lineified(d)
     val old = d.where(col("doc_id") % 2 === 0)
-    val ops = Seq(
-      "text_quality_score" -> TextAnalysis.qualityQuery(d),
-      "text_lang_id" -> TextAnalysis.langIdQuery(d),
-      "text_commonness" -> TextAnalysis.commonnessQuery(d),
-      "text_c4_filters" -> TextAnalysis.c4FilterQuery(d),
-      "text_tfidf_top" -> TextAnalysis.tfidfTopQuery(d, 3),
-      "text_decontaminate" -> Curation.decontaminate(d),
-      "text_decontaminate_bloom" -> Curation.decontaminateCross(d),
-      "text_repetition" -> Curation.repetitionStats(d),
-      "dedup_chunks" -> Curation.chunkDedup(d, 10),
-      "text_length_outliers" -> Curation.lengthOutliers(d),
-      "dedup_lines" -> Curation.lineDedup(lined, 3),
-      "dedup_lines_incremental" -> Curation.lineDedupIncremental(
-        lined.where(col("doc_id") % 2 === 1),
-        Curation.lineDf(lined.where(col("doc_id") % 2 === 0))
-          .where(col("df") >= 3)),
-      "dedup_substring" -> Dedup.substringRuns(d, 8),
-      "dedup_substring_incremental" -> Dedup.substringRunsIncremental(
-        d.where(col("doc_id") % 2 === 1), old,
-        Dedup.docWindows(old.select(col("doc_id"),
-          TextAnalysis.tokens(col("text")).as("_t")), 8), 8),
-      "dedup_substring_remove" -> Dedup.substringRemove(d, 8),
-      "dedup_substring_remove_text" -> Dedup.substringRemoveText(d, 8))
+    val odd = d.where(col("doc_id") % 2 === 1)
+    // the incremental and store rows publish stores: keep them out of the
+    // shared root
+    val storeRoot = tmpDir("order-store")
+    spark.conf.set("graft.sigstore.dir", storeRoot)
     def ranges(p: String) = "rangepartitioning".r.findAllIn(p).size
-    for ((row, df) <- ops)
-      assert(ranges(df.queryExecution.executedPlan.toString) == 0,
-        s"the operator behind $row sorts its output")
-    // the incremental rows publish stores: keep them out of the shared root
-    spark.conf.set("graft.sigstore.dir", tmpDir("order-store"))
-    try for ((row, _) <- ops)
-      assert(ranges(planOf(row)) == 1,
-        s"$row must end in exactly one total sort")
-    finally spark.conf.unset("graft.sigstore.dir")
+    try CacheScope.run {
+      val cb = ProductQuantization.train(emb, 16, 32, dimHint = Some(64))
+      val ops = Seq(
+        "text_quality_score" -> TextAnalysis.qualityQuery(d),
+        "text_lang_id" -> TextAnalysis.langIdQuery(d),
+        "text_commonness" -> TextAnalysis.commonnessQuery(d),
+        "text_c4_filters" -> TextAnalysis.c4FilterQuery(d),
+        "text_tfidf_top" -> TextAnalysis.tfidfTopQuery(d, 3),
+        "text_decontaminate" -> Curation.decontaminate(d),
+        "text_decontaminate_bloom" -> Curation.decontaminateCross(d),
+        "text_repetition" -> Curation.repetitionStats(d),
+        "dedup_chunks" -> Curation.chunkDedup(d, 10),
+        "text_length_outliers" -> Curation.lengthOutliers(d),
+        "dedup_lines" -> Curation.lineDedup(lined, 3),
+        "dedup_lines_incremental" -> Curation.lineDedupIncremental(
+          lined.where(col("doc_id") % 2 === 1),
+          Curation.lineDf(lined.where(col("doc_id") % 2 === 0))
+            .where(col("df") >= 3)),
+        "dedup_substring" -> Dedup.substringRuns(d, 8),
+        "dedup_substring_incremental" -> Dedup.substringRunsIncremental(
+          odd, old, Dedup.docWindows(old.select(col("doc_id"),
+            TextAnalysis.tokens(col("text")).as("_t")), 8), 8),
+        "dedup_substring_remove" -> Dedup.substringRemove(d, 8),
+        "dedup_substring_remove_text" -> Dedup.substringRemoveText(d, 8),
+        "dedup_exact" -> Dedup.exact(d),
+        "dedup_minhash_lsh" -> Dedup.minhashLshPairs(d),
+        "dedup_incremental" -> Dedup.crossCorpusPairs(odd, old),
+        "dedup_simhash" -> Dedup.simhashPairs(d),
+        "dedup_cluster_keep" -> Dedup.clusterKeepList(d),
+        "dedup_ngram_jaccard" -> Dedup.blockedNgramJaccard(d, 0.1),
+        "dedup_containment" -> Dedup.blockedContainment(d, 0.01),
+        "dedup_semantic" -> Dedup.semanticDedup(emb, 0.35),
+        "decontaminate_semantic" -> Dedup.semanticDecontaminate(emb, q, 0.8,
+          excludeSelfIds = true),
+        "dedup_embedding" -> Dedup.embeddingPairs(emb, 0.35),
+        "sim_topk_bruteforce" -> Similarity.bruteForceTopK(emb, q, 5),
+        "sim_ann_lsh" -> Similarity.lshTopK(emb, q, 5),
+        "sim_knn_graph" -> Similarity.knnGraph(emb, 3),
+        "sim_ann_ivf" -> Similarity.ivfTopK(emb, q, 5),
+        "sim_hamming_topk" -> Quantization.hammingTopK(emb, q, 5),
+        "sim_hamming_topk" -> Quantization.hammingTopK(emb, q, 5,
+          rerank = 200),
+        "sim_ann_ivf_hamming" -> Quantization.ivfHammingTopK(emb, q, 5),
+        "sim_pq_adc" -> ProductQuantization.adcTopK(emb, q, 5, cb),
+        "sim_cascade_topk" -> ProductQuantization.cascadeTopK(emb, q, 5, cb),
+        "sample_split" -> Sampling.assignSplit(d),
+        "sample_shuffle" -> Sampling.shuffleOrder(d, 1),
+        "sample_mix" -> Sampling.mixToWeights(d,
+          Map("en" -> 0.5, "zh" -> 0.3), 0.2),
+        "sample_stratified" -> Sampling.stratifiedSample(d,
+          Map("en" -> 50, "zh" -> 30), 20),
+        "pack_token_budget" -> Sampling.packByTokenBudget(d, 2000L),
+        "sample_quota" -> Sampling.quotaCap(d, 40),
+        "sample_epochs" -> Sampling.epochRepeat(d),
+        "sample_importance" -> Sampling.importanceSelect(d),
+        "mm_binary_meta" -> Multimodal.metaQuery(spark, sfDir),
+        "mm_dedup_binary" -> Multimodal.dedupBinary(
+          Multimodal.mediaFromEvents(spark, sfDir)),
+        "mm_dedup_phash" -> Multimodal.dedupPhash(
+          Multimodal.phashLake(spark, sfDir), 3),
+        "mm_dedup_audio_auto" -> Multimodal.dedupAudio(
+          Multimodal.audioLake(spark, sfDir), 3),
+        "mm_dedup_video_auto" -> Multimodal.dedupVideo(
+          Multimodal.videoLake(spark, sfDir), 3),
+        "mm_dedup_media_incremental" -> Multimodal.dedupMediaIncremental(
+          spark, sfDir, storeRoot = Some(storeRoot)),
+        "pipeline_media_report" -> Multimodal.mediaReport(spark, sfDir),
+        "text_domain_trained" -> DomainClassifier.scoreQuery(d,
+          DomainClassifier.trainCentroids(d)),
+        "text_quality_trained" -> QualityClassifier.scoreQuery(d,
+          QualityClassifier.train(d)),
+        "text_lm_score" -> LanguageModel.scoreQuery(d,
+          LanguageModel.countsFrame(d)),
+        "pipeline_store_report" -> FingerprintStore.report(spark,
+          Some(storeRoot), ""))
+      for ((row, df) <- ops)
+        assert(ranges(df.queryExecution.executedPlan.toString) == 0,
+          s"the operator behind $row sorts its output")
+      for (row <- ops.map(_._1).distinct)
+        assert(ranges(planOf(row)) == 1,
+          s"$row must end in exactly one total sort")
+    } finally spark.conf.unset("graft.sigstore.dir")
   }
 
   test("PQ encode is map-only (no Exchange) and ADC scoring is the " +
