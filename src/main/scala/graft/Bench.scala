@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The registry bench: `Bench` times every `SparkEntry.queries` row and
   * writes the suite artifact; `Bench q1 q2 ...` times just the named
@@ -137,62 +136,11 @@ object Bench {
       if (nErrors > 0) sys.exit(1)
       return
     }
-    // Sink-writer throughput: the one genuinely custom write path
-    // (GroupFileWriter's group-per-object streaming) timed per codec AND
-    // per line format (JSONL + CSV — the two line-oriented reference
-    // formats) so a writer regression shows up in BENCH, not only in byte
-    // goldens. 200k ~120-byte lines across 64 groups to local FS per run;
-    // each entry reports seconds and uncompressed-input MB/s (bytes
-    // processed per second — codec-comparable, unlike output MB/s which
-    // would reward weak compression).
-    val sinkWrite = {
-      import graft.config.{CompressionType => C, FormatType}
-      val base = java.nio.file.Files.createTempDirectory("graft_sinkbench")
-      val nRows = 200000L
-      val nGroups = 64
-      def df(fmt: FormatType) = {
-        val line = fmt match {
-          case FormatType.Csv =>
-            // offset,base64(payload) — the reference's raw comma-join shape
-            concat(col("id").cast("string"), lit(","),
-              lpad(md5(col("id").cast("string")), 96, "x"))
-          case _ =>
-            concat(lit("{\"offset\":"), col("id").cast("string"),
-              lit(",\"payload\":\""),
-              lpad(md5(col("id").cast("string")), 96, "x"), lit("\"}"))
-        }
-        spark.range(nRows)
-          .select(col("id").as("offset"),
-            concat(lit("bench-topic-"), (col("id") % nGroups).cast("string"),
-              lit("." + fmt.name)).as("_filename"),
-            line.as("_line"))
-      }
-      // uncompressed input bytes (lines + newlines) per format, for MB/s
-      val fmts = Seq(FormatType.Jsonl, FormatType.Csv)
-      val fmtBytes = fmts.map { f =>
-        f -> df(f).agg(sum(length(col("_line")) + 1)).head().getLong(0)
-      }.toMap
-      val codecs = Seq(C.None, C.Gzip, C.Snappy, C.Zstd)
-      val times = for (f <- fmts; c <- codecs) yield {
-        val out = base.resolve(f.name + "_" + c.name).toUri.toString
-        val t0 = System.nanoTime()
-        graft.formats.GroupFileWriter.writeLines(df(f), out, f, c)
-        val sec = (System.nanoTime() - t0) / 1e9
-        (s"${f.name}_${c.name}", sec, fmtBytes(f) / 1e6 / sec)
-      }
-      // best-effort cleanup; the JVM exits right after either way
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-      (times, nRows, nGroups)
-    }
     val loadAfter = loadAvg()
     // The driver captures only a BOUNDED tail of the stdout (2000 chars in
     // rounds 17-18 — both rounds' BENCH_r{N}.json came back "parsed": null
     // because the full per-query telemetry line overflowed it). Split the
-    // output: the FULL artifact (per-query medians, reps, gc, sink table)
+    // output: the FULL artifact (per-query medians, reps, gc)
     // goes to a file (GRAFT_BENCH_JSON, default bench_runs/bench_full.json
     // — what bench_reps.sh installs as run{i}.json), and stdout's LAST
     // line is a compact totals JSON guaranteed to fit the tail window.
@@ -220,17 +168,12 @@ object Bench {
           v.err.fold("")(e => ",\"err\":" + jstr(e)) + "}"
       }
       .mkString("{", ",", "}")
-    val sw = (sinkWrite._1.map { case (k, sec, mbs) =>
-      "\"" + k + "\":{\"sec\":" + f3(sec) + ",\"mb_s\":" + f3(mbs) + "}"
-    } ++
-      Seq("\"rows\":" + sinkWrite._2, "\"groups\":" + sinkWrite._3))
-      .mkString("{", ",", "}")
     val suiteTotal = total(results.map(_._2))
     spark.stop()
     // n_queries mirrors Verify's COUNTS line into the bench artifact, so
     // BENCH_r{N}.json is self-describing about suite size (doc counts
     // cite COUNTS; the bench JSON can now be cross-checked against it)
-    val fullJson = s"""{"metric":"total","value":${f3(suiteTotal)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors,"action":"plan","queries":$qs,"telemetry":$tel,"sink_write":$sw,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":${f3(suiteTotal)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors,"action":"plan","queries":$qs,"telemetry":$tel,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_JSON", "bench_runs/bench_full.json"))
     Option(fullPath.getParent).foreach(java.nio.file.Files.createDirectories(_))

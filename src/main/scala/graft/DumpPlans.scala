@@ -58,9 +58,9 @@ object DumpPlans {
     // nearest_centroid kernel projection (NO SortAggregate, NO cartesian,
     // no n×nLists expansion on the corpus side); the approx-percentile
     // gate must keep the exact variant's two-ObjectHashAggregate shape;
-    // mm_resize is a mapPartitions + projection pipeline
+    // mm_resize_real is a mapPartitions + projection pipeline
     "sim_ann_ivf_auto", "dedup_semantic_auto", "text_length_outliers_approx",
-    "mm_resize", "sink_avro_roundtrip",
+    "mm_resize_real", "sink_avro_roundtrip",
     // the knn graph must show: kernel projection (no SortAggregate), one
     // cell-equi sort-merge/shuffle join, WindowGroupLimit under the top-k
     "sim_knn_graph",
@@ -199,9 +199,7 @@ object DumpPlans {
     sb.append("`BroadcastHashJoin` for dimensions, single `Exchange` per logical\n")
     sb.append("regroup, `AsOfJoin` custom exec, no nested-loop joins anywhere.\n")
     for (name <- Headliners) {
-      val full = formattedPlan(SparkEntry.queries(name)(spark, sfDir))
-      val plan = if (full.length > 20000)
-        full.take(20000) + "\n… (truncated)\n" else full
+      val plan = formattedPlan(SparkEntry.queries(name)(spark, sfDir))
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     val rest = SparkEntry.queries.keys.toSeq.sorted

@@ -554,17 +554,16 @@ object Dedup {
         System.err.println(s"[cc] round $iter: $changed changed " +
           s"(${(System.nanoTime() / 1e9)})")
     }
-    // Opt-in convergence guard (GRAFT_CC_ASSERT_ROUNDS env or the
-    // graft.cc.assert.rounds system property): fail loudly if the loop
-    // needed more rounds than the bound — near-dup graphs have tiny
-    // diameters (≤ 4 rounds at sf0.1), so a jump in round count means a
-    // propagation regression (broken edge cache, wrong join key), which
-    // would otherwise surface only as silent slowness. Both checks
+    // Opt-in convergence guard (the graft.cc.assert.rounds system
+    // property): fail loudly if the loop needed more rounds than the
+    // bound — near-dup graphs have tiny diameters (≤ 4 rounds at sf0.1),
+    // so a jump in round count means a propagation regression (broken
+    // edge cache, wrong join key), which would otherwise surface only as
+    // silent slowness. Both checks
     // release FIRST: a failed check must not leak the edge table or the
     // labels into a session that catches the error.
     edges.unpersist()
-    val bound = sys.env.get("GRAFT_CC_ASSERT_ROUNDS")
-      .orElse(sys.props.get("graft.cc.assert.rounds")).map(_.toInt)
+    val bound = sys.props.get("graft.cc.assert.rounds").map(_.toInt)
     if (changed > 0 || bound.exists(iter > _)) free(labels)
     if (changed > 0) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIters rounds: " +

@@ -15,11 +15,12 @@ import org.apache.spark.sql.types._
   * RIFF/PCM chunk walk with the javax.sound codec as fallback
   * ([[AudioCodec]]), video through the same chunk walk one container
   * level deeper — AVI with uncompressed DIB or MJPEG frames
-  * ([[VideoCodec]]). The generic-payload stubs ([[MediaCodec.decodeStub]],
-  * [[frameSampleStub]], [[resizeStub]]) remain as the modality-agnostic
-  * plumbing fixtures (schema / batch-shape contract for codecs the JVM
-  * does not ship, e.g. H.264 — swapping in a JNI decoder changes no plan
-  * topology).
+  * ([[VideoCodec]]). Each media job has one implementation, on decoded
+  * payloads: [[resizeImages]], [[frameSampleReal]], [[extractFeaturesReal]]
+  * and the three fingerprint dedups. A codec the JVM does not ship (e.g.
+  * H.264) plugs in behind the same `mapPartitions` pass and changes no
+  * plan topology. [[mediaFromEvents]] feeds only the passes that need no
+  * decoder: [[metaQuery]] and [[dedupBinary]].
   */
 object Multimodal {
 
@@ -31,34 +32,6 @@ object Multimodal {
       format: String,   // sniffed container format
       payload: Array[Byte],
       byte_len: Long)
-
-  final case class MediaFeatures(
-      media_id: Long,
-      modality: String,
-      feature: Array[Float], // fixed FeatureDim-sized embedding
-      ok: Boolean)
-
-  val FeatureDim = 8
-
-  object MediaCodec {
-    /** STUB decode: real systems would decode the image/audio here. The
-      * deterministic fake folds payload bytes into FeatureDim accumulators —
-      * same shape, same batch behavior, no media libs required. Accumulates
-      * in double and narrows to float at the end, so the SQL oracle can
-      * reproduce it exactly (sum-order last-bit noise dies in the float
-      * cast). */
-    def decodeStub(payload: Array[Byte]): Array[Float] = {
-      val acc = new Array[Double](FeatureDim)
-      if (payload != null) {
-        var i = 0
-        while (i < payload.length) {
-          acc(i % FeatureDim) += (payload(i) & 0xff) / 255.0
-          i += 1
-        }
-      }
-      acc.map(_.toFloat)
-    }
-  }
 
   /** Adapt the `events` table into a fake media lake: props bytes as the
     * payload, modality derived from event_type. Stand-in for a real
@@ -77,67 +50,11 @@ object Multimodal {
       .as[MediaRecord]
   }
 
-  /** Batched feature extraction: one decode pass per partition, iterator in /
-    * iterator out (never materializes a partition). */
-  def extractFeatures(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { r =>
-        val feat = MediaCodec.decodeStub(r.payload)
-        MediaFeatures(r.media_id, r.modality, feat, ok = r.payload != null)
-      }
-    }
-  }
-
-  final case class ResizedMedia(
-      media_id: Long, width: Int, height: Int, payload: Array[Byte])
-
-  /** STUB resize: real systems decode + rescale pixels; the stub derives a
-    * deterministic fixed-size byte grid from the payload. The Spark-side
-    * contract (typed Dataset in/out, iterator batching) is the real part. */
-  def resizeStub(media: Dataset[MediaRecord], w: Int, h: Int): Dataset[ResizedMedia] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { r =>
-        val out = new Array[Byte](w * h)
-        if (r.payload != null && r.payload.nonEmpty) {
-          var i = 0
-          while (i < out.length) {
-            out(i) = r.payload(i % r.payload.length)
-            i += 1
-          }
-        }
-        ResizedMedia(r.media_id, w, h, out)
-      }
-    }
-  }
-
-  final case class Frame(media_id: Long, frame_no: Int, payload: Array[Byte])
-
-  /** STUB frame sampling for video payloads: emits every `stride`-th fixed-
-    * size chunk as a "frame" — a flatMap (1→N) iterator pipeline, the shape
-    * a real decoder would use. */
-  def frameSampleStub(media: Dataset[MediaRecord], frameBytes: Int,
-                      stride: Int): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    // Column predicate, not a typed lambda: the filter stays in the scan
-    // (pushed/codegen'd) instead of forcing DeserializeToObject first
-    media.filter(col("modality") === "video").mapPartitions { it =>
-      it.flatMap { r =>
-        if (r.payload == null) Iterator.empty
-        else r.payload.grouped(frameBytes).zipWithIndex
-          .filter(_._2 % stride == 0)
-          .map { case (chunk, i) => Frame(r.media_id, i, chunk) }
-      }
-    }
-  }
-
   // ------------------------------------------------------------------
-  // Real image decode (pure JVM, javax.imageio) — no stub. The sandbox
-  // has no OpenCV/PIL, but the JDK ships a real BMP/PNG codec; these ops
-  // run ACTUAL pixel decode + resample through the same mapPartitions
-  // shape as the stubs above, so the perception path is genuine while
-  // the plan topology stays identical.
+  // Real image decode (pure JVM, javax.imageio). The sandbox has no
+  // OpenCV/PIL, but the JDK ships a real BMP/PNG codec; these ops run
+  // ACTUAL pixel decode + resample inside one iterator-to-iterator
+  // mapPartitions pass.
   // ------------------------------------------------------------------
 
   /** A decoded grayscale image: pixel values 0..255, row-major top-down. */
@@ -153,27 +70,36 @@ object Multimodal {
       * symbolically. */
     def encodeGrayBmp(w: Int, h: Int, gray: Array[Int]): Array[Byte] = {
       require(gray.length == w * h, s"need $w*$h pixels, got ${gray.length}")
-      val rowSize = (w * 3 + 3) / 4 * 4
-      val imgSize = rowSize * h
-      val fileSize = 54 + imgSize
+      val pixels = dibPixels(w, h, gray)
+      val fileSize = 54 + pixels.length
       val b = java.nio.ByteBuffer.allocate(fileSize)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       b.put('B'.toByte).put('M'.toByte).putInt(fileSize).putInt(0).putInt(54)
       b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24).putInt(0)
-      b.putInt(imgSize).putInt(2835).putInt(2835).putInt(0).putInt(0)
-      var y = h - 1
-      while (y >= 0) { // bottom-up
+      b.putInt(pixels.length).putInt(2835).putInt(2835).putInt(0).putInt(0)
+      b.put(pixels).array()
+    }
+
+    /** Gray pixels as a 24-bit DIB pixel array: r=g=b, bottom-up rows,
+      * each row zero-padded to 4 bytes — the pixel data of a BMP file and
+      * of an AVI DIB frame alike. */
+    private[Multimodal] def dibPixels(w: Int, h: Int,
+                                      gray: Array[Int]): Array[Byte] = {
+      val rowSize = (w * 3 + 3) / 4 * 4
+      val out = new Array[Byte](rowSize * h)
+      var y = 0
+      while (y < h) {
+        val row = (h - 1 - y) * rowSize // bottom-up
         var x = 0
         while (x < w) {
           val v = gray(y * w + x).toByte
-          b.put(v).put(v).put(v)
+          out(row + 3 * x) = v; out(row + 3 * x + 1) = v
+          out(row + 3 * x + 2) = v
           x += 1
         }
-        var p = w * 3
-        while (p < rowSize) { b.put(0.toByte); p += 1 }
-        y -= 1
+        y += 1
       }
-      b.array()
+      out
     }
 
     /** REAL decode via the JDK's ImageIO (BMP/PNG/GIF/JPEG as the JVM
@@ -249,7 +175,7 @@ object Multimodal {
 
   /** REAL image decode over a media dataset: ImageIO per payload inside
     * one iterator-to-iterator `mapPartitions` pass — same batch shape as
-    * [[extractFeatures]], genuine pixels out. Undecodable payloads yield
+    * [[extractFeaturesReal]], genuine pixels out. Undecodable payloads yield
     * `ok = false` with an empty grid (partition survives). */
   def decodeImages(media: Dataset[MediaRecord]): Dataset[DecodedImage] = {
     import media.sparkSession.implicits._
@@ -292,13 +218,14 @@ object Multimodal {
   val PhashH = 8
 
   /** A media lake with REAL duplicate structure, synthesized from the
-    * documents table: every doc renders one of 64 base 12x8 patterns
-    * (base = doc_id % 64, pixel(i) = (base*37*i + i*i*11) % 256 — the
-    * quadratic term gives every base a DISTINCT gradient structure, so
-    * distinct bases land far apart in dHash space; a linear pattern
-    * would give every base the same +1 gradient and collapse all hashes
-    * to within a few bits), as a genuine BMP. Two controlled variations
-    * make it a perceptual-dedup fixture:
+    * documents table: every doc renders one of `classMod` base 12x8
+    * patterns, base = doc_id % classMod, pixel(i) = (lin·i + quad·i²)
+    * mod 256 with lin = (base % 256)·37 and quad = 11 + base/256, as a
+    * genuine BMP. The quadratic term gives every base a DISTINCT
+    * gradient structure, so distinct bases land far apart in dHash
+    * space (a linear pattern would give every base the same +1 gradient
+    * and collapse all hashes to within a few bits). Two controlled
+    * variations make it a perceptual-dedup fixture:
     *
     *   - docs with doc_id % 3 == 0 ship the 2x NEAREST-UPSCALED copy
     *     (24x16, U(x,y) = B(y/2, x/2)) — DIFFERENT bytes, different
@@ -312,57 +239,21 @@ object Multimodal {
     *     the perturbed column is one the 12->9 resample never samples —
     *     sub-sample noise vanishing is perceptual-hash semantics).
     *
+    * With the default 64 classes the pairs grow ~n²/64 — output volume,
+    * not operator cost; the auto-dial rows pass classMod = max(64, n/16)
+    * so class size stays ~16 and the pair output linear. Base feeds BOTH
+    * coefficients because everything is mod 256: a single-coefficient
+    * family has at most 256 distinct images, while (lin, quad) stays
+    * distinct for every base below 256·245 = 62 720 (quad mod 256 first
+    * wraps to 0 at base/256 = 245). Two classes landing within Hamming 3 of
+    * each other are expected output: the oracle runs the same arithmetic.
+    *
     * Pixel values are pure integer arithmetic on doc_id, so the oracle
     * recomputes every hash symbolically (the [[syntheticImageLake]]
     * precedent); the Spark side goes through the REAL BMP encode +
     * ImageIO decode + resample. */
-  def phashLake(spark: SparkSession, sfDir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast(LongType).as("media_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val base = (id % 64).toInt
-          val gray0 = Array.tabulate(ImageW * ImageH)(i =>
-            ((base * 37 * i + i * i * 11) % 256).toInt)
-          if (id % 5 == 0) {
-            val p = ((id * 7) % 96).toInt
-            gray0(p) = (gray0(p) + 128) % 256
-          }
-          val payload =
-            if (id % 3 == 0) {
-              val up = Array.tabulate(ImageW * 2 * ImageH * 2) { j =>
-                val x = j % (ImageW * 2); val y = j / (ImageW * 2)
-                gray0((y / 2) * ImageW + x / 2)
-              }
-              ImageCodec.encodeGrayBmp(ImageW * 2, ImageH * 2, up)
-            } else ImageCodec.encodeGrayBmp(ImageW, ImageH, gray0)
-          MediaRecord(id, "image", "bmp", payload, payload.length.toLong)
-        }
-      }
-  }
-
-  /** [[phashLake]] with the base-image class count scaled to the corpus
-    * (the auto-dial convention): base = doc_id % classMod instead of the
-    * fixed 64, so the duplicate-class SIZE stays bounded (~16) as the
-    * corpus grows and the pair output stays linear — the fixed-64 lake's
-    * n²/64 pair growth measures output volume, not the operator, at probe
-    * scale (the pair-emitting-dedup tiling rule).
-    *
-    * The pixel formula must change with the dial: everything is mod 256,
-    * so any family pixel(i) = c(base)*i + 11i² has at most 256 distinct
-    * images no matter how large classMod gets (c is invertible-mod-256 in
-    * base only through base % 256). Feeding base into BOTH coefficients —
-    * linear (base % 256)*37 and quadratic 11 + base/256 — gives distinct
-    * (linear, quadratic) pairs for every base below 256·245 = 62 720
-    * (the wrap 11 + q ≡ 0..10 mod 256 starts at q = 245 and collides with
-    * no unwrapped value), i.e. distinct pixel functions for every class
-    * the ≤100× probes can dial. Two distinct classes landing within
-    * Hamming 3 of each other is possible but harmless: the oracle runs
-    * the same arithmetic, so such a pair is expected output, not error. */
-  def phashLakeScaled(spark: SparkSession, sfDir: String,
-      classMod: Long): Dataset[MediaRecord] = {
+  def phashLake(spark: SparkSession, sfDir: String,
+                classMod: Long = 64L): Dataset[MediaRecord] = {
     import spark.implicits._
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast(LongType).as("media_id"))
@@ -586,7 +477,7 @@ object Multimodal {
     * mod 4096) − 2048 with lin = (base % 4096)·7 + 3 and
     * quad = 13 + base / 4096 (base feeds BOTH coefficients: mod-4096
     * arithmetic caps any single-coefficient family at 4096 distinct
-    * clips — the [[phashLakeScaled]] wrap argument, one level up). Two
+    * clips — the [[phashLake]] wrap argument, one level up). Two
     * controlled variations:
     *
     *   - docs with doc_id % 3 == 0 ship the 2× NEAREST-UPSAMPLED clip
@@ -743,7 +634,7 @@ object Multimodal {
   }
 
   // ------------------------------------------------------------------
-  // Real video decode (pure JVM) — the last modality loses its stub.
+  // Real video decode (pure JVM).
   // AVI is RIFF (the container family the audio path already walks):
   // LIST(hdrl){avih, LIST(strl){strh, strf}} then LIST(movi){00db...}.
   // The lake synthesizes genuine AVI files with uncompressed 24-bit DIB
@@ -774,28 +665,25 @@ object Multimodal {
     private val FccRIFF = 0x46464952 // 'RIFF'
     private val FccAVI = 0x20495641 // 'AVI '
     private val FccLIST = 0x5453494c // 'LIST'
-    private val FccHdrl = 0x6c726468 // 'hdrl'
-    private val FccMovi = 0x69766f6d // 'movi'
     private val FccAvih = 0x68697661 // 'avih'
     private val FccStrh = 0x68727473 // 'strh'
     private val FccStrf = 0x66727473 // 'strf'
     private val FccVids = 0x73646976 // 'vids'
     private val FccMjpg = 0x47504a4d // 'MJPG'
 
-    /** Deterministic AVI encoder: one 'vids' stream of uncompressed
-      * 24-bit DIB frames (gray replicated to b=g=r, bottom-up rows,
-      * 4-byte row padding — the BITMAPINFOHEADER layout the BMP encoder
-      * shares), frame rate as strh dwRate/dwScale. Canonical chunk
-      * order: hdrl(avih, strl(strh, strf)) then movi(00db...). */
-    def encodeAviDib(w: Int, h: Int, fps: Int,
-                     frames: Array[Array[Int]]): Array[Byte] = {
+    /** The AVI container both frame encoders write into: one 'vids'
+      * stream, frame rate as strh dwRate/dwScale, canonical chunk order
+      * hdrl(avih, strl(strh, strf)) then movi(`chunkId`...), each frame
+      * chunk word-aligned. `handler` is the strh fccHandler,
+      * `compression` and `imageSize` the strf biCompression and
+      * biSizeImage; the suggested buffer size is the largest frame. */
+    private def encodeAvi(w: Int, h: Int, fps: Int, handler: String,
+        compression: Int, imageSize: Int, chunkId: String,
+        frames: Array[Array[Byte]]): Array[Byte] = {
       require(fps > 0, s"fps must be positive, got $fps")
-      frames.foreach(f => require(f.length == w * h,
-        s"need $w*$h pixels per frame, got ${f.length}"))
-      val rowSize = (w * 3 + 3) / 4 * 4
-      val frameBytes = rowSize * h // multiple of 4: no chunk padding needed
       val n = frames.length
-      val moviSize = 4 + n * (8 + frameBytes)
+      val bufSize = (imageSize +: frames.map(_.length)).max
+      val moviSize = 4 + frames.map(f => 8 + f.length + (f.length & 1)).sum
       val strlSize = 4 + 8 + 56 + 8 + 40
       val hdrlSize = 4 + 8 + 56 + 8 + strlSize
       val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
@@ -805,41 +693,43 @@ object Multimodal {
       fcc("RIFF"); b.putInt(riffSize); fcc("AVI ")
       fcc("LIST"); b.putInt(hdrlSize); fcc("hdrl")
       fcc("avih"); b.putInt(56)
-      b.putInt(1000000 / fps).putInt(frameBytes * fps).putInt(0).putInt(0)
-        .putInt(n).putInt(0).putInt(1).putInt(frameBytes)
+      b.putInt(1000000 / fps).putInt(bufSize * fps).putInt(0).putInt(0)
+        .putInt(n).putInt(0).putInt(1).putInt(bufSize)
         .putInt(w).putInt(h).putInt(0).putInt(0).putInt(0).putInt(0)
       fcc("LIST"); b.putInt(strlSize); fcc("strl")
       fcc("strh"); b.putInt(56)
-      fcc("vids"); fcc("DIB ")
+      fcc("vids"); fcc(handler)
       b.putInt(0).putShort(0).putShort(0).putInt(0)
         .putInt(1).putInt(fps) // dwScale, dwRate: fps = rate/scale
-        .putInt(0).putInt(n).putInt(frameBytes).putInt(0).putInt(0)
+        .putInt(0).putInt(n).putInt(bufSize).putInt(0).putInt(0)
         .putShort(0).putShort(0).putShort(w.toShort).putShort(h.toShort)
       fcc("strf"); b.putInt(40)
-      b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24).putInt(0)
-        .putInt(frameBytes).putInt(2835).putInt(2835).putInt(0).putInt(0)
+      b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
+        .putInt(compression).putInt(imageSize).putInt(2835).putInt(2835)
+        .putInt(0).putInt(0)
       fcc("LIST"); b.putInt(moviSize); fcc("movi")
-      frames.foreach { g =>
-        fcc("00db"); b.putInt(frameBytes)
-        var y = h - 1
-        while (y >= 0) { // bottom-up
-          var x = 0
-          while (x < w) {
-            val v = g(y * w + x).toByte
-            b.put(v).put(v).put(v)
-            x += 1
-          }
-          var p = w * 3
-          while (p < rowSize) { b.put(0.toByte); p += 1 }
-          y -= 1
-        }
+      frames.foreach { f =>
+        fcc(chunkId); b.putInt(f.length); b.put(f)
+        if ((f.length & 1) == 1) b.put(0.toByte)
       }
       b.array()
     }
 
-    /** MJPEG AVI encoder: same container, '00dc' chunks holding real
-      * JPEG bytes (the JDK's ImageIO JPEG codec). Lossy by nature — the
-      * fixture for the spec's cross-codec test, not for oracle rows. */
+    /** Deterministic AVI encoder: uncompressed 24-bit DIB frames in
+      * '00db' chunks (gray replicated to b=g=r, bottom-up rows, 4-byte
+      * row padding — the BITMAPINFOHEADER pixel layout of
+      * [[ImageCodec.encodeGrayBmp]]). */
+    def encodeAviDib(w: Int, h: Int, fps: Int,
+                     frames: Array[Array[Int]]): Array[Byte] = {
+      frames.foreach(f => require(f.length == w * h,
+        s"need $w*$h pixels per frame, got ${f.length}"))
+      encodeAvi(w, h, fps, "DIB ", 0, (w * 3 + 3) / 4 * 4 * h, "00db",
+        frames.map(ImageCodec.dibPixels(w, h, _)))
+    }
+
+    /** MJPEG AVI encoder: '00dc' chunks holding real JPEG bytes (the
+      * JDK's ImageIO JPEG codec). Lossy by nature — the fixture for the
+      * spec's cross-codec test, not for oracle rows. */
     def encodeAviMjpeg(w: Int, h: Int, fps: Int,
                        frames: Array[Array[Int]]): Array[Byte] = {
       val jpegs = frames.map { g =>
@@ -855,37 +745,7 @@ object Multimodal {
         javax.imageio.ImageIO.write(img, "jpg", bos)
         bos.toByteArray
       }
-      val moviSize = 4 + jpegs.map(j => 8 + j.length + (j.length & 1)).sum
-      val strlSize = 4 + 8 + 56 + 8 + 40
-      val hdrlSize = 4 + 8 + 56 + 8 + strlSize
-      val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-      val b = java.nio.ByteBuffer.allocate(8 + riffSize)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      def fcc(s: String): Unit = b.put(s.getBytes("US-ASCII"))
-      val bufSize = jpegs.map(_.length).max
-      fcc("RIFF"); b.putInt(riffSize); fcc("AVI ")
-      fcc("LIST"); b.putInt(hdrlSize); fcc("hdrl")
-      fcc("avih"); b.putInt(56)
-      b.putInt(1000000 / fps).putInt(bufSize * fps).putInt(0).putInt(0)
-        .putInt(jpegs.length).putInt(0).putInt(1).putInt(bufSize)
-        .putInt(w).putInt(h).putInt(0).putInt(0).putInt(0).putInt(0)
-      fcc("LIST"); b.putInt(strlSize); fcc("strl")
-      fcc("strh"); b.putInt(56)
-      fcc("vids"); fcc("MJPG")
-      b.putInt(0).putShort(0).putShort(0).putInt(0)
-        .putInt(1).putInt(fps)
-        .putInt(0).putInt(jpegs.length).putInt(bufSize).putInt(0).putInt(0)
-        .putShort(0).putShort(0).putShort(w.toShort).putShort(h.toShort)
-      fcc("strf"); b.putInt(40)
-      b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-        .putInt(FccMjpg).putInt(0).putInt(2835).putInt(2835)
-        .putInt(0).putInt(0)
-      fcc("LIST"); b.putInt(moviSize); fcc("movi")
-      jpegs.foreach { j =>
-        fcc("00dc"); b.putInt(j.length); b.put(j)
-        if ((j.length & 1) == 1) b.put(0.toByte) // chunks are word-aligned
-      }
-      b.array()
+      encodeAvi(w, h, fps, "MJPG", FccMjpg, 0, "00dc", jpegs)
     }
 
     /** Lock-free AVI walk + frame decode — the audio path's canonical
@@ -980,7 +840,7 @@ object Multimodal {
     * base 17-frame clips of 12x8 frames — base = doc_id % classMod,
     * pixel(f, i) = (lin·i + quad·i² + 29·f) mod 256 with
     * lin = (base % 256)·37 and quad = 11 + base/256 (base feeds BOTH
-    * coefficients — the [[phashLakeScaled]] wrap argument). Two
+    * coefficients — the [[phashLake]] wrap argument). Two
     * controlled variations:
     *
     *   - docs with doc_id % 3 == 0 ship the 2× FRAME-RATE-upsampled copy
@@ -1054,10 +914,10 @@ object Multimodal {
     }
   }
 
-  /** REAL frame sampling — [[frameSampleStub]]'s contract on genuine
-    * decoded frames: every `stride`-th frame of each decodable clip, as
-    * a 1→N flatMap over one decode pass (pixels of skipped frames never
-    * leave the scan partition). */
+  /** REAL frame sampling on genuine decoded frames: every `stride`-th
+    * frame of each decodable clip, as a 1→N flatMap over one decode pass
+    * (pixels of skipped frames never leave the scan partition). Payloads
+    * that are not AVI video yield no frames. */
   def frameSampleReal(media: Dataset[MediaRecord],
                       stride: Int): Dataset[RealFrame] = {
     require(stride > 0, s"stride must be positive, got $stride")
@@ -1144,9 +1004,9 @@ object Multimodal {
   final case class RealFeatures(
       media_id: Long, modality: String, feature: Array[Long], ok: Boolean)
 
-  /** REAL feature extraction over the mixed lake — [[extractFeatures]]'
-    * contract with genuine decoders behind it, one fixed-width integer
-    * feature vector (8 longs) per asset, dispatched by payload sniffing
+  /** REAL feature extraction over the mixed lake: genuine decoders,
+    * one fixed-width integer feature vector (8 longs) per asset,
+    * deterministic in the payload bytes, dispatched by payload sniffing
     * (RIFF/WAVE → PCM energies, RIFF/AVI → frame brightness, anything
     * ImageIO reads → gray histogram):
     *
@@ -1273,7 +1133,7 @@ object Multimodal {
     require(classMod % 2 == 1,
       s"dedupMediaIncremental: classMod must be odd, got $classMod")
     def prints(parity: Int): DataFrame = mediaPrints(
-      phashLakeScaled(spark, sfDir, classMod)
+      phashLake(spark, sfDir, classMod)
         .filter(col("media_id") % 2 === parity),
       audioLake(spark, sfDir, classMod)
         .filter(col("media_id") % 2 === parity),
@@ -1298,7 +1158,7 @@ object Multimodal {
   def mediaReport(spark: SparkSession, sfDir: String,
                   classMod: Long = 64L): DataFrame = {
     val lakes: Seq[(String, Dataset[MediaRecord])] = Seq(
-      "image" -> phashLakeScaled(spark, sfDir, classMod),
+      "image" -> phashLake(spark, sfDir, classMod),
       "audio" -> audioLake(spark, sfDir, classMod),
       "video" -> videoLake(spark, sfDir, classMod))
     val assets = lakes.map { case (m, l) =>

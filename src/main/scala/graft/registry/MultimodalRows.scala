@@ -33,7 +33,7 @@ object MultimodalRows {
        |)""".stripMargin
   }
 
-  /** Image dHash print CTEs (no leading comma): the phashLakeScaled
+  /** Image dHash print CTEs (no leading comma): the phashLake
     * arithmetic — spatial 2× upscale for doc_id % 3 = 0, watermark slot
     * for doc_id % 5 = 0, 9×8 nearest resample, neighbor-compare bits.
     * The class dial `cm` rides in from the audio branch's `aac` CTE, so
@@ -162,39 +162,6 @@ object MultimodalRows {
         |  CAST(length(props) AS BIGINT) AS byte_len,
         |  md5(props) AS payload_md5
         |FROM events ORDER BY media_id""".stripMargin),
-    // Stubbed decode via mapPartitions; the deterministic stub is mirrored
-    // symbolically by the SQL oracle, so the row hash-compares.
-    QueryDef("mm_feature_extract", (s, dir) => {
-      Multimodal.extractFeatures(Multimodal.mediaFromEvents(s, dir)).toDF()
-        .select(col("media_id"), col("modality"), col("ok"),
-          round(element_at(col("feature"), 1).cast("double"), 4).as("f0"))
-        .orderBy("media_id")
-    },
-    // feature[0] = float32(sum of every-8th byte / 255): ASCII payloads make
-    // ord(char) == byte; the float narrowing absorbs sum-order noise
-    """SELECT e.event_id AS media_id,
-        |  CASE CAST(e.event_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |       ELSE 'video' END AS modality,
-        |  true AS ok,
-        |  round(CAST(CAST(sum(ord(substr(e.props, g.p, 1)) / 255.0) AS REAL) AS DOUBLE), 4) AS f0
-        |FROM events e, LATERAL (
-        |  SELECT unnest(generate_series(1, length(e.props), 8)) AS p) g
-        |GROUP BY e.event_id ORDER BY media_id""".stripMargin),
-    // Frame sampling over the video modality (1->N flatMap) — the frame
-    // count formula is mirrored in SQL, so the row hash-compares.
-    QueryDef("mm_frame_sample", (s, dir) => {
-      Multimodal.frameSampleStub(
-        Multimodal.mediaFromEvents(s, dir), frameBytes = 4, stride = 2).toDF()
-        .groupBy("media_id").agg(count(lit(1)).as("n_frames"))
-        .orderBy("media_id")
-    },
-    // frame count is arithmetic on payload length: ceil(len/4) chunks,
-    // every 2nd kept -> (chunks+1)//2, video modality = event_id%3==2
-    """SELECT event_id AS media_id,
-        |  (CAST(ceil(length(props) / 4.0) AS BIGINT) + 1) // 2 AS n_frames
-        |FROM events WHERE event_id % 3 = 2 AND length(props) > 0
-        |ORDER BY media_id""".stripMargin),
-
     // Asset-level exact dedup BEFORE decode: only md5 digests shuffle,
     // never the media bytes.
     QueryDef("mm_dedup_binary", (s, dir) =>
@@ -263,14 +230,14 @@ object MultimodalRows {
     QueryDef("mm_dedup_phash_auto", (s, dir) => {
       val n = s.read.parquet(s"$dir/documents.parquet").count()
       Multimodal.dedupPhash(
-        Multimodal.phashLakeScaled(s, dir, math.max(64L, n / 16)), 3)
+        Multimodal.phashLake(s, dir, math.max(64L, n / 16)), 3)
         .orderBy("d1", "d2")
     },
     // Same pipeline, auto-dialed lake: base = doc_id % cm with
     // cm = greatest(64, n/16) recomputed from count(*); pixel(i) =
     // ((base%256)*37*i + (11 + base//256)*i*i) % 256 — base feeds BOTH
     // coefficients because mod-256 arithmetic caps any single-coefficient
-    // family at 256 distinct images (see Multimodal.phashLakeScaled).
+    // family at 256 distinct images (see Multimodal.phashLake).
     {
       val masks = graft.ops.Quantization.signMasks(64)
         .map(m => s"($m)::BIGINT").mkString("[", ", ", "]")
@@ -404,10 +371,10 @@ object MultimodalRows {
          |WHERE bit_count(xor(a.ph, b.ph)) <= 3
          |ORDER BY d1, d2""".stripMargin),
 
-    // REAL video decode — the last modality loses its stub: the lake
-    // synthesizes genuine AVI containers (uncompressed 24-bit DIB
-    // frames), the lock-free chunk walk decodes actual frames back, and
-    // the oracle recomputes every pixel of every frame symbolically. A
+    // REAL video decode: the lake synthesizes genuine AVI containers
+    // (uncompressed 24-bit DIB frames), the lock-free chunk walk decodes
+    // actual frames back, and the oracle recomputes every pixel of every
+    // frame symbolically. A
     // bug anywhere in container layout, row direction, channel order,
     // frame order, or the fps tag breaks the digest.
     QueryDef("mm_video_decode", (s, dir) => {
@@ -443,10 +410,9 @@ object MultimodalRows {
          |  true AS ok,
          |  md5(array_to_string(g, ',')) AS gray_md5
          |FROM vflat ORDER BY media_id""".stripMargin),
-    // REAL frame sampling (supersedes the mm_frame_sample stub's byte
-    // chunking): every 4th decoded frame, per-frame pixel digest — the
-    // 1->N flatMap rides the same decode pass, skipped frames never
-    // leave the scan partition.
+    // REAL frame sampling: every 4th decoded frame of each video,
+    // per-frame pixel digest — the 1->N flatMap rides the same decode
+    // pass, skipped frames never leave the scan partition.
     QueryDef("mm_frame_sample_real", (s, dir) => {
       Multimodal.frameSampleReal(Multimodal.videoLake(s, dir), 4).toDF()
         .select(col("media_id"), col("frame_no"),
@@ -497,7 +463,7 @@ object MultimodalRows {
     // audio frame energies, video frame brightness — one fixed-width
     // integer vector per asset, every cell oracle-recomputed from the
     // lake arithmetic. The "one API over a heterogeneous media crawl"
-    // shape; supersedes the mm_feature_extract stub for real payloads.
+    // shape.
     QueryDef("mm_feature_extract_real", (s, dir) =>
       Multimodal.extractFeaturesReal(Multimodal.mixedLake(s, dir)).toDF()
         .select(col("media_id"), col("modality"), col("ok"),
@@ -598,7 +564,7 @@ object MultimodalRows {
     QueryDef("mm_dedup_recall", (s, dir) => {
       val bound = 500L
       val prints = CacheScope.cached(Multimodal.mediaPrints(
-        Multimodal.phashLakeScaled(s, dir, 64)
+        Multimodal.phashLake(s, dir, 64)
           .filter(col("media_id") < bound),
         Multimodal.audioLake(s, dir, 64)
           .filter(col("media_id") < bound),
@@ -722,28 +688,7 @@ object MultimodalRows {
          |  FROM vsig, nn GROUP BY nn.n
          |) ORDER BY modality""".stripMargin),
 
-    // Stubbed resize (8x4 = 32-byte grid, payload bytes repeated
-    // cyclically): the grid is deterministic, so its md5 is mirrored in
-    // SQL as md5 of the payload string tiled to 32 chars (ASCII payloads
-    // make byte == char). Empty payloads are excluded on both sides — the
-    // all-zero-byte grid is not expressible as a DuckDB VARCHAR.
-    QueryDef("mm_resize", (s, dir) => {
-      val media = Multimodal.mediaFromEvents(s, dir)
-        .where(col("byte_len") > 0)
-      Multimodal.resizeStub(media, 8, 4).toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          md5(col("payload")).as("resized_md5"))
-        .orderBy("media_id")
-    },
-    // resized grid = payload tiled cyclically to 32 bytes (out[i] =
-    // payload[i % len]) == substr(repeat(props, ceil(32/len)), 1, 32)
-    """SELECT event_id AS media_id, 8 AS width, 4 AS height,
-        |  md5(substr(repeat(props,
-        |    CAST(ceil(32.0 / length(props)) AS INT)), 1, 32)) AS resized_md5
-        |FROM events WHERE length(props) > 0
-        |ORDER BY media_id""".stripMargin),
-
-    // REAL decode — no stub: the lake synthesizes genuine BMP files
+    // REAL decode: the lake synthesizes genuine BMP files
     // (deterministic pixels), ImageIO decodes actual pixels back, and the
     // oracle recomputes the expected pixel sequence symbolically. A codec
     // bug on either side (encoder layout, decoder channel order, row

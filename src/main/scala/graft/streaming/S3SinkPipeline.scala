@@ -89,17 +89,20 @@ object S3SinkPipeline {
   }
 
   /** The line column for text formats, honoring envelope semantics (O14):
-    * envelope off + single struct-valued field → the value object itself,
-    * null for a null value (the writer skips such records). */
+    * envelope off + single struct- or map-valued field → the value object
+    * itself, null for a null value (the writer skips such records). */
   private def lineColumn(config: SinkConfig, schema: StructType): Column = {
     val fields = config.outputFields
-    val valueIsStruct = schema("value").dataType.isInstanceOf[StructType]
+    val valueIsObject = schema("value").dataType match {
+      case _: StructType | _: MapType => true
+      case _ => false
+    }
     config.formatType match {
       case FormatType.Csv => OutputFields.csvLine(fields)
       case FormatType.Json | FormatType.Jsonl =>
         val singleValue = fields.length == 1 &&
           fields.head.fieldType == OutputFieldType.Value
-        if (!config.envelopeEnabled && singleValue && valueIsStruct)
+        if (!config.envelopeEnabled && singleValue && valueIsObject)
           to_json(col("value"))
         else if (!config.envelopeEnabled && singleValue) {
           // scalar unwrap emits a JSON string LITERAL — quoted + escaped

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import com.github.luben.zstd.ZstdInputStream
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+import org.apache.spark.sql.functions.{col, concat, lit, map, raise_error, when}
 import org.apache.spark.sql.types._
 import org.xerial.snappy.SnappyInputStream
 
@@ -237,6 +237,27 @@ class SinkWriteSpec extends SparkSuite {
     S3SinkPipeline.writeBatch(f3Records(), cfg, dir, Now)
     assert(readLines(s"$dir/topic1-0-30", CompressionType.None) ==
       List("""{"name":"name2"}"""))
+  }
+
+  test("envelope=false unwraps a single MAP value field to its JSON " +
+    "object in JSONL and JSON-array framing (O14: RECORD and MAP)") {
+    val batch = spark.range(2).select(lit("t").as("topic"),
+      lit(0).as("partition"), col("id").as("offset"),
+      lit(null).cast(TimestampType).as("timestamp"),
+      lit("k").as("key"), map(lit("a"), col("id")).as("value"),
+      lit(null).cast(graft.connector.Records.schema("headers").dataType)
+        .as("headers"))
+    def unwrapped(format: String): List[String] = {
+      val dir = tmpDir(s"$format-unwrap-map")
+      S3SinkPipeline.writeBatch(batch, config(
+        "format.output.type" -> format,
+        "format.output.fields" -> "value",
+        "format.output.envelope" -> "false",
+        "file.compression.type" -> "none"), dir, Now)
+      readLines(s"$dir/t-0-0", CompressionType.None)
+    }
+    assert(unwrapped("jsonl") == List("""{"a":0}""", """{"a":1}"""))
+    assert(unwrapped("json") == List("[", """{"a":0},""", """{"a":1}""", "]"))
   }
 
   test("JSON array framing: [ / rows with trailing commas / ] " +

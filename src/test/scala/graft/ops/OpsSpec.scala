@@ -960,27 +960,46 @@ class OpsSpec extends SparkSuite {
 
   test("multimodal resize and frame-sample stubs keep the batch contract") {
     import graft.ops.Multimodal._
+    val bmp = ImageCodec.encodeGrayBmp(ImageW, ImageH,
+      Array.tabulate(ImageW * ImageH)(i => (i * 7) % 256))
+    val avi = VideoCodec.encodeAviDib(ImageW, ImageH, VideoFps,
+      Array.tabulate(4)(f => Array.tabulate(ImageW * ImageH)(i =>
+        (f * 29 + i) % 256)))
     val media = Seq(
-      MediaRecord(0L, "image", "raw", Array.tabulate(10)(_.toByte), 10L),
-      MediaRecord(1L, "video", "raw", Array.tabulate(64)(_.toByte), 64L)).toDS()
-    val resized = resizeStub(media, 4, 4).collect().sortBy(_.media_id)
-    assert(resized.forall(r => r.payload.length == 16))
-    assert(resized(0).payload.toSeq == resized(0).payload.toSeq) // deterministic
-    val frames = frameSampleStub(media, frameBytes = 16, stride = 2).collect()
+      MediaRecord(0L, "image", "bmp", bmp, bmp.length.toLong),
+      MediaRecord(1L, "video", "avi", avi, avi.length.toLong),
+      MediaRecord(2L, "image", "raw", Array.tabulate(10)(_.toByte), 10L))
+      .toDS()
+    val resized = resizeImages(media, 4, 4).collect().sortBy(_.media_id)
+    // fixed output dimensions for every decodable image, whatever its
+    // source size; the AVI and the raw bytes are no image
+    assert(resized(0).ok && resized(0).width == 4 && resized(0).height == 4)
+    assert(resized(0).gray.length == 16)
+    assert(resized.drop(1).forall(r => !r.ok && r.gray.isEmpty))
+    val frames = frameSampleReal(media, stride = 2).collect()
     assert(frames.map(_.media_id).distinct.toSeq == Seq(1L)) // video only
-    assert(frames.map(_.frame_no).sorted.toSeq == Seq(0, 2)) // every 2nd of 4
+    assert(frames.map(_.frame_no).sorted.toSeq == Seq(0L, 2L)) // 2nd of 4
+    assert(frames.forall(_.gray.length == ImageW * ImageH))
   }
 
   test("multimodal feature extraction is deterministic and batch-shaped") {
     import graft.ops.Multimodal._
+    val bmp = ImageCodec.encodeGrayBmp(ImageW, ImageH,
+      Array.tabulate(ImageW * ImageH)(i => (i * 13) % 256))
     val media = Seq(
-      MediaRecord(0L, "image", "raw", Array[Byte](10, 20, 30), 3L),
-      MediaRecord(1L, "audio", "raw", Array[Byte](10, 20, 30), 3L),
-      MediaRecord(2L, "video", "raw", null, 0L)).toDS()
-    val feats = extractFeatures(media).collect().sortBy(_.media_id)
-    assert(feats(0).feature.toSeq == feats(1).feature.toSeq) // same bytes
-    assert(feats(0).feature.length == FeatureDim)
-    assert(!feats(2).ok && feats(2).feature.forall(_ == 0f)) // null payload
+      MediaRecord(0L, "image", "bmp", bmp, bmp.length.toLong),
+      MediaRecord(1L, "audio", "bmp", bmp, bmp.length.toLong),
+      MediaRecord(2L, "video", "raw", null, 0L),
+      MediaRecord(3L, "image", "raw", Array[Byte](10, 20, 30), 3L)).toDS()
+    val feats = extractFeaturesReal(media).collect().sortBy(_.media_id)
+    // equal bytes, equal features: dispatch sniffs the payload, not the
+    // modality label
+    assert(feats(0).ok && feats(1).ok)
+    assert(feats(0).feature.toSeq == feats(1).feature.toSeq)
+    assert(feats(0).feature.length == 8)
+    // null and undecodable payloads: ok = false, no vector
+    assert(!feats(2).ok && feats(2).feature.isEmpty)
+    assert(!feats(3).ok && feats(3).feature.isEmpty)
   }
 
   test("real image codec: BMP encode -> ImageIO decode round-trips pixels " +
@@ -1189,6 +1208,30 @@ class OpsSpec extends SparkSuite {
     val sampled = frameSampleReal(media, 2).collect().sortBy(_.frame_no)
     assert(sampled.map(_.frame_no).toSeq == Seq(0L, 2L, 4L))
     assert(sampled(1).gray.toSeq == frames(2).toSeq)
+  }
+
+  test("AVI DIB container bytes are pinned: a 5-frame 12x8 clip and the " +
+    "video lake's 17-frame and 34-frame clips keep their md5") {
+    import graft.ops.Multimodal._
+    def md5(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(b)
+        .map("%02x".format(_)).mkString
+    val frames = Array.tabulate(5)(f =>
+      Array.tabulate(12 * 8)(i => (f * 37 + i * 11) % 256))
+    assert(md5(VideoCodec.encodeAviDib(12, 8, 10, frames)) ==
+      "b4f330ff43393ee3baa4e5ec34f92ff9")
+    val src = tmpDir("avi-pin")
+    spark.range(0, 16).select(col("id").as("doc_id"))
+      .write.mode("overwrite").parquet(s"$src/documents.parquet")
+    val lake = videoLake(spark, src).collect().map(r => r.media_id -> r).toMap
+    // id 10: base clip (10 fps, 17 frames) with the one-pixel edit;
+    // id 15: the 2x frame-rate copy (20 fps, 34 frames) with the edit
+    assert(VideoCodec.parseAvi(lake(10L).payload).map(_._4.length)
+      .contains(VideoFrames))
+    assert(VideoCodec.parseAvi(lake(15L).payload).map(_._4.length)
+      .contains(VideoFrames * 2))
+    assert(md5(lake(10L).payload) == "b68e27df1ed88600d05fde4996b09c09")
+    assert(md5(lake(15L).payload) == "7a0ddf454fd713b86044d6fdd30b65dc")
   }
 
   test("dedupVideo: a frame-rate-doubled copy pairs with its base at " +

@@ -51,7 +51,7 @@ for i in $(seq 1 "$N"); do
   # object with a "queries" map before installing it — a crashed/
   # truncated run must never overwrite a good run{i}.json
   tmp=$(mktemp)
-  # GRAFT_CC_ASSERT_ROUNDS arms the connected-components convergence
+  # -Dgraft.cc.assert.rounds arms the connected-components convergence
   # canary (Dedup.connectedComponents): measured round count is 2 across
   # two decades (sf0.01 -> 10x-sf0.1, SCALING.md), so >3 means a
   # propagation regression (wrong join key, broken edge cache) and the
@@ -61,9 +61,9 @@ for i in $(seq 1 "$N"); do
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-16g}" \
-  GRAFT_CC_ASSERT_ROUNDS="${GRAFT_CC_ASSERT_ROUNDS:-3}" \
   GRAFT_BENCH_JSON="$tmp" \
-    tools/spark-run.sh graft.Bench 2>/dev/null \
+    tools/spark-run.sh -Dgraft.cc.assert.rounds="${GRAFT_CC_ASSERT_ROUNDS:-3}" \
+      graft.Bench 2>/dev/null \
     | grep '"metric":"total"' | tail -1 >&2
   python3 -c "import json,sys; d=json.load(open('$tmp')); assert d['queries']" \
     || { echo "[bench_reps] run $i produced invalid JSON, aborting" >&2; exit 1; }
