@@ -84,7 +84,7 @@ object DumpPlans {
     // training aggregate anywhere); pipeline v2 composes the
     // decontamination max-cosine into the CC keep-list plan
     "sim_ann_ivf_pq_residual", "sim_ann_ivf_hamming",
-    "sim_ann_ivf_pq_auto_sampled", "sim_ann_ivf_pq_managed",
+    "sim_ann_ivf_pq_managed",
     "text_token_count_bpe", "pipeline_clean_corpus_v2",
     // round-17: the cascade must show the three tiers in ONE plan (sign
     // code scan + WindowGroupLimit prefilter, SHUFFLE_MERGE-pinned code

@@ -1064,8 +1064,8 @@ object Dedup {
 
   /** SemDeDup-style semantic dedup over an embedding corpus: assign every
     * vector to an IVF cell (deterministic k-means-refined centroids — the
-    * same [[Similarity.seedCentroids]]/[[Similarity.refineCentroids]]
-    * machinery the ANN path uses), compare pairs only WITHIN a cell, and
+    * same [[Similarity.trainCentroids]] trainer the ANN path uses),
+    * compare pairs only WITHIN a cell, and
     * drop any vector that has a lower-id in-cell neighbor with cosine ≥
     * `threshold`. Returns one row per vector: (vec_id, cell, keep).
     *
@@ -1102,10 +1102,7 @@ object Dedup {
     // — every declarative argmax shape measured super-linear at the
     // 10×/100× probes: struct-buffer SortAggregate, or Lloyd-chain
     // re-execution per consumer).
-    val local = Similarity.collectCentroids(
-      (1 to lloydIters).foldLeft(Similarity.seedCentroids(emb, nLists)) {
-        (c, _) => Similarity.refineCentroids(emb, c)
-      })
+    val local = Similarity.trainCentroids(emb, nLists, lloydIters)
     val assigned = CacheScope.cached(Similarity.assignCells(
       emb.select(col("vec_id"), col("embedding"),
         Similarity.norm(col("embedding")).as("_n")), local))
@@ -1173,7 +1170,7 @@ object Dedup {
 
   /** Embedding near-dup pairs: cosine ≥ threshold between vectors sharing a
     * `label` block (at scale the block key is an LSH bucket — see
-    * [[Similarity.hyperplaneBuckets]]). Cosine is computed as an in-order
+    * [[Similarity.bucketsFromMask]]). Cosine is computed as an in-order
     * double fold so the oracle can reproduce it bit-exactly. */
   def embeddingPairs(emb: DataFrame, threshold: Double): DataFrame = {
     val e = emb.select(col("vec_id"), col("label"), col("embedding"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the FAISS-family vector-compression step
@@ -184,8 +183,27 @@ object ProductQuantization {
     * element_at chain here pushed the scoring stage out of whole-stage
     * codegen (measured >100 µs/pair interpreted); the kernel is a tight
     * primitive loop. */
-  private def sumLookup(arr: Column, code: Column, m: Int, k: Int): Column =
+  private def sumLookup(arr: Column, code: Column, k: Int): Column =
     graft.functions.VectorExpressions.lookupSum(arr, code, k)
+
+  /** The ADC query side: [[Similarity.queryFloats]] `qf` plus each
+    * query's flat LUT — (query_id, _qe, _qn, _lut), one broadcast row per
+    * query (the [[AdcMaxQueryBatch]] contract). Consumers that never read
+    * `_qe` have it pruned before the broadcast. */
+  private def adcQueryLut(qf: DataFrame, cb: Codebooks): DataFrame =
+    qf.select(col("query_id"), col("_qe"), col("_qn"),
+      lutArray(cb, col("_qe")).as("_lut"))
+
+  /** The ADC score of a (query LUT, pq_code) pair:
+    * Σ_s lut[s·k + code_s] / (|q| · |x̂|), with |x̂|² = Σ_s |c_{s,code_s}|²
+    * read off the same codes — the reconstruction is never
+    * materialized. Unrounded; every consumer ranks on the 6-decimal
+    * rounding ([[finishAdc]]). */
+  private def adcScore(cb: Codebooks): Column =
+    Similarity.cosFromDot(
+      sumLookup(col("_lut"), col("pq_code"), cb.k),
+      sqrt(sumLookup(cn2Array(cb), col("pq_code"), cb.k)),
+      col("_qn"))
 
   /** ADC approximate top-k by cosine: score(q, x) ≈
     * Σ_i dot(q_i, c_{i,code_i(x)}) / (|q| · |x̂|), with |x̂|² = Σ_i |c|²
@@ -249,18 +267,12 @@ object ProductQuantization {
     // shuffle. The only broadcast is Q × (m·k + 1) doubles ≈ 4 KB/query
     // at the default dials (the [[AdcMaxQueryBatch]] contract, now ~15×
     // lighter per query than the former LUT-relation rows).
-    val qn = queries.select(col("vec_id").as("query_id"),
-      col(vecCol).as("_qe"), Similarity.norm(col(vecCol)).as("_qn"))
-    val qlut = qn.select(col("query_id"), col("_qn"),
-      lutArray(cb, col("_qe")).as("_lut"))
+    val qf = Similarity.queryFloats(queries, vecCol)
     val scored = codes
-      .join(broadcast(qlut), col("query_id") =!= col("vec_id"))
+      .join(broadcast(adcQueryLut(qf, cb)), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Similarity.cosFromDot(
-          sumLookup(col("_lut"), col("pq_code"), cb.m, cb.k),
-          sqrt(sumLookup(cn2Array(cb), col("pq_code"), cb.m, cb.k)),
-          col("_qn")).as("_adc"))
-    finishAdc(scored, qn, k, rerank, rerankCorpus, vecCol)
+        adcScore(cb).as("_adc"))
+    finishAdc(scored, qf, k, rerank, rerankCorpus, vecCol)
   }
 
   /** Shared ADC tail: rank `scored(query_id, neighbor_id, _adc)` per
@@ -272,35 +284,18 @@ object ProductQuantization {
     * top-`rerank` candidates exactly against `rerankCorpus` (reads
     * `rerank` float vectors per query, never the corpus) and emit the
     * exact top-k `cos`, also re-ranked on the rounded cosine. */
-  private def finishAdc(scored: DataFrame, qn: DataFrame, k: Int,
+  private def finishAdc(scored: DataFrame, qf: DataFrame, k: Int,
                         rerank: Int, rerankCorpus: Option[DataFrame],
                         vecCol: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(round(col("_adc"), 6).desc, col("neighbor_id"))
+    val adc = round(col("_adc"), 6).desc
     if (rerank <= 0) {
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
+      Similarity.rankTopK(scored, "query_id", adc, k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           round(col("_adc"), 6).as("adc"))
     } else {
       require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-      val cand = scored.withColumn("_r", row_number().over(w))
-        .where(col("_r") <= rerank)
-        .select(col("query_id"), col("neighbor_id"))
-      val c = rerankCorpus.get.select(col("vec_id").as("neighbor_id"),
-        col(vecCol).as("_ce"), Similarity.norm(col(vecCol)).as("_cn"))
-      // Query floats broadcast; the corpus float side pinned to a shuffle
-      // join — never the broadcast build (round-16 plan audit).
-      val exact = cand
-        .join(broadcast(qn), "query_id")
-        .join(c.hint("SHUFFLE_MERGE"), "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-          round(Similarity.cosFromDot(Similarity.dot(col("_qe"), col("_ce")),
-            col("_qn"), col("_cn")), 6).as("cos"))
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      exact.withColumn("rank", row_number().over(w2).cast("long"))
-        .where(col("rank") <= k)
+      Similarity.exactRefine(Similarity.candidateCut(scored, adc, rerank),
+        qf, rerankCorpus.get, k, vecCol)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
     }
   }
@@ -372,14 +367,16 @@ object ProductQuantization {
     * pipeline (the "sign-bit coarse ranking" shape FAISS documents as
     * IndexBinaryFlat → refine chains).
     *
-    * Plan shape: stage 1 is [[hammingTopK]]'s scan (query codes
-    * broadcast at 8 B each, map-side WindowGroupLimit prunes to r1);
+    * Plan shape: stage 1 is [[Similarity.hammingScan]] cut by
+    * [[Similarity.candidateCut]] (query codes broadcast at 8 B each,
+    * map-side WindowGroupLimit prunes to r1);
     * stage 2 joins the candidate ids to the code table — the
     * corpus-derived side, pinned SHUFFLE_MERGE, never broadcast — and
-    * scores with the same flat-LUT kernels as [[adcSearch]] (the LUT
+    * scores with [[adcScore]], as [[adcSearch]] does (the LUT
     * broadcast is query-bounded, [[AdcMaxQueryBatch]] contract);
-    * stage 3 is [[finishAdc]]'s exact-refine tail (query floats
-    * broadcast, corpus float side pinned).
+    * stage 3 is [[finishAdc]]'s exact-refine tail
+    * ([[Similarity.exactRefine]]: query floats broadcast, corpus float
+    * side pinned).
     *
     * `codes` supplies pre-built PQ codes (e.g. [[pqStore]]) — the
     * managed shape where the float corpus is touched only by the
@@ -393,37 +390,19 @@ object ProductQuantization {
     require(r1 >= r2, s"cascade: r1=$r1 must be >= r2=$r2")
     require(r2 >= k, s"cascade: r2=$r2 must be >= k=$k")
     // stage 1: whole-corpus Hamming prefilter over the sign bits
-    val c1 = Quantization.binarize(corpus, vecCol, dim)
-      .select(col("vec_id"), col("bcode"))
-    val q1 = Quantization.binarize(queries, vecCol, dim)
-      .select(col("vec_id").as("query_id"), col("bcode").as("_qc"))
-    val hw = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("neighbor_id"))
-    val cand1 = c1.join(broadcast(q1), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        bit_count(col("bcode").bitwiseXOR(col("_qc"))).cast("long")
-          .as("hamming"))
-      .withColumn("_r", row_number().over(hw))
-      .where(col("_r") <= r1)
-      .select(col("query_id"), col("neighbor_id"))
+    val cand1 = Similarity.candidateCut(
+      Similarity.hammingScan(corpus, queries, vecCol, dim), col("hamming"), r1)
     // stage 2: ADC over the PQ codes of the stage-1 survivors only
     val pq = codes.getOrElse(materialized(encode(corpus, cb, vecCol)
       .select(col("vec_id"), col("pq_code"))))
-    val qn = queries.select(col("vec_id").as("query_id"),
-      col(vecCol).as("_qe"), Similarity.norm(col(vecCol)).as("_qn"))
-    val qlut = qn.select(col("query_id"), col("_qn"),
-      lutArray(cb, col("_qe")).as("_lut"))
+    val qf = Similarity.queryFloats(queries, vecCol)
     val scored = cand1
       .join(pq.select(col("vec_id").as("neighbor_id"), col("pq_code"))
         .hint("SHUFFLE_MERGE"), "neighbor_id") // corpus side: never broadcast
-      .join(broadcast(qlut), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Similarity.cosFromDot(
-          sumLookup(col("_lut"), col("pq_code"), cb.m, cb.k),
-          sqrt(sumLookup(cn2Array(cb), col("pq_code"), cb.m, cb.k)),
-          col("_qn")).as("_adc"))
+      .join(broadcast(adcQueryLut(qf, cb)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), adcScore(cb).as("_adc"))
     // stage 3: exact refine of the ADC top-r2 (the shared rerank tail)
-    finishAdc(scored, qn, k, r2, Some(corpus), vecCol)
+    finishAdc(scored, qf, k, r2, Some(corpus), vecCol)
   }
 
   /** Scale-aware cascade dials from a corpus count — the
@@ -458,8 +437,8 @@ object ProductQuantization {
   }
 
   /** IVF-PQ — the composed FAISS shape: the IVF coarse quantizer
-    * ([[Similarity.seedCentroids]] + Lloyd refinement, identical chain to
-    * [[Similarity.ivfTopK]]) bounds each query's candidate set to its
+    * ([[Similarity.trainCentroids]], the trainer of every IVF path)
+    * bounds each query's candidate set to its
     * `nProbe` nearest cells, and ADC over the PQ codes scores ONLY those
     * candidates — per query O(n·nProbe/nLists · m) int-keyed lookups
     * instead of an exhaustive code scan, reading 16 B/vector instead of
@@ -467,18 +446,24 @@ object ProductQuantization {
     * vectors of the surviving candidates (the IVFPQ+refine production
     * pipeline).
     *
-    * Plan shape: corpus assigned map-only (NearestCentroid kernel), the
-    * candidate join is cell-equi (probes × assigned — the standard IVF
-    * join), the code rows join candidates on neighbor id, and the
-    * per-query LUT joins on (query, sub, code); one partial-agg shuffle
-    * sums the m parts. Never all-pairs, never a corpus-side cartesian. */
+    * Plan shape: corpus assigned and encoded in one map (the
+    * NearestCentroid and PqEncode kernels), the candidate join is
+    * cell-equi (broadcast probes × assigned — the standard IVF join), and
+    * scoring is the flat-LUT lookup ([[adcScore]]) against the broadcast
+    * per-query LUT; the only exchange is the top-k window. Never
+    * all-pairs, never a corpus-side cartesian. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 cb: Codebooks, nLists: Int = 16, nProbe: Int = 4,
-                lloydIters: Int = 1, rerank: Int = 0): DataFrame = {
-    val local = Similarity.collectCentroids(
-      (1 to lloydIters).foldLeft(Similarity.seedCentroids(corpus, nLists)) {
-        (c, _) => Similarity.refineCentroids(corpus, c)
-      })
+                lloydIters: Int = 1, rerank: Int = 0): DataFrame =
+    ivfPqOver(corpus, queries, k, cb,
+      Similarity.trainCentroids(corpus, nLists, lloydIters), nProbe, rerank)
+
+  /** [[ivfPqSearch]] over `corpus` assigned to the trained coarse
+    * centroids `local` and PQ-encoded in the same map — the in-plan index
+    * build of [[ivfPqTopK]] and [[ivfPqTopKAuto]]. */
+  private def ivfPqOver(corpus: DataFrame, queries: DataFrame, k: Int,
+                        cb: Codebooks, local: Similarity.LocalCentroids,
+                        nProbe: Int, rerank: Int): DataFrame = {
     // Round-16 rewrite: cell AND pq_code both derive MAP-ONLY from the
     // same corpus scan, so the search plan needs zero corpus shuffles —
     // scan → assign+encode → broadcast probes (the Q × nProbe small
@@ -510,31 +495,14 @@ object ProductQuantization {
                   rerankCorpus: Option[DataFrame] = None): DataFrame = {
     require(rerank <= 0 || rerankCorpus.nonEmpty,
       "rerank > 0 needs rerankCorpus (the float vectors to rescore)")
-    val spark = coded.sparkSession
-    val cent = Similarity.centroidsDf(spark, local)
-    val qn = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("_qe"), Similarity.norm(col("embedding")).as("_qn"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("_sim").desc, col("cell"))
-    val probes = qn.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        Similarity.cosFromDot(Similarity.dot(col("_qe"), col("cvec")),
-          col("_qn"), col("cn")).as("_sim"),
-        col("cell"))
-      .withColumn("_pr", row_number().over(qw))
-      .where(col("_pr") <= nProbe)
-      .select(col("query_id"), col("cell"))
-    val qlut = qn.select(col("query_id"), col("_qn"),
-      lutArray(cb, col("_qe")).as("_lut"))
-    val scored = coded.join(broadcast(probes), "cell")
+    val qf = Similarity.queryFloats(queries)
+    val scored = coded
+      .join(broadcast(Similarity.probeCells(qf, local, nProbe)), "cell")
       .where(col("query_id") =!= col("vec_id"))
-      .join(broadcast(qlut), "query_id")
+      .join(broadcast(adcQueryLut(qf, cb)), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Similarity.cosFromDot(
-          sumLookup(col("_lut"), col("pq_code"), cb.m, cb.k),
-          sqrt(sumLookup(cn2Array(cb), col("pq_code"), cb.m, cb.k)),
-          col("_qn")).as("_adc"))
-    finishAdc(scored, qn, k, rerank, rerankCorpus, "embedding")
+        adcScore(cb).as("_adc"))
+    finishAdc(scored, qf, k, rerank, rerankCorpus, "embedding")
   }
 
   /** Each corpus vector's coarse cell plus its RESIDUAL
@@ -588,8 +556,7 @@ object ProductQuantization {
     // stride 1 ≡ the full-corpus Lloyd refine, bit for bit; the auto
     // entry point passes Similarity.coarseTrainStride's bounded sample.
     val local =
-      Similarity.trainCentroidsSampled(corpus, nLists, lloydIters,
-        coarseStride)
+      Similarity.trainCentroids(corpus, nLists, lloydIters, coarseStride)
     val res = residuals(corpus, local)
     val cb = train(res, m, kCodes, vecCol = "resid", dimHint = dimHint)
     val corpusSide = materialized(encode(res, cb, vecCol = "resid")
@@ -651,36 +618,21 @@ object ProductQuantization {
                           rerankCorpus: Option[DataFrame] = None): DataFrame = {
     require(rerank <= 0 || rerankCorpus.nonEmpty,
       "rerank > 0 needs rerankCorpus (the float vectors to rescore)")
-    val spark = coded.sparkSession
-    val cent = Similarity.centroidsDf(spark, local)
-    val qn = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("_qe"), Similarity.norm(col("embedding")).as("_qn"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("_sim").desc, col("cell"))
-    val probes = qn.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        Similarity.cosFromDot(Similarity.dot(col("_qe"), col("cvec")),
-          col("_qn"), col("cn")).as("_sim"),
-        col("cell"))
-      .withColumn("_pr", row_number().over(qw))
-      .where(col("_pr") <= nProbe)
-      .select(col("query_id"), col("cell"))
-    val qlut = qn.select(col("query_id"), col("_qe"), col("_qn"),
-      lutArray(cb, col("_qe")).as("_lut"))
-    val scored = coded.join(broadcast(probes), "cell")
+    val qf = Similarity.queryFloats(queries)
+    val scored = coded
+      .join(broadcast(Similarity.probeCells(qf, local, nProbe)), "cell")
       .where(col("query_id") =!= col("vec_id"))
-      .join(broadcast(qlut), "query_id")
+      .join(broadcast(adcQueryLut(qf, cb)), "query_id")
       .join(broadcast(
         cellSide.select(col("cell"), col("cvec"), col("_cn2c"), col("_xt"))),
         "cell")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         Similarity.cosFromDot(
           Similarity.dot(col("_qe"), col("cvec")) +
-            sumLookup(col("_lut"), col("pq_code"), cb.m, cb.k),
-          sqrt(col("_cn2c") +
-            sumLookup(col("_xt"), col("pq_code"), cb.m, cb.k)),
+            sumLookup(col("_lut"), col("pq_code"), cb.k),
+          sqrt(col("_cn2c") + sumLookup(col("_xt"), col("pq_code"), cb.k)),
           col("_qn")).as("_adc"))
-    finishAdc(scored, qn, k, rerank, rerankCorpus, "embedding")
+    finishAdc(scored, qf, k, rerank, rerankCorpus, "embedding")
   }
 
   /** [[ivfPqResidualTopK]] at the scale-aware dials
@@ -735,31 +687,12 @@ object ProductQuantization {
     val n = corpusRows.getOrElse(corpus.count())
     val nLists = Similarity.autoNLists(n)
     val nProbe = math.max(4, math.ceil(math.sqrt(nLists.toDouble)).toInt)
-    val local =
-      if (fullRefine)
-        Similarity.collectCentroids(
-          (1 to lloydIters).foldLeft(Similarity.seedCentroids(corpus, nLists)) {
-            (c, _) => Similarity.refineCentroids(corpus, c)
-          })
-      else Similarity.trainCentroidsSampled(corpus, nLists, lloydIters,
-        Similarity.coarseTrainStride(n, nLists))
-    val corpusSide = materialized(encode(
-      Similarity.assignCells(
-        corpus.select(col("vec_id"), col("embedding"),
-          Similarity.norm(col("embedding")).as("_n")), local), cb)
-      .select(col("vec_id"), col("cell"), col("pq_code")))
-    ivfPqSearch(corpusSide, cb, local, queries, k, nProbe, rerank,
-      if (rerank > 0) Some(corpus) else None)
+    val stride =
+      if (fullRefine) 1L else Similarity.coarseTrainStride(n, nLists)
+    ivfPqOver(corpus, queries, k, cb,
+      Similarity.trainCentroids(corpus, nLists, lloydIters, stride), nProbe,
+      rerank)
   }
-
-  /** Alias for [[ivfPqTopKAuto]] from the round it was the opt-in
-    * sampled variant; sampled coarse training is now the auto default,
-    * so this simply delegates. */
-  def ivfPqTopKAutoSampled(corpus: DataFrame, queries: DataFrame, k: Int,
-                           cb: Codebooks, lloydIters: Int = 1,
-                           rerank: Int = 0,
-                           corpusRows: Option[Long] = None): DataFrame =
-    ivfPqTopKAuto(corpus, queries, k, cb, lloydIters, rerank, corpusRows)
 
   /** Persistent PQ store: train + encode ONCE, persist TWO artifacts
     * under the [[FingerprintStore]] contract (version-keyed by scheme +
@@ -838,7 +771,7 @@ object ProductQuantization {
 
   /** Persistent IVF-PQ index — the full managed production shape: ONE
     * build pass trains the sampled-√n coarse quantizer
-    * ([[Similarity.trainCentroidsSampled]] at the
+    * ([[Similarity.trainCentroids]] at the
     * [[Similarity.coarseTrainStride]] stride) and the PQ codebooks, then
     * persists THREE fingerprinted artifacts: the codebooks (`$tag-books`,
     * SHARED with [[pqStore]] at matching dials), the coarse centroids
@@ -868,7 +801,7 @@ object ProductQuantization {
       m, k, vecCol, s"$CodeStoreVersion-m$m-k$k")
     val coarseDf = FingerprintStore.getOrBuild(spark, sourcePath,
       s"$tag-coarse", s"$CodeStoreVersion-L$nLists-s$stride", storeRoot) {
-      val local = Similarity.trainCentroidsSampled(
+      val local = Similarity.trainCentroids(
         embeddings.select(col("vec_id"), col(vecCol).as("embedding")),
         nLists, lloydIters = 1, stride = stride)
       local.cells.indices
@@ -934,7 +867,7 @@ object ProductQuantization {
     val coarseDf = FingerprintStore.getOrBuild(spark, sourcePath,
       s"$tag-rescoarse", s"$CodeStoreVersion-res-L$nLists-s$stride",
       storeRoot) {
-      val local = Similarity.trainCentroidsSampled(corpus, nLists,
+      val local = Similarity.trainCentroids(corpus, nLists,
         lloydIters = 1, stride = stride)
       local.cells.indices
         .map(i => (local.cells(i), local.vecs(i).toSeq))

@@ -84,48 +84,24 @@ object Quantization {
   def hammingTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                   rerank: Int = 0, vecCol: String = "embedding",
                   dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = binarize(corpus, vecCol, dim).select(col("vec_id"), col("bcode"))
-    val q = binarize(queries, vecCol, dim)
-      .select(col("vec_id").as("query_id"), col("bcode").as("_qcode"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        bit_count(col("bcode").bitwiseXOR(col("_qcode"))).cast("long")
-          .as("hamming"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("neighbor_id"))
+    val scored = Similarity.hammingScan(corpus, queries, vecCol, dim)
     if (rerank <= 0) {
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
+      Similarity.rankTopK(scored, "query_id", col("hamming"), k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("hamming"))
     } else {
       require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-      val cand = scored.withColumn("_r", row_number().over(w))
-        .where(col("_r") <= rerank)
-        .select(col("query_id"), col("neighbor_id"))
-      val cf = corpus.select(col("vec_id").as("neighbor_id"),
-        col(vecCol).as("_ce"), Similarity.norm(col(vecCol)).as("_cn"))
-      val qf = queries.select(col("vec_id").as("query_id"),
-        col(vecCol).as("_qe"), Similarity.norm(col(vecCol)).as("_qn"))
-      // Query floats broadcast (Q rows); the corpus float side pinned to a
-      // shuffle join — never the broadcast build (round-16 plan audit).
-      val exact = cand.join(broadcast(qf), "query_id")
-        .join(cf.hint("SHUFFLE_MERGE"), "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-          round(Similarity.cosFromDot(Similarity.dot(col("_qe"), col("_ce")),
-            col("_qn"), col("_cn")), 6).as("cos"))
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      exact.withColumn("rank", row_number().over(w2).cast("long"))
-        .where(col("rank") <= k)
+      Similarity.exactRefine(
+        Similarity.candidateCut(scored, col("hamming"), rerank),
+        Similarity.queryFloats(queries, vecCol), corpus, k, vecCol)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
     }
   }
 
   /** IVF-cell-bounded Hamming search — the composed bottom tier: the IVF
     * coarse quantizer bounds each query's candidates to its `nProbe`
-    * nearest cells (exactly [[Similarity.ivfTopK]]'s machinery), the
+    * nearest cells ([[Similarity.trainCentroids]] +
+    * [[Similarity.probeCells]], the stages every IVF path shares), the
     * 1-bit sign codes rank those candidates by Hamming distance, the
     * Hamming top-`rerank` get ONE exact cosine each, and the exact top-k
     * comes out. [[hammingTopK]] scans the whole code table per query
@@ -147,7 +123,7 @@ object Quantization {
                      coarseStride: Long = 1L): DataFrame = {
     // stride 1 ≡ the full-corpus Lloyd refine, bit for bit; the auto
     // entry point passes Similarity.coarseTrainStride's bounded sample.
-    val local = Similarity.trainCentroidsSampled(corpus, nLists, lloydIters,
+    val local = Similarity.trainCentroids(corpus, nLists, lloydIters,
       coarseStride)
     val ccodes = binarize(
       Similarity.assignCells(
@@ -171,53 +147,23 @@ object Quantization {
                        corpus: DataFrame, queries: DataFrame, k: Int,
                        rerank: Int, nProbe: Int, dim: Int = 64,
                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-    val spark = ccodes.sparkSession
-    val cent = Similarity.centroidsDf(spark, local)
-    val qn = queries.select(col("vec_id").as("query_id"),
-      col(vecCol).as("_qe"), Similarity.norm(col(vecCol)).as("_qn"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("_sim").desc, col("cell"))
-    val probes = qn.crossJoin(broadcast(cent))
-      .select(col("query_id"),
-        Similarity.cosFromDot(Similarity.dot(col("_qe"), col("cvec")),
-          col("_qn"), col("cn")).as("_sim"),
-        col("cell"))
-      .withColumn("_pr", row_number().over(qw))
-      .where(col("_pr") <= nProbe)
-      .select(col("query_id"), col("cell"))
+    val qf = Similarity.queryFloats(queries, vecCol)
     val qcodes = binarize(queries, vecCol, dim)
       .select(col("vec_id").as("query_id"), col("bcode").as("_qc"))
-    val hw = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("neighbor_id"))
     // Probes are Q × nProbe id pairs — the broadcast build side by
     // construction; the corpus code table streams map-side (unpinned,
     // Catalyst broadcast the CODE TABLE — the round-16 audit finding).
-    val cand = ccodes.join(broadcast(probes), "cell")
+    val scored = ccodes
+      .join(broadcast(Similarity.probeCells(qf, local, nProbe)), "cell")
       .where(col("query_id") =!= col("vec_id"))
       .join(broadcast(qcodes), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         bit_count(col("bcode").bitwiseXOR(col("_qc"))).cast("long")
           .as("hamming"))
-      .withColumn("_r", row_number().over(hw))
-      .where(col("_r") <= rerank)
-      .select(col("query_id"), col("neighbor_id"))
-    val cf = corpus.select(col("vec_id").as("neighbor_id"),
-      col(vecCol).as("_ce"), Similarity.norm(col(vecCol)).as("_cn"))
-    // Same refine-join pins as [[hammingTopK]]: query floats broadcast,
-    // corpus float side never the broadcast build.
-    val exact = cand
-      .join(broadcast(qn.select(col("query_id"), col("_qe"), col("_qn"))),
-        "query_id")
-      .join(cf.hint("SHUFFLE_MERGE"), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(Similarity.cosFromDot(Similarity.dot(col("_qe"), col("_ce")),
-          col("_qn"), col("_cn")), 6).as("cos"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w2).cast("long"))
-      .where(col("rank") <= k)
+    Similarity.exactRefine(
+      Similarity.candidateCut(scored, col("hamming"), rerank), qf, corpus, k,
+      vecCol)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
@@ -284,7 +230,7 @@ object Quantization {
     val coarseDf = FingerprintStore.getOrBuild(spark, sourcePath,
       s"$tag-hcoarse", s"$CodeStoreVersion-ham-L$nLists-s$stride",
       storeRoot) {
-      val local = Similarity.trainCentroidsSampled(corpus, nLists,
+      val local = Similarity.trainCentroids(corpus, nLists,
         lloydIters = 1, stride = stride)
       local.cells.indices
         .map(i => (local.cells(i), local.vecs(i).toSeq))

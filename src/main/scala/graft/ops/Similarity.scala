@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   *     buckets. Candidate work is O(corpus × probes), not O(corpus ×
   *     queries); at 100 TB the bucket join replaces the broadcast.
   *
+  * Every ANN operator — here, in [[Quantization]] and in
+  * [[ProductQuantization]] — is one filter-then-refine pipeline built from
+  * the stages defined once below: the coarse trainer [[trainCentroids]],
+  * the IVF probe ranking [[probeCells]], the Hamming scan [[hammingScan]],
+  * the candidate cut [[candidateCut]], the exact-cosine refine
+  * [[exactRefine]] and the per-query top-k [[rankTopK]]. (The ADC LUT and
+  * score sit next to their kernels in [[ProductQuantization]].)
+  *
   * Cosine is an in-order double fold (`aggregate` over `zip_with`) so the
   * DuckDB oracle (`list_dot_product` et al.) can be validated digit-for-
   * digit; outputs are pre-rounded.
@@ -58,10 +66,78 @@ object Similarity {
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
         round(cosFromDot(dot(col("q.embedding"), col("c.embedding")),
           col("q._n"), col("c._n")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
+    rankTopK(scored, "query_id", col("cos").desc, k)
+  }
+
+  /** Per-key top-k: `rank` (long, from 1) by `score` then neighbor id,
+    * rows with rank ≤ k kept. The one ranking rule of every similarity
+    * operator — ties always break on the lower `neighbor_id`, and the
+    * `rank <= k` filter is what lets Spark prune each window map-side
+    * (WindowGroupLimit). `key` is `query_id` for searches and `vec_id`
+    * for [[knnGraph]]. */
+  private[ops] def rankTopK(scored: DataFrame, key: String, score: Column,
+                            k: Int): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(score, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
+  }
+
+  /** The candidate cut of a two-stage search: each query's [[rankTopK]]
+    * top-`n` (query_id, neighbor_id) pairs of `scored` — what the next,
+    * more exact stage rescores. */
+  private[ops] def candidateCut(scored: DataFrame, score: Column,
+                                n: Int): DataFrame =
+    rankTopK(scored, "query_id", score, n)
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** Query id, float vector and norm — (query_id, _qe, _qn): the query
+    * side every probe ranking, ADC LUT and exact refine reads. */
+  private[ops] def queryFloats(queries: DataFrame,
+                               vecCol: String = "embedding"): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col(vecCol).as("_qe"),
+      norm(col(vecCol)).as("_qn"))
+
+  /** Exact-cosine refine of candidate pairs (query_id, neighbor_id): each
+    * pair's cosine rounded to 6 decimals, then each query's [[rankTopK]]
+    * top-k — (query_id, neighbor_id, cos, rank). `qf` is [[queryFloats]].
+    *
+    * The query floats broadcast (Q rows); the CORPUS float side is pinned
+    * to a shuffle join — unpinned it was the broadcast build side (the
+    * whole float corpus), the round-16 plan audit's OOM-at-scale finding.
+    * AQE's exact post-shuffle stats may still localize the corpus read
+    * when the candidate side is genuinely small. Reads one float vector
+    * per candidate, never the corpus. */
+  private[ops] def exactRefine(cand: DataFrame, qf: DataFrame,
+                               corpus: DataFrame, k: Int,
+                               vecCol: String = "embedding"): DataFrame = {
+    val cf = corpus.select(col("vec_id").as("neighbor_id"),
+      col(vecCol).as("_ce"), norm(col(vecCol)).as("_cn"))
+    val scored = cand
+      .join(broadcast(qf.select(col("query_id"), col("_qe"), col("_qn"))),
+        "query_id")
+      .join(cf.hint("SHUFFLE_MERGE"), "neighbor_id")
+      .select(col("query_id"), col("neighbor_id"),
+        round(cosFromDot(dot(col("_qe"), col("_ce")),
+          col("_qn"), col("_cn")), 6).as("cos"))
+    rankTopK(scored, "query_id", col("cos").desc, k)
+  }
+
+  /** Whole-corpus Hamming scan over the 1-bit sign codes
+    * ([[Quantization.binarize]]): (query_id, neighbor_id, hamming) for
+    * every non-self pair — one xor + popcount each. The query codes
+    * broadcast (8 B each); the corpus side is a map over (id, one
+    * long). */
+  private[ops] def hammingScan(corpus: DataFrame, queries: DataFrame,
+                               vecCol: String, dim: Int): DataFrame = {
+    val c = Quantization.binarize(corpus, vecCol, dim)
+      .select(col("vec_id"), col("bcode"))
+    val q = Quantization.binarize(queries, vecCol, dim)
+      .select(col("vec_id").as("query_id"), col("bcode").as("_qc"))
+    c.join(broadcast(q), col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        bit_count(col("bcode").bitwiseXOR(col("_qc"))).cast("long")
+          .as("hamming"))
   }
 
   val NumHyperplanes = 32 // 8 tables x 4 planes
@@ -77,7 +153,7 @@ object Similarity {
     * on p, so every configuration's plane list is a PREFIX of the full
     * [[MaxHyperplanes]]-plane family — a wider config reuses the default's
     * planes verbatim and appends, which is what makes its candidate set a
-    * superset of the default's (see [[lshTopK]]'s 6-arg overload). */
+    * superset of the default's (see [[lshTopK]]). */
   private[graft] lazy val allPlanes: Array[Array[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(MaxHyperplanes) { p =>
@@ -95,75 +171,58 @@ object Similarity {
     allPlanes.take(n)
   }
 
-  private[graft] lazy val planes: Array[Array[Double]] =
-    planesFor(NumHyperplanes)
-
-  /** All 32 hyperplane sign bits of a vector as one long bitmask, via the
-    * batched codegen kernel [[graft.functions.HyperplaneSignBits]] (one
-    * expression, primitive `double[][]` planes — replaces 32 per-plane
+  /** The sign bits of a vector against the first `numPlanes` planes of
+    * the shared family (default [[NumHyperplanes]]) as one long bitmask,
+    * via the batched codegen kernel [[graft.functions.HyperplaneSignBits]]
+    * (one expression, primitive `double[][]` planes — replaces per-plane
     * [[graft.functions.VectorDot]] evaluations whose `typedLit` planes
-    * cost one unbox per element per row). Per-plane accumulation order is
-    * unchanged, so every downstream bucket value is bit-identical. */
-  def hyperplaneMask(vec: Column): Column =
-    graft.functions.VectorExpressions.hyperplaneSignBits(vec, planes)
+    * cost one unbox per element per row). Bit p of a wider mask equals
+    * bit p of the default mask for every shared plane (prefix property
+    * above). */
+  def hyperplaneMask(vec: Column, numPlanes: Int = NumHyperplanes): Column =
+    graft.functions.VectorExpressions.hyperplaneSignBits(vec,
+      planesFor(numPlanes))
 
-  /** [[hyperplaneMask]] over the first `numPlanes` planes of the shared
-    * family — bit p of the wider mask equals bit p of the default mask
-    * for every shared plane (prefix property above). */
-  def hyperplaneMaskAt(vec: Column, numPlanes: Int): Column =
-    graft.functions.VectorExpressions.hyperplaneSignBits(vec, planesFor(numPlanes))
+  /** `planesPerTable` sign bits of table `t`: the mask shifted right by
+    * t·planesPerTable and cut to its low `planesPerTable` bits. The cut is
+    * `-1L >>> (64 - planesPerTable)`: `(1L << 64) - 1` is 0 on the JVM
+    * (a long shift distance is taken mod 64), which would drop every
+    * vector of a 64-plane table into bucket 0. */
+  private def tableBits(mask: Column, t: Int, planesPerTable: Int): Column =
+    shiftright(mask, t * planesPerTable)
+      .bitwiseAND(lit(-1L >>> (64 - planesPerTable)))
 
   /** Banded multi-table LSH buckets from a precomputed sign-bit mask:
-    * NumTables entries of (table_id, PlanesPerTable sign bits). AND within
-    * a table, OR across tables — the standard recall/precision dial
-    * (all-16-bits-AND would give ~zero recall on weakly-similar vectors).
+    * `numTables` entries of (table_id, `planesPerTable` sign bits). AND
+    * within a table, OR across tables — the standard recall/precision
+    * dial (all-16-bits-AND would give ~zero recall on weakly-similar
+    * vectors; more tables = more OR-chances = higher recall at ×tables
+    * corpus explode cost).
     *
     * Callers MUST materialize the mask in its own projection (a `_mask`
-    * withColumn) rather than passing `hyperplaneMask(vec)` directly: the 8
+    * withColumn) rather than passing `hyperplaneMask(vec)` directly: the
     * table structs each reference the mask, and handing the kernel
     * expression itself here would rely on codegen subexpression
-    * elimination to avoid 8 re-evaluations. */
-  def bucketsFromMask(mask: Column): Column =
-    bucketsFromMask(mask, NumTables, PlanesPerTable)
-
-  /** Banded buckets at an explicit (numTables, planesPerTable) — the LSH
-    * recall dial as a parameter (more tables = more OR-chances = higher
-    * recall at ×tables corpus explode cost). */
-  def bucketsFromMask(mask: Column, numTables: Int,
-                      planesPerTable: Int): Column = {
-    val tables = (0 until numTables).map { t =>
-      struct(lit(t).as("tbl"),
-        shiftright(mask, t * planesPerTable)
-          .bitwiseAND(lit((1L << planesPerTable) - 1)).as("bits"))
-    }
-    array(tables: _*)
-  }
-
-  /** One-shot convenience for tests / small inputs: mask + buckets in a
-    * single column expression (the mask is re-evaluated per table — use
-    * the two-step [[hyperplaneMask]] → [[bucketsFromMask]] form on hot
-    * paths). */
-  def hyperplaneBuckets(vec: Column): Column =
-    bucketsFromMask(hyperplaneMask(vec))
+    * elimination to avoid a re-evaluation per table. */
+  def bucketsFromMask(mask: Column, numTables: Int = NumTables,
+                      planesPerTable: Int = PlanesPerTable): Column =
+    array((0 until numTables).map { t =>
+      struct(lit(t).as("tbl"), tableBits(mask, t, planesPerTable).as("bits"))
+    }: _*)
 
   /** Multi-probe buckets: for each table, the exact bucket PLUS every
-    * 1-bit flip of its PlanesPerTable sign bits — the standard LSH recall
-    * lift (a near neighbor that lands one hyperplane away is still
+    * 1-bit flip of its `planesPerTable` sign bits — the standard LSH
+    * recall lift (a near neighbor that lands one hyperplane away is still
     * probed). Applied to the QUERY side only, so the corpus explode
-    * factor — the side that matters at scale — stays NumTables; probe
+    * factor — the side that matters at scale — stays `numTables`; probe
     * cost grows only with the (small) query set. */
-  def probeBucketsFromMask(mask: Column): Column =
-    probeBucketsFromMask(mask, NumTables, PlanesPerTable)
-
-  /** Multi-probe buckets at an explicit configuration (see above). */
-  def probeBucketsFromMask(mask: Column, numTables: Int,
-                           planesPerTable: Int): Column = {
+  def probeBucketsFromMask(mask: Column, numTables: Int = NumTables,
+                           planesPerTable: Int = PlanesPerTable): Column = {
     val entries = for {
       t <- 0 until numTables
       f <- -1 until planesPerTable // -1 = the exact (unflipped) bucket
     } yield {
-      val bits = shiftright(mask, t * planesPerTable)
-        .bitwiseAND(lit((1L << planesPerTable) - 1))
+      val bits = tableBits(mask, t, planesPerTable)
       val probed = if (f < 0) bits else bits.bitwiseXOR(lit(1L << f))
       struct(lit(t).as("tbl"), probed.as("bits"))
     }
@@ -177,28 +236,24 @@ object Similarity {
     * broadcast with a shuffle proportional to matching buckets only.
     *
     * The bucket join carries ONLY (vec_id, tbl, bits): embeddings never
-    * ride the ×NumTables explode shuffle, candidate pairs are
+    * ride the ×numTables explode shuffle, candidate pairs are
     * id-distinct'd BEFORE the rerank (a pair colliding in several
     * tables/probes is scored once, not per collision), and the vectors
-    * are joined back just for the one scoring pass. */
+    * are joined back just for the one scoring pass ([[exactRefine]]).
+    *
+    * (numTables, planesPerTable) is the production recall dial. Because
+    * every configuration's planes are a prefix of one shared family, a
+    * run with MORE tables (same planesPerTable) generates a candidate
+    * SUPERSET of the default's: its first [[NumTables]] tables produce
+    * bit-identical buckets, the extra tables only add collisions — so
+    * recall@k is monotone in the table count (property-tested; exercised
+    * oracle-gated at 12×4 by `sim_ann_lsh_wide`). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              multiProbe: Boolean = true): DataFrame =
-    lshTopK(corpus, queries, k, multiProbe, NumTables, PlanesPerTable)
-
-  /** [[lshTopK]] at an explicit (numTables, planesPerTable) — the
-    * production recall dial. Because every configuration's planes are a
-    * prefix of one shared family, a run with MORE tables (same
-    * planesPerTable) generates a candidate SUPERSET of the default's:
-    * its first NumTables tables produce bit-identical buckets, the extra
-    * tables only add collisions — so recall@k is monotone in the table
-    * count (property-tested; exercised oracle-gated at 12×4 by
-    * `sim_ann_lsh_wide`). */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              multiProbe: Boolean, numTables: Int,
-              planesPerTable: Int): DataFrame = {
+              multiProbe: Boolean = true, numTables: Int = NumTables,
+              planesPerTable: Int = PlanesPerTable): DataFrame = {
     val numPlanes = numTables * planesPerTable
     def bucketed(df: DataFrame, probe: Boolean) = df
-      .withColumn("_mask", hyperplaneMaskAt(col("embedding"), numPlanes))
+      .withColumn("_mask", hyperplaneMask(col("embedding"), numPlanes))
       .withColumn("bb", explode(
         if (probe) probeBucketsFromMask(col("_mask"), numTables, planesPerTable)
         else bucketsFromMask(col("_mask"), numTables, planesPerTable)))
@@ -211,25 +266,7 @@ object Similarity {
           col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"))
       .distinct()
-    def vecs(df: DataFrame, idCol: String, e: String, n: String) = df
-      .select(col("vec_id").as(idCol), col("embedding").as(e),
-        norm(col("embedding")).as(n))
-    // Rerank: query vectors broadcast (Q rows); the CORPUS float side is
-    // pinned to a shuffle join — unpinned it was the broadcast build side
-    // (the whole float corpus), the round-16 audit's OOM-at-scale finding.
-    // AQE's exact post-shuffle stats may still localize the corpus read
-    // when the candidate side is genuinely small.
-    val scored = cand
-      .join(broadcast(vecs(queries, "query_id", "_qe", "_qn")), "query_id")
-      .join(vecs(corpus, "neighbor_id", "_ce", "_cn").hint("SHUFFLE_MERGE"),
-        "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosFromDot(dot(col("_qe"), col("_ce")),
-          col("_qn"), col("_cn")), 6).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    exactRefine(cand, queryFloats(queries), corpus, k)
   }
 
   /** Scale-aware IVF list count: `max(16, ceil(sqrt(n)))` — the classic
@@ -260,16 +297,18 @@ object Similarity {
   def coarseTrainStride(corpusRows: Long, nLists: Int): Long =
     math.max(1L, corpusRows / (16L * nLists))
 
-  /** Coarse centroids with the Lloyd refinement restricted to the
-    * [[coarseTrainStride]] sample: seeds are the usual first-nLists rows,
-    * each refine iteration assigns ONLY `vec_id % stride == 0` rows and
-    * re-means over those. Stride 1 is bit-identical to the full trainer.
-    * The final corpus-wide cell assignment (which every IVF consumer does
+  /** The coarse-quantizer trainer — every IVF consumer's one: seeds are
+    * the first `nLists` rows ([[seedCentroids]]), refined by `lloydIters`
+    * Lloyd iterations ([[refineCentroids]]), collected to the driver.
+    * With `stride` > 1 each refine iteration assigns ONLY the
+    * `vec_id % stride == 0` rows ([[coarseTrainStride]]'s sample) and
+    * re-means over those; stride 1 refines over the whole corpus. The
+    * final corpus-wide cell assignment (which every IVF consumer does
     * against the RETURNED centroids) is unchanged — sampling bounds who
     * VOTES on centroid positions, never who gets assigned. */
-  private[graft] def trainCentroidsSampled(corpus: DataFrame, nLists: Int,
-                                           lloydIters: Int,
-                                           stride: Long): LocalCentroids = {
+  private[ops] def trainCentroids(corpus: DataFrame, nLists: Int,
+                                  lloydIters: Int,
+                                  stride: Long = 1L): LocalCentroids = {
     val sample =
       if (stride <= 1L) corpus
       else corpus.where(col("vec_id") % lit(stride) === 0)
@@ -319,13 +358,10 @@ object Similarity {
     * nLists). The oracle mirrors the emit-nothing semantics. */
   def knnGraph(corpus: DataFrame, k: Int, nLists: Int = 16,
                lloydIters: Int = 1): DataFrame = {
-    val local = collectCentroids(
-      (1 to lloydIters).foldLeft(seedCentroids(corpus, nLists)) {
-        (c, _) => refineCentroids(corpus, c)
-      })
     val assigned = assignCells(
       corpus.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("_n")), local)
+        norm(col("embedding")).as("_n")),
+      trainCentroids(corpus, nLists, lloydIters))
     // Corpus × corpus cell self-join: co-partitioned shuffle, pinned —
     // Catalyst's post-assignCells estimate otherwise judged the build side
     // broadcastable (= the whole corpus with embeddings).
@@ -335,10 +371,7 @@ object Similarity {
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
         round(cosFromDot(dot(col("a.embedding"), col("b.embedding")),
           col("a._n"), col("b._n")), 6).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    rankTopK(scored, "vec_id", col("cos").desc, k)
   }
 
   /** [[knnGraph]] at the scale-aware √n dial ([[autoNLists]]) — the
@@ -449,36 +482,17 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nLists: Int = 16, nProbe: Int = 4,
               lloydIters: Int = 1): DataFrame = {
-    val local = collectCentroids(
-      (1 to lloydIters).foldLeft(seedCentroids(corpus, nLists)) {
-        (c, _) => refineCentroids(corpus, c)
-      })
+    val local = trainCentroids(corpus, nLists, lloydIters)
     // nearest cell per corpus vector: the map-only assignCells kernel —
     // the corpus-sized side never expands, aggregates, or joins
-    def cellOf(df: DataFrame): DataFrame =
-      assignCells(df.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("_n")), local)
-    val assigned = cellOf(corpus)
-    // queries keep their nProbe best cells: top-nProbe needs centroid
-    // ROWS, so the (small) query side expands against the literal
-    // centroid table — id-only through the window, embedding joined back
-    val cent = centroidsDf(corpus.sparkSession, local)
-    val qbase = queries.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("_n"))
-    val qw = Window.partitionBy(col("vec_id"))
-      .orderBy(col("_sim").desc, col("cell"))
-    val probes = qbase
-      .join(
-        qbase.crossJoin(broadcast(cent))
-          .select(col("vec_id"),
-            cosFromDot(dot(col("embedding"), col("cvec")),
-              col("_n"), col("cn")).as("_sim"),
-            col("cell"))
-          .withColumn("_pr", row_number().over(qw))
-          .where(col("_pr") <= nProbe)
-          .select(col("vec_id"), col("cell")),
-        "vec_id")
-      .select(col("vec_id"), col("embedding"), col("_n"), col("cell"))
+    val assigned = assignCells(corpus.select(col("vec_id"), col("embedding"),
+      norm(col("embedding")).as("_n")), local)
+    // queries keep their nProbe best cells ([[probeCells]], id-only),
+    // the embedding joined back for the in-cell scoring
+    val probes = queries.select(col("vec_id"), col("embedding"),
+        norm(col("embedding")).as("_n"))
+      .join(probeCells(queryFloats(queries), local, nProbe)
+        .select(col("query_id").as("vec_id"), col("cell")), "vec_id")
     // exact rerank inside probed cells. The probe side is structurally
     // small (Q × nProbe rows under the bounded-query-batch contract), so
     // it is the broadcast build side BY CONSTRUCTION: the corpus streams
@@ -492,9 +506,26 @@ object Similarity {
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
         round(cosFromDot(dot(col("q.embedding"), col("c.embedding")),
           col("q._n"), col("c._n")), 6).as("cos"))
+    rankTopK(scored, "query_id", col("cos").desc, k)
+  }
+
+  /** IVF probe ranking: each query's `nProbe` nearest coarse cells by
+    * cosine (ties to the lower cell) — (query_id, cell). Top-nProbe needs
+    * centroid ROWS, so the (small) query side `qf` ([[queryFloats]])
+    * expands against the literal centroid table, broadcast; the window
+    * runs over Q × nLists rows, never the corpus. */
+  private[ops] def probeCells(qf: DataFrame, local: LocalCentroids,
+                              nProbe: Int): DataFrame = {
+    val cent = centroidsDf(qf.sparkSession, local)
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+      .orderBy(col("_sim").desc, col("cell"))
+    qf.crossJoin(broadcast(cent))
+      .select(col("query_id"),
+        cosFromDot(dot(col("_qe"), col("cvec")), col("_qn"), col("cn"))
+          .as("_sim"),
+        col("cell"))
+      .withColumn("_pr", row_number().over(w))
+      .where(col("_pr") <= nProbe)
+      .select(col("query_id"), col("cell"))
   }
 }

@@ -502,7 +502,7 @@ object SimilarityRows {
                        table: String = "embeddings",
                        nProbeSql: String = "4",
                        refineStrideSql: String = "1"): String = {
-    // Sampled coarse training (Similarity.trainCentroidsSampled): only
+    // Sampled coarse training (Similarity.trainCentroids): only
     // every stride-th vec_id VOTES in the Lloyd refine; stride "1" keeps
     // the chain byte-identical to the full trainer's.
     val sampleWhere =
@@ -1123,7 +1123,8 @@ object SimilarityRows {
         |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // ... and its production recall gate (exact refine of 50 candidates):
-    // 0.94 / 0.97 at sf0.01 / sf0.1, standard 0.8 bar.
+    // 0.94 / 0.92 at sf0.01 / sf0.1 with the sampled coarse training
+    // (0.97 at sf0.1 with the full refine), standard 0.8 bar.
     QueryDef("sim_ann_ivf_pq_auto_recall", (s, dir) =>
       annRecall(s, dir, (c, q) =>
         graft.ops.ProductQuantization.ivfPqTopKAuto(c, q, 5,
@@ -1151,41 +1152,6 @@ object SimilarityRows {
       """
         |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    // The SAMPLED coarse-training rows (stride = max(1, n/(16*nLists))
-    // — the FAISS bounded-sample practice). Since round 17 this IS the
-    // auto default, so these rows gate the same path as
-    // sim_ann_ivf_pq_auto through the sampled entry-point alias; kept
-    // because the A/B history (SCALING.md) names them. Stride
-    // degenerates to 1 at sf0.01 (sampled == full, asserted in PqSpec);
-    // sf0.1 runs stride 2, so the sampling arithmetic itself is
-    // hash-compared. Full top-5 hash-compares at both scales.
-    QueryDef("sim_ann_ivf_pq_auto_sampled", (s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.ops.ProductQuantization.ivfPqTopKAutoSampled(
-        emb, emb.where(col("vec_id") < 20), 5,
-        graft.ops.ProductQuantization.train(emb, 16, 32, dimHint = Some(64)))
-        .orderBy("query_id", "rank")
-    },
-    // Sampled coarse training: the auto chain with the Lloyd refine
-    // restricted to every stride-th vec_id (stride recomputed from
-    // count(*) — see AutoCoarseStrideSql).
-    "WITH " + SampledIvfPqChain + ", " +
-      pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      """
-        |SELECT query_id, rank, neighbor_id, round(a, 6) AS adc FROM pranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-    // ... and its production recall gate (exact refine of 50): the
-    // standard 0.8 bar — the dial question is whether a 16-vectors-per-
-    // centroid training sample costs recall vs the full trainer's
-    // 0.94 / 0.97.
-    QueryDef("sim_ann_ivf_pq_auto_sampled_recall", (s, dir) =>
-      annRecall(s, dir, (c, q) =>
-        graft.ops.ProductQuantization.ivfPqTopKAutoSampled(c, q, 5,
-          graft.ops.ProductQuantization.train(c, 16, 32, dimHint = Some(64)),
-          rerank = 50)),
-    "WITH " + SampledIvfPqChain +
-      ", " + pqChains(16, 32, 4, includeNrm = false) + IvfPqTail +
-      pqRerankTail(50, "pranked") + recallTail(0.8, "rranked")),
     // The fully MANAGED IVF-PQ index: coarse centroids (sampled-sqrt-n),
     // codebooks, and (vec_id, cell, pq_code) index rows all come from
     // fingerprinted write-once stores; search reads NOTHING but stored

@@ -74,6 +74,12 @@ class EntryPointSpec extends SparkSuite {
     assert(blank.isEmpty, s"blank oracles: ${blank.mkString(", ")}")
   }
 
+  test("every DumpPlans headliner is a registry row") {
+    val missing = DumpPlans.Headliners.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty,
+      s"headliners not in SparkEntry.queries: ${missing.mkString(", ")}")
+  }
+
   test("Verify.writeRow fails a row that leaves a table cached and " +
     "deletes its output") {
     val out = tmpDir("verify-leak")

@@ -21,17 +21,31 @@ class LshConfigPropertySpec extends SparkSuite {
 
   test("plane family is prefix-shared: the 48-plane mask's low 32 bits " +
     "equal the default 32-plane mask") {
-    assert(Similarity.planesFor(48).take(32).zip(Similarity.planes)
+    assert(Similarity.planesFor(48).take(32)
+      .zip(Similarity.planesFor(Similarity.NumHyperplanes))
       .forall { case (a, b) => a.sameElements(b) })
     val rows = emb.limit(50)
       .select(
         Similarity.hyperplaneMask(col("embedding")).as("m32"),
-        Similarity.hyperplaneMaskAt(col("embedding"), 48).as("m48"))
+        Similarity.hyperplaneMask(col("embedding"), 48).as("m48"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert((r.getLong(1) & 0xFFFFFFFFL) == r.getLong(0))
     }
+  }
+
+  test("a 1x64 table keeps all 64 sign bits: its bucket is the mask, not 0") {
+    val mask = 0x8123456789ABCDEFL
+    val one = Seq(mask).toDF("m")
+    val buckets = one
+      .select(explode(Similarity.bucketsFromMask(col("m"), 1, 64)).as("b"))
+      .select(col("b.bits")).collect().map(_.getLong(0))
+    assert(buckets.toSeq == Seq(mask))
+    val probes = one
+      .select(explode(Similarity.probeBucketsFromMask(col("m"), 1, 64)).as("b"))
+      .select(col("b.bits")).collect().map(_.getLong(0))
+    assert(probes.toSeq == (mask +: (0 until 64).map(f => mask ^ (1L << f))))
   }
 
   test("recall@5 is monotone in the table count (12x4 >= 8x4) and the " +

@@ -881,8 +881,9 @@ class OpsSpec extends SparkSuite {
     // reference: same in-order double fold per plane, on the driver
     for ((id, v) <- vecs) {
       var mask = 0L
-      for (p <- Similarity.planes.indices) {
-        val w = Similarity.planes(p)
+      val planes = Similarity.planesFor(Similarity.NumHyperplanes)
+      for (p <- planes.indices) {
+        val w = planes(p)
         var acc = 0.0
         for (i <- 0 until math.min(v.length, w.length))
           acc += v(i).toDouble * w(i)

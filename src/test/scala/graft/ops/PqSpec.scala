@@ -250,14 +250,14 @@ class PqSpec extends SparkSuite {
     }
   }
 
-  test("trainCentroidsSampled: stride 1 is bit-identical to the full " +
+  test("trainCentroids: stride 1 is bit-identical to the full " +
     "trainer; stride s trains on exactly the vec_id % s == 0 voters") {
     val full = Similarity.collectCentroids(
       Similarity.refineCentroids(corpus, Similarity.seedCentroids(corpus, 2)))
-    val s1 = Similarity.trainCentroidsSampled(corpus, 2, 1, stride = 1)
+    val s1 = Similarity.trainCentroids(corpus, 2, 1, stride = 1)
     assert(s1.cells.sameElements(full.cells))
     assert(s1.vecs.zip(full.vecs).forall { case (a, b) => a.sameElements(b) })
-    val s2 = Similarity.trainCentroidsSampled(corpus, 2, 1, stride = 2)
+    val s2 = Similarity.trainCentroids(corpus, 2, 1, stride = 2)
     val manual = Similarity.collectCentroids(
       Similarity.refineCentroids(corpus.where(col("vec_id") % 2 === 0),
         Similarity.seedCentroids(corpus, 2)))
@@ -275,7 +275,7 @@ class PqSpec extends SparkSuite {
     val root = tmpDir("ivfpq-store")
     val q = emb.where(col("vec_id") < 2)
     val fresh = ProductQuantization
-      .ivfPqTopKAutoSampled(emb, q, 2,
+      .ivfPqTopKAuto(emb, q, 2,
         ProductQuantization.train(emb, m = 4, k = 2))
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     for (_ <- 1 to 2) { // second pass serves everything from the store

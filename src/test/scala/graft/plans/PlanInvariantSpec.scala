@@ -357,7 +357,7 @@ class PlanInvariantSpec extends SparkSuite {
     for (q <- Seq("sim_topk_bruteforce", "sim_hamming_topk", "sim_ann_lsh",
         "sim_ann_ivf", "sim_ann_ivf_quantized", "sim_ann_ivf_hamming",
         "sim_ann_ivf_pq", "sim_ann_ivf_pq_residual", "sim_pq_adc",
-        "sim_ann_ivf_pq_auto_sampled")) {
+        "sim_ann_ivf_pq_auto", "sim_cascade_topk", "sim_knn_graph")) {
       val plan = graft.SparkEntry.queries(q)(spark, sfDir)
         .queryExecution.executedPlan
       plan.foreach {
