@@ -159,9 +159,11 @@ object DumpPlans {
   /** The formatted physical plan of `df` with its run-specific tokens
     * normalized, so regenerating PLANS.md on unchanged code rewrites
     * nothing and a diff shows only plan changes: expression ids (`#N`),
-    * `plan_id`s and RDD ids are renumbered by order of first appearance;
-    * JVM lambda class suffixes (`$$Lambda$N/0x…`), object identity hashes
-    * (`@1a2b3c4d`) and the source lines of RDD call sites are masked. */
+    * `plan_id`s, RDD ids and the suffixes of lambda variable names
+    * (`lambda x_60`, drawn from a JVM-wide counter) are renumbered by
+    * order of first appearance; JVM lambda class suffixes
+    * (`$$Lambda$N/0x…`), object identity hashes (`@1a2b3c4d`) and the
+    * source lines of RDD call sites are masked. */
   private[graft] def formattedPlan(df: DataFrame): String = {
     val raw = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     val masked = Seq(
@@ -169,11 +171,12 @@ object DumpPlans {
       """@[0-9a-f]{4,}\b""" -> "@<hash>",
       """\.scala:\d+""" -> ".scala:<line>")
       .foldLeft(raw) { case (t, (re, to)) => re.r.replaceAllIn(t, to) }
-    Seq("#" -> """#(\d+)""", "plan_id=" -> """plan_id=(\d+)""",
-        "RDD[" -> """RDD\[(\d+)""").foldLeft(masked) { case (t, (prefix, re)) =>
+    // group 1 is kept, group 2 is the number to renumber
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(RDD\[)(\d+)""",
+        """(lambda [a-z]+_)(\d+)""").foldLeft(masked) { (t, re) =>
       val seen = mutable.LinkedHashMap.empty[String, Int]
       re.r.replaceAllIn(t, m => Regex.quoteReplacement(
-        prefix + seen.getOrElseUpdate(m.group(1), seen.size + 1)))
+        m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size + 1)))
     }
   }
 

@@ -58,12 +58,9 @@ object Curation {
     probeContamination(docGrams(docs), evalGrams.select(col("sh")))
 
   /** (doc_id, sh) distinct 3-token shingles per document — the corpus-side
-    * probe rows. Two-step select so the tokenizer is materialized before
-    * the shingle lambda (the CollapseProject re-tokenization trap). */
-  private def docGrams(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-    .select(col("doc_id"),
-      explode(array_distinct(TextAnalysis.shingles3(col("_t")))).as("sh"))
+    * probe rows ([[Dedup.shingleSets]], exploded). */
+  private def docGrams(docs: DataFrame): DataFrame =
+    Dedup.shingleSets(docs, Seq("doc_id"), exploded = true)
 
   /** Broadcast-probe core: mark each corpus gram that appears in the eval
     * set, aggregate per doc, keep contaminated docs. The eval side is

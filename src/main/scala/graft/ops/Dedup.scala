@@ -9,6 +9,16 @@ import graft.CacheScope
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
   * SimHash, and blocked n-gram-Jaccard near-dup detection.
   *
+  * Every near-dup operator is composed from a few shared stages, each
+  * written once here: [[shingleSets]] (distinct 3-shingle sets, the
+  * two-select tokenize-then-shingle shape), [[bandSelfJoin]] (the
+  * same-corpus LSH bucket self-join), [[verifyJaccard]] (exact Jaccard
+  * over candidate pairs), [[bandedSigPairs]] (the chunk-banded Hamming
+  * join behind [[hammingPairsFromSig]] and [[crossHammingPairs]]) and
+  * [[blockedPostings]] (the df-cut inverted-index join behind
+  * [[blockedNgramJaccard]] and [[blockedContainment]]). An operator adds
+  * only its own score, threshold and orientation.
+  *
   * Scale design (the point of each shape):
   *   - exact dedup: one hash-groupBy — a single shuffle on a 32-byte key,
   *     partial-aggregated map-side; works at any scale.
@@ -56,11 +66,9 @@ object Dedup {
     * round 21) — the signature is a pure per-document function, so the
     * declarative explode + corpus-token-scale min aggregation
     * (kept test-side and pinned value-identical by MinhashKernelSpec)
-    * was removable outright. */
-  def minhashSignature(docs: DataFrame): DataFrame =
-    minhashSignature(docs, NumMinhashes)
-
-  /** As above at an explicit hash count — the production recall/precision
+    * was removable outright.
+    *
+    * `numHashes` is the production recall/precision
     * knob (more hashes = finer jaccard resolution; pair with more bands
     * in [[minhashCandidates(docs:DataFrame,numHashes:Int,numBands:Int)*]]).
     * Still one md5 per shingle regardless of k: every extra hash is one
@@ -75,7 +83,8 @@ object Dedup {
     * `_mh IS NOT NULL`: Catalyst pushes that filter below the projection
     * by alias substitution, which would run the md5-heavy kernel twice
     * per row (once in the Filter, once in the Project). */
-  def minhashSignature(docs: DataFrame, numHashes: Int): DataFrame = {
+  def minhashSignature(docs: DataFrame,
+                       numHashes: Int = NumMinhashes): DataFrame = {
     val sig = graft.functions.MinhashExpressions
       .minhashSig(col("text"), numHashes)
     docs
@@ -100,19 +109,23 @@ object Dedup {
   /** LSH candidate pairs only (no verification): docs sharing any band
     * (band b joins on the raw minhash pair (mh_{2b}, mh_{2b+1})), distinct,
     * d1 < d2. The cheap first stage shared by pair-scoring and clustering. */
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val buckets = bandBuckets(minhashSignature(docs))
-    // Band-bucket SELF-join: both sides are the same corpus-sized table,
-    // and Catalyst's size estimate does not survive the signature/band
-    // projection — left unpinned it broadcast the build side (the round-15
-    // posting-join failure mode, found again by the round-16 plan audit).
+  def minhashCandidates(docs: DataFrame): DataFrame =
+    bandSelfJoin(bandBuckets(minhashSignature(docs)), Seq("band", "h1", "h2"))
+
+  /** Same-corpus band-bucket SELF-join on the bucket key columns `keys`:
+    * distinct (d1, d2) doc pairs, d1 < d2, sharing any bucket. Both sides
+    * are the same corpus-sized table, and Catalyst's size estimate does
+    * not survive the signature/band projection — left unpinned it
+    * broadcast the build side (the round-15 posting-join failure mode,
+    * found again by the round-16 plan audit), so the join is pinned
+    * SHUFFLE_MERGE. */
+  private def bandSelfJoin(buckets: DataFrame, keys: Seq[String]): DataFrame =
     buckets.as("a")
       .join(buckets.as("b").hint("SHUFFLE_MERGE"),
-        col("a.band") === col("b.band") && col("a.h1") === col("b.h1") &&
-          col("a.h2") === col("b.h2") && col("a.doc_id") < col("b.doc_id"))
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-  }
 
   /** (doc_id, band, bkey) band-bucket rows at an arbitrary
     * (numHashes, numBands) configuration — the production LSH dial
@@ -146,16 +159,9 @@ object Dedup {
     * aside) — property-tested; at production configs the same topology
     * scales bands/hashes with zero schema change. */
   def minhashCandidates(docs: DataFrame, numHashes: Int,
-                        numBands: Int): DataFrame = {
-    val buckets = bandBucketsAt(minhashSignature(docs, numHashes),
-      numHashes, numBands)
-    buckets.as("a")
-      .join(buckets.as("b").hint("SHUFFLE_MERGE"), // corpus self-join: never broadcast
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-  }
+                        numBands: Int): DataFrame =
+    bandSelfJoin(bandBucketsAt(minhashSignature(docs, numHashes),
+      numHashes, numBands), Seq("band", "bkey"))
 
   /** LSH candidate pairs verified with exact Jaccard over distinct
     * shingles. Returns (d1, d2, jaccard), d1 < d2.
@@ -171,33 +177,52 @@ object Dedup {
     * buckets come from the signature store, so the prune is free there
     * and stays. */
   def minhashLshPairs(docs: DataFrame): DataFrame =
-    jaccardVerify(docs, minhashCandidates(docs))
+    verifySameCorpus(docs, minhashCandidates(docs))
 
   /** [[minhashLshPairs]] at an explicit (numHashes, numBands)
     * configuration — candidates from the folded-key banding, identical
     * exact-Jaccard verification. */
   def minhashLshPairs(docs: DataFrame, numHashes: Int,
                       numBands: Int): DataFrame =
-    jaccardVerify(docs, minhashCandidates(docs, numHashes, numBands))
+    verifySameCorpus(docs, minhashCandidates(docs, numHashes, numBands))
+
+  /** Same-corpus exact-Jaccard verification of a (d1, d2) candidate
+    * table: both sides read one shingle-set table. */
+  private def verifySameCorpus(docs: DataFrame, cand: DataFrame): DataFrame = {
+    val sets = shingleSets(docs, Seq("doc_id"))
+    verifyJaccard(cand, "d1" -> sets, "d2" -> sets)
+  }
+
+  /** Per-doc distinct 3-token shingle sets, keeping the `keep` columns:
+    * (keep…, shs) arrays, or (keep…, sh) rows when `exploded`. Two selects,
+    * with the `explode` inside the second: the tokenizer is materialized
+    * before the shingle lambda reads it. Moving that projection boundary
+    * lets CollapseProject inline the tokenizer into the lambda and
+    * re-tokenize per element (the round-6 10-20x regression noted at
+    * [[blockedNgramJaccard]]). */
+  private[ops] def shingleSets(docs: DataFrame, keep: Seq[String],
+                               exploded: Boolean = false): DataFrame = {
+    val sets = array_distinct(TextAnalysis.shingles3(col("_t")))
+    docs.select(keep.map(col) :+ TextAnalysis.tokens(col("text")).as("_t"): _*)
+      .select(keep.map(col) :+
+        (if (exploded) explode(sets).as("sh") else sets.as("shs")): _*)
+  }
 
   /** Exact-Jaccard verification of a candidate-pair table: candidate-keyed
-    * inner joins against per-doc distinct shingle sets, so only candidate
-    * docs' sets ever cross the wire. */
-  private def jaccardVerify(docs: DataFrame, cand: DataFrame): DataFrame = {
-    val shingleSets = docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-      .select(col("doc_id"),
-        array_distinct(TextAnalysis.shingles3(col("_t"))).as("shs"))
-    // The shingle-set sides are corpus-sized (one array row per doc) and
-    // must never be the broadcast build side; SHUFFLE_MERGE keeps the
-    // verification candidate-keyed, and AQE's exact post-shuffle stats can
-    // still localize the read when the candidate side is truly small.
+    * inner joins of each id column against a [[shingleSets]] table
+    * (doc_id, shs), so only candidate docs' sets ever cross the wire.
+    * Emits (id1, id2, jaccard). The shingle-set sides are corpus-sized
+    * (one array row per doc) and must never be the broadcast build side;
+    * SHUFFLE_MERGE keeps the verification candidate-keyed, and AQE's
+    * exact post-shuffle stats can still localize the read when the
+    * candidate side is truly small. */
+  private def verifyJaccard(cand: DataFrame, side1: (String, DataFrame),
+                            side2: (String, DataFrame)): DataFrame = {
+    val ((id1, sets1), (id2, sets2)) = (side1, side2)
     cand
-      .join(shingleSets.as("s1").hint("SHUFFLE_MERGE"),
-        col("d1") === col("s1.doc_id"))
-      .join(shingleSets.as("s2").hint("SHUFFLE_MERGE"),
-        col("d2") === col("s2.doc_id"))
-      .select(col("d1"), col("d2"),
+      .join(sets1.as("s1").hint("SHUFFLE_MERGE"), col(id1) === col("s1.doc_id"))
+      .join(sets2.as("s2").hint("SHUFFLE_MERGE"), col(id2) === col("s2.doc_id"))
+      .select(col(id1), col(id2),
         jaccard(col("s1.shs"), col("s2.shs")).as("jaccard"))
   }
 
@@ -229,22 +254,12 @@ object Dedup {
     // each extra reference re-mines the old corpus's signatures too, the
     // measured regression documented at [[minhashLshPairs]] — so the
     // prune is applied only on the stored path.
-    def shingleSets(d: DataFrame, ids: Column) = {
-      val base = if (oldBuckets.isDefined)
-        d.join(cand.select(ids.as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      else d
-      base
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-        .select(col("doc_id"),
-          array_distinct(TextAnalysis.shingles3(col("_t"))).as("shs"))
-    }
-    cand
-      .join(shingleSets(newDocs, col("new_id")).as("s1").hint("SHUFFLE_MERGE"),
-        col("new_id") === col("s1.doc_id"))
-      .join(shingleSets(oldDocs, col("old_id")).as("s2").hint("SHUFFLE_MERGE"),
-        col("old_id") === col("s2.doc_id"))
-      .select(col("new_id"), col("old_id"),
-        jaccard(col("s1.shs"), col("s2.shs")).as("jaccard"))
+    def sets(d: DataFrame, ids: String) = shingleSets(
+      if (oldBuckets.isDefined)
+        d.join(cand.select(col(ids).as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+      else d, Seq("doc_id"))
+    verifyJaccard(cand, "new_id" -> sets(newDocs, "new_id"),
+      "old_id" -> sets(oldDocs, "old_id"))
   }
 
   /** Signature-algorithm version baked into every store directory name.
@@ -286,7 +301,7 @@ object Dedup {
 
   /** Default SimHash width — 16-bit so the DuckDB oracle can mirror the
     * md5-prefix token hash bit-exactly. Production scale uses `bits = 64`
-    * ([[simhash(docs:DataFrame,bits:Int)*]]): 16 bits means at most 65,536
+    * ([[simhash]]): 16 bits means at most 65,536
     * distinct signatures, so at billions of docs every bucket collides and
     * the distinct-signature join optimization inverts. */
   val SimhashBits = 16
@@ -296,8 +311,6 @@ object Dedup {
     * (chunk size scales with the width: 4-bit chunks at 16 bits, 16-bit
     * chunks at 64). */
   val SimhashChunks = 4
-
-  def simhash(docs: DataFrame): DataFrame = simhash(docs, SimhashBits)
 
   /** SimHash per doc at the given width (16 or 64): per distinct token,
     * weight = occurrence count; bit j of the signature is 1 iff the
@@ -311,7 +324,7 @@ object Dedup {
     * occupies the full Long (bit 63 = sign bit); all downstream arithmetic
     * (xor, bit_count, chunk masks) is bit-pattern arithmetic, so
     * signedness never matters. */
-  def simhash(docs: DataFrame, bits: Int): DataFrame = {
+  def simhash(docs: DataFrame, bits: Int = SimhashBits): DataFrame = {
     require(bits == 16 || bits == 64,
       s"simhash: width must be 16 (oracle) or 64 (production), got $bits")
     // One map-side kernel per document ([[graft.functions.SimhashSig]])
@@ -377,11 +390,7 @@ object Dedup {
   private[graft] def hammingPairsFromSig(sig0: DataFrame, bits: Int,
                                          maxDist: Int,
                                          keys: Seq[String] = Nil): DataFrame = {
-    require(maxDist < SimhashChunks, // pigeonhole bound for the banding
-      s"simhashPairs: maxDist must be < $SimhashChunks chunks, got $maxDist")
-    val chunkBits = bits / SimhashChunks // 4 at width 16, 16 at width 64
-    val chunkMask = (1L << chunkBits) - 1
-    val kc = keys.map(col)
+    requireBandable(maxDist) // before caching: a refused call caches nothing
     // Cache the doc-level signature table PRE-PARTITIONED on the
     // signature — the key every downstream consumer joins or
     // distincts on: the distinct-signature derivation, the two
@@ -394,28 +403,8 @@ object Dedup {
     // with every pin kept; caching the chunk table too measured as
     // noise, so only the doc-level table is pinned to a partitioning).
     val sig = CacheScope.cached(sig0.repartition(col("simhash")))
-    val sigs = sig.select(kc :+ col("simhash"): _*).distinct()
-    val chunks = sigs.select(kc ++ Seq(col("simhash"),
-        explode(sequence(lit(0), lit(SimhashChunks - 1))).as("chunk")): _*)
-      .withColumn("ckey",
-        expr(s"shiftright(simhash, chunk * $chunkBits) & $chunkMask"))
-    val bandCond = (keys ++ Seq("chunk", "ckey"))
-      .map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
-    val sigPairs = chunks.as("a")
-      .join(chunks.as("b").hint("SHUFFLE_MERGE"), // distinct-sig self-join:
-        // sub-corpus but corpus-bound in the worst case — never broadcast
-        bandCond && col("a.simhash") < col("b.simhash"))
-      .select(keys.map(k => col(s"a.$k")) ++
-        Seq(col("a.simhash").as("s1"), col("b.simhash").as("s2")): _*)
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("s1").bitwiseXOR(col("s2"))).cast(LongType))
-      .where(col("hamming") <= maxDist)
-    val cross = sigPairs
-      .join(sig.select(kc ++ Seq(col("simhash").as("s1"),
-        col("doc_id").as("da")): _*).hint("SHUFFLE_MERGE"), keys :+ "s1")
-      .join(sig.select(kc ++ Seq(col("simhash").as("s2"),
-        col("doc_id").as("db")): _*).hint("SHUFFLE_MERGE"), keys :+ "s2")
+    val kc = keys.map(col)
+    val cross = bandedSigPairs(sig, sig, bits, maxDist, keys, "da", "db")
       .select(kc ++ Seq(least(col("da"), col("db")).as("d1"),
         greatest(col("da"), col("db")).as("d2"), col("hamming")): _*)
     val intraCond = (keys :+ "simhash")
@@ -442,23 +431,49 @@ object Dedup {
   private[graft] def crossHammingPairs(oldSig0: DataFrame,
       newSig0: DataFrame, bits: Int, maxDist: Int,
       keys: Seq[String] = Nil): DataFrame = {
-    require(maxDist < SimhashChunks,
-      s"crossHammingPairs: maxDist must be < $SimhashChunks, got $maxDist")
-    val chunkBits = bits / SimhashChunks
-    val chunkMask = (1L << chunkBits) - 1
-    val kc = keys.map(col)
+    requireBandable(maxDist)
     val oldSig = CacheScope.cached(oldSig0.repartition(col("simhash")))
     val newSig = CacheScope.cached(newSig0.repartition(col("simhash")))
+    bandedSigPairs(oldSig, newSig, bits, maxDist, keys, "d1", "d2")
+      .select(keys.map(col) ++ Seq(col("d1"), col("d2"), col("hamming")): _*)
+  }
+
+  /** The 4-chunk banding finds every pair within `maxDist` only below
+    * [[SimhashChunks]] (pigeonhole). */
+  private def requireBandable(maxDist: Int): Unit =
+    require(maxDist < SimhashChunks,
+      s"banded Hamming pairing: maxDist must be < $SimhashChunks chunks, " +
+        s"got $maxDist")
+
+  /** The chunk-banded Hamming join shared by [[hammingPairsFromSig]] and
+    * [[crossHammingPairs]] (shape and rationale at [[simhashPairs]]):
+    * every distinct-signature pair within `maxDist` and equal `keys`
+    * between sides `a` and `b`, each (`keys`…, doc_id, simhash),
+    * re-expanded to doc ids. Rows carry `keys`, `idA` (a doc of `a`),
+    * `idB` (a doc of `b`) and `hamming`; the caller selects from them.
+    * Every join is pinned SHUFFLE_MERGE: the distinct-signature sides are
+    * corpus-bound in the worst case. When `b` is `a` the join is a
+    * self-join over one chunk table that keeps a.simhash < b.simhash, so
+    * equal-signature (hamming 0) pairs are the caller's. */
+  private def bandedSigPairs(a: DataFrame, b: DataFrame, bits: Int,
+                             maxDist: Int, keys: Seq[String], idA: String,
+                             idB: String): DataFrame = {
+    val chunkBits = bits / SimhashChunks // 4 at width 16, 16 at width 64
+    val chunkMask = (1L << chunkBits) - 1
+    val kc = keys.map(col)
     def chunksOf(sig: DataFrame) =
       sig.select(kc :+ col("simhash"): _*).distinct()
         .select(kc ++ Seq(col("simhash"),
           explode(sequence(lit(0), lit(SimhashChunks - 1))).as("chunk")): _*)
         .withColumn("ckey",
           expr(s"shiftright(simhash, chunk * $chunkBits) & $chunkMask"))
-    val joinCond = (keys ++ Seq("chunk", "ckey"))
+    val self = a eq b
+    val chunksA = chunksOf(a)
+    val bandCond = (keys ++ Seq("chunk", "ckey"))
       .map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
-    val sigPairs = chunksOf(oldSig).as("a")
-      .join(chunksOf(newSig).as("b").hint("SHUFFLE_MERGE"), joinCond)
+    val sigPairs = chunksA.as("a")
+      .join((if (self) chunksA else chunksOf(b)).as("b").hint("SHUFFLE_MERGE"),
+        if (self) bandCond && col("a.simhash") < col("b.simhash") else bandCond)
       .select(keys.map(k => col(s"a.$k")) ++
         Seq(col("a.simhash").as("s1"), col("b.simhash").as("s2")): _*)
       .distinct()
@@ -466,13 +481,10 @@ object Dedup {
         bit_count(col("s1").bitwiseXOR(col("s2"))).cast(LongType))
       .where(col("hamming") <= maxDist)
     sigPairs
-      .join(oldSig.select(kc ++ Seq(col("simhash").as("s1"),
-        col("doc_id").as("d1")): _*).hint("SHUFFLE_MERGE"),
-        keys :+ "s1")
-      .join(newSig.select(kc ++ Seq(col("simhash").as("s2"),
-        col("doc_id").as("d2")): _*).hint("SHUFFLE_MERGE"),
-        keys :+ "s2")
-      .select(kc ++ Seq(col("d1"), col("d2"), col("hamming")): _*)
+      .join(a.select(kc ++ Seq(col("simhash").as("s1"),
+        col("doc_id").as(idA)): _*).hint("SHUFFLE_MERGE"), keys :+ "s1")
+      .join(b.select(kc ++ Seq(col("simhash").as("s2"),
+        col("doc_id").as(idB)): _*).hint("SHUFFLE_MERGE"), keys :+ "s2")
   }
 
   /** Connected components over a near-dup pair graph — the final step of a
@@ -628,16 +640,14 @@ object Dedup {
     * sf0.1 (1.6 s → 19-36 s median, QBench): (a) hoisting the shingle array
     * into a shared projection so `sizes` becomes a map-only `size(shs)` —
     * the moved boundary lets CollapseProject inline the tokenizer into the
-    * shingle lambda and re-tokenize per element (the Dedup.scala:52 trap in
-    * a new costume); (b) an explicit `repartition` of the posting table on
+    * shingle lambda and re-tokenize per element (the trap [[shingleSets]]'
+    * two selects avoid); (b) an explicit `repartition` of the posting table on
     * the join keys to force one reused Exchange — the full-posting-list
     * sort plus hot-shingle sort-merge groups dwarf the duplicated
     * tokenize+shingle pass it saves, and at real scale Catalyst already
-    * picks the shuffled join on its own once size estimates grow. */
-  def blockedNgramJaccard(docs: DataFrame, minJaccard: Double): DataFrame =
-    blockedNgramJaccard(docs, minJaccard, None)
-
-  /** As above, with an optional stop-shingle document-frequency cut:
+    * picks the shuffled join on its own once size estimates grow.
+    *
+    * `maxShingleDf` is the optional stop-shingle document-frequency cut:
     * shingles appearing in more than `maxShingleDf` documents of a block
     * are dropped BEFORE the posting self-join — the standard guard against
     * a boilerplate shingle (license header, navigation chrome) whose
@@ -650,18 +660,34 @@ object Dedup {
     * boilerplate: worst-case pairs per (block, shingle) fall from L² to
     * maxShingleDf². The df aggregation shuffles on the same
     * (lang, source, sh) key the posting join uses, so the guard adds one
-    * reusable exchange, not a new partitioning. */
+    * reusable exchange, not a new partitioning. The plan is
+    * [[blockedPostings]]'s; this operator adds only the Jaccard score. */
   def blockedNgramJaccard(docs: DataFrame, minJaccard: Double,
-                          maxShingleDf: Option[Long]): DataFrame = {
+                          maxShingleDf: Option[Long] = None): DataFrame =
+    blockedPostings(docs, maxShingleDf, allPairs = minJaccard <= 0)
+      .select(col("d1"), col("d2"),
+        TextAnalysis.round6(col("inter").cast("double") /
+          (col("sx") + col("sy") - col("inter"))).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
+
+  /** The blocked inverted-index stage shared by [[blockedNgramJaccard]]
+    * and [[blockedContainment]]: (d1, d2, inter, sx, sy) for same-block
+    * doc pairs d1 < d2, where `inter` counts their shared distinct
+    * 3-shingles and sx / sy are each doc's distinct-shingle count, all
+    * after the optional `maxShingleDf` stop-shingle cut. With `allPairs`
+    * off only pairs sharing a shingle exist (the scale path: cost follows
+    * actual overlap); with it on, every same-block pair is emitted, a
+    * disjoint one with inter 0 — the O(block²) all-pairs `sizes × sizes`
+    * join a score threshold of 0 asks for. */
+  private def blockedPostings(docs: DataFrame, maxShingleDf: Option[Long],
+                              allPairs: Boolean): DataFrame = {
     // parallelism floor for the tokenize+shingle+aggregate map stages —
     // this subtree is instantiated 3-4x in the plan, and on a narrow
     // scan each instance runs single-task (ScanSpread scaladoc; measured
-    // -21% on dedup_ngram_jaccard_dfcut at sf0.1, no-op at scale)
-    val shAll = ScanSpread.spreadForCpu(docs)
-      .select(col("doc_id"), col("lang"), col("source"),
-        TextAnalysis.tokens(col("text")).as("_t"))
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(array_distinct(TextAnalysis.shingles3(col("_t")))).as("sh"))
+    // -21% on dedup_ngram_jaccard_dfcut and -32% on
+    // dedup_containment_dfcut at sf0.1, no-op at scale)
+    val shAll = shingleSets(ScanSpread.spreadForCpu(docs),
+      Seq("doc_id", "lang", "source"), exploded = true)
     val sh = maxShingleDf match {
       case Some(k) =>
         // anti-join against the STOP set, not semi-join against the rare
@@ -699,34 +725,24 @@ object Dedup {
           col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
-    val scored =
-      if (minJaccard > 0) {
-        // Inter-driven inner path (same shape as [[blockedContainment]]):
-        // a pair with zero shared shingles has jaccard 0 < minJaccard, so
-        // enumerating it at all is pure waste.
-        inter
-          .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sx"))
-            .hint("SHUFFLE_MERGE"), "d1") // per-doc size table: corpus-sized
-          .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sy"))
-            .hint("SHUFFLE_MERGE"), "d2")
-          .select(col("d1"), col("d2"),
-            TextAnalysis.round6(col("inter").cast("double") /
-              (col("sx") + col("sy") - col("inter"))).as("jaccard"))
-      } else {
-        sizes.as("x")
-          .join(sizes.as("y").hint("SHUFFLE_MERGE"), // corpus self-join
-            col("x.lang") === col("y.lang") && col("x.source") === col("y.source") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-            col("x.sz").as("sx"), col("y.sz").as("sy"))
-          .join(inter, Seq("d1", "d2"), "left")
-          .select(col("d1"), col("d2"),
-            TextAnalysis.round6(coalesce(col("inter"), lit(0L)).cast("double") /
-              (col("sx") + col("sy") - coalesce(col("inter"), lit(0L))))
-              .as("jaccard"))
-      }
-    scored
-      .where(col("jaccard") >= minJaccard)
+    if (!allPairs)
+      // Inter-driven inner path: a pair with zero shared shingles is never
+      // enumerated, so a positive score threshold pays only for overlap.
+      inter
+        .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sx"))
+          .hint("SHUFFLE_MERGE"), "d1") // per-doc size table: corpus-sized
+        .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sy"))
+          .hint("SHUFFLE_MERGE"), "d2")
+    else
+      sizes.as("x")
+        .join(sizes.as("y").hint("SHUFFLE_MERGE"), // corpus self-join
+          col("x.lang") === col("y.lang") && col("x.source") === col("y.source") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+          col("x.sz").as("sx"), col("y.sz").as("sy"))
+        .join(inter, Seq("d1", "d2"), "left")
+        .select(col("d1"), col("d2"),
+          coalesce(col("inter"), lit(0L)).as("inter"), col("sx"), col("sy"))
   }
 
   /** Exact-substring duplication: every maximal run of >= `kTokens`
@@ -1003,64 +1019,20 @@ object Dedup {
   /** Containment score |A∩B| / min(|A|,|B|) over distinct 3-shingles —
     * the asymmetric near-dup metric for quote/subset detection (a short
     * document fully contained in a long one scores 1.0 where Jaccard is
-    * tiny). Same inverted-index topology as [[blockedNgramJaccard]]. */
-  def blockedContainment(docs: DataFrame, minScore: Double): DataFrame =
-    blockedContainment(docs, minScore, None)
-
-  /** As above, with the same optional stop-shingle document-frequency cut
-    * as [[blockedNgramJaccard]]'s dfcut overload — this was the ONE
-    * posting-join family without the guard, so a single boilerplate
-    * shingle (license header, nav chrome) viral inside a (lang, source)
-    * block still paired quadratically here at 100×. Shingles with
-    * block-df > `maxShingleDf` are anti-joined away BEFORE the posting
-    * self-join, bounding worst-case pairs per (block, shingle) at
-    * maxShingleDf² instead of L². Containment is then scored over each
-    * doc's SURVIVING shingles on both the intersection and the
-    * min-size denominator, so scores stay in [0,1]; docs whose every
-    * shingle is stop-cut drop out (nothing left to compare) — exactly
-    * the dfcut semantics the Jaccard overload declares and the oracle
-    * replays. */
+    * tiny). Same inverted-index plan ([[blockedPostings]]) and the same
+    * optional `maxShingleDf` stop-shingle cut as [[blockedNgramJaccard]]:
+    * containment is scored over each doc's SURVIVING shingles on both the
+    * intersection and the min-size denominator, so scores stay in [0,1],
+    * and docs whose every shingle is stop-cut drop out — the semantics
+    * the oracle replays. A `minScore <= 0` scores every same-block pair,
+    * a disjoint one at 0.0. */
   def blockedContainment(docs: DataFrame, minScore: Double,
-                         maxShingleDf: Option[Long]): DataFrame = {
-    // same parallelism floor as [[blockedNgramJaccard]] (measured -32%
-    // on dedup_containment_dfcut at sf0.1, structural no-op at scale)
-    val shAll = ScanSpread.spreadForCpu(docs)
-      .select(col("doc_id"), col("lang"), col("source"),
-        TextAnalysis.tokens(col("text")).as("_t"))
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(array_distinct(TextAnalysis.shingles3(col("_t")))).as("sh"))
-    val sh = maxShingleDf match {
-      case Some(k) =>
-        // Same anti-join-the-STOP-set shape (and no-broadcast-hint
-        // rationale) as [[blockedNgramJaccard]]'s dfcut: the stop set is
-        // boilerplate-sized by construction, the df aggregation reuses
-        // the (lang, source, sh) partitioning the posting join needs.
-        val stop = shAll.groupBy("lang", "source", "sh")
-          .agg(count(lit(1)).as("_df")).where(col("_df") > k)
-          .select("lang", "source", "sh")
-        shAll.join(stop, Seq("lang", "source", "sh"), "left_anti")
-      case None => shAll
-    }
-    val sizes = sh.groupBy("doc_id", "lang", "source")
-      .agg(count(lit(1)).as("sz"))
-    // Same never-broadcast-the-posting-self-join rule as
-    // [[blockedNgramJaccard]] (the Generate size-estimate trap).
-    val inter = sh.as("a")
-      .join(sh.as("b").hint("SHUFFLE_MERGE"),
-        col("a.lang") === col("b.lang") && col("a.source") === col("b.source") &&
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sx"))
-        .hint("SHUFFLE_MERGE"), "d1") // per-doc size table: corpus-sized side
-      .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sy"))
-        .hint("SHUFFLE_MERGE"), "d2")
+                         maxShingleDf: Option[Long] = None): DataFrame =
+    blockedPostings(docs, maxShingleDf, allPairs = minScore <= 0)
       .select(col("d1"), col("d2"),
         TextAnalysis.round6(col("inter").cast("double") /
           least(col("sx"), col("sy"))).as("containment"))
       .where(col("containment") >= minScore)
-  }
 
   /** SemDeDup-style semantic dedup over an embedding corpus: assign every
     * vector to an IVF cell (deterministic k-means-refined centroids — the
@@ -1103,9 +1075,7 @@ object Dedup {
     // 10×/100× probes: struct-buffer SortAggregate, or Lloyd-chain
     // re-execution per consumer).
     val local = Similarity.trainCentroids(emb, nLists, lloydIters)
-    val assigned = CacheScope.cached(Similarity.assignCells(
-      emb.select(col("vec_id"), col("embedding"),
-        Similarity.norm(col("embedding")).as("_n")), local))
+    val assigned = CacheScope.cached(Similarity.assignCells(emb, local))
     val dup = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))

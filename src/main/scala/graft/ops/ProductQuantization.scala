@@ -474,9 +474,7 @@ object ProductQuantization {
     // than half the search cost (and pre-pin, Catalyst broadcast the
     // corpus-sized sides outright — the audit finding).
     val corpusSide = materialized(encode(
-      Similarity.assignCells(
-        corpus.select(col("vec_id"), col("embedding"),
-          Similarity.norm(col("embedding")).as("_n")), local), cb)
+      Similarity.assignCells(corpus, local), cb)
       .select(col("vec_id"), col("cell"), col("pq_code")))
     ivfPqSearch(corpusSide, cb, local, queries, k, nProbe, rerank,
       if (rerank > 0) Some(corpus) else None)
@@ -514,9 +512,7 @@ object ProductQuantization {
   private def residuals(corpus: DataFrame,
                         local: Similarity.LocalCentroids): DataFrame = {
     val cent = Similarity.centroidsDf(corpus.sparkSession, local)
-    Similarity.assignCells(
-      corpus.select(col("vec_id"), col("embedding"),
-        Similarity.norm(col("embedding")).as("_n")), local)
+    Similarity.assignCells(corpus, local)
       .join(broadcast(cent), "cell")
       .select(col("vec_id"), col("cell"),
         zip_with(col("embedding"), col("cvec"),
@@ -812,9 +808,8 @@ object ProductQuantization {
     val coded = FingerprintStore.getOrBuild(spark, sourcePath, s"$tag-ivf",
       s"$CodeStoreVersion-m$m-k$k-L$nLists-s$stride", storeRoot)(
       encode(
-        Similarity.assignCells(
-          embeddings.select((idCols.map(col) :+ col(vecCol).as("embedding") :+
-            Similarity.norm(col(vecCol)).as("_n")): _*), local), cb, "embedding")
+        Similarity.assignCells(embeddings, local, idCols, vecCol), cb,
+        "embedding")
         .select((idCols.map(col) :+ col("cell") :+ col("pq_code")): _*))
     (coded, cb, local, nProbe)
   }

@@ -126,9 +126,7 @@ object Quantization {
     val local = Similarity.trainCentroids(corpus, nLists, lloydIters,
       coarseStride)
     val ccodes = binarize(
-      Similarity.assignCells(
-        corpus.select(col("vec_id"), col(vecCol).as("embedding"),
-          Similarity.norm(col(vecCol)).as("_n")), local),
+      Similarity.assignCells(corpus, local, vec = vecCol),
       "embedding", dim)
       .select(col("vec_id"), col("cell"), col("bcode"))
     ivfHammingSearch(ccodes, local, corpus, queries, k, rerank, nProbe,
@@ -240,9 +238,7 @@ object Quantization {
     val coded = FingerprintStore.getOrBuild(spark, sourcePath, s"$tag-hivf",
       s"$CodeStoreVersion-ham-d$dim-L$nLists-s$stride", storeRoot)(
       binarize(
-        Similarity.assignCells(
-          corpus.select(col("vec_id"), col("embedding"),
-            Similarity.norm(col("embedding")).as("_n")), local),
+        Similarity.assignCells(corpus, local),
         "embedding", dim)
         .select(col("vec_id"), col("cell"), col("bcode")))
     (coded, local, nProbe)

@@ -358,9 +358,7 @@ object Similarity {
     * nLists). The oracle mirrors the emit-nothing semantics. */
   def knnGraph(corpus: DataFrame, k: Int, nLists: Int = 16,
                lloydIters: Int = 1): DataFrame = {
-    val assigned = assignCells(
-      corpus.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("_n")),
+    val assigned = assignCells(corpus,
       trainCentroids(corpus, nLists, lloydIters))
     // Corpus × corpus cell self-join: co-partitioned shuffle, pinned —
     // Catalyst's post-assignCells estimate otherwise judged the build side
@@ -428,8 +426,9 @@ object Similarity {
       .toDF("cell", "cvec", "cn")
   }
 
-  /** Append the argmax-cosine `cell` to (…, embedding, _n) rows via the
-    * [[graft.functions.NearestCentroid]] codegen kernel: a map-only pass,
+  /** Project `df` to (`ids`…, embedding, _n, cell): the vector column
+    * `vec` as `embedding`, its norm as `_n`, and the argmax-cosine `cell`
+    * via the [[graft.functions.NearestCentroid]] codegen kernel: a map-only pass,
     * no ×nLists expansion, no aggregation, no join, no shuffle. Same
     * argmax semantics as `max_by(cell, struct(_sim, -cell))` over a
     * broadcast crossJoin (highest cosine, lowest cell on float ties,
@@ -438,11 +437,17 @@ object Similarity {
     * the struct aggregation buffer: 33 s at 10×; Lloyd-chain re-execution
     * from multi-reference subplans: 97 s at 100×) while the kernel holds
     * the whole assignment inside whole-stage codegen. */
-  private[graft] def assignCells(df: DataFrame,
-                                 local: LocalCentroids): DataFrame =
-    df.withColumn("cell",
-      graft.functions.VectorExpressions.nearestCentroid(
-        col("embedding"), col("_n"), local.cells, local.vecs, local.norms))
+  private[graft] def assignCells(df: DataFrame, local: LocalCentroids,
+                                 ids: Seq[String] = Seq("vec_id"),
+                                 vec: String = "embedding"): DataFrame =
+    // no `embedding AS embedding`: a cached caller's plan would keep the
+    // alias's new attribute
+    df.select(ids.map(col) :+
+        (if (vec == "embedding") col(vec) else col(vec).as("embedding")) :+
+        norm(col(vec)).as("_n"): _*)
+      .withColumn("cell",
+        graft.functions.VectorExpressions.nearestCentroid(
+          col("embedding"), col("_n"), local.cells, local.vecs, local.norms))
 
   /** One Lloyd (k-means) iteration: assign every corpus vector to its
     * nearest seed cell ([[assignCells]] — the map-only kernel over the
@@ -458,9 +463,7 @@ object Similarity {
     * more iterations drop in by chaining. Deterministic — no RNG. */
   def refineCentroids(corpus: DataFrame, cent: DataFrame): DataFrame = {
     val local = collectCentroids(cent)
-    val base = corpus
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("_n"))
-    assignCells(base, local)
+    assignCells(corpus, local)
       .groupBy("cell")
       .agg(graft.functions.VectorExpressions.vecMean(col("embedding")).as("m"))
       .select(col("cell"),
@@ -485,8 +488,7 @@ object Similarity {
     val local = trainCentroids(corpus, nLists, lloydIters)
     // nearest cell per corpus vector: the map-only assignCells kernel —
     // the corpus-sized side never expands, aggregates, or joins
-    val assigned = assignCells(corpus.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("_n")), local)
+    val assigned = assignCells(corpus, local)
     // queries keep their nProbe best cells ([[probeCells]], id-only),
     // the embedding joined back for the in-cell scoring
     val probes = queries.select(col("vec_id"), col("embedding"),

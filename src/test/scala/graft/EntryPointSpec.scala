@@ -121,4 +121,17 @@ class EntryPointSpec extends SparkSuite {
     assert(plan == DumpPlans.formattedPlan(b))
     assert(plan.contains("$$Lambda@<hash>") && plan.contains("#1"), plan)
   }
+
+  test("DumpPlans.formattedPlan does not depend on lambdas built before it") {
+    // the shingle lambda's variable name (`x_N`) comes from a JVM-wide
+    // counter, which any other lambda-using query advances
+    def plan = DumpPlans.formattedPlan(SparkEntry.queries(
+      "dedup_ngram_jaccard")(spark, "/root/testdata/sf0.001"))
+    val before = plan
+    spark.range(3).select(transform(array(col("id")), x => x + 1),
+      filter(array(col("id")), (x, i) => x > i)).collect()
+    val after = plan
+    assert(after == before)
+    assert(before.contains("lambda x_1#"), before)
+  }
 }

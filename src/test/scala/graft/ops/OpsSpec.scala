@@ -235,6 +235,17 @@ class OpsSpec extends SparkSuite {
     assert(j.getAs[Double]("jaccard") < 0.8) // jaccard diluted by A's extra
   }
 
+  test("containment at minScore 0 scores a same-block pair that shares " +
+    "no shingle at 0.0") {
+    val df = Seq(
+      (0L, base, "en", "s", base.length.toLong),
+      (1L, unrelated, "en", "s", unrelated.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val r = Dedup.blockedContainment(df, 0.0).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getAs[Double]("containment")))
+    assert(r.toSeq == Seq((0L, 1L, 0.0)))
+  }
+
   test("blocked ngram jaccard ranks near-dup far above unrelated") {
     val r = Dedup.blockedNgramJaccard(docsDf, 0.0).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getAs[Double]("jaccard")).toMap
@@ -922,10 +933,7 @@ class OpsSpec extends SparkSuite {
       vecs = cents.toArray,
       norms = cents.map(c =>
         math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)).toArray)
-    val df = vecs.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding",
-        Similarity.norm($"embedding").as("_n"))
-    val got = Similarity.assignCells(df, local)
+    val got = Similarity.assignCells(vecs.toDF("vec_id", "embedding"), local)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // driver-side reference: same in-order double fold, strict >, cells asc
