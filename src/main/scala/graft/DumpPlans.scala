@@ -162,14 +162,17 @@ object DumpPlans {
     * `plan_id`s, RDD ids and the suffixes of lambda variable names
     * (`lambda x_60`, drawn from a JVM-wide counter) are renumbered by
     * order of first appearance; JVM lambda class suffixes
-    * (`$$Lambda$N/0x…`), object identity hashes (`@1a2b3c4d`) and the
-    * source lines of RDD call sites are masked. */
+    * (`$$Lambda$N/0x…`), object identity hashes (`@1a2b3c4d`), the
+    * source lines of RDD call sites and the source fingerprint that ends a
+    * store directory's name (`graft_sigstore_<tag>_<version>_<fp>`, which
+    * hashes the source files' mtimes) are masked. */
   private[graft] def formattedPlan(df: DataFrame): String = {
     val raw = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     val masked = Seq(
       """\$\$Lambda(\$\d+)?/0x[0-9a-f]+""" -> "\\$\\$Lambda",
       """@[0-9a-f]{4,}\b""" -> "@<hash>",
-      """\.scala:\d+""" -> ".scala:<line>")
+      """\.scala:\d+""" -> ".scala:<line>",
+      """(graft_sigstore_[^\s/\]]*_)[0-9a-f]{16}\b""" -> "$1<fp>")
       .foldLeft(raw) { case (t, (re, to)) => re.r.replaceAllIn(t, to) }
     // group 1 is kept, group 2 is the number to renumber
     Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(RDD\[)(\d+)""",

@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -68,17 +69,29 @@ object GroupFileWriter {
   def writeLines(df: DataFrame, baseUri: String, format: FormatType,
                  compression: CompressionType,
                  groupCols: Seq[String] = Seq("_filename")): Unit = {
-    val spark = df.sparkSession
-    val serConf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     val jsonArray = format == FormatType.Json
     val keep = (Seq("_filename", "_line", "offset") ++ groupCols).distinct
-    df.select(keep.map(col): _*)
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions(col("_filename"), col("offset"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        writePartition(it, baseUri, serConf.value, compression, jsonArray)
-      }
+    withHadoopConf(df.sparkSession) { conf =>
+      df.select(keep.map(col): _*)
+        .repartition(groupCols.map(col): _*)
+        .sortWithinPartitions(col("_filename"), col("offset"))
+        .foreachPartition { (it: Iterator[Row]) =>
+          writePartition(it, baseUri, conf.value.value, compression, jsonArray)
+        }
+    }
+  }
+
+  /** Run one write with the session's Hadoop conf broadcast, the way Spark's
+    * file sources ship it: a task closure that captured the conf itself
+    * would carry all of it (~100 KB) in every task. The broadcast is made
+    * per write, not cached, because [[graft.GraftSession.create]] may set
+    * s3a keys after the session starts; it is destroyed when `body`
+    * returns. */
+  private[formats] def withHadoopConf[T](spark: SparkSession)(
+      body: Broadcast[SerializableConfiguration] => T): T = {
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    try body(conf) finally conf.destroy()
   }
 
   private[formats] def writePartition(it: Iterator[Row], baseUri: String,
@@ -89,8 +102,9 @@ object GroupFileWriter {
       open = { name =>
         val path = resolveUnder(baseUri, name)
         val fs = FileSystem.get(path.toUri, conf)
-        fs.mkdirs(path.getParent)
-        // overwrite=true: deterministic names make retries idempotent
+        // create makes missing parents itself (a postcondition of Hadoop's
+        // FileSystem spec); overwrite=true: deterministic names make
+        // retries idempotent
         val out = Compression.wrap(fs.create(path, true), compression)
         if (jsonArray) out.write('[')
         first = true

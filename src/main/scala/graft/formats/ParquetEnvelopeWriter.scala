@@ -18,7 +18,6 @@ import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.config.{CompressionType, OutputFieldType, SinkConfig}
 
@@ -308,8 +307,6 @@ object ParquetEnvelopeWriter {
   def write(records: DataFrame, baseUri: String, config: SinkConfig,
             groupCols: Seq[String] = Seq("_filename"),
             wholeObjectCompression: Boolean = false): Unit = {
-    val serConf = new SerializableConfiguration(
-      records.sparkSession.sparkContext.hadoopConfiguration)
     // strict-parity mode writes UNCOMPRESSED parquet and compresses the
     // whole object on the way out, like the reference's wrapped stream
     val codecName =
@@ -320,15 +317,17 @@ object ParquetEnvelopeWriter {
     val valueDt = records.schema("value").dataType
     val (dataCols, writers, messageType) = plan(config, valueDt)
     val schemaStr = messageType.toString
-    records
-      .select((Seq(col("_filename"), col("offset").as("_offset")) ++ dataCols ++
-        groupCols.filterNot(_ == "_filename").map(col)): _*)
-      .repartition(groupCols.map(col): _*)
-      .sortWithinPartitions(col("_filename"), col("_offset"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        writePartition(it, baseUri, serConf.value, codecName, outerCodec,
-          schemaStr, writers)
-      }
+    GroupFileWriter.withHadoopConf(records.sparkSession) { conf =>
+      records
+        .select((Seq(col("_filename"), col("offset").as("_offset")) ++ dataCols ++
+          groupCols.filterNot(_ == "_filename").map(col)): _*)
+        .repartition(groupCols.map(col): _*)
+        .sortWithinPartitions(col("_filename"), col("_offset"))
+        .foreachPartition { (it: Iterator[Row]) =>
+          writePartition(it, baseUri, conf.value.value, codecName, outerCodec,
+            schemaStr, writers)
+        }
+    }
   }
 
   private[formats] def writePartition(it: Iterator[Row], baseUri: String,

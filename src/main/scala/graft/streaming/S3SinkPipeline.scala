@@ -159,7 +159,13 @@ object S3SinkPipeline {
 
   /** Wire a (streaming) canonical-record DataFrame into the sink. The
     * trigger interval is the reference's flush cadence
-    * (`offset.flush.interval.ms`, default 60 s, `README.md:207`). */
+    * (`offset.flush.interval.ms`, default 60 s, `README.md:207`).
+    *
+    * Each call is a new query, as each restart of a reference task is. On a
+    * session built by [[graft.GraftSession]] a later query reuses the
+    * classes the first one compiled; on a session built without it, Spark's
+    * per-session artifact isolation gives every query its own class loader,
+    * so every query recompiles its plan on its first batch. */
   def start(records: DataFrame, config: SinkConfig, baseUri: String,
             checkpointDir: String, flushIntervalMs: Long = 60000L): StreamingQuery =
     records.writeStream

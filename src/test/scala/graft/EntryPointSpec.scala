@@ -1,14 +1,19 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.Round
 import org.apache.spark.sql.functions._
 
+import graft.config.SinkConfig
 import graft.plans.AsOfJoinStrategy
+import graft.sources.SyntheticKafkaSource
+import graft.streaming.S3SinkPipeline
 
-/** The session every entry point builds ([[GraftSession.builder]]), the
-  * timing rule [[Bench]] applies to each query, the registry's row
-  * invariants ([[SparkEntry.rows]]) and [[Verify]]'s per-row leak check. */
+/** The session every entry point builds ([[GraftSession.builder]]) and
+  * what a new streaming query on it compiles, the timing rule [[Bench]]
+  * applies to each query, the registry's row invariants
+  * ([[SparkEntry.rows]]) and [[Verify]]'s per-row leak check. */
 class EntryPointSpec extends SparkSuite {
 
   override lazy val spark = GraftSession.builder("local[2]", 2)
@@ -133,5 +138,52 @@ class EntryPointSpec extends SparkSuite {
     val after = plan
     assert(after == before)
     assert(before.contains("lambda x_1#"), before)
+  }
+
+  test("DumpPlans.formattedPlan masks a store directory's source " +
+    "fingerprint") {
+    // the fingerprint hashes the source files' mtimes, so a copy of the
+    // same input names its store differently
+    val root = tmpDir("fp-mask")
+    def store(fp: String) = {
+      val dir = s"$root/graft_sigstore_tag_v1-x_$fp"
+      spark.range(3).write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val plan = DumpPlans.formattedPlan(store("0123456789abcdef"))
+    assert(plan == DumpPlans.formattedPlan(store("fedcba9876543210")))
+    assert(plan.contains("graft_sigstore_tag_v1-x_<fp>]"), plan)
+  }
+
+  test("a second sink query on a GraftSession session compiles no code: " +
+    "the plan's classes are compiled once per JVM") {
+    val cfg = SinkConfig.parse(Map(
+      "aws.s3.bucket.name" -> "b",
+      "topics" -> "ta,tb",
+      "file.compression.type" -> "none",
+      "format.output.fields" -> "value",
+      "format.output.fields.value.encoding" -> "none")).toOption.get
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // one drain: a fresh query with its own output and checkpoint, the
+    // way a restarted task or a catch-up drain starts
+    def drain(tag: String): (String, Long) = {
+      val out = tmpDir(s"$tag-out")
+      val records = S3SinkPipeline.sourceReader(spark, cfg, "broker:9092",
+        sourceFormat = classOf[SyntheticKafkaSource].getName,
+        extraOptions = Map("topics" -> "ta,tb", "partitions" -> "2",
+          "rowsPerPartition" -> "6", "rowsPerBatch" -> "4"))
+      val before = compiled
+      val q = S3SinkPipeline.start(records, cfg, out, tmpDir(s"$tag-ckpt"),
+        flushIntervalMs = 50L)
+      try q.processAllAvailable() finally q.stop()
+      (out, compiled - before)
+    }
+    def ls(dir: String) = new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
+    val (out1, first) = drain("codegen-1")
+    val (out2, second) = drain("codegen-2")
+    assert(second == 0, s"the second query compiled $second classes " +
+      s"(the first compiled $first)")
+    // 2 micro-batches x 2 topics x 2 partitions
+    assert(ls(out1).size == 8 && ls(out2) == ls(out1))
   }
 }

@@ -351,6 +351,27 @@ class SinkWriteSpec extends SparkSuite {
     assert(ls(dir) == Set("aiven--test-topic-0-00000000000000000000"))
   }
 
+  test("a prefix with nested template parts lands every object at its " +
+    "nested path under a base that does not exist yet") {
+    // the writer makes no directories itself: FileSystem.create makes an
+    // object's missing parents, the base included
+    val dir = s"${tmpDir("prefix-nested")}/base"
+    val cfg = config(
+      "aws.s3.prefix" -> "a/{{topic}}/{{partition}}/",
+      "format.output.type" -> "jsonl",
+      "file.compression.type" -> "none")
+    S3SinkPipeline.writeBatch(f2Records(), cfg, dir, Now)
+    val objects = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+      .map(p => Paths.get(dir).relativize(p).toString).toSet
+    assert(objects == Set(
+      "a/topic0/0/topic0-0-00000000000000000010",
+      "a/topic0/1/topic0-1-00000000000000000020",
+      "a/topic1/0/topic1-0-00000000000000000030"))
+    assert(readLines(s"$dir/a/topic1/0/topic1-0-00000000000000000030",
+      CompressionType.None) == List("""{"value":"value2"}"""))
+  }
+
   test("legacy prefix template renders {{utc_date}} " +
     "(S3SinkTaskTest.java:420-434)") {
     val dir = tmpDir("prefix-utc")
