@@ -1,9 +1,8 @@
 package graft.connector
 
-import java.time.{ZoneId, ZoneOffset, ZonedDateTime}
-import java.time.format.DateTimeFormatter
+import java.time.ZonedDateTime
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -11,10 +10,22 @@ import org.apache.spark.sql.types.{LongType, StringType}
 import graft.config.SinkConfig
 import graft.template.Template
 
-/** Record grouping (SURVEY.md §2 O2–O5) and distributed filename rendering
-  * (O16), expressed as Catalyst transforms so grouping scales with the data:
-  * the group key and file name are plain columns — Spark shuffles once on
-  * them and every downstream per-file write is executor-local.
+/** Record grouping (SURVEY.md §2 O2–O5) and object naming (O16).
+  *
+  * The sink cuts objects the way the reference does, in one ordered pass
+  * (its `RecordGrouper` map `filename → records` is its whole state between
+  * flushes, `S3SinkTask.java:59,117,122-123`). An [[ObjectNaming]] tells a
+  * writer which few columns to carry ahead of the payload, how to cluster
+  * and order the rows (one exchange, at most one sort), and which
+  * [[ObjectNamer]] each task runs: the namer counts rows per
+  * (topic, partition), starts each chunk, and renders each object's name
+  * once with [[Template.render]]. Key mode compacts in Catalyst
+  * ([[compactLatestByKey]]) and names each surviving row in the writer.
+  *
+  * [[annotate]] is the same grouping as Catalyst columns (windows and a
+  * per-row `_filename`); the sink no longer runs it. The registry's sink
+  * rows (`QueryDef.named`) and perfbench's traced mirror of `writeBatch`
+  * still do, with the writers' `_filename` entry points.
   *
   * Reference semantics (`README.md:97-198`, `RecordGrouperFactory` dispatch
   * at `S3SinkTask.java:77`):
@@ -38,41 +49,22 @@ object Grouping {
       ((rn - 1).cast(LongType) / maxRecords).cast(LongType)
     }
 
-  /** O16/O17 — render a file-name or legacy prefix template as one Column,
-    * so every name is computed distributively next to its records.
-    * `bindings` maps template variable name → column. `padding=true` pads
-    * offsets to 20 digits and partitions to 10 (`%020d` / `%010d`,
-    * `OldFullKeyFormatters.java:29-33`, `README.md:66-75`).
-    * `{{timestamp:unit=…}}` (O4) and the prefix vars `utc_date` /
-    * `local_date` render from the batch wallclock `now` — the reference's
-    * only time source (`S3SinkConfig.java:492-503`, `S3SinkTask.java:
-    * 186-193`) — so a whole micro-batch lands in one bucket; `timestamp`
-    * renders in `now`'s zone. */
+  /** O16/O17 — a file-name or legacy prefix template as one Column, for
+    * plans that need the name on every row (`annotate`). `bindings` maps
+    * template variable name → column. A thin wrapper over
+    * [[Template.pieces]]: the pieces fix every rendering rule, the column
+    * only casts each slot's binding to string and `lpad`s it, so the
+    * writers' per-object [[Template.render]] gives the same strings. */
   def filenameColumn(template: Template, bindings: Map[String, Column],
-                     now: ZonedDateTime): Column = {
-    def date(zone: ZoneId): Column =
-      lit(now.withZoneSameInstant(zone).format(DateTimeFormatter.ISO_LOCAL_DATE))
-    concat(template.parts.map {
-      case Template.Literal(s) => lit(s)
-      case Template.Var("timestamp", param) =>
-        val unit = param.collect {
-          case Template.Param("unit", u @ ("yyyy" | "MM" | "dd" | "HH")) => u
-        }.getOrElse(throw new IllegalArgumentException(
-          s"timestamp needs unit=yyyy|MM|dd|HH, got ${param.getOrElse("none")}"))
-        lit(now.format(DateTimeFormatter.ofPattern(unit)))
-      case Template.Var("utc_date", _) => date(ZoneOffset.UTC)
-      case Template.Var("local_date", _) => date(ZoneId.systemDefault())
-      case Template.Var(name, param) =>
+                     now: ZonedDateTime): Column =
+    concat(template.pieces(now).map {
+      case Template.Text(s) => lit(s)
+      case Template.Slot(name, width) =>
         val base = bindings.getOrElse(name,
           throw new IllegalArgumentException(s"no column binding for template var $name"))
           .cast(StringType)
-        param match {
-          case Some(Template.Param("padding", "true")) =>
-            lpad(base, if (name == "partition") 10 else 20, "0")
-          case _ => base
-        }
+        width.fold(base)(lpad(base, _, "0"))
     }: _*)
-  }
 
   /** O3 — key compaction: latest record per key (the deterministic
     * (offset, partition) max; the reference is explicitly nondeterministic
@@ -86,9 +78,8 @@ object Grouping {
     * sort them; with few distinct keys — the common compaction shape — that
     * serializes the whole batch through a handful of tasks). */
   def compactLatestByKey(records: DataFrame): DataFrame = {
-    val keyStr = coalesce(col("key").cast(StringType), lit("null"))
     val dataCols = records.columns
-    val tagged = records.withColumn("_k", keyStr)
+    val tagged = records.withColumn("_k", keyString)
     tagged
       .groupBy(col("_k"))
       .agg(max_by(
@@ -97,14 +88,28 @@ object Grouping {
       .select(col("_k") +: dataCols.toSeq.map(c => col(s"_r.$c").as(c)): _*)
   }
 
+  /** The record key as names see it: null renders "null". */
+  private def keyString: Column = coalesce(col("key").cast(StringType), lit("null"))
+
   /** The object name after a legacy prefix (`S3SinkTask.java:196-205`). */
   private val LegacyName =
     Template.of("{{topic}}-{{partition}}-{{start_offset:padding=true}}")
 
-  /** Full grouping annotation for topic-partition mode: adds `_chunk`,
-    * `_start_offset` and `_filename` columns per the parsed config. One
-    * window pass; the subsequent `partitionBy(_filename)` write is the only
-    * shuffle.
+  /** The templates a topic-partition object name concatenates. Legacy
+    * naming when a prefix is configured (`S3SinkTask.java:157-205`):
+    * rendered prefix + `topic-partition-<%020d start_offset>`; the modern
+    * `file.name.template` names files only when no prefix is set. */
+  private def nameTemplates(config: SinkConfig): Seq[Template] =
+    if (config.usesFileNameTemplate) Seq(config.fileNameTemplate)
+    else Seq(config.prefixTemplate, LegacyName)
+
+  /** Topic-partition grouping as columns: adds `_chunk`, `_start_offset`
+    * and `_filename` per the parsed config, with window functions (the
+    * chunk's `row_number`, the run's `lag` and running `sum`, the group's
+    * `min(offset)`) and a name rendered on every row. The sink's own
+    * writes cut the same objects in the writer instead
+    * ([[topicPartitionNaming]]); this form serves the registry's sink rows
+    * and perfbench's traced mirror, which write through `_filename`.
     *
     * `schemaFingerprint` implements the reference's Parquet schema-change
     * rotation (`ParquetIntegrationTest.java:346-415`: a mid-stream value-
@@ -139,18 +144,179 @@ object Grouping {
       "topic"        -> col("topic"),
       "partition"    -> col("partition"),
       "start_offset" -> col("_start_offset"),
-      "key"          -> coalesce(col("key").cast(StringType), lit("null")))
+      "key"          -> keyString)
     val zonedNow = now.withZoneSameInstant(config.timestampZone)
-    // Legacy naming when a prefix is configured (S3SinkTask.java:157-205):
-    // renderedPrefix + topic-partition-<%020d start_offset>; the modern
-    // file.name.template names files only when no prefix is set.
-    val fname =
-      if (config.usesFileNameTemplate)
-        filenameColumn(config.fileNameTemplate, bindings, zonedNow)
-      else concat(filenameColumn(config.prefixTemplate, bindings, zonedNow),
-        filenameColumn(LegacyName, bindings, zonedNow))
+    val fname = nameTemplates(config).map(filenameColumn(_, bindings, zonedNow))
     withChunk
       .withColumn("_start_offset", start)
-      .withColumn("_filename", concat(fname, lit(config.compression.extension)))
+      .withColumn("_filename", concat(fname :+ lit(config.compression.extension): _*))
+  }
+
+  /** How the sink cuts topic-partition objects in the writer. The rows
+    * carry `topic`, `partition`, `_offset`, then `_fp` (the fingerprint)
+    * when one is given and `_k` (the key string) when a name renders
+    * `{{key}}`; they are clustered by (topic, partition) and sorted by
+    * (topic, partition, offset), so each task sees every partition it owns
+    * whole and in offset order. `schemaFingerprint` is the same rotation
+    * rule as [[annotate]]'s. */
+  def topicPartitionNaming(config: SinkConfig, now: ZonedDateTime,
+                           schemaFingerprint: Option[Column]): ObjectNaming = {
+    val zonedNow = now.withZoneSameInstant(config.timestampZone)
+    val pieces = nameTemplates(config).flatMap(_.pieces(zonedNow)) :+
+      Template.Text(config.compression.extension)
+    val fp = schemaFingerprint.toSeq.map(_.as("_fp"))
+    val key =
+      if (slots(pieces, Set("topic", "partition", "start_offset", "key"))("key"))
+        Seq(keyString.as("_k"))
+      else Nil
+    ObjectNaming(
+      Seq(col("topic"), col("partition"), col("offset").as("_offset")) ++ fp ++ key,
+      clusterBy = Seq(col("topic"), col("partition")),
+      orderBy = Seq(col("topic"), col("partition"), col("_offset")),
+      TopicPartitionNamer(pieces, config.maxRecordsPerFile,
+        fpIdx = if (fp.isEmpty) -1 else 3,
+        keyIdx = if (key.isEmpty) -1 else 3 + fp.size))
+  }
+
+  /** How the sink names key-mode objects in the writer: over
+    * [[compactLatestByKey]]'s rows, one object per row, the rows carrying
+    * `_k`, `topic` and `partition` and clustered by `_k`. */
+  def keyNaming(config: SinkConfig, now: ZonedDateTime): ObjectNaming = {
+    val pieces = config.fileNameTemplate.pieces(now) :+
+      Template.Text(config.compression.extension)
+    slots(pieces, Set("key", "topic", "partition"))
+    ObjectNaming(Seq(col("_k"), col("topic"), col("partition")),
+      clusterBy = Seq(col("_k")), orderBy = Nil, KeyNamer(pieces))
+  }
+
+  /** How the writers' `_filename` entry points cut objects: rows carry
+    * `_filename`, `_offset` and the `groupCols` the write clusters by, and
+    * each task writes its names in (name, offset) order. */
+  def byName(groupCols: Seq[String]): ObjectNaming =
+    ObjectNaming(
+      Seq(col("_filename"), col("offset").as("_offset")) ++
+        groupCols.filterNot(_ == "_filename").map(col),
+      clusterBy = groupCols.map(col),
+      orderBy = Seq(col("_filename"), col("_offset")),
+      ByColumn(0))
+
+  /** The names of `pieces`' slots, each checked against the variables
+    * the namer binds (`SinkConfig.parse` already refuses any other). */
+  private def slots(pieces: Seq[Template.Piece], bound: Set[String]): Set[String] =
+    pieces.collect { case Template.Slot(name, _) =>
+      require(bound(name), s"no binding for template var $name")
+      name
+    }.toSet
+}
+
+/** How a write cuts its rows into named objects: the naming `columns` that
+  * lead each written row (the payload follows them), the columns the write
+  * clusters by and orders each task by, and the [[ObjectNamer]] each task
+  * runs over its rows in that order. */
+final case class ObjectNaming(columns: Seq[Column], clusterBy: Seq[Column],
+                              orderBy: Seq[Column], namer: ObjectNamer) {
+
+  /** `rows`, projected with [[columns]] first, clustered and ordered for
+    * the namer. */
+  def arrange(rows: DataFrame): DataFrame = {
+    val clustered = rows.repartition(clusterBy: _*)
+    if (orderBy.isEmpty) clustered else clustered.sortWithinPartitions(orderBy: _*)
+  }
+}
+
+/** Names the objects of one task's rows. Serializable: it ships with the
+  * write; each task takes a fresh [[ObjectNamer.Cursor]]. */
+sealed trait ObjectNamer extends Serializable {
+  def cursor(): ObjectNamer.Cursor
+}
+
+object ObjectNamer {
+  /** One task's naming state, fed every row in order. */
+  trait Cursor {
+    /** Move to `row`; true if it starts a new chunk, which completes every
+      * object of the chunk before it. */
+    def advance(row: Row): Boolean
+    /** The name of the object `row` goes to within its chunk. */
+    def name(row: Row): String
+  }
+}
+
+/** Rows named by the string in column `idx`; a name change starts a chunk. */
+final case class ByColumn(idx: Int) extends ObjectNamer {
+  def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
+    private var current: String = _
+    def advance(row: Row): Boolean = {
+      val name = row.getString(idx)
+      val changed = name != current
+      current = name
+      changed
+    }
+    def name(row: Row): String = current
+  }
+}
+
+/** Topic-partition chunks over rows `(topic, partition, offset, …)` sorted
+  * by (topic, partition, offset). A chunk starts at a new (topic,
+  * partition), at every `maxRecords`-th row of one (counted across the
+  * whole partition, so boundaries match [[Grouping.chunkIndex]]), and at a
+  * fingerprint change (column `fpIdx`, -1 for none) — [[Grouping.annotate]]'s
+  * run rule exactly: a run starts after a null fingerprint and a null
+  * continues the run before it. `start_offset` binds the chunk's first
+  * offset. The name renders once per chunk, or per row when it references
+  * `{{key}}` (column `keyIdx`), which splits a chunk by key. */
+final case class TopicPartitionNamer(pieces: Seq[Template.Piece], maxRecords: Int,
+                                     fpIdx: Int, keyIdx: Int) extends ObjectNamer {
+  private def perRecord = keyIdx >= 0
+
+  def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
+    private var started = false
+    private var topic: String = _
+    private var partition: Any = _
+    private var n = 0L // the row's index within its (topic, partition)
+    private var fp: Any = _
+    private var start: String = _
+    private var chunkName: String = _
+
+    def advance(row: Row): Boolean = {
+      val t = row.getString(0)
+      val p = row.get(1)
+      val samePartition = started && t == topic && p == partition
+      n = if (samePartition) n + 1 else 0
+      val f = if (fpIdx < 0) null else row.get(fpIdx)
+      val cut = !samePartition || (maxRecords > 0 && n % maxRecords == 0) ||
+        (fpIdx >= 0 && (fp == null || (f != null && !java.util.Objects.deepEquals(fp, f))))
+      started = true
+      topic = t
+      partition = p
+      fp = f
+      if (cut) {
+        start = row.get(2).toString
+        if (!perRecord) chunkName = Template.render(pieces, bind(null))
+      }
+      cut
+    }
+
+    def name(row: Row): String =
+      if (perRecord) Template.render(pieces, bind(row.getString(keyIdx))) else chunkName
+
+    private def bind(key: String): String => String = {
+      case "topic" => topic
+      case "partition" => partition.toString
+      case "start_offset" => start
+      case "key" => key
+    }
+  }
+}
+
+/** Key mode over rows `(_k, topic, partition, …)`: every row is its own
+  * object, so every row starts a chunk. */
+final case class KeyNamer(pieces: Seq[Template.Piece]) extends ObjectNamer {
+  def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
+    def advance(row: Row): Boolean = true
+    def name(row: Row): String = Template.render(pieces, {
+      case "key" => row.getString(0)
+      case "topic" => row.getString(1)
+      case "partition" => row.get(2).toString
+    })
   }
 }

@@ -6,11 +6,14 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.config.{CompressionType, FormatType}
+import graft.connector.{ByColumn, Grouping, ObjectNamer, ObjectNaming}
 
 /** The custom sink-side writer (SURVEY.md §4 item 1 and §7.3): writes one
   * object per group with the exact templated name, via Hadoop `FileSystem`
@@ -19,11 +22,14 @@ import graft.config.{CompressionType, FormatType}
   * `part-*`, the reference requires `{{topic}}-{{partition}}-…` names
   * (`S3SinkTask.java:169-205`).
   *
-  * Scale design: the input is repartitioned BY the filename column and
-  * sorted within partitions by (filename, offset), so each task streams
-  * record-groups sequentially — one open stream at a time per task, O(1)
-  * memory, never a per-group `collect()`. Deterministic names + overwrite
-  * give the reference's at-least-once idempotent-retry contract
+  * Scale design: an [[ObjectNaming]] decides the one exchange and the
+  * order within each task — for topic-partition objects, clustered by
+  * (topic, partition) and sorted by (topic, partition, offset) — and each
+  * task streams its rows once through [[writeObjects]], whose
+  * [[ObjectNamer]] cuts the chunks and names each object. A task holds only
+  * the current chunk's objects open (one, unless a name renders per-record
+  * `{{key}}`), never a per-group `collect()`. Deterministic names +
+  * overwrite give the reference's at-least-once idempotent-retry contract
   * (`S3SinkTask.java:120-124`, SURVEY.md §3.2).
   *
   * JSON-array framing (O12) writes `[`, rows with trailing commas, `]` —
@@ -58,8 +64,7 @@ object GroupFileWriter {
   /** Write `df` — which must contain `_filename` (string) and `_line`
     * (string) columns plus an `offset` ordering column — one compressed
     * object per distinct `_filename` under `baseUri`. A row whose `_line` is
-    * null is skipped. Returns nothing; the write is the effect (used inside
-    * `foreachBatch`).
+    * null is skipped. Returns nothing; the write is the effect.
     *
     * `groupCols` is any column set that determines `_filename` (e.g.
     * (topic, partition)) — repartitioning on it satisfies the upstream
@@ -68,15 +73,21 @@ object GroupFileWriter {
     * itself. */
   def writeLines(df: DataFrame, baseUri: String, format: FormatType,
                  compression: CompressionType,
-                 groupCols: Seq[String] = Seq("_filename")): Unit = {
+                 groupCols: Seq[String] = Seq("_filename")): Unit =
+    write(df, Grouping.byName(groupCols), col("_line"), baseUri, format, compression)
+
+  /** Write `records` as the objects `naming` cuts, one `line` per record
+    * (a null line is skipped), compressed, under `baseUri`. */
+  def write(records: DataFrame, naming: ObjectNaming, line: Column, baseUri: String,
+            format: FormatType, compression: CompressionType): Unit = {
     val jsonArray = format == FormatType.Json
-    val keep = (Seq("_filename", "_line", "offset") ++ groupCols).distinct
-    withHadoopConf(df.sparkSession) { conf =>
-      df.select(keep.map(col): _*)
-        .repartition(groupCols.map(col): _*)
-        .sortWithinPartitions(col("_filename"), col("offset"))
+    val namer = naming.namer
+    val lineIdx = naming.columns.size
+    withHadoopConf(records.sparkSession) { conf =>
+      naming.arrange(records.select(naming.columns :+ line.as("_line"): _*))
         .foreachPartition { (it: Iterator[Row]) =>
-          writePartition(it, baseUri, conf.value.value, compression, jsonArray)
+          writePartition(it, baseUri, conf.value.value, compression, jsonArray,
+            namer, lineIdx)
         }
     }
   }
@@ -94,11 +105,13 @@ object GroupFileWriter {
     try body(conf) finally conf.destroy()
   }
 
+  /** One task's line objects. The defaults read rows laid out as
+    * (name, line, …). */
   private[formats] def writePartition(it: Iterator[Row], baseUri: String,
                              conf: Configuration, compression: CompressionType,
-                             jsonArray: Boolean): Unit = {
-    var first = true
-    writeObjects[OutputStream](it)(
+                             jsonArray: Boolean, namer: ObjectNamer = ByColumn(0),
+                             lineIdx: Int = 1): Unit = {
+    writeObjects[LineObject](it, namer)(
       open = { name =>
         val path = resolveUnder(baseUri, name)
         val fs = FileSystem.get(path.toUri, conf)
@@ -107,56 +120,77 @@ object GroupFileWriter {
         // retries idempotent
         val out = Compression.wrap(fs.create(path, true), compression)
         if (jsonArray) out.write('[')
-        first = true
-        out
+        new LineObject(out)
       },
       // a null line (envelope off, struct value, tombstone) has nothing
       // representable: skipped, the policy of ParquetEnvelopeWriter's unwrap
-      write = (out, row) => if (!row.isNullAt(1)) {
+      write = (obj, row) => if (!row.isNullAt(lineIdx)) {
+        val out = obj.out
         if (jsonArray) {
-          if (!first) out.write(',')
+          if (!obj.empty) out.write(',')
           out.write('\n')
         }
-        out.write(row.getString(1).getBytes(StandardCharsets.UTF_8))
+        out.write(row.getString(lineIdx).getBytes(StandardCharsets.UTF_8))
         if (!jsonArray) out.write('\n')
-        first = false
+        obj.empty = false
       },
-      close = { out =>
+      close = { obj =>
         if (jsonArray) {
-          if (!first) out.write('\n')
-          out.write(']')
+          if (!obj.empty) obj.out.write('\n')
+          obj.out.write(']')
         }
-        out.close()
+        obj.out.close()
       },
-      release = _.close())
+      release = _.out.close())
   }
 
-  /** The loop both object writers run per task. Rows arrive sorted by
-    * object name (column 0); a name change closes the open object and opens
-    * the next, so a task holds one object at a time. If anything throws
-    * while an object is open, `release` frees it — a stream or writer left
-    * open leaks its descriptor and buffers on a long-lived executor — and a
-    * failure inside `release` is attached as suppressed, so the task's own
-    * exception is the one that propagates. */
-  private[formats] def writeObjects[O](it: Iterator[Row])(open: String => O,
-      write: (O, Row) => Unit, close: O => Unit, release: O => Unit): Unit = {
-    var current: String = null
-    var obj: Option[O] = None
+  /** One open line object: its stream, and whether a line went in yet (a
+    * chunk may hold several objects open at once). */
+  private final class LineObject(val out: OutputStream) {
+    var empty = true
+  }
+
+  /** The loop both object writers run per task. `namer` cuts the rows into
+    * chunks and names each row's object; an object opens at its first row,
+    * and a new chunk closes every object of the one before, so a task holds
+    * only the current chunk's objects. A name already closed in this task
+    * is never reopened — that would overwrite the object — and fails the
+    * task instead. If anything throws while objects are open, `release`
+    * frees each — a stream or writer left open leaks its descriptor and
+    * buffers on a long-lived executor — and a failure inside `release` is
+    * attached as suppressed, so the task's own exception is the one that
+    * propagates. */
+  private[formats] def writeObjects[O](it: Iterator[Row], namer: ObjectNamer)(
+      open: String => O, write: (O, Row) => Unit, close: O => Unit,
+      release: O => Unit): Unit = {
+    val cursor = namer.cursor()
+    val chunk = mutable.LinkedHashMap.empty[String, O] // open, in open order
+    val closed = mutable.HashSet.empty[String]
+    // an object leaves `chunk` only once closed: one whose close throws is
+    // still released
+    def closeChunk(): Unit = while (chunk.nonEmpty) {
+      val (name, obj) = chunk.head
+      close(obj)
+      chunk.remove(name)
+      closed += name
+    }
     try {
       it.foreach { row =>
-        val name = row.getString(0)
-        if (name != current) {
-          obj.foreach(close)
-          obj = None // closed: nothing to release should `open` throw
-          obj = Some(open(name))
-          current = name
-        }
-        write(obj.get, row)
+        if (cursor.advance(row)) closeChunk()
+        val name = cursor.name(row)
+        val obj = chunk.getOrElse(name, {
+          if (closed(name)) throw new IllegalStateException(
+            s"object '$name' was already written by this task: two groups render the same name")
+          val o = open(name)
+          chunk(name) = o
+          o
+        })
+        write(obj, row)
       }
-      obj.foreach(close)
+      closeChunk()
     } catch {
       case e: Throwable =>
-        obj.foreach { o =>
+        chunk.values.foreach { o =>
           try release(o) catch { case r: Throwable => e.addSuppressed(r) }
         }
         throw e

@@ -20,6 +20,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.{CompressionType, OutputFieldType, SinkConfig}
+import graft.connector.{ByColumn, Grouping, ObjectNamer, ObjectNaming}
 
 /** Parquet format writer (SURVEY.md §2 O13/O14): one exact-named parquet
   * object per group, with the schema built from the CONFIGURED output fields
@@ -44,8 +45,9 @@ import graft.config.{CompressionType, OutputFieldType, SinkConfig}
   * reference's output too — its own test reader decompresses before
   * `AvroParquetReader`).
   *
-  * Same streaming topology as [[GroupFileWriter]]: repartition by filename,
-  * sort within partitions, one open writer per task at a time.
+  * Same streaming topology as [[GroupFileWriter]]: the [[ObjectNaming]]'s
+  * one exchange and order, then [[GroupFileWriter.writeObjects]] per task,
+  * holding only the current chunk's writers open.
   */
 object ParquetEnvelopeWriter {
 
@@ -180,8 +182,8 @@ object ParquetEnvelopeWriter {
     }
 
   /** One top-level output column: how to project it and how to write it.
-    * `idx` is the column's position in the projected row (0 = `_filename`,
-    * 1 = the hidden `_offset` sort key, data columns from 2). */
+    * `idx` is the column's position in the projected row, after the
+    * naming columns. */
   private[formats] sealed trait FieldWriter extends Serializable {
     def idx: Int
     def write(g: Group, row: Row): Unit
@@ -245,17 +247,19 @@ object ParquetEnvelopeWriter {
       config.outputFields.map(_.fieldType) == List(OutputFieldType.Value) &&
       valueDt.isInstanceOf[StructType]
 
-  /** (projected data columns, field writers, message schema) for a config. */
-  private[formats] def plan(config: SinkConfig, valueDt: DataType)
+  /** (projected data columns, field writers, message schema) for a config,
+    * the data columns projected from column `base` on (2 by default: after
+    * a (name, offset) pair). */
+  private[formats] def plan(config: SinkConfig, valueDt: DataType, base: Int = 2)
       : (Seq[Column], Seq[FieldWriter], MessageType) = {
     if (unwraps(config, valueDt)) {
       val st = valueDt.asInstanceOf[StructType]
       val fields = st.fields.map(f => parquetType(f.name, f.dataType, f.nullable))
-      (Seq(col("value")), Seq(UnwrapField(st, 2)),
+      (Seq(col("value")), Seq(UnwrapField(st, base)),
         new MessageType("envelope", fields.toList.asJava))
     } else {
       val planned = config.outputFields.zipWithIndex.map { case (f, i) =>
-        val idx = i + 2
+        val idx = i + base
         f.fieldType match {
           case OutputFieldType.Key =>
             (col("key").cast("string").as("key"),
@@ -306,7 +310,12 @@ object ParquetEnvelopeWriter {
     * `config.outputFields` / `config.envelopeEnabled`. */
   def write(records: DataFrame, baseUri: String, config: SinkConfig,
             groupCols: Seq[String] = Seq("_filename"),
-            wholeObjectCompression: Boolean = false): Unit = {
+            wholeObjectCompression: Boolean = false): Unit =
+    write(records, Grouping.byName(groupCols), baseUri, config, wholeObjectCompression)
+
+  /** Write `records` as the parquet objects `naming` cuts under `baseUri`. */
+  def write(records: DataFrame, naming: ObjectNaming, baseUri: String,
+            config: SinkConfig, wholeObjectCompression: Boolean): Unit = {
     // strict-parity mode writes UNCOMPRESSED parquet and compresses the
     // whole object on the way out, like the reference's wrapped stream
     val codecName =
@@ -315,17 +324,14 @@ object ParquetEnvelopeWriter {
     val outerCodec =
       if (wholeObjectCompression) config.compression else CompressionType.None
     val valueDt = records.schema("value").dataType
-    val (dataCols, writers, messageType) = plan(config, valueDt)
+    val (dataCols, writers, messageType) = plan(config, valueDt, naming.columns.size)
     val schemaStr = messageType.toString
+    val namer = naming.namer
     GroupFileWriter.withHadoopConf(records.sparkSession) { conf =>
-      records
-        .select((Seq(col("_filename"), col("offset").as("_offset")) ++ dataCols ++
-          groupCols.filterNot(_ == "_filename").map(col)): _*)
-        .repartition(groupCols.map(col): _*)
-        .sortWithinPartitions(col("_filename"), col("_offset"))
+      naming.arrange(records.select(naming.columns ++ dataCols: _*))
         .foreachPartition { (it: Iterator[Row]) =>
           writePartition(it, baseUri, conf.value.value, codecName, outerCodec,
-            schemaStr, writers)
+            schemaStr, writers, namer)
         }
     }
   }
@@ -335,7 +341,8 @@ object ParquetEnvelopeWriter {
                              codecName: CompressionCodecName,
                              outerCodec: CompressionType,
                              schemaStr: String,
-                             writers: Seq[FieldWriter]): Unit = {
+                             writers: Seq[FieldWriter],
+                             namer: ObjectNamer = ByColumn(0)): Unit = {
     val messageType = MessageTypeParser.parseMessageType(schemaStr)
     val factory = new SimpleGroupFactory(messageType)
     val wholeObject = outerCodec != CompressionType.None
@@ -345,7 +352,7 @@ object ParquetEnvelopeWriter {
     // local file system, which writes a `.crc` sidecar next to it; deleting
     // through that file system removes both.
     def deleteSpool(spool: Path): Unit = spool.getFileSystem(conf).delete(spool, false)
-    GroupFileWriter.writeObjects[(ParquetWriter[Group], Option[(Path, Path)])](it)(
+    GroupFileWriter.writeObjects[(ParquetWriter[Group], Option[(Path, Path)])](it, namer)(
       open = { name =>
         val target = GroupFileWriter.resolveUnder(baseUri, name)
         val spool = if (wholeObject) {

@@ -1124,8 +1124,7 @@ object Dedup {
   def semanticDecontaminate(corpus: DataFrame, benchmark: DataFrame,
                             threshold: Double,
                             excludeSelfIds: Boolean = false): DataFrame = {
-    val c = corpus.select(col("vec_id"), col("embedding"),
-      Similarity.norm(col("embedding")).as("_n"))
+    val c = Similarity.normed(corpus)
     val b = benchmark.select(col("vec_id").as("_bid"),
       col("embedding").as("_be"), Similarity.norm(col("embedding")).as("_bn"))
     c.join(broadcast(b),
@@ -1143,8 +1142,7 @@ object Dedup {
     * [[Similarity.bucketsFromMask]]). Cosine is computed as an in-order
     * double fold so the oracle can reproduce it bit-exactly. */
   def embeddingPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), col("label"), col("embedding"))
-      .withColumn("_n", Similarity.norm(col("embedding"))) // once per vector
+    val e = Similarity.normed(emb, Seq("vec_id", "label"))
     e.as("a")
       .join(e.as("b").hint("SHUFFLE_MERGE"), // corpus self-join: never broadcast
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))

@@ -59,8 +59,8 @@ object Similarity {
     * bit-identical result, 3× less of the non-codegen higher-order-function
     * cost that dominates this operator. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.withColumn("_n", norm(col("embedding")))
-    val q = queries.withColumn("_n", norm(col("embedding")))
+    val c = normed(corpus)
+    val q = normed(queries)
     val scored = c.as("c")
       .join(broadcast(q.as("q")), col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
@@ -426,8 +426,19 @@ object Similarity {
       .toDF("cell", "cvec", "cn")
   }
 
-  /** Project `df` to (`ids`…, embedding, _n, cell): the vector column
-    * `vec` as `embedding`, its norm as `_n`, and the argmax-cosine `cell`
+  /** Project `df` to (`ids`…, embedding, _n): the vector column `vec` as
+    * `embedding` and its norm as `_n`, computed once per vector, map-side,
+    * so a cosine scorer's per-pair work is one dot-product fold. The shape
+    * every cosine join reads, on the query side and the corpus side. */
+  private[graft] def normed(df: DataFrame, ids: Seq[String] = Seq("vec_id"),
+                            vec: String = "embedding"): DataFrame =
+    // no `embedding AS embedding`: a cached caller's plan would keep the
+    // alias's new attribute
+    df.select(ids.map(col) :+
+      (if (vec == "embedding") col(vec) else col(vec).as("embedding")) :+
+      norm(col(vec)).as("_n"): _*)
+
+  /** [[normed]] plus the argmax-cosine `cell`
     * via the [[graft.functions.NearestCentroid]] codegen kernel: a map-only pass,
     * no ×nLists expansion, no aggregation, no join, no shuffle. Same
     * argmax semantics as `max_by(cell, struct(_sim, -cell))` over a
@@ -440,11 +451,7 @@ object Similarity {
   private[graft] def assignCells(df: DataFrame, local: LocalCentroids,
                                  ids: Seq[String] = Seq("vec_id"),
                                  vec: String = "embedding"): DataFrame =
-    // no `embedding AS embedding`: a cached caller's plan would keep the
-    // alias's new attribute
-    df.select(ids.map(col) :+
-        (if (vec == "embedding") col(vec) else col(vec).as("embedding")) :+
-        norm(col(vec)).as("_n"): _*)
+    normed(df, ids, vec)
       .withColumn("cell",
         graft.functions.VectorExpressions.nearestCentroid(
           col("embedding"), col("_n"), local.cells, local.vecs, local.norms))
@@ -491,8 +498,7 @@ object Similarity {
     val assigned = assignCells(corpus, local)
     // queries keep their nProbe best cells ([[probeCells]], id-only),
     // the embedding joined back for the in-cell scoring
-    val probes = queries.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("_n"))
+    val probes = normed(queries)
       .join(probeCells(queryFloats(queries), local, nProbe)
         .select(col("query_id").as("vec_id"), col("cell")), "vec_id")
     // exact rerank inside probed cells. The probe side is structurally

@@ -79,19 +79,6 @@ object SinkObjectReader {
     lines.select(col("object_name") +: col("line_no") +: cols: _*)
   }
 
-  /** Decode the CSV header cell `b64(name):b64(value);…` back into an
-    * ordered array of (key, value) — the inverse of
-    * `OutputFields.flattenHeaders` (the reference's test-side equivalent is
-    * `BucketAccessor.readAndDecodeLines`, `testutils/BucketAccessor.java:
-    * 88-157`). Duplicate keys and order survive. */
-  def decodeHeadersFlat(flat: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(flat.isNull || flat === "", array().cast(
-      "array<struct<key:string,value:string>>"))
-      .otherwise(transform(split(flat, ";"), h =>
-        struct(
-          unbase64(split(h, ":").getItem(0)).cast("string").as("key"),
-          unbase64(split(h, ":").getItem(1)).cast("string").as("value"))))
-
   /** Parse JSONL-format objects with an explicit value schema. */
   def readJsonl(spark: SparkSession, baseUri: String,
                 schema: org.apache.spark.sql.types.StructType): DataFrame = {

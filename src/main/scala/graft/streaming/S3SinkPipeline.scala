@@ -121,39 +121,31 @@ object S3SinkPipeline {
     * `now` is the batch-start wallclock (the reference's only timestamp
     * source, `S3SinkConfig.java:492-503`). An empty batch makes no requests
     * (`S3SinkTask.java:114-144`): both writers open an object only when its
-    * first row arrives. */
+    * first row arrives.
+    *
+    * The plan carries only what the writer needs through one exchange:
+    * the naming columns of [[Grouping.topicPartitionNaming]] or
+    * [[Grouping.keyNaming]] and the encoded line or the Parquet data
+    * columns. The writer's tasks cut the chunks and name each object. */
   def writeBatch(batch: DataFrame, config: SinkConfig, baseUri: String,
                  now: ZonedDateTime,
                  schemaFingerprint: Option[Column] = None): Unit = {
     if (config.formatType == FormatType.Csv) checkCsvSchema(batch)
 
-    // the grouping keys the annotation clusters by: the Parquet writer's
-    // per-object groups, and the line writer's repartition keys, so the
-    // annotate+write pipeline needs a single exchange
-    val (named, groupCols) = config.groupingMode match {
+    val (records, naming) = config.groupingMode match {
       case GroupingMode.KeyRecord =>
-        val compacted = Grouping.compactLatestByKey(batch)
-        val bindings = Map(
-          "key"       -> col("_k"),
-          "topic"     -> col("topic"),
-          "partition" -> col("partition"))
-        (compacted.withColumn("_filename",
-          concat(Grouping.filenameColumn(config.fileNameTemplate, bindings, now),
-            lit(config.compression.extension))), Seq("_k"))
+        (Grouping.compactLatestByKey(batch), Grouping.keyNaming(config, now))
       case GroupingMode.TopicPartitionRecord =>
-        (Grouping.annotate(batch, config, now, schemaFingerprint),
-          Seq("topic", "partition"))
+        (batch, Grouping.topicPartitionNaming(config, now, schemaFingerprint))
     }
 
     config.formatType match {
       case FormatType.Parquet =>
-        ParquetEnvelopeWriter.write(named, baseUri, config, groupCols,
+        ParquetEnvelopeWriter.write(records, naming, baseUri, config,
           wholeObjectCompression = config.parquetWholeObjectCompression)
       case _ =>
-        val withLine = named.withColumn("_line",
-          lineColumn(config, batch.schema))
-        GroupFileWriter.writeLines(withLine, baseUri, config.formatType,
-          config.compression, groupCols)
+        GroupFileWriter.write(records, naming, lineColumn(config, batch.schema),
+          baseUri, config.formatType, config.compression)
     }
   }
 

@@ -383,6 +383,28 @@ class SinkWriteSpec extends SparkSuite {
     assert(ls(dir) == Set("prefix-2020-03-01--test-topic-0-00000000000000000000"))
   }
 
+  test("a {{key}} prefix splits one chunk into an object per key, each " +
+    "with its own JSON framing, tombstone-only objects included") {
+    val dir = tmpDir("prefix-key-json")
+    val cfg = config("aws.s3.prefix" -> "{{key}}-",
+      "format.output.type" -> "json", "format.output.envelope" -> "false",
+      "file.compression.type" -> "none")
+    // struct values: a null (tombstone) value has no line and is skipped
+    val df = spark.createDataFrame(Seq(
+      Row("t", 0, 0L, new java.sql.Timestamp(1000L), "k1", Row("a"), null),
+      Row("t", 0, 1L, new java.sql.Timestamp(1000L), "k2", null, null),
+      Row("t", 0, 2L, new java.sql.Timestamp(1000L), "k1", null, null),
+      Row("t", 0, 3L, new java.sql.Timestamp(1000L), "k1", Row("b"), null)).asJava,
+      f3Records().schema)
+    S3SinkPipeline.writeBatch(df, cfg, dir, Now)
+    val start = "t-0-00000000000000000000"
+    assert(ls(dir) == Set(s"k1-$start", s"k2-$start"))
+    assert(new String(Files.readAllBytes(Paths.get(s"$dir/k1-$start")),
+      StandardCharsets.UTF_8) == "[\n{\"name\":\"a\"},\n{\"name\":\"b\"}\n]")
+    assert(new String(Files.readAllBytes(Paths.get(s"$dir/k2-$start")),
+      StandardCharsets.UTF_8) == "[]")
+  }
+
   test("parquet envelope round-trips through Spark's parquet reader, " +
     "every codec (ParquetIntegrationTest envelope shape)") {
     for (codec <- CompressionType.all) {

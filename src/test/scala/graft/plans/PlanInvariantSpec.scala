@@ -9,7 +9,8 @@ import graft.SparkSuite
   *
   * Uses sf0.001 so plan CONSTRUCTION is cheap; none of these queries is
   * executed (the CC-loop queries, which run jobs during construction, are
-  * deliberately not asserted here).
+  * deliberately not asserted here). The sink case writes one 12-record
+  * batch: the writer's plan exists only inside its action.
   */
 class PlanInvariantSpec extends SparkSuite {
 
@@ -487,6 +488,57 @@ class PlanInvariantSpec extends SparkSuite {
       assert(gen.nonEmpty, s"$q: expected explode of bucket arrays")
       gen.foreach(l => assert(!l.contains("embedding#"),
         s"$q bucket explode carries embeddings: $l"))
+    }
+  }
+
+  test("a topic-partition sink batch plans no Window, one Sort and one " +
+    "Exchange, and carries no _filename column (JSONL with " +
+    "file.max.records and a fingerprint; Parquet)") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.{col, substring}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val rows = (0 until 12).map { i =>
+      Row("t", i % 3, i.toLong, new java.sql.Timestamp(1000L), s"k$i".getBytes,
+        s"${if (i < 6) "a" else "b"}$i".getBytes, null)
+    }
+    val batch = spark.createDataFrame(rows.asJava, graft.connector.Records.schema)
+    // the executed plan of the batch's write, as the listener bus reports
+    // it once the write's action finishes
+    def writePlan(props: Map[String, String], fp: Option[org.apache.spark.sql.Column]): SparkPlan = {
+      val cfg = graft.config.SinkConfig.parse(Map("aws.s3.bucket.name" -> "b") ++ props)
+        .fold(e => fail(e.mkString("; ")), identity)
+      val seen = new LinkedBlockingQueue[QueryExecution]
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        graft.streaming.S3SinkPipeline.writeBatch(batch, cfg, tmpDir("plan-sink"),
+          java.time.ZonedDateTime.now(java.time.ZoneId.of("Z")), fp)
+        val qe = seen.poll(60, TimeUnit.SECONDS)
+        assert(qe != null, "no write action reported")
+        qe.executedPlan
+      } finally spark.listenerManager.unregister(l)
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((what, props, fp) <- Seq(
+        ("jsonl", Map("format.output.type" -> "jsonl", "file.max.records" -> "2"),
+          Some(substring(col("value").cast("string"), 1, 1))),
+        ("parquet", Map("format.output.type" -> "parquet"), None))) {
+      val plan = writePlan(props, fp)
+      val nodes = helper.collect(plan) { case p => p }
+      assert(!nodes.exists(_.nodeName.contains("Window")), s"$what plans a Window: $plan")
+      assert(nodes.count(_.isInstanceOf[SortExec]) == 1, s"$what: expected one Sort: $plan")
+      assert(nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+        s"$what: expected one Exchange: $plan")
+      assert(!nodes.exists(_.output.exists(_.name == "_filename")),
+        s"$what carries _filename: $plan")
     }
   }
 }

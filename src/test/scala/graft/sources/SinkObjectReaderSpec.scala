@@ -5,7 +5,8 @@ import java.time.{ZoneId, ZonedDateTime}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.{array, col, split, struct, transform, unbase64, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.SparkSuite
@@ -17,6 +18,19 @@ import graft.streaming.S3SinkPipeline
 class SinkObjectReaderSpec extends SparkSuite {
 
   private val Now = ZonedDateTime.of(2020, 3, 1, 7, 0, 0, 0, ZoneId.of("Z"))
+
+  /** Decode the CSV header cell `b64(name):b64(value);…` back into an
+    * ordered array of (key, value) — the inverse of
+    * `OutputFields.flattenHeaders` (the reference's test-side equivalent is
+    * `BucketAccessor.readAndDecodeLines`, `testutils/BucketAccessor.java:
+    * 88-157`). Duplicate keys and order survive. */
+  private def decodeHeadersFlat(flat: Column): Column =
+    when(flat.isNull || flat === "", array().cast(
+      "array<struct<key:string,value:string>>"))
+      .otherwise(transform(split(flat, ";"), h =>
+        struct(
+          unbase64(split(h, ":").getItem(0)).cast("string").as("key"),
+          unbase64(split(h, ":").getItem(1)).cast("string").as("value"))))
 
   private def records(n: Int) = {
     val rows = (0 until n).map { i =>
@@ -49,7 +63,6 @@ class SinkObjectReaderSpec extends SparkSuite {
 
   test("header cells decode back to ordered (key, value) pairs " +
     "(BucketAccessor.readAndDecodeLines parity)") {
-    import org.apache.spark.sql.functions.col
     val rows = Seq(
       Row("t", 0, 0L, new java.sql.Timestamp(1000L), "k".getBytes, "v".getBytes,
         Seq(Row("h1", "v1".getBytes), Row("h1", "v2".getBytes), // dup keys
@@ -59,7 +72,7 @@ class SinkObjectReaderSpec extends SparkSuite {
     val flat = df.select(
       graft.connector.OutputFields.flattenHeaders(col("headers")).as("flat"))
     val back = flat.select(
-      SinkObjectReader.decodeHeadersFlat(col("flat")).as("hs"))
+      decodeHeadersFlat(col("flat")).as("hs"))
       .collect()(0).getSeq[Row](0)
       .map(r => (r.getString(0), r.getString(1))).toList
     assert(back == List(("h1", "v1"), ("h1", "v2"), ("h2", "v3")))

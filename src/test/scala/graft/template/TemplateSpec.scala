@@ -117,4 +117,34 @@ class TemplateSpec extends SparkSuite {
       assert(r.toLong == n)
     }
   }
+
+  test("the writers' per-object renderer and the filenameColumn wrapper " +
+    "render identical strings: negative partitions, over-width padded " +
+    "values, every timestamp unit, non-UTC zones") {
+    import spark.implicits._
+    val rows = Seq(
+      ("mytopic", 1, 42L, "k"),
+      ("mytopic", -1, -7L, "null"),
+      ("t", Int.MinValue, Long.MinValue, "a-key-well-over-twenty-characters"),
+      ("t", Int.MaxValue, Long.MaxValue, "\u043a\u043b\u044e\u0447-\ud83d\ude42-wider-than-twenty-code-points"),
+      ("t.x", 0, 0L, ""))
+    val df = rows.toDF("topic", "partition", "start_offset", "key")
+    val templates = Seq(
+      "{{topic}}-{{partition}}-{{start_offset}}",
+      "{{topic}}-{{partition:padding=true}}-{{start_offset:padding=true}}",
+      "{{timestamp:unit=yyyy}}/{{timestamp:unit=MM}}/{{timestamp:unit=dd}}/" +
+        "{{timestamp:unit=HH}}/{{topic}}-{{partition}}",
+      "{{utc_date}}-{{local_date}}-{{key}}",
+      "{{key:padding=true}}|{{partition:padding=false}}")
+    val zones = Seq("UTC", "Asia/Tokyo", "America/St_Johns")
+    for (tpl <- templates; zone <- zones) {
+      val now = Now.plusHours(16).withZoneSameInstant(ZoneId.of(zone))
+      val pieces = Template.of(tpl).pieces(now)
+      val perObject = rows.map { case (t, p, o, k) =>
+        Template.render(pieces, Map("topic" -> t, "partition" -> p.toString,
+          "start_offset" -> o.toString, "key" -> k))
+      }
+      assert(renderAll(tpl, df, now) == perObject, s"$tpl in $zone")
+    }
+  }
 }
