@@ -21,11 +21,13 @@ import graft.template.Template
   * (topic, partition), starts each chunk, and renders each object's name
   * once with [[Template.render]]. Key mode compacts in Catalyst
   * ([[compactLatestByKey]]) and names each surviving row in the writer.
+  * Either way a task writes one object at a time.
   *
   * [[annotate]] is the same grouping as Catalyst columns (windows and a
-  * per-row `_filename`); the sink no longer runs it. The registry's sink
-  * rows (`QueryDef.named`) and perfbench's traced mirror of `writeBatch`
-  * still do, with the writers' `_filename` entry points.
+  * per-row `_filename`). The sink runs it only for a legacy prefix that
+  * renders `{{key}}` ([[namesPerRecord]]), where each record names its own
+  * object; the registry's sink rows (`QueryDef.named`) and perfbench's
+  * traced mirror of `writeBatch` run it too.
   *
   * Reference semantics (`README.md:97-198`, `RecordGrouperFactory` dispatch
   * at `S3SinkTask.java:77`):
@@ -108,8 +110,9 @@ object Grouping {
     * chunk's `row_number`, the run's `lag` and running `sum`, the group's
     * `min(offset)`) and a name rendered on every row. The sink's own
     * writes cut the same objects in the writer instead
-    * ([[topicPartitionNaming]]); this form serves the registry's sink rows
-    * and perfbench's traced mirror, which write through `_filename`.
+    * ([[topicPartitionNaming]]) unless a `{{key}}` prefix names each record
+    * ([[namesPerRecord]]); this form serves that case, the registry's sink
+    * rows and perfbench's traced mirror, which write through `_filename`.
     *
     * `schemaFingerprint` implements the reference's Parquet schema-change
     * rotation (`ParquetIntegrationTest.java:346-415`: a mid-stream value-
@@ -152,30 +155,34 @@ object Grouping {
       .withColumn("_filename", concat(fname :+ lit(config.compression.extension): _*))
   }
 
+  /** True when a topic-partition name renders `{{key}}`, which only a
+    * legacy prefix can (`Template.PrefixVars`): each record then names its
+    * own object, and the sink writes through [[annotate]]'s per-row
+    * `_filename` in name order ([[byName]]), one object open at a time,
+    * rather than through [[topicPartitionNaming]]. */
+  def namesPerRecord(config: SinkConfig): Boolean =
+    !config.usesFileNameTemplate && config.prefixTemplate.variableNames("key")
+
   /** How the sink cuts topic-partition objects in the writer. The rows
-    * carry `topic`, `partition`, `_offset`, then `_fp` (the fingerprint)
-    * when one is given and `_k` (the key string) when a name renders
-    * `{{key}}`; they are clustered by (topic, partition) and sorted by
+    * carry `topic`, `partition`, `_offset` and, when a fingerprint is given,
+    * `_fp`; they are clustered by (topic, partition) and sorted by
     * (topic, partition, offset), so each task sees every partition it owns
     * whole and in offset order. `schemaFingerprint` is the same rotation
-    * rule as [[annotate]]'s. */
+    * rule as [[annotate]]'s. Not for a name that renders `{{key}}`
+    * ([[namesPerRecord]]). */
   def topicPartitionNaming(config: SinkConfig, now: ZonedDateTime,
                            schemaFingerprint: Option[Column]): ObjectNaming = {
     val zonedNow = now.withZoneSameInstant(config.timestampZone)
     val pieces = nameTemplates(config).flatMap(_.pieces(zonedNow)) :+
       Template.Text(config.compression.extension)
+    requireBound(pieces, Set("topic", "partition", "start_offset"))
     val fp = schemaFingerprint.toSeq.map(_.as("_fp"))
-    val key =
-      if (slots(pieces, Set("topic", "partition", "start_offset", "key"))("key"))
-        Seq(keyString.as("_k"))
-      else Nil
     ObjectNaming(
-      Seq(col("topic"), col("partition"), col("offset").as("_offset")) ++ fp ++ key,
+      Seq(col("topic"), col("partition"), col("offset").as("_offset")) ++ fp,
       clusterBy = Seq(col("topic"), col("partition")),
       orderBy = Seq(col("topic"), col("partition"), col("_offset")),
       TopicPartitionNamer(pieces, config.maxRecordsPerFile,
-        fpIdx = if (fp.isEmpty) -1 else 3,
-        keyIdx = if (key.isEmpty) -1 else 3 + fp.size))
+        fpIdx = if (fp.isEmpty) -1 else 3))
   }
 
   /** How the sink names key-mode objects in the writer: over
@@ -184,14 +191,16 @@ object Grouping {
   def keyNaming(config: SinkConfig, now: ZonedDateTime): ObjectNaming = {
     val pieces = config.fileNameTemplate.pieces(now) :+
       Template.Text(config.compression.extension)
-    slots(pieces, Set("key", "topic", "partition"))
+    requireBound(pieces, Set("key", "topic", "partition"))
     ObjectNaming(Seq(col("_k"), col("topic"), col("partition")),
       clusterBy = Seq(col("_k")), orderBy = Nil, KeyNamer(pieces))
   }
 
-  /** How the writers' `_filename` entry points cut objects: rows carry
-    * `_filename`, `_offset` and the `groupCols` the write clusters by, and
-    * each task writes its names in (name, offset) order. */
+  /** How a write through a `_filename` column cuts objects
+    * (`GroupFileWriter.writeLines`, and the sink when [[namesPerRecord]]):
+    * rows carry `_filename`, `_offset` and the `groupCols` the write
+    * clusters by, and each task writes its names in (name, offset) order,
+    * so rows that share a name in one task go to one object. */
   def byName(groupCols: Seq[String]): ObjectNaming =
     ObjectNaming(
       Seq(col("_filename"), col("offset").as("_offset")) ++
@@ -200,13 +209,13 @@ object Grouping {
       orderBy = Seq(col("_filename"), col("_offset")),
       ByColumn(0))
 
-  /** The names of `pieces`' slots, each checked against the variables
-    * the namer binds (`SinkConfig.parse` already refuses any other). */
-  private def slots(pieces: Seq[Template.Piece], bound: Set[String]): Set[String] =
-    pieces.collect { case Template.Slot(name, _) =>
-      require(bound(name), s"no binding for template var $name")
-      name
-    }.toSet
+  /** Checks that every slot of `pieces` names a variable the namer binds
+    * (`SinkConfig.parse` already refuses any other). */
+  private def requireBound(pieces: Seq[Template.Piece], bound: Set[String]): Unit =
+    pieces.foreach {
+      case Template.Slot(name, _) => require(bound(name), s"no binding for template var $name")
+      case _ =>
+    }
 }
 
 /** How a write cuts its rows into named objects: the naming `columns` that
@@ -233,49 +242,45 @@ sealed trait ObjectNamer extends Serializable {
 object ObjectNamer {
   /** One task's naming state, fed every row in order. */
   trait Cursor {
-    /** Move to `row`; true if it starts a new chunk, which completes every
-      * object of the chunk before it. */
+    /** Move to `row`; true if it starts a new object, which completes the
+      * object before it. */
     def advance(row: Row): Boolean
-    /** The name of the object `row` goes to within its chunk. */
-    def name(row: Row): String
+    /** The name of the object the last row went to. */
+    def name: String
   }
 }
 
-/** Rows named by the string in column `idx`; a name change starts a chunk. */
+/** Rows named by the string in column `idx`; a name change starts an
+  * object. */
 final case class ByColumn(idx: Int) extends ObjectNamer {
   def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
-    private var current: String = _
+    var name: String = _
     def advance(row: Row): Boolean = {
-      val name = row.getString(idx)
-      val changed = name != current
-      current = name
+      val next = row.getString(idx)
+      val changed = next != name
+      name = next
       changed
     }
-    def name(row: Row): String = current
   }
 }
 
 /** Topic-partition chunks over rows `(topic, partition, offset, …)` sorted
-  * by (topic, partition, offset). A chunk starts at a new (topic,
-  * partition), at every `maxRecords`-th row of one (counted across the
-  * whole partition, so boundaries match [[Grouping.chunkIndex]]), and at a
-  * fingerprint change (column `fpIdx`, -1 for none) — [[Grouping.annotate]]'s
-  * run rule exactly: a run starts after a null fingerprint and a null
-  * continues the run before it. `start_offset` binds the chunk's first
-  * offset. The name renders once per chunk, or per row when it references
-  * `{{key}}` (column `keyIdx`), which splits a chunk by key. */
+  * by (topic, partition, offset), one object per chunk. A chunk starts at a
+  * new (topic, partition), at every `maxRecords`-th row of one (counted
+  * across the whole partition, so boundaries match [[Grouping.chunkIndex]]),
+  * and at a fingerprint change (column `fpIdx`, -1 for none) —
+  * [[Grouping.annotate]]'s run rule exactly: a run starts after a null
+  * fingerprint and a null continues the run before it. `start_offset` binds
+  * the chunk's first offset; the name renders once per chunk. */
 final case class TopicPartitionNamer(pieces: Seq[Template.Piece], maxRecords: Int,
-                                     fpIdx: Int, keyIdx: Int) extends ObjectNamer {
-  private def perRecord = keyIdx >= 0
-
+                                     fpIdx: Int) extends ObjectNamer {
   def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
     private var started = false
     private var topic: String = _
     private var partition: Any = _
     private var n = 0L // the row's index within its (topic, partition)
     private var fp: Any = _
-    private var start: String = _
-    private var chunkName: String = _
+    var name: String = _
 
     def advance(row: Row): Boolean = {
       val t = row.getString(0)
@@ -290,33 +295,30 @@ final case class TopicPartitionNamer(pieces: Seq[Template.Piece], maxRecords: In
       partition = p
       fp = f
       if (cut) {
-        start = row.get(2).toString
-        if (!perRecord) chunkName = Template.render(pieces, bind(null))
+        val start = row.get(2).toString
+        name = Template.render(pieces, {
+          case "topic" => t
+          case "partition" => p.toString
+          case "start_offset" => start
+        })
       }
       cut
-    }
-
-    def name(row: Row): String =
-      if (perRecord) Template.render(pieces, bind(row.getString(keyIdx))) else chunkName
-
-    private def bind(key: String): String => String = {
-      case "topic" => topic
-      case "partition" => partition.toString
-      case "start_offset" => start
-      case "key" => key
     }
   }
 }
 
 /** Key mode over rows `(_k, topic, partition, …)`: every row is its own
-  * object, so every row starts a chunk. */
+  * object. */
 final case class KeyNamer(pieces: Seq[Template.Piece]) extends ObjectNamer {
   def cursor(): ObjectNamer.Cursor = new ObjectNamer.Cursor {
-    def advance(row: Row): Boolean = true
-    def name(row: Row): String = Template.render(pieces, {
-      case "key" => row.getString(0)
-      case "topic" => row.getString(1)
-      case "partition" => row.get(2).toString
-    })
+    var name: String = _
+    def advance(row: Row): Boolean = {
+      name = Template.render(pieces, {
+        case "key" => row.getString(0)
+        case "topic" => row.getString(1)
+        case "partition" => row.get(2).toString
+      })
+      true
+    }
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.config.{CompressionType, FormatType}
-import graft.connector.{ByColumn, Grouping, ObjectNamer, ObjectNaming}
+import graft.connector.{Grouping, ObjectNamer, ObjectNaming}
 
 /** The custom sink-side writer (SURVEY.md §4 item 1 and §7.3): writes one
   * object per group with the exact templated name, via Hadoop `FileSystem`
@@ -26,9 +26,8 @@ import graft.connector.{ByColumn, Grouping, ObjectNamer, ObjectNaming}
   * order within each task — for topic-partition objects, clustered by
   * (topic, partition) and sorted by (topic, partition, offset) — and each
   * task streams its rows once through [[writeObjects]], whose
-  * [[ObjectNamer]] cuts the chunks and names each object. A task holds only
-  * the current chunk's objects open (one, unless a name renders per-record
-  * `{{key}}`), never a per-group `collect()`. Deterministic names +
+  * [[ObjectNamer]] cuts the chunks and names each object. A task holds one
+  * object open at a time, never a per-group `collect()`. Deterministic names +
   * overwrite give the reference's at-least-once idempotent-retry contract
   * (`S3SinkTask.java:120-124`, SURVEY.md §3.2).
   *
@@ -105,13 +104,13 @@ object GroupFileWriter {
     try body(conf) finally conf.destroy()
   }
 
-  /** One task's line objects. The defaults read rows laid out as
-    * (name, line, …). */
+  /** One task's line objects, over rows whose line is column `lineIdx`. */
   private[formats] def writePartition(it: Iterator[Row], baseUri: String,
                              conf: Configuration, compression: CompressionType,
-                             jsonArray: Boolean, namer: ObjectNamer = ByColumn(0),
-                             lineIdx: Int = 1): Unit = {
-    writeObjects[LineObject](it, namer)(
+                             jsonArray: Boolean, namer: ObjectNamer,
+                             lineIdx: Int): Unit = {
+    var first = true
+    writeObjects[OutputStream](it, namer)(
       open = { name =>
         val path = resolveUnder(baseUri, name)
         val fs = FileSystem.get(path.toUri, conf)
@@ -120,77 +119,72 @@ object GroupFileWriter {
         // retries idempotent
         val out = Compression.wrap(fs.create(path, true), compression)
         if (jsonArray) out.write('[')
-        new LineObject(out)
+        first = true
+        out
       },
       // a null line (envelope off, struct value, tombstone) has nothing
       // representable: skipped, the policy of ParquetEnvelopeWriter's unwrap
-      write = (obj, row) => if (!row.isNullAt(lineIdx)) {
-        val out = obj.out
+      write = (out, row) => if (!row.isNullAt(lineIdx)) {
         if (jsonArray) {
-          if (!obj.empty) out.write(',')
+          if (!first) out.write(',')
           out.write('\n')
         }
         out.write(row.getString(lineIdx).getBytes(StandardCharsets.UTF_8))
         if (!jsonArray) out.write('\n')
-        obj.empty = false
+        first = false
       },
-      close = { obj =>
+      close = { out =>
         if (jsonArray) {
-          if (!obj.empty) obj.out.write('\n')
-          obj.out.write(']')
+          if (!first) out.write('\n')
+          out.write(']')
         }
-        obj.out.close()
+        out.close()
       },
-      release = _.out.close())
+      release = _.close())
   }
 
-  /** One open line object: its stream, and whether a line went in yet (a
-    * chunk may hold several objects open at once). */
-  private final class LineObject(val out: OutputStream) {
-    var empty = true
-  }
-
-  /** The loop both object writers run per task. `namer` cuts the rows into
-    * chunks and names each row's object; an object opens at its first row,
-    * and a new chunk closes every object of the one before, so a task holds
-    * only the current chunk's objects. A name already closed in this task
-    * is never reopened — that would overwrite the object — and fails the
-    * task instead. If anything throws while objects are open, `release`
-    * frees each — a stream or writer left open leaks its descriptor and
-    * buffers on a long-lived executor — and a failure inside `release` is
-    * attached as suppressed, so the task's own exception is the one that
-    * propagates. */
+  /** The loop both object writers run per task. `namer` cuts the rows, in
+    * the order the write arranged them, into objects: a row that starts an
+    * object closes the one before and opens its own, so a task holds one
+    * object open at a time.
+    *
+    * A name this task already wrote is never reopened — that would
+    * overwrite the object — and fails the task instead, on every retry, so
+    * such a config stops the sink. Two groups render one name only when the
+    * template cannot tell them apart: `{{topic}}{{partition}}{{start_offset}}`
+    * gives `t105` for topic `t1` partition 0 and for topic `t` partition 10,
+    * both from offset 5. For the check the task keeps one name per object
+    * it wrote. Two such groups in different tasks overwrite each other, as
+    * they did when every write sorted by name; a write in name order
+    * ([[graft.connector.ByColumn]]) never repeats a name, so its same-named
+    * rows go to one object.
+    *
+    * If anything throws while an object is open, `release` frees it — a
+    * stream or writer left open leaks its descriptor and buffers on a
+    * long-lived executor — and a failure inside `release` is attached as
+    * suppressed, so the task's own exception is the one that propagates. */
   private[formats] def writeObjects[O](it: Iterator[Row], namer: ObjectNamer)(
       open: String => O, write: (O, Row) => Unit, close: O => Unit,
       release: O => Unit): Unit = {
     val cursor = namer.cursor()
-    val chunk = mutable.LinkedHashMap.empty[String, O] // open, in open order
-    val closed = mutable.HashSet.empty[String]
-    // an object leaves `chunk` only once closed: one whose close throws is
-    // still released
-    def closeChunk(): Unit = while (chunk.nonEmpty) {
-      val (name, obj) = chunk.head
-      close(obj)
-      chunk.remove(name)
-      closed += name
-    }
+    val written = mutable.HashSet.empty[String]
+    var obj: Option[O] = None
     try {
       it.foreach { row =>
-        if (cursor.advance(row)) closeChunk()
-        val name = cursor.name(row)
-        val obj = chunk.getOrElse(name, {
-          if (closed(name)) throw new IllegalStateException(
+        if (cursor.advance(row)) {
+          obj.foreach(close)
+          obj = None // closed: nothing to release should `open` throw
+          val name = cursor.name
+          if (!written.add(name)) throw new IllegalStateException(
             s"object '$name' was already written by this task: two groups render the same name")
-          val o = open(name)
-          chunk(name) = o
-          o
-        })
-        write(obj, row)
+          obj = Some(open(name))
+        }
+        write(obj.get, row)
       }
-      closeChunk()
+      obj.foreach(close)
     } catch {
       case e: Throwable =>
-        chunk.values.foreach { o =>
+        obj.foreach { o =>
           try release(o) catch { case r: Throwable => e.addSuppressed(r) }
         }
         throw e

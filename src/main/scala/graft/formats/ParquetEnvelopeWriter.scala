@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.{CompressionType, OutputFieldType, SinkConfig}
-import graft.connector.{ByColumn, Grouping, ObjectNamer, ObjectNaming}
+import graft.connector.{ObjectNamer, ObjectNaming}
 
 /** Parquet format writer (SURVEY.md §2 O13/O14): one exact-named parquet
   * object per group, with the schema built from the CONFIGURED output fields
@@ -248,9 +248,8 @@ object ParquetEnvelopeWriter {
       valueDt.isInstanceOf[StructType]
 
   /** (projected data columns, field writers, message schema) for a config,
-    * the data columns projected from column `base` on (2 by default: after
-    * a (name, offset) pair). */
-  private[formats] def plan(config: SinkConfig, valueDt: DataType, base: Int = 2)
+    * the data columns projected from column `base` on. */
+  private[formats] def plan(config: SinkConfig, valueDt: DataType, base: Int)
       : (Seq[Column], Seq[FieldWriter], MessageType) = {
     if (unwraps(config, valueDt)) {
       val st = valueDt.asInstanceOf[StructType]
@@ -304,15 +303,6 @@ object ParquetEnvelopeWriter {
     }
   }
 
-  /** Write records (must have `_filename`, `offset` plus whatever columns
-    * the configured output fields need) as one parquet object per distinct
-    * `_filename` under `baseUri`, with the schema determined by
-    * `config.outputFields` / `config.envelopeEnabled`. */
-  def write(records: DataFrame, baseUri: String, config: SinkConfig,
-            groupCols: Seq[String] = Seq("_filename"),
-            wholeObjectCompression: Boolean = false): Unit =
-    write(records, Grouping.byName(groupCols), baseUri, config, wholeObjectCompression)
-
   /** Write `records` as the parquet objects `naming` cuts under `baseUri`. */
   def write(records: DataFrame, naming: ObjectNaming, baseUri: String,
             config: SinkConfig, wholeObjectCompression: Boolean): Unit = {
@@ -342,7 +332,7 @@ object ParquetEnvelopeWriter {
                              outerCodec: CompressionType,
                              schemaStr: String,
                              writers: Seq[FieldWriter],
-                             namer: ObjectNamer = ByColumn(0)): Unit = {
+                             namer: ObjectNamer): Unit = {
     val messageType = MessageTypeParser.parseMessageType(schemaStr)
     val factory = new SimpleGroupFactory(messageType)
     val wholeObject = outerCodec != CompressionType.None

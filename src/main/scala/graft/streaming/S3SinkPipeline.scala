@@ -126,7 +126,10 @@ object S3SinkPipeline {
     * The plan carries only what the writer needs through one exchange:
     * the naming columns of [[Grouping.topicPartitionNaming]] or
     * [[Grouping.keyNaming]] and the encoded line or the Parquet data
-    * columns. The writer's tasks cut the chunks and name each object. */
+    * columns. The writer's tasks cut the chunks and name each object. A
+    * legacy prefix that renders `{{key}}` names each record, so that batch
+    * carries [[Grouping.annotate]]'s per-row name instead and is written in
+    * name order: each task still writes one object at a time. */
   def writeBatch(batch: DataFrame, config: SinkConfig, baseUri: String,
                  now: ZonedDateTime,
                  schemaFingerprint: Option[Column] = None): Unit = {
@@ -135,6 +138,9 @@ object S3SinkPipeline {
     val (records, naming) = config.groupingMode match {
       case GroupingMode.KeyRecord =>
         (Grouping.compactLatestByKey(batch), Grouping.keyNaming(config, now))
+      case GroupingMode.TopicPartitionRecord if Grouping.namesPerRecord(config) =>
+        (Grouping.annotate(batch, config, now, schemaFingerprint),
+          Grouping.byName(Seq("topic", "partition")))
       case GroupingMode.TopicPartitionRecord =>
         (batch, Grouping.topicPartitionNaming(config, now, schemaFingerprint))
     }

@@ -17,6 +17,7 @@ import org.xerial.snappy.SnappyInputStream
 
 import graft.SparkSuite
 import graft.config._
+import graft.connector.ByColumn
 import graft.streaming.S3SinkPipeline
 
 /** End-to-end batch write tests mirroring the reference's fixtures
@@ -405,6 +406,46 @@ class SinkWriteSpec extends SparkSuite {
       StandardCharsets.UTF_8) == "[]")
   }
 
+  test("a {{key}} prefix over many keys in one unlimited chunk holds one " +
+    "object open at a time (JSONL and Parquet)") {
+    spark.sparkContext.hadoopConfiguration.set(CountingFs.conf._1, CountingFs.conf._2)
+    val keys = 200
+    val df = spark.createDataFrame((0 until keys).map(i =>
+      Row("t", 0, i.toLong, new java.sql.Timestamp(1000L), s"k$i", s"v$i", null)).asJava,
+      f2Records().schema)
+    // one shuffle partition: every object of the batch comes from one task
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try for (format <- Seq("jsonl", "parquet")) {
+      val cfg = config("aws.s3.prefix" -> "{{key}}-", "format.output.type" -> format)
+      CountingFs.reset()
+      S3SinkPipeline.writeBatch(df, cfg, CountingFs.uri(tmpDir("prefix-key-many")), Now)
+      assert(CountingFs.opened.get == keys, format)
+      assert(CountingFs.closed.get == keys, format)
+      assert(CountingFs.maxOpen.get == 1, format)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+  }
+
+  test("two groups of one task that render the same name fail the write " +
+    "rather than overwrite the first group's object") {
+    val dir = tmpDir("name-collision")
+    val cfg = config("file.name.template" -> "{{topic}}{{partition}}{{start_offset}}",
+      "format.output.type" -> "jsonl", "file.compression.type" -> "none")
+    // topic t1 partition 0 and topic t partition 10, both from offset 5,
+    // render "t105"; one shuffle partition puts both groups in one task
+    val df = spark.createDataFrame(Seq(
+      Row("t1", 0, 5L, new java.sql.Timestamp(1000L), "k", "a", null),
+      Row("t", 10, 5L, new java.sql.Timestamp(1000L), "k", "b", null)).asJava,
+      f2Records().schema)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val e = try intercept[Exception](S3SinkPipeline.writeBatch(df, cfg, dir, Now))
+      finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => Option(c.getMessage).exists(
+      _.contains("object 't105' was already written by this task"))), e)
+  }
+
   test("parquet envelope round-trips through Spark's parquet reader, " +
     "every codec (ParquetIntegrationTest envelope shape)") {
     for (codec <- CompressionType.all) {
@@ -661,18 +702,21 @@ class SinkWriteSpec extends SparkSuite {
       assert(CountingFs.closed.get == objectsOpened)
     }
     val conf = spark.sparkContext.hadoopConfiguration
+    // rows are (name, line, offset): named by column 0, the line and the
+    // Parquet value in column 1
     for (jsonArray <- Seq(false, true))
-      check(GroupFileWriter.writePartition(_, _, conf, CompressionType.Gzip, jsonArray), 1)
-    val (_, writers, schema) = ParquetEnvelopeWriter.plan(config(), StringType)
+      check(GroupFileWriter.writePartition(_, _, conf, CompressionType.Gzip, jsonArray,
+        ByColumn(0), lineIdx = 1), 1)
+    val (_, writers, schema) = ParquetEnvelopeWriter.plan(config(), StringType, base = 1)
     check(ParquetEnvelopeWriter.writePartition(_, _, conf, CompressionCodecName.GZIP,
-      CompressionType.None, schema.toString, writers), 1)
+      CompressionType.None, schema.toString, writers, ByColumn(0)), 1)
     // strict parity writes a task-local spool file and opens the object only
     // on close: the failed object is never opened and its spool is deleted
     def spools = new java.io.File(System.getProperty("java.io.tmpdir"))
       .list().count(_.startsWith("graft-parquet-spool"))
     val before = spools
     check(ParquetEnvelopeWriter.writePartition(_, _, conf, CompressionCodecName.UNCOMPRESSED,
-      CompressionType.Gzip, schema.toString, writers), 0)
+      CompressionType.Gzip, schema.toString, writers, ByColumn(0)), 0)
     assert(spools == before)
   }
 
