@@ -47,7 +47,7 @@ import graft.connector.{ObjectNamer, ObjectNaming}
   *
   * Same streaming topology as [[GroupFileWriter]]: the [[ObjectNaming]]'s
   * one exchange and order, then [[GroupFileWriter.writeObjects]] per task,
-  * holding only the current chunk's writers open.
+  * holding one writer open at a time.
   */
 object ParquetEnvelopeWriter {
 
